@@ -83,11 +83,16 @@ def build_triples_from_extracted(ext: DataFrame, spark: SparkSession):
         doc_metadata_triples,
         section_triples,
     )
-    from ferenda_spark.grammar.citations import stateful_reference_triples
+    from ferenda_spark.grammar.citations import (
+        stateful_reference_triples,
+        with_aliases,
+    )
     ents = entities_df(spark)
     # the Arrow-UDF extract feeds five downstream branches — persist
-    # the (html-free) output so it parses once, not five times
-    ext = ext.persist()
+    # the (html-free) output so it parses once, not five times; the
+    # alias map is projected before the persist and shared by the
+    # citation and stateful branches
+    ext = with_aliases(ext).persist()
     triples = (
         doc_metadata_triples(ext)
         .unionByName(section_triples(ext))

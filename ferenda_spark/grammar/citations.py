@@ -399,22 +399,41 @@ def alias_map(text: Column) -> Column:
     mutates a dict so the LAST definition wins (legalref.py:603-608).
     ``map_from_arrays`` would instead throw DUPLICATED_MAP_KEY and
     kill the stage, so duplicates are dropped keeping the last
-    occurrence before the map is built."""
+    occurrence before the map is built.
+
+    Project the map as its own column (``with_aliases``) before any
+    lambda reads it, and pass that column, never this expression, into
+    ``cite_objs`` / ``stateful_reference_structs`` under a
+    ``transform``/``aggregate``: Spark does not eliminate common
+    subexpressions inside higher-order functions, so an inlined map
+    reruns both regexes and the O(n²) dedup for every section and
+    every token."""
     names = F.regexp_extract_all(text, F.lit(ALIAS_DEF.pattern),
                                  ALIAS_DEF.group_index("name"))
     nums = F.regexp_extract_all(text, F.lit(ALIAS_DEF.pattern),
                                 ALIAS_DEF.group_index("num"))
-    n = F.size(names)
-    idx = F.when(n == 0, F.array().cast("array<int>")).otherwise(
-        F.sequence(F.lit(0), n - 1))
-    entries = F.transform(idx, lambda i: F.struct(
-        i.alias("i"),
-        F.element_at(names, i + 1).alias("k"),
-        F.element_at(nums, i + 1).alias("v")))
-    last = F.filter(entries, lambda e: ~F.exists(
-        entries, lambda o: (o["k"] == e["k"]) & (o["i"] > e["i"])))
-    return F.map_from_entries(F.transform(
-        last, lambda e: F.struct(e["k"], e["v"])))
+    entries = F.zip_with(names, nums, lambda k, v: F.struct(
+        k.alias("k"), v.alias("v")))
+    # fold in document order: a definition replaces any earlier one of
+    # the same alias, so survivors keep their last-occurrence order
+    last = F.aggregate(
+        entries, F.array().cast("array<struct<k:string,v:string>>"),
+        lambda acc, e: F.concat(
+            F.filter(acc, lambda o: o["k"] != e["k"]), F.array(e)))
+    return F.map_from_entries(last)
+
+
+#: column name of the projected per-page alias map
+ALIASES = "aliases"
+
+
+def with_aliases(docs: DataFrame) -> DataFrame:
+    """``docs`` with ``alias_map(text)`` projected as the ``aliases``
+    column, once per page; a frame that already carries the column is
+    returned as is, so branches over one projected extract share it."""
+    if ALIASES in docs.columns:
+        return docs
+    return docs.withColumn(ALIASES, alias_map(F.col("text")))
 
 
 def cite_objs(text: Column, aliases: Column) -> Column:
@@ -547,10 +566,10 @@ def stateful_reference_triples(extracted: DataFrame) -> DataFrame:
     """(frag, dcterms:references, resolved-target) rows for the
     stateful short-form class — zero-shuffle companion of
     mention.citation_triples."""
-    docs = extracted.filter(F.col("is_doc"))
+    docs = with_aliases(extracted.filter(F.col("is_doc")))
     refs = stateful_reference_structs(
         F.col("url"), F.col("preamble"), F.col("sections"),
-        alias_map(F.col("text")))
+        F.col(ALIASES))
     return (docs
             .select(F.explode(refs).alias("r"))
             .select(F.col("r.frag").alias("subj"),

@@ -15,18 +15,32 @@ Zero shuffles, zero caches, zero joins — the whole job is two codegen
 stages, so throughput scales with cores until input bandwidth. Both
 paths are verified against the same ANSI-SQL oracle and golden triple
 sets (kg_edges / kg_edges_modular gate queries).
+
+Per-page state is projected before any lambda reads it: the alias map
+is its own ``aliases`` column (grammar.citations.with_aliases), and the
+section and token lambdas read that column. Spark does not eliminate
+common subexpressions inside ``transform``/``aggregate``, so an
+expression written into a lambda body runs again for every element —
+the inlined alias map ran its regexes and its O(n²) dedup once per
+section and once per token.
+
+The triple array itself names only columns and constants, so
+``triple_array`` builds it once per JVM and every later call reuses
+the same Column: building it costs thousands of py4j round trips.
 """
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ferenda_spark.fixtures.pages import BASE, MONTHS
 from ferenda_spark.grammar.citations import (
-    alias_map,
+    ALIASES,
     cite_objs,
     stateful_reference_structs,
+    with_aliases,
 )
 from ferenda_spark.operators.metadata import _CATEGORY_TYPE_ITEMS, _triple
 
@@ -53,10 +67,7 @@ def _cite_structs(subj: Column, text: Column, aliases: Column) -> Column:
             F.lit(None).cast("string").alias("obj_lang")))
 
 
-def fused_triples(ext: DataFrame) -> DataFrame:
-    """Extracted docs (with publisher_uri) → the full triple set."""
-    docs = ext.filter(F.col("is_doc"))
-
+def _build_triple_array() -> Column:
     month_map = F.create_map(
         *[x for m, i in zip(MONTHS, range(1, 13))
           for x in (F.lit(m), F.lit(f"{i:02d}"))])
@@ -116,7 +127,7 @@ def fused_triples(ext: DataFrame) -> DataFrame:
                     literal=True, lang=F.col("lang")),
         )
 
-    aliases = alias_map(F.col("text"))
+    aliases = F.col(ALIASES)
 
     sec_arr = F.flatten(F.transform(F.col("sections"), sec_structs))
     sec_cites = F.flatten(F.transform(
@@ -132,13 +143,36 @@ def fused_triples(ext: DataFrame) -> DataFrame:
                                    F.col("sections"), aliases),
         lambda r: _triple(r["frag"], "dcterms:references", r["obj"]))
 
-    all_triples = F.concat(doc_arr, pub_arr,
-                           rel_arr("Updates", "rfc:updates"),
-                           rel_arr("Obsoletes", "rfc:obsoletes"),
-                           sec_arr, sec_cites, pre_cites, state_cites)
+    return F.concat(doc_arr, pub_arr,
+                    rel_arr("Updates", "rfc:updates"),
+                    rel_arr("Obsoletes", "rfc:obsoletes"),
+                    sec_arr, sec_cites, pre_cites, state_cites)
 
+
+#: (SparkContext._jvm it was built through, triple_array Column)
+_TRIPLE_ARRAY: tuple[object, Column | None] = (None, None)
+
+
+def triple_array() -> Column:
+    """Every triple of one extracted page, as one array<struct> Column
+    over the extract columns plus ``aliases``.
+
+    Built once per JVM and cached: the Column references no DataFrame,
+    so it stays valid across calls and sessions while the gateway
+    lives; a new gateway (a different ``SparkContext._jvm``) rebuilds
+    it."""
+    global _TRIPLE_ARRAY
+    jvm = SparkContext._jvm
+    if _TRIPLE_ARRAY[0] is not jvm or _TRIPLE_ARRAY[1] is None:
+        _TRIPLE_ARRAY = (jvm, _build_triple_array())
+    return _TRIPLE_ARRAY[1]
+
+
+def fused_triples(ext: DataFrame) -> DataFrame:
+    """Extracted docs (with publisher_uri) → the full triple set."""
+    docs = with_aliases(ext.filter(F.col("is_doc")))
     return (docs
-            .select(F.explode(all_triples).alias("t"))
+            .select(F.explode(triple_array()).alias("t"))
             .select("t.*")
             .filter(F.col("subj").isNotNull() & F.col("obj").isNotNull()
                     & (F.col("obj") != "")))

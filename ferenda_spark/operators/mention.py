@@ -33,9 +33,8 @@ TRAILING_PUNCT_RE = r"[.,;:!?)\]]+$"
 
 def _fragments(extracted: DataFrame) -> DataFrame:
     """Explode docs to (url, frag_uri, text, aliases) rows."""
-    from ferenda_spark.grammar.citations import alias_map
-    docs = extracted.filter(F.col("is_doc")).withColumn(
-        "aliases", alias_map(F.col("text")))
+    from ferenda_spark.grammar.citations import with_aliases
+    docs = with_aliases(extracted.filter(F.col("is_doc")))
     sec_rows = docs.select(
         "url", "aliases", F.explode("sections").alias("sec")
     ).select(

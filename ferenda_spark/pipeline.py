@@ -41,7 +41,10 @@ def build_triples(pages: DataFrame, entities: DataFrame,
     ``fused=True`` (default) runs the single-pass execution
     (operators/fused.py): one Python extract stage with publisher
     linking folded in, one wide Column expression, one explode — no
-    persist barrier, no joins, no shuffles. ``fused=False`` runs the
+    persist barrier, no joins, no shuffles. That Column
+    (fused.triple_array) is built once per JVM and reused by every
+    later call, so a call's Python-side cost is the extract and the
+    plan, not thousands of py4j round trips. ``fused=False`` runs the
     modular operator DAG (the specification path); both emit the
     identical triple set (verified against the same oracles) up to
     one documented boundary: the modular linker caps distinct fuzzy
@@ -66,12 +69,16 @@ def build_triples(pages: DataFrame, entities: DataFrame,
         ext = extract(pages, doc_url_regex=regex, entity_labels=labels)
         triples = fused_triples(ext)
         return triples.dropDuplicates() if dedup else triples
-    extracted = extract(pages, doc_url_regex=regex)
+    from ferenda_spark.grammar.citations import (
+        stateful_reference_triples,
+        with_aliases,
+    )
     # One Python parse per page feeds four downstream column-only
     # plans — persist the (small, html-free) extract output so the
-    # Arrow UDF runs once, not four times.
-    extracted = extracted.persist()
-    from ferenda_spark.grammar.citations import stateful_reference_triples
+    # Arrow UDF runs once, not four times. The alias map is projected
+    # before the persist, so the citation and stateful branches share
+    # one evaluation per page.
+    extracted = with_aliases(extract(pages, doc_url_regex=regex)).persist()
     triples = (
         doc_metadata_triples(extracted)
         .unionByName(section_triples(extracted))

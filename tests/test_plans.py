@@ -424,3 +424,38 @@ def test_negated_property_set_is_scan_filter(spark):
     plan = _plan(df)
     assert "BatchEvalPython" not in plan
     assert "Join" not in plan
+
+
+def _alias_def_projections(df) -> list[str]:
+    """Distinct optimized-plan nodes that mention the ALIAS_DEF pattern
+    (a persisted input's plan prints once per reader; tree-drawing
+    prefixes are stripped so those copies count once)."""
+    from ferenda_spark.grammar.citations import ALIAS_DEF
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sorted({re.sub(r"^[\s:|+-]*", "", line)
+                   for line in plan.split("\n")
+                   if ALIAS_DEF.pattern in line})
+
+
+def test_alias_map_projected_once_per_page(spark):
+    """Spark does not eliminate common subexpressions inside
+    transform/aggregate lambdas: the alias map must be its own
+    projection, read by the section and token lambdas, in both build
+    paths — never inlined into a lambda by an edit or by Catalyst's
+    CollapseProject."""
+    from ferenda_spark.fixtures.pages import entities_df, pages_df
+    from ferenda_spark.grammar.citations import ALIAS_DEF
+    from ferenda_spark.pipeline import build_triples
+    pages = pages_df(spark, 10, partitions=2)
+    for fused in (True, False):
+        df = build_triples(pages, entities_df(spark), fused=fused)
+        nodes = _alias_def_projections(df)
+        assert len(nodes) == 1, (fused, [n[:120] for n in nodes])
+        node = nodes[0]
+        assert node.startswith("Project ["), (fused, node[:120])
+        calls = re.findall(r"regexp_extract_all\(text#\d+, (.*?), (\d+)\)",
+                           node)
+        assert [int(g) for _, g in calls] == [
+            ALIAS_DEF.group_index("name"), ALIAS_DEF.group_index("num")
+        ], (fused, calls)
+        assert node.count(ALIAS_DEF.pattern) == 2, fused

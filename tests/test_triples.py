@@ -51,3 +51,51 @@ def test_citation_skew_exists(spark):
     top = [r["count"] for r in counts.take(5)]
     med = counts.approxQuantile("count", [0.5], 0.01)[0]
     assert top[0] >= 10 * med
+
+
+def test_fused_column_built_once_per_jvm(spark, monkeypatch):
+    """The fused triple Column is DataFrame-independent: a second
+    build_triples reuses it (a few hundred py4j round trips instead of
+    thousands) and emits the same triple multiset; a new gateway
+    rebuilds it."""
+    import gc
+
+    from py4j.clientserver import JavaClient
+    from pyspark import SparkContext
+
+    from ferenda_spark.operators import fused
+
+    pages = pages_df(spark, 20, partitions=2)
+    ents = entities_df(spark)
+    first = build_triples(pages, ents)
+    col = fused.triple_array()
+
+    calls = []
+    send = JavaClient.send_command
+
+    def counting(self, command, *a, **kw):
+        calls.append(command)
+        return send(self, command, *a, **kw)
+
+    gc.collect()
+    monkeypatch.setattr(JavaClient, "send_command", counting)
+    second = build_triples(pages, ents)
+    monkeypatch.setattr(JavaClient, "send_command", send)
+    assert len(calls) < 1000, len(calls)
+    assert fused.triple_array() is col
+    assert sorted(map(tuple, second.collect())) == \
+        sorted(map(tuple, first.collect()))
+
+    class OtherJVM:
+        def __init__(self, jvm):
+            self._jvm = jvm
+
+        def __getattr__(self, name):
+            return getattr(self._jvm, name)
+
+    # restore this JVM's cached Column after the test
+    monkeypatch.setattr(fused, "_TRIPLE_ARRAY", fused._TRIPLE_ARRAY)
+    monkeypatch.setattr(SparkContext, "_jvm", OtherJVM(SparkContext._jvm))
+    rebuilt = fused.triple_array()
+    assert rebuilt is not col
+    assert fused.triple_array() is rebuilt
