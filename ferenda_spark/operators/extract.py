@@ -286,9 +286,17 @@ def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
     publisher entity-linking into this single Python stage
     (``publisher_uri`` column) — the fused fast path; without it the
     column is null and linking happens via the linker join operator.
+
+    An ``input_hash`` column on ``pages`` (graph.with_input_hash) is
+    passed through as the last output column, so each page's lineage
+    rides along with its parse instead of being joined back by url.
+    NULL ``html`` parses as empty content, as with_input_hash hashes it.
     """
     url_re = re.compile(doc_url_regex)
-    src = pages.select("url", "html", "lang")
+    keep_hash = "input_hash" in pages.columns
+    src = pages.select("url", "html", "lang",
+                       *(["input_hash"] if keep_hash else []))
+    schema = EXTRACT_SCHEMA + (", input_hash string" if keep_hash else "")
     labels = entity_labels
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -297,7 +305,7 @@ def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
             out = []
             for url, html_bytes, lang in zip(pdf["url"], pdf["html"],
                                              pdf["lang"]):
-                parsed = parse_page(bytes(html_bytes))
+                parsed = parse_page(bytes(html_bytes or b""))
                 out.append({
                     "url": url,
                     "lang": lang,
@@ -311,6 +319,9 @@ def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
                         resolve(parsed["header"].get("Publisher"))
                         if resolve else None),
                 })
-            yield pd.DataFrame(out)
+            df = pd.DataFrame(out)
+            if keep_hash:
+                df["input_hash"] = pdf["input_hash"].to_numpy()
+            yield df
 
-    return src.mapInPandas(run, schema=EXTRACT_SCHEMA)
+    return src.mapInPandas(run, schema=schema)

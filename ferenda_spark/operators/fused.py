@@ -9,20 +9,23 @@ triple set in one map-only pass:
 
     scan → mapInPandas extract (publisher linking folded in)
          → one wide Column expression building every per-document
-           triple array → concat → explode → project
+           triple array → concat → filter   (page_triples: one row
+                                             per page)
+         → explode → project                (fused_triples)
 
 Zero shuffles, zero caches, zero joins — the whole job is two codegen
 stages, so throughput scales with cores until input bandwidth. Both
 paths are verified against the same ANSI-SQL oracle and golden triple
-sets (kg_edges / kg_edges_modular gate queries).
+sets (kg_edges / kg_edges_modular gate queries). ``run_pipeline``
+persists the per-page frame and derives its edge, node and provenance
+appends from it, so it builds triples the same way.
 
 Per-page state is projected before any lambda reads it: the alias map
-is its own ``aliases`` column (grammar.citations.with_aliases), and the
-section and token lambdas read that column. Spark does not eliminate
-common subexpressions inside ``transform``/``aggregate``, so an
-expression written into a lambda body runs again for every element —
-the inlined alias map ran its regexes and its O(n²) dedup once per
-section and once per token.
+is its own ``aliases`` column, and the section and token lambdas read
+that column. Spark does not eliminate common subexpressions inside
+``transform``/``aggregate``, so an expression written into a lambda
+body runs again for every element — the inlined alias map ran its
+regexes and its O(n²) dedup once per section and once per token.
 
 The triple array itself names only columns and constants, so
 ``triple_array`` builds it once per JVM and every later call reuses
@@ -38,9 +41,9 @@ from pyspark.sql import functions as F
 from ferenda_spark.fixtures.pages import BASE, MONTHS
 from ferenda_spark.grammar.citations import (
     ALIASES,
+    alias_map,
     cite_objs,
     stateful_reference_structs,
-    with_aliases,
 )
 from ferenda_spark.operators.metadata import _CATEGORY_TYPE_ITEMS, _triple
 
@@ -168,11 +171,40 @@ def triple_array() -> Column:
     return _TRIPLE_ARRAY[1]
 
 
+def _with_doc_aliases(ext: DataFrame) -> DataFrame:
+    """``ext`` with the alias map projected, for document pages only."""
+    return ext.withColumn(ALIASES, F.when(F.col("is_doc"),
+                                          alias_map(F.col("text"))))
+
+
+def _page_triple_array() -> Column:
+    """triple_array() of a document page without null-subject, null-
+    or empty-object entries; an empty array for any other page."""
+    return _when_arr(F.col("is_doc"), F.filter(
+        triple_array(),
+        lambda t: t["subj"].isNotNull() & t["obj"].isNotNull()
+        & (t["obj"] != "")))
+
+
+def page_triples(ext: DataFrame) -> DataFrame:
+    """Extracted pages (with publisher_uri) → one row per page:
+    ``url``, ``input_hash`` when ``ext`` carries it, and ``triples``,
+    the page's triple array. A non-document page keeps its row with an
+    empty array, so per-page counts (provenance ``rows_out``) read
+    straight off this frame."""
+    keep = [c for c in ("url", "input_hash") if c in ext.columns]
+    return _with_doc_aliases(ext).select(
+        *keep, _page_triple_array().alias("triples"))
+
+
 def fused_triples(ext: DataFrame) -> DataFrame:
-    """Extracted docs (with publisher_uri) → the full triple set."""
-    docs = with_aliases(ext.filter(F.col("is_doc")))
-    return (docs
-            .select(F.explode(triple_array()).alias("t"))
-            .select("t.*")
-            .filter(F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                    & (F.col("obj") != "")))
+    """Extracted docs (with publisher_uri) → the full triple set: the
+    explode of page_triples' array.
+
+    It explodes the array expression, not a projected ``triples``
+    column: for an exploded column Catalyst infers a ``size > 0``
+    filter and pushes it below the projection, which would build
+    every page's triple array twice."""
+    return (_with_doc_aliases(ext)
+            .select(F.explode(_page_triple_array()).alias("t"))
+            .select("t.*"))

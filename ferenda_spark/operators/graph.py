@@ -514,10 +514,15 @@ def edges_from_triples(triples: DataFrame) -> DataFrame:
                           "obj_datatype", "obj_lang")
 
 
-def nodes_from_triples(triples: DataFrame) -> DataFrame:
+def nodes_from_triples(triples: DataFrame,
+                       lineage: tuple[str, ...] = ()) -> DataFrame:
     """node(uri, rdf_type, label, props) — a pivot-style projection of
     the triple table (reference facet_query SELECT shape,
-    documentrepository.py:2290-2380)."""
+    documentrepository.py:2290-2380).
+
+    ``lineage`` names columns of ``triples`` (e.g. src_url, src_hash)
+    to group by alongside the subject; they lead the output, so each
+    page version gets its own node row tagged with its own lineage."""
     t = triples
     # props: first (minimum) literal obj per pred. map_from_entries
     # THROWS on duplicate keys under Spark's default
@@ -535,7 +540,7 @@ def nodes_from_triples(triples: DataFrame) -> DataFrame:
         lambda acc, e: F.when(F.size(acc) == 0, F.array(e))
         .when(F.element_at(acc, F.size(acc))["pred"] == e["pred"], acc)
         .otherwise(F.concat(acc, F.array(e))))
-    return (t.groupBy(F.col("subj").alias("uri"))
+    return (t.groupBy(*lineage, F.col("subj").alias("uri"))
             .agg(
                 F.min(F.when(F.col("pred") == "rdf:type", F.col("obj")))
                 .alias("rdf_type"),

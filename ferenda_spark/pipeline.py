@@ -1,12 +1,26 @@
 """End-to-end KG-construction pipeline.
 
-pages (url, warc_ts, html, text, lang)
-  → extract (Arrow UDF)                        operators/extract.py
-  → doc metadata + section triples (columns)   operators/metadata.py
-  → citation mentions (columns)                operators/mention.py
-  → entity linking (broadcast + fuzzy)         operators/linker.py
-  → canonical triples
-  → materialize node/edge/provenance           operators/graph.py
+``run_pipeline`` — the committing path — runs:
+
+  pages (url, warc_ts, html, lang)
+    → pending_pages: input_hash + resume anti-join     operators/graph.py
+    → extract (Arrow UDF, publisher linking folded in,
+      input_hash passed through)                       operators/extract.py
+    → page_triples: (url, input_hash, triples)         operators/fused.py
+      — one html-free row per page, the run's only
+        persisted frame
+    → edge append: its explode, lineage (src_url, src_hash) carried
+      from the page row
+    → node append: nodes_from_triples over those edges, grouped with
+      their lineage
+    → provenance append (the commit record): one row per page,
+      rows_out = size(triples)                         operators/graph.py
+
+``build_triples`` returns the triple DataFrame alone: by default the
+explode of the same per-page frame (fused_triples), or, with
+``fused=False``, the modular operator DAG over a persisted extract
+(operators/metadata.py, mention.py, linker.py,
+grammar/citations.py) — the specification both are gated against.
 
 The reference equivalent is parse → distill → relate
 (/root/reference/ferenda/documentrepository.py:1193-1216, 1885-1995);
@@ -19,18 +33,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ferenda_spark.operators.extract import extract
+from ferenda_spark.operators.extract import DOC_URL_RE, extract
+from ferenda_spark.operators.fused import fused_triples, page_triples
 from ferenda_spark.operators.graph import (
     GraphStore,
-    edges_from_triples,
     nodes_from_triples,
     pending_pages,
     provenance_rows,
-    with_input_hash,
 )
 from ferenda_spark.operators.linker import publisher_triples
 from ferenda_spark.operators.mention import citation_triples
 from ferenda_spark.operators.metadata import doc_metadata_triples, section_triples
+
+
+def _extract_linked(pages: DataFrame, entities: DataFrame,
+                    doc_url_regex: str | None) -> DataFrame:
+    """extract with the publisher entities folded into the parse."""
+    labels = [(r["label"], r["uri"])
+              for r in entities.filter(F.col("kind") == "publisher")
+              .select("label", "uri").collect()]
+    regex = DOC_URL_RE if doc_url_regex is None else doc_url_regex
+    return extract(pages, doc_url_regex=regex, entity_labels=labels)
 
 
 def build_triples(pages: DataFrame, entities: DataFrame,
@@ -59,15 +82,9 @@ def build_triples(pages: DataFrame, entities: DataFrame,
     a full-output 6-column shuffle would be the single most expensive
     stage of the job. Set True when unioning untrusted extra sources.
     """
-    from ferenda_spark.operators.extract import DOC_URL_RE
     regex = doc_url_regex if doc_url_regex is not None else DOC_URL_RE
     if fused:
-        from ferenda_spark.operators.fused import fused_triples
-        labels = [(r["label"], r["uri"])
-                  for r in entities.filter(F.col("kind") == "publisher")
-                  .select("label", "uri").collect()]
-        ext = extract(pages, doc_url_regex=regex, entity_labels=labels)
-        triples = fused_triples(ext)
+        triples = fused_triples(_extract_linked(pages, entities, regex))
         return triples.dropDuplicates() if dedup else triples
     from ferenda_spark.grammar.citations import (
         stateful_reference_triples,
@@ -103,9 +120,18 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     resume contract: second run processes only uncommitted urls and
     the final edge table equals the single-run result).
 
-    Commit protocol: edge and node rows are tagged with their page's
-    (src_url, src_hash) lineage, and the provenance SUCCESS row —
-    appended LAST — is the commit record that makes them visible
+    One frame is cached: page_triples over the pending pages,
+    ``(url, input_hash, triples)`` — one row per page, no ``html``.
+    The edge, node and provenance appends all read it, so the Python
+    parse and the triple expression run once per page. Lineage is
+    carried, never joined back: each edge is exploded from its page's
+    row and takes that row's url and hash as (src_url, src_hash), the
+    node rows group by the same pair, and each provenance row is its
+    page's row with ``rows_out = size(triples)``. Two versions of one
+    url in a batch therefore keep separate lineage.
+
+    Commit protocol: the provenance SUCCESS row — appended LAST — is
+    the commit record that makes a page's edge and node rows visible
     through ``GraphStore.read_current``. The three appends are not
     atomic; a crash between them leaves orphan edge/node snapshots
     that ``read_current`` never surfaces and a later replay
@@ -120,44 +146,33 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     import time as _time
 
     t0 = _time.time()
-    todo = pending_pages(pages, store, stage, config_salt).persist()
-    n_todo = todo.count()
-    if n_todo == 0:
-        todo.unpersist()
+    todo = pending_pages(pages, store, stage, config_salt)
+    # a no-op run stops here, before any Python worker starts
+    if todo.isEmpty():
         return {"pages": 0, "triples": 0, "skipped": True}
 
-    triples = build_triples(todo.drop("input_hash"), entities,
-                            doc_url_regex=doc_url_regex)
-    # every triple's subject derives from its page url (doc uri or
-    # #fragment of it), so src_url is a pure column and src_hash is
-    # one batch-local equi-join on url
-    src = todo.select(F.col("url").alias("src_url"),
-                      F.col("input_hash").alias("src_hash"))
-    edges = (edges_from_triples(triples)
-             .withColumn("src_url", F.regexp_replace("subj", r"#.*$", ""))
-             .join(src, "src_url")
-             .persist())
-    n_triples = edges.count()
+    per_page = page_triples(
+        _extract_linked(todo, entities, doc_url_regex)).persist()
+    try:
+        counts = per_page.agg(
+            F.count(F.lit(1)).alias("pages"),
+            F.sum(F.size("triples")).alias("triples")).first()
 
-    store.append(edges, "edge")
-    nodes = (nodes_from_triples(edges)
-             .withColumn("src_url", F.regexp_replace("uri", r"#.*$", ""))
-             .join(src, "src_url"))
-    store.append(nodes, "node")
+        edges = per_page.select(
+            F.col("url").alias("src_url"),
+            F.explode("triples").alias("t"),
+            F.col("input_hash").alias("src_hash"),
+        ).select("src_url", "t.*", "src_hash")
+        store.append(edges, "edge")
+        nodes = nodes_from_triples(edges, lineage=("src_url", "src_hash"))
+        store.append(nodes.select("src_url", "uri", "rdf_type", "label",
+                                  "props", "src_hash"), "node")
 
-    # per-document metrics: triples emitted per url (fragment subjects
-    # roll up to their page), so the lineage row carries the real
-    # per-doc output size — documententry.py's per-doc status analog
-    per_url = (edges
-               .select(F.col("src_url").alias("url"))
-               .groupBy("url")
-               .agg(F.count(F.lit(1)).alias("_rows_out")))
-    duration = _time.time() - t0
-    prov = provenance_rows(todo.join(per_url, "url", "left"), stage,
-                           rows_out_col=F.coalesce("_rows_out", F.lit(0)),
-                           duration_s=duration)
-    store.append(prov.drop("_rows_out"), "provenance")
-    todo.unpersist()
-    edges.unpersist()
-    return {"pages": n_todo, "triples": n_triples, "skipped": False,
-            "duration_s": round(duration, 3)}
+        duration = _time.time() - t0
+        store.append(provenance_rows(per_page, stage,
+                                     rows_out_col=F.size("triples"),
+                                     duration_s=duration), "provenance")
+    finally:
+        per_page.unpersist()
+    return {"pages": counts["pages"], "triples": counts["triples"],
+            "skipped": False, "duration_s": round(duration, 3)}

@@ -3,7 +3,8 @@
 from pyspark.sql import functions as F
 
 from ferenda_spark.fixtures.pages import gen_doc, pages_df, render_html, render_text
-from ferenda_spark.operators.extract import extract, parse_page
+from ferenda_spark.operators.extract import EXTRACT_SCHEMA, extract, parse_page
+from ferenda_spark.operators.graph import with_input_hash
 
 N_DOCS = 120
 
@@ -48,6 +49,21 @@ def test_non_document_pages_flagged(spark):
            .join(pages.select("url", F.col("text").alias("want")), "url")
            .filter(F.col("text") != F.col("want")))
     assert bad.count() == 0
+
+
+def test_extract_passes_input_hash_through(spark):
+    """An input_hash column rides through the parse as the last output
+    column; without one the output is exactly EXTRACT_SCHEMA."""
+    from pyspark.sql.types import _parse_datatype_string
+    pages = pages_df(spark, 20, partitions=2)
+    assert extract(pages).schema == _parse_datatype_string(EXTRACT_SCHEMA)
+
+    hashed = with_input_hash(pages)
+    ext = extract(hashed)
+    assert ext.columns == extract(pages).columns + ["input_hash"]
+    got = {tuple(r) for r in ext.select("url", "input_hash").collect()}
+    want = {tuple(r) for r in hashed.select("url", "input_hash").collect()}
+    assert len(got) == 20 and got == want
 
 
 def test_generator_partition_invariance(spark):

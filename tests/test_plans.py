@@ -445,17 +445,78 @@ def test_alias_map_projected_once_per_page(spark):
     CollapseProject."""
     from ferenda_spark.fixtures.pages import entities_df, pages_df
     from ferenda_spark.grammar.citations import ALIAS_DEF
+    from ferenda_spark.operators.extract import extract
+    from ferenda_spark.operators.fused import page_triples
     from ferenda_spark.pipeline import build_triples
     pages = pages_df(spark, 10, partitions=2)
-    for fused in (True, False):
-        df = build_triples(pages, entities_df(spark), fused=fused)
+    frames = {
+        "fused": build_triples(pages, entities_df(spark), fused=True),
+        "modular": build_triples(pages, entities_df(spark), fused=False),
+        # run_pipeline's cached per-page frame
+        "page_triples": page_triples(extract(pages)),
+    }
+    for path, df in frames.items():
         nodes = _alias_def_projections(df)
-        assert len(nodes) == 1, (fused, [n[:120] for n in nodes])
+        assert len(nodes) == 1, (path, [n[:120] for n in nodes])
         node = nodes[0]
-        assert node.startswith("Project ["), (fused, node[:120])
+        assert node.startswith("Project ["), (path, node[:120])
         calls = re.findall(r"regexp_extract_all\(text#\d+, (.*?), (\d+)\)",
                            node)
         assert [int(g) for _, g in calls] == [
             ALIAS_DEF.group_index("name"), ALIAS_DEF.group_index("num")
-        ], (fused, calls)
-        assert node.count(ALIAS_DEF.pattern) == 2, fused
+        ], (path, calls)
+        assert node.count(ALIAS_DEF.pattern) == 2, path
+
+
+def test_run_pipeline_one_html_free_materialization(spark, tmp_path,
+                                                    monkeypatch):
+    """A fresh run_pipeline caches one frame, which holds no html, and
+    starts at most 10 jobs; its no-op rerun runs no Python stage."""
+    from ferenda_spark.fixtures.pages import entities_df, pages_df
+    from ferenda_spark.operators.graph import GraphStore
+    from ferenda_spark.pipeline import run_pipeline
+    src = str(tmp_path / "pages")
+    pages_df(spark, 30, partitions=2).write.parquet(src)
+    pages, ents = spark.read.parquet(src), entities_df(spark)
+    store = GraphStore(spark, str(tmp_path / "g"))
+
+    persisted = []
+    cls = type(pages)
+    orig_persist = cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self.columns)
+        return orig_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", recording_persist)
+    monkeypatch.setattr(cls, "cache", recording_persist)
+    sc = spark.sparkContext
+    sc.setJobGroup("run_pipeline_fresh", "fresh build")
+    try:
+        assert run_pipeline(spark, pages, ents, store)["pages"] == 30
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert persisted and all("html" not in cols for cols in persisted), \
+        persisted
+    assert len(sc.statusTracker().getJobIdsForGroup(
+        "run_pipeline_fresh")) <= 10
+
+    # the no-op rerun: no plan it executes may hold a Python operator
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = sql_store.executionsList()
+        return [(e.executionId(), e.physicalPlanDescription())
+                for e in (execs.apply(i) for i in range(execs.size()))]
+
+    last = max((i for i, _ in executions()), default=-1)
+    assert run_pipeline(spark, pages, ents, store)["skipped"] is True
+    plans = [p for i, p in executions() if i > last]
+    assert plans
+    python_ops = ("MapInPandas", "MapInArrow", "ArrowEvalPython",
+                  "BatchEvalPython", "FlatMapGroupsInPandas")
+    assert not [p for p in plans if any(op in p for op in python_ops)]

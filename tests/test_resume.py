@@ -65,6 +65,59 @@ def test_resume_after_partial_commit(spark, tmp_path):
     assert _edge_set(part_store) == want
 
 
+def test_same_url_twice_in_one_batch_keeps_lineage(spark, tmp_path):
+    """Two versions of one url in one batch: each version's edges and
+    node rows carry their own page's hash, so the current view shows
+    one title and each provenance row counts only its own version's
+    triples (a url join tagged every edge with both hashes)."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages = pages_df(spark, 6, partitions=2)
+    url = "https://example.org/res/rfc/3"
+    edited = (pages.filter(F.col("url") == url)
+              .withColumn("html", F.encode(F.regexp_replace(
+                  F.decode("html", "UTF-8"), "<h1>", "<h1>Revised "),
+                  "UTF-8")))
+    stats = run_pipeline(spark, pages.unionByName(edited),
+                         entities_df(spark), store)
+    assert stats["pages"] == 7 and stats["triples"] == 320
+
+    assert store.read("edge").count() == 320
+    titles = (store.read_current("edge")
+              .filter((F.col("subj") == url)
+                      & (F.col("pred") == "dcterms:title")).collect())
+    assert len(titles) == 1
+    prov = store.read("provenance").filter(F.col("url") == url).collect()
+    assert sorted(r["rows_out"] for r in prov) == [59, 59]
+    node_labels = {r["src_hash"]: r["label"] for r in
+                   store.read("node").filter(F.col("uri") == url)
+                   .collect()}
+    assert node_labels == {
+        r["src_hash"]: r["obj"] for r in
+        store.read("edge").filter((F.col("subj") == url)
+                                  & (F.col("pred") == "dcterms:title"))
+        .collect()}
+    assert len(set(node_labels.values())) == 2
+
+
+def test_null_html_page_commits_and_resumes(spark, tmp_path):
+    """NULL html parses as empty content, as with_input_hash hashes
+    it: the batch commits, the page gets a success row with no
+    triples, and a rerun is a no-op."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages = pages_df(spark, 6, partitions=2)
+    url = "https://example.org/index/lost"
+    lost = spark.createDataFrame(
+        [(url, None, None, None, "en")], pages.schema)
+    batch = pages.unionByName(lost)
+    ents = entities_df(spark)
+
+    stats = run_pipeline(spark, batch, ents, store)
+    assert stats["pages"] == 7 and stats["triples"] > 0
+    prov = store.read("provenance").filter(F.col("url") == url).collect()
+    assert [(r["success"], r["rows_out"]) for r in prov] == [(True, 0)]
+    assert run_pipeline(spark, batch, ents, store)["skipped"] is True
+
+
 def test_compaction_preserves_contents_and_resume(spark, tmp_path):
     """compact() rewrites N append snapshots into one; table contents
     are row-identical, the manifest holds a single snapshot, and a

@@ -19,9 +19,12 @@ Stages (each an independently gated operator):
                                 per canonical url
   4. lang recovery            — html lang attribute, scan-side
                                 (override with --lang)
-  5. ``run_pipeline``         — extract → mention → link → mint →
-                                snapshot-committed edge/node/
-                                provenance tables; re-running on the
+  5. ``run_pipeline``         — pending anti-join → extract (parse,
+                                publisher linking) → per-page triple
+                                arrays → snapshot-committed edge/
+                                node/provenance tables, each row
+                                tagged with its page's url and
+                                input_hash; re-running on the
                                 same archive AND configuration is a
                                 no-op (resume contract), while a
                                 changed page or configuration retires
