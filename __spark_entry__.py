@@ -27,6 +27,7 @@ from ferenda_spark.operators import textstats
 from ferenda_spark.operators.extract import extract
 from ferenda_spark.operators.graph import edges_from_triples, nodes_from_triples
 from ferenda_spark.operators.linker import link_labels
+from ferenda_spark.pipeline import build_triples
 from ferenda_spark.sources.testdata import (
     DOC_PAGE_URL_RE,
     load_table,
@@ -58,55 +59,10 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused single-pass execution (operators/fused.py)."""
-    from ferenda_spark.operators.fused import fused_triples
-    pages = _pages(spark, sf_dir)
-    labels = [(p[0], BASE + "res/org/" + p[0].lower().replace(" ", "-"))
-              for p in PUBLISHERS]
-    ext = extract(pages, doc_url_regex=DOC_PAGE_URL_RE,
-                  entity_labels=labels)
-    return edges_from_triples(fused_triples(ext))
-
-
-def _kg_edges_modular(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The modular operator DAG (the specification path)."""
-    pages = _pages(spark, sf_dir)
-    ext = extract(pages, doc_url_regex=DOC_PAGE_URL_RE)
-    return edges_from_triples(build_triples_from_extracted(ext, spark))
-
-
-def build_triples_from_extracted(ext: DataFrame, spark: SparkSession):
-    """build_triples but reusing an already-built extract DF."""
-    from ferenda_spark.operators.linker import publisher_triples
-    from ferenda_spark.operators.mention import citation_triples
-    from ferenda_spark.operators.metadata import (
-        doc_metadata_triples,
-        section_triples,
-    )
-    from ferenda_spark.grammar.citations import (
-        stateful_reference_triples,
-        with_aliases,
-    )
-    ents = entities_df(spark)
-    # the Arrow-UDF extract feeds five downstream branches — persist
-    # the (html-free) output so it parses once, not five times; the
-    # alias map is projected before the persist and shared by the
-    # citation and stateful branches
-    ext = with_aliases(ext).persist()
-    triples = (
-        doc_metadata_triples(ext)
-        .unionByName(section_triples(ext))
-        .unionByName(citation_triples(ext))
-        .unionByName(stateful_reference_triples(ext))
-        .unionByName(publisher_triples(ext, ents))
-        .filter(F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                & (F.col("obj") != ""))
-        # no global dropDuplicates: each branch is duplicate-free by
-        # construction (see pipeline.build_triples) — and the oracle's
-        # DISTINCT golden set doubles as the proof (a duplicate row
-        # would fail the row-count compare)
-    )
-    return triples
+    """The public triple build (pipeline.build_triples) as edge rows."""
+    return edges_from_triples(build_triples(
+        _pages(spark, sf_dir), entities_df(spark),
+        doc_url_regex=DOC_PAGE_URL_RE))
 
 
 _COPY_OFFSET = 10_000_000
@@ -699,7 +655,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["unicode_norm_docs"] = unicode_norm_docs
 
     q["kg_edges"] = lambda spark, sf: _kg_edges(spark, sf)
-    q["kg_edges_modular"] = lambda spark, sf: _kg_edges_modular(spark, sf)
 
     def kg_void_description(spark, sf):
         """VoID property partitions (W3C VoID): per-predicate triple /
@@ -4022,7 +3977,6 @@ FROM t
 WITH {_F_CTE}, {_TRIPLES_CTE}
 SELECT * FROM golden
 """
-    o["kg_edges_modular"] = o["kg_edges"]
 
     o["kg_void_description"] = f"""
 WITH {_F_CTE}, {_TRIPLES_CTE}

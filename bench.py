@@ -5,12 +5,12 @@ Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
---scaling: run the KG pipeline on the same synthetic corpus at two
-parallelism levels (default N=2 and 4N=8 cores at 50k pages — the
-validated pair on this host; fresh JVM each) and report triples/sec
-at both plus efficiency = (tp_4N / tp_N) / 4 — the sandbox
-substitution for the N→4N-executor cluster criterion (BASELINE.md).
-Results appended to BENCH.md.
+--scaling [N_DOCS [N [4N]]]: run the triple build on the same
+synthetic corpus at two parallelism levels (default N=1 and 4N=4 cores
+at 50k pages, sized for a 4-CPU machine; fresh JVM each) and report
+triples/sec at both plus efficiency = (tp_4N / tp_N) / 4 — the
+single-machine substitution for the N→4N-executor cluster criterion
+(BASELINE.md). Results appended to BENCH.md.
 
 --kg-worker CPUS PAGES_DIR: internal subprocess entry for --scaling.
 """
@@ -243,8 +243,9 @@ def run_default() -> None:
 
 
 def run_kg_worker(cpus: int, pages_dir: str) -> None:
-    """Time the full KG pipeline (read → extract → mention → link →
-    mint → dedup → count) on a pre-generated pages parquet."""
+    """Time pipeline.build_triples (read → extract with publisher
+    linking → per-page triple array → explode → count) on a
+    pre-generated pages parquet."""
     from pyspark.sql import functions as F  # noqa: F401
     from ferenda_spark.fixtures.pages import entities_df
     from ferenda_spark.pipeline import build_triples
@@ -281,19 +282,16 @@ def run_kg_worker(cpus: int, pages_dir: str) -> None:
                       "triples_per_sec": round(n / sec, 1)}))
 
 
-def run_scaling(n_docs: int = 50000, n_small: int = 2,
-                n_big: int = 8) -> None:
-    """Defaults are the VALIDATED protocol (2→8 cores at 50k pages):
-    every clean measurement across rounds 3-4 (0.854-0.926) used this
-    pair. 8→32 at ≤40k pages is an Amdahl-floored probe on this host
-    (~6 s serial planning vs ~7 s parallel work — see BENCH.md
-    'Diagnosis' notes) and reads ~0.4 regardless of engine quality;
-    the N→4N criterion doesn't fix N, so pick the pair whose per-core
-    work amortizes the serial floor."""
+def run_scaling(n_docs: int = 50000, n_small: int = 1,
+                n_big: int = 4) -> None:
+    """Defaults fit a 4-CPU machine: 1→4 cores at 50k pages. The
+    N→4N criterion does not fix N; pick a pair whose per-core work
+    amortizes the serial planning floor (see BENCH.md 'Diagnosis'
+    notes)."""
     pages_dir = f"/tmp/ferenda_bench_pages_{n_docs}"
     if not os.path.exists(os.path.join(pages_dir, "_SUCCESS")):
         from ferenda_spark.fixtures.pages import pages_df
-        spark = _spark(16)
+        spark = _spark(4)
         pages_df(spark, n_docs, partitions=64).write.mode(
             "overwrite").parquet(pages_dir)
         spark.stop()
@@ -308,8 +306,7 @@ def run_scaling(n_docs: int = 50000, n_small: int = 2,
             out = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--kg-worker",
                  str(cpus), pages_dir],
-                capture_output=True, text=True, check=True,
-                env={**os.environ, "SPARK_DRIVER_MEMORY": "48g"})
+                capture_output=True, text=True, check=True)
             line = [ln for ln in out.stdout.splitlines()
                     if ln.startswith("{")][-1]
             reps[cpus].append(json.loads(line))
@@ -341,7 +338,7 @@ def run_scaling(n_docs: int = 50000, n_small: int = 2,
     with open(os.path.join(REPO, "BENCH.md"), "a") as f:
         f.write(
             f"\n## Scaling run ({time.strftime('%Y-%m-%d %H:%M')} UTC)\n\n"
-            f"Same job (full KG pipeline, {n_docs} synthetic pages, "
+            f"Same job (build_triples, {n_docs} synthetic pages, "
             f"{results[n_small]['triples']} triples), same input, two "
             f"parallelism levels (sandbox substitution for N→4N "
             f"executors):\n\n"

@@ -439,8 +439,7 @@ def with_aliases(docs: DataFrame) -> DataFrame:
 def cite_objs(text: Column, aliases: Column) -> Column:
     """Distinct citation-target URIs in one text — EVERY class in one
     projection: per-class regexp_extract_all → formatter → flatten.
-    Map-only; the single consumer for both the modular and the fused
-    execution paths (one grammar, two plans).
+    Map-only; fused.triple_array mints the citation triples from it.
 
     Each class regex runs behind its ``guard`` substring prefilter —
     ``contains`` is a plain scan, the regex alternation is not, and on
@@ -561,20 +560,3 @@ def stateful_reference_structs(doc_uri: Column, preamble: Column,
 
     return F.aggregate(stream, init, step, lambda acc: acc["out"])
 
-
-def stateful_reference_triples(extracted: DataFrame) -> DataFrame:
-    """(frag, dcterms:references, resolved-target) rows for the
-    stateful short-form class — zero-shuffle companion of
-    mention.citation_triples."""
-    docs = with_aliases(extracted.filter(F.col("is_doc")))
-    refs = stateful_reference_structs(
-        F.col("url"), F.col("preamble"), F.col("sections"),
-        F.col(ALIASES))
-    return (docs
-            .select(F.explode(refs).alias("r"))
-            .select(F.col("r.frag").alias("subj"),
-                    F.lit("dcterms:references").alias("pred"),
-                    F.col("r.obj").alias("obj"),
-                    F.lit(False).alias("obj_is_literal"),
-                    F.lit(None).cast("string").alias("obj_datatype"),
-                    F.lit(None).cast("string").alias("obj_lang")))

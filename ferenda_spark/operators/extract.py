@@ -220,15 +220,9 @@ def _make_publisher_resolver(entity_labels, cutoff: float = 0.8):
     of every viable candidate, so results are byte-identical to the
     unblocked pass at O(band) instead of O(entities) per miss).
     Duplicate normalized labels resolve to the MINIMUM uri, matching
-    the modular linker's deterministic tie-break. Memoized per task
-    with a bounded table — labels repeat heavily.
-
-    Parity note vs the modular linker: this per-row streaming
-    resolver has no global view of distinct misses, so it carries no
-    ``max_fuzzy_misses`` cap; on corpora whose distinct miss labels
-    exceed that cap the modular path deterministically leaves the
-    overflow unlinked while this path links it. Within the cap the
-    two paths emit identical publisher edges."""
+    linker.link_labels' deterministic tie-break. Memoized per task
+    with a bounded table — labels repeat heavily. Unlike link_labels,
+    this per-row resolver has no ``max_fuzzy_misses`` cap."""
     import difflib
     import math
 
@@ -236,8 +230,9 @@ def _make_publisher_resolver(entity_labels, cutoff: float = 0.8):
     if len(entity_labels) > _MAX_ENTITY_DIM:
         raise ValueError(
             f"publisher resolver: entity dimension "
-            f"({len(entity_labels)}) exceeds the broadcast contract "
-            f"({_MAX_ENTITY_DIM}); use the join-based linker")
+            f"({len(entity_labels)}) exceeds the broadcast cap "
+            f"(linker._MAX_ENTITY_DIM = {_MAX_ENTITY_DIM}); link "
+            f"against a smaller entity set")
     exact: dict[str, str] = {}
     for lb, uri in entity_labels:
         if lb is None or uri is None:
@@ -284,8 +279,7 @@ def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
 
     ``entity_labels`` (list of (label, uri), broadcast-sized) folds
     publisher entity-linking into this single Python stage
-    (``publisher_uri`` column) — the fused fast path; without it the
-    column is null and linking happens via the linker join operator.
+    (``publisher_uri`` column); without it the column is null.
 
     An ``input_hash`` column on ``pages`` (graph.with_input_hash) is
     passed through as the last output column, so each page's lineage

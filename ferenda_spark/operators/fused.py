@@ -1,11 +1,9 @@
-"""Fused single-pass triple construction — the optimized execution of
-the modular pipeline.
+"""Triple construction: every triple of a page in one map-only pass.
 
-The modular DAG (metadata ∪ sections ∪ citations ∪ publisher over a
-persisted extract) is the *specification*: composable operators, each
-independently testable. At scale its persist barrier + four cache
-scans + union dominate wall time. This module emits the IDENTICAL
-triple set in one map-only pass:
+This is the one place that encodes the triple rules: header → document
+triples (metadata helpers), section → fragment triples, the citation
+grammar (grammar/citations.py) and its stateful short-form fold, and
+the publisher link resolved during extract:
 
     scan → mapInPandas extract (publisher linking folded in)
          → one wide Column expression building every per-document
@@ -14,11 +12,12 @@ triple set in one map-only pass:
          → explode → project                (fused_triples)
 
 Zero shuffles, zero caches, zero joins — the whole job is two codegen
-stages, so throughput scales with cores until input bandwidth. Both
-paths are verified against the same ANSI-SQL oracle and golden triple
-sets (kg_edges / kg_edges_modular gate queries). ``run_pipeline``
+stages, so throughput scales with cores until input bandwidth. The
+``kg_edges`` gate query checks the output against an ANSI-SQL oracle,
+and tests/test_triples.py against golden triple sets.
+``pipeline.build_triples`` returns fused_triples; ``run_pipeline``
 persists the per-page frame and derives its edge, node and provenance
-appends from it, so it builds triples the same way.
+appends from it.
 
 Per-page state is projected before any lambda reads it: the alias map
 is its own ``aliases`` column, and the section and token lambdas read
@@ -56,9 +55,9 @@ def _when_arr(cond: Column, arr: Column) -> Column:
 
 
 def _cite_structs(subj: Column, text: Column, aliases: Column) -> Column:
-    """Shared multi-class grammar (grammar/citations.py) — the fused
-    and modular plans consume the same registry, so a new citation
-    class lands in both executions by construction."""
+    """One ``dcterms:references`` triple per citation target that the
+    grammar registry (grammar/citations.py) finds in ``text``, so a
+    new citation class lands here by construction."""
     return F.transform(
         cite_objs(text, aliases),
         lambda obj: F.struct(
@@ -114,7 +113,9 @@ def _build_triple_array() -> Column:
                                     F.concat(F.lit(BASE + "res/rfc/"),
                                              num))))
 
-    # per-section fragment triples (metadata.section_triples semantics)
+    # per-section fragment triples: URI {url}#S{ordinal}, parent
+    # {url}#S{prefix} for nested ordinals, else the document
+    # (reference elements.py:622-623 compute_uri, :654-657 isPartOf)
     def sec_structs(sec: Column) -> Column:
         frag = F.concat(uri, F.lit("#S"), sec["ordinal"])
         parent = F.when(

@@ -26,6 +26,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
+
 
 class ConcurrentCommitError(RuntimeError):
     """A competing writer changed the manifest in a way that makes
@@ -268,8 +270,11 @@ class GraphStore:
           Iceberg analog of this view is ``MERGE INTO`` on
           (url, input_hash));
         * a replay of the same (url, input_hash) is a deterministic
-          recompute emitting identical rows, so the final full-row
-          ``dropDuplicates`` restores exactly-once observation.
+          recompute emitting identical rows, so the final
+          ``dropDuplicates`` restores exactly-once observation. It
+          compares the non-map columns only: Spark cannot compare a
+          map (node ``props``), and a node row's other columns already
+          hold its (uri, src_url, src_hash) key.
 
         At 100 TB the semi-join is an AQE-planned join keyed by url
         and the distinct is one shuffle of the CURRENT graph —
@@ -288,8 +293,10 @@ class GraphStore:
                   .agg(F.max(F.struct("attempt_ts", "input_hash"))
                        .getField("input_hash").alias("src_hash"))
                   .select(F.col("url").alias("src_url"), "src_hash"))
+        key = [f.name for f in df.schema.fields
+               if not isinstance(f.dataType, MapType)]
         return (df.join(latest, ["src_url", "src_hash"], "left_semi")
-                .dropDuplicates())
+                .dropDuplicates(key))
 
     def read_at(self, table: str, snapshot_id: str | None = None,
                 as_of_ts: float | None = None) -> DataFrame:

@@ -89,8 +89,8 @@ def link_labels(mentions: DataFrame, entities: DataFrame,
     if len(ent_rows) > _MAX_ENTITY_DIM:
         raise ValueError(
             f"link_labels: entity dimension exceeds the broadcast "
-            f"contract ({_MAX_ENTITY_DIM} distinct rows); partition "
-            f"the entity set or use a join-based linker instead")
+            f"cap (_MAX_ENTITY_DIM = {_MAX_ENTITY_DIM} distinct "
+            f"labels); link against a smaller entity set")
     labels = sorted({r["_elabel"] for r in ent_rows})
     uri_by_label = {r["_elabel"]: r["entity_uri"] for r in ent_rows}
     # blocking index: label length → sorted labels of that length
@@ -138,18 +138,3 @@ def link_labels(mentions: DataFrame, entities: DataFrame,
                   .drop("_mlabel"))
     return hits.unionByName(fuzzy_hits).unionByName(null_m)
 
-
-def publisher_triples(extracted: DataFrame, entities: DataFrame) -> DataFrame:
-    """(url, header.Publisher) → dcterms:publisher edges for linkable labels."""
-    mentions = (extracted.filter(F.col("is_doc"))
-                .select("url", F.col("header")["Publisher"].alias("label"))
-                .filter(F.col("label").isNotNull()))
-    linked = link_labels(
-        mentions, entities.filter(F.col("kind") == "publisher"))
-    return (linked.filter(F.col("entity_uri").isNotNull())
-            .select(F.col("url").alias("subj"),
-                    F.lit("dcterms:publisher").alias("pred"),
-                    F.col("entity_uri").alias("obj"),
-                    F.lit(False).alias("obj_is_literal"),
-                    F.lit(None).cast("string").alias("obj_datatype"),
-                    F.lit(None).cast("string").alias("obj_lang")))

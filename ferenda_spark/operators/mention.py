@@ -1,20 +1,22 @@
-"""Mention/citation recognition: section text → candidate citation triples.
+"""Mention/citation recognition over document text: per-fragment
+rows and the str/link citation segmentation.
 
 The Spark restatement of the reference's citation grammar stack
-(/root/reference/ferenda/citationparser.py:10-165 scanString over every
-string node; /root/reference/ferenda/citationpatterns.py:16-36 url
-grammar with trailing-punctuation exclusion; /root/reference/ferenda/
-sources/tech/rfc.py:430-452 ``section N.N of [RFC X]`` grammar;
-/root/reference/ferenda/sources/legal/se/legalref.py:603-608
+(ferenda/citationparser.py:10-165 scanString over every string node;
+ferenda/citationpatterns.py:16-36 url grammar with trailing-punctuation
+exclusion; ferenda/sources/tech/rfc.py:430-452 ``section N.N of
+[RFC X]`` grammar; ferenda/sources/legal/se/legalref.py:603-608
 ``currentlynamedlaws`` within-document alias state).
 
-Everything here is JVM-side Column work: the grammar registry
-(grammar/citations.py) supplies every class's compiled pattern and
-Column URI formatter; ``regexp_extract_all`` finds candidates and
-``explode`` turns them into rows. The within-document alias state
+Citation *triples* are built by operators/fused.py from the grammar
+registry (grammar/citations.py): every class in one Column projection,
+the stateful short-form class in the same per-page array. This module
+holds the segmentation shape (``segment_text``/``segment_tree``/
+``citation_segments``): the same registry's Python formatters split a
+text into str and link segments. The within-document alias state
 never crosses documents, so it is a per-row map (the grammar's
-``alias_map``, last-definition-wins) built *before* the section
-explode — no shuffle, no Python.
+``alias_map``, last-definition-wins) projected before the fragment
+explode.
 """
 
 from __future__ import annotations
@@ -48,37 +50,6 @@ def _fragments(extracted: DataFrame) -> DataFrame:
         "url", "aliases", F.col("url").alias("frag_uri"),
         F.col("preamble").alias("text"))
     return sec_rows.unionByName(doc_rows)
-
-
-def citation_triples(extracted: DataFrame) -> DataFrame:
-    """Candidate (frag_uri, dcterms:references, target_uri) triples.
-
-    ALL citation classes (grammar/citations.py registry: rfc,
-    rfc_list, bcp, std, draft, doi, iso, eu_directive, ecj_case,
-    alias, url) evaluate in ONE pass over each fragment — the per-row
-    candidate arrays concatenate and dedup (array_distinct) before a
-    single explode, so the whole stage is map-only: one scan, one
-    explode, zero shuffles. (Duplicates can only occur within a
-    fragment — same row — so array_distinct fully replaces the old
-    union + dropDuplicates exchange.)
-
-    The stateful short-form class is the one class NOT handled here
-    (it needs document order across fragments) — see
-    grammar.citations.stateful_reference_triples, unioned in
-    pipeline.build_triples.
-    """
-    from ferenda_spark.grammar.citations import cite_objs
-    frags = _fragments(extracted)
-    objs = cite_objs(F.col("text"), F.col("aliases"))
-    return (frags
-            .select("frag_uri", F.explode(objs).alias("obj"))
-            .select(
-                F.col("frag_uri").alias("subj"),
-                F.lit("dcterms:references").alias("pred"),
-                F.col("obj"),
-                F.lit(False).alias("obj_is_literal"),
-                F.lit(None).cast("string").alias("obj_datatype"),
-                F.lit(None).cast("string").alias("obj_lang")))
 
 
 # -- citation segmentation (the golden <str>/<Link> shape) ------------------

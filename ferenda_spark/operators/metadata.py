@@ -1,12 +1,13 @@
-"""Document-metadata triples: header k/v → typed (subj, pred, obj) rows.
+"""Document-metadata triple helpers: the typed triple struct, the
+category → rdf:type table, and the required-predicate check.
 
-Pure Column expressions (JVM-side, whole-stage codegen) — the Spark
-restatement of the reference's ``parse_metadata_from_soup`` +
-RFC header extraction (/root/reference/ferenda/documentrepository.py:
-1277-1317, /root/reference/ferenda/sources/tech/rfc.py:550-644):
+operators/fused.py builds every triple from these. It restates the
+reference's ``parse_metadata_from_soup`` + RFC header extraction
+(ferenda/documentrepository.py:1277-1317,
+ferenda/sources/tech/rfc.py:550-644):
 ``Updates:``/``Obsoletes:`` comma lists become one edge per target
 (rfc.py:593-603), ``Month Year`` dates become ``xsd:gYearMonth``
-literals (rfc.py:628-640), category labels mint subject URIs, and the
+literals (rfc.py:628-640) and category labels mint subject URIs. The
 required-predicate invariant (rdf:type present per subject,
 documentrepository.py:311-318) is enforceable as a DataFrame check.
 """
@@ -15,11 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ferenda_spark.fixtures.pages import BASE, MONTHS
-
-TRIPLE_COLS = ["subj", "pred", "obj", "obj_is_literal", "obj_datatype",
-               "obj_lang"]
 
 _CATEGORY_TYPE_ITEMS = [
     ("Standards Track", "bibo:Standard"),
@@ -42,87 +38,6 @@ def _triple(subj, pred: str, obj, literal: bool = False,
         (F.lit(lang) if isinstance(lang, (str, type(None))) else lang
          ).cast("string").alias("obj_lang"),
     )
-
-
-def doc_metadata_triples(extracted: DataFrame) -> DataFrame:
-    """Extracted docs → metadata triples (all but publisher, which
-    needs the entity-linking join — see linker.link_publishers)."""
-    docs = extracted.filter(F.col("is_doc"))
-
-    month_map = F.create_map(
-        *[x for m, i in zip(MONTHS, range(1, 13))
-          for x in (F.lit(m), F.lit(f"{i:02d}"))])
-    cat_type = F.create_map(
-        *[x for k, v in _CATEGORY_TYPE_ITEMS for x in (F.lit(k), F.lit(v))])
-
-    uri = F.col("url")
-    category = F.col("header")["Category"]
-    date = F.col("header")["Date"]
-    issued = F.concat(
-        F.regexp_extract(date, r" (\d{4})$", 1),
-        F.lit("-"),
-        month_map[F.regexp_extract(date, r"^(\w+) ", 1)])
-    subject_uri = F.concat(
-        F.lit(BASE + "res/category/"),
-        F.replace(F.lower(category), F.lit(" "), F.lit("-")))
-
-    fixed = docs.select(
-        F.explode(F.array(
-            _triple(uri, "rdf:type", F.coalesce(cat_type[category],
-                                                F.lit("bibo:Report"))),
-            _triple(uri, "dcterms:title", F.col("title"),
-                    literal=True, lang=F.col("lang")),
-            _triple(uri, "dcterms:identifier",
-                    F.concat(F.lit("RFC "),
-                             F.col("header")["Request for Comments"]),
-                    literal=True),
-            _triple(uri, "dcterms:issued", issued, literal=True,
-                    datatype="xsd:gYearMonth"),
-            _triple(uri, "dcterms:subject", subject_uri),
-        )).alias("t")
-    ).select("t.*")
-
-    def _rel_edges(key: str, pred: str) -> DataFrame:
-        vals = F.col("header")[key]
-        return (docs
-                .filter(vals.isNotNull())
-                .select(uri.alias("subj"),
-                        F.explode(F.split(vals, ", ")).alias("num"))
-                .select(_triple(F.col("subj"), pred,
-                                F.concat(F.lit(BASE + "res/rfc/"),
-                                         F.col("num"))).alias("t"))
-                .select("t.*"))
-
-    return (fixed
-            .unionByName(_rel_edges("Updates", "rfc:updates"))
-            .unionByName(_rel_edges("Obsoletes", "rfc:obsoletes")))
-
-
-def section_triples(extracted: DataFrame) -> DataFrame:
-    """Per-section fragment triples: type, ordinal, isPartOf, title.
-
-    URI minting rule: ``{url}#S{ordinal}``, parent = ``{url}#S{prefix}``
-    for nested ordinals else the document (reference:
-    elements.py:622-623 compute_uri, :654-657 isPartOf link).
-    """
-    frags = (extracted.filter(F.col("is_doc"))
-             .select("url", "lang", F.explode("sections").alias("sec")))
-    frag_uri = F.concat(F.col("url"), F.lit("#S"), F.col("sec.ordinal"))
-    parent = F.when(
-        F.col("sec.ordinal").contains("."),
-        F.concat(F.col("url"), F.lit("#S"),
-                 F.regexp_replace(F.col("sec.ordinal"), r"\.\d+$", "")),
-    ).otherwise(F.col("url"))
-    return (frags.select(
-        F.explode(F.array(
-            _triple(frag_uri, "rdf:type", F.lit("bibo:DocumentPart")),
-            _triple(frag_uri, "bibo:chapter", F.col("sec.ordinal"),
-                    literal=True),
-            _triple(frag_uri, "dcterms:isPartOf", parent),
-            _triple(frag_uri, "dcterms:title", F.col("sec.heading"),
-                    literal=True, lang=F.col("lang")),
-        )).alias("t"))
-        .select("t.*"))
 
 
 def assert_required_predicates(triples: DataFrame) -> DataFrame:

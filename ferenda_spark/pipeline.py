@@ -16,11 +16,9 @@
     → provenance append (the commit record): one row per page,
       rows_out = size(triples)                         operators/graph.py
 
-``build_triples`` returns the triple DataFrame alone: by default the
-explode of the same per-page frame (fused_triples), or, with
-``fused=False``, the modular operator DAG over a persisted extract
-(operators/metadata.py, mention.py, linker.py,
-grammar/citations.py) — the specification both are gated against.
+``build_triples`` returns the triple DataFrame alone: the explode of
+the same per-page triple array (fused_triples), so both build triples
+one way.
 
 The reference equivalent is parse → distill → relate
 (/root/reference/ferenda/documentrepository.py:1193-1216, 1885-1995);
@@ -41,9 +39,6 @@ from ferenda_spark.operators.graph import (
     pending_pages,
     provenance_rows,
 )
-from ferenda_spark.operators.linker import publisher_triples
-from ferenda_spark.operators.mention import citation_triples
-from ferenda_spark.operators.metadata import doc_metadata_triples, section_triples
 
 
 def _extract_linked(pages: DataFrame, entities: DataFrame,
@@ -57,57 +52,22 @@ def _extract_linked(pages: DataFrame, entities: DataFrame,
 
 
 def build_triples(pages: DataFrame, entities: DataFrame,
-                  dedup: bool = False, fused: bool = True,
                   doc_url_regex: str | None = None) -> DataFrame:
     """pages → canonical triple DataFrame (the distilled graph).
 
-    ``fused=True`` (default) runs the single-pass execution
-    (operators/fused.py): one Python extract stage with publisher
-    linking folded in, one wide Column expression, one explode — no
-    persist barrier, no joins, no shuffles. That Column
-    (fused.triple_array) is built once per JVM and reused by every
-    later call, so a call's Python-side cost is the extract and the
-    plan, not thousands of py4j round trips. ``fused=False`` runs the
-    modular operator DAG (the specification path); both emit the
-    identical triple set (verified against the same oracles) up to
-    one documented boundary: the modular linker caps distinct fuzzy
-    misses at ``max_fuzzy_misses`` while the fused per-row resolver
-    cannot (no global miss view) — see
-    extract._make_publisher_resolver's parity note.
+    One Python extract stage with publisher linking folded in, one
+    wide Column expression, one explode (operators/fused.py): no
+    persist, no joins, no shuffles. That Column (fused.triple_array)
+    is built once per JVM and reused by every later call, so a call's
+    Python-side cost is the extract and the plan, not thousands of
+    py4j round trips.
 
-    ``dedup=False`` skips a global dropDuplicates: every branch is
-    duplicate-free by construction (citation_triples dedups within
-    documents; metadata/section triples are unique per (subj, pred) by
-    the extract stage's per-doc ordinal dedup), and at 10^12-row scale
-    a full-output 6-column shuffle would be the single most expensive
-    stage of the job. Set True when unioning untrusted extra sources.
+    The output has no duplicate rows by construction: citations are
+    distinct within a fragment, and every other triple is minted once
+    per document or section (the extract stage dedups section
+    ordinals per document).
     """
-    regex = doc_url_regex if doc_url_regex is not None else DOC_URL_RE
-    if fused:
-        triples = fused_triples(_extract_linked(pages, entities, regex))
-        return triples.dropDuplicates() if dedup else triples
-    from ferenda_spark.grammar.citations import (
-        stateful_reference_triples,
-        with_aliases,
-    )
-    # One Python parse per page feeds four downstream column-only
-    # plans — persist the (small, html-free) extract output so the
-    # Arrow UDF runs once, not four times. The alias map is projected
-    # before the persist, so the citation and stateful branches share
-    # one evaluation per page.
-    extracted = with_aliases(extract(pages, doc_url_regex=regex)).persist()
-    triples = (
-        doc_metadata_triples(extracted)
-        .unionByName(section_triples(extracted))
-        .unionByName(citation_triples(extracted))
-        .unionByName(stateful_reference_triples(extracted))
-        .unionByName(publisher_triples(extracted, entities))
-        # Malformed pages (missing header keys, unparseable dates)
-        # must degrade to fewer triples, never to null-object rows.
-        .filter(F.col("subj").isNotNull() & F.col("obj").isNotNull()
-                & (F.col("obj") != ""))
-    )
-    return triples.dropDuplicates() if dedup else triples
+    return fused_triples(_extract_linked(pages, entities, doc_url_regex))
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,

@@ -1,5 +1,6 @@
 """Extract stage: byte-identical text per url (the BASELINE invariant)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ferenda_spark.fixtures.pages import gen_doc, pages_df, render_html, render_text
@@ -65,6 +66,19 @@ def test_extract_passes_input_hash_through(spark):
     want = {tuple(r) for r in hashed.select("url", "input_hash").collect()}
     assert len(got) == 20 and got == want
 
+
+def test_publisher_resolver_cap_names_the_remedy(monkeypatch):
+    """An entity set above the broadcast cap fails loudly, naming the
+    cap and a smaller entity set as the remedy, not a linker that does
+    not exist."""
+    from ferenda_spark.operators import linker
+    from ferenda_spark.operators.extract import _make_publisher_resolver
+    monkeypatch.setattr(linker, "_MAX_ENTITY_DIM", 1)
+    with pytest.raises(ValueError) as err:
+        _make_publisher_resolver([("IETF", "u:1"), ("IAB", "u:2")])
+    msg = str(err.value)
+    assert "_MAX_ENTITY_DIM" in msg and "smaller entity set" in msg
+    assert "join-based" not in msg
 
 def test_generator_partition_invariance(spark):
     a = pages_df(spark, 50, partitions=1).select("url", F.md5("html").alias("h"))

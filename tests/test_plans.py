@@ -440,9 +440,9 @@ def _alias_def_projections(df) -> list[str]:
 def test_alias_map_projected_once_per_page(spark):
     """Spark does not eliminate common subexpressions inside
     transform/aggregate lambdas: the alias map must be its own
-    projection, read by the section and token lambdas, in both build
-    paths — never inlined into a lambda by an edit or by Catalyst's
-    CollapseProject."""
+    projection, read by the section and token lambdas, in build_triples
+    and in run_pipeline's per-page frame — never inlined into a lambda
+    by an edit or by Catalyst's CollapseProject."""
     from ferenda_spark.fixtures.pages import entities_df, pages_df
     from ferenda_spark.grammar.citations import ALIAS_DEF
     from ferenda_spark.operators.extract import extract
@@ -450,8 +450,7 @@ def test_alias_map_projected_once_per_page(spark):
     from ferenda_spark.pipeline import build_triples
     pages = pages_df(spark, 10, partitions=2)
     frames = {
-        "fused": build_triples(pages, entities_df(spark), fused=True),
-        "modular": build_triples(pages, entities_df(spark), fused=False),
+        "build_triples": build_triples(pages, entities_df(spark)),
         # run_pipeline's cached per-page frame
         "page_triples": page_triples(extract(pages)),
     }

@@ -296,6 +296,32 @@ def test_read_current_hides_orphan_partial_appends(spark, tmp_path):
     assert _current_edge_set(store) == clean
 
 
+def test_read_current_node_dedups_replay(spark, tmp_path, monkeypatch):
+    """A replay of committed pages (a second writer that read the
+    pending set before the first one committed) appends the same node
+    rows again; read_current("node") shows each (uri, src_hash) once
+    with its props, though Spark cannot compare the props map."""
+    import ferenda_spark.pipeline as pipeline
+    from ferenda_spark.operators.graph import with_input_hash
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages = pages_df(spark, 6, partitions=2)
+    ents = entities_df(spark)
+    run_pipeline(spark, pages, ents, store)
+    want = {(r["uri"], r["src_hash"]): r["props"]
+            for r in store.read("node").collect()}
+
+    monkeypatch.setattr(
+        pipeline, "pending_pages",
+        lambda pages, store, stage, salt: with_input_hash(pages, salt))
+    assert run_pipeline(spark, pages, ents, store)["pages"] == 6
+    assert store.read("node").count() == 2 * len(want)
+
+    rows = store.read_current("node").collect()
+    assert len(rows) == len(want)
+    assert {(r["uri"], r["src_hash"]): r["props"] for r in rows} == want
+    assert any(want.values())
+
 def test_compact_current_only_materializes_latest_view(spark, tmp_path):
     """compact(current_only=True) rewrites read_current: superseded
     versions and orphan appends are gone from plain read(), resume

@@ -6,13 +6,14 @@ Usage:
     spark-submit --master local[N] --py-files /tmp/fs.zip \
         tools/scaling_job.py <pages_parquet_dir>
 
-Runs the full KG pipeline (read → extract → mention → link → mint →
-dedup → count) exactly as a production submission would: the library
-arrives via --py-files, the session comes from spark-submit's conf,
-and the job prints one JSON line (grep SCALING_RESULT on stdout;
-spark-submit logs go to stderr).  Protocol matches bench.py: one
-warmup run (JIT/codegen/Python-pool amortization), then 3 timed reps
-with the cache dropped, min(wall) = the stall-free capability.
+Runs pipeline.build_triples (read → extract with publisher linking →
+per-page triple array → explode → count) as a production submission
+would: the library arrives via --py-files, the session comes from
+spark-submit's conf, and the job prints one JSON line (grep
+SCALING_RESULT on stdout; spark-submit logs go to stderr).  Protocol
+matches bench.py: one warmup run (JIT/codegen/Python-pool
+amortization), then 3 timed reps with the cache dropped, min(wall) =
+the stall-free capability.
 """
 
 import json
