@@ -70,8 +70,8 @@ _COPY_OFFSET = 10_000_000
 # fixed merge table for the bpe_encode_docs gate: the QUERY runs the
 # production Arrow encoder under these ranked merges; the ORACLE
 # replays them as a chain of literal replaces over the
-# chr(31)-delimited symbol string (tokenize.bpe_apply_merges_col's
-# exact shape) — one source list, two independent engines
+# chr(31)-delimited symbol string — one source list, two independent
+# engines
 _BPE_FIXED_MERGES = [("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"),
                      ("an", "d"), ("e", "r"), ("o", "n"), ("in", "g")]
 
@@ -1294,8 +1294,8 @@ LIMIT 20
         scopes the pattern to one named graph.  The scope is checked
         by the ORACLE's independent ``WHERE graph = 'g:std'`` filter —
         a no-op GRAPH implementation would count the whole store and
-        hash-mismatch.  The quad table is exactly what read_nquads /
-        the GraphScope compiler consume."""
+        hash-mismatch.  The quad table is what the GraphScope compiler
+        consumes."""
         from ferenda_spark.operators.sparql import sparql_query
         e = _kg_edges(spark, sf)
         typed = (e.filter((F.col("pred") == "rdf:type")
@@ -3851,7 +3851,7 @@ LIMIT 10
 
     def media_meta(spark, sf):
         media = multimodal.attach_media(_docs(spark, sf))
-        return _longify(multimodal.media_metadata(media, fake=True))
+        return _longify(multimodal.media_metadata(media))
     q["media_meta"] = media_meta
 
     def streaming_hourly_events(spark, sf):

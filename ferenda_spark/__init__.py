@@ -14,12 +14,15 @@ Design notes
 * Everything is declarative DataFrame / SQL so Catalyst handles
   predicate pushdown, column pruning, join planning and AQE.
 * Python only runs inside Arrow-batched ``mapInPandas`` /
-  ``pandas_udf`` stages (HTML parse, per-document stateful grammars);
-  never per-row Python at the API layer.
-* Joins against small dimension tables (entities, URI templates,
-  slug maps) are always ``F.broadcast``; the one genuinely large join
-  (citation target resolution) is an equi-join with AQE skew
-  handling plus an optional hot-key salting path.
+  ``pandas_udf`` stages (HTML parse, document-structure parsing);
+  never per-row Python at the API layer.  The citation grammar and its
+  stateful short-form fold are Column expressions.
+* The build path is one Python parse (``operators.extract``, publisher
+  linking folded in), one per-page Column expression that mints every
+  triple of a page, citation targets included
+  (``operators.fused.page_triples``), and one commit pass that derives
+  the edge, node and provenance appends from that per-page frame
+  (``pipeline.run_pipeline``).  It has no join on citation targets.
 """
 
 __version__ = "0.1.0"

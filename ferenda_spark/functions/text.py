@@ -114,102 +114,30 @@ def slugify_col(c: Column) -> Column:
     return F.regexp_replace(out, r"[^a-z0-9/#_-]", "")
 
 
-def collation_key(locale_name: str = "C"):
-    """Locale-collation sort key as an Arrow-batched pandas UDF (the
-    reference sorts TOC values with locale.strxfrm under
-    collate_locale — documentrepository.py:193, toc_pagesets:2921-2923).
-    Falls back to casefold when the locale is unavailable in the
-    runtime image."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.functions import PandasUDFType
-
-    def key(s):
-        import locale as loc
-        try:
-            loc.setlocale(loc.LC_COLLATE, locale_name)
-            return s.map(lambda x: loc.strxfrm(x) if x is not None else None)
-        except loc.Error:
-            if locale_name.startswith("sv"):
-                return s.map(lambda x: swedish_collation_key(x)
-                             if x is not None else None)
-            return s.map(lambda x: x.casefold() if x is not None else None)
-
-    return pandas_udf(key, "string", PandasUDFType.SCALAR)
-
-
-# Swedish alphabet primary order: a..z then å, ä, ö (SS 63 71 91).
-# Mapped to ASCII '{' '|' '}' (0x7B-0x7D, > 'z' 0x7A) so a plain
-# byte-lexicographic sort of the key realizes the locale order — the
-# table-driven analog of strxfrm("sv_SE.UTF-8"), usable when the
-# runtime image ships no locales (this container) and, unlike
-# strxfrm, reproducible across nodes and engines. Accents that are
-# NOT distinct Swedish letters (é, ü) fold to their base letters at
-# this primary strength, matching sv collation practice.
-_SV_SRC = "åäö"
-_SV_DST = "{|}"
-# ß included so the py (which would otherwise casefold ß→ss) and the
-# Column (JVM lower keeps ß) forms agree: both lower() then fold
-_SV_FOLD = {"é": "e", "è": "e", "ü": "y", "æ": "|", "ø": "}",
-            "ß": "ss"}
-
-
-def swedish_collation_key(s: str) -> str:
-    """Pure-Python Swedish primary-strength collation key.
-
-    Uses ``lower`` (not ``casefold``) to stay bit-identical with the
-    JVM ``F.lower`` in the Column twin; casefold-only mappings that
-    matter for collation (ß→ss) are in the explicit fold table."""
-    out = s.lower()
-    for k, v in _SV_FOLD.items():
-        out = out.replace(k, v)
-    return out.translate(str.maketrans(_SV_SRC, _SV_DST))
-
-
-def swedish_collation_key_col(c: Column) -> Column:
-    """Column form of :func:`swedish_collation_key` — pure JVM-side
-    (lower + translate), zero-UDF, so TOC/news sorts stay inside
-    whole-stage codegen at any scale."""
-    out = F.lower(c)
-    for k, v in _SV_FOLD.items():
-        out = F.replace(out, F.lit(k), F.lit(v))
-    return F.translate(out, _SV_SRC, _SV_DST)
-
-
 # -- F6: citation-id normalization family -----------------------------------
 # The normalize_sfsid / normalize_lawname analog
 # (/root/reference/ferenda/sources/legal/se/legalref.py:609-629):
 # citation identifiers are normalized before minting/joining so
 # surface variants ("RFC 0822", "draft-...-03", "Directive 95/46/EC")
-# land on ONE canonical URI. Paired py + Column forms, equivalence-
-# tested like normalize_space.
-
-def strip_leading_zeros(s: str) -> str:
-    """'0822' → '822' (RFC numbers are often zero-padded)."""
-    return re.sub(r"^0+(\d)", r"\1", s or "")
+# land on ONE canonical URI. Column forms only: the citation grammar's
+# formatters are their one caller, and the citation goldens pin them.
 
 
 def strip_leading_zeros_col(c: Column) -> Column:
+    """'0822' → '822' (RFC numbers are often zero-padded)."""
     return F.regexp_replace(c, r"^0+(\d)", "$1")
 
 
-def expand_year2(y: str) -> str:
-    """Two-digit year → four digits, pivot 50 ('95'→'1995','04'→'2004')."""
-    return ("19" + y) if int(y) >= 50 else ("20" + y)
-
-
 def expand_year2_col(c: Column) -> Column:
+    """Two-digit year → four digits, pivot 50 ('95'→'1995','04'→'2004')."""
     return F.when(c.cast("int") >= 50,
                   F.concat(F.lit("19"), c)).otherwise(
         F.concat(F.lit("20"), c))
 
 
-def strip_draft_version(slug: str) -> str:
+def strip_draft_version_col(c: Column) -> Column:
     """'draft-ietf-x-proto-03' → 'draft-ietf-x-proto' (the revision
     suffix is not part of the draft's identity)."""
-    return re.sub(r"-\d{2}$", "", slug or "")
-
-
-def strip_draft_version_col(c: Column) -> Column:
     return F.regexp_replace(c, r"-\d{2}$", "")
 
 

@@ -145,35 +145,6 @@ def registered_domain_col(host: Column) -> Column:
             .otherwise(last2))
 
 
-def url_surt(url: str) -> str | None:
-    """SURT form of a URL (Sort-friendly URI Reordering Transform,
-    the Common Crawl / Internet Archive CDX index key): scheme and
-    userinfo/port dropped, a leading ``www.`` label dropped, host
-    labels reversed and comma-joined, ``)`` separator, then the
-    lowercased path+query — so one host's captures sort contiguously
-    and a domain's subtree is one key-range scan.  None when the url
-    has no host."""
-    host = url_host(url)
-    if host is None:
-        return None
-    if host.startswith("www."):
-        host = host[4:]
-    return (",".join(reversed(host.split("."))) + ")"
-            + url_path(url).lower())
-
-
-def url_surt_col(url: Column) -> Column:
-    """Column twin of :func:`url_surt` (pure codegen)."""
-    h = url_host_col(url)
-    h = (F.when(h.startswith("www."), F.substring(h, 5, 1 << 20))
-         .otherwise(h))
-    rev = F.array_join(F.reverse(F.split(h, r"\.")), ",")
-    return F.when(
-        h.isNull(), F.lit(None).cast("string")
-    ).otherwise(F.concat(rev, F.lit(")"),
-                         F.lower(url_path_col(url))))
-
-
 #: URL-template segment classes, most specific first (the order the
 #: classifier tests them in — a UUID is hex, hex is digit-bearing)
 _UUID_RE = (r"^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}"

@@ -1,4 +1,4 @@
-"""The multi-class citation grammar: one registry, three consumers.
+"""The multi-class citation grammar: one registry, two consumers.
 
 The Spark restatement of the reference's LegalRef stack
 (/root/reference/ferenda/sources/legal/se/legalref.py:64-141: ~12
@@ -39,16 +39,13 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ferenda_spark.fixtures.pages import BASE
 from ferenda_spark.functions.text import (
-    expand_year2,
     expand_year2_col,
-    strip_draft_version,
     strip_draft_version_col,
-    strip_leading_zeros,
     strip_leading_zeros_col,
 )
 from ferenda_spark.grammar.combinators import (
@@ -79,10 +76,6 @@ class CitationClass:
     formatter: Callable[[Column], Column]
     updates_state: Callable[[Column], Column] | None = None
     consumes_state: bool = False
-    # Python twin of ``formatter`` for the per-token markup path
-    # (segmentation / golden str-Link trees); equivalence against the
-    # Column formatter is pytest-gated
-    py_formatter: Callable[[object], list] | None = None
     #: literal substring every match necessarily contains — evaluated
     #: as a cheap ``contains`` BEFORE the class regex so fragments
     #: with no candidate marker skip the scan entirely (regex
@@ -111,12 +104,6 @@ def _rfc_uri(num: Column) -> Column:
 
 def build_classes() -> list[CitationClass]:
     classes: list[CitationClass] = []
-
-    import re as _re
-
-    def pg(cls, m, name):
-        """Group of a python re.Match by grammar name ('' if absent)."""
-        return m.group(cls.compiled.group_index(name)) or ""
 
     # 1/2. [RFC n], optionally section-qualified (rfc.py:430-452) —
     # one production so the sectioned form is not double-counted
@@ -304,59 +291,6 @@ def build_classes() -> list[CitationClass]:
     c.formatter = fmt_nested(c)
     classes.append(c)
 
-    # Python twins of the Column formatters (markup/segmentation path)
-    by = {cc.name: cc for cc in classes}
-    by["rfc"].py_formatter = lambda m, cls=by["rfc"]: [
-        BASE + "res/rfc/" + strip_leading_zeros(pg(cls, m, "num"))
-        + (("#S" + pg(cls, m, "sec")) if pg(cls, m, "sec") else "")]
-    by["rfc_list"].py_formatter = lambda m, cls=by["rfc_list"]: [
-        BASE + "res/rfc/" + strip_leading_zeros(n)
-        for n in _re.findall(r"\d+", pg(cls, m, "list"))]
-    by["bcp"].py_formatter = lambda m, cls=by["bcp"]: [
-        BASE + "res/bcp/" + strip_leading_zeros(pg(cls, m, "num"))]
-    by["std"].py_formatter = lambda m, cls=by["std"]: [
-        BASE + "res/std/" + strip_leading_zeros(pg(cls, m, "num"))]
-    by["draft"].py_formatter = lambda m, cls=by["draft"]: [
-        BASE + "res/draft/" + strip_draft_version(pg(cls, m, "slug"))]
-    by["doi"].py_formatter = lambda m, cls=by["doi"]: [
-        "https://doi.org/" + pg(cls, m, "id")]
-    by["iso"].py_formatter = lambda m, cls=by["iso"]: [
-        BASE + "res/iso/" + pg(cls, m, "num")]
-    by["eu_directive"].py_formatter = lambda m, cls=by["eu_directive"]: [
-        BASE + "res/eu/dir/" + expand_year2(pg(cls, m, "year"))
-        + "/" + pg(cls, m, "num")]
-    by["ecj_case"].py_formatter = lambda m, cls=by["ecj_case"]: [
-        BASE + "res/ecj/C-" + pg(cls, m, "num") + "-"
-        + expand_year2(pg(cls, m, "year"))]
-    by["eu_article"].py_formatter = lambda m, cls=by["eu_article"]: [
-        BASE + "res/eu/dir/" + pg(cls, m, "year") + "/"
-        + pg(cls, m, "num") + "#A" + a
-        for a in _re.findall(r"\d+", pg(cls, m, "arts"))]
-
-    def _py_nested(m, cls=by["nested_struct"]):
-        loc = pg(cls, m, "loc")
-        doc = (BASE + "res/rfc/"
-               + strip_leading_zeros(pg(cls, m, "num")))
-        chap = _re.search(r"Chapter (\d+)", loc)
-        sec = _re.search(r"Section (\d+)", loc)
-        many = _re.search(_ITEMS_RE, loc)
-        one = _re.search(r"Item (\d+)", loc)
-        ctx = ".".join(
-            p for p in (("C" + chap.group(1)) if chap else None,
-                        ("S" + sec.group(1)) if sec else None) if p)
-        if many:
-            items = _re.findall(r"\d+", many.group(1))
-        elif one:
-            items = [one.group(1)]
-        else:
-            items = []
-        if items:
-            pre = ctx + "." if ctx else ""
-            return [f"{doc}#{pre}I{i}" for i in items]
-        return [f"{doc}#{ctx}"]
-
-    by["nested_struct"].py_formatter = _py_nested
-
     # cheap contains-prefilter per class (see CitationClass.guard)
     guards = {"rfc": "[RFC", "rfc_list": "RFCs ", "bcp": "BCP ",
               "std": "STD ", "draft": "draft-", "doi": "doi:",
@@ -401,9 +335,10 @@ def alias_map(text: Column) -> Column:
     kill the stage, so duplicates are dropped keeping the last
     occurrence before the map is built.
 
-    Project the map as its own column (``with_aliases``) before any
-    lambda reads it, and pass that column, never this expression, into
-    ``cite_objs`` / ``stateful_reference_structs`` under a
+    Project the map as its own column (``ALIASES``, as
+    ``fused.page_triples`` does) before any lambda reads it, and pass
+    that column, never this expression, into ``cite_objs`` /
+    ``stateful_reference_structs`` under a
     ``transform``/``aggregate``: Spark does not eliminate common
     subexpressions inside higher-order functions, so an inlined map
     reruns both regexes and the O(n²) dedup for every section and
@@ -425,15 +360,6 @@ def alias_map(text: Column) -> Column:
 
 #: column name of the projected per-page alias map
 ALIASES = "aliases"
-
-
-def with_aliases(docs: DataFrame) -> DataFrame:
-    """``docs`` with ``alias_map(text)`` projected as the ``aliases``
-    column, once per page; a frame that already carries the column is
-    returned as is, so branches over one projected extract share it."""
-    if ALIASES in docs.columns:
-        return docs
-    return docs.withColumn(ALIASES, alias_map(F.col("text")))
 
 
 def cite_objs(text: Column, aliases: Column) -> Column:
@@ -480,9 +406,6 @@ STATE_SCAN_RE = "|".join(
     ["(?:" + c.pattern + ")" for c in _STATE_CLASSES]
     + ["(?:" + THATDOC.pattern + ")",
        "(?:" + ALIAS_MENTION.pattern + ")"])
-
-_TOK = "struct<frag:string,m:string>"
-_ACC = ("struct<cur:string,out:array<struct<frag:string,obj:string>>>")
 
 
 def _classify_update(m: Column, aliases: Column) -> Column:

@@ -26,8 +26,8 @@ Two constraints shape the compiler:
   by opening parenthesis.
 
 Genuinely recursive productions (nested element trees) do not
-compile to regexes; those go through the FSM parser
-(operators/fsm.py) — the same split the reference makes between
+compile to regexes; those go through the structure parser
+(operators/structure.py) — the same split the reference makes between
 citation grammars and its document-structure parsers.
 """
 

@@ -13,9 +13,9 @@ becomes the footnote-reference style).
 Here the unit of work is a **table** of textboxes —
 ``boxes(doc_id, page_no, page_width, page_height, left, right, top,
 bottom, font_family, font_size, n_chars)`` — one PDF per doc_id,
-millions of PDFs per job.  The PDF→boxes decode itself is a declared
-codec stub (same policy as operators/multimodal.py: the container
-ships no PDF libs); everything from the box table on is real Spark.
+millions of PDFs per job.  Decoding a PDF into boxes needs a
+layout-capable renderer (glyph positions and font metrics), which the
+package does not ship, so the analytics start from the box table.
 
 Deviations from the reference, for distributed determinism: Counter
 ``most_common`` tie order (CPython insertion order) is replaced by
@@ -167,20 +167,3 @@ def style_metrics(boxes: DataFrame,
                F.array(F.lit("footnoteref"))).otherwise(empty))
     return s.select("doc_id", F.explode(levels).alias("level"),
                     "font_family", "font_size")
-
-
-def decode_pdf_boxes(pdfs: DataFrame):
-    """PDF binary → box rows. Honest stub for box GEOMETRY: the
-    engine's real PDF-subset codec (sources/binary_docs.py pdf_text —
-    plain/FlateDecode streams, Tj/'/\"/TJ text operators) extracts
-    TEXT but does not track the transformation matrices and font
-    metrics that give each glyph run its page-space (x, y, w, h) box;
-    a layout-capable renderer (pdfminer/poppler) is required for
-    that and is not shipped (same policy as multimodal.real_decode).
-    Production swaps one in inside the same mapInPandas contract;
-    the analytics above consume the boxes table contract directly."""
-    raise NotImplementedError(
-        "PDF box decoding requires a layout-capable PDF renderer "
-        "(glyph positions + font metrics); the shipped subset codec "
-        "(sources/binary_docs.py::pdf_text) extracts text only — "
-        "the box analytics consume the boxes table contract directly")

@@ -172,26 +172,6 @@ def resolve_redirects(redirects: DataFrame,
                     .alias("resolved")))
 
 
-def rewrite_through_redirects(df: DataFrame, mapping: DataFrame,
-                              url_col: str = "url",
-                              broadcast_map: bool = False) -> DataFrame:
-    """Rewrite ``df[url_col]`` through a :func:`resolve_redirects`
-    map: resolved sources become their final url, everything else
-    (unresolved chains, urls that never redirected) passes through
-    unchanged.  One left join — broadcast it when the redirect map is
-    small relative to the corpus (it usually is: redirects are a few
-    percent of captures), otherwise let AQE plan it."""
-    m = (mapping.filter(F.col("resolved"))
-         .select(F.col("src").alias(url_col),
-                 F.col("final_url").alias("_final")))
-    if broadcast_map:
-        m = F.broadcast(m)
-    return (df.join(m, url_col, "left")
-            .withColumn(url_col, F.coalesce(F.col("_final"),
-                                            F.col(url_col)))
-            .drop("_final"))
-
-
 def host_graph(links: DataFrame, include_self: bool = False,
                approximate: bool = False) -> DataFrame:
     """Page-level ``links(src, dst)`` → the host-level weighted

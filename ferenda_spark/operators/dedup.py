@@ -951,94 +951,6 @@ def strip_boilerplate(docs: DataFrame, text_col: str = "text",
     return _reassemble_units(units, kept, sep)
 
 
-def _minhash_sidecar(path: str) -> str:
-    import os
-    return os.path.join(path, "_minhash_params")
-
-
-def _read_minhash_params(path: str) -> dict | None:
-    import json
-    import os
-    sidecar = _minhash_sidecar(path)
-    if not os.path.exists(sidecar):
-        return None
-    with open(sidecar) as fp:
-        return json.load(fp)
-
-
-def write_minhash_index(docs: DataFrame, path: str,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        k: int = 16, bands: int = 4, n: int = 3,
-                        buckets: int = 256,
-                        mode: str = "overwrite") -> None:
-    """Persist the historical MinHash band index
-    (:func:`minhash_bands` output) for incremental dedup
-    (:func:`dedup_against_index`): the signatures of a 100 TB history
-    are computed ONCE here, never again per daily batch.
-
-    Layout: parquet partitioned by ``bucket = crc32(band_key) %
-    buckets``.  The daily reader streams the whole index map-side (no
-    pruning is possible — a fresh batch's band keys are arbitrary),
-    but the bucketing keeps per-file row groups band-key-clustered so
-    a point investigation ("which history docs collide with THIS
-    key?") scans 1/``buckets`` of the data.
-
-    ``mode="overwrite"`` (re)builds the whole index;
-    ``mode="append"`` folds a day's ACCEPTED docs in by adding files
-    inside the existing bucket directories — nothing historical is
-    rewritten, and the call REFUSES (before any write) when the
-    existing index's ``_minhash_params`` sidecar is missing or built
-    with a different (k, bands, n): appending parameter-mismatched
-    band rows would poison the index with keys that can never
-    collide.  The sidecar is (re)stamped after the data job, so a
-    crash between the two leaves a loudly-unreadable index (see
-    :func:`read_minhash_index`) rather than a silently unguarded one.
-    """
-    import json
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"write_minhash_index: unsupported mode "
-                         f"{mode!r} (overwrite | append)")
-    want = {"k": k, "bands": bands, "n": n}
-    if mode == "append":
-        have = _read_minhash_params(path)
-        if have != want:
-            raise ValueError(
-                f"write_minhash_index(mode='append'): index at "
-                f"{path} carries params {have}, append requested "
-                f"{want} — mismatched band math would poison the "
-                "index (missing sidecar ⇒ rebuild with overwrite)")
-    bk = minhash_bands(docs, text_col, id_col, k, bands, n)
-    (bk.withColumn("bucket", F.crc32(F.col("band_key")) % buckets)
-     .write.mode(mode).partitionBy("bucket").parquet(path))
-    with open(_minhash_sidecar(path), "w") as fp:
-        json.dump(want, fp)
-
-
-def read_minhash_index(spark, path: str, k: int = 16, bands: int = 4,
-                       n: int = 3) -> DataFrame:
-    """Load a persisted band index, refusing parameter mismatches
-    (the collision math only lines up when the batch side uses the
-    SAME (k, bands, n)).  A MISSING sidecar also refuses: it means
-    the index writer crashed mid-publish or the copy lost the
-    underscore file — an unverifiable index read with wrong
-    parameters would silently never collide, the exact failure the
-    guard exists for."""
-    params = _read_minhash_params(path)
-    want = {"k": k, "bands": bands, "n": n}
-    if params is None:
-        raise ValueError(
-            f"minhash index at {path} has no _minhash_params sidecar "
-            "(interrupted publish or lossy copy) — rebuild it with "
-            "write_minhash_index, or restore the sidecar, before "
-            "trusting its collisions")
-    if params != want:
-        raise ValueError(
-            f"minhash index at {path} was built with {params}, "
-            f"read requested k={k} bands={bands} n={n} — "
-            "collisions would silently never match")
-    return spark.read.parquet(path).select("id", "band", "band_key")
-
-
 def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 5,
                         window: int = 4) -> DataFrame:
@@ -1096,28 +1008,6 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     return (hashed.select("id", F.explode(sel).alias("s"))
             .select("id", F.col("s.pos").alias("pos"),
                     F.col("s.fp").alias("fp")))
-
-
-def winnow_candidate_pairs(fps: DataFrame,
-                           max_df: int = 1000) -> DataFrame:
-    """(id_a, id_b, n_shared) — document pairs sharing winnowed
-    fingerprints, ranked by how many they share.  The fingerprint
-    equi-join is the sparse analog of the shingle join (≈2/(w+1) the
-    keys); fingerprints appearing in more than ``max_df`` documents
-    (license boilerplate — the m² skew point) are dropped under the
-    same explicit-cap contract as ``jaccard_pairs``."""
-    d = fps.select("id", "fp").distinct()
-    if max_df is not None:
-        hot = (d.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
-               .filter(F.col("df") > max_df).select("fp"))
-        d = d.join(F.broadcast(hot), "fp", "left_anti")
-    a = d.alias("a")
-    b = d.alias("b")
-    return (a.join(b, (F.col("a.fp") == F.col("b.fp"))
-                   & (F.col("a.id") < F.col("b.id")))
-            .groupBy(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_shared")))
 
 
 def select_canonical(docs: DataFrame, clusters: DataFrame,

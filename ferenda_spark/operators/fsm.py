@@ -1,103 +1,16 @@
-"""FSM structure parser: a configurable finite-state machine over a
-stream of text chunks, building a nested section tree per document.
+"""Paragraph chunking for the structure parser (operators/structure.py).
 
-The Spark restatement of the reference's FSMParser
-(/root/reference/ferenda/fsmparser.py:13-239): ordered recognizer
-predicates with one-chunk lookahead, a transition table
-(state, recognizer) → (constructor, newstate), and recursive child
-construction. The FSM is sequential *within* a document and
-embarrassingly parallel *across* documents, so it runs inside an
-Arrow-batched ``mapInPandas`` stage — the parser configuration is
-built once per task, each batch processes many documents, and no
-per-row Python ever appears at the Spark API layer.
-
-``rfc_text_sections`` is the concrete grammar (the analog of the
-reference's RFC text parser, /root/reference/ferenda/sources/tech/
-rfc.py:140-345): paragraph chunking (TextReader.readparagraph
-semantics, textreader.py:159-173), numbered-heading recognition, and
-nesting by ordinal depth. Deterministic: ordinals come from the text
-itself, never from mutable counters (the reference's PreambleSection
-counter pitfall, rfc.py:39-60).
+The reference's TextReader.readparagraph (ferenda/textreader.py:
+159-173) feeds its document-structure parsers a stream of
+blank-line-separated chunks; ``paragraphs`` is that stream for one
+document, run inside the parser's Arrow-batched ``mapInPandas`` stage.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Callable, Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from ferenda_spark.functions.text import normalize_space, strip_backspace
-
-
-class Peekable:
-    """Iterator with one-element lookahead (fsmparser.py:244-268)."""
-
-    _END = object()
-
-    def __init__(self, it):
-        self._it = iter(it)
-        self._peeked = self._END
-
-    def peek(self):
-        if self._peeked is self._END:
-            self._peeked = next(self._it, self._END)
-        return None if self._peeked is self._END else self._peeked
-
-    def __iter__(self):
-        return self
-
-    def __next__(self):
-        if self._peeked is not self._END:
-            v, self._peeked = self._peeked, self._END
-            return v
-        v = next(self._it, self._END)
-        if v is self._END:
-            raise StopIteration
-        return v
-
-
-class FSMParser:
-    """Transition-table FSM over chunks.
-
-    recognizers: ordered list of (name, predicate(chunk, peek) -> bool)
-    transitions: {(state, name): (constructor_name, new_state)}
-      new_state may be a callable (chunk) -> state for dynamic
-      transitions (reference fsmparser.py:154-163).
-    constructors: {constructor_name: fn(chunk, state) -> node dict}
-    """
-
-    def __init__(self, recognizers, transitions, constructors,
-                 initial_state: str = "body"):
-        self.recognizers = recognizers
-        self.transitions = transitions
-        self.constructors = constructors
-        self.initial_state = initial_state
-
-    def recognize(self, state: str, chunk: str, peek: str | None):
-        for name, pred in self.recognizers:
-            if (state, name) in self.transitions and pred(chunk, peek):
-                return name
-        return None
-
-    def parse(self, chunks: list[str]) -> list[dict]:
-        out: list[dict] = []
-        state = self.initial_state
-        stream = Peekable(chunks)
-        for chunk in stream:
-            name = self.recognize(state, chunk, stream.peek())
-            if name is None:
-                continue
-            ctor_name, new_state = self.transitions[(state, name)]
-            node = self.constructors[ctor_name](chunk, state)
-            if node is not None:
-                out.append(node)
-            state = new_state(chunk) if callable(new_state) else new_state
-        return out
-
-
-# -- paragraph chunking (TextReader semantics) ------------------------------
 
 _KV_LINE_RE = re.compile(r"^[A-Za-z ]+: +\S")
 
@@ -108,8 +21,8 @@ def paragraphs(text: str) -> list[str]:
 
     A multi-line block containing ``Key: value`` lines is a header
     block (RFC front matter is line-, not paragraph-, structured —
-    rfc.py:550-644): its lines are emitted as separate chunks so the
-    FSM's header recognizer sees each key/value pair."""
+    rfc.py:550-644): its lines are emitted as separate chunks, one
+    key/value pair each."""
     out = []
     for raw in re.split(r"\n[ \t]*\n", text or ""):
         lines = [ln for ln in raw.split("\n") if ln.strip()]
@@ -123,97 +36,3 @@ def paragraphs(text: str) -> list[str]:
             if p:
                 out.append(p)
     return out
-
-
-# -- the RFC-text grammar ---------------------------------------------------
-
-_HEADING_RE = re.compile(r"^(\d+(?:\.\d+)*)\.?\s+(\S.*)$")
-_HEADER_KV_RE = re.compile(r"^([A-Za-z ]+): +(.*)$")
-
-
-def _is_heading(chunk: str, peek: str | None) -> bool:
-    m = _HEADING_RE.match(chunk)
-    # headings are short; a long "1. ..." line is a list item/paragraph
-    return bool(m) and len(chunk) < 80
-
-
-def _is_header_kv(chunk: str, peek: str | None) -> bool:
-    return bool(_HEADER_KV_RE.match(chunk)) and len(chunk) < 120
-
-
-def make_rfc_parser() -> FSMParser:
-    def mk_heading(chunk, state):
-        m = _HEADING_RE.match(chunk)
-        return {"kind": "heading", "ordinal": m.group(1),
-                "value": m.group(2)}
-
-    def mk_header(chunk, state):
-        m = _HEADER_KV_RE.match(chunk)
-        return {"kind": "header", "ordinal": None,
-                "value": f"{m.group(1)}|{m.group(2)}"}
-
-    def mk_para(chunk, state):
-        return {"kind": "para", "ordinal": None, "value": chunk}
-
-    recognizers = [
-        ("heading", _is_heading),
-        ("header_kv", _is_header_kv),
-        ("para", lambda c, p: True),
-    ]
-    transitions = {
-        ("preamble", "header_kv"): ("header", "preamble"),
-        ("preamble", "heading"): ("heading", "sections"),
-        ("preamble", "para"): ("para", "preamble"),
-        ("sections", "heading"): ("heading", "sections"),
-        ("sections", "para"): ("para", "sections"),
-    }
-    constructors = {"heading": mk_heading, "header": mk_header,
-                    "para": mk_para}
-    return FSMParser(recognizers, transitions, constructors,
-                     initial_state="preamble")
-
-
-def _tree_from_events(events: list[dict]) -> list[dict]:
-    """Flat FSM events → per-section rows with parent ordinals."""
-    sections = []
-    current = None
-    for ev in events:
-        if ev["kind"] == "heading":
-            ordinal = ev["ordinal"]
-            parent = ordinal.rsplit(".", 1)[0] if "." in ordinal else None
-            current = {"ordinal": ordinal, "heading": ev["value"],
-                       "parent": parent, "text": ""}
-            sections.append(current)
-        elif ev["kind"] == "para" and current is not None:
-            current["text"] = (current["text"] + " " + ev["value"]).strip()
-    return sections
-
-
-RFC_TEXT_SCHEMA = (
-    "url string, header map<string,string>, "
-    "sections array<struct<ordinal:string, heading:string, "
-    "parent:string, text:string>>")
-
-
-def rfc_text_sections(pages: DataFrame, text_col: str = "text",
-                      url_col: str = "url") -> DataFrame:
-    """Plain-text pages → per-doc header map + section rows via the
-    FSM (the extract path for text/plain sources, S3+G1+G7)."""
-    src = pages.select(url_col, text_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parser = make_rfc_parser()  # built once per task
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf[url_col], pdf[text_col]):
-                events = parser.parse(paragraphs(text or ""))
-                header = {}
-                for ev in events:
-                    if ev["kind"] == "header":
-                        k, v = ev["value"].split("|", 1)
-                        header.setdefault(k, v)
-                rows.append({"url": url, "header": header,
-                             "sections": _tree_from_events(events)})
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(run, schema=RFC_TEXT_SCHEMA)

@@ -35,13 +35,6 @@ class ConcurrentCommitError(RuntimeError):
     analog is a CommitFailedException after CAS validation."""
 
 
-PROVENANCE_SCHEMA = (
-    "url string, stage string, attempt_ts timestamp, success boolean, "
-    "duration_s double, rows_out long, warnings string, error string, "
-    "input_hash string, partition_id int"
-)
-
-
 def _try_break_stale(path: str, stale_after_s: float) -> None:
     """Break ``path`` if it is a stale commit lock.
 
@@ -644,44 +637,3 @@ def export_ntriples(edges: DataFrame, path: str, partitions: int = 1) -> None:
         (lines.repartitionByRange(partitions, "value")
          .sortWithinPartitions("value")
          .write.mode("overwrite").text(path))
-
-
-def snapshot_metrics(store: "GraphStore", table: str,
-                     key_col: str = "subj",
-                     lg_k: int = 12) -> DataFrame:
-    """Per-snapshot metrics over a store table: ``(snapshot_id,
-    snap_ts, n_rows, sketch, n_distinct_est)`` — row count plus a
-    MERGEABLE HLL distinct sketch of ``key_col`` for every committed
-    snapshot, the Iceberg-style snapshot-metadata table
-    (``table.snapshots`` + partition stats) this store's manifest
-    doesn't persist yet.
-
-    Each snapshot is scanned ONCE (one combinable aggregate per
-    snapshot directory — the scans are independent jobs, no shuffle
-    between them), and because the sketches merge by union
-    (``profile.merge_sketches``), any snapshot RANGE's distinct count
-    is answerable later from this metrics table alone — the
-    "metrics per commit so any stage can resume and report" half of
-    the lineage contract, where ``provenance_rows`` covers the
-    per-document half."""
-    from ferenda_spark.operators.profile import distinct_sketches
-    spark = store.spark
-    outs = []
-    for snap in store.snapshots(table):
-        df = store._read_paths([snap["path"]])
-        m = (distinct_sketches(
-                df.withColumn("__g", F.lit(1)), ["__g"], key_col,
-                lg_k=lg_k)
-             .select(F.lit(snap["id"]).alias("snapshot_id"),
-                     F.lit(snap["ts"]).cast("double").alias("snap_ts"),
-                     F.lit(None).cast("long").alias("n_rows"),
-                     "sketch", "n_distinct_est"))
-        n = df.count()
-        m = m.withColumn("n_rows", F.lit(n).cast("long"))
-        outs.append(m)
-    if not outs:
-        raise FileNotFoundError(f"table {table} has no snapshots")
-    out = outs[0]
-    for df in outs[1:]:
-        out = out.unionByName(df)
-    return out

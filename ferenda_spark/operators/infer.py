@@ -197,13 +197,6 @@ class ClosedSchema:
         self.triples = frames["triples"]
 
 
-def close_schema(schema: DataFrame,
-                 checkpoint: bool = False) -> ClosedSchema:
-    """Close a TBox once for reuse across batches — see
-    :class:`ClosedSchema`."""
-    return ClosedSchema(schema, checkpoint=checkpoint)
-
-
 def rdfs_materialize(triples: DataFrame, schema: DataFrame | None = None,
                      closed: ClosedSchema | None = None,
                      dedup: bool = True) -> DataFrame:
@@ -235,10 +228,10 @@ def rdfs_materialize(triples: DataFrame, schema: DataFrame | None = None,
     (``dedup=False`` skips it when a downstream agg dedups anyway —
     note the mixed-graph case then re-emits the asserted schema rows).
 
-    Pass a precomputed ``closed`` (:func:`close_schema`) to reuse one
-    TBox closure across many batches — the streaming maintainer's
-    shape; the closed TBox's triples are then NOT re-emitted (the
-    schema owner already holds them), output = batch ∪ entailments.
+    Pass a precomputed ``closed`` (a :class:`ClosedSchema`) to reuse
+    one TBox closure across many batches; the closed TBox's triples
+    are then NOT re-emitted (the schema owner already holds them),
+    output = batch ∪ entailments.
     """
     t = triples.select("subj", "pred", "obj")
     emit_schema = closed is None

@@ -4,21 +4,15 @@ At 100 TB the cheapest scan is the one that never reads the file:
 parquet/Iceberg file-level min/max stats prune a scan only when the
 filtered column is roughly sorted across files.  Sorting by one
 column destroys locality in every other; interleaving the bits of
-two or three columns into one Morton key (Z-order) gives every
-interleaved column bounded per-file ranges simultaneously — the
-``OPTIMIZE ZORDER BY`` idea of Delta/Iceberg, restated as a pure
-column expression + a range repartition.
+two columns into one Morton key (Z-order) gives both columns bounded
+per-file ranges simultaneously — the ``OPTIMIZE ZORDER BY`` idea of
+Delta/Iceberg, restated as a pure column expression.
 
-- :func:`zorder_key2` / :func:`zorder_key3`: the Morton interleave
-  of 2×31-bit / 3×21-bit non-negative ints as ONE whole-stage-codegen
-  BIGINT expression (shift/and/or magic-number spreads — no UDF, no
-  shuffle; negative or over-range inputs are clamped monotonically,
-  so ordering is preserved and the key never goes negative).
-- :func:`cluster_by_zorder`: range-repartition + in-partition sort on
-  that key — after a parquet write, each output file covers a small
-  hyper-rectangle of the key space, so a predicate on ANY interleaved
-  column prunes most files.  One shuffle (the range exchange), which
-  replaces the one a single-column sort would cost anyway.
+:func:`zorder_key2` is the Morton interleave of two 31-bit
+non-negative ints as ONE whole-stage-codegen BIGINT expression
+(shift/and/or magic-number spreads — no UDF, no shuffle; negative or
+over-range inputs are clamped monotonically, so ordering is preserved
+and the key never goes negative).
 
 The reference has no layout optimizer (its stores are external
 servers); this is infrastructure the Iceberg graph tables of the
@@ -28,7 +22,7 @@ subj-hash)`` or ``(domain-hash, fetch-date)``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _MASKS2 = (  # spread 31 bits to even positions (gap 1)
@@ -37,13 +31,6 @@ _MASKS2 = (  # spread 31 bits to even positions (gap 1)
     (4, 0x0F0F0F0F0F0F0F0F),
     (2, 0x3333333333333333),
     (1, 0x5555555555555555),
-)
-_MASKS3 = (  # spread 21 bits to every third position (gap 2)
-    (32, 0x1F00000000FFFF),
-    (16, 0x1F0000FF0000FF),
-    (8, 0x100F00F00F00F00F),
-    (4, 0x10C30C30C30C30C3),
-    (2, 0x1249249249249249),
 )
 
 
@@ -65,21 +52,9 @@ def spread2(c: Column) -> Column:
     return _spread(_clamp(c, 31), _MASKS2)
 
 
-def spread3(c: Column) -> Column:
-    """21-bit int -> its bits at positions 0,3,6,... of a BIGINT."""
-    return _spread(_clamp(c, 21), _MASKS3)
-
-
 def zorder_key2(x: Column, y: Column) -> Column:
     """Morton interleave of two 31-bit ints (x on even bits)."""
     return spread2(x).bitwiseOR(F.shiftleft(spread2(y), 1))
-
-
-def zorder_key3(x: Column, y: Column, z: Column) -> Column:
-    """Morton interleave of three 21-bit ints."""
-    return (spread3(x)
-            .bitwiseOR(F.shiftleft(spread3(y), 1))
-            .bitwiseOR(F.shiftleft(spread3(z), 2)))
 
 
 def py_zorder2(x: int, y: int) -> int:
@@ -91,31 +66,3 @@ def py_zorder2(x: int, y: int) -> int:
         out |= ((x >> i) & 1) << (2 * i)
         out |= ((y >> i) & 1) << (2 * i + 1)
     return out
-
-
-def py_zorder3(x: int, y: int, z: int) -> int:
-    """Pure-Python twin of :func:`zorder_key3`."""
-    out = 0
-    for j, v in enumerate((x, y, z)):
-        v = min(max(int(v), 0), (1 << 21) - 1)
-        for i in range(21):
-            out |= ((v >> i) & 1) << (3 * i + j)
-    return out
-
-
-def cluster_by_zorder(df: DataFrame, cols: list[str],
-                      n_partitions: int) -> DataFrame:
-    """Range-repartition + sort by the Morton key of 2 or 3 integer
-    columns; write the result with ``.write.parquet`` and every file
-    carries tight min/max stats on EACH of ``cols``."""
-    if len(cols) == 2:
-        key = zorder_key2(F.col(cols[0]), F.col(cols[1]))
-    elif len(cols) == 3:
-        key = zorder_key3(*[F.col(c) for c in cols])
-    else:
-        raise ValueError("cluster_by_zorder takes 2 or 3 columns, "
-                         f"got {len(cols)}")
-    return (df.withColumn("_zkey", key)
-            .repartitionByRange(int(n_partitions), "_zkey")
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey"))

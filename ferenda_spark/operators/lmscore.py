@@ -16,19 +16,11 @@ V outcomes; an unseen context scores ``1/V``).  A document's score is
 ``Σ ln P`` over its bigrams, reported floor-scaled to integer millis
 so the cross-engine comparison tolerates only sub-milli libm drift.
 
-Two scoring paths, bit-identical outputs:
-
-* :func:`score_perplexity` — declarative: explode bigrams, join the
-  count tables (broadcast by default: a reference-slice bigram LM is
-  dimension-sized next to a 100 TB corpus), aggregate per doc.  One
-  explode + two broadcast joins + one keyed agg; the corpus shuffles
-  once on doc_id.
-* :func:`score_perplexity_broadcast` — the at-scale CCNet shape: the
-  fitted counts ship to executors as ONE broadcast variable consumed
-  in an Arrow ``mapInPandas``; the corpus never shuffles at all (the
-  same broadcast-model pattern as classify.py's large-model path).
-  Use when the LM fits executor memory (CCNet's own regime: its
-  Wikipedia KenLM models are a few GB broadcast to every worker).
+Scoring (:func:`score_perplexity`) is declarative: explode bigrams,
+join the count tables (broadcast by default: a reference-slice bigram
+LM is dimension-sized next to a 100 TB corpus), aggregate per doc.
+One explode + two broadcast joins + one keyed agg; the corpus
+shuffles once on doc_id.
 
 Reference analog: ferenda has no LM scoring; this extends the
 curation family (textstats.quality_score, classify.quality_classifier)
@@ -118,66 +110,6 @@ def score_perplexity(docs: DataFrame, lm: dict, text_col: str = "text",
         base.join(scored, id_cols, "left")
         .fillna({"n_bigrams": 0, "n_oov": 0, "logprob_milli": 0}),
         id_cols)
-
-
-def score_perplexity_broadcast(docs: DataFrame, lm: dict,
-                               text_col: str = "text",
-                               id_cols: list[str] | None = None,
-                               spark=None) -> DataFrame:
-    """Zero-shuffle scoring: the fitted LM rides one broadcast
-    variable into an Arrow ``mapInPandas`` over the corpus.
-
-    The two count tables are collected ONCE on the driver (they are
-    reference-slice-sized by contract — loud error past a cap) and
-    broadcast; each executor scores its partitions locally.  Output
-    is bit-identical to :func:`score_perplexity`.
-    """
-    import math
-
-    id_cols = id_cols or ["doc_id"]
-    spark = spark or docs.sparkSession
-    n_model = lm["bigram"].count()
-    if n_model > 50_000_000:
-        raise ValueError(
-            f"bigram LM has {n_model} rows — too large to broadcast; "
-            "use score_perplexity(broadcast_model=False)")
-    c12 = {(r["w1"], r["w2"]): r["c12"] for r in lm["bigram"].collect()}
-    c1 = {r["w1"]: r["c1"] for r in lm["context"].collect()}
-    v = int(lm["vocab_size"])
-    b = spark.sparkContext.broadcast((c12, c1, v))
-
-    import re
-
-    split_re = re.compile(_SPLIT_RE)
-    out_schema = ", ".join(
-        f"{c} {t}" for c, t in docs.select(*id_cols).dtypes)
-    out_schema += ", n_bigrams long, n_oov long, logprob_milli long"
-
-    def score(batches):
-        import pandas as pd
-        bc12, bc1, bv = b.value
-        for pdf in batches:
-            n_bg, n_oov, lp = [], [], []
-            for text in pdf[text_col]:
-                toks = [t for t in split_re.split((text or "").lower())
-                        if t]
-                s, oov = 0.0, 0
-                for w1, w2 in zip(toks, toks[1:]):
-                    cc = bc12.get((w1, w2))
-                    if cc is None:
-                        oov += 1
-                        cc = 0
-                    s += math.log((cc + 1) / (bc1.get(w1, 0) + bv))
-                n_bg.append(max(len(toks) - 1, 0))
-                n_oov.append(oov)
-                lp.append(math.floor(s * 1000) if len(toks) > 1 else 0)
-            out = pdf[id_cols].copy()
-            out["n_bigrams"] = pd.Series(n_bg, dtype="int64")
-            out["n_oov"] = pd.Series(n_oov, dtype="int64")
-            out["logprob_milli"] = pd.Series(lp, dtype="int64")
-            yield out
-
-    return docs.select(*id_cols, text_col).mapInPandas(score, out_schema)
 
 
 def perplexity_buckets(scored: DataFrame, n_buckets: int = 3) -> DataFrame:

@@ -3,11 +3,10 @@
 Images/audio/video ride through the engine as ``binary`` columns with
 a typed metadata struct. The Spark-side plumbing — schema, Arrow batch
 shape, partition-preserving ``mapInPandas`` signature — is real and
-tested; the actual codec step is stubbed (this container ships no
-image/audio libraries): ``decode_media`` raises ``NotImplementedError``
-unless ``fake=True``, in which case a deterministic fake decoder
-derives metadata purely from the bytes, so tests and oracles are
-stable.
+tested; the codec step is a deterministic decoder (``fake_decode``)
+that derives the metadata from the bytes alone, so tests and oracles
+are stable.  No image/audio library is shipped, so no real decoder
+exists.
 
 No reference counterpart (ferenda's nearest analog is its PDF/Word
 binary intermediates, /root/reference/ferenda/pdfreader.py,
@@ -57,30 +56,20 @@ def fake_decode(payload: bytes) -> dict:
     }
 
 
-def real_decode(payload: bytes) -> dict:  # pragma: no cover - stub
-    """The real codec hook (PIL / libav / ffmpeg). Not available in
-    this container — STUB, clearly marked."""
-    raise NotImplementedError(
-        "media codecs are not installed in this environment; "
-        "run with fake=True or provide a decode callable")
+def media_metadata(media: DataFrame) -> DataFrame:
+    """media(media_id, payload:binary) → typed metadata rows, decoded
+    by :func:`fake_decode`.
 
-
-def media_metadata(media: DataFrame, fake: bool = True,
-                   decode=None) -> DataFrame:
-    """media(media_id, payload:binary) → typed metadata rows.
-
-    Arrow-batched ``mapInPandas``: the decoder initializes once per
-    task, each batch is a pandas DataFrame of byte payloads (the same
-    shape a real image decode / resize / frame-sample stage uses).
+    Arrow-batched ``mapInPandas``: each batch is a pandas DataFrame of
+    byte payloads (the same shape a real image decode stage uses).
     """
-    dec = decode or (fake_decode if fake else real_decode)
     src = media.select("media_id", "payload")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = dec(bytes(payload))
+                meta = fake_decode(bytes(payload))
                 meta["media_id"] = int(mid)
                 out.append(meta)
             yield pd.DataFrame(out, columns=[
@@ -88,122 +77,3 @@ def media_metadata(media: DataFrame, fake: bool = True,
                 "height", "duration_ms"])
 
     return src.mapInPandas(run, schema=MEDIA_META_SCHEMA)
-
-
-# -- resize / frame-sample / feature-extract ---------------------------------
-#
-# The three transform stages a multimodal training pipeline runs after
-# decode.  Same policy as media_metadata: Arrow-batched mapInPandas
-# with the REAL schema / batch shape / partitioning, a clearly-marked
-# NotImplementedError where the codec library would sit, and a
-# deterministic fake so tests and downstream stages (ANN over media
-# embeddings) are runnable and stable here.
-
-RESIZED_SCHEMA = ("media_id long, payload binary, width int, "
-                  "height int")
-FRAMES_SCHEMA = ("media_id long, frame_idx int, ts_ms int, "
-                 "frame binary")
-FEATURES_SCHEMA = "media_id long, embedding array<float>"
-
-
-def _fake_bytes(seed: bytes, n: int = 64) -> bytes:
-    """n deterministic bytes from repeated md5 (stand-in payload)."""
-    out = b""
-    block = seed
-    while len(out) < n:
-        block = hashlib.md5(block).digest()
-        out += block
-    return out[:n]
-
-
-def resize_images(media: DataFrame, max_w: int = 256, max_h: int = 256,
-                  fake: bool = True) -> DataFrame:
-    """Image resize stage: (media_id, payload) → resized payload +
-    final dimensions, aspect ratio preserved, never upscaled.  The
-    fake path takes source dimensions from ``fake_decode`` and emits a
-    deterministic stand-in payload; the real path is the PIL/turbojpeg
-    hook."""
-    if not fake:  # pragma: no cover - stub
-        raise NotImplementedError("image codecs are not installed; "
-                                  "run with fake=True")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = fake_decode(bytes(payload))
-                if meta["kind"] != "image":
-                    continue                     # images only
-                w, h = meta["width"], meta["height"]
-                scale = min(max_w / w, max_h / h, 1.0)
-                nw, nh = max(int(w * scale), 1), max(int(h * scale), 1)
-                rows.append({"media_id": int(mid),
-                             "payload": _fake_bytes(bytes(payload),
-                                                    nw * nh // 64 + 16),
-                             "width": nw, "height": nh})
-            yield pd.DataFrame(rows, columns=["media_id", "payload",
-                                              "width", "height"])
-
-    return (media.select("media_id", "payload")
-            .mapInPandas(run, schema=RESIZED_SCHEMA))
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000,
-                  max_frames: int = 8, fake: bool = True) -> DataFrame:
-    """Video frame sampling: one row per sampled frame
-    (media_id, frame_idx, ts_ms, frame) at ``every_ms`` spacing,
-    capped at ``max_frames`` per video (the cap is the skew guard — a
-    ten-hour video must not explode one task).  Non-videos yield no
-    rows.  Real path = ffmpeg/libav hook."""
-    if not fake:  # pragma: no cover - stub
-        raise NotImplementedError("video codecs are not installed; "
-                                  "run with fake=True")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                meta = fake_decode(b)
-                if meta["kind"] != "video":
-                    continue
-                n = min((meta["duration_ms"] // every_ms) + 1,
-                        max_frames)
-                for i in range(n):
-                    rows.append({
-                        "media_id": int(mid), "frame_idx": i,
-                        "ts_ms": i * every_ms,
-                        "frame": _fake_bytes(b + i.to_bytes(4, "big"))})
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx",
-                                              "ts_ms", "frame"])
-
-    return (media.select("media_id", "payload")
-            .mapInPandas(run, schema=FRAMES_SCHEMA))
-
-
-def extract_features(media: DataFrame, dim: int = 64,
-                     fake: bool = True) -> DataFrame:
-    """Media → embedding (array<float>, unit-normalized): the CLIP/
-    wav2vec-style feature stage whose output feeds the similarity
-    operators (cosine_topk / lsh_topk / semantic_dedup run unchanged
-    on these rows).  Fake path: md5-expanded bytes → floats in [-1, 1]
-    → L2-normalized, batch-vectorized in numpy."""
-    if not fake:  # pragma: no cover - stub
-        raise NotImplementedError("embedding models are not installed; "
-                                  "run with fake=True")
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = np.frombuffer(
-                    _fake_bytes(bytes(payload), dim), dtype=np.uint8)
-                v = (raw.astype(np.float64) - 127.5) / 127.5
-                norm = float(np.linalg.norm(v)) or 1.0
-                ids.append(int(mid))
-                vecs.append((v / norm).astype(np.float32).tolist())
-            yield pd.DataFrame({"media_id": ids, "embedding": vecs})
-
-    return (media.select("media_id", "payload")
-            .mapInPandas(run, schema=FEATURES_SCHEMA))

@@ -171,47 +171,3 @@ def check(df: DataFrame, checks: list[tuple] | DataFrame,
     return j.select("check_id", "column", "kind", "threshold",
                     F.round(actual, 6).alias("actual"),
                     F.coalesce(passed, F.lit(False)).alias("passed"))
-
-
-def distinct_sketches(df: DataFrame, group_cols: list[str],
-                      value_col: str, lg_k: int = 12) -> DataFrame:
-    """Per-group DISTINCT-count sketches: ``group_cols… , sketch
-    (binary), n_distinct_est (long)`` via the engine's built-in
-    Apache DataSketches HLL aggregate.
-
-    The lineage-metrics primitive exact counting cannot give at
-    10^12 rows: an exact per-snapshot ``countDistinct(subj)`` costs a
-    full shuffle of the key universe EVERY time a rollup is asked,
-    while a stored 2^lg_k-register sketch per (snapshot, pred)
-    partition is a few KB, MERGEABLE (:func:`merge_sketches` unions
-    them without touching data), and answers "distinct subjects
-    across any snapshot range" from metadata alone — the metrics
-    side of the graph store's per-partition lineage rows.  Standard
-    HLL accuracy: ~1.04/√2^lg_k relative error (±1.6% at the
-    default lg_k=12).
-
-    One map-side-combinable groupBy; the sketch column is the
-    portable DataSketches wire format (readable by other engines).
-    """
-    return (df.groupBy(*group_cols)
-            .agg(F.hll_sketch_agg(F.col(value_col), F.lit(lg_k))
-                 .alias("sketch"))
-            .withColumn("n_distinct_est",
-                        F.hll_sketch_estimate("sketch")))
-
-
-def merge_sketches(sketches: DataFrame,
-                   group_cols: list[str] | None = None) -> DataFrame:
-    """Roll stored sketches up to coarser groups (or one global row
-    when ``group_cols`` is None/empty): union the HLL registers —
-    NEVER rescans the data the sketches summarize; the unioned
-    estimate agrees with a direct sketch of the concatenated input to
-    within HLL tolerance (the union may settle in a different
-    DataSketches register mode, so agreement is statistical, not
-    bit-exact)."""
-    grouped = (sketches.groupBy(*group_cols) if group_cols
-               else sketches.groupBy())
-    return (grouped
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
-            .withColumn("n_distinct_est",
-                        F.hll_sketch_estimate("sketch")))

@@ -22,13 +22,6 @@ Spark-first restatement:
                              quadratic-ish in the citation graph; the
                              reach from one day's changed set is tiny
                              and proportional to actual work).
-* ``regenerate``           — the ``needed("generate")`` loop as one
-                             job: changed = hash-anti-join against the
-                             generate-stage provenance, stale =
-                             changed ∪ their transitive dependents,
-                             re-emit exactly those and commit a
-                             generate provenance snapshot so the next
-                             run skips them.
 
 Cycles (A cites B cites A) terminate through the visited anti-join;
 each BFS round is one shuffle on the url key and each frontier is
@@ -37,14 +30,9 @@ each BFS round is one shuffle on the url key and each frontier is
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ferenda_spark.operators.graph import (
-    GraphStore,
-    pending_pages,
-    provenance_rows,
-)
 from ferenda_spark.operators.resolve import resolve_citations
 
 
@@ -124,62 +112,3 @@ def stale_set(dep_pairs: DataFrame, changed: DataFrame,
     # driver (the gate runner / serving CLI)
     rev.unpersist()
     return reduce(DataFrame.unionByName, parts)
-
-
-def regenerate(spark: SparkSession, pages: DataFrame, store: GraphStore,
-               stage: str = "generate",
-               max_depth: int | None = None,
-               emit=None) -> dict:
-    """One incremental ``needed("generate")`` pass, committed.
-
-    1. changed  = pages new/edited since the last ``stage`` snapshot
-                  (hash anti-join — pending_pages, the S2 change
-                  detector).
-    2. stale    = changed ∪ transitive dependents over the CURRENT
-                  committed edge graph (read_current: the
-                  provenance-gated latest-version view).
-    3. re-emit  = exactly the stale pages through ``emit`` (a render
-                  sink: emit(todo_pages, stale_urls)); THEN a generate
-                  provenance row per url commits the pass so an
-                  immediate rerun is a no-op.
-
-    Commit ordering is the crash contract: the provenance append is
-    LAST, after ``emit`` returns — a crash inside the sink (or between
-    the stale computation and the sink) leaves no provenance, so a
-    replay regenerates the same set deterministically.  Committing
-    first would mark pages generated forever while no artifact exists.
-    With ``emit=None`` the provenance commit itself is the pass's
-    artifact (the caller only wants the work-list bookkeeping, e.g.
-    the streaming maintainer whose rendered outputs are downstream
-    consumers of the returned urls).
-
-    Returns ``{"changed": n, "regenerated": n, "urls": DataFrame}``;
-    the urls DataFrame ((url, depth), localCheckpointed) is what a
-    render sink consumes — render.xhtml pages / atom feeds.
-    """
-    import time as _time
-
-    t0 = _time.time()
-    changed = pending_pages(pages, store, stage).persist()
-    n_changed = changed.count()
-    if n_changed == 0:
-        changed.unpersist()
-        return {"changed": 0, "regenerated": 0, "skipped": True,
-                "urls": None}
-    deps = (dependency_pairs(store.read_current("edge"),
-                             pages.select("url"))
-            if store.exists("edge") else
-            changed.select("url").limit(0)
-            .select(F.col("url"),
-                    F.col("url").alias("depends_on")))
-    stale = stale_set(deps, changed.select("url"), max_depth=max_depth)
-    todo = (pages.join(stale, "url", "left_semi"))
-    if emit is not None:
-        emit(todo, stale)
-    prov = provenance_rows(todo, stage,
-                           duration_s=_time.time() - t0)
-    store.append(prov, "provenance")
-    n_stale = stale.count()
-    changed.unpersist()
-    return {"changed": n_changed, "regenerated": n_stale,
-            "skipped": False, "urls": stale}

@@ -74,16 +74,6 @@ def hyperplane(dim: int, j: int) -> list[int]:
     return [((i * 31 + j * 17 + 7) % 11) - 5 for i in range(dim)]
 
 
-def lsh_bucket(vec: Column, dim: int, n_planes: int = 4) -> Column:
-    """Bucket id = sum over planes j of 2^j * (dot(vec, plane_j) > 0)."""
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(float(c)) for c in hyperplane(dim, j)])
-        bucket = bucket + F.when(dot(vec, plane) > 0,
-                                 F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
-
-
 def lsh_params_for(n: int, threshold: float = 0.95,
                    recall_target: float = 0.9,
                    bucket_occupancy: int = 12,

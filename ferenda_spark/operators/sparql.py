@@ -1071,8 +1071,6 @@ def parse_sparql(text: str, params: dict[str, str] | None = None) -> Query:
 # compiler
 # ---------------------------------------------------------------------------
 
-_META = ("obj_is_literal", "obj_datatype", "obj_lang")
-
 
 def _lit(term: Term):
     return F.lit(term.value)

@@ -64,11 +64,6 @@ def _token_stat_cols(text_col: str) -> list[Column]:
     ]
 
 
-def token_stats(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    return docs.select(id_col, *_token_stat_cols(text_col))
-
-
 def _quality_cols(text_col: str) -> list[Column]:
     toks = tokens(F.col(text_col))
     n = F.size(toks)
@@ -119,15 +114,6 @@ def _langid_cols(text_col: str) -> list[Column]:
     ]
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Rolling polynomial hash over token first-chars + lengths, plus
-    md5 of the full text. The rolling hash is order-sensitive (two
-    docs with the same words in different order differ), md5 is the
-    exact-dup key. acc' = (acc*31 + ascii(first char)*100 + len) % p."""
-    return docs.select(id_col, *_fingerprint_cols(text_col))
-
-
 def _fingerprint_cols(text_col: str) -> list[Column]:
     toks = tokens(F.col(text_col))
     rolling = F.aggregate(
@@ -138,25 +124,6 @@ def _fingerprint_cols(text_col: str) -> list[Column]:
         rolling.alias("rolling_fp"),
         F.md5(F.encode(F.col(text_col), "UTF-8")).alias("text_md5"),
     ]
-
-
-def repetition_signals(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Gopher-style repetition quality signals per document:
-    fraction of tokens that are the single most frequent token, the
-    fraction of bigrams that are the most frequent bigram, and the
-    distinct-token fraction (high repetition → low-quality page).
-
-    One Arrow-batched pandas UDF per row — deliberately NOT the
-    explode→groupBy(doc, gram) formulation: that costs two shuffles
-    keyed by document at 100 TB, while the per-row mode needs no
-    cross-row data at all.  The UDF is the cheap path here because
-    the aggregation is row-local (contrast with langid/quality above,
-    which stay pure-Column because they need no per-row mode)."""
-    return docs.select(
-        id_col, _repetition_struct(text_col).alias("s")
-    ).select(id_col, "s.top_unigram_frac", "s.top_bigram_frac",
-             "s.distinct_frac")
 
 
 def _repetition_struct(text_col: str) -> Column:

@@ -38,13 +38,11 @@ greedy left-to-right pass per rule is likewise exhaustive, because
 applies it in one Arrow ``mapInPandas`` pass with a per-batch
 word→tokens cache (documents repeat words; the cache makes encoding
 effectively per-DISTINCT-word) — embarrassingly parallel, no
-shuffle.  ``bpe_apply_merges_col`` is the pure-column twin for
-SMALL merge lists: the word is rendered as a ``\\x1f``-delimited
-symbol string (``\\x1fl\\x1f\\x1fr\\x1f`` per boundary) and each
-merge becomes ONE literal ``replace`` — left-to-right
-non-overlapping, provably the same greedy pass — which keeps the
-whole encode inside codegen AND gives the DuckDB oracle an exact
-SQL restatement (the bpe_encode_docs gate).
+shuffle.  The DuckDB oracle of the bpe_encode_docs gate restates the
+same greedy pass in SQL: the word is rendered as a
+``\\x1f``-delimited symbol string (``\\x1fl\\x1f\\x1fr\\x1f`` per
+boundary) and each merge becomes ONE literal ``replace`` —
+left-to-right non-overlapping, provably the same greedy pass.
 
 Pre-tokenization is deliberately simple and engine-portable
 (identical semantics in Spark's Java regex, DuckDB's RE2, and
@@ -71,10 +69,6 @@ from pyspark.sql import functions as F
 #: engine-portable pre-tokenizer (see module docstring)
 PRE_TOKEN_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 _PRE_TOKEN_RE = re.compile(PRE_TOKEN_PATTERN)
-
-#: symbol separator for the column-twin encoding (US control char:
-#: cannot appear in pre-tokens, which are printable by construction)
-SEP = "\x1f"
 
 
 # ---- pre-tokenization ----------------------------------------------------
@@ -295,23 +289,6 @@ def encode_word(word: str, merges: list[tuple]) -> list[str]:
                 out.append(s)
         syms = out
     return syms
-
-
-def bpe_apply_merges_col(word: Column, merges: list[tuple]) -> Column:
-    """Column twin for SMALL merge lists: word → array<string> of
-    BPE symbols via one literal ``replace`` per merge over the
-    ``\\x1f``-delimited symbol string — all codegen, and the exact
-    shape the DuckDB oracle restates."""
-    s = F.concat(F.lit(SEP),
-                 F.array_join(F.filter(F.split(word, ""),
-                                       lambda c: c != ""),
-                              SEP + SEP),
-                 F.lit(SEP))
-    for m in merges:
-        left, right = _rule(m)
-        s = F.replace(s, F.lit(SEP + left + SEP + SEP + right + SEP),
-                      F.lit(SEP + left + right + SEP))
-    return F.split(s.substr(F.lit(2), F.length(s) - 2), SEP + SEP)
 
 
 def bpe_encode(docs: DataFrame, merges: list[tuple],

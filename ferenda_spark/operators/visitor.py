@@ -149,17 +149,3 @@ def chapter_context_visitor() -> Visitor:
             node["anno"]["chapter"] = chap
         return chap
     return (fn, "")
-
-
-def prune_visitor(skip: Callable[[dict], bool],
-                  key: str = "visited") -> Visitor:
-    """Mark visited nodes; return None (prune) for nodes matching
-    ``skip`` — exercises the False/None-return contract of
-    visit_node (:1077-1078: 'return True if sub-nodes should be
-    visited, False otherwise')."""
-    def fn(node, state):
-        if skip(node):
-            return None
-        node["anno"][key] = "1"
-        return state
-    return (fn, True)

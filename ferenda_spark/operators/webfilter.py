@@ -248,8 +248,8 @@ def meta_refresh_edges(pages: DataFrame, url_col: str = "url",
     redirect hop HTTP archives do NOT record (the server returned
     200; the page bounces in the browser).  Doorway pages, moved
     content and ad-laden interstitials all redirect this way, so a
-    crawl that only follows 3xx chains (sources/cdx.py
-    redirect_edges → crawl.resolve_redirects) still splits one
+    crawl that only follows 3xx chains (crawl.resolve_redirects over
+    the CDX 3xx captures) still splits one
     document's identity across urls.  These edges union with the
     CDX 3xx edges and ride the same pointer-doubling resolution.
 

@@ -123,16 +123,3 @@ def fetch_plan(captures: DataFrame, max_gap: int = 65536) -> DataFrame:
                  F.max(F.col("offset") + F.col("length"))
                  .alias("range_end"),
                  F.count(F.lit(1)).alias("n_records")))
-
-
-def redirect_edges(cdx: DataFrame) -> DataFrame:
-    """Parsed captures → the redirect graph ``(src, dst)``: one edge
-    per 3xx capture that recorded its Location target (the CDXJ
-    ``redirect`` key).  Feed to
-    :func:`ferenda_spark.operators.crawl.resolve_redirects` to map
-    every moved url to its final home before identity joins."""
-    return (cdx.filter(F.col("error").isNull()
-                       & F.col("status").rlike(r"^3\d\d$")
-                       & F.col("redirect").isNotNull())
-            .select(F.col("url").alias("src"),
-                    F.col("redirect").alias("dst")))

@@ -1,5 +1,4 @@
-"""RDF serialization: a distributed N-Triples writer/reader and a
-driver-side Turtle-subset reader for tiny ontology (TBox) files.
+"""RDF serialization: a distributed N-Triples writer/reader.
 
 N-Triples is the reference's bulk interchange format — its
 triplestore dumps and loads graphs as ``format="nt"`` throughout
@@ -12,16 +11,6 @@ row per triple, serialization and parsing are pure column
 expressions (whole-stage codegen, zero Python in the hot path), a
 100 TB dump splits on line boundaries, and text-source compression
 (.gz per file) composes for free.
-
-Turtle is what the reference's shipped vocabularies use
-(``res/vocab/*.ttl``, loaded at ``documentrepository.py:450-469``).
-Those files are TBoxes — tiny by definition — so the reader here is
-deliberately a DRIVER-side parser returning a local relation (the
-same asymmetry as operators/infer.py's ClosedSchema): prefixes,
-``;``/``,`` continuations, the ``a`` keyword, plain and
-triple-quoted literals with ``@lang`` / ``^^type``.  Out-of-subset
-constructs (blank-node property lists, collections) raise loudly
-rather than mis-parse.
 
 Escape contract (both directions): ``\\`` ``\"`` ``\n`` ``\r``
 ``\t`` — the escapes the writer emits.  The parser flags any OTHER
@@ -270,274 +259,3 @@ def read_ntriples(spark: SparkSession, path: str,
     return parse_ntriples(
         spark.read.text(path).withColumnRenamed("value", "line"),
         prefixes)
-
-
-def write_nquads(quads: DataFrame, path: str,
-                 prefixes: dict[str, str] | None = None,
-                 graph_col: str = "graph",
-                 compression: str | None = None) -> None:
-    """N-Quads dump (RDF 1.1 N-Quads): the triple shape plus a
-    ``graph`` column; NULL-graph rows emit plain triple statements
-    (the default graph).  The quad-store interchange format the
-    reference's context-aware triplestores speak."""
-    w = format_ntriples(quads, prefixes,
-                        graph_col=graph_col).write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.text(path)
-
-
-def read_nquads(spark: SparkSession, path: str,
-                prefixes: dict[str, str] | None = None) -> DataFrame:
-    """Load an N-Quads dump: N-Triples output columns plus ``graph``
-    (NULL for default-graph statements), per-line error capture."""
-    return parse_ntriples(
-        spark.read.text(path).withColumnRenamed("value", "line"),
-        prefixes, quads=True)
-
-
-# ------------------------------------------------------- Turtle (TBox)
-
-class TurtleSubsetError(ValueError):
-    """A construct outside the declared Turtle subset."""
-
-
-def _ttl_tokens(text: str):
-    """Tokenizer for the subset: IRIs, CURIEs/keywords, literals
-    (plain + triple-quoted, with @lang / ^^type suffixes attached),
-    and the ``. ; ,`` punctuation.  Comments run to end of line."""
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in " \t\r\n":
-            i += 1
-        elif ch == "#":
-            while i < n and text[i] != "\n":
-                i += 1
-        elif ch == "<":
-            j = text.index(">", i)
-            yield ("iri", text[i + 1:j])
-            i = j + 1
-        elif ch == '"':
-            if text.startswith('"""', i):
-                j = text.index('"""', i + 3)
-                val, i = text[i + 3:j], j + 3
-            else:
-                j = i + 1
-                buf = []
-                while text[j] != '"':
-                    if text[j] == "\\":
-                        buf.append(text[j:j + 2])
-                        j += 2
-                    else:
-                        buf.append(text[j])
-                        j += 1
-                val, i = "".join(buf), j + 1
-                # same sentinel fold as _unescape_lit: '\\\\' first,
-                # or an escaped backslash followed by n/r/t/" would
-                # decode as a control character
-                val = val.replace("\\\\", _SENTINEL)
-                for raw, esc in _ESCAPES[1:]:
-                    val = val.replace(esc, raw)
-                val = val.replace(_SENTINEL, "\\")
-            lang = dtype = None
-            if text.startswith("@", i):
-                j = i + 1
-                while j < n and (text[j].isalnum() or text[j] == "-"):
-                    j += 1
-                lang, i = text[i + 1:j], j
-            elif text.startswith("^^", i):
-                i += 2
-                if text[i] == "<":
-                    j = text.index(">", i)
-                    dtype, i = text[i + 1:j], j + 1
-                else:
-                    j = i
-                    while j < n and text[j] not in " \t\r\n;,.":
-                        j += 1
-                    dtype, i = text[i:j], j
-            yield ("lit", (val, lang, dtype))
-        elif ch in ".;,":
-            yield ("punct", ch)
-            i += 1
-        elif ch in "[]()":
-            raise TurtleSubsetError(
-                f"blank-node property lists / collections ('{ch}') are "
-                "outside the Turtle subset — pre-flatten the ontology "
-                "or load it as N-Triples")
-        else:
-            j = i
-            while j < n and text[j] not in " \t\r\n;,<\"#":
-                # a trailing statement dot: CURIE local names in the
-                # subset never end with '.', so '.'+whitespace/EOF
-                # terminates the token
-                if text[j] == "." and (j + 1 >= n
-                                       or text[j + 1] in " \t\r\n"):
-                    break
-                j += 1
-            yield ("word", text[i:j])
-            i = j
-
-
-def parse_turtle_tbox(text: str) -> list[tuple]:
-    """Driver-side Turtle-subset parser for tiny ontology files — the
-    shape of the reference's ``res/vocab/*.ttl`` (loaded via rdflib at
-    ``documentrepository.py:450-469``): ``@prefix`` directives, then
-    ``subj pred obj (, obj)* (; pred obj ...)* .`` statements with the
-    ``a`` keyword.  Returns (subj, pred, obj, obj_is_literal,
-    obj_lang, obj_datatype) tuples with CURIEs expanded through the
-    file's own prefix map.  A TBox is tiny by definition; parsing it
-    on the driver and broadcasting the local relation is the same
-    asymmetry ClosedSchema exploits (operators/infer.py)."""
-    RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    prefixes: dict[str, str] = {}
-
-    def resolve(tok) -> str:
-        kind, val = tok
-        if kind == "iri":
-            return val
-        if kind != "word":
-            raise TurtleSubsetError(f"expected a term, got {tok}")
-        if val == "a":
-            return RDF_TYPE
-        pfx, _, local = val.partition(":")
-        if pfx in prefixes:
-            return prefixes[pfx] + local
-        raise TurtleSubsetError(f"unknown prefix in '{val}'")
-
-    toks = list(_ttl_tokens(text))
-    out: list[tuple] = []
-    i = 0
-    while i < len(toks):
-        if toks[i] == ("word", "@prefix"):
-            pfx = toks[i + 1][1].rstrip(":")
-            if toks[i + 2][0] != "iri" or toks[i + 3] != ("punct", "."):
-                raise TurtleSubsetError("malformed @prefix directive")
-            prefixes[pfx] = toks[i + 2][1]
-            i += 4
-            continue
-        subj = resolve(toks[i])
-        i += 1
-        while True:
-            pred = resolve(toks[i])
-            i += 1
-            while True:
-                kind, val = toks[i]
-                if kind == "lit":
-                    lit, lang, dtype = val
-                    if dtype is not None and ":" in dtype \
-                            and not dtype.startswith("http"):
-                        p, _, loc = dtype.partition(":")
-                        if p in prefixes:
-                            dtype = prefixes[p] + loc
-                    out.append((subj, pred, lit, True, lang, dtype))
-                else:
-                    out.append((subj, pred, resolve(toks[i]),
-                                False, None, None))
-                i += 1
-                if toks[i] != ("punct", ","):
-                    break
-                i += 1
-            if toks[i] == ("punct", ";"):
-                i += 1
-                # a dangling ';' before '.' is legal Turtle
-                if toks[i] == ("punct", "."):
-                    break
-                continue
-            break
-        if toks[i] != ("punct", "."):
-            raise TurtleSubsetError(
-                f"expected '.' to end the statement, got {toks[i]}")
-        i += 1
-    return out
-
-
-def read_turtle_tbox(spark: SparkSession, path: str) -> DataFrame:
-    """Parse a Turtle ontology file into a LOCAL-relation triple
-    DataFrame ready for ``close_schema`` / ``rdfs_materialize``."""
-    with open(path, encoding="utf-8") as fp:
-        rows = parse_turtle_tbox(fp.read())
-    return spark.createDataFrame(
-        rows, "subj string, pred string, obj string, "
-              "obj_is_literal boolean, obj_lang string, "
-              "obj_datatype string")
-
-
-# ------------------------------------------------------- skolemization
-
-SKOLEM_SEGMENT = "/.well-known/genid/"
-
-
-def skolemize(triples: DataFrame,
-              base_iri: str = "https://example.org",
-              scope: str | None = None) -> DataFrame:
-    """Replace blank nodes with skolem IRIs (RDF 1.1 §3.5,
-    ``/.well-known/genid/``) — the standard answer to the problem a
-    distributed store cannot avoid: a blank node's identity is scoped
-    to one serialization, so rows naming ``_:b0`` in two partitions
-    (or two dump files) may or may not mean the same node.  Minting
-    ``<base/.well-known/genid/b0>`` makes the identity global and
-    join-stable while staying recognizably anonymous (deskolemizable).
-
-    A blank label is only unique WITHIN one serialization: two dump
-    files each using ``_:b0`` for unrelated nodes must not collide
-    after skolemization (RDF 1.1 §3.5 wants globally unique minted
-    IRIs).  Pass a per-source ``scope`` (e.g. the dump's file name)
-    to namespace the minted IRIs — ``genid/<scope>/b0`` — and pass
-    the SAME scope to :func:`deskolemize` to invert.
-
-    Pure column expressions; labels pass through unchanged inside the
-    IRI, so skolemize/deskolemize (with matching scopes) are exact
-    inverses.  Literal objects are untouched (``obj_is_literal``
-    respected when present, the ``_:`` prefix test used otherwise — a
-    literal that merely starts with ``_:`` is only at risk in schemas
-    without the flag)."""
-    prefix = _skolem_prefix(base_iri, scope)
-
-    def sk(c: Column) -> Column:
-        return F.when(c.startswith("_:"),
-                      F.concat(F.lit(prefix),
-                               F.substring(c, 3, 2**30))).otherwise(c)
-
-    cols = set(triples.columns)
-    obj_ok = F.col("obj_is_literal") if "obj_is_literal" in cols \
-        else F.lit(None).cast("boolean")
-    obj = F.when(F.coalesce(obj_ok, F.lit(False)), F.col("obj")) \
-        .otherwise(sk(F.col("obj")))
-    out = triples.withColumn("subj", sk(F.col("subj"))) \
-        .withColumn("obj", obj)
-    return out
-
-
-def deskolemize(triples: DataFrame,
-                base_iri: str = "https://example.org",
-                scope: str | None = None) -> DataFrame:
-    """Exact inverse of :func:`skolemize` (same ``scope``): skolem
-    IRIs under the base's ``/.well-known/genid/`` collapse back to
-    ``_:`` labels (foreign skolem IRIs — other bases or other scopes —
-    are left alone, per spec: they are real IRIs to everyone but
-    their minter).  Literal objects are untouched, mirroring
-    skolemize: a string literal that merely spells a skolem IRI must
-    not be corrupted into a blank-node label."""
-    prefix = _skolem_prefix(base_iri, scope)
-
-    def unsk(c: Column) -> Column:
-        return F.when(c.startswith(prefix),
-                      F.concat(F.lit("_:"),
-                               F.substring(c, len(prefix) + 1, 2**30))
-                      ).otherwise(c)
-
-    cols = set(triples.columns)
-    obj_lit = F.col("obj_is_literal") if "obj_is_literal" in cols \
-        else F.lit(None).cast("boolean")
-    obj = F.when(F.coalesce(obj_lit, F.lit(False)), F.col("obj")) \
-        .otherwise(unsk(F.col("obj")))
-    return triples.withColumn("subj", unsk(F.col("subj"))) \
-        .withColumn("obj", obj)
-
-
-def _skolem_prefix(base_iri: str, scope: str | None) -> str:
-    prefix = base_iri.rstrip("/") + SKOLEM_SEGMENT
-    if scope:
-        prefix += scope.strip("/") + "/"
-    return prefix

@@ -52,8 +52,3 @@ def test_style_metrics(box_table):
     assert out["footnoteref"] == ("Serif", 5)
     # the 1-char size-9 style is below the 0.5% significance bar
     assert ("Serif", 9) not in out.values()
-
-
-def test_decode_stub_declared():
-    with pytest.raises(NotImplementedError):
-        boxes.decode_pdf_boxes(None)

@@ -1,33 +1,11 @@
-"""CDXJ index: SURT keys, line parse, latest capture, range plan."""
+"""CDXJ index: line parse, latest capture, range plan."""
 
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
-from ferenda_spark.functions.web import url_surt
 from ferenda_spark.sources.cdx import (fetch_plan, latest_capture,
                                        parse_cdxj)
-
-
-def test_url_surt_twin():
-    assert url_surt("https://www.Example.COM/Path?Q=1#f") == \
-        "com,example)/path?q=1"
-    assert url_surt("http://a.b.example.co.uk:8080/x") == \
-        "uk,co,example,b,a)/x"
-    assert url_surt("https://example.com") == "com,example)/"
-    assert url_surt("not a url") is None
-
-
-def test_surt_col_matches_twin(spark):
-    urls = ["https://www.Example.COM/Path?Q=1#f", "https://example.com",
-            "http://u@w.se:80/a/b", "nope"]
-    from ferenda_spark.functions.web import url_surt_col
-    rows = (spark.createDataFrame([(u,) for u in urls], "url string")
-            .select("url", url_surt_col(F.col("url")).alias("s"))
-            .collect())
-    for r in rows:
-        assert r["s"] == url_surt(r["url"]), r["url"]
 
 
 def _line(surt, ts, **blob):

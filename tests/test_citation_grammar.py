@@ -184,79 +184,6 @@ def test_every_registry_class_has_formatter_and_pattern():
         assert c.pattern and callable(c.formatter)
 
 
-# -- segmentation: py formatters mirror the Column formatters ---------------
-
-def test_py_and_column_formatters_agree(spark):
-    """The markup path (py_formatter) and the triple path (Column
-    formatter) must mint identical URIs for every golden case."""
-    from ferenda_spark.operators.mention import segment_text
-    for text, expected in GOLDEN:
-        links = [s["uri"] for s in segment_text(text, {})
-                 if s["kind"] == "link"]
-        assert set(links) == expected, text
-
-
-def test_segment_text_multiclass_roundtrip():
-    from ferenda_spark.operators.mention import segment_text
-    text = "Use BCP 14 with RFCs 0012 and 0212, per Directive 95/46/EC."
-    segs = segment_text(text, {})
-    # segments reassemble to the source text exactly
-    assert "".join(s["text"] for s in segs) == text
-    links = [(s["text"], s["uri"]) for s in segs if s["kind"] == "link"]
-    assert links == [
-        ("BCP 14", f"{BASE}res/bcp/14"),
-        ("0012", f"{BASE}res/rfc/12"),
-        ("0212", f"{BASE}res/rfc/212"),
-        ("Directive 95/46/EC", f"{BASE}res/eu/dir/1995/46"),
-    ]
-
-
-def test_segment_distributed_list_shares_context():
-    """Golden segments for the distributed-list production: each
-    article ordinal is its own Link minting a URI that combines the
-    item with the SHARED directive context; separators and the
-    context tail stay str; segments reassemble exactly."""
-    from ferenda_spark.operators.mention import segment_text
-    text = "Per Articles 5 and 6 of Directive 1995/46/EC, consent."
-    segs = segment_text(text, {})
-    assert "".join(s["text"] for s in segs) == text
-    links = [(s["text"], s["uri"]) for s in segs if s["kind"] == "link"]
-    assert links == [
-        ("5", f"{BASE}res/eu/dir/1995/46#A5"),
-        ("6", f"{BASE}res/eu/dir/1995/46#A6"),
-    ]
-    # the shared context stays str (no Link swallows it)
-    assert " of Directive 1995/46/EC" in "".join(
-        s["text"] for s in segs if s["kind"] == "str")
-
-
-def test_segment_tree_recursive():
-    from ferenda_spark.operators.mention import segment_tree
-    tree = {"tag": "section", "children": [
-        "Intro cites [RFC 5].",
-        {"tag": "blockquote", "children": [
-            "Nested quote cites BCP 14.",
-            {"tag": "footnote", "children": ["Deep: Case C-7/04."]},
-        ]},
-        "Tail text, no citations.",
-    ]}
-    out = segment_tree(tree, {})
-    assert out["tag"] == "section"
-    top_links = [c["uri"] for c in out["children"]
-                 if isinstance(c, dict) and c.get("kind") == "link"]
-    assert top_links == [f"{BASE}res/rfc/5"]
-    quote = [c for c in out["children"]
-             if isinstance(c, dict) and c.get("tag") == "blockquote"][0]
-    q_links = [c["uri"] for c in quote["children"]
-               if c.get("kind") == "link"]
-    assert q_links == [f"{BASE}res/bcp/14"]
-    foot = [c for c in quote["children"] if c.get("tag") == "footnote"][0]
-    assert [c["uri"] for c in foot["children"] if c.get("kind") == "link"] \
-        == [f"{BASE}res/ecj/C-7-2004"]
-    # structure preserved: original tree untouched (pure function)
-    assert isinstance(tree["children"][0], str)
-
-
 def test_alias_redefinition_last_wins(spark):
     """Duplicate alias definitions must not kill the stage
     (map_from_arrays would raise DUPLICATED_MAP_KEY); the last
@@ -270,28 +197,6 @@ def test_alias_redefinition_last_wins(spark):
     m = dict(df.select(alias_map(F.col("t")).alias("m"))
              .collect()[0]["m"])
     assert m == {"TCP": "2", "UDP": "7"}
-
-
-def test_segment_nested_chain_distributes_items():
-    """Golden segments for the recursive chain: each item of the
-    leading list is its own Link carrying the full nested context;
-    the chain tail stays str; segments reassemble exactly."""
-    from ferenda_spark.operators.mention import segment_text
-    text = "See Items 5 and 6 of Section 4 of Chapter 2 of RFC 1234."
-    segs = segment_text(text, {})
-    assert "".join(s["text"] for s in segs) == text
-    links = [(s["text"], s["uri"]) for s in segs if s["kind"] == "link"]
-    assert links == [
-        ("5", f"{BASE}res/rfc/1234#C2.S4.I5"),
-        ("6", f"{BASE}res/rfc/1234#C2.S4.I6"),
-    ]
-    assert " of Section 4 of Chapter 2 of RFC 1234" in "".join(
-        s["text"] for s in segs if s["kind"] == "str")
-    # single-target chain: the WHOLE chain is one Link
-    segs1 = segment_text("Per Section 4 of Chapter 2 of RFC 99;", {})
-    links1 = [(s["text"], s["uri"]) for s in segs1 if s["kind"] == "link"]
-    assert links1 == [("Section 4 of Chapter 2 of RFC 99",
-                       f"{BASE}res/rfc/99#C2.S4")]
 
 
 # -- recursive Grammar/Ref --------------------------------------------------
@@ -348,43 +253,24 @@ def test_grammar_opt_recursion_truncates_to_empty():
 
 # -- file-parametrized golden fixtures ---------------------------------------
 # tests/golden/citations/*.txt mirror the reference's legalref golden
-# corpus format exactly (/root/reference/test/files/legalref/*/*.txt:
+# corpus format exactly (the reference's test/files/legalref/*/*.txt:
 # source text, blank line, serialized <list> of <str>/<Link uri=...>
-# segments).  Unlike the in-code GOLDEN tuples above (URI sets only),
-# these pin the full SEGMENTATION — link boundaries, separator text,
-# shared-context tails — for every citation class, so a grammar change
-# that keeps the URI set but moves a boundary still fails loudly.
+# segments).  The build path mints citation targets, not markup, so each
+# fixture pins the set of its <Link uri=...> targets through cite_objs
+# with the document's own alias map, as fused.page_triples calls it.
 
 import re as _re2
 from pathlib import Path as _Path
 
 _GOLDEN_DIR = _Path(__file__).parent / "golden" / "citations"
 _GOLDEN_FILES = sorted(_GOLDEN_DIR.glob("*.txt"))
+_LINK_URI_RE = _re2.compile(r'<Link uri="([^"]*)">')
 
 
 def _parse_fixture(path):
     raw = path.read_text(encoding="utf-8")
     text, tree = raw.split("\n\n", 1)
     return text, tree.strip()
-
-
-def _serialize(segs):
-    out = ["<list>"]
-    for s in segs:
-        if s["kind"] == "link":
-            out.append(f'  <Link uri="{s["uri"]}">{s["text"]}</Link>')
-        else:
-            out.append(f'  <str>{s["text"]}</str>')
-    out.append("</list>")
-    return "\n".join(out)
-
-
-def _spark_alias_map(spark, text):
-    """The REAL alias map — the Column builder the pipeline uses —
-    so the fixtures also pin alias_map/segment_text consistency."""
-    row = (spark.createDataFrame([(text,)], "text string")
-           .select(alias_map(F.col("text")).alias("m")).first())
-    return dict(row["m"] or {})
 
 
 def test_golden_dir_has_cases():
@@ -394,10 +280,9 @@ def test_golden_dir_has_cases():
 @pytest.mark.parametrize(
     "path", _GOLDEN_FILES, ids=lambda p: p.stem)
 def test_golden_fixture_segmentation(path, spark):
-    from ferenda_spark.operators.mention import segment_text
-    text, expected = _parse_fixture(path)
-    aliases = (_spark_alias_map(spark, text)
-               if "refers to [RFC" in text else {})
-    segs = segment_text(text, aliases)
-    assert "".join(s["text"] for s in segs) == text   # lossless
-    assert _serialize(segs) == expected
+    text, tree = _parse_fixture(path)
+    objs = (spark.createDataFrame([(text,)], "text string")
+            .select(cite_objs(F.col("text"), alias_map(F.col("text")))
+                    .alias("o"))
+            .first()["o"])
+    assert set(objs) == set(_LINK_URI_RE.findall(tree)), text

@@ -1,102 +1,40 @@
-"""Tests for the FSM structure parser, citation segmentation, COIN
-minting compiler, and the graph-diff P/R harness."""
+"""Tests for paragraph chunking, citation targets, the COIN minting
+compiler, and the graph-diff P/R harness."""
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from ferenda_spark.fixtures.pages import BASE
 from ferenda_spark.functions.minting import UriTemplate, mint
-from ferenda_spark.operators.fsm import (
-    FSMParser,
-    make_rfc_parser,
-    paragraphs,
-    rfc_text_sections,
-)
+from ferenda_spark.grammar.citations import alias_map, cite_objs
+from ferenda_spark.operators.fsm import paragraphs
 from ferenda_spark.operators.graph import graph_diff, precision_recall
-from ferenda_spark.operators.mention import segment_text
-
-RFC_TEXT = """Network Working Group
-Request for Comments: 42
-
-A Test Protocol
-
-1. Introduction
-
-This memo cites [RFC 7] for background.
-
-1.1 Details
-
-See section 2.1 of [RFC 9].
-
-2. Security Considerations
-
-None.
-"""
-
 
 def test_paragraphs_chunking():
     ps = paragraphs("a b\n\n  c\td \n \n e M\x08MU\x08US\x08ST\x08T")
     assert ps == ["a b", "c d", "e MUST"]
 
 
-def test_fsm_parser_events():
-    parser = make_rfc_parser()
-    events = parser.parse(paragraphs(RFC_TEXT))
-    kinds = [e["kind"] for e in events]
-    assert kinds.count("heading") == 3
-    assert "header" in kinds
-    headings = [e["ordinal"] for e in events if e["kind"] == "heading"]
-    assert headings == ["1", "1.1", "2"]
+def _cite(spark, text, aliases):
+    """cite_objs over one text, the way the build path calls it."""
+    row = (spark.createDataFrame([(text,)], "text string")
+           .select(cite_objs(F.col("text"), aliases).alias("o")).first())
+    return row["o"]
 
 
-def test_fsm_dynamic_transition():
-    # dynamic new_state callable (reference fsmparser.py:154-163)
-    p = FSMParser(
-        recognizers=[("any", lambda c, peek: True)],
-        transitions={("s", "any"): ("mk", lambda chunk: chunk)},
-        constructors={"mk": lambda c, s: {"chunk": c, "state": s}},
-        initial_state="s")
-    out = p.parse(["s", "x"])
-    # after first chunk the state becomes "s" (the chunk) again,
-    # then "x" — second chunk recognized from state "s" only
-    assert [o["state"] for o in out] == ["s", "s"]
+def test_segment_text_golden_shape(spark):
+    objs = _cite(spark,
+                 "See [RFC 7] and section 2.1 of [RFC 9] or "
+                 "https://example.com/x. End [FOO] t",
+                 F.create_map(F.lit("FOO"), F.lit("12")))
+    assert len(objs) == 4
+    assert set(objs) == {f"{BASE}res/rfc/7", f"{BASE}res/rfc/9#S2.1",
+                         "https://example.com/x", f"{BASE}res/rfc/12"}
 
 
-def test_rfc_text_sections_df(spark):
-    df = spark.createDataFrame(
-        [Row(url="u1", text=RFC_TEXT), Row(url="u2", text="")])
-    out = {r["url"]: r for r in rfc_text_sections(df).collect()}
-    secs = {s["ordinal"]: s for s in out["u1"]["sections"]}
-    assert secs["1"]["heading"] == "Introduction"
-    assert secs["1.1"]["parent"] == "1"
-    assert "[RFC 7]" in secs["1"]["text"]
-    assert out["u1"]["header"]["Request for Comments"] == "42"
-    assert out["u2"]["sections"] == []
-
-
-def test_segment_text_golden_shape():
-    segs = segment_text(
-        "See [RFC 7] and section 2.1 of [RFC 9] or "
-        "https://example.com/x. End [FOO] t",
-        {"FOO": "12"})
-    kinds = [(s["kind"], s["text"]) for s in segs]
-    assert ("link", "[RFC 7]") in kinds
-    assert ("link", "section 2.1 of [RFC 9]") in kinds
-    assert ("link", "https://example.com/x") in kinds
-    assert ("link", "[FOO]") in kinds
-    uris = {s["text"]: s["uri"] for s in segs if s["kind"] == "link"}
-    assert uris["[RFC 7]"].endswith("/res/rfc/7")
-    assert uris["section 2.1 of [RFC 9]"].endswith("/res/rfc/9#S2.1")
-    assert uris["[FOO]"].endswith("/res/rfc/12")
-    # str/link segments reassemble the original text minus nothing
-    joined = "".join(s["text"] for s in segs)
-    assert joined == ("See [RFC 7] and section 2.1 of [RFC 9] or "
-                      "https://example.com/x. End [FOO] t")
-
-
-def test_segment_unresolvable_alias_stays_text():
-    segs = segment_text("Plain [BAR] here", {})
-    assert all(s["kind"] == "str" for s in segs)
-    assert "".join(s["text"] for s in segs) == "Plain [BAR] here"
+def test_segment_unresolvable_alias_stays_text(spark):
+    assert _cite(spark, "Plain [BAR] here",
+                 alias_map(F.col("text"))) == []
 
 
 def test_minting_cascade(spark):

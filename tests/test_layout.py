@@ -1,11 +1,8 @@
-"""Z-order layout clustering: interleave correctness + locality."""
+"""Z-order layout key: interleave correctness + locality."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from ferenda_spark.operators.layout import (cluster_by_zorder,
-                                            py_zorder2, py_zorder3,
-                                            zorder_key2, zorder_key3)
+from ferenda_spark.operators.layout import py_zorder2, zorder_key2
 
 
 def test_py_twins_hand_traced():
@@ -16,8 +13,6 @@ def test_py_twins_hand_traced():
     # clamps are monotone: negative -> 0, over-range -> max
     assert py_zorder2(-7, 1) == py_zorder2(0, 1)
     assert py_zorder2(1 << 40, 0) == py_zorder2((1 << 31) - 1, 0)
-    assert py_zorder3(1, 1, 1) == 0b111
-    assert py_zorder3(2, 0, 0) == 0b1000
 
 
 def test_column_matches_twin(spark):
@@ -25,13 +20,11 @@ def test_column_matches_twin(spark):
     df = spark.createDataFrame(
         [(x, y) for x in vals for y in vals], "x long, y long")
     rows = df.select("x", "y",
-                     zorder_key2(F.col("x"), F.col("y")).alias("z"),
-                     zorder_key3(F.col("x"), F.col("y"),
-                                 F.col("x")).alias("z3")).collect()
+                     zorder_key2(F.col("x"), F.col("y")).alias("z")
+                     ).collect()
     for r in rows:
         assert r["z"] == py_zorder2(r["x"], r["y"]), (r["x"], r["y"])
-        assert r["z3"] == py_zorder3(r["x"], r["y"], r["x"])
-        assert r["z"] >= 0 and r["z3"] >= 0
+        assert r["z"] >= 0
     # pure codegen: the key is never a Python UDF
     plan = (df.select(zorder_key2(F.col("x"), F.col("y")))
             ._jdf.queryExecution().executedPlan().toString())
@@ -39,13 +32,15 @@ def test_column_matches_twin(spark):
 
 
 def test_cluster_locality(spark):
-    # a 64x64 grid: after z-order clustering into 16 partitions, each
-    # partition's span on EACH dimension is far below the global 64
-    # (a single-column sort would give span 64 on the other column)
+    # a 64x64 grid: range-partitioned on the z-order key into 16
+    # partitions, each partition's span on EACH dimension is far below
+    # the global 64 (a single-column sort would give span 64 on the
+    # other column)
     grid = spark.range(64 * 64).select(
         (F.col("id") % 64).alias("x"),
         (F.col("id") / 64).cast("long").alias("y"))
-    parts = (cluster_by_zorder(grid, ["x", "y"], 16)
+    parts = (grid.withColumn("z", zorder_key2(F.col("x"), F.col("y")))
+             .repartitionByRange(16, "z")
              .withColumn("p", F.spark_partition_id())
              .groupBy("p")
              .agg((F.max("x") - F.min("x")).alias("sx"),
@@ -55,5 +50,3 @@ def test_cluster_locality(spark):
     avg_sx = sum(r["sx"] for r in parts) / len(parts)
     avg_sy = sum(r["sy"] for r in parts) / len(parts)
     assert avg_sx <= 24 and avg_sy <= 24, (avg_sx, avg_sy)
-    with pytest.raises(ValueError):
-        cluster_by_zorder(grid, ["x"], 4)

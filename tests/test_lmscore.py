@@ -6,8 +6,7 @@ from pyspark.sql import functions as F
 
 from ferenda_spark.operators.lmscore import (fit_bigram_lm,
                                              perplexity_buckets,
-                                             score_perplexity,
-                                             score_perplexity_broadcast)
+                                             score_perplexity)
 
 TRAIN = [
     (1, "the cat sat on the mat"),
@@ -64,38 +63,6 @@ def test_score_matches_python_reference(spark):
     # OOV doc scores strictly worse per bigram than the in-domain doc
     assert got[11][2] < got[10][2]
     assert got[12] == (0, 0, 0) and got[13] == (0, 0, 0)
-
-
-def test_broadcast_path_bit_identical(spark):
-    lm = _fit(spark)
-    docs = spark.createDataFrame(SCORE, "doc_id long, text string") \
-        .repartition(5)
-    a = sorted(map(tuple, score_perplexity(docs, lm).collect()))
-    b = sorted(map(tuple,
-                   score_perplexity_broadcast(docs, lm).collect()))
-    assert a == b
-
-
-def test_broadcast_path_refuses_oversized_model(spark):
-    import pytest
-
-    lm = _fit(spark)
-    docs = spark.createDataFrame(SCORE, "doc_id long, text string")
-    import ferenda_spark.operators.lmscore as m
-    real_count = lm["bigram"].count
-
-    class Fake:
-        def count(self):
-            return 60_000_000
-
-        def __getattr__(self, n):
-            return getattr(lm["bigram"], n)
-
-    big = dict(lm)
-    big["bigram"] = Fake()
-    with pytest.raises(ValueError, match="too large to broadcast"):
-        score_perplexity_broadcast(docs, big)
-    assert real_count() > 0  # original untouched
 
 
 def test_buckets_equal_frequency_and_order(spark):

@@ -82,7 +82,7 @@ def test_repetition_signals_zero_shuffle(spark):
     """Row-local Arrow UDF must not introduce an exchange."""
     from ferenda_spark.operators import textstats
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = _plan(textstats.repetition_signals(docs))
+    plan = _plan(textstats.text_metrics(docs))
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
 

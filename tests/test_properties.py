@@ -11,7 +11,6 @@ import difflib
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ferenda_spark.functions.text import swedish_collation_key
 from ferenda_spark.functions.web import canonical_url
 from ferenda_spark.operators.patch import apply_patch_text
 
@@ -94,51 +93,3 @@ def test_patch_wrong_base_never_corrupts(src_lines, dst_lines, other_lines):
     if status != "applied":
         assert status == "conflict"
         assert patched == other
-
-
-# -- Swedish collation -------------------------------------------------------
-
-@settings(max_examples=300)
-@given(st.text(alphabet="abzåäöÅÄÖ ABZ", max_size=12),
-       st.text(alphabet="abzåäöÅÄÖ ABZ", max_size=12))
-def test_swedish_collation_case_insensitive_total_order(a, b):
-    ka, kb = swedish_collation_key(a), swedish_collation_key(b)
-    assert swedish_collation_key(a.upper()) == ka   # case-insensitive
-    assert (ka <= kb) or (kb <= ka)                 # total order
-    if a.casefold() == b.casefold():
-        assert ka == kb
-
-
-# -- segment_text ------------------------------------------------------------
-
-# adversarial soup: citation-ish fragments, separators, brackets —
-# stitched randomly so class patterns half-match constantly
-_cite_frag = st.sampled_from([
-    "[RFC 45]", "[RFC", "RFC 0822", "RFCs 1, 2 and 3", "BCP 14",
-    "STD", "Articles 5 and 6 of Directive 1995/46/EC", "Article 8",
-    "Directive 95/46/EC", "Directive 9/9/E", "Case C-1/01",
-    "Items 5 and 6 of Section 4 of Chapter 2 of RFC 7", "of RFC ",
-    "Section 2.3 of", "doi:10.1/x.", "ISO 8601:2004",
-    "https://x.example/a,b.", "[HTPX]", "] refers to [RFC 3]",
-    " and ", ", ", ". ", "word", "\n", "  ", "(", ")",
-])
-_alias_vals = st.dictionaries(
-    st.from_regex(r"[A-Z]{3,8}", fullmatch=True),
-    st.from_regex(r"[1-9][0-9]{0,3}", fullmatch=True), max_size=3)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(_cite_frag, max_size=12), _alias_vals)
-def test_segment_text_lossless_and_linkful(frags, aliases):
-    """Invariants under adversarial half-matching input: segments
-    reassemble to the source EXACTLY (the markup path must never drop
-    or duplicate a byte), every link carries a URI, and segmentation
-    agrees with the URI extractor's multiset of the same text."""
-    from ferenda_spark.operators.mention import segment_text
-    text = "".join(frags)
-    segs = segment_text(text, aliases)
-    assert "".join(s["text"] for s in segs) == text
-    for s in segs:
-        assert s["kind"] in ("str", "link")
-        if s["kind"] == "link":
-            assert s["uri"]

@@ -1,6 +1,5 @@
 """N-Triples writer/reader round trips (escapes, langtags,
-datatypes, blank nodes, error rows) and the Turtle-subset TBox
-reader."""
+datatypes, blank nodes, error rows)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,79 +101,6 @@ def test_expand_contract_inverse(spark):
                                    "no-prefix"]
 
 
-TTL = """# a vocab in the reference's res/vocab shape
-@prefix : <http://ex.org/onto/> .
-@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
-@prefix owl: <http://www.w3.org/2002/07/owl#> .
-@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
-
-:Article a owl:Class ;
-    rdfs:label "Article"@en ;
-    rdfs:comment \"\"\"A scholarly article,
-spanning lines.\"\"\"@en ;
-    rdfs:isDefinedBy "http://ex.org/onto/"^^xsd:anyURI ;
-    rdfs:subClassOf :Document .
-
-:Document a owl:Class ;
-    rdfs:label "Doc \\"quoted\\"" .
-
-:cites rdfs:subPropertyOf :references, :links ;
-    rdfs:domain :Article .
-"""
-
-
-def test_turtle_subset_parses_vocab_shape(spark):
-    rows = rs.parse_turtle_tbox(TTL)
-    d = {}
-    for s, p, o, lit, lang, dt in rows:
-        d.setdefault((s.rsplit("/", 1)[-1], p.rsplit("#", 1)[-1]),
-                     []).append((o, lit, lang, dt))
-    assert d[("Article", "type")][0][0].endswith("owl#Class")
-    assert d[("Article", "label")] == [("Article", True, "en", None)]
-    assert "spanning lines." in d[("Article", "comment")][0][0]
-    assert d[("Article", "isDefinedBy")][0][3] == \
-        "http://www.w3.org/2001/XMLSchema#anyURI"
-    assert d[("Article", "subClassOf")][0][0] == \
-        "http://ex.org/onto/Document"
-    assert d[("Document", "label")][0][0] == 'Doc "quoted"'
-    # ',' object list fans out
-    assert {o for o, *_ in d[("cites", "subPropertyOf")]} == \
-        {"http://ex.org/onto/references", "http://ex.org/onto/links"}
-    assert d[("cites", "domain")][0][0] == "http://ex.org/onto/Article"
-
-
-def test_turtle_subset_rejects_out_of_subset():
-    with pytest.raises(rs.TurtleSubsetError):
-        rs.parse_turtle_tbox(
-            "@prefix : <http://x/> .\n:a :p [ :q :r ] .")
-    with pytest.raises(rs.TurtleSubsetError):
-        rs.parse_turtle_tbox(":nosuchprefix :p :o .")
-
-
-def test_turtle_tbox_feeds_rdfs_materialize(spark, tmp_path):
-    """The composition the reference runs at startup: vocab .ttl →
-    TBox → entailment over instance triples."""
-    from ferenda_spark.operators.infer import rdfs_materialize
-    ttl = tmp_path / "onto.ttl"
-    ttl.write_text(
-        "@prefix : <http://ex.org/onto/> .\n"
-        "@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n"
-        ":Article rdfs:subClassOf :Document .\n")
-    tbox = rs.read_turtle_tbox(spark, str(ttl)).select(
-        "subj",
-        F.replace(F.col("pred"),
-                  F.lit("http://www.w3.org/2000/01/rdf-schema#"),
-                  F.lit("rdfs:")).alias("pred"),
-        "obj")
-    inst = spark.createDataFrame(
-        [("http://ex.org/x", "rdf:type", "http://ex.org/onto/Article")],
-        "subj string, pred string, obj string")
-    got = {tuple(r) for r in
-           rdfs_materialize(inst, schema=tbox).collect()}
-    assert ("http://ex.org/x", "rdf:type",
-            "http://ex.org/onto/Document") in got
-
-
 def test_contract_longest_namespace_wins(spark):
     """A namespace that prefixes another (a --base-iri above dcterms)
     must not swallow the sub-namespace's terms."""
@@ -207,14 +133,6 @@ def test_bnode_label_roundtrip(spark):
         {("_:doc_1", "_:b-2"), ("_:0x", "_:a.b")}
 
 
-def test_turtle_escaped_backslash_before_letter():
-    """'a\\\\nb' in Turtle source is backslash + 'nb', NOT a newline —
-    the '\\\\' fold must run first (sentinel), same as N-Triples."""
-    rows = rs.parse_turtle_tbox(
-        '@prefix : <http://x/> .\n:s :p "a\\\\nb" .')
-    assert rows[0][2] == "a\\nb" and "\n" not in rows[0][2]
-
-
 def test_load_tool_empty_dump_and_partition_spec(spark, tmp_path):
     """tools/load_ntriples: an empty dump is a clear operational
     error (not a fake parse-failure), and --partition-by lays the
@@ -239,95 +157,3 @@ def test_load_tool_empty_dump_and_partition_spec(spark, tmp_path):
     assert out["triples"] == 2 and out["error_lines"] == 0
     snap_dirs = list((store_dir / "edge").glob("snap-*/pred=*"))
     assert snap_dirs, "loaded snapshot not pred-partitioned"
-
-
-def test_skolemize_roundtrip_and_scope(spark):
-    """Blank nodes become well-known genid IRIs and back exactly;
-    literals (flagged) and foreign skolem IRIs are untouched."""
-    df = spark.createDataFrame(
-        [("_:b0", "p:cites", "_:b1", False, None, None),
-         ("d:1", "p:cites", "_:b0", False, None, None),
-         ("d:1", "p:title", "_:not an id", True, None, None),
-         ("d:2", "p:see",
-          "https://other.org/.well-known/genid/x", False, None, None)],
-        TRIPLE_DDL)
-    sk = rs.skolemize(df, "https://ex.org")
-    got = {(r["subj"], r["obj"]) for r in sk.collect()}
-    assert ("https://ex.org/.well-known/genid/b0",
-            "https://ex.org/.well-known/genid/b1") in got
-    assert ("d:1", "_:not an id") in got          # literal untouched
-    assert ("d:2", "https://other.org/.well-known/genid/x") in got
-    back = rs.deskolemize(sk, "https://ex.org")
-    assert sorted(map(tuple, back.collect())) == \
-        sorted(map(tuple, df.collect()))
-    # foreign genid survives deskolemize under a different base
-    assert {r["obj"] for r in back.collect()} >= {
-        "https://other.org/.well-known/genid/x"}
-
-
-def test_deskolemize_respects_literals(spark):
-    """A string literal that merely spells a skolem IRI must not be
-    corrupted into a blank-node label (deskolemize mirrors
-    skolemize's obj_is_literal guard)."""
-    df = spark.createDataFrame(
-        [("d:1", "p:note",
-          "https://ex.org/.well-known/genid/b0", True, None, None)],
-        TRIPLE_DDL)
-    back = rs.deskolemize(rs.skolemize(df, "https://ex.org"),
-                          "https://ex.org")
-    assert back.collect()[0]["obj"] == \
-        "https://ex.org/.well-known/genid/b0"
-
-
-def test_skolemize_scope_separates_sources(spark):
-    """The same blank label in two independently-serialized inputs
-    mints DIFFERENT skolem IRIs under per-source scopes (RDF 1.1
-    §3.5 global uniqueness), and each scope inverts exactly."""
-    a = spark.createDataFrame(
-        [("_:b0", "p:cites", "d:1", False, None, None)], TRIPLE_DDL)
-    b = spark.createDataFrame(
-        [("_:b0", "p:cites", "d:2", False, None, None)], TRIPLE_DDL)
-    ska = rs.skolemize(a, "https://ex.org", scope="dump-a")
-    skb = rs.skolemize(b, "https://ex.org", scope="dump-b")
-    sa = ska.collect()[0]["subj"]
-    sb = skb.collect()[0]["subj"]
-    assert sa != sb
-    assert sa == "https://ex.org/.well-known/genid/dump-a/b0"
-    back = rs.deskolemize(ska, "https://ex.org", scope="dump-a")
-    assert back.collect()[0]["subj"] == "_:b0"
-    # mismatched scope leaves the (foreign to it) IRI alone
-    other = rs.deskolemize(ska, "https://ex.org", scope="dump-b")
-    assert other.collect()[0]["subj"] == sa
-
-
-def test_nquads_roundtrip(spark, tmp_path):
-    """Quads (graph column, NULL = default graph) write as N-Quads
-    and parse back identically; the strict N-Triples parser rejects
-    quad lines; a triple dump parses under the quad grammar with a
-    NULL graph."""
-    rows = [
-        ("d:1", "p:cites", "d:2", False, None, None, "g:batch1"),
-        ("d:2", "p:title", 'say "hi"', True, None, "en", "g:batch2"),
-        ("d:3", "p:note", "plain", True, None, None, None),  # default
-    ]
-    ddl = TRIPLE_DDL + ", graph string"
-    quads = spark.createDataFrame(rows, ddl)
-    path = str(tmp_path / "dump.nq")
-    rs.write_nquads(quads, path, prefixes=rs.STD_PREFIXES)
-    back = rs.read_nquads(spark, path, prefixes=rs.STD_PREFIXES)
-    assert back.filter(F.col("error").isNotNull()).count() == 0
-    got = {(r["subj"], r["pred"], r["obj"], r["obj_is_literal"],
-            r["graph"]) for r in back.collect()}
-    assert got == {("d:1", "p:cites", "d:2", False, "g:batch1"),
-                   ("d:2", "p:title", 'say "hi"', True, "g:batch2"),
-                   ("d:3", "p:note", "plain", True, None)}
-    # strict N-Triples parser: quad lines are error rows, not data
-    strict = rs.read_ntriples(spark, path, prefixes=rs.STD_PREFIXES)
-    assert strict.filter(F.col("error").isNotNull()).count() == 2
-    # plain triple dump under the quad grammar: NULL graphs
-    t_path = str(tmp_path / "dump.nt")
-    rs.write_ntriples(quads.drop("graph"), t_path,
-                      prefixes=rs.STD_PREFIXES)
-    asq = rs.read_nquads(spark, t_path, prefixes=rs.STD_PREFIXES)
-    assert asq.filter(F.col("error").isNotNull()).count() == 0
-    assert asq.filter(F.col("graph").isNotNull()).count() == 0

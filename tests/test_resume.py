@@ -411,50 +411,43 @@ def test_time_travel_ts_is_commit_time_and_compaction_guard(spark, tmp_path):
 
 # --- dependency-triggered regeneration (regen.py) --------------------------
 
+
 def test_regenerate_exact_dependent_set(spark, tmp_path):
-    """Touching ONE doc regenerates precisely that doc plus its
-    transitive dependents over the citation graph — and nothing else
-    (the reference's add_dependency + needed('generate') loop,
-    documentrepository.py:2055-2077, documentstore.py:438-457)."""
-    from ferenda_spark.operators.regen import (
-        dependency_pairs, regenerate, stale_set)
+    """Touching ONE committed doc makes precisely that doc plus its
+    transitive dependents over the committed citation graph stale —
+    and nothing else (the reference's add_dependency +
+    needed('generate') loop, documentrepository.py:2055-2077,
+    documentstore.py:438-457). Oracle: a Python BFS over the collected
+    dependency pairs."""
+    from ferenda_spark.operators.regen import dependency_pairs, stale_set
 
     store = GraphStore(spark, str(tmp_path / "g"))
     pages = pages_df(spark, N, partitions=2)
-    ents = entities_df(spark)
-    run_pipeline(spark, pages, ents, store)
+    run_pipeline(spark, pages, entities_df(spark), store)
 
-    # first generate pass: everything is new → everything generates
-    first = regenerate(spark, pages, store)
-    assert first["changed"] == N and first["regenerated"] == N
-
-    # immediate rerun: nothing pending
-    again = regenerate(spark, pages, store)
-    assert again["skipped"] is True
-
-    # touch one page → exactly it + its transitive dependents
-    victim = "https://example.org/res/rfc/3"
-    touched = pages.withColumn(
-        "html",
-        F.when(F.col("url") == victim,
-               F.concat(F.col("html"), F.lit(b" ")))
-        .otherwise(F.col("html")))
     deps = dependency_pairs(store.read_current("edge"),
                             pages.select("url"))
+    dependents = {}
+    for r in deps.collect():
+        dependents.setdefault(r["depends_on"], set()).add(r["url"])
+
+    victim = "https://example.org/res/rfc/3"
+    want = {victim: 0}
+    frontier = [victim]
+    while frontier:
+        nxt = []
+        for u in frontier:
+            for d in sorted(dependents.get(u, ())):
+                if d not in want:
+                    want[d] = want[u] + 1
+                    nxt.append(d)
+        frontier = nxt
+
     changed = spark.createDataFrame([(victim,)], "url string")
-    want = {(r["url"], r["depth"])
-            for r in stale_set(deps, changed).collect()}
-    assert (victim, 0) in want
-
-    third = regenerate(spark, touched, store)
-    got = {(r["url"], r["depth"]) for r in third["urls"].collect()}
-    assert got == want
-    assert third["changed"] == 1
-    assert third["regenerated"] == len(want) < N
-
-    # committed: the same touched input is now a no-op
-    fourth = regenerate(spark, touched, store)
-    assert fourth["skipped"] is True
+    got = {(r["url"], r["depth"])
+           for r in stale_set(deps, changed).collect()}
+    assert got == set(want.items())
+    assert 1 < len(want) < N
 
 
 def test_stale_set_cycle_and_depth(spark):
@@ -470,42 +463,6 @@ def test_stale_set_cycle_and_depth(spark):
     bounded = {(r["url"], r["depth"])
                for r in stale_set(deps, changed, max_depth=1).collect()}
     assert bounded == {("A", 0), ("B", 1), ("D", 1)}
-
-
-def test_regenerate_commits_after_emit(spark, tmp_path):
-    """Crash contract: the generate provenance append happens AFTER
-    the emit sink — a sink failure leaves no provenance, so the replay
-    regenerates the same set instead of permanently skipping pages
-    that were never rendered."""
-    import pytest
-    from ferenda_spark.operators.regen import regenerate
-
-    store = GraphStore(spark, str(tmp_path / "g"))
-    pages = pages_df(spark, N, partitions=2)
-    run_pipeline(spark, pages, entities_df(spark), store)
-
-    class Boom(RuntimeError):
-        pass
-
-    def failing_sink(todo, stale):
-        raise Boom("render died")
-
-    with pytest.raises(Boom):
-        regenerate(spark, pages, store, emit=failing_sink)
-    # nothing committed → the full set is still pending
-    assert not (store.exists("provenance") and
-                store.read("provenance")
-                .filter(F.col("stage") == "generate").count())
-
-    seen = {}
-
-    def sink(todo, stale):
-        seen["urls"] = {r["url"] for r in stale.select("url").collect()}
-
-    ok = regenerate(spark, pages, store, emit=sink)
-    assert ok["regenerated"] == N and len(seen["urls"]) == N
-    # and now it is committed
-    assert regenerate(spark, pages, store)["skipped"] is True
 
 
 def test_partition_spec_prunes_and_preserves(spark, tmp_path):
@@ -547,29 +504,3 @@ def test_partition_spec_prunes_and_preserves(spark, tmp_path):
     assert specless.read("edge").count() == 180 + 30
     assert {(r["subj"], r["pred"], r["obj"])
             for r in specless.read("edge").collect()} == all_rows
-
-
-def test_snapshot_metrics_per_commit_and_rollup(spark, tmp_path):
-    """Every committed snapshot gets one metrics row (count + HLL
-    sketch), and unioning the sketches answers a cross-snapshot
-    distinct count without rescanning the table."""
-    from ferenda_spark.operators.graph import GraphStore, snapshot_metrics
-    from ferenda_spark.operators.profile import merge_sketches
-    store = GraphStore(spark, str(tmp_path / "g"))
-    rows1 = [(f"s{i % 20}", "p", f"o{i}") for i in range(100)]
-    rows2 = [(f"s{i % 30}", "p", f"o{i}") for i in range(50)]
-    sch = "subj string, pred string, obj string"
-    store.append(spark.createDataFrame(rows1, sch), "edge")
-    store.append(spark.createDataFrame(rows2, sch), "edge")
-    m = snapshot_metrics(store, "edge")
-    got = sorted((r["snapshot_id"], r["n_rows"], r["n_distinct_est"])
-                 for r in m.collect())
-    assert len(got) == 2
-    assert got[0][1] == 100 and got[1][1] == 50
-    assert abs(got[0][2] - 20) <= 1 and abs(got[1][2] - 30) <= 1
-    rolled = merge_sketches(m).collect()[0]["n_distinct_est"]
-    # distinct subjects across BOTH snapshots = 30 (s0..s29)
-    assert abs(rolled - 30) <= 2
-    import pytest
-    with pytest.raises(FileNotFoundError):
-        snapshot_metrics(store, "nope")

@@ -108,9 +108,13 @@ def _visit_df(spark, visitors):
 def test_visitor_prune_skips_subtree(spark):
     """Returning None prunes: nothing under Chapter 2 is visited
     (visit_node contract, swedishlegalsource.py:1077-1078)."""
-    from ferenda_spark.operators.visitor import prune_visitor
-    got = _visit_df(spark, [prune_visitor(
-        lambda n: n["kind"] == "chapter" and n["ordinal"] == "2")])
+    def mark_unless_chapter_2(node, state):
+        if node["kind"] == "chapter" and node["ordinal"] == "2":
+            return None
+        node["anno"]["visited"] = "1"
+        return state
+
+    got = _visit_df(spark, [(mark_unless_chapter_2, True)])
     marked = {r["node_id"] for r in got
               if r["url"] == "u1" and r["anno"].get("visited")}
     assert "K1" in marked and "K1P1S1N2Ba" in marked

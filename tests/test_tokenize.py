@@ -4,8 +4,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ferenda_spark.operators.tokenize import (SEP, bpe_apply_merges_col,
-                                              bpe_encode, bpe_train,
+from ferenda_spark.operators.tokenize import (bpe_encode, bpe_train,
                                               encode_word, pre_tokens_py,
                                               word_counts)
 
@@ -21,10 +20,15 @@ EXPECTED = [(0, "t", "h", 12), (1, "th", "e", 10), (2, "the", "r", 3),
             (3, "i", "n", 2), (4, "o", "ther", 2), (5, "th", "in", 2)]
 
 
+#: symbol separator of the mirror (US control char: cannot appear in
+#: pre-tokens, which are printable by construction)
+SEP = "\x1f"
+
+
 def replace_mirror(word: str, merges) -> list[str]:
-    """Independent mirror of the column twin: literal str.replace
-    over the SEP-delimited symbol string (Python's replace is also
-    leftmost non-overlapping)."""
+    """Independent mirror of encode_word, in the shape of the
+    bpe_encode_docs oracle: literal str.replace over the SEP-delimited
+    symbol string (Python's replace is also leftmost non-overlapping)."""
     s = SEP + (SEP + SEP).join(list(word)) + SEP
     for m in merges:
         left, right = (m[1], m[2]) if len(m) == 4 else (m[0], m[1])
@@ -92,22 +96,6 @@ def test_encode_word_rank_order_is_exact():
     # repeated-symbol merge is greedy leftmost, non-overlapping
     assert encode_word("aaa", [("a", "a")]) == ["aa", "a"]
     assert encode_word("aaaa", [("a", "a")]) == ["aa", "aa"]
-
-
-def test_column_twin_matches_python_twin(spark):
-    from pyspark.sql import functions as F
-    words = ["the", "thermal", "brother", "aaaa", "x", "thethe",
-             "ththth", "otherother"]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    rows = df.select(
-        "w", bpe_apply_merges_col(F.col("w"), EXPECTED).alias("t")
-    ).collect()
-    for r in rows:
-        assert r["t"] == encode_word(r["w"], EXPECTED), r["w"]
-    # pure codegen: no UDF/python eval in the plan
-    plan = df.select(bpe_apply_merges_col(F.col("w"), EXPECTED)) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
 def test_bpe_encode_spark_and_compression(spark):

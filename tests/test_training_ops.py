@@ -109,21 +109,6 @@ def test_cosine_topk_exact(spark):
     assert abs(top["cos_sim"] - expect) < 1e-6
 
 
-def test_lsh_bucket_deterministic(spark):
-    rows = [Row(vec_id=i, embedding=[float((i * 7 + j) % 5 - 2)
-                                     for j in range(8)])
-            for i in range(20)]
-    emb = spark.createDataFrame(rows)
-    b1 = {r["vec_id"]: r["b"] for r in emb.select(
-        "vec_id", similarity.lsh_bucket(
-            F.col("embedding"), 8).alias("b")).collect()}
-    b2 = {r["vec_id"]: r["b"] for r in emb.repartition(7).select(
-        "vec_id", similarity.lsh_bucket(
-            F.col("embedding"), 8).alias("b")).collect()}
-    assert b1 == b2
-    assert all(0 <= v < 16 for v in b1.values())
-
-
 def test_band_buckets_udf_matches_column(spark):
     """The Arrow-matmul hot path and the declarative Column form of
     banded LSH bucketing must agree bit-for-bit (both operate on
@@ -218,8 +203,7 @@ def test_repetition_signals(spark):
         Row(doc_id=2, text="all words here are unique tokens"),
         Row(doc_id=3, text="one"),
     ])
-    from ferenda_spark.operators import textstats as ts
-    out = {r["doc_id"]: r for r in ts.repetition_signals(docs).collect()}
+    out = {r["doc_id"]: r for r in textstats.text_metrics(docs).collect()}
     assert out[1]["top_unigram_frac"] == 1.0
     assert out[1]["top_bigram_frac"] == 1.0
     assert out[1]["distinct_frac"] == 0.25
@@ -304,15 +288,9 @@ def test_ivf_lloyd_refine_beats_seed_recall(spark):
 
 
 def test_textstats(docs):
-    stats = {r["doc_id"]: r for r in textstats.token_stats(docs).collect()}
-    assert stats[1]["n_tokens"] == 9
-    assert stats[1]["n_distinct_tokens"] == 8  # 'the' twice
     q = {r["doc_id"]: r for r in textstats.quality_score(docs).collect()}
     assert 0 <= q[1]["quality"] <= 1
     assert q[1]["stopword_ratio"] > q[4]["stopword_ratio"]
-    fp = {r["doc_id"]: r for r in textstats.fingerprint(docs).collect()}
-    assert fp[1]["rolling_fp"] == fp[2]["rolling_fp"]
-    assert fp[1]["rolling_fp"] != fp[3]["rolling_fp"]
 
 
 def test_gopher_rules(spark):
@@ -363,35 +341,10 @@ def test_langid(spark):
 def test_media_metadata_fake_and_stub(docs, spark):
     media = multimodal.attach_media(docs)
     meta = {r["media_id"]: r
-            for r in multimodal.media_metadata(media, fake=True).collect()}
+            for r in multimodal.media_metadata(media).collect()}
     assert meta[1]["n_bytes"] == len(
         "the quick brown fox jumps over the lazy dog")
     assert meta[1]["kind"] in ("image", "audio", "video")
-    with pytest.raises(Exception) as exc:
-        multimodal.media_metadata(media, fake=False).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError)
-
-
-def test_stub_messages_name_missing_capability(spark):
-    """Contract: every declared codec stub fails LOUDLY with a
-    message naming the specific missing capability for its media
-    type (r4 verdict next-round #9) — a user hitting the stub must
-    learn what to install, not just that something is missing."""
-    media = spark.createDataFrame([(1, b"x")],
-                                  "media_id long, payload binary")
-    with pytest.raises(NotImplementedError, match="media codecs"):
-        multimodal.real_decode(b"x")
-    with pytest.raises(NotImplementedError, match="image codecs"):
-        multimodal.resize_images(media, 8, 8, fake=False)
-    with pytest.raises(NotImplementedError, match="video codecs"):
-        multimodal.sample_frames(media, fake=False)
-    with pytest.raises(NotImplementedError, match="embedding models"):
-        multimodal.extract_features(media, fake=False)
-    from ferenda_spark.operators import boxes as _boxes
-    with pytest.raises(NotImplementedError,
-                       match="layout-capable PDF renderer"):
-        _boxes.decode_pdf_boxes(media)
 
 
 def test_asof_join(spark):
@@ -491,42 +444,6 @@ def test_facet_schema_and_statistics(spark):
     assert stats[("type", "T2")] == 1
     assert stats[("title_firstletter", "a")] == 2
     assert stats[("issued_year", None)] == 1  # d3 lacks issued
-
-
-def test_collation_key_sorts(spark):
-    from pyspark.sql import Row
-    from ferenda_spark.functions.text import collation_key
-    df = spark.createDataFrame(
-        [Row(s="Banana"), Row(s="apple"), Row(s="Cherry")])
-    key = collation_key("C")
-    out = [r["s"] for r in
-           df.orderBy(key(F.col("s")), F.col("s")).collect()]
-    # casefold fallback (C locale strxfrm is codepoint order; either
-    # way the key must be deterministic and case-insensitive-or-binary)
-    assert set(out) == {"Banana", "apple", "Cherry"}
-    assert len(out) == 3
-
-
-def test_swedish_collation_order(spark):
-    """W2: å/ä/ö must sort AFTER z (Swedish alphabet), not by
-    codepoint-near-a as a naive byte sort would; py and Column forms
-    must agree."""
-    from pyspark.sql import Row
-    from ferenda_spark.functions.text import (
-        swedish_collation_key,
-        swedish_collation_key_col,
-    )
-    names = ["Örebro", "Arlanda", "Åre", "Zebra", "Ängelholm", "éclair"]
-    expected = ["Arlanda", "éclair", "Zebra", "Åre", "Ängelholm", "Örebro"]
-    assert sorted(names, key=swedish_collation_key) == expected
-    df = spark.createDataFrame([Row(s=n) for n in names])
-    out = [r["s"] for r in df.orderBy(
-        swedish_collation_key_col(F.col("s"))).collect()]
-    assert out == expected
-    # paired-form equivalence on every input
-    got = {r["s"]: r["k"] for r in df.select(
-        "s", swedish_collation_key_col(F.col("s")).alias("k")).collect()}
-    assert got == {n: swedish_collation_key(n) for n in names}
 
 
 def test_chunk_words_udtf_matches_column(spark):
@@ -1184,66 +1101,6 @@ def test_semantic_dedup_all_unique_keeps_everything(spark):
     assert all(r["keep"] and r["group"] == r["vec_id"] for r in out)
 
 
-def test_multimodal_resize_frames_features(spark):
-    """The three post-decode multimodal stages: resize (aspect kept,
-    never upscaled, images only), frame sampling (every_ms spacing,
-    max_frames skew cap, videos only), feature extraction (unit
-    vectors that feed the similarity ops unchanged)."""
-    # payload lengths chosen per fake_decode: len%3==0 image,
-    # 1 audio, 2 video
-    rows = [Row(media_id=1, payload=b"x" * 900),     # image 916x436
-            Row(media_id=2, payload=b"y" * 100),     # audio
-            Row(media_id=3, payload=b"z" * 3002)]    # video
-    media = spark.createDataFrame(rows)
-
-    resized = {r["media_id"]: r for r in
-               multimodal.resize_images(media, 256, 256).collect()}
-    assert set(resized) == {1}                       # images only
-    r = resized[1]
-    src_w, src_h = 900 % 640 + 16, 900 % 480 + 16    # 276, 436
-    assert max(r["width"], r["height"]) <= 256
-    # aspect preserved within integer truncation
-    assert abs(r["width"] / r["height"] - src_w / src_h) < 0.02
-    # small images are never upscaled
-    small = spark.createDataFrame([Row(media_id=9, payload=b"q" * 30)])
-    rs = multimodal.resize_images(small, 4096, 4096).collect()
-    assert rs[0]["width"] == 30 % 640 + 16 and rs[0]["height"] == 30 % 480 + 16
-
-    frames = multimodal.sample_frames(media, every_ms=1000,
-                                      max_frames=8).collect()
-    assert {f["media_id"] for f in frames} == {3}    # videos only
-    dur = (3002 * 7) % 100000
-    assert len(frames) == min(dur // 1000 + 1, 8)
-    assert sorted(f["ts_ms"] for f in frames) == [
-        i * 1000 for i in range(len(frames))]
-    assert len({bytes(f["frame"]) for f in frames}) == len(frames)
-
-    feats = multimodal.extract_features(media, dim=64)
-    got = {r["media_id"]: r["embedding"] for r in feats.collect()}
-    assert set(got) == {1, 2, 3}
-    for v in got.values():
-        assert len(v) == 64
-        assert abs(sum(x * x for x in v) - 1.0) < 1e-3   # unit norm
-    # deterministic across runs
-    again = {r["media_id"]: r["embedding"] for r in
-             multimodal.extract_features(media, dim=64).collect()}
-    assert again == got
-    # and the vectors feed the similarity ops unchanged
-    topk = similarity.cosine_topk(
-        feats.select(F.col("media_id").alias("vec_id"), "embedding"),
-        feats.select(F.col("media_id").alias("query_id"),
-                     "embedding").limit(1),
-        k=2)
-    assert topk.count() == 2
-
-    for fn in (multimodal.resize_images, multimodal.sample_frames,
-               multimodal.extract_features):
-        with pytest.raises(Exception) as exc:
-            fn(media, fake=False)
-        assert "NotImplementedError" in str(exc.value) or isinstance(
-            exc.value, NotImplementedError)
-
-
 def test_dedup_against_index_history_and_batch_keeper(spark):
     """Incremental dedup against a persisted band index: a batch doc
     band-colliding with history is rejected (even a NEAR copy), a
@@ -1280,64 +1137,6 @@ def test_dedup_against_index_short_doc_survives(spark):
     kept = {r["doc_id"] for r in dedup.dedup_against_index(
         batch, index, k=8, bands=4).collect()}
     assert kept == {20}
-
-
-def test_minhash_index_roundtrip_and_param_guard(spark, tmp_path):
-    """dedup_against_index over the READ-BACK persisted index equals
-    the in-memory run; mismatched (k, bands, n) refuses loudly."""
-    history = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog today"),
-         (2, "pack my box with five dozen liquor jugs right now")],
-        "doc_id long, text string")
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog today"),
-         (11, "completely novel sentence with brand new words here")],
-        "doc_id long, text string")
-    path = str(tmp_path / "idx")
-    dedup.write_minhash_index(history, path, k=8, bands=4)
-    idx = dedup.read_minhash_index(spark, path, k=8, bands=4)
-    kept_disk = {r["doc_id"] for r in dedup.dedup_against_index(
-        batch, idx, k=8, bands=4).collect()}
-    kept_mem = {r["doc_id"] for r in dedup.dedup_against_index(
-        batch, dedup.minhash_bands(history, k=8, bands=4),
-        k=8, bands=4).collect()}
-    assert kept_disk == kept_mem == {11}
-    with pytest.raises(ValueError, match="built with"):
-        dedup.read_minhash_index(spark, path, k=16, bands=4)
-
-
-def test_minhash_index_append_and_sidecar_guards(spark, tmp_path):
-    """Daily fold-in: append adds the new docs' bands without
-    rewriting history; parameter-mismatched appends and reads of a
-    sidecar-less index refuse loudly."""
-    import os
-    h1 = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog today")],
-        "doc_id long, text string")
-    h2 = spark.createDataFrame(
-        [(2, "pack my box with five dozen liquor jugs right now")],
-        "doc_id long, text string")
-    path = str(tmp_path / "idx")
-    dedup.write_minhash_index(h1, path, k=8, bands=4)
-    dedup.write_minhash_index(h2, path, k=8, bands=4, mode="append")
-    idx = dedup.read_minhash_index(spark, path, k=8, bands=4)
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog today"),
-         (11, "pack my box with five dozen liquor jugs right now"),
-         (12, "completely novel sentence with brand new words here")],
-        "doc_id long, text string")
-    kept = {r["doc_id"] for r in dedup.dedup_against_index(
-        batch, idx, k=8, bands=4).collect()}
-    assert kept == {12}  # collides with BOTH the base and the append
-    with pytest.raises(ValueError, match="poison"):
-        dedup.write_minhash_index(h2, path, k=16, bands=4,
-                                  mode="append")
-    with pytest.raises(ValueError, match="rebuild with overwrite"):
-        dedup.write_minhash_index(h2, str(tmp_path / "nothere"),
-                                  k=8, bands=4, mode="append")
-    os.remove(os.path.join(path, "_minhash_params"))
-    with pytest.raises(ValueError, match="sidecar"):
-        dedup.read_minhash_index(spark, path, k=8, bands=4)
 
 
 def test_components_driver_equals_distributed(spark):
@@ -1432,8 +1231,7 @@ def _winnow_local(text, k=5, window=4):
 
 
 def test_winnow_matches_python_mirror_and_guarantee(spark):
-    from ferenda_spark.operators.dedup import (winnow_candidate_pairs,
-                                               winnow_fingerprints)
+    from ferenda_spark.operators.dedup import winnow_fingerprints
     common = " ".join(f"shared{i}" for i in range(12))
     t1 = "alpha beta gamma " + common + " delta epsilon zeta eta"
     t2 = "one two three four five " + common + " six seven"
@@ -1451,9 +1249,6 @@ def test_winnow_matches_python_mirror_and_guarantee(spark):
     # must put at least one common fingerprint in both documents
     shared = {f for _, f in got[1]} & {f for _, f in got[2]}
     assert shared
-    pairs = {(r["id_a"], r["id_b"]): r["n_shared"]
-             for r in winnow_candidate_pairs(fps).collect()}
-    assert set(pairs) == {(1, 2)}      # doc 3 shares nothing
     # density: far fewer fingerprints than k-grams
     assert len(got[3]) < len(t3.split()) - 4
 

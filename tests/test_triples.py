@@ -8,6 +8,7 @@ from ferenda_spark.fixtures.pages import (
     golden_triples_df,
     pages_df,
 )
+from ferenda_spark.operators.graph import precision_recall
 from ferenda_spark.operators.metadata import assert_required_predicates
 from ferenda_spark.pipeline import build_triples
 
@@ -25,11 +26,8 @@ def test_triple_precision_recall(spark):
     golden = _canon(golden_triples_df(spark, N_DOCS, partitions=4))
     got = _canon(build_triples(pages, entities_df(spark)))
 
-    n_golden = golden.count()
-    n_got = got.count()
-    tp = got.intersect(golden).count()
-    precision = tp / n_got
-    recall = tp / n_golden
+    pr = precision_recall(got, golden, KEY)
+    precision, recall = pr["precision"], pr["recall"]
     assert precision >= 0.95, (precision, got.exceptAll(golden).take(10))
     assert recall >= 0.95, (recall, golden.exceptAll(got).take(10))
     # by construction the pipeline should be exact on this corpus

@@ -12,9 +12,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from ferenda_spark.operators.crawl import (host_graph,
-                                           resolve_redirects,
-                                           rewrite_through_redirects)
+from ferenda_spark.operators.crawl import host_graph, resolve_redirects
 from ferenda_spark.operators.rank import random_walks
 
 
@@ -55,17 +53,6 @@ def test_resolve_conflicting_captures_take_min(spark):
                               "src string, dst string")
     got = resolve_redirects(r, rounds=2).collect()
     assert len(got) == 1 and got[0]["final_url"] == "b"
-
-
-def test_rewrite_through_redirects(spark, redirects):
-    m = resolve_redirects(redirects, rounds=4)
-    df = spark.createDataFrame(
-        [("a",), ("x",), ("T",), ("unrelated",)], "url string")
-    got = {r["url"] for r in
-           rewrite_through_redirects(df, m, broadcast_map=True)
-           .collect()}
-    # resolved source rewritten; cycle member and strangers untouched
-    assert got == {"T", "x", "unrelated"}
 
 
 def test_host_graph_projection(spark):
