@@ -246,7 +246,6 @@ def run_kg_worker(cpus: int, pages_dir: str) -> None:
     """Time pipeline.build_triples (read → extract with publisher
     linking → per-page triple array → explode → count) on a
     pre-generated pages parquet."""
-    from pyspark.sql import functions as F  # noqa: F401
     from ferenda_spark.fixtures.pages import entities_df
     from ferenda_spark.pipeline import build_triples
     spark = _spark(cpus)

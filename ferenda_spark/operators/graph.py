@@ -8,6 +8,8 @@ documentstore.py:400-470 ``needed()`` mtime freshness, documententry.py
 writes to a snapshot-committed table; a rerun anti-joins its input
 against the last committed snapshot's (url, input_hash) set, so only
 new/changed documents reprocess, and old snapshots are retained.
+Which page version a read sees is decided at commit time, in the
+small ``current`` table (see :meth:`GraphStore.merge_current`).
 
 In production this is Iceberg (``df.writeTo(tbl).append()`` /
 ``MERGE INTO`` on (url, input_hash); snapshots are Iceberg snapshots).
@@ -19,6 +21,7 @@ noted inline.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -26,7 +29,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import MapType
+
+# The store's own column on a compacted snapshot: the commit id of
+# each rewritten row (an appended snapshot keeps it in its manifest
+# entry instead). Reads add it to tag rows and drop it before
+# returning them.
+COMMIT_COL = "_commit_id"
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -105,6 +113,7 @@ class GraphStore:
         self.spark = spark
         self.root = root
         self.partition_spec = dict(partition_spec or {})
+        self._open_commit: str | None = None
         os.makedirs(root, exist_ok=True)
 
     # -- manifest plumbing -------------------------------------------------
@@ -143,7 +152,6 @@ class GraphStore:
         it is broken and acquisition retried rather than wedging the
         table forever.  The lock file records pid+timestamp for
         operator forensics."""
-        import contextlib
 
         @contextlib.contextmanager
         def lock():
@@ -191,8 +199,8 @@ class GraphStore:
     def _write_snapshot(self, df: DataFrame, table: str,
                         snap_id: str, **extra) -> dict:
         """Write one snapshot directory and build its manifest entry
-        (shared by append and compact so the on-disk layout cannot
-        fork between them)."""
+        (shared by append, compact and merge_current so the on-disk
+        layout cannot fork between them)."""
         path = os.path.join(self.root, table, snap_id)
         cols = self.partition_spec.get(table)
         w = df.write.mode("overwrite")
@@ -201,12 +209,34 @@ class GraphStore:
         w.parquet(path)
         return {"id": snap_id, "path": path, "ts": time.time(), **extra}
 
+    @contextlib.contextmanager
+    def commit(self):
+        """Scope one commit and yield its id. Every :meth:`append`
+        made inside it records the id in its manifest entry; an append
+        made outside any commit records none, and :meth:`read_current`
+        never shows its rows. The id is not a data column, so copying
+        committed rows into a plain ``append`` cannot make them
+        visible.
+
+        A store whose provenance predates the ``current`` table cannot
+        take a commit: its earlier commits are in no ``current`` row,
+        so a new one would hide them."""
+        self._require_current()
+        self._open_commit = f"commit-{uuid.uuid4().hex}"
+        try:
+            yield self._open_commit
+        finally:
+            self._open_commit = None
+
     def append(self, df: DataFrame, table: str) -> str:
         """Iceberg: ``df.writeTo(table).append()``. The data write
         happens outside the commit lock (long); only the
-        read-modify-write of the manifest is serialized."""
+        read-modify-write of the manifest is serialized. Inside
+        :meth:`commit` the entry carries that commit's id."""
         snap_id = f"snap-{len(self._read_manifest(table)):06d}-{uuid.uuid4().hex[:8]}"
-        entry = self._write_snapshot(df, table, snap_id)
+        extra = ({"commit_id": self._open_commit}
+                 if self._open_commit is not None else {})
+        entry = self._write_snapshot(df, table, snap_id, **extra)
         with self._commit_lock(table):
             # ts is COMMIT time, assigned under the lock: manifest
             # order and ts order can then never disagree, so
@@ -219,6 +249,44 @@ class GraphStore:
             self._commit(table, snaps)
         return snap_id
 
+    def merge_current(self, pages: DataFrame, commit_id: str) -> None:
+        """Iceberg: ``MERGE INTO current USING pages ON url`` — make
+        ``commit_id``'s version of each of ``pages``' urls the one
+        :meth:`read_current` shows.
+
+        ``current(url, input_hash, commit_id)`` holds one row per url.
+        The rewrite is the previous table minus ``pages``' urls plus
+        one winner per url of ``pages``: its greatest ``input_hash``
+        when a batch holds two versions of a url. The read-merge-write
+        runs under the ``current`` commit lock, so two writers'
+        merges serialize and the later commit wins each url it
+        touched."""
+        winners = (pages.groupBy("url")
+                   .agg(F.max("input_hash").alias("input_hash"))
+                   .select("url", "input_hash",
+                           F.lit(commit_id).alias("commit_id")))
+        with self._commit_lock("current"):
+            prev = self._read_manifest("current")
+            rows = winners
+            if prev:
+                rows = (self._read_snapshots(prev)
+                        .join(pages.select("url"), "url", "left_anti")
+                        .unionByName(winners))
+            # a bounded file count: the rewrite reads every file of
+            # the previous one, which would otherwise add files each
+            # commit
+            rows = rows.coalesce(self.spark.sparkContext.defaultParallelism)
+            entry = self._write_snapshot(rows, "current", f"snap-{commit_id}")
+            self._commit("current", [entry])
+
+    def _require_current(self) -> None:
+        if self.exists("provenance") and not self.exists("current"):
+            raise RuntimeError(
+                f"GraphStore {self.root} has provenance but no current "
+                f"table: it was committed before commits maintained "
+                f"one. Rebuild it: run_pipeline its pages into a new "
+                f"GraphStore.")
+
     def read(self, table: str) -> DataFrame:
         """Iceberg: ``spark.read.table(table)`` (current snapshot).
         Raw union of every committed append — includes superseded
@@ -227,69 +295,89 @@ class GraphStore:
         snaps = self._read_manifest(table)
         if not snaps:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        return self._read_paths([s["path"] for s in snaps])
+        return self._read_snapshots(snaps)
 
-    def _read_paths(self, paths: list[str]) -> DataFrame:
+    def _read_snapshots(self, snaps: list[dict],
+                        tagged: bool = False) -> DataFrame:
         """Union per-snapshot scans by NAME.  One multi-path parquet
         scan refuses partitioned snapshot roots ("conflicting
         directory structures") and mixed flat/partitioned layouts
         (spec evolution), and a READER must not need the writer's
         partition spec — the layout is self-describing per snapshot.
         Filters on a partition column still prune inside each
-        partitioned scan; same files either way."""
-        out = self.spark.read.parquet(paths[0])
-        for q in paths[1:]:
-            out = out.unionByName(self.spark.read.parquet(q))
+        partitioned scan; same files either way.
+
+        ``tagged`` gives every row its commit id as ``COMMIT_COL``:
+        a compacted snapshot's stored column, else the snapshot's
+        manifest entry (NULL outside a commit). Untagged, the stored
+        column is dropped."""
+        out = None
+        for snap in snaps:
+            df = self.spark.read.parquet(snap["path"])
+            if COMMIT_COL in df.columns:
+                if not tagged:
+                    df = df.drop(COMMIT_COL)
+            elif tagged:
+                df = df.withColumn(
+                    COMMIT_COL,
+                    F.lit(snap.get("commit_id")).cast("string"))
+            out = df if out is None else out.unionByName(df)
         return out
 
-    def read_current(self, table: str,
-                     stage: str = "materialize") -> DataFrame:
+    def read_current(self, table: str) -> DataFrame:
         """Exactly-once, latest-version view of a lineage-tagged
         table (edge/node rows carrying ``src_url``/``src_hash``).
 
-        The provenance success row is the COMMIT RECORD for a
-        (url, input_hash) unit of work, written last by
-        ``run_pipeline``. Three consequences, each closing a gap the
-        raw union has:
+        Which rows are current was decided at commit time: the
+        ``current`` table names, per url, the ``input_hash`` and the
+        commit whose rows a reader sees (:meth:`merge_current`). The
+        view is the union of the table's snapshot scans, each row
+        tagged with its snapshot's commit id, semi-joined to
+        ``current`` on (src_url, src_hash, commit id). That closes
+        three gaps the raw union has:
 
-        * rows whose (src_url, src_hash) have no success record are
-          INVISIBLE — a writer that died between the edge append and
-          the provenance append leaves an orphan snapshot that never
-          surfaces (the at-least-once window of the non-atomic
-          three-table commit);
-        * rows whose hash is not their url's LATEST committed hash
-          are RETIRED — a changed page supersedes its old version's
-          whole subgraph instead of accumulating stale triples (the
-          Iceberg analog of this view is ``MERGE INTO`` on
+        * rows appended outside a commit, or by a commit that died
+          before its ``current`` merge, match no ``current`` row and
+          are INVISIBLE — the orphan snapshot of a writer that died
+          mid-batch never surfaces;
+        * rows of a url's superseded version are RETIRED — a changed
+          page's old subgraph drops out because ``current`` names its
+          new hash (the Iceberg analog is ``MERGE INTO`` on
           (url, input_hash));
-        * a replay of the same (url, input_hash) is a deterministic
-          recompute emitting identical rows, so the final
-          ``dropDuplicates`` restores exactly-once observation. It
-          compares the non-map columns only: Spark cannot compare a
-          map (node ``props``), and a node row's other columns already
-          hold its (uri, src_url, src_hash) key.
+        * a replay of the same (url, input_hash) by a second commit
+          emits identical rows under another commit id, and only the
+          commit ``current`` names is seen — exactly-once observation
+          without a ``dropDuplicates``.
 
-        At 100 TB the semi-join is an AQE-planned join keyed by url
-        and the distinct is one shuffle of the CURRENT graph —
-        run it once in compaction/export, not per ad-hoc query, or
-        let ``compact()`` materialize it.
+        A read therefore runs no provenance aggregate and no shuffle
+        of the graph: it is the snapshot scans plus one semi-join to
+        a table of one row per url, which the planner broadcasts while
+        that table is small.
 
         Tables without lineage columns (provenance itself, legacy
-        appends) pass through as ``read``.
+        appends), and stores without provenance, pass through as
+        ``read``. A store with provenance but no ``current`` table
+        raises: it predates commit-time currency and must be rebuilt.
         """
-        df = self.read(table)
-        if "src_url" not in df.columns or not self.exists("provenance"):
-            return df
-        prov = (self.read("provenance")
-                .filter((F.col("stage") == stage) & F.col("success")))
-        latest = (prov.groupBy("url")
-                  .agg(F.max(F.struct("attempt_ts", "input_hash"))
-                       .getField("input_hash").alias("src_hash"))
-                  .select(F.col("url").alias("src_url"), "src_hash"))
-        key = [f.name for f in df.schema.fields
-               if not isinstance(f.dataType, MapType)]
-        return (df.join(latest, ["src_url", "src_hash"], "left_semi")
-                .dropDuplicates(key))
+        snaps = self._read_manifest(table)
+        if not snaps:
+            raise FileNotFoundError(f"table {table} has no snapshots")
+        return self._current_rows(
+            self._read_snapshots(snaps, tagged=True)).drop(COMMIT_COL)
+
+    def _current_rows(self, tagged: DataFrame) -> DataFrame:
+        """The rows of ``tagged`` that ``current`` names, still
+        tagged; rows without lineage, or of a store without
+        provenance, all pass."""
+        if "src_url" not in tagged.columns or not self.exists("provenance"):
+            return tagged
+        self._require_current()
+        cur = self.read("current").select(
+            F.col("url").alias("src_url"),
+            F.col("input_hash").alias("src_hash"),
+            F.col("commit_id").alias(COMMIT_COL))
+        return tagged.join(cur, ["src_url", "src_hash", COMMIT_COL],
+                           "left_semi")
 
     def read_at(self, table: str, snapshot_id: str | None = None,
                 as_of_ts: float | None = None) -> DataFrame:
@@ -335,7 +423,7 @@ class GraphStore:
                 raise KeyError(
                     f"table {table}: ts {as_of_ts} addresses a state "
                     f"rewritten by compaction (no longer addressable)")
-        return self._read_paths([s["path"] for s in keep])
+        return self._read_snapshots(keep)
 
     def exists(self, table: str) -> bool:
         return bool(self._read_manifest(table))
@@ -377,23 +465,29 @@ class GraphStore:
         Resume state is unaffected: pending_pages reads table
         contents, not snapshot layout (provenance, not edge/node).
 
+        Each rewritten row keeps the commit that made it: the
+        compacted snapshot stores it as the ``COMMIT_COL`` column
+        (the rows come from many commits, so one manifest entry
+        cannot name it). :meth:`read_current` joins on it exactly as
+        on an appended snapshot's manifest id, so a compaction
+        changes no view, and a later commit that retires a url
+        retires its compacted rows too.
+
         ``current_only=True`` rewrites the :meth:`read_current` view
         instead of the raw union: superseded page versions, orphan
         partial appends, and replay duplicates are dropped in the
-        same pass (the expire-old-versions / MERGE materialization
-        analog), so subsequent plain ``read`` calls see the
-        exactly-once latest graph without paying the per-query
-        semi-join + distinct."""
+        same pass (the expire-old-versions analog), so subsequent
+        plain ``read`` calls see the exactly-once latest graph."""
         import shutil
         before = self._read_manifest(table)
         if not before:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        current = (self.read_current(table) if current_only
-                   else self.spark.read
-                   .parquet(*[s["path"] for s in before])
-                   ).repartition(target_partitions)
+        rows = self._read_snapshots(before, tagged=True)
+        if current_only:
+            rows = self._current_rows(rows)
+        rows = rows.repartition(target_partitions)
         snap_id = f"compact-{uuid.uuid4().hex[:8]}"
-        entry = self._write_snapshot(current, table, snap_id,
+        entry = self._write_snapshot(rows, table, snap_id,
                                      compacted=True,
                                      current_only=current_only)
         rewritten = {s["id"] for s in before}
@@ -487,10 +581,11 @@ def pending_pages(pages: DataFrame, store: GraphStore,
     return hashed.join(done, ["url", "input_hash"], "left_anti")
 
 
-def provenance_rows(pages: DataFrame, stage: str,
+def provenance_rows(pages: DataFrame, stage: str, commit_id: str,
                     rows_out_col=None, duration_s: float = 0.0) -> DataFrame:
-    """One lineage row per (url × stage × attempt), with the physical
-    partition id — per-partition metrics per the north rule."""
+    """One lineage row per (url × stage × attempt), with the commit
+    that made it and the physical partition id — per-partition
+    metrics per the north rule."""
     hashed = pages if "input_hash" in pages.columns else with_input_hash(pages)
     return hashed.select(
         "url",
@@ -503,6 +598,7 @@ def provenance_rows(pages: DataFrame, stage: str,
         F.lit(None).cast("string").alias("warnings"),
         F.lit(None).cast("string").alias("error"),
         "input_hash",
+        F.lit(commit_id).alias("commit_id"),
         F.spark_partition_id().alias("partition_id"),
     )
 

@@ -53,7 +53,7 @@ import re
 from typing import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, IntegerType,
                                LongType, StringType, StructField,

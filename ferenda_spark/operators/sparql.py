@@ -1151,8 +1151,10 @@ class _StarPlan(_Plan):
 
     def resolve(self, other: "_Plan | None" = None) -> _Plan:
         s, o = self.s_name, self.o_name
+        kinds = _has_kinds(self.clo)
         pairs = self.clo.select(F.col("descendant").alias(s),
-                                F.col("ancestor").alias(o))
+                                F.col("ancestor").alias(o),
+                                *(_kind_cols(o) if kinds else []))
         nodes = (self.edges.select(F.col("subj").alias("n"))
                  .unionByName(self.edges.filter(~F.col("obj_is_literal"))
                               .select(F.col("obj").alias("n"))))
@@ -1168,10 +1170,34 @@ class _StarPlan(_Plan):
                 dom = dom.select(F.col(next(iter(shared))).alias("n"))
             nodes = nodes.join(dom.distinct(), "n", "left_semi")
         nodes = nodes.distinct()
-        out = (pairs.unionByName(nodes.select(F.col("n").alias(s),
-                                              F.col("n").alias(o)))
+        out = (pairs.unionByName(nodes.select(
+            F.col("n").alias(s), F.col("n").alias(o),
+            *(_kind_cols(o, iri=True) if kinds else [])))
                .distinct())
-        return _Plan(out, {s, o}, set())
+        return _Plan(out, {s, o}, {o} if kinds else set())
+
+
+_KIND_COLS = ("obj_is_literal", "obj_datatype", "obj_lang")
+
+
+def _has_kinds(clo: DataFrame) -> bool:
+    """Does a path's pair set carry its objects' term kind? A ``p?``
+    pair set does (it holds literal objects); a closure holds IRIs
+    only."""
+    return _KIND_COLS[0] in clo.columns
+
+
+def _kind_cols(o: str, iri: bool = False) -> list:
+    """The object variable ``o``'s ``__lit__``/``__dt__``/``__lang__``
+    columns: the pair set's object kind, or an IRI's (a zero-length
+    arm binds ``o`` to the subject-position node)."""
+    if iri:
+        vals = [F.lit(False), F.lit(None).cast("string"),
+                F.lit(None).cast("string")]
+    else:
+        vals = [F.col(c) for c in _KIND_COLS]
+    return [v.alias(f"{h}{o}")
+            for v, h in zip(vals, ("__lit__", "__dt__", "__lang__"))]
 
 
 def _path_plan(edges: DataFrame, pat: Pattern, max_depth,
@@ -1194,13 +1220,13 @@ def _path_plan(edges: DataFrame, pat: Pattern, max_depth,
     key = (scope, pat.p.value, max_depth)
     if pat.path == "?":
         # zero-or-one: no closure needed — the "reachable pairs" are
-        # just the predicate's single-step edges (same IRI-object
-        # subset the closure walks), and the zero-length arm is the
-        # identity handled below exactly as for `*`
-        clo = (edges.filter((F.col("pred") == _lit(pat.p))
-                            & ~F.col("obj_is_literal"))
+        # just the predicate's single-step edges, literal objects
+        # included with their term kind (a plain `p` pattern matches
+        # them too), and the zero-length arm is the identity handled
+        # below exactly as for `*`
+        clo = (edges.filter(F.col("pred") == _lit(pat.p))
                .select(F.col("subj").alias("descendant"),
-                       F.col("obj").alias("ancestor")))
+                       F.col("obj").alias("ancestor"), *_KIND_COLS))
     else:
         clo = clo_cache.get(key) if clo_cache is not None else None
         if clo is None:
@@ -1211,22 +1237,30 @@ def _path_plan(edges: DataFrame, pat: Pattern, max_depth,
                                      child_col="subj", parent_col="obj")
             if clo_cache is not None:
                 clo_cache[key] = clo
+    kinds = _has_kinds(clo)
     if isinstance(pat.s, Var) and isinstance(pat.o, Term):
-        out = clo.filter(F.col("ancestor") == _lit(pat.o)) \
-                 .select(F.col("descendant").alias(pat.s.name))
+        out = clo.filter(F.col("ancestor") == _lit(pat.o))
+        if kinds:
+            out = out.filter(F.col("obj_is_literal")
+                             == F.lit(pat.o.is_literal))
+        out = out.select(F.col("descendant").alias(pat.s.name))
         if pat.path in ("*", "?"):
             one = edges.sparkSession.createDataFrame(
                 [(pat.o.value,)], f"{pat.s.name} string")
             out = out.unionByName(one).distinct()
         return _Plan(out, {pat.s.name}, set())
     if isinstance(pat.s, Term) and isinstance(pat.o, Var):
+        o = pat.o.name
         out = clo.filter(F.col("descendant") == _lit(pat.s)) \
-                 .select(F.col("ancestor").alias(pat.o.name))
+                 .select(F.col("ancestor").alias(o),
+                         *(_kind_cols(o) if kinds else []))
         if pat.path in ("*", "?"):
             one = edges.sparkSession.createDataFrame(
-                [(pat.s.value,)], f"{pat.o.name} string")
+                [(pat.s.value,)], f"{o} string")
+            if kinds:
+                one = one.select(o, *_kind_cols(o, iri=True))
             out = out.unionByName(one).distinct()
-        return _Plan(out, {pat.o.name}, set())
+        return _Plan(out, {o}, {o} if kinds else set())
     if isinstance(pat.s, Var) and isinstance(pat.o, Var):
         if pat.path in ("*", "?"):
             # zero-length arm = identity over the node universe (per
@@ -1242,6 +1276,8 @@ def _path_plan(edges: DataFrame, pat: Pattern, max_depth,
         return _Plan(edges.sparkSession.range(1).select(), set(), set())
     hit = clo.filter((F.col("descendant") == _lit(pat.s))
                      & (F.col("ancestor") == _lit(pat.o)))
+    if kinds:
+        hit = hit.filter(F.col("obj_is_literal") == F.lit(pat.o.is_literal))
     return _Plan(hit.select().limit(1), set(), set())
 
 

@@ -7,13 +7,15 @@
     → extract (Arrow UDF, publisher linking folded in,
       input_hash passed through)                       operators/extract.py
     → page_triples: (url, input_hash, triples)         operators/fused.py
-      — one html-free row per page, the run's only
+      — one html-free row per page version, the run's only
         persisted frame
     → edge append: its explode, lineage (src_url, src_hash) carried
       from the page row
     → node append: nodes_from_triples over those edges, grouped with
       their lineage
-    → provenance append (the commit record): one row per page,
+    → current merge (publishes the commit): one row per url,
+      naming the version reads see                     operators/graph.py
+    → provenance append (the resume log): one row per page,
       rows_out = size(triples)                         operators/graph.py
 
 ``build_triples`` returns the triple DataFrame alone: the explode of
@@ -28,7 +30,7 @@ are Spark's own shuffles, and resume is the pending_pages anti-join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ferenda_spark.operators.extract import DOC_URL_RE, extract
@@ -81,23 +83,35 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     the final edge table equals the single-run result).
 
     One frame is cached: page_triples over the pending pages,
-    ``(url, input_hash, triples)`` — one row per page, no ``html``.
-    The edge, node and provenance appends all read it, so the Python
-    parse and the triple expression run once per page. Lineage is
+    ``(url, input_hash, triples)`` — one row per page version, no
+    ``html``. The edge, node, current and provenance writes all read
+    it, so the Python parse and the triple expression run once per
+    page. The action that fills it checks the page keys: an identical
+    duplicate page (same url and input_hash) is dropped before
+    anything is written, so its edges are committed once. Lineage is
     carried, never joined back: each edge is exploded from its page's
     row and takes that row's url and hash as (src_url, src_hash), the
     node rows group by the same pair, and each provenance row is its
     page's row with ``rows_out = size(triples)``. Two versions of one
     url in a batch therefore keep separate lineage.
 
-    Commit protocol: the provenance SUCCESS row — appended LAST — is
-    the commit record that makes a page's edge and node rows visible
-    through ``GraphStore.read_current``. The three appends are not
-    atomic; a crash between them leaves orphan edge/node snapshots
-    that ``read_current`` never surfaces and a later replay
-    recomputes deterministically. A changed page (new input_hash)
-    reprocesses AND retires its previous version's subgraph in the
-    same view.
+    Commit protocol: the run is one ``GraphStore.commit`` with a
+    fresh commit id. Its edge and node appends record the id in
+    their manifest entries. ``GraphStore.merge_current`` then makes
+    this commit's version of each url the one
+    ``GraphStore.read_current`` shows: that rewrite of the small
+    ``current`` table, under its commit lock, is what publishes the
+    batch. The provenance append — the resume log, each row carrying
+    the commit id — comes after it. The writes are not atomic, and
+    every crash point is a replay: before the merge the appended
+    snapshots are orphans no read sees, and after it the pages are
+    still pending, so a rerun recomputes them deterministically under
+    a new commit id and its merge replaces this one. A changed page
+    (new input_hash) reprocesses AND retires its previous version's
+    subgraph in the same merge.
+
+    The page and triple counts come from an Observation on the
+    provenance append, not from a pass of their own.
 
     ``config_salt`` (see with_input_hash): fingerprint of the run's
     extraction configuration — a rerun with a changed configuration
@@ -111,28 +125,39 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     if todo.isEmpty():
         return {"pages": 0, "triples": 0, "skipped": True}
 
-    per_page = page_triples(
-        _extract_linked(todo, entities, doc_url_regex)).persist()
-    try:
-        counts = per_page.agg(
-            F.count(F.lit(1)).alias("pages"),
-            F.sum(F.size("triples")).alias("triples")).first()
+    counts = Observation("commit")
+    with store.commit() as commit_id:
+        cached = page_triples(
+            _extract_linked(todo, entities, doc_url_regex)).persist()
+        per_page = cached
+        try:
+            # The same page twice in the batch (same url and
+            # input_hash) would commit its edges twice. This check over
+            # the page keys is also the action that fills the cache.
+            if not (cached.groupBy("url", "input_hash").count()
+                    .filter(F.col("count") > 1).isEmpty()):
+                per_page = cached.dropDuplicates(["url", "input_hash"])
+            edges = per_page.select(
+                F.col("url").alias("src_url"),
+                F.explode("triples").alias("t"),
+                F.col("input_hash").alias("src_hash"),
+            ).select("src_url", "t.*", "src_hash")
+            store.append(edges, "edge")
+            nodes = nodes_from_triples(edges,
+                                       lineage=("src_url", "src_hash"))
+            store.append(nodes.select("src_url", "uri", "rdf_type",
+                                      "label", "props", "src_hash"),
+                         "node")
+            store.merge_current(per_page, commit_id)
 
-        edges = per_page.select(
-            F.col("url").alias("src_url"),
-            F.explode("triples").alias("t"),
-            F.col("input_hash").alias("src_hash"),
-        ).select("src_url", "t.*", "src_hash")
-        store.append(edges, "edge")
-        nodes = nodes_from_triples(edges, lineage=("src_url", "src_hash"))
-        store.append(nodes.select("src_url", "uri", "rdf_type", "label",
-                                  "props", "src_hash"), "node")
-
-        duration = _time.time() - t0
-        store.append(provenance_rows(per_page, stage,
-                                     rows_out_col=F.size("triples"),
-                                     duration_s=duration), "provenance")
-    finally:
-        per_page.unpersist()
-    return {"pages": counts["pages"], "triples": counts["triples"],
+            duration = _time.time() - t0
+            prov = provenance_rows(per_page, stage, commit_id,
+                                   rows_out_col=F.size("triples"),
+                                   duration_s=duration)
+            store.append(prov.observe(
+                counts, F.count(F.lit(1)).alias("pages"),
+                F.sum("rows_out").alias("triples")), "provenance")
+        finally:
+            cached.unpersist()
+    return {"pages": counts.get["pages"], "triples": counts.get["triples"],
             "skipped": False, "duration_s": round(duration, 3)}

@@ -35,7 +35,7 @@ equivalent a Common-Crawl-scale pipeline uses instead.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 CDX_JSON_SCHEMA = ("url string, status string, mime string, "

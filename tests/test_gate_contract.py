@@ -8,13 +8,17 @@ weakens the round's correctness evidence.  Pin it."""
 
 import importlib.util
 import sys
+from pathlib import Path
+
+# the entry module of the checkout this test file belongs to
+ENTRY = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
 
 
 def _entry():
     if "spark_entry_under_test" in sys.modules:
         return sys.modules["spark_entry_under_test"]
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_under_test", "/root/repo/__spark_entry__.py")
+        "spark_entry_under_test", ENTRY)
     m = importlib.util.module_from_spec(spec)
     sys.modules["spark_entry_under_test"] = m
     spec.loader.exec_module(m)

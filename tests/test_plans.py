@@ -519,3 +519,29 @@ def test_run_pipeline_one_html_free_materialization(spark, tmp_path,
     python_ops = ("MapInPandas", "MapInArrow", "ArrowEvalPython",
                   "BatchEvalPython", "FlatMapGroupsInPandas")
     assert not [p for p in plans if any(op in p for op in python_ops)]
+
+
+def test_read_current_is_scans_and_a_semi_join(spark, tmp_path):
+    """read_current("edge") over a store committed twice (the second
+    commit retires a changed page) aggregates nothing, shuffles
+    nothing and reads no provenance: it is the snapshot scans
+    semi-joined to the per-url current table."""
+    from ferenda_spark.fixtures.pages import entities_df, pages_df
+    from ferenda_spark.operators.graph import GraphStore
+    from ferenda_spark.pipeline import run_pipeline
+    pages, ents = pages_df(spark, 10, partitions=2), entities_df(spark)
+    store = GraphStore(spark, str(tmp_path / "g"))
+    run_pipeline(spark, pages, ents, store)
+    changed = pages.withColumn(
+        "html", F.when(F.col("url").endswith("/rfc/3"),
+                       F.concat(F.col("html"), F.lit(b" ")))
+        .otherwise(F.col("html")))
+    assert run_pipeline(spark, changed, ents, store)["pages"] == 1
+
+    df = store.read_current("edge")
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in optimized
+    assert "LeftSemi" in optimized
+    plan = _plan(df)
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert "/provenance/" not in plan

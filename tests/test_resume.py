@@ -352,6 +352,97 @@ def test_compact_current_only_materializes_latest_view(spark, tmp_path):
     assert run_pipeline(spark, changed, ents, store)["skipped"] is True
 
 
+EDGE_COLS = ["src_url", "subj", "pred", "obj", "obj_is_literal",
+             "obj_datatype", "obj_lang", "src_hash"]
+
+
+def _assert_current_is_scratch_build(spark, store, pages, ents, root):
+    """store.read_current("edge") equals a from-scratch build of
+    ``pages`` as a multiset (exceptAll empty both ways)."""
+    scratch = GraphStore(spark, str(root))
+    run_pipeline(spark, pages, ents, scratch)
+    got = store.read_current("edge").select(*EDGE_COLS)
+    want = scratch.read("edge").select(*EDGE_COLS)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_read_current_identical_duplicate_page_seen_once(spark, tmp_path):
+    """The same page twice in one batch (same url and input_hash)
+    commits once: its edges are observed once."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages = pages_df(spark, 6, partitions=2)
+    ents = entities_df(spark)
+    dup = pages.filter(F.col("url") == "https://example.org/res/rfc/3")
+    stats = run_pipeline(spark, pages.unionByName(dup), ents, store)
+    assert stats["pages"] == 6
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch")
+
+
+def test_read_current_edge_replay_by_second_writer(spark, tmp_path,
+                                                   monkeypatch):
+    """A second writer that read the pending set before the first one
+    committed replays every page; each edge is still observed once."""
+    import ferenda_spark.pipeline as pipeline
+    from ferenda_spark.operators.graph import with_input_hash
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages = pages_df(spark, 6, partitions=2)
+    ents = entities_df(spark)
+    run_pipeline(spark, pages, ents, store)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "pending_pages",
+                  lambda pages, store, stage, salt:
+                  with_input_hash(pages, salt))
+        assert run_pipeline(spark, pages, ents, store)["pages"] == 6
+    assert store.read("edge").count() == 2 * store.read_current(
+        "edge").count()
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch")
+
+
+def test_read_current_after_compact_then_refresh(spark, tmp_path):
+    """compact("edge") keeps each row's commit, so a refresh commit
+    after it retires a changed page's compacted rows."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages = pages_df(spark, N, partitions=2)
+    ents = entities_df(spark)
+    run_pipeline(spark, pages.filter(F.md5("url").rlike("^[0-7]")), ents,
+                 store)
+    run_pipeline(spark, pages, ents, store)
+    store.compact("edge", target_partitions=2)
+    assert len(store.snapshots("edge")) == 1
+
+    url0 = (pages.filter(F.col("url").contains("/res/rfc/"))
+            .orderBy("url").first()["url"])
+    changed = pages.withColumn(
+        "html", F.when(F.col("url") == url0,
+                       F.concat(F.col("html"), F.lit(b" "))
+                       ).otherwise(F.col("html")))
+    assert run_pipeline(spark, changed, ents, store)["pages"] == 1
+    _assert_current_is_scratch_build(spark, store, changed, ents,
+                                     tmp_path / "scratch")
+
+
+def test_read_current_refuses_store_without_current(spark, tmp_path):
+    """A store whose provenance predates the current table cannot be
+    read or committed to; the error names the rebuild."""
+    import shutil
+
+    import pytest
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages = pages_df(spark, 6, partitions=2)
+    ents = entities_df(spark)
+    run_pipeline(spark, pages, ents, store)
+    shutil.rmtree(tmp_path / "g" / "current")
+    with pytest.raises(RuntimeError, match="new GraphStore"):
+        store.read_current("edge")
+    with pytest.raises(RuntimeError, match="new GraphStore"):
+        run_pipeline(spark, pages.withColumn("html", F.concat(
+            F.col("html"), F.lit(b" "))), ents, store)
+
+
 def test_time_travel_read_at(spark, tmp_path):
     """read_at(snapshot_id) returns the table state AS OF that commit;
     read_at(as_of_ts) resolves by commit timestamp; compaction expires

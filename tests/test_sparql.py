@@ -846,6 +846,34 @@ def test_zero_or_one_path(spark):
                             "WHERE { ?s ?p ?o . }")
 
 
+def test_zero_or_one_path_keeps_literal_objects(spark):
+    """``pred?`` over a literal-valued predicate: the one-step arm
+    holds the literal edges, as a plain ``pred`` pattern does, and the
+    object variable keeps their term kind, datatype and language."""
+    edges = _edges(spark)
+    q = "SELECT ?t WHERE { <A> dcterms:title? ?t . }"
+    assert {r["t"] for r in sparql_query(edges, q).collect()} == \
+        {"A", "Doc A"}
+    q2 = ("SELECT ?x ?t WHERE { ?x dcterms:title? ?t . "
+          "FILTER isLiteral(?t) }")
+    assert {tuple(r) for r in sparql_query(edges, q2).collect()} == \
+        {("A", "Doc A"), ("B", "Doc B"), ("C", "Doc C")}
+    q3 = ('SELECT ?x WHERE { ?x dcterms:title? ?t . '
+          'FILTER (lang(?t) = "en") }')
+    assert {r["x"] for r in sparql_query(edges, q3).collect()} == {"A"}
+    q4 = 'SELECT ?x WHERE { ?x dcterms:title? "Doc B" . }'
+    assert {r["x"] for r in sparql_query(edges, q4).collect()} == \
+        {"B", "Doc B"}
+    q5 = ('CONSTRUCT { ?x dcterms:issued ?t . } WHERE '
+          '{ ?x dcterms:issued? ?t . FILTER isLiteral(?t) }')
+    assert _triples(sparql_query(edges, q5)) == {
+        ("E", "dcterms:issued", "2001-01", True, "xsd:gYearMonth", None)}
+    q6 = ('CONSTRUCT { ?x dcterms:title ?t . } WHERE '
+          '{ <A> dcterms:title? ?t . ?x dcterms:title ?t . }')
+    assert _triples(sparql_query(edges, q6)) == {
+        ("A", "dcterms:title", "Doc A", True, None, "en")}
+
+
 def test_regex_str_lang_filters(spark):
     """The round-5 FILTER extensions: regex() partial match with
     flags, str() lexical coercion, lang() tag access."""

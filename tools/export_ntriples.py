@@ -8,7 +8,7 @@ Usage:
         tools/export_ntriples.py <store_dir> <out_dir> \
         [--table edge] [--all-versions] [--gzip] [--base-iri IRI]
 
-Reads the provenance-gated current view by default (the exactly-once
+Reads the commit-scoped current view by default (the exactly-once
 OBSERVED graph; ``--all-versions`` dumps every committed snapshot row
 instead), expands the store's CURIE vocabulary against ``--base-iri``
 plus the standard prefixes, and writes one .nt(.gz) file per
@@ -23,7 +23,6 @@ import argparse
 import sys
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ferenda_spark.sources.rdf_serial import STD_PREFIXES
 
@@ -35,7 +34,7 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--table", default="edge")
     p.add_argument("--all-versions", action="store_true",
                    help="dump every committed snapshot row instead of "
-                        "the provenance-gated current view")
+                        "the commit-scoped current view")
     p.add_argument("--gzip", action="store_true")
     p.add_argument("--base-iri", default=None,
                    help="namespace IRI for bare relative resource "

@@ -11,7 +11,7 @@ Usage:
 Property-path closures iterate to fixpoint by default (real SPARQL
 semantics); --max-depth N bounds them for known-shallow hierarchies.
 
-Reads the store's provenance-gated current edge view, compiles the
+Reads the store's commit-scoped current edge view, compiles the
 query (operators/sparql.py subset; %(key)s params from the CLI), and
 prints the result: CONSTRUCT as sorted N-Triples-style lines on
 stdout (grep ^TRIPLE), SELECT as tab-separated rows (grep ^ROW).

@@ -26,7 +26,6 @@ import argparse
 import sys
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def _parse_args(argv):
