@@ -835,8 +835,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             rdfa_triples,
         )
         pages = render_xhtml_docs(spark, sf)
-        return rdfa_triples(pages, url_col="url",
-                            html_col="xhtml").select(
+        return rdfa_triples(pages, html_col="xhtml").select(
             "src_url", "subj", "pred", "obj", "obj_is_literal",
             "obj_datatype", "obj_lang")
     q["rdfa_roundtrip_docs"] = rdfa_roundtrip_docs
@@ -911,7 +910,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             n_docs=d.count(), repos=repos,
             boost_repos={"src3": 10, "src7": 3},
             exclude_repos=["src5"],
-            pagenum=2, pagelen=10))
+            pagenum=2))
     q["fulltext_api_page"] = fulltext_api_page
 
     def fulltext_bm25_docs(spark, sf):
@@ -925,7 +924,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = _docs(spark, sf).select("doc_id", "text", "source")
         idx = ft.fulltext_index(d, "doc_id", {"source": 4, "text": 1})
         return _longify(ft.bm25_search(
-            idx, d.count(), ["table", "window", "spark"], k=20))
+            idx, d.count(), ["table", "window", "spark"]))
     q["fulltext_bm25_docs"] = fulltext_bm25_docs
 
     def doc_versions_views(spark, sf):
@@ -943,7 +942,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         latest = V.latest_versions(vs).select(
             "url", F.col("version").alias("latest_version"),
             "archive_uri", "n_versions")
-        asof = V.versions_asof(vs, "2020-06-15", end="valid_to").select(
+        asof = V.versions_asof(vs, "2020-06-15").select(
             "url", F.col("version").alias("asof_version"),
             F.col("valid_from").alias("asof_valid_from"))
         return _longify(latest.join(asof, "url", "left"))
@@ -955,7 +954,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         e = load_table(spark, sf, "events").select(
             "event_id", "event_type", "ts")
         return _longify(analytics.feedsets(
-            e, "event_type", "ts", feed_size=25, tiebreak_col="event_id")
+            e, "event_type", "ts", feed_size=25)
             .select("feed", "event_id", "rank"))
     q["feedsets_events"] = feedsets_events
 
@@ -966,13 +965,11 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         e = load_table(spark, sf, "events").select(
             "event_id", "event_type", "ts")
         top = (analytics.feedsets(
-            e, "event_type", "ts", feed_size=10, tiebreak_col="event_id")
+            e, "event_type", "ts", feed_size=10)
             .withColumn("title",
                         F.concat(F.col("event_type"), F.lit(" #"),
                                  F.col("event_id"))))
-        return render.atom_feeds(top, feed_col="feed",
-                                 id_col="event_id",
-                                 title_col="title", ts_col="ts")
+        return render.atom_feeds(top)
     q["atom_feeds_events"] = atom_feeds_events
 
     def atom_roundtrip_events(spark, sf):
@@ -988,18 +985,14 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         e = load_table(spark, sf, "events").select(
             "event_id", "event_type", "ts")
         top = (analytics.feedsets(
-            e, "event_type", "ts", feed_size=10,
-            tiebreak_col="event_id")
+            e, "event_type", "ts", feed_size=10)
             .withColumn("title",
                         F.concat(F.col("event_type"), F.lit(" #"),
                                  F.col("event_id")))
             .withColumn("link",
                         F.concat(F.lit("https://ev.example/e/"),
                                  F.col("event_id").cast("string"))))
-        feeds = render.atom_feeds(top, feed_col="feed",
-                                  id_col="event_id",
-                                  title_col="title", ts_col="ts",
-                                  link_col="link")
+        feeds = render.atom_feeds(top, link_col="link")
         ent = feed_entries(feeds, url_col="feed", xml_col="atom_xml")
         return ent.select(
             F.col("src_url").alias("feed"), "format", "feed_title",
@@ -1079,7 +1072,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kg_keyword_inversion(spark, sf):
         e = _kg_edges(spark, sf)
-        inv = analytics.keyword_inversion(e, "dcterms:subject")
+        inv = analytics.keyword_inversion(e)
         return _longify(inv.select(
             "term", F.array_join("members", ",").alias("members_csv"),
             "n_members"))
@@ -1141,7 +1134,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                  .distinct())
         seeds = pages.filter(
             F.regexp_extract("url", r"(\d+)$", 1).cast("long") % 25 == 0)
-        return _longify(crawl_frontier(links, seeds, max_depth=3))
+        return _longify(crawl_frontier(links, seeds))
     q["crawl_reachable"] = crawl_reachable
 
     def kg_regen_dependents(spark, sf):
@@ -1157,7 +1150,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         deps = dependency_pairs(e, pages)
         changed = pages.filter(
             F.regexp_extract("url", r"(\d+)$", 1).cast("long") % 17 == 0)
-        return _longify(stale_set(deps, changed, max_depth=4))
+        return _longify(stale_set(deps, changed))
     q["kg_regen_dependents"] = kg_regen_dependents
 
     def kg_inbound_refs(spark, sf):
@@ -1428,7 +1421,7 @@ SELECT ?s ?n ?ch WHERE {
         cites = (e.filter(F.col("pred") == "dcterms:references")
                  .select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")))
-        hs = hits(cites, iters=2)
+        hs = hits(cites)
         return analytics.ranked_topk(
             hs, [("auth_micro", True), ("hub_micro", True),
                  ("node", False)], 20)
@@ -1464,7 +1457,7 @@ SELECT ?s ?n ?ch WHERE {
         cites = (e.filter(F.col("pred") == "dcterms:references")
                  .select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")))
-        ra = link_prediction_ra(cites, max_hub_degree=50)
+        ra = link_prediction_ra(cites)
         return analytics.ranked_topk(
             ra, [("score_micro", True), ("u", False), ("v", False)], 50)
     q["kg_linkpred"] = kg_linkpred
@@ -1479,7 +1472,7 @@ SELECT ?s ?n ?ch WHERE {
         cites = (e.filter(F.col("pred") == "dcterms:references")
                  .select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")))
-        return label_propagation(cites, iters=2)
+        return label_propagation(cites)
     q["kg_communities"] = kg_communities
 
     def kg_kcore(spark, sf):
@@ -1492,7 +1485,7 @@ SELECT ?s ?n ?ch WHERE {
         cites = (e.filter(F.col("pred") == "dcterms:references")
                  .select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")))
-        return k_core(cites, k=2, iters=3)
+        return k_core(cites, k=2)
     q["kg_kcore"] = kg_kcore
 
     def kg_cocitation(spark, sf):
@@ -1507,10 +1500,10 @@ SELECT ?s ?n ?ch WHERE {
         cites = (e.filter(F.col("pred") == "dcterms:references")
                  .select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")))
-        cc = (co_citation(cites, max_out_degree=50)
+        cc = (co_citation(cites)
               .select(F.lit("cocite").alias("kind"), "a", "b",
                       F.col("n_cocited").alias("n")))
-        bc = (bibliographic_coupling(cites, max_in_degree=50)
+        bc = (bibliographic_coupling(cites)
               .select(F.lit("couple").alias("kind"), "a", "b",
                       F.col("n_shared").alias("n")))
         return cc.unionByName(bc)
@@ -1595,16 +1588,15 @@ SELECT ?s ?n ?ch WHERE {
         o = load_table(spark, sf, "orders")
         top = analytics.topk_per_group(
             o.select("o_orderpriority", "o_orderkey", "o_totalprice"),
-            ["o_orderpriority"], "o_totalprice", 3,
-            tiebreak_col="o_orderkey")
+            ["o_orderpriority"], "o_totalprice", 3)
         return _longify(top)
     q["topk_orders"] = topk_orders
 
     def events_pagination(spark, sf):
         e = load_table(spark, sf, "events")
         return _longify(analytics.paginate(
-            e.select("event_id", "event_type", "ts"), "event_type", "ts",
-            100).select("event_id", "event_type", "rn", "page"))
+            e.select("event_id", "event_type", "ts"), "event_type", "ts")
+            .select("event_id", "event_type", "rn", "page"))
     q["events_pagination"] = events_pagination
 
     def asof_purchase_click(spark, sf):
@@ -1613,8 +1605,7 @@ SELECT ?s ?n ?ch WHERE {
             "event_id", "user_id", "ts")
         clicks = e.filter(F.col("event_type") == "click").select(
             "event_id", "user_id", "ts")
-        out = analytics.asof_join(purchases, clicks, "user_id",
-                                  right_cols=["event_id"])
+        out = analytics.asof_join(purchases, clicks, "user_id")
         return _longify(out.select(
             F.col("event_id").alias("purchase_event"),
             "user_id",
@@ -1624,7 +1615,7 @@ SELECT ?s ?n ?ch WHERE {
     def sessionize_events(spark, sf):
         e = load_table(spark, sf, "events")
         return _longify(analytics.sessionize(
-            e.select("event_id", "user_id", "ts"), gap_minutes=30)
+            e.select("event_id", "user_id", "ts"))
             .select("event_id", "user_id", "session_id"))
     q["sessionize_events"] = sessionize_events
 
@@ -1676,10 +1667,10 @@ SELECT ?s ?n ?ch WHERE {
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 150) | (F.col("doc_id") >= _COPY_OFFSET))
         return _longify(
-            dedup.jaccard_pairs(corpus, threshold=0.8)
+            dedup.jaccard_pairs(corpus)
             .withColumn("variant", F.lit("default"))
             .unionByName(
-                dedup.jaccard_pairs(corpus, threshold=0.8, max_df=20)
+                dedup.jaccard_pairs(corpus, max_df=20)
                 .withColumn("variant", F.lit("capped"))))
     q["dedup_jaccard"] = dedup_jaccard
 
@@ -1698,7 +1689,7 @@ SELECT ?s ?n ?ch WHERE {
             (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
             F.substring("text", 1, 120).alias("text"))
         return _longify(dedup.containment_pairs(
-            docs.unionByName(excerpts), threshold=0.7))
+            docs.unionByName(excerpts)))
     q["containment_docs"] = containment_docs
 
     def cms_heavy_hitters_docs(spark, sf):
@@ -1715,11 +1706,11 @@ SELECT ?s ?n ?ch WHERE {
                 .select(F.explode(
                     F.split(F.trim(F.col("text")), r"\s+")).alias("key"))
                 .filter(F.col("key") != ""))
-        sk = cms_sketch(toks, depth=4, width=512)
+        sk = cms_sketch(toks)
         exact = toks.groupBy("key").agg(F.count(F.lit(1)).alias("exact"))
         top = (exact.orderBy(F.desc("exact"), F.asc("key")).limit(20)
                .localCheckpoint(eager=True))
-        est = cms_lookup(sk, top.select("key"), depth=4, width=512)
+        est = cms_lookup(sk, top.select("key"))
         return top.join(est, "key").select("key", "exact", "est")
     q["cms_heavy_hitters_docs"] = cms_heavy_hitters_docs
 
@@ -1732,14 +1723,14 @@ SELECT ?s ?n ?ch WHERE {
         list_position tie rule) in SQL."""
         from ferenda_spark.operators.dedup import winnow_fingerprints
         docs = _docs(spark, sf).filter(F.col("doc_id") < 80)
-        return _longify(winnow_fingerprints(docs, k=5, window=4))
+        return _longify(winnow_fingerprints(docs))
     q["winnow_fingerprints_docs"] = winnow_fingerprints_docs
 
     def dedup_minhash_lsh(spark, sf):
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 150) | (F.col("doc_id") >= _COPY_OFFSET))
         return _longify(dedup.minhash_dedup_pairs(
-            corpus, k=8, bands=4, threshold=0.8))
+            corpus, k=8, threshold=0.8))
     q["dedup_minhash_lsh"] = dedup_minhash_lsh
 
     def dedup_incremental_docs(spark, sf):
@@ -1764,7 +1755,7 @@ SELECT ?s ?n ?ch WHERE {
         batch = fresh.unionByName(near_hist).unionByName(copy_fresh)
         index = dedup.minhash_bands(history, k=8, bands=4)
         return _longify(
-            dedup.dedup_against_index(batch, index, k=8, bands=4)
+            dedup.dedup_against_index(batch, index)
             .select("doc_id"))
     q["dedup_incremental_docs"] = dedup_incremental_docs
 
@@ -1951,7 +1942,7 @@ LIMIT 10
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 150) | (F.col("doc_id") >= _COPY_OFFSET))
         pairs = dedup.minhash_dedup_pairs(
-            corpus, k=8, bands=4, threshold=0.8)
+            corpus, k=8, threshold=0.8)
         drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
         # kept feeds three branches (rows, quality, langid) — persist
         # so the LSH anti-join lineage runs once; ContextCleaner
@@ -1974,7 +1965,7 @@ LIMIT 10
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 100) | (F.col("doc_id") >= _COPY_OFFSET))
         return _longify(dedup.simhash_near_pairs(
-            corpus, bits=32, max_hamming=6, bands=4))
+            corpus))
     q["dedup_simhash_pairs"] = dedup_simhash_pairs
 
     def dedup_components(spark, sf):
@@ -1986,7 +1977,7 @@ LIMIT 10
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 100) | (F.col("doc_id") >= _COPY_OFFSET))
         pairs = dedup.simhash_near_pairs(
-            corpus, bits=32, max_hamming=6, bands=4)
+            corpus)
         return _longify(dedup.component_clusters(pairs))
     q["dedup_components"] = dedup_components
 
@@ -2000,7 +1991,7 @@ LIMIT 10
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 100) | (F.col("doc_id") >= _COPY_OFFSET))
         pairs = dedup.simhash_near_pairs(
-            corpus, bits=32, max_hamming=6, bands=4)
+            corpus)
         clusters = dedup.component_clusters(pairs).select("id", "comp")
         scored = corpus.withColumn("score", F.length("text"))
         return _longify(dedup.select_canonical(scored, clusters,
@@ -2013,7 +2004,7 @@ LIMIT 10
         flagged; docs shorter than 13 tokens are trivially clean."""
         d = _docs(spark, sf)
         bench = d.filter(F.col("doc_id") % 50 == 0).select("text")
-        return _longify(dedup.decontaminate(d, bench, n=13))
+        return _longify(dedup.decontaminate(d, bench))
     q["decontaminate_docs"] = decontaminate_docs
 
     def decontaminate_bloom_docs(spark, sf):
@@ -2024,7 +2015,7 @@ LIMIT 10
         decontaminate_docs."""
         d = _docs(spark, sf)
         bench = d.filter(F.col("doc_id") % 50 == 0).select("text")
-        return _longify(dedup.decontaminate_bloom(d, bench, n=13))
+        return _longify(dedup.decontaminate_bloom(d, bench))
     q["decontaminate_bloom_docs"] = decontaminate_bloom_docs
 
     def sample_mixture_docs(spark, sf):
@@ -2322,9 +2313,8 @@ LIMIT 10
         d = _docs(spark, sf)
         labeled = d.select((F.col("lang") == "en").alias("label"),
                            "text")
-        w = train_nb_weights(labeled, n_buckets=512)
-        return quality_score(d, weights=w, n_buckets=512,
-                             threshold_milli=0)
+        w = train_nb_weights(labeled)
+        return quality_score(d, weights=w, n_buckets=512)
     q["nb_classifier_docs"] = nb_classifier_docs
 
     def strip_paragraphs_docs(spark, sf):
@@ -2395,9 +2385,8 @@ LIMIT 10
             spark.sparkContext.defaultParallelism)
         # ONE gram explode feeds both stages (the dominant cost)
         g = explode_grams(d, ["doc_id", "lang"]).persist()
-        prof = train_lang_profiles(d, k=150, grams=g)
-        return classify_language(d, prof, k_doc=80, penalty=150,
-                                 grams=g)
+        prof = train_lang_profiles(d, grams=g)
+        return classify_language(d, prof, grams=g)
     q["langid_trained_docs"] = langid_trained_docs
 
     def langid_classify_docs(spark, sf):
@@ -2414,7 +2403,7 @@ LIMIT 10
             _LANGID_PROFILE, "lang string, gram string, rank int")
         d = _docs(spark, sf).repartition(
             spark.sparkContext.defaultParallelism)
-        return classify_language(d, prof, k_doc=80, penalty=150)
+        return classify_language(d, prof)
     q["langid_classify_docs"] = langid_classify_docs
 
     def hash_embed_docs(spark, sf):
@@ -2424,7 +2413,7 @@ LIMIT 10
         coordinate is value-checked.  Oracle: bucket and sign
         hashes restated per token, summed per (doc, coordinate)."""
         from ferenda_spark.operators.similarity import hash_embed
-        emb = hash_embed(_docs(spark, sf), dim=32)
+        emb = hash_embed(_docs(spark, sf))
         return (emb.select("id", F.posexplode("embedding")
                            .alias("j", "v"))
                 .filter(F.col("v") != 0))
@@ -2443,7 +2432,7 @@ LIMIT 10
         d = _docs(spark, sf)
         labeled = d.select((F.col("lang") == "en").alias("label"),
                            "text")
-        w = train_nb_weights(labeled, n_buckets=512)
+        w = train_nb_weights(labeled)
         scored = quality_score(d, weights=w, n_buckets=512)
         labels = d.select(F.col("doc_id").alias("id"),
                           (F.col("lang") == "en").alias("label"))
@@ -2502,7 +2491,7 @@ LIMIT 10
         d = _docs(spark, sf)
         labeled = d.select((F.col("lang") == "en").alias("label"),
                            "text")
-        w = train_nb_weights(labeled, n_buckets=512)
+        w = train_nb_weights(labeled)
         scored = quality_score(d, weights=w, n_buckets=512)
         r = threshold_for_keep_rate(scored, rate_milli=300)
         return spark.createDataFrame(
@@ -2605,9 +2594,9 @@ LIMIT 10
                                       "entirely unrelated to "
                                       "source "), did))
                  .otherwise(F.col("text")))
-        ea = hash_embed(d, dim=32).withColumnRenamed("embedding", "va")
-        eb = hash_embed(d.select("doc_id", btext.alias("text")),
-                        dim=32).withColumnRenamed("embedding", "vb")
+        ea = hash_embed(d).withColumnRenamed("embedding", "va")
+        eb = hash_embed(d.select("doc_id", btext.alias("text"))) \
+            .withColumnRenamed("embedding", "vb")
         j = ea.join(eb, "id")
         va, vb = F.col("va"), F.col("vb")
         idot = F.aggregate(F.zip_with(va, vb, lambda x, y: x * y),
@@ -2744,7 +2733,7 @@ LIMIT 10
                    F.concat(F.lit(". unique trailing note "),
                             did.cast("string"))).otherwise(F.lit("")),
         ).alias("text"))
-        return _longify(dedup.strip_boilerplate(inj, max_df=10))
+        return _longify(dedup.strip_boilerplate(inj))
     q["strip_boilerplate_docs"] = strip_boilerplate_docs
 
     def dedup_keepfirst_docs(spark, sf):
@@ -2784,7 +2773,7 @@ LIMIT 10
             F.when(F.col("doc_id") % 6 == 0,
                    F.lit(" " + _SPAN_PASSAGE)).otherwise(F.lit("")),
         ).alias("text"))
-        return _longify(dedup.duplicate_token_spans(inj, window=20))
+        return _longify(dedup.duplicate_token_spans(inj))
     q["dedup_token_spans_docs"] = dedup_token_spans_docs
 
     def quality_classifier_docs(spark, sf):
@@ -2811,8 +2800,8 @@ LIMIT 10
                                                      score_perplexity)
         docs = _docs(spark, sf).select("doc_id", "text", "lang")
         lm = fit_bigram_lm(docs.filter(F.col("lang") == "en"))
-        scored = score_perplexity(docs, lm, id_cols=["doc_id"])
-        out = perplexity_buckets(scored, n_buckets=3)
+        scored = score_perplexity(docs, lm)
+        out = perplexity_buckets(scored)
         lm["bigram"].unpersist()
         return _longify(out)
     q["lm_perplexity_docs"] = lm_perplexity_docs
@@ -3207,7 +3196,7 @@ LIMIT 10
                      d.select(v.alias("src"),
                               ((v * 2) % 60).alias("dst"))))
         lms = spark.createDataFrame([(0,), (7,)], "node long")
-        out = harmonic_centrality(edges, lms, max_depth=15)
+        out = harmonic_centrality(edges, lms)
         return out.select(F.col("node").cast("long").alias("node"),
                           "k_reached", "inv_dist_sum_micro",
                           "harmonic_micro")
@@ -3335,7 +3324,7 @@ LIMIT 10
             (did % 5).cast("string"),
             F.lit('.warc.gz", "offset": "'), offset.cast("string"),
             F.lit('", "length": "50"}')).alias("line"))
-        return fetch_plan(parse_cdxj(lines), max_gap=32)
+        return fetch_plan(parse_cdxj(lines))
     q["cdx_fetch_plan"] = cdx_fetch_plan
 
     def redirect_resolution(spark, sf):
@@ -3358,8 +3347,7 @@ LIMIT 10
                .select(F.concat(c, did.cast("string")).alias("src"),
                        F.concat(c, (F.lit(3) - did).cast("string"))
                        .alias("dst")))
-        return _longify(resolve_redirects(chain.unionByName(cyc),
-                                          rounds=4))
+        return _longify(resolve_redirects(chain.unionByName(cyc)))
     q["redirect_resolution"] = redirect_resolution
 
     def kg_host_graph(spark, sf):
@@ -3505,8 +3493,7 @@ LIMIT 10
         queries = (embs.filter(F.col("vec_id") < 10)
                    .select(F.col("vec_id").alias("query_id"),
                            "embedding"))
-        return _longify(pq_topk(embs, queries, dim=64, k=5,
-                                m=8, ksub=16))
+        return _longify(pq_topk(embs, queries, dim=64))
     q["sim_pq_topk"] = sim_pq_topk
 
     def graph_random_walks(spark, sf):
@@ -3526,7 +3513,7 @@ LIMIT 10
                .unionByName(
                    docs.select(n(did).alias("src"),
                                n(F.expr("doc_id div 3")).alias("dst"))))
-        return _longify(random_walks(adj, n_walks=1, length=3))
+        return _longify(random_walks(adj))
     q["graph_random_walks"] = graph_random_walks
 
     def curation_pipeline_docs(spark, sf):
@@ -3548,7 +3535,7 @@ LIMIT 10
                    F.concat(F.lit(". contact user"), did.cast("string"),
                             F.lit("@example.com"))).otherwise(F.lit("")),
         ).alias("text"))
-        stripped = dedup.strip_boilerplate(inj, max_df=10).select(
+        stripped = dedup.strip_boilerplate(inj).select(
             F.col("id").alias("doc_id"), F.col("clean_text"))
         redacted = textstats.redact_pii(
             stripped, text_col="clean_text").select(
@@ -3657,14 +3644,14 @@ LIMIT 10
         emb = load_table(spark, sf, "embeddings")
         qs = emb.filter(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("query_id"), "embedding")
-        return _longify(similarity.cosine_topk(emb, qs, k=5))
+        return _longify(similarity.cosine_topk(emb, qs))
     q["sim_topk_cosine"] = sim_topk_cosine
 
     def sim_lsh_topk(spark, sf):
         emb = load_table(spark, sf, "embeddings")
         qs = emb.filter(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("query_id"), "embedding")
-        return _longify(similarity.lsh_topk(emb, qs, dim=64, k=5))
+        return _longify(similarity.lsh_topk(emb, qs, dim=64))
     q["sim_lsh_topk"] = sim_lsh_topk
 
     def sim_ivf_topk(spark, sf):
@@ -3673,7 +3660,7 @@ LIMIT 10
         qs = emb.filter(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("query_id"), "embedding")
         return _longify(similarity.ivf_topk(
-            emb, qs, dim=64, k=5, n_centroids=8, nprobe=2))
+            emb, qs, dim=64))
     q["sim_ivf_topk"] = sim_ivf_topk
 
     def sim_ann_topk(spark, sf):
@@ -3706,7 +3693,7 @@ LIMIT 10
         cos ≥ 0.4 near-dup pair graph (banded-LSH blocked)."""
         emb = load_table(spark, sf, "embeddings")
         return _longify(similarity.semantic_dedup(
-            emb, dim=64, threshold=0.4))
+            emb, dim=64))
     q["sim_semantic_dedup"] = sim_semantic_dedup
 
     def sim_semantic_dedup_auto(spark, sf):
@@ -3720,7 +3707,7 @@ LIMIT 10
         emb = (load_table(spark, sf, "embeddings")
                .filter(F.col("vec_id") < 200))
         return _longify(similarity.semantic_dedup(
-            emb, dim=64, threshold=0.4, planes_per_band="auto"))
+            emb, dim=64, planes_per_band="auto"))
     q["sim_semantic_dedup_auto"] = sim_semantic_dedup_auto
 
     def text_metrics(spark, sf):
@@ -3755,8 +3742,7 @@ LIMIT 10
         per numeric column, one aggregation pass."""
         from ferenda_spark.operators import profile as prof
         return prof.numeric_quantiles(
-            _docs(spark, sf), ["doc_id", "n_chars"],
-            probs=(0.25, 0.5, 0.95))
+            _docs(spark, sf))
     q["quantiles_documents"] = quantiles_documents
 
     def check_documents(spark, sf):
@@ -3868,7 +3854,7 @@ LIMIT 10
         li = load_table(spark, sf, "lineitem").select(
             F.col("l_suppkey").alias("s_suppkey"), "l_quantity")
         s = load_table(spark, sf, "supplier").select("s_suppkey", "s_name")
-        joined = analytics.salted_join(li, s, "s_suppkey", salt=8)
+        joined = analytics.salted_join(li, s, "s_suppkey")
         return _longify(
             joined.groupBy("s_name")
             .agg(F.count(F.lit(1)).alias("n"),
@@ -3881,8 +3867,7 @@ LIMIT 10
         e = load_table(spark, sf, "events")
         return _longify(analytics.first_success(
             e.select("user_id", "event_id", "event_type", "value"),
-            key="user_id", priority_col="event_id",
-            success_col=None).withColumn(
+            key="user_id", priority_col="event_id").withColumn(
                 "value", F.round("value", 2)))
     q["first_success_events"] = first_success_events
 

@@ -74,6 +74,5 @@ def mint_uri(templates: list[UriTemplate], base: str) -> Column:
     return chain.otherwise(F.lit(None).cast("string"))
 
 
-def mint(df: DataFrame, templates: list[UriTemplate], base: str,
-         out_col: str = "uri") -> DataFrame:
-    return df.withColumn(out_col, mint_uri(templates, base))
+def mint(df: DataFrame, templates: list[UriTemplate], base: str) -> DataFrame:
+    return df.withColumn("uri", mint_uri(templates, base))

@@ -159,16 +159,18 @@ def sanitize_term(term: str, min_len: int = 2, max_len: int = 100,
     return None
 
 
-def sanitize_term_col(c: Column, min_len: int = 2, max_len: int = 100,
-                      invalid_start: str = "./:",
-                      invalid_end: str = ".,") -> Column:
+TERM_MAX_LEN = 100
+TERM_MIN_LEN = 2
+
+
+def sanitize_term_col(c: Column) -> Column:
     """Column twin of :func:`sanitize_term` — pure codegen, runs in
     the scan; NULL for rejects so a downstream dropna prunes them."""
     t = normalize_space_col(c)
     ok = ((F.length(t) > 0)
-          & F.length(t).between(min_len, max_len)
-          & ~F.substring(t, 1, 1).isin(*list(invalid_start))
-          & ~t.substr(F.length(t), F.lit(1)).isin(*list(invalid_end)))
+          & F.length(t).between(TERM_MIN_LEN, TERM_MAX_LEN)
+          & ~F.substring(t, 1, 1).isin(*list("./:"))
+          & ~t.substr(F.length(t), F.lit(1)).isin(*list(".,")))
     return F.when(ok, t)
 
 

@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ferenda_spark.functions.text import natural_sort_key_col
 
 
 # -- A1/A2: facet statistics & grouping -------------------------------------
@@ -31,14 +30,12 @@ def facet_stats(df: DataFrame, dims: list[str]) -> DataFrame:
                  mask.alias("grouping_mask")))
 
 
-def toc_pages(df: DataFrame, group_col: str, title_col: str,
-              natural: bool = False) -> DataFrame:
+def toc_pages(df: DataFrame, group_col: str, title_col: str) -> DataFrame:
     """TOC grouping (toc_pagesets/toc_select_for_pages,
     documentrepository.py:2852-2992): per group, the member titles in
-    collation order (natural numeric order when ``natural``)."""
-    key = (natural_sort_key_col(F.col(title_col)) if natural
-           else F.col(title_col))
-    return (df.select(group_col, F.col(title_col), key.alias("_k"))
+    collation order."""
+    return (df.select(group_col, F.col(title_col),
+                      F.col(title_col).alias("_k"))
             .groupBy(group_col)
             .agg(F.transform(
                 F.array_sort(F.collect_list(F.struct(F.col("_k").alias("k"),
@@ -51,14 +48,11 @@ def toc_pages(df: DataFrame, group_col: str, title_col: str,
 # -- W3/W4/W5: sort / top-k / pagination -------------------------------------
 
 def topk_per_group(df: DataFrame, group_cols: list[str],
-                   order_col: str, k: int, desc: bool = True,
-                   tiebreak_col: str | None = None) -> DataFrame:
+                   order_col: str, k: int) -> DataFrame:
     """Per-group top-k via row_number window (reference: frontpage
     latest-5, rfc.py:699-719; multi-value facet pick W6)."""
-    order = [F.desc(order_col) if desc else F.asc(order_col)]
-    if tiebreak_col:
-        order.append(F.asc(tiebreak_col))
-    w = Window.partitionBy(*group_cols).orderBy(*order)
+    w = Window.partitionBy(*group_cols).orderBy(F.desc(order_col),
+                                                F.asc("o_orderkey"))
     return (df.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
 
@@ -106,8 +100,7 @@ def ranked_topk(df: DataFrame, specs: list[tuple[str, bool]],
 
 
 def global_rank(df: DataFrame, order: list[Column],
-                rank_col: str = "rank",
-                num_partitions: int | None = None) -> DataFrame:
+                rank_col: str = "rank") -> DataFrame:
     """Full global rank via two-phase ranking — the scale-safe
     replacement for ``row_number() OVER (ORDER BY ...)`` (which moves
     the entire input through ONE partition).
@@ -123,10 +116,7 @@ def global_rank(df: DataFrame, order: list[Column],
     deterministic; range partitioning on the same keys guarantees
     partition p's rows all sort before partition p+1's.
     """
-    if num_partitions:
-        part = df.repartitionByRange(num_partitions, *order)
-    else:
-        part = df.repartitionByRange(*order)
+    part = df.repartitionByRange(*order)
     # persist the pid-stamped frame: the counts pass and the ranking
     # pass must see the SAME range bounds (repartitionByRange samples
     # its bounds — deterministic for identical lineage, but pinning
@@ -150,21 +140,21 @@ def global_rank(df: DataFrame, order: list[Column],
             .drop("_pid", "_lrank", "_off"))
 
 
-def paginate(df: DataFrame, partition_col: str, order_col: str,
-             page_size: int = 100) -> DataFrame:
+PAGE_SIZE = 100
+
+
+def paginate(df: DataFrame, partition_col: str, order_col: str) -> DataFrame:
     """Archive pagination (news_write_atom archivesize, W3/W5): page id
     = floor((rn-1)/page_size) per partition, newest first."""
     w = Window.partitionBy(partition_col).orderBy(F.desc(order_col))
     return (df.withColumn("rn", F.row_number().over(w))
-            .withColumn("page", F.floor((F.col("rn") - 1) / page_size)))
+            .withColumn("page", F.floor((F.col("rn") - 1) / PAGE_SIZE)))
 
 
 # -- A4: feedsets (per-facet feeds + the "All" union feed) -------------------
 
 def feedsets(entries: DataFrame, facet_col: str, ts_col: str,
-             feed_size: int = 25,
-             tiebreak_col: str | None = None,
-             union_feed: str = "All") -> DataFrame:
+             feed_size: int = 25) -> DataFrame:
     """Newest-first entry feeds per facet value PLUS the union feed —
     the reference's news_feedsets shape (every feedset carries its
     per-value feeds and one feed over all entries,
@@ -174,35 +164,30 @@ def feedsets(entries: DataFrame, facet_col: str, ts_col: str,
     feed), one window per feed — no driver loop over facets.
 
     Null facet values land only in the union feed (no spurious null
-    feed); a facet value colliding with ``union_feed`` fails the job
+    feed); a facet value colliding with ``"All"`` fails the job
     at execution (in-plan ``raise_error`` — no eager driver scan, so
     the operator stays lazy and streaming-safe), since its per-value
-    feed would silently merge with the union — pick a different
-    ``union_feed`` label in that corpus."""
+    feed would silently merge with the union."""
     checked = (F.when(
-        F.col(facet_col) == union_feed,
+        F.col(facet_col) == "All",
         F.raise_error(F.lit(
-            f"feedsets: facet value {union_feed!r} collides with the "
-            f"union feed label; pass union_feed=<other label>"))
+            "feedsets: facet value 'All' collides with the union "
+            "feed label"))
         .cast("string"))
         .otherwise(F.col(facet_col)))
     tagged = (entries.withColumn(
         "feed", F.explode(F.when(
-            F.col(facet_col).isNull(), F.array(F.lit(union_feed))
-        ).otherwise(F.array(checked, F.lit(union_feed))))))
-    order = [F.desc(ts_col)]
-    if tiebreak_col:
-        order.append(F.asc(tiebreak_col))
-    w = Window.partitionBy("feed").orderBy(*order)
+            F.col(facet_col).isNull(), F.array(F.lit("All"))
+        ).otherwise(F.array(checked, F.lit("All"))))))
+    w = Window.partitionBy("feed").orderBy(F.desc(ts_col),
+                                           F.asc("event_id"))
     return (tagged.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= feed_size))
 
 
 # -- J8: as-of / temporal join ----------------------------------------------
 
-def asof_join(left: DataFrame, right: DataFrame, on: str,
-              left_ts: str = "ts", right_ts: str = "ts",
-              right_cols: list[str] | None = None) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """For each left row, the latest right row with the same key and
     right_ts ≤ left_ts (TemporalElement.in_effect / consolidated-
     version semantics, SURVEY J8).
@@ -211,16 +196,15 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     crossJoin): tag sides, sort by time within key, carry the last
     right value forward onto left rows.
     """
-    rcols = right_cols or [c for c in right.columns
-                           if c not in (on, right_ts)]
+    rcols = ["event_id"]
     l_tag = left.select(
-        F.col(on), F.col(left_ts).alias("_ts"), F.lit(1).alias("_side"),
+        F.col(on), F.col("ts").alias("_ts"), F.lit(1).alias("_side"),
         F.struct(*[F.col(c) for c in left.columns]).alias("_l"),
         F.lit(None).cast(
             right.select(F.struct(*[F.col(c) for c in rcols])
                          .alias("s")).schema["s"].dataType).alias("_r"))
     r_tag = right.select(
-        F.col(on), F.col(right_ts).alias("_ts"), F.lit(0).alias("_side"),
+        F.col(on), F.col("ts").alias("_ts"), F.lit(0).alias("_side"),
         F.lit(None).cast(
             left.select(F.struct(*[F.col(c) for c in left.columns])
                         .alias("s")).schema["s"].dataType).alias("_l"),
@@ -240,27 +224,27 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
 
 # -- W: sessionization ------------------------------------------------------
 
-def sessionize(events: DataFrame, user_col: str = "user_id",
-               ts_col: str = "ts", gap_minutes: int = 30,
-               tiebreak_col: str | None = "event_id") -> DataFrame:
+SESSION_GAP_MINUTES = 30
+
+
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessions: a new session starts when the time since
     the user's previous event exceeds the gap. lag + running sum —
     two window passes over one shuffle on user.
 
-    ``tiebreak_col`` (when present in the frame) makes session ids
-    deterministic under tied timestamps; pass None to order by time
-    alone."""
-    order = [F.asc(ts_col)]
-    if tiebreak_col and tiebreak_col in events.columns:
-        order.append(F.asc(tiebreak_col))
-    w = Window.partitionBy(user_col).orderBy(*order)
-    gap_s = gap_minutes * 60
+    ``event_id`` (when present in the frame) makes session ids
+    deterministic under tied timestamps."""
+    order = [F.asc("ts")]
+    if "event_id" in events.columns:
+        order.append(F.asc("event_id"))
+    w = Window.partitionBy("user_id").orderBy(*order)
+    gap_s = SESSION_GAP_MINUTES * 60
     flagged = events.withColumn(
         "_new",
         F.when(
-            (F.unix_timestamp(F.col(ts_col))
-             - F.unix_timestamp(F.lag(ts_col).over(w))) > gap_s, 1)
-        .when(F.lag(ts_col).over(w).isNull(), 1)
+            (F.unix_timestamp(F.col("ts"))
+             - F.unix_timestamp(F.lag("ts").over(w))) > gap_s, 1)
+        .when(F.lag("ts").over(w).isNull(), 1)
         .otherwise(0))
     return flagged.withColumn(
         "session_id",
@@ -379,11 +363,11 @@ def _closure_fixpoint(base: DataFrame) -> DataFrame:
 
 # -- J5: keyword hub inversion ----------------------------------------------
 
-def keyword_inversion(edges: DataFrame, pred: str = "dcterms:subject"
+def keyword_inversion(edges: DataFrame
                       ) -> DataFrame:
     """subject-term → sorted member docs (keyword.py:107-160): groupBy
     the object of subject edges, collect + sort the citing subjects."""
-    return (edges.filter(F.col("pred") == pred)
+    return (edges.filter(F.col("pred") == "dcterms:subject")
             .groupBy(F.col("obj").alias("term"))
             .agg(F.array_sort(F.collect_set("subj")).alias("members"),
                  F.countDistinct("subj").alias("n_members")))
@@ -391,14 +375,13 @@ def keyword_inversion(edges: DataFrame, pred: str = "dcterms:subject"
 
 # -- P6: dependency-edge filter --------------------------------------------
 
-def dependency_edges(edges: DataFrame,
-                     skip_preds: tuple = ("rdf:type", "owl:sameAs")
+def dependency_edges(edges: DataFrame
                      ) -> DataFrame:
     """Outbound dependency edges: drop structural predicates and
     objects that are subjects within the same graph
     (relate_dependencies, documentrepository.py:2026-2034)."""
     subjects = edges.select(F.col("subj").alias("obj")).distinct()
-    return (edges.filter(~F.col("pred").isin(*skip_preds)
+    return (edges.filter(~F.col("pred").isin("rdf:type", "owl:sameAs")
                          & ~F.col("obj_is_literal"))
             .join(subjects, "obj", "left_anti")
             .select("subj", "pred", "obj"))
@@ -406,48 +389,40 @@ def dependency_edges(edges: DataFrame,
 
 # -- skew: salted join helper ----------------------------------------------
 
-def salted_join(big: DataFrame, dim: DataFrame, key: str,
-                salt: int = 8, how: str = "inner") -> DataFrame:
-    """Equi-join with explicit key salting for skewed keys: the big
-    side gets a random-free deterministic salt (hash of all columns
-    mod ``salt``), the dim side is replicated ``salt``× via explode —
-    turning one hot-key partition into ``salt`` even ones. Use when a
-    specific hot-key list is known; otherwise AQE skew-join handles
-    moderate skew. Result is identical to a plain join (tested).
+SALT_BUCKETS = 8
 
-    Only inner/left are supported: the dim side is replicated
-    ``salt``x, so right/full-outer would emit ``salt`` duplicate rows
-    for unmatched dim keys."""
-    if how not in ("inner", "left", "leftouter", "left_outer"):
-        raise ValueError(
-            f"salted_join supports inner/left joins only, got {how!r}")
-    big_cols = [c for c in big.columns]
-    b = big.withColumn(
-        "_salt", F.pmod(F.hash(*[F.col(c) for c in big_cols]), F.lit(salt)))
+
+def salted_join(big: DataFrame, dim: DataFrame, key: str) -> DataFrame:
+    """Inner equi-join with explicit key salting for skewed keys: the
+    big side gets a random-free deterministic salt (hash of all
+    columns mod ``SALT_BUCKETS``), the dim side is replicated
+    ``SALT_BUCKETS``× via explode — turning one hot-key partition
+    into ``SALT_BUCKETS`` even ones. Use when a specific hot-key list
+    is known; otherwise AQE skew-join handles moderate skew. Result
+    is identical to a plain join (tested)."""
+    b = big.withColumn("_salt", F.pmod(
+        F.hash(*[F.col(c) for c in big.columns]), F.lit(SALT_BUCKETS)))
     d = (dim.withColumn("_salt", F.explode(
-        F.sequence(F.lit(0), F.lit(salt - 1)))))
-    out = b.join(d, [key, "_salt"], how)
+        F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)))))
+    out = b.join(d, [key, "_salt"], "inner")
     return out.drop("_salt")
 
 
 # -- J6: composite-repo coalesce --------------------------------------------
 
-def first_success(df: DataFrame, key: str, priority_col: str,
-                  success_col: str | None = None) -> DataFrame:
+def first_success(df: DataFrame, key: str, priority_col: str) -> DataFrame:
     """Per key, the row from the highest-priority source that
     succeeded — the composite-repository semantics (subrepos tried in
     declared order until one parses, compositerepository.py:57-130) as
     one window, not a driver loop."""
-    base = df if success_col is None else df.filter(F.col(success_col))
     w = Window.partitionBy(key).orderBy(F.asc(priority_col))
-    return (base.withColumn("_rn", F.row_number().over(w))
+    return (df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
 # -- P4: facet projection ---------------------------------------------------
 
-def facet_projection(edges: DataFrame, preds: list[str],
-                     type_filter: list[str] | None = None) -> DataFrame:
+def facet_projection(edges: DataFrame, preds: list[str]) -> DataFrame:
     """Long triples → one wide row per subject with a column per
     predicate (the reference's facet SELECT with one OPTIONAL block
     per facet, facet_query documentrepository.py:2290-2380).
@@ -455,7 +430,4 @@ def facet_projection(edges: DataFrame, preds: list[str],
     warns + picks one, _relate_fulltext_value:2176-2185)."""
     aggs = [F.max(F.when(F.col("pred") == p, F.col("obj")))
             .alias(p.split(":")[-1]) for p in preds]
-    wide = edges.groupBy(F.col("subj").alias("uri")).agg(*aggs)
-    if type_filter:
-        wide = wide.filter(F.col("type").isin(*type_filter))
-    return wide
+    return edges.groupBy(F.col("subj").alias("uri")).agg(*aggs)

@@ -81,15 +81,14 @@ def parse_anchors(html_bytes: bytes) -> list[tuple[str, str]]:
     return p.pairs
 
 
-def anchor_pairs(pages: DataFrame, url_col: str = "url",
-                 html_col: str = "html") -> DataFrame:
+def anchor_pairs(pages: DataFrame) -> DataFrame:
     """(src_url, href, anchor) — one row per hyperlink on each page."""
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
         for pdf in batches:
             src, hrefs, anchors = [], [], []
-            for u, h in zip(pdf[url_col], pdf[html_col]):
+            for u, h in zip(pdf["url"], pdf["html"]):
                 for href, anchor in parse_anchors(h):
                     src.append(u)
                     hrefs.append(href)
@@ -99,21 +98,20 @@ def anchor_pairs(pages: DataFrame, url_col: str = "url",
                  "href": pd.Series(hrefs, dtype="object"),
                  "anchor": pd.Series(anchors, dtype="object")})
 
-    return (pages.select(url_col, html_col)
+    return (pages.select("url", "html")
             .mapInPandas(run, ANCHOR_SCHEMA))
 
 
-def resolve_hrefs(pairs: DataFrame, src_col: str = "src_url",
-                  href_col: str = "href") -> DataFrame:
+def resolve_hrefs(pairs: DataFrame) -> DataFrame:
     """Resolve root-relative hrefs against the source origin
     (``/path`` → ``scheme://host/path``); absolute hrefs and
     fragments pass through.  Pure column expressions — stays in the
     scan."""
-    origin = F.regexp_extract(F.col(src_col), r"^(https?://[^/]+)", 1)
+    origin = F.regexp_extract(F.col("src_url"), r"^(https?://[^/]+)", 1)
     resolved = F.when(
-        F.col(href_col).startswith("/") & (origin != ""),
-        F.concat(origin, F.col(href_col))).otherwise(F.col(href_col))
-    return pairs.withColumn(href_col, resolved)
+        F.col("href").startswith("/") & (origin != ""),
+        F.concat(origin, F.col("href"))).otherwise(F.col("href"))
+    return pairs.withColumn("href", resolved)
 
 
 def anchor_profile(pairs: DataFrame) -> DataFrame:

@@ -74,9 +74,11 @@ def _zone(boxes: DataFrame, pos_col: str, ascending: bool,
             .agg((agg + F.lit(adjust)).alias(out)))
 
 
-def margin_metrics(boxes: DataFrame,
-                   header_threshold: float = 0.002,
-                   footer_threshold: float = 0.002) -> DataFrame:
+FOOTER_THRESHOLD = 0.002
+HEADER_THRESHOLD = 0.002
+
+
+def margin_metrics(boxes: DataFrame) -> DataFrame:
     """Per-doc layout metrics: left/right margin (char-weighted mode
     on the correct half of the page), header/footer zone edges,
     page dimensions."""
@@ -88,8 +90,8 @@ def margin_metrics(boxes: DataFrame,
                         "leftmargin")
     right = _mode_margin(boxes, "right", F.col("right") > mid, False,
                          "rightmargin")
-    top = _zone(boxes, "top", True, header_threshold, -1, "topmargin")
-    bottom = _zone(boxes, "bottom", False, footer_threshold, +1,
+    top = _zone(boxes, "top", True, HEADER_THRESHOLD, -1, "topmargin")
+    bottom = _zone(boxes, "bottom", False, FOOTER_THRESHOLD, +1,
                    "bottommargin")
     return (dims.join(left, "doc_id", "left")
             .join(right, "doc_id", "left")
@@ -107,14 +109,16 @@ def _weight(family) -> F.Column:
             .otherwise(F.lit(0)))
 
 
-def style_metrics(boxes: DataFrame,
-                  significance: float = 0.005) -> DataFrame:
+SIGNIFICANCE = 0.005
+
+
+def style_metrics(boxes: DataFrame) -> DataFrame:
     """Per-doc style hierarchy as long rows
     ``(doc_id, level, font_family, font_size)`` with level ∈
     default | h1 | h2 | h3 | footnoteref.
 
     default = char-weighted most common style; h1..h3 = styles with
-    fontsize_key strictly above default's and ≥ ``significance`` of
+    fontsize_key strictly above default's and ≥ ``SIGNIFICANCE`` of
     the doc's chars, by descending (size, weight); footnoteref =
     significant same-family style at ≤ half the default size
     (smallest such).
@@ -139,7 +143,7 @@ def style_metrics(boxes: DataFrame,
          .withColumn("_dfam", F.first("font_family").over(full))
          .withColumn("_dsize", F.first("font_size").over(full))
          .withColumn("_dwt", F.first("_wt").over(full)))
-    sig = F.col("w") > significance * F.col("_tot")
+    sig = F.col("w") > SIGNIFICANCE * F.col("_tot")
     above = (F.col("font_size") > F.col("_dsize")) | (
         (F.col("font_size") == F.col("_dsize"))
         & (F.col("_wt") > F.col("_dwt")))

@@ -99,11 +99,12 @@ def _broadcast_bucket_sum(weights) -> "callable":
     return bucket_sum
 
 
-def quality_score(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", salt: str = "qw-v1",
-                  weights: list[int] | None = None,
-                  n_buckets: int = 4096,
-                  threshold_milli: int = 0) -> DataFrame:
+QW_SALT = "qw-v1"
+QUALITY_THRESHOLD_MILLI = 0
+
+
+def quality_score(docs: DataFrame, weights: list[int] | None = None,
+                  n_buckets: int = 4096) -> DataFrame:
     """(id, n_tokens, score_sum_milli, keep) — linear quality score
     over hashed token features, scan-side.
 
@@ -111,10 +112,10 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     as ``score_sum·1000 ≥ threshold·n_tokens`` (pure integer
     multiplication — engine-exact).  Units, precisely: score_sum is
     milli per token, so the comparison puts the mean in MICRO-units
-    — ``threshold_milli=500_000`` means "mean token weight ≥ 0.5"
-    (the historical parameter name understates the scale by 1000;
-    every gate/oracle states the same formula, so the contract is
-    the formula).  Empty documents score 0 and keep iff the
+    — ``QUALITY_THRESHOLD_MILLI = 500_000`` means "mean token weight
+    ≥ 0.5" (the historical name understates the scale by 1000; every
+    gate/oracle states the same formula, so the contract is the
+    formula).  Empty documents score 0 and keep iff the
     threshold is ≤ 0.
 
     Trained ``weights`` of ≤ ``_LITERAL_MAX_BUCKETS`` entries inline
@@ -122,36 +123,38 @@ def quality_score(docs: DataFrame, text_col: str = "text",
     broadcast-variable pandas-UDF path (same results, plan stays
     bucket-count-independent).
     """
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     if weights is not None and n_buckets > _LITERAL_MAX_BUCKETS:
         if len(weights) != n_buckets:
             raise ValueError(
                 f"weights must have n_buckets={n_buckets} entries")
         idx = F.transform(toks,
-                          lambda t: token_bucket(t, salt, n_buckets))
+                          lambda t: token_bucket(t, QW_SALT, n_buckets))
         score = _broadcast_bucket_sum(weights)(idx)
     else:
-        w = lambda t: token_weight_milli(t, salt, weights, n_buckets)  # noqa: E731
+        w = lambda t: token_weight_milli(  # noqa: E731
+            t, QW_SALT, weights, n_buckets)
         score = F.aggregate(toks, F.lit(0).cast("long"),
                             lambda acc, t: acc + w(t))
     base = docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(toks).alias("n_tokens"),
         score.alias("score_sum_milli"))
     # the n==0 case is explicit: sum·1000 ≥ thr·0 would hold for EVERY
     # threshold, letting empty junk docs through a positive-threshold
     # gate — the documented rule is keep iff the threshold is ≤ 0
     keep = F.when(F.col("n_tokens") == 0,
-                  F.lit(int(threshold_milli) <= 0)) \
+                  F.lit(QUALITY_THRESHOLD_MILLI <= 0)) \
         .otherwise(F.col("score_sum_milli") * 1000
-                   >= F.lit(int(threshold_milli)).cast("long")
+                   >= F.lit(QUALITY_THRESHOLD_MILLI).cast("long")
                    * F.col("n_tokens").cast("long"))
     return base.withColumn("keep", keep)
 
 
-def train_nb_weights(labeled: DataFrame, label_col: str = "label",
-                     text_col: str = "text", salt: str = "qw-v1",
-                     n_buckets: int = 4096) -> list[int]:
+NB_BUCKETS = 512
+
+
+def train_nb_weights(labeled: DataFrame) -> list[int]:
     """TRAIN the quality classifier: multinomial Naive Bayes
     log-odds per hashed bucket, from a labeled corpus (CCNet's
     recipe — label wiki-like seeds positive, raw crawl negative,
@@ -159,8 +162,8 @@ def train_nb_weights(labeled: DataFrame, label_col: str = "label",
 
     Distributed shape: one explode of the token arrays into ONE
     map-side-combinable ``groupBy(bucket)`` — the shuffle moves at
-    most ``n_buckets`` aggregated rows per partition, never the
-    corpus — then a bounded ``collect()`` of ≤ ``n_buckets`` count
+    most ``NB_BUCKETS`` aggregated rows per partition, never the
+    corpus — then a bounded ``collect()`` of ≤ ``NB_BUCKETS`` count
     rows (the model artifact has to reach the driver anyway; at
     fastText-scale 2^21 buckets that is a ~16 MB table, and scoring
     ships it back per-executor through quality_score's broadcast
@@ -178,12 +181,12 @@ def train_nb_weights(labeled: DataFrame, label_col: str = "label",
     a single-class corpus (nothing to contrast)."""
     import math
 
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     ex = labeled.select(
-        F.col(label_col).cast("boolean").alias("y"),
+        F.col("label").cast("boolean").alias("y"),
         F.explode(toks).alias("t"))
     counts = (ex.select(
-        "y", token_bucket(F.col("t"), salt, n_buckets).alias("b"))
+        "y", token_bucket(F.col("t"), QW_SALT, NB_BUCKETS).alias("b"))
         .groupBy("b")
         .agg(F.sum(F.when(F.col("y"), 1).otherwise(0)).alias("pos"),
              F.sum(F.when(~F.col("y"), 1).otherwise(0)).alias("neg")))
@@ -194,9 +197,9 @@ def train_nb_weights(labeled: DataFrame, label_col: str = "label",
         raise ValueError(
             f"train_nb_weights: single-class corpus (pos={pos_tot}, "
             f"neg={neg_tot}) — both labels must have tokens")
-    base = math.log((neg_tot + n_buckets) / (pos_tot + n_buckets))
+    base = math.log((neg_tot + NB_BUCKETS) / (pos_tot + NB_BUCKETS))
     fill = math.floor(1000 * base + 0.5)
-    weights = [fill] * n_buckets
+    weights = [fill] * NB_BUCKETS
     for r in rows:
         val = (math.log(r["pos"] + 1) - math.log(r["neg"] + 1) + base)
         weights[r["b"]] = math.floor(1000 * val + 0.5)
@@ -204,8 +207,7 @@ def train_nb_weights(labeled: DataFrame, label_col: str = "label",
 
 
 def score_eval(scored: DataFrame, labels: DataFrame,
-               thresholds: list[int],
-               id_col: str = "id", label_col: str = "label"
+               thresholds: list[int]
                ) -> DataFrame:
     """Threshold-sweep evaluation of a quality scorer: for each
     candidate ``threshold_milli`` apply :func:`quality_score`'s keep
@@ -225,9 +227,9 @@ def score_eval(scored: DataFrame, labels: DataFrame,
     hitting the target keep-rate or precision."""
     if not thresholds:
         raise ValueError("score_eval: empty threshold list")
-    j = scored.join(labels.select(F.col(id_col),
-                                  F.col(label_col).cast("boolean")
-                                  .alias("__y")), id_col)
+    j = scored.join(labels.select(F.col("id"),
+                                  F.col("label").cast("boolean")
+                                  .alias("__y")), "id")
     thr = F.explode(F.array(*[F.lit(int(t)) for t in thresholds]))
     e = j.select("n_tokens", "score_sum_milli", "__y",
                  thr.alias("threshold_milli"))

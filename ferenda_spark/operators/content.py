@@ -164,8 +164,10 @@ def extract_content(url: str, html: str, min_block_chars: int = 25,
             "total_chars": parser.total_chars}
 
 
-def main_content(pages: DataFrame, url_col: str = "url",
-                 html_col: str = "html", min_block_chars: int = 25,
+MIN_BLOCK_CHARS = 25
+
+
+def main_content(pages: DataFrame,
                  max_link_density: float = 1 / 3) -> DataFrame:
     """pages(url, html) → CONTENT_SCHEMA — one stateless Arrow
     pass, no shuffle."""
@@ -175,12 +177,12 @@ def main_content(pages: DataFrame, url_col: str = "url",
                 "content_chars", "total_chars"]
         for pdf in it:
             rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf["html"]):
                 if isinstance(html, (bytes, bytearray, memoryview)):
                     html = bytes(html).decode("utf-8", errors="replace")
                 rows.append(extract_content(
-                    url, html, min_block_chars, max_link_density))
+                    url, html, MIN_BLOCK_CHARS, max_link_density))
             yield pd.DataFrame(rows, columns=cols)
 
-    return pages.select(url_col, html_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         batches, schema=CONTENT_SCHEMA)

@@ -26,18 +26,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def crawl_frontier(links: DataFrame, seeds: DataFrame,
-                   max_depth: int = 3,
-                   url_col: str = "url") -> DataFrame:
+FRONTIER_MAX_DEPTH = 3
+
+
+def crawl_frontier(links: DataFrame, seeds: DataFrame) -> DataFrame:
     """BFS reachability over ``links(src, dst)`` from ``seeds``:
     (url, depth) rows, depth = min hops from any seed, bounded by
-    ``max_depth``. Stops early when a round discovers nothing."""
+    ``FRONTIER_MAX_DEPTH``. Stops early when a round discovers nothing."""
     links = links.select("src", "dst").persist()
-    visited = (seeds.select(F.col(url_col).alias("url")).distinct()
+    visited = (seeds.select(F.col("url")).distinct()
                .withColumn("depth", F.lit(0)).persist())
     frontier = visited.select("url")
     prev_frontier = None  # the persisted nxt backing `frontier`
-    for depth in range(1, max_depth + 1):
+    for depth in range(1, FRONTIER_MAX_DEPTH + 1):
         nxt = (frontier.join(links, frontier["url"] == links["src"])
                .select(F.col("dst").alias("url")).distinct()
                .join(visited, "url", "left_anti")
@@ -65,9 +66,7 @@ def crawl_frontier(links: DataFrame, seeds: DataFrame,
 
 def schedule_fetches(frontier: DataFrame, delays: DataFrame = None,
                      default_delay_millis: int = 1000,
-                     url_col: str = "url",
-                     max_per_host: int = None,
-                     broadcast_delays: bool = True) -> DataFrame:
+                     max_per_host: int = None) -> DataFrame:
     """Politeness scheduling: admitted frontier urls → per-host fetch
     slots.  Adds ``host``, ``fetch_seq`` (1-based position in the
     host's queue, deterministic url order) and ``not_before_millis``
@@ -87,26 +86,23 @@ def schedule_fetches(frontier: DataFrame, delays: DataFrame = None,
     host — inherently so, politeness is a per-host total order; the
     parallelism is across the ~10^8 hosts of a web corpus, and
     ``max_per_host`` bounds the skew of any one partition.  The
-    delays side is one short row per domain: broadcast by default,
-    ``broadcast_delays=False`` lets AQE plan the join when the domain
-    table is itself huge.  No other shuffle."""
+    delays side is one short row per domain and is broadcast.  No
+    other shuffle."""
     from pyspark.sql import Window
 
     from ferenda_spark.functions.web import url_host_col
 
-    out = frontier.withColumn("host", url_host_col(F.col(url_col)))
+    out = frontier.withColumn("host", url_host_col(F.col("url")))
     if delays is not None:
         d = delays.select(F.col("domain").alias("host"),
                           "crawl_delay_millis")
-        if broadcast_delays:
-            d = F.broadcast(d)
-        out = out.join(d, "host", "left")
+        out = out.join(F.broadcast(d), "host", "left")
     else:
         out = out.withColumn("crawl_delay_millis",
                              F.lit(None).cast("long"))
     delay = F.coalesce(F.col("crawl_delay_millis"),
                        F.lit(int(default_delay_millis)))
-    w = Window.partitionBy("host").orderBy(url_col)
+    w = Window.partitionBy("host").orderBy("url")
     out = (out.withColumn("fetch_seq", F.row_number().over(w))
            .withColumn("not_before_millis",
                        (F.col("fetch_seq") - 1).cast("long") * delay)
@@ -116,8 +112,10 @@ def schedule_fetches(frontier: DataFrame, delays: DataFrame = None,
     return out
 
 
-def resolve_redirects(redirects: DataFrame,
-                      rounds: int = 4) -> DataFrame:
+REDIRECT_ROUNDS = 4
+
+
+def resolve_redirects(redirects: DataFrame) -> DataFrame:
     """HTTP redirect chains → final-url map: ``redirects(src, dst)``
     (one 3xx Location edge per captured source url) becomes
     ``(src, final_url, hops, resolved)`` for every redirect source.
@@ -129,9 +127,10 @@ def resolve_redirects(redirects: DataFrame,
     terminal url so that identity joins (dedup, linking, host graph)
     see one canonical url per document.
 
-    Pointer doubling — ``rounds`` iterations of ``m := m ∘ m`` — so a
-    chain of length up to ``2**rounds`` resolves in ``rounds``
-    self-joins, not ``2**rounds`` sequential ones (the same
+    Pointer doubling — ``REDIRECT_ROUNDS`` iterations of
+    ``m := m ∘ m`` — so a chain of length up to ``2**REDIRECT_ROUNDS``
+    resolves in ``REDIRECT_ROUNDS``
+    self-joins, not ``2**REDIRECT_ROUNDS`` sequential ones (the same
     O(log diameter) idiom as dedup.components).  Each round is one
     shuffle join on the composed key; the map is persisted per round
     and the parent cache dropped.
@@ -140,7 +139,7 @@ def resolve_redirects(redirects: DataFrame,
     every source follows exactly ``min(chain_length, 2**rounds)``
     hops; ``resolved`` is true iff the reached url has no outgoing
     redirect itself.  Cycles (a→b→a) and chains deeper than
-    ``2**rounds`` therefore come back ``resolved = false`` carrying
+    ``2**REDIRECT_ROUNDS`` therefore come back ``resolved = false`` carrying
     the partially-followed target — a loud, bounded answer, never an
     unterminated loop.  Conflicting captures for one source collapse
     deterministically to ``min(dst)`` first.
@@ -153,7 +152,7 @@ def resolve_redirects(redirects: DataFrame,
          .groupBy("src").agg(F.min("dst").alias("dst"))
          .withColumn("hops", F.lit(1).cast("long"))
          .localCheckpoint())
-    for _ in range(int(rounds)):
+    for _ in range(REDIRECT_ROUNDS):
         a, b = m.alias("a"), m.alias("b")
         m = (a.join(b, F.col("a.dst") == F.col("b.src"), "left")
              .select(F.col("a.src").alias("src"),
@@ -172,8 +171,7 @@ def resolve_redirects(redirects: DataFrame,
                     .alias("resolved")))
 
 
-def host_graph(links: DataFrame, include_self: bool = False,
-               approximate: bool = False) -> DataFrame:
+def host_graph(links: DataFrame) -> DataFrame:
     """Page-level ``links(src, dst)`` → the host-level weighted
     webgraph ``(src_host, dst_host, n_links, n_src_pages)`` — the
     Common-Crawl host-graph projection that host ranking, spam
@@ -181,11 +179,9 @@ def host_graph(links: DataFrame, include_self: bool = False,
     pure codegen in the scan (functions/web.url_host_col); the
     projection is ONE groupBy shuffle with map-side partial
     aggregation, so hub hosts (10^8-page domains) combine before the
-    exchange.  ``n_src_pages`` is an exact distinct at gate scale;
-    ``approximate=True`` switches to HLL ``approx_count_distinct``
-    for the 10^12-edge table (the voidstats.py convention).
-    Self-edges (intra-host links, the overwhelming majority of the
-    web) are dropped unless ``include_self``."""
+    exchange.  ``n_src_pages`` is an exact distinct.  Self-edges
+    (intra-host links, the overwhelming majority of the web) are
+    dropped."""
     from ferenda_spark.functions.web import url_host_col
 
     h = links.select(
@@ -194,13 +190,10 @@ def host_graph(links: DataFrame, include_self: bool = False,
         F.col("src"))
     h = h.filter(F.col("src_host").isNotNull()
                  & F.col("dst_host").isNotNull())
-    if not include_self:
-        h = h.filter(F.col("src_host") != F.col("dst_host"))
-    pages = (F.approx_count_distinct("src") if approximate
-             else F.countDistinct("src"))
+    h = h.filter(F.col("src_host") != F.col("dst_host"))
     return (h.groupBy("src_host", "dst_host")
             .agg(F.count(F.lit(1)).alias("n_links"),
-                 pages.alias("n_src_pages")))
+                 F.countDistinct("src").alias("n_src_pages")))
 
 
 def snapshot_churn(prev: DataFrame, curr: DataFrame) -> DataFrame:
@@ -261,8 +254,10 @@ def host_churn(churn: DataFrame) -> DataFrame:
                "(n_new + n_gone + n_modified + n_unchanged) AS BIGINT)"))
 
 
+MIN_REVISIT_S = 3600
+
+
 def revisit_schedule(profile: DataFrame, interval_s: int,
-                     min_interval_s: int = 3600,
                      max_interval_s: int = 30 * 86400) -> DataFrame:
     """Per-host recrawl intervals from a :func:`host_churn` profile:
     ``(host, n_pages, lambda_micro, revisit_s)``.
@@ -302,5 +297,5 @@ def revisit_schedule(profile: DataFrame, interval_s: int,
                     .alias("lambda_micro"),
                     F.floor(F.greatest(
                         F.least(raw, F.lit(float(max_interval_s))),
-                        F.lit(float(min_interval_s))))
+                        F.lit(float(MIN_REVISIT_S))))
                     .cast("long").alias("revisit_s")))

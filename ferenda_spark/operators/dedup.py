@@ -92,10 +92,11 @@ def df_cap_shingles(sh: DataFrame, max_df: int) -> DataFrame:
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-def jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", n: int = 3,
-                  threshold: float = 0.8,
-                  max_df: int | None = 1000) -> DataFrame:
+JACCARD_THRESHOLD = 0.8
+SHINGLE_N = 3
+
+
+def jaccard_pairs(docs: DataFrame, max_df: int | None = 1000) -> DataFrame:
     """All id pairs (a < b) with shingle-Jaccard ≥ threshold.
 
     |A∩B| via shingle equi-join; |A∪B| = |A|+|B|-|A∩B|. The join key
@@ -110,7 +111,7 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
     lsh_candidate_pairs for the banded variant that avoids the
     equi-join entirely.
     """
-    sh = shingle_rows(docs, text_col, id_col, n)
+    sh = shingle_rows(docs, "text", "doc_id", SHINGLE_N)
     if max_df is not None:
         sh = df_cap_shingles(sh, max_df)
     # pre-shuffle on the join key BEFORE anything consumes sh: the
@@ -133,14 +134,15 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
                         F.round(F.col("n_inter")
                                 / (F.col("sz_a") + F.col("sz_b")
                                    - F.col("n_inter")), 4))
-            .filter(F.col("jaccard") >= threshold)
+            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
             .select("id_a", "id_b", "jaccard"))
 
 
-def containment_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", n: int = 3,
-                      threshold: float = 0.8,
-                      max_df: int | None = 1000) -> DataFrame:
+CONTAINMENT_THRESHOLD = 0.7
+CONTAINMENT_MAX_DF = 1000
+
+
+def containment_pairs(docs: DataFrame) -> DataFrame:
     """Directed near-containment: ``(id_part, id_whole,
     containment)`` for every ordered pair with ``|part ∩ whole| /
     |part| ≥ threshold`` — the ASYMMETRIC overlap Jaccard misses: a
@@ -153,13 +155,13 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     One shingle equi-join per UNORDERED pair (``a < b``) — both
     directions are then emitted from the same intersection row, so
     asymmetry costs nothing extra.  Same plan shape and hot-shingle
-    ``max_df`` skew guard as :func:`jaccard_pairs` (the cap bounds a
-    boilerplate shingle's m² join blow-up; sizes recomputed over the
+    ``CONTAINMENT_MAX_DF`` skew guard as :func:`jaccard_pairs` (the
+    cap bounds a boilerplate shingle's m² join blow-up; sizes recomputed over the
     capped universe keep containment a true set ratio there).
     """
-    sh = shingle_rows(docs, text_col, id_col, n)
-    if max_df is not None:
-        sh = df_cap_shingles(sh, max_df)
+    sh = shingle_rows(docs, "text", "doc_id", SHINGLE_N)
+    if CONTAINMENT_MAX_DF is not None:
+        sh = df_cap_shingles(sh, CONTAINMENT_MAX_DF)
     sh = sh.repartition("shingle")
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
@@ -181,7 +183,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
                       F.round(F.col("n_inter") / F.col("sz_b"), 4)
                       .alias("containment"))
     return (fwd.unionByName(rev)
-            .filter(F.col("containment") >= threshold))
+            .filter(F.col("containment") >= CONTAINMENT_THRESHOLD))
 
 
 MINHASH_P = 2147483647  # Mersenne prime 2^31-1: a*h stays < 2^63
@@ -264,13 +266,15 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
             .distinct())
 
 
+BANDS = 4
+
+
 def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", k: int = 16,
-                        bands: int = 4, n: int = 3,
                         threshold: float = 0.8) -> DataFrame:
     """LSH candidates verified with exact shingle-Jaccard ≥ threshold."""
-    cand = lsh_candidate_pairs(docs, text_col, id_col, k, bands, n)
-    sh = shingle_rows(docs, text_col, id_col, n)
+    cand = lsh_candidate_pairs(docs, text_col, id_col, k, BANDS, SHINGLE_N)
+    sh = shingle_rows(docs, text_col, id_col, SHINGLE_N)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (cand
              .join(sh.withColumnRenamed("id", "id_a"), "id_a")
@@ -291,10 +295,10 @@ def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "jaccard"))
 
 
-def dedup_against_index(batch: DataFrame, index: DataFrame,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        k: int = 16, bands: int = 4, n: int = 3,
-                        self_dedup: bool = True) -> DataFrame:
+INDEX_K = 8
+
+
+def dedup_against_index(batch: DataFrame, index: DataFrame) -> DataFrame:
     """Survivors of a NEW batch against a persisted historical MinHash
     band index — the daily-crawl shape: the history is enormous and
     its signatures are already computed; only the fresh batch is new.
@@ -324,7 +328,7 @@ def dedup_against_index(batch: DataFrame, index: DataFrame,
     callers wanting it can join rejected ids back to the store and
     apply :func:`minhash_dedup_pairs` semantics.
     """
-    bb = minhash_bands(batch, text_col, id_col, k, bands, n)
+    bb = minhash_bands(batch, "text", "doc_id", INDEX_K, BANDS, SHINGLE_N)
     bkeys = bb.select("band", "band_key").distinct()
     # historical collisions, at band-key granularity (small: <= the
     # batch's own key count)
@@ -334,18 +338,16 @@ def dedup_against_index(batch: DataFrame, index: DataFrame,
     dead_hist = (bb.join(F.broadcast(hits), ["band", "band_key"],
                          "leftsemi")
                  .select("id").distinct())
-    kept = batch.join(dead_hist.withColumnRenamed("id", id_col),
-                      id_col, "left_anti")
-    if self_dedup:
-        kb = bb.join(dead_hist, "id", "left_anti")
-        winners = (kb.groupBy("band", "band_key")
-                   .agg(F.min("id").alias("w")))
-        losers = (kb.join(winners, ["band", "band_key"])
-                  .filter(F.col("id") > F.col("w"))
-                  .select("id").distinct())
-        kept = kept.join(losers.withColumnRenamed("id", id_col),
-                         id_col, "left_anti")
-    return kept
+    kept = batch.join(dead_hist.withColumnRenamed("id", "doc_id"),
+                      "doc_id", "left_anti")
+    kb = bb.join(dead_hist, "id", "left_anti")
+    winners = (kb.groupBy("band", "band_key")
+               .agg(F.min("id").alias("w")))
+    losers = (kb.join(winners, ["band", "band_key"])
+              .filter(F.col("id") > F.col("w"))
+              .select("id").distinct())
+    return kept.join(losers.withColumnRenamed("id", "doc_id"),
+                     "doc_id", "left_anti")
 
 
 def simhash(text: Column, bits: int = 32) -> Column:
@@ -388,20 +390,21 @@ def simhash(text: Column, bits: int = 32) -> Column:
             zero, lambda a, x: a + x))
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 32) -> DataFrame:
-    return docs.select(F.col(id_col).alias("id"),
-                       simhash(F.col(text_col), bits).alias("simhash"))
+def simhash_signatures(docs: DataFrame, bits: int = 32) -> DataFrame:
+    return docs.select(F.col("doc_id").alias("id"),
+                       simhash(F.col("text"), bits).alias("simhash"))
 
 
-def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", bits: int = 32,
-                       max_hamming: int = 3, bands: int = 4) -> DataFrame:
+MAX_HAMMING = 6
+SIMHASH_BITS = 32
+
+
+def simhash_near_pairs(docs: DataFrame) -> DataFrame:
     """Pairs at hamming ≤ max_hamming, found by banding the signature
     into `bands` sub-blocks (any exact block match → candidate), then
     verifying with bit_count(xor) — no crossJoin."""
-    sigs = simhash_signatures(docs, text_col, id_col, bits)
-    width = bits // bands
+    sigs = simhash_signatures(docs, SIMHASH_BITS)
+    width = SIMHASH_BITS // BANDS
     mask = (1 << width) - 1
     banded = sigs.select(
         "id", "simhash",
@@ -409,7 +412,7 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
             F.struct(F.lit(b).alias("band"),
                      F.shiftright("simhash", b * width)
                      .bitwiseAND(F.lit(mask)).alias("block"))
-            for b in range(bands)])).alias("bb")
+            for b in range(BANDS)])).alias("bb")
     ).select("id", "simhash", "bb.band", "bb.block")
     # shared exchange across the self-join: the 32-hash signature
     # computes once per doc, not once per join side
@@ -421,12 +424,14 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
                     F.bit_count(F.col("a.simhash").bitwiseXOR(
                         F.col("b.simhash"))).alias("hamming"))
             .distinct()
-            .filter(F.col("hamming") <= max_hamming))
+            .filter(F.col("hamming") <= MAX_HAMMING))
 
 
-def components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-               max_iters: int = 25,
-               driver_max: int = 1_000_000) -> DataFrame:
+COMPONENTS_DRIVER_MAX = 1_000_000
+COMPONENTS_MAX_ITERS = 25
+
+
+def components(pairs: DataFrame) -> DataFrame:
     """Connected components over an undirected near-dup pair list:
     ``(id, comp)`` where ``comp`` is the minimum id reachable through
     any chain of pairs — the transitive closure of "is a near-dup of".
@@ -462,8 +467,8 @@ def components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     output (they are their own keeper); union them back at the call
     site if needed.
     """
-    e = (pairs.select(F.col(id_a).cast("long").alias("u"),
-                      F.col(id_b).cast("long").alias("v"))
+    e = (pairs.select(F.col("id_a").cast("long").alias("u"),
+                      F.col("id_b").cast("long").alias("v"))
          # null ids (upstream left-join artifacts) can join nothing —
          # drop them up front so both the distributed path and the
          # driver fast path see the same graph (the fast path would
@@ -480,7 +485,7 @@ def components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # pays when the pair graph itself is cluster-scale).  Same
     # min-label contract; tests/test_training_ops.py pins equality
     # against an independent union-find on random graphs.
-    if edges.count() <= driver_max:
+    if edges.count() <= COMPONENTS_DRIVER_MAX:
         parent: dict = {}
 
         def find(x: int) -> int:
@@ -511,7 +516,7 @@ def components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         return df.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
 
     prev_sum = _label_sum(labels)
-    for _ in range(max_iters):
+    for _ in range(COMPONENTS_MAX_ITERS):
         nbr = (edges.join(labels, edges["v"] == labels["id"])
                .groupBy("u").agg(F.min("comp").alias("nbr_comp")))
         relab = (labels.join(nbr, labels["id"] == nbr["u"], "left")
@@ -539,16 +544,17 @@ def components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             return labels
         prev_sum = new_sum
     raise RuntimeError(
-        f"components() did not converge within max_iters={max_iters} "
+        f"components() did not converge within {COMPONENTS_MAX_ITERS} "
         "doubling rounds; the result would be under-merged (one real "
-        "cluster carrying several comp labels). Raise max_iters — "
+        "cluster carrying several comp labels). Raise "
+        "COMPONENTS_MAX_ITERS — "
         "rounds needed grow with log2 of the pair-graph diameter.")
 
 
-def decontaminate(docs: DataFrame, bench: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  bench_text_col: str = "text", n: int = 13,
-                  broadcast_bench: bool = True) -> DataFrame:
+DECONTAM_N = 13
+
+
+def decontaminate(docs: DataFrame, bench: DataFrame) -> DataFrame:
     """Train/eval decontamination: flag every training document that
     shares ANY word n-gram with the benchmark corpus — the n-gram
     collision rule used to scrub eval leakage from pretraining sets
@@ -560,17 +566,14 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
     suites are thousands of documents, the corpus is billions), so
     its distinct shingles broadcast and the corpus shingles stream
     map-side through the hash join — ZERO shuffle of the corpus
-    except the one per-doc count keyed by id. Pass
-    ``broadcast_bench=False`` to drop the hint and let AQE pick the
-    join when the bench side grows. Documents shorter than n tokens
+    except the one per-doc count keyed by id. Documents shorter than
+    n tokens
     have no shingles and are trivially clean (the same empty-shingle
     guard as ``shingles``)."""
-    doc_sh = shingle_rows(docs, text_col, id_col, n)
-    bench_sh = _bench_shingles(bench, bench_text_col, n)
-    if broadcast_bench:
-        bench_sh = F.broadcast(bench_sh)
+    doc_sh = shingle_rows(docs, "text", "doc_id", DECONTAM_N)
+    bench_sh = F.broadcast(_bench_shingles(bench, "text", DECONTAM_N))
     return _ngram_hit_report(docs, doc_sh.join(bench_sh, "shingle"),
-                             id_col)
+                             "doc_id")
 
 
 def _bench_shingles(bench: DataFrame, text_col: str, n: int) -> DataFrame:
@@ -604,10 +607,10 @@ class ShingleBloom:
     silently report everything clean (the same failure mode the
     MinHash index sidecar guards against)."""
 
-    __slots__ = ("words", "m", "k", "n")
+    __slots__ = ("words", "m", "k")
 
-    def __init__(self, words, m: int, k: int, n: int):
-        self.words, self.m, self.k, self.n = words, m, k, n
+    def __init__(self, words, m: int, k: int):
+        self.words, self.m, self.k = words, m, k
 
     def unpersist(self):
         self.words.unpersist()
@@ -657,15 +660,16 @@ def build_shingle_bloom(bench: DataFrame, text_col: str = "text",
     for r in words:
         arr[r["word_idx"]] = r["word"]
     bc = bench.sparkSession.sparkContext.broadcast(arr)
-    return ShingleBloom(bc, m, num_hashes, n)
+    return ShingleBloom(bc, m, num_hashes)
 
 
-def decontaminate_bloom(docs: DataFrame, bench: DataFrame | None = None,
-                        bloom: ShingleBloom | None = None,
+BLOOM_NUM_HASHES = 7
+BLOOM_BITS_PER_KEY = 10
+
+
+def decontaminate_bloom(docs: DataFrame, bench: DataFrame,
                         text_col: str = "text", id_col: str = "doc_id",
-                        bench_text_col: str = "text", n: int = 13,
-                        bits_per_key: int = 10,
-                        num_hashes: int = 7) -> DataFrame:
+                        bench_text_col: str = "text") -> DataFrame:
     """``decontaminate`` for benchmark sets too large to broadcast as
     exact shingle strings: a fixed-size broadcast Bloom filter
     prefilters the corpus shingles MAP-SIDE (Arrow-vectorized probe,
@@ -675,27 +679,16 @@ def decontaminate_bloom(docs: DataFrame, bench: DataFrame | None = None,
     are identical to ``decontaminate``: one row per doc,
     ``(id, n_hits, contaminated)``.
 
-    Pass a prebuilt ``bloom`` (from ``build_shingle_bloom``) to reuse
-    one filter across corpus batches; ``bench`` is still required for
-    the exact verify join.  The probe replays the JVM hash plan in
-    numpy int64 — both hashes arrive already reduced mod m, so the
+    The probe replays the JVM hash plan in numpy int64 — both hashes
+    arrive already reduced mod m, so the
     derived positions are exact small-integer arithmetic on both
     sides."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    if bench is None:
-        raise ValueError("decontaminate_bloom: bench is required "
-                         "(the exact-verify side)")
-    if bloom is None:
-        bloom = build_shingle_bloom(bench, bench_text_col, n,
-                                    bits_per_key, num_hashes)
-    if bloom.n != n:
-        raise ValueError(
-            f"decontaminate_bloom: bloom was built over {bloom.n}-gram "
-            f"shingles but the probe asks for n={n} — a mismatched "
-            "probe would silently report every doc clean")
+    bloom = build_shingle_bloom(bench, bench_text_col, DECONTAM_N,
+                                BLOOM_BITS_PER_KEY, BLOOM_NUM_HASHES)
     words_bc, m, k = bloom.words, bloom.m, bloom.k
 
     def _probe(h1, h2):
@@ -710,7 +703,7 @@ def decontaminate_bloom(docs: DataFrame, bench: DataFrame | None = None,
 
     in_bloom = pandas_udf(_probe, "boolean")
 
-    doc_sh = shingle_rows(docs, text_col, id_col, n)
+    doc_sh = shingle_rows(docs, text_col, id_col, DECONTAM_N)
     survivors = (doc_sh
                  .withColumn("h1", F.pmod(F.xxhash64("shingle"),
                                           F.lit(m)))
@@ -721,18 +714,17 @@ def decontaminate_bloom(docs: DataFrame, bench: DataFrame | None = None,
                  .drop("h1", "h2"))
     # exact verify on the post-bloom trickle only; no broadcast hint —
     # the premise is a bench side past the broadcast threshold
-    bench_sh = _bench_shingles(bench, bench_text_col, n)
+    bench_sh = _bench_shingles(bench, bench_text_col, DECONTAM_N)
     return _ngram_hit_report(docs, survivors.join(bench_sh, "shingle"),
                              id_col)
 
 
-def component_clusters(pairs: DataFrame, id_a: str = "id_a",
-                       id_b: str = "id_b") -> DataFrame:
+def component_clusters(pairs: DataFrame) -> DataFrame:
     """``(id, comp, csize)`` — every paired document with its cluster
     id (minimum member id) and the cluster's member count. ``comp ==
     id`` marks the keeper; everything else is the drop set a
     cluster-correct near-dup pass removes."""
-    comp = components(pairs, id_a, id_b)
+    comp = components(pairs)
     sizes = comp.groupBy("comp").agg(F.count("*").alias("csize"))
     return comp.join(sizes, "comp").select("id", "comp", "csize")
 
@@ -790,11 +782,9 @@ def _reassemble_units(units: DataFrame, kept: DataFrame,
                     .alias("n_dropped")))
 
 
-def dedup_units_keepfirst(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id",
-                          sep: str = ". ") -> DataFrame:
+def dedup_units_keepfirst(docs: DataFrame) -> DataFrame:
     """Cross-document exact duplicate-unit removal, keep-FIRST: split
-    each document into units on ``sep``; every unit whose normalized
+    each document into units on ``". "``; every unit whose normalized
     form (lower+trim) occurs more than once in the corpus survives
     only at its globally first occurrence (smallest (doc id, position)
     — within-document repeats of a unit are cut too), and documents
@@ -821,7 +811,7 @@ def dedup_units_keepfirst(docs: DataFrame, text_col: str = "text",
     the winner (id, pos) pairs — a key that is unique on both sides
     and uniformly distributed, so no skew survives to any stage.
     """
-    units = _unit_rows(docs, text_col, id_col, sep)
+    units = _unit_rows(docs, "text", "doc_id", ". ")
     norm = F.lower(F.trim(F.col("unit")))
     winners = (units.select(norm.alias("nunit"), F.struct(
         F.col("id"), F.col("pos")).alias("occ"))
@@ -829,14 +819,15 @@ def dedup_units_keepfirst(docs: DataFrame, text_col: str = "text",
     first = winners.select(F.col("first_occ.id").alias("id"),
                            F.col("first_occ.pos").alias("pos"))
     kept = units.join(first, ["id", "pos"], "left_semi")
-    return _reassemble_units(units, kept, sep)
+    return _reassemble_units(units, kept, ". ")
 
 
-def duplicate_token_spans(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id",
-                          window: int = 20) -> DataFrame:
+SPAN_WINDOW = 20
+
+
+def duplicate_token_spans(docs: DataFrame) -> DataFrame:
     """Token-window exact-substring duplicate detection, keep-first:
-    hash every ``window``-token sliding window of every document; a
+    hash every ``SPAN_WINDOW``-token sliding window of every document; a
     window whose normalized token sequence occurs elsewhere in the
     corpus (or earlier in the same document) is a duplicate span
     unless it is the globally first occurrence (smallest (id, pos)).
@@ -864,21 +855,21 @@ def duplicate_token_spans(docs: DataFrame, text_col: str = "text",
     aggregation (map-side partial min — a viral passage never funnels
     one reducer); duplicate flagging is a semi-join on the uniform
     (id, pos) key; the position explosion multiplies only duplicate
-    windows by ``window``, not the corpus.
+    windows by ``SPAN_WINDOW``, not the corpus.
     """
-    src = _spread(docs.select(F.col(id_col).alias("id"),
-                              F.col(text_col).alias("text")), "id")
+    src = _spread(docs.select(F.col("doc_id").alias("id"),
+                              F.col("text")), "id")
     toks = tokens(F.lower(F.col("text")))
     base = src.select("id", toks.alias("toks"),
                       F.size(toks).alias("n_tokens"))
     wins = base.select(
         "id", "n_tokens",
         F.when(
-            F.col("n_tokens") >= window,
+            F.col("n_tokens") >= SPAN_WINDOW,
             F.transform(
-                F.sequence(F.lit(1), F.col("n_tokens") - (window - 1)),
+                F.sequence(F.lit(1), F.col("n_tokens") - (SPAN_WINDOW - 1)),
                 lambda i: F.conv(F.substring(F.md5(F.encode(
-                    F.array_join(F.slice(F.col("toks"), i, window), " "),
+                    F.array_join(F.slice(F.col("toks"), i, SPAN_WINDOW), " "),
                     "UTF-8")), 1, 15), 16, 10).cast("long"))
         ).otherwise(F.array().cast("array<long>")).alias("whashes"))
     occ = wins.select("id", F.posexplode("whashes").alias("pos", "whash"))
@@ -898,14 +889,14 @@ def duplicate_token_spans(docs: DataFrame, text_col: str = "text",
                     "whash", "left_semi")
     dup_tok = (dups.select(
         "id", F.explode(F.sequence(
-            F.col("pos"), F.col("pos") + (window - 1))).alias("t"))
+            F.col("pos"), F.col("pos") + (SPAN_WINDOW - 1))).alias("t"))
         .groupBy("id")
         .agg(F.countDistinct("t").alias("n_dup_tokens")))
     # n_windows is pure arithmetic on n_tokens — computing it from occ
     # would re-run the whole md5 window projection a third time (and at
     # corpus scale the exploded windows are too large to cache away)
-    n_windows = F.when(F.col("n_tokens") >= window,
-                       F.col("n_tokens") - (window - 1)).otherwise(0)
+    n_windows = F.when(F.col("n_tokens") >= SPAN_WINDOW,
+                       F.col("n_tokens") - (SPAN_WINDOW - 1)).otherwise(0)
     dup_win = dups.groupBy("id").agg(F.count(F.lit(1)).alias("n_dup_windows"))
     return (base.select("id", "n_tokens", n_windows.alias("n_windows"))
             .join(dup_win, "id", "left")
@@ -917,12 +908,13 @@ def duplicate_token_spans(docs: DataFrame, text_col: str = "text",
                     .alias("n_dup_tokens")))
 
 
-def strip_boilerplate(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", max_df: int = 10,
-                      sep: str = ". ") -> DataFrame:
+BOILERPLATE_MAX_DF = 10
+
+
+def strip_boilerplate(docs: DataFrame) -> DataFrame:
     """Corpus-level boilerplate removal: split each document into
-    units on ``sep``, drop every unit whose normalized form
-    (lower+trim) appears in more than ``max_df`` DISTINCT documents
+    units on ``". "``, drop every unit whose normalized form
+    (lower+trim) appears in more than ``BOILERPLATE_MAX_DF`` DISTINCT documents
     (cookie banners, nav text, subscribe prompts), and reassemble
     the survivors in original order — the line-level dedup pass of
     CCNet/RefinedWeb-style curation pipelines, at sentence
@@ -937,26 +929,28 @@ def strip_boilerplate(docs: DataFrame, text_col: str = "text",
     constant, so the anti-join is left to AQE rather than
     broadcast-hinted), one anti-join back, and one per-doc
     reassembly keyed by id (array_sort on (pos, unit) structs, no
-    window). The unit split regex-escapes ``sep`` so Spark's
+    window). The unit split regex-escapes the separator so Spark's
     regex-based split matches the oracle's literal split.
     """
-    units = _unit_rows(docs, text_col, id_col, sep)
+    units = _unit_rows(docs, "text", "doc_id", ". ")
     norm = F.lower(F.trim(F.col("unit")))
     hot = (units.select(norm.alias("nunit"), "id").distinct()
            .groupBy("nunit").agg(F.count(F.lit(1)).alias("df"))
-           .filter(F.col("df") > max_df)
+           .filter(F.col("df") > BOILERPLATE_MAX_DF)
            .select("nunit"))
     kept = (units.withColumn("nunit", norm)
             .join(hot, "nunit", "left_anti"))
-    return _reassemble_units(units, kept, sep)
+    return _reassemble_units(units, kept, ". ")
 
 
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 5,
-                        window: int = 4) -> DataFrame:
+WINNOW_K = 5
+WINNOW_WINDOW = 4
+
+
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowed document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003): ``(id, pos, fp)`` — in every sliding window of
-    ``window`` consecutive k-gram hashes, select the MINIMUM hash
+    ``WINNOW_WINDOW`` consecutive k-gram hashes, select the MINIMUM hash
     (rightmost occurrence on ties, the paper's position-robust rule).
 
     The selection guarantee: any verbatim match of at least
@@ -975,34 +969,34 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     the same k-gram happens inside the row.  The only exchange is
     whatever the consumer does with the (id, pos, fp) rows.
     """
-    src = _spread(docs.select(F.col(id_col).alias("id"),
-                              F.col(text_col).alias("text")), "id")
+    src = _spread(docs.select(F.col("doc_id").alias("id"),
+                              F.col("text")), "id")
     toks = tokens(F.lower(F.col("text")))
     base = src.select("id", toks.alias("toks"),
                       F.size(toks).alias("n"))
     h = F.when(
-        F.col("n") >= k,
+        F.col("n") >= WINNOW_K,
         F.transform(
-            F.sequence(F.lit(1), F.col("n") - (k - 1)),
+            F.sequence(F.lit(1), F.col("n") - (WINNOW_K - 1)),
             lambda i: F.conv(F.substring(F.md5(F.encode(
-                F.array_join(F.slice(F.col("toks"), i, k), " "),
+                F.array_join(F.slice(F.col("toks"), i, WINNOW_K), " "),
                 "UTF-8")), 1, 15), 16, 10).cast("long"))
     ).otherwise(F.array().cast("array<long>"))
     hashed = base.select("id", h.alias("h"), F.size(h).alias("m"))
 
     def pick(j):
-        win = F.slice(F.col("h"), j, window)
+        win = F.slice(F.col("h"), j, WINNOW_WINDOW)
         minv = F.array_min(win)
         # rightmost occurrence of the min within the window
-        right = (F.lit(window)
+        right = (F.lit(WINNOW_WINDOW)
                  - F.array_position(F.reverse(win), minv) + 1)
         return F.struct((j + right - 1).cast("long").alias("pos"),
                         minv.alias("fp"))
 
     sel = F.when(
-        F.col("m") >= window,
+        F.col("m") >= WINNOW_WINDOW,
         F.array_distinct(
-            F.transform(F.sequence(F.lit(1), F.col("m") - (window - 1)),
+            F.transform(F.sequence(F.lit(1), F.col("m") - (WINNOW_WINDOW - 1)),
                         pick))
     ).otherwise(F.array().cast("array<struct<pos:long,fp:long>>"))
     return (hashed.select("id", F.explode(sel).alias("s"))
@@ -1011,7 +1005,7 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
 
 
 def select_canonical(docs: DataFrame, clusters: DataFrame,
-                     score_col: str, id_col: str = "doc_id") -> DataFrame:
+                     score_col: str) -> DataFrame:
     """Quality-aware canonical selection over near-dup clusters:
     ``(id, comp, score, keeper_id, is_keeper)`` for every document —
     the cluster representative is the member with the HIGHEST
@@ -1032,7 +1026,7 @@ def select_canonical(docs: DataFrame, clusters: DataFrame,
     engine's doc_id convention) so the tie-break rides the same
     struct.  ``clusters`` is ``(id, comp)`` — any membership table,
     e.g. ``component_clusters`` output."""
-    scored = docs.select(F.col(id_col).cast("long").alias("id"),
+    scored = docs.select(F.col("doc_id").cast("long").alias("id"),
                          F.col(score_col).cast("long").alias("score"))
     member = (scored
               .join(clusters.select(F.col("id").cast("long").alias("id"),
@@ -1052,9 +1046,7 @@ def select_canonical(docs: DataFrame, clusters: DataFrame,
                     .alias("is_keeper")))
 
 
-def strip_repeated_paragraphs(docs: DataFrame, text_col: str = "text",
-                              id_col: str = "doc_id",
-                              sep: str = "\n") -> DataFrame:
+def strip_repeated_paragraphs(docs: DataFrame) -> DataFrame:
     """INTRA-document exact-paragraph dedup: keep the first
     occurrence of each paragraph within one document, preserving
     order.
@@ -1078,14 +1070,14 @@ def strip_repeated_paragraphs(docs: DataFrame, text_col: str = "text",
     ``n_removed``.
     """
     import re as _re
-    paras = F.split(F.col(text_col), _re.escape(sep))
+    paras = F.split(F.col("text"), _re.escape("\n"))
     kept = F.aggregate(
         paras,
         F.array().cast("array<string>"),
         lambda acc, p: F.when(F.array_contains(acc, p), acc)
         .otherwise(F.concat(acc, F.array(p))))
     return docs.select(
-        F.col(id_col),
-        F.array_join(kept, sep).alias(text_col),
+        F.col("doc_id"),
+        F.array_join(kept, "\n").alias("text"),
         F.size(paras).alias("n_paras"),
         (F.size(paras) - F.size(kept)).alias("n_removed"))

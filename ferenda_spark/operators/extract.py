@@ -211,7 +211,10 @@ def parse_page(html_bytes: bytes) -> dict:
 DOC_URL_RE = r"^https://example\.org/res/rfc/\d+$"
 
 
-def _make_publisher_resolver(entity_labels, cutoff: float = 0.8):
+FUZZY_CUTOFF = 0.8
+
+
+def _make_publisher_resolver(entity_labels):
     """(label → uri) resolver with the linker's exact→fuzzy semantics
     (lookup_resource, documentrepository.py:500-547): exact match on
     the normalized label, else difflib.get_close_matches top-1 inside
@@ -243,8 +246,8 @@ def _make_publisher_resolver(entity_labels, cutoff: float = 0.8):
     by_len: dict[int, list[str]] = {}
     for k in sorted(exact):
         by_len.setdefault(len(k), []).append(k)
-    lo_f = cutoff / (2.0 - cutoff)
-    hi_f = (2.0 - cutoff) / cutoff
+    lo_f = FUZZY_CUTOFF / (2.0 - FUZZY_CUTOFF)
+    hi_f = (2.0 - FUZZY_CUTOFF) / FUZZY_CUTOFF
     memo: dict = {}
 
     def resolve(label):
@@ -260,7 +263,7 @@ def _make_publisher_resolver(entity_labels, cutoff: float = 0.8):
             cands = [c for ln in range(lo, hi + 1)
                      for c in by_len.get(ln, ())]
             best = difflib.get_close_matches(norm, cands, n=1,
-                                             cutoff=cutoff)
+                                             cutoff=FUZZY_CUTOFF)
             uri = exact[best[0]] if best else None
         if len(memo) < 1_000_000:  # flat task memory on open-domain text
             memo[norm] = uri

@@ -81,8 +81,7 @@ def positional_index(docs: DataFrame, id_col: str,
     return rows
 
 
-def phrase_hits(pindex: DataFrame, phrase: str,
-                fields: list[str] | None = None) -> DataFrame:
+def phrase_hits(pindex: DataFrame, phrase: str) -> DataFrame:
     """(id, field, boost, hits) — exact-adjacency phrase occurrence
     counts from the positional index.
 
@@ -97,8 +96,6 @@ def phrase_hits(pindex: DataFrame, phrase: str,
                 .select("id", "field", "boost",
                         F.lit(0).cast("long").alias("hits")))
     base = pindex
-    if fields is not None:
-        base = base.filter(F.col("field").isin(*fields))
     starts = (base.filter(F.col("term") == terms[0])
               .select("id", "field", "boost",
                       F.col("pos").alias("start")))
@@ -125,17 +122,18 @@ def doc_lengths(index: DataFrame) -> DataFrame:
     """(id, field, dl) — per-document field lengths in tokens,
     derived from the inverted index (dl = Σ tf).  At 100 TB this is
     a precomputed table written alongside the index, co-bucketed on
-    id so BM25 scoring joins it without a shuffle; pass it to
-    ``bm25_search(doclens=...)`` instead of re-deriving per query."""
+    id so BM25 scoring joins it without a shuffle."""
     return (index.groupBy("id", "field")
             .agg(F.sum("tf").cast("long").alias("dl")))
 
 
-def bm25_search(index: DataFrame, n_docs: int, query_terms: list[str],
-                k: int = 20, fields: list[str] | None = None,
-                k1_milli: int = 1200, b_milli: int = 750,
-                doclens: DataFrame | None = None,
-                idf: DataFrame | None = None) -> DataFrame:
+BM25_TOP_K = 20
+BM25_K1_MILLI = 1200
+BM25_B_MILLI = 750
+
+
+def bm25_search(index: DataFrame, n_docs: int,
+                query_terms: list[str]) -> DataFrame:
     """Okapi BM25 ranking: (id, score, rank), top-k.
 
     The reference's ElasticSearch backend scores with BM25 (the ES
@@ -145,7 +143,8 @@ def bm25_search(index: DataFrame, n_docs: int, query_terms: list[str],
     ``fulltext_search``.
 
     Engine-deterministic integer arithmetic (Robertson/Zaragoza 2009
-    formula, k1/b carried in milli-units):
+    formula, k1/b carried in milli-units as ``BM25_K1_MILLI`` and
+    ``BM25_B_MILLI``):
 
         den  = tf·10^6·avgdl_milli
                + k1_milli·((1000-b_milli)·avgdl_milli + b_milli·dl·1000)
@@ -169,34 +168,32 @@ def bm25_search(index: DataFrame, n_docs: int, query_terms: list[str],
         return (index.filter(F.lit(False))
                 .select("id", F.lit(0).cast("long").alias("score"),
                         F.lit(0).cast("int").alias("rank")))
-    dl = doclens if doclens is not None else doc_lengths(index)
-    if fields is not None:
-        dl = dl.filter(F.col("field").isin(*fields))
+    dl = doc_lengths(index)
     # one row per field: exact integer milli average length
     avgdl = (dl.groupBy("field")
              .agg(F.expr("(sum(dl) * 1000) div count(1)")
                   .alias("avgdl_milli")))
-    hits = index.filter(F.col("term").isin(*terms))
-    if fields is not None:
-        hits = hits.filter(F.col("field").isin(*fields))
-    if idf is None:
-        # per-term df is invariant under the term filter, so the idf
-        # of the pruned postings equals the full-vocabulary idf
-        hits = hits.persist()
-        idf = idf_milli(hits, n_docs)
-    k1p = int(k1_milli) + 1000
+    # per-term df is invariant under the term filter, so the idf of
+    # the pruned postings equals the full-vocabulary idf
+    hits = index.filter(F.col("term").isin(*terms)).persist()
+    idf = idf_milli(hits, n_docs)
+    k1_milli, b_milli = BM25_K1_MILLI, BM25_B_MILLI
+    k1p = k1_milli + 1000
     parts = (hits.join(F.broadcast(idf), "term")
              .join(dl, ["id", "field"])
              .join(F.broadcast(avgdl), "field")
              .select("id", F.expr(
                  f"boost * ((idf_milli * tf * {k1p} * avgdl_milli) div "
-                 f"((tf * 1000000 * avgdl_milli + {int(k1_milli)} * "
-                 f"(({1000 - int(b_milli)}) * avgdl_milli + "
-                 f"{int(b_milli)} * dl * 1000)) div 1000))")
+                 f"((tf * 1000000 * avgdl_milli + {k1_milli} * "
+                 f"(({1000 - b_milli}) * avgdl_milli + "
+                 f"{b_milli} * dl * 1000)) div 1000))")
                  .cast("long").alias("part")))
     scored = parts.groupBy("id").agg(F.sum("part").alias("score"))
     from ferenda_spark.operators.analytics import ranked_topk
-    return ranked_topk(scored, [("score", True), ("id", False)], k)
+    return ranked_topk(scored, [("score", True), ("id", False)], BM25_TOP_K)
+
+
+PAGELEN = 10
 
 
 def fulltext_search(index: DataFrame, idf: DataFrame | None,
@@ -209,8 +206,7 @@ def fulltext_search(index: DataFrame, idf: DataFrame | None,
                     repos: DataFrame | None = None,
                     boost_repos: dict | None = None,
                     exclude_repos: list[str] | None = None,
-                    pagenum: int | None = None,
-                    pagelen: int = 10) -> DataFrame:
+                    pagenum: int | None = None) -> DataFrame:
     """Boost-ranked fielded search: (id, score, rank), top-k.
 
     Score = Σ over matched (term, field) of tf·boost·idf_milli —
@@ -260,7 +256,7 @@ def fulltext_search(index: DataFrame, idf: DataFrame | None,
       set (a left join on the uniform id key), BEFORE top-k, so a
       boosted repo can displace unboosted hits exactly as the
       reference's index-level boosting does;
-    * ``pagenum``/``pagelen`` return one result page plus the API
+    * ``pagenum``/``PAGELEN`` return one result page plus the API
       envelope columns (start_index, items_per_page, total_results —
       the reference's startIndex/itemsPerPage/totalResults).  A deep
       page costs one TakeOrdered of pagenum·pagelen rows (the standard
@@ -294,10 +290,10 @@ def fulltext_search(index: DataFrame, idf: DataFrame | None,
             empty = (empty
                      .withColumn("total_results", F.lit(0).cast("long"))
                      .withColumn("start_index",
-                                 F.lit((pagenum - 1) * pagelen)
+                                 F.lit((pagenum - 1) * PAGELEN)
                                  .cast("long"))
                      .withColumn("items_per_page",
-                                 F.lit(pagelen).cast("long")))
+                                 F.lit(PAGELEN).cast("long")))
         return empty
     ph_terms = sorted({t for p in phrases for t in p.lower().split()
                        if t})
@@ -341,7 +337,7 @@ def fulltext_search(index: DataFrame, idf: DataFrame | None,
             pp = pp.filter(F.col("field").isin(*fields))
         pp = pp.persist()
         for p in phrases:
-            ph = phrase_hits(pp, p, fields=None)
+            ph = phrase_hits(pp, p)
             p_terms = sorted({t for t in p.lower().split() if t})
             p_idf = (idf.filter(F.col("term").isin(*p_terms))
                      .agg(F.sum("idf_milli").alias("p_idf")))
@@ -364,12 +360,12 @@ def fulltext_search(index: DataFrame, idf: DataFrame | None,
     # the postings scan/join/aggregate lineage runs once per query
     scored = scored.persist()
     total = scored.agg(F.count("*").cast("long").alias("total_results"))
-    page = (ranked_topk(scored, order, pagenum * pagelen)
-            .filter(F.col("rank") > (pagenum - 1) * pagelen))
+    page = (ranked_topk(scored, order, pagenum * PAGELEN)
+            .filter(F.col("rank") > (pagenum - 1) * PAGELEN))
     return (page.crossJoin(F.broadcast(total))
             .withColumn("start_index",
-                        F.lit((pagenum - 1) * pagelen).cast("long"))
-            .withColumn("items_per_page", F.lit(pagelen).cast("long")))
+                        F.lit((pagenum - 1) * PAGELEN).cast("long"))
+            .withColumn("items_per_page", F.lit(PAGELEN).cast("long")))
 
 
 def _apply_repo_prefs(scored: DataFrame, repos: DataFrame | None,

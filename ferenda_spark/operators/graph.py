@@ -93,6 +93,10 @@ def _try_break_stale(path: str, stale_after_s: float) -> None:
             pass
 
 
+COMMIT_LOCK_STALE_S = 300.0
+COMMIT_LOCK_TIMEOUT_S = 60.0
+
+
 class GraphStore:
     """Snapshot-committed table store (Iceberg-contract emulation).
 
@@ -138,8 +142,7 @@ class GraphStore:
             json.dump(snapshots, f, indent=1)
         os.replace(tmp, p)
 
-    def _commit_lock(self, table: str, timeout_s: float = 60.0,
-                     stale_after_s: float = 300.0):
+    def _commit_lock(self, table: str):
         """Mutual exclusion for read-merge-commit sequences — the
         stand-in for the Iceberg catalog's CAS commit. O_EXCL lock
         file on the table directory; valid on a POSIX fs (object
@@ -147,7 +150,7 @@ class GraphStore:
         Iceberg's metastore).
 
         Stale-lock recovery: manifest commits are sub-second, so a
-        lock file older than ``stale_after_s`` belongs to a writer
+        lock file older than ``COMMIT_LOCK_STALE_S`` belongs to a writer
         that died mid-commit (SIGKILL/OOM before the finally-unlink);
         it is broken and acquisition retried rather than wedging the
         table forever.  The lock file records pid+timestamp for
@@ -159,17 +162,17 @@ class GraphStore:
             os.makedirs(tdir, exist_ok=True)
             path = os.path.join(tdir, "_commit.lock")
             token = f"{os.getpid()}:{uuid.uuid4().hex}"
-            deadline = time.time() + timeout_s
+            deadline = time.time() + COMMIT_LOCK_TIMEOUT_S
             while True:
                 try:
                     fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
                     break
                 except FileExistsError:
-                    _try_break_stale(path, stale_after_s)
+                    _try_break_stale(path, COMMIT_LOCK_STALE_S)
                     if time.time() > deadline:
                         raise ConcurrentCommitError(
                             f"commit lock on {table} held past "
-                            f"{timeout_s}s")
+                            f"{COMMIT_LOCK_TIMEOUT_S}s")
                     time.sleep(0.05)
             try:
                 os.write(fd, token.encode())
@@ -563,7 +566,6 @@ def with_input_hash(pages: DataFrame, config_salt: str = "") -> DataFrame:
 
 
 def pending_pages(pages: DataFrame, store: GraphStore,
-                  stage: str = "materialize",
                   config_salt: str = "") -> DataFrame:
     """Anti-join pages against the last committed provenance snapshot:
     only urls that are new, changed (hash differs), or previously
@@ -576,7 +578,7 @@ def pending_pages(pages: DataFrame, store: GraphStore,
     if not store.exists("provenance"):
         return hashed
     done = (store.read("provenance")
-            .filter((F.col("stage") == stage) & F.col("success"))
+            .filter((F.col("stage") == "materialize") & F.col("success"))
             .select("url", "input_hash").distinct())
     return hashed.join(done, ["url", "input_hash"], "left_anti")
 

@@ -78,27 +78,11 @@ def _py_strict_closure(pairs) -> set:
     return out
 
 
-def _strict_closure(pairs: DataFrame,
-                    driver_max: int = _DRIVER_CLOSURE_MAX) -> DataFrame:
-    """Transitive (non-reflexive) closure of a schema relation,
-    cycle-safe (equivalent classes spelled as mutual subClassOf
-    terminate instead of looping).
-
-    Fast path: a TBox is tiny next to the ABox by definition, and the
-    distributed fixpoint costs ~2 driver round-trip jobs per closure
-    LEVEL (localCheckpoint + emptiness probe) — a dozen mini-jobs to
-    close a dozen rows.  So up to ``driver_max`` edges the pairs are
-    collected and closed with a driver-side BFS in one job, returned
-    as a local relation (which downstream broadcast joins love).
-    Bigger relations fall back to the semi-naive distributed fixpoint
-    (:func:`transitive_closure`)."""
-    if driver_max:
-        head = pairs.limit(driver_max + 1).collect()
-        if len(head) <= driver_max:
-            return pairs.sparkSession.createDataFrame(
-                sorted(_py_strict_closure(
-                    (r["sub"], r["sup"]) for r in head)),
-                "sub string, sup string")
+def _strict_closure(pairs: DataFrame) -> DataFrame:
+    """Transitive (non-reflexive) closure of a schema relation above
+    the driver-side size, as the semi-naive distributed fixpoint
+    (:func:`transitive_closure`); cycle-safe (equivalent classes
+    spelled as mutual subClassOf terminate instead of looping)."""
     return (transitive_closure(pairs, max_depth=None,
                                child_col="sub", parent_col="sup")
             .select(F.col("descendant").alias("sub"),
@@ -107,29 +91,24 @@ def _strict_closure(pairs: DataFrame,
 
 
 class ClosedSchema:
-    """A TBox closed once, reusable across any number of ABox passes
-    (the streaming shape: the schema is static, the batches are not).
+    """A TBox closed once: the sc/sp closures, the effective
+    domain/range tables and the schema triples to emit.
 
     Up to ``_DRIVER_CLOSURE_MAX`` schema triples the WHOLE closure is
     computed driver-side in one collect and every frame is a local
     relation — broadcasting a local relation needs no job and no
-    shuffle, so the per-query / per-micro-batch schema cost is zero
-    (the TBox is a constant of the job, and the plan says so).  Above
-    that the distributed fixpoint path takes over; ``checkpoint=True``
-    then pins every frame with ``localCheckpoint`` so reuse across
-    micro-batches references materialized leaves."""
+    shuffle, so the schema cost is zero (the TBox is a constant of
+    the job, and the plan says so).  Above that the distributed
+    fixpoint path takes over."""
 
-    def __init__(self, schema: DataFrame, checkpoint: bool = False,
-                 driver_max: int = _DRIVER_CLOSURE_MAX):
+    def __init__(self, schema: DataFrame):
         sch = schema.select("subj", "pred", "obj") \
             .filter(F.col("pred").isin(*_SCHEMA_PREDS))
-        if driver_max:
-            head = sch.limit(driver_max + 1).collect()
-            if len(head) <= driver_max:
-                self._init_local(sch.sparkSession,
-                                 {tuple(r) for r in head})
-                return
-        self._init_distributed(sch, checkpoint)
+        head = sch.limit(_DRIVER_CLOSURE_MAX + 1).collect()
+        if len(head) <= _DRIVER_CLOSURE_MAX:
+            self._init_local(sch.sparkSession, {tuple(r) for r in head})
+        else:
+            self._init_distributed(sch)
 
     def _init_local(self, spark, rows: set) -> None:
         by_pred: dict[str, set] = {p: set() for p in _SCHEMA_PREDS}
@@ -159,10 +138,9 @@ class ClosedSchema:
             | {(s, SUBPROP, o) for s, o in sp},
             "subj string, pred string, obj string")
 
-    def _init_distributed(self, sch: DataFrame,
-                          checkpoint: bool) -> None:
-        sc = _strict_closure(_pairs(sch, SUBCLASS), driver_max=0)
-        sp = _strict_closure(_pairs(sch, SUBPROP), driver_max=0)
+    def _init_distributed(self, sch: DataFrame) -> None:
+        sc = _strict_closure(_pairs(sch, SUBCLASS))
+        sp = _strict_closure(_pairs(sch, SUBPROP))
         dom = _pairs(sch, DOMAIN).withColumnRenamed("sup", "cls")
         rng = _pairs(sch, RANGE).withColumnRenamed("sup", "cls")
 
@@ -185,21 +163,13 @@ class ClosedSchema:
                     sp.select(F.col("sub").alias("subj"),
                               F.lit(SUBPROP).alias("pred"),
                               F.col("sup").alias("obj"))))
-        frames = {"sc": sc, "sp": sp, "eff_dom": _effective(dom),
-                  "eff_rng": _effective(rng), "triples": triples_out}
-        if checkpoint:
-            frames = {k: v.localCheckpoint(eager=True)
-                      for k, v in frames.items()}
-        self.sc = frames["sc"]
-        self.sp = frames["sp"]
-        self.eff_dom = frames["eff_dom"]
-        self.eff_rng = frames["eff_rng"]
-        self.triples = frames["triples"]
+        self.sc, self.sp = sc, sp
+        self.eff_dom, self.eff_rng = _effective(dom), _effective(rng)
+        self.triples = triples_out
 
 
-def rdfs_materialize(triples: DataFrame, schema: DataFrame | None = None,
-                     closed: ClosedSchema | None = None,
-                     dedup: bool = True) -> DataFrame:
+def rdfs_materialize(triples: DataFrame,
+                     schema: DataFrame | None = None) -> DataFrame:
     """Forward-chain the ρdf RDFS rules to fixpoint and return the
     materialized graph: input triples ∪ closed schema ∪ entailments,
     as the same ``(subj, pred, obj)`` shape.
@@ -224,21 +194,11 @@ def rdfs_materialize(triples: DataFrame, schema: DataFrame | None = None,
     The folding of ⊑* into the domain/range tables (effective
     domain/range) is what keeps this one pass: a subproperty inherits
     its superproperties' domains without the ABox ever re-joining.
-    The only corpus shuffle is the final ``dropDuplicates``
-    (``dedup=False`` skips it when a downstream agg dedups anyway —
-    note the mixed-graph case then re-emits the asserted schema rows).
-
-    Pass a precomputed ``closed`` (a :class:`ClosedSchema`) to reuse
-    one TBox closure across many batches; the closed TBox's triples
-    are then NOT re-emitted (the schema owner already holds them),
-    output = batch ∪ entailments.
+    The only corpus shuffle is the final ``dropDuplicates``.
     """
     t = triples.select("subj", "pred", "obj")
-    emit_schema = closed is None
-    if closed is None:
-        sch = t.filter(F.col("pred").isin(*_SCHEMA_PREDS)) \
-            if schema is None else schema
-        closed = ClosedSchema(sch)
+    closed = ClosedSchema(t.filter(F.col("pred").isin(*_SCHEMA_PREDS))
+                          if schema is None else schema)
 
     inst = t.filter(~F.col("pred").isin(*_SCHEMA_PREDS))
     plain = inst.filter(F.col("pred") != RDF_TYPE)
@@ -267,14 +227,13 @@ def rdfs_materialize(triples: DataFrame, schema: DataFrame | None = None,
         F.broadcast(closed.sc.withColumnRenamed("sub", "obj")), "obj")
         .select("subj", "pred", F.col("sup").alias("obj")))
 
-    parts = [derived_prop, dom_types, rng_types, super_types]
-    if emit_schema:
-        # asserted schema ∪ rdfs5/rdfs11 closure rows
-        parts.append(closed.triples)
+    # asserted schema ∪ rdfs5/rdfs11 closure rows
+    parts = [derived_prop, dom_types, rng_types, super_types,
+             closed.triples]
     out = t
     for p in parts:
         out = out.unionByName(p)
-    return out.dropDuplicates(["subj", "pred", "obj"]) if dedup else out
+    return out.dropDuplicates(["subj", "pred", "obj"])
 
 
 def sameas_map(triples: DataFrame,
@@ -334,10 +293,7 @@ def sameas_map(triples: DataFrame,
 
 
 def sameas_canonicalize(triples: DataFrame,
-                        sameas_pred: str = SAME_AS,
-                        rewrite_map: DataFrame | None = None,
-                        drop_sameas: bool = True,
-                        dedup: bool = True) -> DataFrame:
+                        sameas_pred: str = SAME_AS) -> DataFrame:
     """Rewrite every subject/object through the graph's owl:sameAs
     identity clusters so each resource has ONE spelling — the step
     that turns the reference's minted sameAs links (dv.py:1466,
@@ -348,17 +304,12 @@ def sameas_canonicalize(triples: DataFrame,
     map-side; only nodes that actually appear in a sameAs cluster are
     in the map, so untouched triples pass through unchanged.
     Canonicalization collapses variant spellings of the same edge
-    onto identical rows; ``dedup`` removes them (the one corpus
-    shuffle).  ``drop_sameas`` removes the now self-referential
-    identity triples themselves.  Pass a precomputed ``rewrite_map``
-    (:func:`sameas_map` output, e.g. persisted across daily batches)
-    to skip recomputing components.
+    onto identical rows; a final ``dropDuplicates`` removes them (the
+    one corpus shuffle).  The now self-referential identity triples
+    themselves are dropped.
     """
-    m = rewrite_map if rewrite_map is not None else \
-        sameas_map(triples, sameas_pred)
-    t = triples
-    if drop_sameas:
-        t = t.filter(F.col("pred") != sameas_pred)
+    m = sameas_map(triples, sameas_pred)
+    t = triples.filter(F.col("pred") != sameas_pred)
     sm = F.broadcast(m.select(F.col("node").alias("subj"),
                               F.col("canon").alias("_sc")))
     om = F.broadcast(m.select(F.col("node").alias("obj"),
@@ -368,7 +319,7 @@ def sameas_canonicalize(triples: DataFrame,
            .select(F.coalesce("_sc", "subj").alias("subj"),
                    "pred",
                    F.coalesce("_oc", "obj").alias("obj")))
-    return out.dropDuplicates(["subj", "pred", "obj"]) if dedup else out
+    return out.dropDuplicates(["subj", "pred", "obj"])
 
 
 # ------------------------------------------------------ OWL properties
@@ -378,9 +329,7 @@ SYMMETRIC = "owl:SymmetricProperty"
 TRANSITIVE = "owl:TransitiveProperty"
 
 
-def owl_property_materialize(triples: DataFrame,
-                             schema: DataFrame | None = None,
-                             dedup: bool = True) -> DataFrame:
+def owl_property_materialize(triples: DataFrame) -> DataFrame:
     """Forward-chain the OWL property rules the reference's shipped
     vocabularies actually declare — ``owl:inverseOf``
     (``res/vocab/bibo.ttl:356``: bibo:citedBy inverseOf bibo:cites —
@@ -414,13 +363,12 @@ def owl_property_materialize(triples: DataFrame,
     composition: run this, then :func:`rdfs_materialize` (property
     swaps never create new subclass/type facts on their own).
 
-    ``schema`` defaults to the declarations embedded in ``triples``:
+    The declarations are the ones embedded in ``triples``:
     ``owl:inverseOf`` rows plus ``rdf:type`` rows whose object is one
     of the two property classes.
     """
     t = triples.select("subj", "pred", "obj")
-    sch = t if schema is None else schema.select("subj", "pred", "obj")
-    decls = sch.filter(
+    decls = t.filter(
         (F.col("pred") == INVERSE_OF)
         | ((F.col("pred") == RDF_TYPE)
            & F.col("obj").isin(SYMMETRIC, TRANSITIVE))).collect()
@@ -493,4 +441,4 @@ def owl_property_materialize(triples: DataFrame,
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.dropDuplicates(["subj", "pred", "obj"]) if dedup else out
+    return out.dropDuplicates(["subj", "pred", "obj"])

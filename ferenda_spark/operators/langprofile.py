@@ -21,7 +21,7 @@ Shapes at 10^12 documents:
   ``groupBy(lang, gram)`` (hot grams pre-aggregate per partition),
   then a rank window PARTITIONED BY LANG over the already-aggregated
   gram counts — the window input is |langs| × |distinct grams|, not
-  the corpus — truncated to the top ``k`` rows per language.  The
+  the corpus — truncated to the top ``PROFILE_K`` rows per language.  The
   profile table is tiny (|langs| · k rows): it broadcasts.
 - classification: per-doc gram counts (map-side combinable), a
   rank window keyed by DOC (uniform — no skew possible), a
@@ -57,62 +57,66 @@ def _grams(df: DataFrame, text_col: str, n: int) -> Column:
     return char_ngrams(F.col(text_col), n)
 
 
-def explode_grams(docs: DataFrame, cols: list[str],
-                  text_col: str = "text", n: int = 3) -> DataFrame:
+NGRAM_N = 3
+
+
+def explode_grams(docs: DataFrame, cols: list[str]) -> DataFrame:
     """(cols..., gram) rows — the shared gram explode.  Compute it
     ONCE and hand it to both :func:`train_lang_profiles` and
     :func:`classify_language` (via ``grams=``) when training and
     classifying over the same corpus: the explode is the dominant
     cost and otherwise runs twice."""
-    return docs.select(*cols, F.explode(_grams(docs, text_col, n))
+    return docs.select(*cols, F.explode(_grams(docs, "text", NGRAM_N))
                        .alias("gram"))
 
 
-def train_lang_profiles(labeled: DataFrame, lang_col: str = "lang",
-                        text_col: str = "text", k: int = 200,
-                        n: int = 3,
+PROFILE_K = 150
+
+
+def train_lang_profiles(labeled: DataFrame,
                         grams: DataFrame | None = None) -> DataFrame:
-    """(lang, gram, rank): the top-``k`` character n-grams per
+    """(lang, gram, rank): the top-``PROFILE_K`` character n-grams per
     language, ranked by (count desc, gram) — the Cavnar–Trenkle
     profile table.  ``grams`` (optional): precomputed
     (lang, gram) rows from :func:`explode_grams`."""
     from pyspark.sql import Window
 
-    ex = grams.select(F.col(lang_col).alias("lang"), "gram") \
+    ex = grams.select(F.col("lang"), "gram") \
         if grams is not None else \
-        labeled.select(F.col(lang_col).alias("lang"),
-                       F.explode(_grams(labeled, text_col, n))
+        labeled.select(F.col("lang"),
+                       F.explode(_grams(labeled, "text", NGRAM_N))
                        .alias("gram"))
     counts = ex.groupBy("lang", "gram").agg(
         F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("gram"))
     return (counts.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= PROFILE_K)
             .select("lang", "gram", "rank"))
 
 
+OOP_PENALTY = 150
+DOC_K = 80
+
+
 def classify_language(docs: DataFrame, profiles: DataFrame,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      k_doc: int = 100, penalty: int = 200,
-                      n: int = 3,
                       grams: DataFrame | None = None) -> DataFrame:
     """(id, lang_pred, dist): out-of-place classification — each of
-    the document's top-``k_doc`` grams contributes |doc_rank −
-    profile_rank|, or ``penalty`` when the language's profile lacks
+    the document's top-``DOC_K`` grams contributes |doc_rank −
+    profile_rank|, or ``OOP_PENALTY`` when the language's profile lacks
     the gram; the language with the smallest sum wins (ties by
     language code)."""
     from pyspark.sql import Window
 
-    ex = grams.select(F.col(id_col).alias("id"), "gram") \
+    ex = grams.select(F.col("doc_id").alias("id"), "gram") \
         if grams is not None else \
-        docs.select(F.col(id_col).alias("id"),
-                    F.explode(_grams(docs, text_col, n))
+        docs.select(F.col("doc_id").alias("id"),
+                    F.explode(_grams(docs, "text", NGRAM_N))
                     .alias("gram"))
     counts = ex.groupBy("id", "gram").agg(
         F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("id").orderBy(F.desc("cnt"), F.asc("gram"))
     dprof = (counts.withColumn("drank", F.row_number().over(w))
-             .filter(F.col("drank") <= k_doc)
+             .filter(F.col("drank") <= DOC_K)
              .select("id", "gram", "drank"))
     langs = profiles.select("lang").distinct()
     dists = (dprof.crossJoin(F.broadcast(langs))
@@ -120,7 +124,7 @@ def classify_language(docs: DataFrame, profiles: DataFrame,
              .groupBy("id", "lang")
              .agg(F.sum(F.coalesce(
                  F.abs(F.col("drank") - F.col("rank")),
-                 F.lit(int(penalty)))).cast("long").alias("dist")))
+                 F.lit(int(OOP_PENALTY)))).cast("long").alias("dist")))
     best = (dists.groupBy("id")
             .agg(F.min(F.struct("dist", "lang")).alias("b")))
     return best.select("id", F.col("b.lang").alias("lang_pred"),

@@ -20,7 +20,7 @@ open-domain text, where distinct miss labels grow with the corpus:
   and get_close_matches' (ratio, label) tie-break is order-free), so
   links are byte-identical to the unblocked pass while the per-miss
   cost drops from O(entities) to O(band).
-* **Miss cap** — at most ``max_fuzzy_misses`` distinct miss labels
+* **Miss cap** — at most ``MAX_FUZZY_MISSES`` distinct miss labels
   (deterministically the lexicographically smallest) go through the
   fuzzy pass; the overflow count is logged, never silent. Capped-out
   labels stay unlinked (entity_uri null), the same result as a miss.
@@ -44,10 +44,11 @@ from ferenda_spark.functions.text import normalize_space_col
 _MAX_ENTITY_DIM = 1_000_000
 
 
-def link_labels(mentions: DataFrame, entities: DataFrame,
-                label_col: str = "label",
-                cutoff: float = 0.8,
-                max_fuzzy_misses: int = 100_000) -> DataFrame:
+FUZZY_CUTOFF = 0.8
+MAX_FUZZY_MISSES = 100_000
+
+
+def link_labels(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     """mentions(..., label) → mentions + ``entity_uri`` (null if unlinkable).
 
     ``entities`` must have (uri, label). Any extra mention columns pass
@@ -63,7 +64,7 @@ def link_labels(mentions: DataFrame, entities: DataFrame,
            .groupBy("_elabel")
            .agg(F.min("entity_uri").alias("entity_uri")))
 
-    m = mentions.withColumn("_mlabel", normalize_space_col(F.col(label_col)))
+    m = mentions.withColumn("_mlabel", normalize_space_col(F.col("label")))
     # null labels have no join key and would reach the fuzzy UDF as
     # None (len(None) crash): route them straight to unlinked output
     null_m = (m.filter(F.col("_mlabel").isNull()).drop("_mlabel")
@@ -97,18 +98,18 @@ def link_labels(mentions: DataFrame, entities: DataFrame,
     by_len: dict[int, list[str]] = {}
     for lab in labels:
         by_len.setdefault(len(lab), []).append(lab)
-    lo_f = cutoff / (2.0 - cutoff)
-    hi_f = (2.0 - cutoff) / cutoff
+    lo_f = FUZZY_CUTOFF / (2.0 - FUZZY_CUTOFF)
+    hi_f = (2.0 - FUZZY_CUTOFF) / FUZZY_CUTOFF
 
     distinct_miss = misses.select("_mlabel").distinct()
     n_miss = distinct_miss.count()  # one scalar; gates the cap
-    if n_miss > max_fuzzy_misses:
-        print(f"link_labels: fuzzy phase capped at {max_fuzzy_misses} "
+    if n_miss > MAX_FUZZY_MISSES:
+        print(f"link_labels: fuzzy phase capped at {MAX_FUZZY_MISSES} "
               f"of {n_miss} distinct miss labels "
-              f"({n_miss - max_fuzzy_misses} left unlinked)",
+              f"({n_miss - MAX_FUZZY_MISSES} left unlinked)",
               file=sys.stderr)
         distinct_miss = (distinct_miss.orderBy("_mlabel")
-                         .limit(max_fuzzy_misses))
+                         .limit(MAX_FUZZY_MISSES))
 
     def fuzzy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -123,7 +124,7 @@ def link_labels(mentions: DataFrame, entities: DataFrame,
                 cands = [c for ln in range(lo, hi + 1)
                          for c in by_len.get(ln, ())]
                 best = difflib.get_close_matches(lab, cands, n=1,
-                                                 cutoff=cutoff)
+                                                 cutoff=FUZZY_CUTOFF)
                 out.append({"_mlabel": lab,
                             "entity_uri": uri_by_label[best[0]]
                             if best else None})
@@ -132,7 +133,7 @@ def link_labels(mentions: DataFrame, entities: DataFrame,
     fuzzy_map = distinct_miss.mapInPandas(
         fuzzy, schema="_mlabel string, entity_uri string")
 
-    # no broadcast hint: fuzzy_map is bounded by max_fuzzy_misses but
+    # no broadcast hint: fuzzy_map is bounded by MAX_FUZZY_MISSES but
     # AQE sees the real size and picks the join strategy
     fuzzy_hits = (misses.join(fuzzy_map, "_mlabel", "left")
                   .drop("_mlabel"))

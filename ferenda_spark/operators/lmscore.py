@@ -55,7 +55,7 @@ def _bigrams(df: DataFrame, text_col: str) -> DataFrame:
             .drop("_bg"))
 
 
-def fit_bigram_lm(train: DataFrame, text_col: str = "text") -> dict:
+def fit_bigram_lm(train: DataFrame) -> dict:
     """Fit the LM on the reference slice.
 
     Returns ``{"bigram": DF(w1,w2,c12), "context": DF(w1,c1),
@@ -63,11 +63,11 @@ def fit_bigram_lm(train: DataFrame, text_col: str = "text") -> dict:
     only (the trusted corpus is the small side by construction);
     vocabulary size is one scalar.
     """
-    bg = (_bigrams(train.select(text_col), text_col)
+    bg = (_bigrams(train.select("text"), "text")
           .groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")))
     bg = bg.persist()
     ctx = bg.groupBy("w1").agg(F.sum("c12").alias("c1"))
-    vocab = (train.select(F.explode(lm_tokens(F.col(text_col)))
+    vocab = (train.select(F.explode(lm_tokens(F.col("text")))
                           .alias("w")).distinct().count())
     return {"bigram": bg, "context": ctx, "vocab_size": vocab}
 
@@ -80,21 +80,17 @@ def _finish(scored: DataFrame, id_cols: list[str]) -> DataFrame:
         F.col("logprob_milli").cast("long").alias("logprob_milli"))
 
 
-def score_perplexity(docs: DataFrame, lm: dict, text_col: str = "text",
-                     id_cols: list[str] | None = None,
-                     broadcast_model: bool = True) -> DataFrame:
+def score_perplexity(docs: DataFrame, lm: dict) -> DataFrame:
     """Per-document LM score via explode + model joins.
 
-    Output: ``id_cols + (n_bigrams, n_oov, logprob_milli)`` where
+    Output: ``(doc_id, n_bigrams, n_oov, logprob_milli)`` where
     ``logprob_milli = floor(1000 · Σ ln P(w2|w1))`` (0 for docs with
     no bigrams) and ``n_oov`` counts bigrams unseen in training.
     """
-    id_cols = id_cols or ["doc_id"]
+    id_cols = ["doc_id"]
     v = int(lm["vocab_size"])
-    bg, ctx = lm["bigram"], lm["context"]
-    if broadcast_model:
-        bg, ctx = F.broadcast(bg), F.broadcast(ctx)
-    pairs = _bigrams(docs.select(*id_cols, text_col), text_col)
+    bg, ctx = F.broadcast(lm["bigram"]), F.broadcast(lm["context"])
+    pairs = _bigrams(docs.select(*id_cols, "text"), "text")
     logp = F.log((F.coalesce(F.col("c12"), F.lit(0)) + 1)
                  / (F.coalesce(F.col("c1"), F.lit(0)) + v))
     scored = (pairs.join(bg, ["w1", "w2"], "left")
@@ -112,7 +108,10 @@ def score_perplexity(docs: DataFrame, lm: dict, text_col: str = "text",
         id_cols)
 
 
-def perplexity_buckets(scored: DataFrame, n_buckets: int = 3) -> DataFrame:
+PERPLEXITY_BUCKETS = 3
+
+
+def perplexity_buckets(scored: DataFrame) -> DataFrame:
     """CCNet's head/middle/tail split: equal-frequency buckets by
     per-bigram log-probability (higher = more reference-like).
 
@@ -143,12 +142,12 @@ def perplexity_buckets(scored: DataFrame, n_buckets: int = 3) -> DataFrame:
         return scored.withColumn("bucket", F.lit(None).cast("int"))
     # ntile(n) gives the first (total mod n) buckets one extra row:
     # bucket b covers ranks (hi(b-1), hi(b)] with hi cumulative sizes
-    q, rem = total // n_buckets, total % n_buckets
+    q, rem = total // PERPLEXITY_BUCKETS, total % PERPLEXITY_BUCKETS
     hi_exprs, acc = [], 0
-    for b in range(1, n_buckets + 1):
+    for b in range(1, PERPLEXITY_BUCKETS + 1):
         acc += q + (1 if b <= rem else 0)
         hi_exprs.append((acc, b))
-    bucket = F.lit(n_buckets)
+    bucket = F.lit(PERPLEXITY_BUCKETS)
     for hi, b in reversed(hi_exprs[:-1]):
         bucket = F.when(F.col("_rank") <= hi, F.lit(b)).otherwise(bucket)
     return (ranked.withColumn("bucket", bucket.cast("int"))

@@ -30,14 +30,13 @@ MEDIA_META_SCHEMA = (
 KINDS = ["image", "audio", "video"]
 
 
-def attach_media(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def attach_media(docs: DataFrame) -> DataFrame:
     """Synthesize a binary media column from text bytes (deterministic
     stand-in for a real payload column; production input would carry
     the bytes directly)."""
     return docs.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"))
+        F.col("doc_id").alias("media_id"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"))
 
 
 def fake_decode(payload: bytes) -> dict:

@@ -139,9 +139,7 @@ def apply_patch_text(original: str, patch_text: str):
     return "\n".join(out), "applied", desc
 
 
-def apply_patches(docs: DataFrame, patches: DataFrame,
-                  key_col: str = "doc_id", text_col: str = "text",
-                  patch_col: str = "patch") -> DataFrame:
+def apply_patches(docs: DataFrame, patches: DataFrame) -> DataFrame:
     """docs + ``patched_text``/``patch_status``/``patch_desc``.
 
     ``patches(key_col, patch_col)`` is broadcast (patches are
@@ -150,8 +148,8 @@ def apply_patches(docs: DataFrame, patches: DataFrame,
     rows stream through the Arrow pass untouched with null status.
     """
     joined = docs.join(
-        F.broadcast(patches.withColumnRenamed(patch_col, "_patch")),
-        key_col, "left")
+        F.broadcast(patches.withColumnRenamed("patch", "_patch")),
+        "doc_id", "left")
     out_schema = T.StructType(
         [f for f in docs.schema.fields]
         + [T.StructField("patched_text", T.StringType()),
@@ -162,7 +160,7 @@ def apply_patches(docs: DataFrame, patches: DataFrame,
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             patched, status, descs = [], [], []
-            for text, p in zip(pdf[text_col], pdf["_patch"]):
+            for text, p in zip(pdf["text"], pdf["_patch"]):
                 if p is None or (isinstance(p, float) and pd.isna(p)):
                     patched.append(text)
                     status.append(None)

@@ -39,8 +39,7 @@ CHECK_KINDS = ("complete", "unique", "min_at_least", "max_at_most",
                "distinct_at_least")
 
 
-def profile(df: DataFrame, columns: list[str] | None = None,
-            approximate: bool = False) -> DataFrame:
+def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Per-column statistics in one aggregation pass: ``(column,
     n_rows, n_null, n_distinct, completeness, min_value, max_value)``
     with min/max rendered as strings (numeric columns keep numeric
@@ -54,12 +53,11 @@ def profile(df: DataFrame, columns: list[str] | None = None,
                    if isinstance(f.dataType, (StringType, NumericType))]
     if not columns:
         raise ValueError("profile: no string/numeric columns to profile")
-    nd = F.approx_count_distinct if approximate else F.countDistinct
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in columns:
         aggs += [
             F.count(c).alias(f"{c}__n"),
-            nd(c).alias(f"{c}__nd"),
+            F.countDistinct(c).alias(f"{c}__nd"),
             F.min(c).cast("string").alias(f"{c}__min"),
             F.max(c).cast("string").alias(f"{c}__max"),
         ]
@@ -87,35 +85,33 @@ def profile(df: DataFrame, columns: list[str] | None = None,
         F.col("s.max_value").alias("max_value"))
 
 
-def numeric_quantiles(df: DataFrame, columns: list[str] | None = None,
-                      probs: tuple = (0.5, 0.95),
-                      approximate: bool = False) -> DataFrame:
+QUANTILE_PROBS = (0.25, 0.5, 0.95)
+
+
+def numeric_quantiles(df: DataFrame) -> DataFrame:
     """Per-numeric-column quantiles in one aggregation pass:
-    ``(column, p, value)``.  Exact linear-interpolated percentile by
-    default (SQL ``percentile_cont`` semantics, oracle-matchable);
-    ``approximate=True`` switches to ``percentile_approx`` — the
-    one-pass sketch a 10^12-row profile wants."""
-    if columns is None:
-        columns = [f.name for f in df.schema.fields
-                   if isinstance(f.dataType, NumericType)]
+    ``(column, p, value)`` for every p in ``QUANTILE_PROBS``: exact
+    linear-interpolated percentiles (SQL ``percentile_cont``
+    semantics, oracle-matchable)."""
+    columns = [f.name for f in df.schema.fields
+               if isinstance(f.dataType, NumericType)]
     if not columns:
         raise ValueError("numeric_quantiles: no numeric columns")
-    fn = F.percentile_approx if approximate else F.percentile
-    aggs = [fn(F.col(c).cast("double"), F.lit(p)).alias(f"{c}__{i}")
-            for c in columns for i, p in enumerate(probs)]
+    aggs = [F.percentile(F.col(c).cast("double"), F.lit(p))
+            .alias(f"{c}__{i}")
+            for c in columns for i, p in enumerate(QUANTILE_PROBS)]
     row = df.agg(*aggs)
     per = F.array(*[
         F.struct(F.lit(c).alias("column"),
                  F.lit(float(p)).alias("p"),
                  F.col(f"{c}__{i}").alias("value"))
-        for c in columns for i, p in enumerate(probs)])
+        for c in columns for i, p in enumerate(QUANTILE_PROBS)])
     return (row.select(F.explode(per).alias("s"))
             .select("s.column", "s.p",
                     F.round("s.value", 6).alias("value")))
 
 
-def check(df: DataFrame, checks: list[tuple] | DataFrame,
-          approximate: bool = False) -> DataFrame:
+def check(df: DataFrame, checks: list[tuple] | DataFrame) -> DataFrame:
     """Evaluate declarative constraints against one profile pass:
     ``(check_id, column, kind, threshold, actual, passed)``.
 
@@ -136,14 +132,8 @@ def check(df: DataFrame, checks: list[tuple] | DataFrame,
     if bad:
         raise ValueError(f"check: unknown constraint kinds {bad!r} "
                          f"(supported: {CHECK_KINDS})")
-    if approximate and any(r[2] == "unique" for r in rows):
-        raise ValueError(
-            "check: 'unique' is an exact equality test "
-            "(n_distinct == n_present) — meaningless against a "
-            "HyperLogLog estimate; drop approximate=True or the "
-            "unique constraint")
     cols = sorted({r[1] for r in rows})
-    prof = profile(df, cols, approximate)
+    prof = profile(df, cols)
     spark = df.sparkSession
     cdf = spark.createDataFrame([tuple(r) for r in rows], CHECK_DDL)
     j = cdf.join(F.broadcast(prof),

@@ -43,30 +43,19 @@ from pyspark.sql import functions as F
 #: fixed-point scale: ranks live in [0, 10^12] "pico" units
 SCALE = 10**12
 
+#: PageRank/TrustRank damping factor, in percent
+DAMPING_PCT = 85
 
-def pagerank(edges: DataFrame, iters: int = 3,
-             damping_pct: int = 85,
-             dangling: str = "redistribute",
-             init: DataFrame | None = None) -> DataFrame:
+
+def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     """(node, rank_micro) for every node of ``edges(src, dst)``.
 
     ``rank_micro`` = floor(rank · 10^6) of the iteration-``iters``
-    integer PageRank with damping ``damping_pct``/100, uniform
+    integer PageRank with damping ``DAMPING_PCT``/100, uniform
     initialization 1/N; dangling mass redistributed uniformly per
-    iteration (``dangling="drop"`` opts out).
-
-    ``init`` warm-starts the vector from a PREVIOUS run's output
-    (``(node, rank_micro)`` — e.g. the last snapshot's ranks before a
-    crawl-over-crawl delta): each node starts at its prior rank
-    (scaled back to the internal fixed point; nodes new to the graph
-    start at the uniform prior), so after a small edge delta a couple
-    of iterations re-converge instead of a cold start's full run —
-    the incremental re-ranking pattern per crawl snapshot.  The
-    result remains exactly "``iters`` power iterations from that
-    vector" — deterministic and replayable, just not identical to a
-    cold start at low iteration counts (they converge to the same
-    fixpoint).
+    iteration.
     """
+    damping_pct = DAMPING_PCT
     from pyspark import StorageLevel
     edges = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
     nodes = (edges.select(F.col("src").alias("node"))
@@ -81,17 +70,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     has_out = outdeg.select(F.col("src").alias("node"))
 
-    if init is not None:
-        prior = init.select(F.col("node"),
-                            (F.col("rank_micro") * (10 ** 6))
-                            .cast("long").alias("r0"))
-        rank = (nodes.join(prior, "node", "left")
-                .select("node",
-                        F.coalesce("r0", F.lit(unit)).cast("long")
-                        .alias("r"))
-                .localCheckpoint(eager=False))
-    else:
-        rank = nodes.withColumn("r", F.lit(unit).cast("long"))
+    rank = nodes.withColumn("r", F.lit(unit).cast("long"))
     for _ in range(iters):
         contribs = (edges
                     .join(rank.withColumnRenamed("node", "src"), "src")
@@ -99,30 +78,20 @@ def pagerank(edges: DataFrame, iters: int = 3,
                     .select(F.col("dst").alias("node"),
                             F.expr("r DIV outdeg").alias("c")))
         incoming = contribs.groupBy("node").agg(F.sum("c").alias("inc"))
-        if dangling == "redistribute":
-            # Σ r over no-out-edge nodes: a 1-row aggregate broadcast
-            # into every update — each node receives dm DIV n inside
-            # the damped term (canonical PageRank; integer-exact)
-            dm = (rank.join(has_out, "node", "left_anti")
-                  .agg(F.coalesce(F.sum("r"), F.lit(0))
-                       .cast("long").alias("dm")))
-            nxt = (nodes.join(incoming, "node", "left")
-                   .crossJoin(F.broadcast(dm))
-                   .select("node",
-                           (F.lit(base).cast("long")
-                            + F.expr(f"({damping_pct} * (coalesce(inc, 0)"
-                                     f" + dm DIV {n})) DIV 100"))
-                           .alias("r"))
-                   .localCheckpoint(eager=False))
-        else:
-            nxt = (nodes.join(incoming, "node", "left")
-                   .select("node",
-                           (F.lit(base).cast("long")
-                            + F.expr(f"({damping_pct} * coalesce(inc, 0))"
-                                     f" DIV 100"))
-                           .alias("r"))
-                   .localCheckpoint(eager=False))
-        rank = nxt
+        # Σ r over no-out-edge nodes: a 1-row aggregate broadcast into
+        # every update — each node receives dm DIV n inside the damped
+        # term (canonical PageRank; integer-exact)
+        dm = (rank.join(has_out, "node", "left_anti")
+              .agg(F.coalesce(F.sum("r"), F.lit(0))
+                   .cast("long").alias("dm")))
+        rank = (nodes.join(incoming, "node", "left")
+                .crossJoin(F.broadcast(dm))
+                .select("node",
+                        (F.lit(base).cast("long")
+                         + F.expr(f"({damping_pct} * (coalesce(inc, 0)"
+                                  f" + dm DIV {n})) DIV 100"))
+                        .alias("r"))
+                .localCheckpoint(eager=False))
     out = rank.select("node",
                       F.expr(f"r DIV {10**6}").cast("long")
                       .alias("rank_micro")).localCheckpoint(eager=True)
@@ -131,8 +100,8 @@ def pagerank(edges: DataFrame, iters: int = 3,
     return out
 
 
-def trustrank(edges: DataFrame, seeds: DataFrame, iters: int = 3,
-              damping_pct: int = 85) -> DataFrame:
+def trustrank(edges: DataFrame, seeds: DataFrame,
+              iters: int = 3) -> DataFrame:
     """(node, trust_micro) — seed-personalized PageRank (Gyöngyi,
     Garcia-Molina & Pedersen, "Combating Web Spam with TrustRank",
     VLDB 2004) over ``edges(src, dst)`` with trusted ``seeds(node)``.
@@ -161,6 +130,7 @@ def trustrank(edges: DataFrame, seeds: DataFrame, iters: int = 3,
     seed flag rides the rank vector (computed once, never re-joined).
     """
     from pyspark import StorageLevel
+    damping_pct = DAMPING_PCT
     edges = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
     seed_nodes = seeds.select(F.col("node")).distinct()
     nodes = (edges.select(F.col("src").alias("node"))
@@ -221,10 +191,13 @@ def trustrank(edges: DataFrame, seeds: DataFrame, iters: int = 3,
 HITS_SCALE = 10**6
 
 
-def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
+HITS_ITERS = 2
+
+
+def hits(edges: DataFrame) -> DataFrame:
     """Hubs and authorities (Kleinberg HITS) over ``edges(src, dst)``.
 
-    Returns (node, hub_micro, auth_micro): the iteration-``iters``
+    Returns (node, hub_micro, auth_micro): the iteration-``HITS_ITERS``
     mutually-reinforcing scores — a good *authority* is pointed to by
     good hubs, a good *hub* points to good authorities.  On a web/
     citation KG this separates survey/index pages (hubs) from the
@@ -265,7 +238,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
 
     hub = nodes.withColumn("h", F.lit(HITS_SCALE).cast("long"))
     auth = nodes.withColumn("a", F.lit(0).cast("long"))
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         # authority step: a(v) = Σ h(u) over in-edges u→v, L1-renorm
         a_raw = (edges.join(hub.withColumnRenamed("node", "src"), "src")
                  .groupBy(F.col("dst").alias("node"))
@@ -360,7 +333,10 @@ def triangles(edges: DataFrame) -> DataFrame:
     return out
 
 
-def link_prediction_ra(edges: DataFrame, max_hub_degree: int = 1000
+RA_MAX_HUB_DEGREE = 50
+
+
+def link_prediction_ra(edges: DataFrame
                        ) -> DataFrame:
     """Resource-Allocation link prediction over the undirected simple
     graph of ``edges(src, dst)``: for every non-adjacent pair (u, v)
@@ -375,7 +351,7 @@ def link_prediction_ra(edges: DataFrame, max_hub_degree: int = 1000
 
     Scale design: a common neighbor w of degree d generates
     d·(d-1)/2 candidate pairs — quadratic in the head entity's
-    degree, the classic skew bomb.  ``max_hub_degree`` excludes
+    degree, the classic skew bomb.  ``RA_MAX_HUB_DEGREE`` excludes
     hub intermediaries from candidate GENERATION; this is the
     standard LSH-style blocking compromise, and near-lossless for
     RA specifically because an excluded hub's score contribution is
@@ -395,7 +371,7 @@ def link_prediction_ra(edges: DataFrame, max_hub_degree: int = 1000
            .unionByName(
                und.select(F.col("v").alias("w"), F.col("u").alias("n"))))
     mids = (adj.join(deg.withColumnRenamed("node", "w"), "w")
-            .filter(F.col("degree") <= F.lit(int(max_hub_degree))))
+            .filter(F.col("degree") <= F.lit(RA_MAX_HUB_DEGREE)))
     a1 = mids.select("w", F.col("n").alias("u"), "degree")
     a2 = mids.select("w", F.col("n").alias("v"))
     cand = (a1.join(a2, "w").filter(F.col("u") < F.col("v")))
@@ -408,7 +384,10 @@ def link_prediction_ra(edges: DataFrame, max_hub_degree: int = 1000
     return fresh
 
 
-def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
+LABEL_PROPAGATION_ITERS = 2
+
+
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Community detection by synchronous label propagation over the
     undirected simple graph of ``edges(src, dst)``: every node starts
     as its own label; each round it adopts the most frequent label
@@ -438,7 +417,7 @@ def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
            .persist())
     labels = (adj.select("node").distinct()
               .select("node", F.col("node").alias("label")))
-    for _ in range(int(iters)):
+    for _ in range(LABEL_PROPAGATION_ITERS):
         nbr_labels = adj.join(
             labels.withColumnRenamed("node", "nbr"), "nbr")
         counts = (nbr_labels.groupBy("node", "label")
@@ -456,9 +435,12 @@ def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
     return labels
 
 
-def k_core(edges: DataFrame, k: int, iters: int = 10) -> DataFrame:
+K_CORE_ITERS = 3
+
+
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """The k-core of the undirected simple graph of ``edges(src,
-    dst)``: (node, degree) after ``iters`` rounds of peeling — each
+    dst)``: (node, degree) after ``K_CORE_ITERS`` rounds of peeling — each
     round removes every node whose degree in the CURRENT subgraph is
     below ``k``, and the edges incident to it.
 
@@ -466,10 +448,10 @@ def k_core(edges: DataFrame, k: int, iters: int = 10) -> DataFrame:
     so peeling converges; rounds needed = the graph's peeling depth,
     O(log n) on web-like graphs in practice.  As with
     :func:`label_propagation`, the gate contract is the state after
-    exactly ``iters`` rounds (an unrolled-SQL-restatable statement);
+    exactly ``K_CORE_ITERS`` rounds (an unrolled-SQL-restatable statement);
     the loop breaks early once a round removes nothing, which equals
     the N-round state, so early exit never changes the result —
-    callers who need the true core pick ``iters`` ≥ peel depth and
+    callers who need the true core pick ``K_CORE_ITERS`` ≥ peel depth and
     check :func:`k_core` against a second call with ``iters+1`` (or
     just pass a generous bound; converged rounds are free).
 
@@ -485,7 +467,7 @@ def k_core(edges: DataFrame, k: int, iters: int = 10) -> DataFrame:
            .distinct()
            .localCheckpoint(eager=True))
     n_edges = cur.count()
-    for _ in range(int(iters)):
+    for _ in range(K_CORE_ITERS):
         if n_edges == 0:
             break
         deg = (cur.select(F.col("u").alias("node"))
@@ -526,36 +508,45 @@ def _copair(edges: DataFrame, key: str, val: str,
             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("n")))
 
 
-def co_citation(edges: DataFrame, max_out_degree: int = 1000
+COCITATION_MAX_OUT_DEGREE = 50
+
+
+def co_citation(edges: DataFrame
                 ) -> DataFrame:
     """Co-citation pairs over directed ``edges(src, dst)``: (a, b,
     n_cocited) for every target pair cited together by at least one
     common source — the classic "related documents" signal (Small
     1973); two papers co-cited often are topically close even when
     neither cites the other.  Sources citing more than
-    ``max_out_degree`` targets are excluded from pair generation
+    ``COCITATION_MAX_OUT_DEGREE`` targets are excluded from pair generation
     (a review article citing 10^4 docs would emit 5·10^7 pairs)."""
-    return (_copair(edges, "src", "dst", max_out_degree)
+    return (_copair(edges, "src", "dst", COCITATION_MAX_OUT_DEGREE)
             .select("a", "b", F.col("n").alias("n_cocited")))
 
 
-def bibliographic_coupling(edges: DataFrame,
-                           max_in_degree: int = 1000) -> DataFrame:
+COUPLING_MAX_IN_DEGREE = 50
+
+
+def bibliographic_coupling(edges: DataFrame) -> DataFrame:
     """Bibliographic-coupling pairs over directed ``edges(src,
     dst)``: (a, b, n_shared) for every source pair citing at least
     one common target (Kessler 1963) — the transpose of
-    :func:`co_citation`; targets cited by more than ``max_in_degree``
+    :func:`co_citation`; targets cited by more than ``COUPLING_MAX_IN_DEGREE``
     sources are excluded (the head statute every document cites
     couples everything to everything and carries no signal)."""
-    return (_copair(edges, "dst", "src", max_in_degree)
+    return (_copair(edges, "dst", "src", COUPLING_MAX_IN_DEGREE)
             .select("a", "b", F.col("n").alias("n_shared")))
 
 
-def random_walks(edges: DataFrame, n_walks: int = 2,
-                 length: int = 3, max_degree: int = None,
-                 salt: str = "walk-v1") -> DataFrame:
+WALK_LENGTH = 3
+WALK_SALT = "walk-v1"
+WALKS_PER_NODE = 1
+
+
+def random_walks(edges: DataFrame) -> DataFrame:
     """DeepWalk-style walk corpus over directed ``edges(src, dst)``:
-    ``n_walks`` walks of up to ``length`` steps from every node, as
+    ``WALKS_PER_NODE`` walks of up to ``WALK_LENGTH`` steps from
+    every node, as
     ``(walk_id, step, node)`` rows — the training sequences a
     skip-gram graph-embedding job consumes (Perozzi et al., DeepWalk,
     KDD 2014).  The reference has no embedding trainer; this is the
@@ -572,35 +563,20 @@ def random_walks(edges: DataFrame, n_walks: int = 2,
     Scale shape: per step, ONE join of the frontier against the
     adjacency on the current node plus ONE map-side-combinable
     ``min(struct)`` groupBy — no window, no collect; the frontier is
-    persisted per step and the parent cache dropped.  Hub skew is the
-    real hazard (every walk sitting on a hub joins against its full
-    adjacency), so ``max_degree`` caps adjacency per node BEFORE
-    walking: neighbor ``v`` of a node with out-degree ``d`` survives
-    iff ``h(salt:deg:u:v) % ceil(d / max_degree) == 0`` — an expected
-    ``max_degree``-sized deterministic subsample, no window, no
-    per-node sort.  Walks stop early at sinks (rows simply end).
+    persisted per step and the parent cache dropped.  Walks stop
+    early at sinks (rows simply end).
     """
     from ferenda_spark.operators.sampling import sample_uniform
 
     adj = (edges.select("src", "dst").distinct()
            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()))
-    if max_degree is not None:
-        deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-        keep_mod = F.ceil(F.col("_deg") / F.lit(int(max_degree)))
-        hv = sample_uniform(
-            F.concat_ws(":", F.lit("deg"), F.col("src"), F.col("dst")),
-            salt)
-        adj = (adj.join(deg, "src")
-               .filter((F.col("_deg") <= F.lit(int(max_degree)))
-                       | (hv % keep_mod == 0))
-               .drop("_deg"))
     adj = adj.persist()
     nodes = (adj.select(F.col("src").alias("node"))
              .unionByName(adj.select(F.col("dst").alias("node")))
              .distinct())
     start = (nodes.select(
         "node",
-        F.explode(F.sequence(F.lit(0), F.lit(int(n_walks) - 1)))
+        F.explode(F.sequence(F.lit(0), F.lit(WALKS_PER_NODE - 1)))
         .alias("_w"))
         .select(F.concat_ws("#", "node", "_w").alias("walk_id"),
                 F.lit(0).alias("step"), F.col("node")))
@@ -609,14 +585,14 @@ def random_walks(edges: DataFrame, n_walks: int = 2,
     # join chain, and lineage stays O(1) deep at any walk length
     frontier = start.localCheckpoint()
     out = [frontier]
-    for t in range(1, int(length) + 1):
+    for t in range(1, WALK_LENGTH + 1):
         cand = frontier.join(
             adj, frontier["node"] == adj["src"]).select(
             "walk_id",
             F.struct(
                 sample_uniform(
                     F.concat_ws(":", F.col("walk_id"),
-                                F.lit(str(t)), F.col("dst")), salt)
+                                F.lit(str(t)), F.col("dst")), WALK_SALT)
                 .alias("h"),
                 F.col("dst").alias("v")).alias("_c"))
         frontier = (cand.groupBy("walk_id")
@@ -739,8 +715,14 @@ def _scc_driver(pairs: list) -> dict:
     return comp
 
 
-def scc(edges: DataFrame, max_rounds: int = 15, max_iters: int = 30,
-        driver_max: int = 1_000_000) -> DataFrame:
+DRIVER_MAX = 1_000_000
+SCC_MAX_ITERS = 30
+
+
+SCC_MAX_ROUNDS = 15
+
+
+def scc(edges: DataFrame) -> DataFrame:
     """Strongly connected components of directed ``edges(src, dst)``:
     ``(id, comp)`` for every node incident to a non-loop edge, where
     ``comp`` is the MINIMUM id in the node's SCC — the cycle
@@ -769,7 +751,7 @@ def scc(edges: DataFrame, max_rounds: int = 15, max_iters: int = 30,
     class retires ≥ 1 SCC per round; web-shaped graphs (one giant
     SCC + shallow DAG periphery) finish in 2-3 rounds because the
     pair partition shatters the condensation DAG immediately.  A
-    graph needing more than ``max_rounds`` raises loudly (the
+    graph needing more than ``SCC_MAX_ROUNDS`` raises loudly (the
     components() non-convergence contract) rather than returning a
     partial answer.
 
@@ -781,10 +763,9 @@ def scc(edges: DataFrame, max_rounds: int = 15, max_iters: int = 30,
     Self-loops are dropped up front (they never change SCC
     membership); isolated nodes are absent (each trivially its own
     SCC) — union them back at the call site if needed.  Below
-    ``driver_max`` materialized edges a collect + iterative Kosaraju
+    ``DRIVER_MAX`` materialized edges a collect + iterative Kosaraju
     beats ~8 distributed jobs per doubling round by an order of
-    magnitude (the components() fast-path precedent); pass
-    ``driver_max=0`` to force the distributed path.
+    magnitude (the components() fast-path precedent).
     """
     e0 = (edges.select(F.col("src").cast("long").alias("u"),
                        F.col("dst").cast("long").alias("v"))
@@ -793,7 +774,7 @@ def scc(edges: DataFrame, max_rounds: int = 15, max_iters: int = 30,
           .distinct()
           .localCheckpoint(eager=True))
     spark = edges.sparkSession
-    if e0.count() <= driver_max:
+    if e0.count() <= DRIVER_MAX:
         comp = _scc_driver([(r["u"], r["v"]) for r in e0.collect()])
         return spark.createDataFrame(sorted(comp.items()),
                                      "id long, comp long")
@@ -805,10 +786,10 @@ def scc(edges: DataFrame, max_rounds: int = 15, max_iters: int = 30,
                       F.col("id").alias("lb"))
               .localCheckpoint(eager=True))
     cur_edges = e0
-    for _ in range(int(max_rounds)):
+    for _ in range(SCC_MAX_ROUNDS):
         if labels.isEmpty():
             return done
-        fixed = _min_reach_pair(labels, cur_edges, max_iters)
+        fixed = _min_reach_pair(labels, cur_edges, SCC_MAX_ITERS)
         matched = (fixed.filter(F.col("lf") == F.col("lb"))
                    .select("id", F.col("lf").alias("comp")))
         done = done.unionByName(matched).localCheckpoint(eager=True)
@@ -830,9 +811,9 @@ def scc(edges: DataFrame, max_rounds: int = 15, max_iters: int = 30,
                      .select("u", "v")
                      .localCheckpoint(eager=True))
     raise RuntimeError(
-        f"scc: {max_rounds} coloring rounds did not retire every "
+        f"scc: {SCC_MAX_ROUNDS} coloring rounds did not retire every "
         "node — the condensation is deeper than expected; raise "
-        "max_rounds")
+        "SCC_MAX_ROUNDS")
 
 
 def condensation(edges: DataFrame, comps: DataFrame) -> DataFrame:
@@ -860,8 +841,10 @@ def condensation(edges: DataFrame, comps: DataFrame) -> DataFrame:
     return out
 
 
-def topo_levels(dag: DataFrame, max_iters: int = 50,
-                driver_max: int = 1_000_000) -> DataFrame:
+TOPO_MAX_ITERS = 50
+
+
+def topo_levels(dag: DataFrame) -> DataFrame:
     """(node, level) for every node of the acyclic ``dag(src, dst)``:
     ``level`` = length of the longest path from any source (in-degree
     0 ⇒ level 0) — the dependency-scheduling layering: all nodes of
@@ -875,9 +858,9 @@ def topo_levels(dag: DataFrame, max_iters: int = 50,
     shallow; the giant SCC collapses to one node), one shuffle +
     localCheckpoint per iteration, exact fixpoint via the BIGINT
     level sum.  A CYCLIC input cannot converge (levels grow without
-    bound) and raises loudly at ``max_iters`` — feeding a non-DAG to
-    a topological layering is a caller bug, never silent.  Below
-    ``driver_max`` edges: collect + Kahn-style driver pass (the scc
+    bound) and raises loudly at ``TOPO_MAX_ITERS`` — feeding a non-DAG
+    to a topological layering is a caller bug, never silent.  Below
+    ``DRIVER_MAX`` edges: collect + Kahn-style driver pass (the scc
     fast-path precedent)."""
     e0 = (dag.select(F.col("src").cast("long").alias("u"),
                      F.col("dst").cast("long").alias("v"))
@@ -886,7 +869,7 @@ def topo_levels(dag: DataFrame, max_iters: int = 50,
           .distinct()
           .localCheckpoint(eager=True))
     spark = dag.sparkSession
-    if e0.count() <= driver_max:
+    if e0.count() <= DRIVER_MAX:
         pairs = [(r["u"], r["v"]) for r in e0.collect()]
         from collections import defaultdict
         indeg: dict = defaultdict(int)
@@ -925,7 +908,7 @@ def topo_levels(dag: DataFrame, max_iters: int = 50,
           .withColumn("level", F.lit(0).cast("long"))
           .localCheckpoint(eager=True))
     prev = _lv_sum(lv)
-    for _ in range(int(max_iters)):
+    for _ in range(TOPO_MAX_ITERS):
         inc = (e0.join(lv.select(F.col("node").alias("u"), "level"), "u")
                .groupBy("v").agg((F.max("level") + 1).alias("up")))
         lv = (lv.join(inc, lv["node"] == inc["v"], "left")
@@ -938,9 +921,9 @@ def topo_levels(dag: DataFrame, max_iters: int = 50,
             return lv
         prev = cur
     raise ValueError(
-        f"topo_levels: no fixpoint in {max_iters} iterations — the "
+        f"topo_levels: no fixpoint in {TOPO_MAX_ITERS} iterations — the "
         "input contains a cycle (or a longer-than-expected path); "
-        "run scc()/condensation() first or raise max_iters")
+        "run scc()/condensation() first or raise TOPO_MAX_ITERS")
 
 
 def landmark_distances(edges: DataFrame, landmarks: DataFrame,
@@ -1053,9 +1036,11 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
             6).alias("r"))
 
 
-def harmonic_centrality(edges: DataFrame, landmarks: DataFrame,
-                        max_depth: int = 12,
-                        n_nodes: int | None = None) -> DataFrame:
+HARMONIC_MAX_DEPTH = 15
+
+
+def harmonic_centrality(edges: DataFrame,
+                        landmarks: DataFrame) -> DataFrame:
     """(node, k_reached, inv_dist_sum_micro, harmonic_micro) —
     landmark-sampled harmonic centrality H(v) = Σ_u 1/d(v,u)
     (Boldi & Vigna's axiomatically-preferred centrality; finite on
@@ -1072,20 +1057,18 @@ def harmonic_centrality(edges: DataFrame, landmarks: DataFrame,
     the oracle restates the arithmetic bit-for-bit (no float
     harmonic sums that round differently per engine).
 
-    ``n_nodes`` (N) defaults to the distinct endpoint count of
-    ``edges`` — one bounded aggregate job; pass it when the caller
-    already knows the graph size.  Unreached (node, landmark) pairs
+    N is the distinct endpoint count of ``edges`` — one bounded
+    aggregate job.  Unreached (node, landmark) pairs
     contribute 0, exactly the harmonic convention for infinite
     distance."""
     lm = landmarks.select(F.col("node").alias("landmark")).distinct()
     k = lm.count()
     if k == 0:
         raise ValueError("harmonic_centrality: empty landmark set")
-    if n_nodes is None:
-        n_nodes = (edges.select(F.col("src").alias("n"))
-                   .unionByName(edges.select(F.col("dst").alias("n")))
-                   .distinct().count())
-    d = landmark_distances(edges, landmarks, max_depth=max_depth)
+    n_nodes = (edges.select(F.col("src").alias("n"))
+               .unionByName(edges.select(F.col("dst").alias("n")))
+               .distinct().count())
+    d = landmark_distances(edges, landmarks, max_depth=HARMONIC_MAX_DEPTH)
     return (d.filter(F.col("dist") > 0)
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("k_reached"),

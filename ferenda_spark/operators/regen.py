@@ -36,15 +36,14 @@ from pyspark.sql import functions as F
 from ferenda_spark.operators.resolve import resolve_citations
 
 
-def dependency_pairs(edges: DataFrame, pages_uris: DataFrame,
-                     url_col: str = "url") -> DataFrame:
+def dependency_pairs(edges: DataFrame, pages_uris: DataFrame) -> DataFrame:
     """(url, depends_on) rows: ``url``'s generated output depends on
     ``depends_on`` — S citing T makes T's page depend on S, because
     T's generated output embeds the inbound-reference annotation
     (annotations.rq:14-18; add_dependency's direction,
     documentrepository.py:2055-2077).  Self-citations collapse (a doc
     trivially depends on itself through its own hash)."""
-    resolved = resolve_citations(edges, pages_uris, url_col)
+    resolved = resolve_citations(edges, pages_uris)
     return (resolved.filter(F.col("target_url").isNotNull())
             .select(F.col("target_url").alias("url"),
                     F.regexp_replace("subj", r"#.*$", "")
@@ -53,18 +52,19 @@ def dependency_pairs(edges: DataFrame, pages_uris: DataFrame,
             .distinct())
 
 
-def stale_set(dep_pairs: DataFrame, changed: DataFrame,
-              max_depth: int | None = None,
-              url_col: str = "url") -> DataFrame:
+STALE_MAX_DEPTH = 4
+
+
+def stale_set(dep_pairs: DataFrame, changed: DataFrame) -> DataFrame:
     """(url, depth) rows: every document whose generated output is
     stale given the ``changed`` urls — the changed documents
     themselves at depth 0, direct dependents at 1, and so on
     transitively (a regenerated page changes ITS rendered output,
     which other pages may embed in turn).
 
-    ``max_depth=None`` (default) iterates to fixpoint; a bound stays
-    available when the product contract caps cascade depth.  Seeded
-    BFS: each round joins the frontier against the reversed dependency
+    The cascade stops at ``STALE_MAX_DEPTH`` or at the fixpoint,
+    whichever comes first.  Seeded BFS: each round joins the frontier
+    against the reversed dependency
     edges, anti-joins the visited set (cycle-safe, no re-derivation),
     and ``localCheckpoint``s the new frontier so the loop's plan never
     nests.  depth is the minimum dependency distance from any changed
@@ -81,7 +81,7 @@ def stale_set(dep_pairs: DataFrame, changed: DataFrame,
     rev = (dep_pairs.select(F.col("depends_on").alias("src"),
                             F.col("url").alias("dst"))
            .persist(StorageLevel.MEMORY_AND_DISK))
-    seed = (changed.select(F.col(url_col).alias("url")).distinct()
+    seed = (changed.select(F.col("url")).distinct()
             .withColumn("depth", F.lit(0))
             .localCheckpoint())
     # parts-list shape (same as analytics._closure_fixpoint): only the
@@ -92,11 +92,8 @@ def stale_set(dep_pairs: DataFrame, changed: DataFrame,
     parts = [seed]
     frontier = seed.select("url")
     d = 0
-    while max_depth is None or d < max_depth:
+    while d < STALE_MAX_DEPTH:
         d += 1
-        if d > 10_000:          # |urls| rounds at most; this is a bug
-            raise RuntimeError("stale_set: BFS did not converge "
-                               "(visited anti-join broken?)")
         visited = reduce(DataFrame.unionByName, parts)
         nxt = (frontier.join(rev, frontier["url"] == rev["src"])
                .select(F.col("dst").alias("url")).distinct()

@@ -56,35 +56,32 @@ def _as_utc(entries: DataFrame, ts_col: str) -> Column:
     return F.col(ts_col)
 
 
-def atom_feeds(entries: DataFrame, feed_col: str = "feed",
-               id_col: str = "entry_id", title_col: str = "title",
-               ts_col: str = "ts",
-               link_col: str | None = None) -> DataFrame:
+def atom_feeds(entries: DataFrame, link_col: str | None = None) -> DataFrame:
     """(feed, atom_xml): one Atom document per feed, entries
     newest-first (ties: lower id first), feed ``updated`` = newest
     entry timestamp. Caller bounds entries-per-feed beforehand.
     ``link_col`` (optional) adds ``<link rel="alternate" href>`` per
     entry — the discovery hook sources/feeds.py's reader consumes;
     omitted, the emitted bytes are unchanged."""
-    tsu = _as_utc(entries, ts_col)
+    tsu = _as_utc(entries, "ts")
     # cast covers TIMESTAMP_NTZ inputs (unix_micros wants TIMESTAMP)
     key = F.struct(
         (-F.unix_micros(tsu.cast("timestamp"))).alias("negus"),
-        F.col(id_col).alias("id"))
+        F.col("event_id").alias("id"))
     link_xml = F.lit("") if link_col is None else F.concat(
         F.lit('<link rel="alternate" href="'),
         escape_attr(F.col(link_col)), F.lit('"/>'))
     item = F.struct(key.alias("k"),
                     F.concat(
                         F.lit("<entry><id>urn:entry:"),
-                        F.col(id_col).cast("string"),
+                        F.col("event_id").cast("string"),
                         F.lit("</id><title>"),
-                        escape_xml(F.col(title_col)),
+                        escape_xml(F.col("title")),
                         F.lit("</title>"), link_xml,
                         F.lit("<updated>"),
                         rfc3339(tsu),
                         F.lit("</updated></entry>")).alias("xml"))
-    agg = entries.groupBy(feed_col).agg(
+    agg = entries.groupBy("feed").agg(
         F.array_sort(F.collect_list(item)).alias("items"),
         F.max(tsu).alias("_newest"))
     body = F.array_join(F.transform(F.col("items"), lambda s: s["xml"]),
@@ -92,10 +89,10 @@ def atom_feeds(entries: DataFrame, feed_col: str = "feed",
     xml = F.concat(
         F.lit('<?xml version="1.0" encoding="utf-8"?>'
               f'<feed xmlns="{ATOM_NS}"><title>'),
-        escape_xml(F.col(feed_col)),
+        escape_xml(F.col("feed")),
         F.lit("</title><updated>"), rfc3339(F.col("_newest")),
         F.lit("</updated>"), body, F.lit("</feed>"))
-    return agg.select(F.col(feed_col).alias("feed"),
+    return agg.select(F.col("feed"),
                       xml.alias("atom_xml"))
 
 
@@ -124,8 +121,7 @@ def _ordkey(c: Column) -> Column:
     return F.lpad(c, 8, "0")
 
 
-def rdfa_head(triples: DataFrame, subj_col: str = "subj",
-              pred_col: str = "pred", obj_col: str = "obj") -> DataFrame:
+def rdfa_head(triples: DataFrame) -> DataFrame:
     """(url, head_xml, prefixes): the reference's ``render_head``
     (documentrepository.py:1510-1620) as ONE sort-in-array
     aggregation — triples sorted by (pred, obj); ``dcterms:title``
@@ -137,7 +133,7 @@ def rdfa_head(triples: DataFrame, subj_col: str = "subj",
     structurally (http(s) scheme) since the DataFrame triple model
     carries no rdflib typing.  One shuffle, keyed by document —
     uniform at any corpus size."""
-    p, ob = F.col(pred_col), F.col(obj_col)
+    p, ob = F.col("pred"), F.col("obj")
     is_uri = ob.rlike("^https?://")
     item_xml = (
         F.when((p == "dcterms:title") & ~is_uri,
@@ -152,7 +148,7 @@ def rdfa_head(triples: DataFrame, subj_col: str = "subj",
     item = F.struct(F.struct(p.alias("p"), ob.alias("o")).alias("k"),
                     item_xml.alias("xml"),
                     F.split(p, ":").getItem(0).alias("prefix"))
-    agg = triples.groupBy(F.col(subj_col).alias("url")).agg(
+    agg = triples.groupBy(F.col("subj").alias("url")).agg(
         F.array_sort(F.collect_list(item)).alias("items"))
     head = F.concat(
         F.lit('<head about="'), escape_attr(F.col("url")), F.lit('">'),
@@ -216,9 +212,11 @@ def xhtml_body(nodes: DataFrame, max_depth: int = 5) -> DataFrame:
         .alias("body_xml"))
 
 
+RENDER_MAX_DEPTH = 5
+
+
 def render_xhtml_pages(triples: DataFrame, nodes: DataFrame,
-                       langs: DataFrame | None = None,
-                       max_depth: int = 5) -> DataFrame:
+                       langs: DataFrame | None = None) -> DataFrame:
     """(url, xhtml): one XHTML+RDFa page per document — the
     reference's ``render_xhtml`` (documentrepository.py:1456-1680)
     as a deterministic byte-stable string per url: RDFa ``head``
@@ -230,7 +228,7 @@ def render_xhtml_pages(triples: DataFrame, nodes: DataFrame,
     ``langs`` (url, lang) adds ``xml:lang``.  Head and body are one
     aggregation each; the final assembly is a join on url."""
     head = rdfa_head(triples)
-    body = xhtml_body(nodes, max_depth=max_depth)
+    body = xhtml_body(nodes, max_depth=RENDER_MAX_DEPTH)
     pm = F.create_map(*[F.lit(x) for kv in RDFA_PREFIXES.items()
                         for x in kv])
     decls = F.array_join(

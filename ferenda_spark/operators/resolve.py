@@ -38,7 +38,7 @@ def basefile_from_uri(col) -> "F.Column":
 
 
 def resolve_citations(edges: DataFrame, pages_uris: DataFrame,
-                      url_col: str = "url", salt: int = 0) -> DataFrame:
+                      salt: int = 0) -> DataFrame:
     """Citation edges × page table → (subj, obj, target_url|null).
 
     ``pages_uris`` needs one ``url`` column (one row per known page).
@@ -55,8 +55,8 @@ def resolve_citations(edges: DataFrame, pages_uris: DataFrame,
              .select("subj", "obj",
                      basefile_from_uri(F.col("obj")).alias("basefile")))
     targets = (pages_uris
-               .select(F.col(url_col).alias("target_url"),
-                       basefile_from_uri(F.col(url_col)).alias("basefile"))
+               .select(F.col("url").alias("target_url"),
+                       basefile_from_uri(F.col("url")).alias("basefile"))
                .filter(F.col("basefile") != "")
                .dropDuplicates(["basefile"]))
     if salt > 0:
@@ -69,12 +69,11 @@ def resolve_citations(edges: DataFrame, pages_uris: DataFrame,
     return cites.join(targets, "basefile", "left").drop("basefile")
 
 
-def inbound_references(edges: DataFrame, pages_uris: DataFrame,
-                       url_col: str = "url") -> DataFrame:
+def inbound_references(edges: DataFrame, pages_uris: DataFrame) -> DataFrame:
     """Resolved citations inverted into isReferencedBy annotation
     edges (annotations.rq:14-18): (target_url, isReferencedBy, subj).
     """
-    resolved = resolve_citations(edges, pages_uris, url_col)
+    resolved = resolve_citations(edges, pages_uris)
     return (resolved.filter(F.col("target_url").isNotNull())
             .select(F.col("target_url").alias("subj"),
                     F.lit("dcterms:isReferencedBy").alias("pred"),

@@ -158,9 +158,7 @@ def robots_allowed(path: str, rules: Iterable[dict]) -> bool:
     return True if best is None else best[1]
 
 
-def parse_robots(robots: DataFrame, agent: str = "*",
-                 domain_col: str = "domain",
-                 txt_col: str = "robots_txt") -> DataFrame:
+def parse_robots(robots: DataFrame, agent: str = "*") -> DataFrame:
     """``(domain, robots_txt)`` → ``(domain, rules: RULES_TYPE,
     crawl_delay_millis)`` for ``agent`` — one Arrow batch pass, one
     output row per input row (a domain with no applicable rules keeps
@@ -176,35 +174,30 @@ def parse_robots(robots: DataFrame, agent: str = "*",
                       ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame({
-                "domain": pdf[domain_col],
+                "domain": pdf["domain"],
                 "rules": [
                     [{"regex": r["regex"], "prec": r["prec"],
                       "is_allow": r["is_allow"]}
                      for r in parse_robots_txt(t, agent)]
-                    for t in pdf[txt_col]],
+                    for t in pdf["robots_txt"]],
                 "crawl_delay_millis": pd.array(
-                    [parse_crawl_delay(t, agent) for t in pdf[txt_col]],
+                    [parse_crawl_delay(t, agent) for t in pdf["robots_txt"]],
                     dtype="Int64"),
             })
 
-    return robots.select(domain_col, txt_col).mapInPandas(
+    return robots.select("domain", "robots_txt").mapInPandas(
         parse_batches, schema=out_schema)
 
 
-def robots_decisions(docs: DataFrame, rules: DataFrame,
-                     url_col: str = "url",
-                     broadcast_rules: bool = True) -> DataFrame:
+def robots_decisions(docs: DataFrame, rules: DataFrame) -> DataFrame:
     """Annotate ``docs`` with ``robots_allowed`` (boolean) and
     ``robots_prec`` (octet length of the winning rule; NULL when no
-    rule matched).  ``rules`` is :func:`parse_robots` output; set
-    ``broadcast_rules=False`` when the domain table itself is too
-    big to broadcast (AQE then plans the host-keyed join)."""
-    r = rules.select("domain", "rules")
-    if broadcast_rules:
-        r = F.broadcast(r)
+    rule matched).  ``rules`` is :func:`parse_robots` output, one
+    short row per domain, and is broadcast."""
+    r = F.broadcast(rules.select("domain", "rules"))
     joined = (docs
-              .withColumn("__host", url_host_col(F.col(url_col)))
-              .withColumn("__path", url_path_col(F.col(url_col)))
+              .withColumn("__host", url_host_col(F.col("url")))
+              .withColumn("__path", url_path_col(F.col("url")))
               .join(r, F.col("__host") == F.col("domain"), "left")
               .withColumn("__best", F.array_max(F.transform(
                   F.filter(F.col("rules"), lambda x: F.regexp_like(
@@ -218,12 +211,9 @@ def robots_decisions(docs: DataFrame, rules: DataFrame,
             .drop("domain", "rules", "__host", "__path", "__best"))
 
 
-def robots_filter(docs: DataFrame, rules: DataFrame,
-                  url_col: str = "url",
-                  broadcast_rules: bool = True) -> DataFrame:
+def robots_filter(docs: DataFrame, rules: DataFrame) -> DataFrame:
     """Keep only the urls ``agent`` may fetch, decision columns
     dropped — the frontier-admission form."""
-    out = robots_decisions(docs, rules, url_col=url_col,
-                           broadcast_rules=broadcast_rules)
+    out = robots_decisions(docs, rules)
     return (out.filter(F.col("robots_allowed"))
             .drop("robots_allowed", "robots_prec"))

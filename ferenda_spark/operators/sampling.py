@@ -49,9 +49,10 @@ def rate_threshold(rate: float) -> int:
     return min(int(rate * SAMPLE_SCALE), SAMPLE_SCALE)
 
 
+STRATIFIED_SALT = "mix-v1"
+
+
 def stratified_sample(docs: DataFrame, rates: dict[str, float],
-                      strat_col: str = "lang", key_col: str = "doc_id",
-                      salt: str = "mix-v1",
                       default_rate: float = 0.0) -> DataFrame:
     """Keep each row with its stratum's probability, deterministically:
     row kept iff ``uniform(salt, key) < threshold(rate[stratum])``.
@@ -60,28 +61,29 @@ def stratified_sample(docs: DataFrame, rates: dict[str, float],
     rate literals — the scan-side mixing step a 100 TB data-mixture
     job wants. Unknown strata fall back to ``default_rate``.
 
-    Rows with a NULL ``key_col`` are DROPPED (even at rate 1.0): a
+    Rows with a NULL ``doc_id`` are DROPPED (even at rate 1.0): a
     null key has no stable identity, so no deterministic draw exists
     for it. The drop is explicit below rather than a silent artifact
     of NULL comparison semantics; assign keys upstream if null-key
     rows must participate.
     """
-    u = sample_uniform(F.col(key_col), salt)
-    docs = docs.filter(F.col(key_col).isNotNull())
+    u = sample_uniform(F.col("doc_id"), STRATIFIED_SALT)
+    docs = docs.filter(F.col("doc_id").isNotNull())
     cascade = None
     for stratum, rate in sorted(rates.items()):
         t = F.lit(rate_threshold(rate))
-        cascade = (F.when(F.col(strat_col) == stratum, t)
+        cascade = (F.when(F.col("lang") == stratum, t)
                    if cascade is None
-                   else cascade.when(F.col(strat_col) == stratum, t))
+                   else cascade.when(F.col("lang") == stratum, t))
     default = F.lit(rate_threshold(default_rate))
     thr = default if cascade is None else cascade.otherwise(default)
     return docs.filter(u < thr)
 
 
-def quota_sample(docs: DataFrame, cap: int, group_col: str,
-                 key_col: str = "doc_id", salt: str = "quota-v1",
-                 broadcast_counts: bool = True) -> DataFrame:
+QUOTA_SALT = "quota-v1"
+
+
+def quota_sample(docs: DataFrame, cap: int, group_col: str) -> DataFrame:
     """Per-group document quota: down-sample each group to ~``cap``
     rows, deterministically (head-domain down-sampling — the C4 /
     RefinedWeb-style per-domain URL cap, with ``group_col`` =
@@ -100,24 +102,21 @@ def quota_sample(docs: DataFrame, cap: int, group_col: str,
     variant (`row_number() <= cap` per group) funnels each hot
     domain through one reducer — the exact skew this operator exists
     to tame.  Plan: one groupBy(count) on the group key, the count
-    table joined back (broadcast when the group dimension fits —
-    the default; set ``broadcast_counts=False`` at web scale where
-    the domain dimension is itself huge and AQE picks the strategy),
-    then one codegen filter.  NULL keys are dropped as in
+    table joined back broadcast (one row per group), then one
+    codegen filter.  NULL keys are dropped as in
     ``stratified_sample``; NULL groups form their own group.
     """
     if cap < 0:
         raise ValueError(f"cap {cap!r} must be >= 0")
     counts = docs.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("_grp_n"))
-    if broadcast_counts:
-        counts = F.broadcast(counts)
-    u = sample_uniform(F.col(key_col), salt)
+    counts = F.broadcast(counts)
+    u = sample_uniform(F.col("doc_id"), QUOTA_SALT)
     keep = (F.col("_grp_n") <= F.lit(int(cap))) | (
         u < F.lit(int(cap))
         * F.expr(f"{SAMPLE_SCALE} div _grp_n"))
     counts = counts.withColumnRenamed(group_col, "_grp_key")
-    return (docs.filter(F.col(key_col).isNotNull())
+    return (docs.filter(F.col("doc_id").isNotNull())
             # null-safe equi-join: a NULL group matches its own count
             # row instead of silently dropping (<=> keeps the hash
             # join strategy — it is still an equi-join to Catalyst)

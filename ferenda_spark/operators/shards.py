@@ -114,8 +114,11 @@ def with_corpus_offset(docs: DataFrame, weight_col: str,
             .drop("_bucket", "_offset"))
 
 
+SHARD_SALT = "shard-v1"
+
+
 def assign_shards(docs: DataFrame, budget: int, weight_col: str,
-                  key_col: str = "doc_id", salt: str = "shard-v1",
+                  key_col: str = "doc_id",
                   n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """docs + (shard, shuffle_key) columns.
 
@@ -127,7 +130,7 @@ def assign_shards(docs: DataFrame, budget: int, weight_col: str,
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
-    off = with_corpus_offset(docs, weight_col, key_col, salt, n_buckets)
+    off = with_corpus_offset(docs, weight_col, key_col, SHARD_SALT, n_buckets)
     # DIV: exact integer division (no double rounding past 2^53)
     return (off.withColumn("shard",
                            F.expr(f"corpus_offset DIV {int(budget)}"))
@@ -135,7 +138,6 @@ def assign_shards(docs: DataFrame, budget: int, weight_col: str,
 
 
 def pack_contexts(docs: DataFrame, context_len: int, weight_col: str,
-                  key_col: str = "doc_id", salt: str = "shard-v1",
                   n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Concat-and-split context packing: the corpus, in the
     deterministic shuffle order, is one token stream cut into
@@ -161,7 +163,7 @@ def pack_contexts(docs: DataFrame, context_len: int, weight_col: str,
     if context_len <= 0:
         raise ValueError(
             f"context_len must be positive, got {context_len}")
-    off = with_corpus_offset(docs, weight_col, key_col, salt, n_buckets)
+    off = with_corpus_offset(docs, weight_col, "doc_id", SHARD_SALT, n_buckets)
     C = int(context_len)
     w = F.col(weight_col).cast("long")
     # DIV throughout: offsets exceed 2^53 at 10^12-doc scale, so no
@@ -186,12 +188,11 @@ def pack_contexts(docs: DataFrame, context_len: int, weight_col: str,
             .withColumn("slice_len", slice_end - slice_start))
 
 
-def shard_manifest(assigned: DataFrame, weight_col: str,
-                   shard_col: str = "shard") -> DataFrame:
+def shard_manifest(assigned: DataFrame, weight_col: str) -> DataFrame:
     """Per-shard accounting: document count, total weight, key-range
     of the shuffle order — the sidecar a training loader reads.  One
     map-side-combinable aggregation."""
-    return (assigned.groupBy(shard_col)
+    return (assigned.groupBy("shard")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(F.col(weight_col).cast("long")).alias("total_weight"),
                  F.min("shuffle_key").alias("first_key"),

@@ -43,19 +43,20 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
-def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                query_id_col: str = "query_id") -> DataFrame:
+TOPK = 5
+
+
+def cosine_topk(items: DataFrame, queries: DataFrame) -> DataFrame:
     """Exact top-k cosine neighbors per query.
 
     ``queries(query_id, embedding)`` is broadcast (must be small —
     the per-query fanout is the scan itself). Self-matches (same id)
     are excluded when ids share a domain.
     """
-    it = items.select(F.col(id_col).alias("item_id"),
-                      _as_double(F.col(vec_col)).alias("ivec"))
-    qs = queries.select(F.col(query_id_col).alias("query_id"),
-                        _as_double(F.col(vec_col)).alias("qvec"))
+    it = items.select(F.col("vec_id").alias("item_id"),
+                      _as_double(F.col("embedding")).alias("ivec"))
+    qs = queries.select(F.col("query_id"),
+                        _as_double(F.col("embedding")).alias("qvec"))
     scored = (it.join(F.broadcast(qs), F.col("item_id") != F.col("query_id"))
               .select("query_id", "item_id",
                       F.round(cosine(F.col("ivec"), F.col("qvec")), 6)
@@ -63,7 +64,7 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 5,
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("item_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOPK)
             .select("query_id", "item_id", "cos_sim", "rank"))
 
 
@@ -74,11 +75,13 @@ def hyperplane(dim: int, j: int) -> list[int]:
     return [((i * 31 + j * 17 + 7) % 11) - 5 for i in range(dim)]
 
 
-def lsh_params_for(n: int, threshold: float = 0.95,
-                   recall_target: float = 0.9,
-                   bucket_occupancy: int = 12,
-                   max_planes: int = 24,
-                   max_bands: int = 32) -> tuple[int, int]:
+MAX_PLANES = 24
+MAX_BANDS = 32
+BUCKET_OCCUPANCY = 12
+RECALL_TARGET = 0.9
+
+
+def lsh_params_for(n: int, threshold: float = 0.95) -> tuple[int, int]:
     """(bands, planes_per_band) sized for a corpus of ``n`` vectors.
 
     The round-5 sf1 probe measured the failure mode of FIXED params:
@@ -88,13 +91,14 @@ def lsh_params_for(n: int, threshold: float = 0.95,
     (sim_semantic_dedup: 10× vectors → 20× wall).  Sizing must move
     with n:
 
-    * ``planes`` = ceil(log2(n / bucket_occupancy)) keeps expected
-      per-band bucket occupancy near the target, so within-bucket
-      join work stays ~linear in n;
+    * ``planes`` = ceil(log2(n / BUCKET_OCCUPANCY)) (at most
+      ``MAX_PLANES``) keeps expected per-band bucket occupancy near
+      the target, so within-bucket join work stays ~linear in n;
     * more planes lower per-band recall (p^planes with
       p = 1 − acos(threshold)/π, the hyperplane collision rate), so
-      ``bands`` = ceil(ln(1−recall_target) / ln(1−p^planes)) recovers
-      the banded union recall 1−(1−p^planes)^bands ≥ recall_target.
+      ``bands`` = ceil(ln(1−RECALL_TARGET) / ln(1−p^planes)) (at most
+      ``MAX_BANDS``) recovers the banded union recall
+      1−(1−p^planes)^bands ≥ ``RECALL_TARGET``.
 
     Total candidate work ≈ bands · n · occupancy — linear in n with a
     log-factor in bands.  Callers pass the result straight to
@@ -103,18 +107,18 @@ def lsh_params_for(n: int, threshold: float = 0.95,
     on n."""
     import math
 
-    if n <= bucket_occupancy:
+    if n <= BUCKET_OCCUPANCY:
         planes = 4
     else:
-        planes = max(4, min(max_planes,
-                            math.ceil(math.log2(n / bucket_occupancy))))
+        planes = max(4, min(MAX_PLANES,
+                            math.ceil(math.log2(n / BUCKET_OCCUPANCY))))
     p = 1 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     pb = p ** planes
     if pb >= 1.0:
         bands = 1
     else:
-        bands = max(1, min(max_bands,
-                           math.ceil(math.log(1 - recall_target)
+        bands = max(1, min(MAX_BANDS,
+                           math.ceil(math.log(1 - RECALL_TARGET)
                                      / math.log(1 - pb))))
     return bands, planes
 
@@ -185,22 +189,23 @@ def band_bucket_udf(dim: int, bands: int = 4, planes_per_band: int = 6):
     return pandas_udf(f, "array<int>")
 
 
-def lsh_topk(items: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-             bands: int = 4, planes_per_band: int = 6,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id") -> DataFrame:
+PLANES_PER_BAND = 6
+LSH_BANDS = 4
+
+
+def lsh_topk(items: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
     """Approximate top-k: score only (query, item) pairs sharing ≥1
     LSH band bucket. At scale the items side is hash-partitioned by
     (band, bucket); the query side is broadcast, so this is a
     map-side bucket filter. Pairs matching in several bands are
     deduped by the rounded-score distinct before ranking."""
-    bb = band_bucket_udf(dim, bands, planes_per_band)
-    it = items.select(F.col(id_col).alias("item_id"),
-                      _as_double(F.col(vec_col)).alias("ivec"))
+    bb = band_bucket_udf(dim, LSH_BANDS, PLANES_PER_BAND)
+    it = items.select(F.col("vec_id").alias("item_id"),
+                      _as_double(F.col("embedding")).alias("ivec"))
     it = it.select("item_id", "ivec",
                    F.posexplode(bb(F.col("ivec"))).alias("band", "bucket"))
-    qs = queries.select(F.col(query_id_col).alias("query_id"),
-                        _as_double(F.col(vec_col)).alias("qvec"))
+    qs = queries.select(F.col("query_id"),
+                        _as_double(F.col("embedding")).alias("qvec"))
     qs = qs.select("query_id", "qvec",
                    F.posexplode(bb(F.col("qvec"))).alias("band", "bucket"))
     scored = (it.join(F.broadcast(qs), ["band", "bucket"])
@@ -212,7 +217,7 @@ def lsh_topk(items: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("item_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOPK)
             .select("query_id", "item_id", "cos_sim", "rank"))
 
 
@@ -248,95 +253,38 @@ def ivf_assign_udf(centroids: list[list[float]], nprobe: int = 1):
     return pandas_udf(f, "array<int>")
 
 
-def lloyd_refine(items: DataFrame, seeds: list[list[float]],
-                 iters: int = 2, sample_n: int = 2048,
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> list[list[float]]:
-    """Driver-side Lloyd (k-means) refinement of IVF seed centroids
-    over a deterministic sample — the ``sample_n`` lowest-id vectors
-    (bounded collect, like the seed pick itself).
-
-    Assignment uses the SAME milli-quantized integer metric as
-    ``ivf_assign_udf`` (floor(x·1000), exact int64 arithmetic, stable
-    argmin), and the recomputed means are floored back to integer
-    milli-units before the next round — every step is
-    order-independent integer math, so refinement is deterministic
-    across partitionings and engines.  An emptied cluster keeps its
-    previous centroid.  Returns centroids as float lists ready for
-    ``ivf_topk``'s assignment UDFs."""
-    rows = (items.select(F.col(id_col).alias("id"),
-                         _as_double(F.col(vec_col)).alias("v"))
-            .orderBy("id").limit(sample_n).collect())
-    S = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
-    Q = np.floor(S * 1000.0).astype(np.int64)            # (n, dim)
-    C = np.floor(np.asarray(seeds, dtype=np.float64) * 1000.0
-                 ).astype(np.int64)                      # (k, dim)
-    for _ in range(iters):
-        d = ((Q * Q).sum(axis=1)[:, None]
-             - 2 * (Q @ C.T)
-             + (C * C).sum(axis=1)[None, :])             # (n, k)
-        assign = d.argmin(axis=1)                        # stable: first min
-        new_C = C.copy()
-        for j in range(C.shape[0]):
-            members = Q[assign == j]
-            if len(members):
-                new_C[j] = members.sum(axis=0) // len(members)
-        C = new_C
-    return (C.astype(np.float64) / 1000.0).tolist()
+IVF_NPROBE = 2
+IVF_CENTROIDS = 8
 
 
-def ivf_topk(items: DataFrame, queries: DataFrame, dim: int, k: int = 5,
-             n_centroids: int = 8, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id",
-             refine_iters: int = 0) -> DataFrame:
+def ivf_topk(items: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the list-partitioned
     ANN path complementing the banded LSH one.
 
-    Coarse quantizer: the ``n_centroids`` lowest-id vectors serve as
-    list centroids (a deterministic seed sample); pass
-    ``refine_iters > 0`` to Lloyd-refine them driver-side over a
-    deterministic sample before broadcast (``lloyd_refine``) — the
-    assignment/probe machinery below is identical either way.  Every
+    Coarse quantizer: the ``IVF_CENTROIDS`` lowest-id vectors serve
+    as list centroids (a deterministic seed sample).  Every
     item is assigned to its single nearest list with one Arrow matmul
     (no shuffle — the centroid matrix is a closure broadcast); each
-    query probes its ``nprobe`` nearest lists.  Scoring touches only
+    query probes its ``IVF_NPROBE`` nearest lists.  Scoring touches only
     items in probed lists: O(N/C · nprobe) per query instead of O(N),
     and at scale the items side is hash-partitioned by ``list_id`` so
-    probes are partition-pruned joins.
-
-    ``n_centroids="auto"`` sizes C = clamp(√N, 8, 65536) after one
-    corpus count — the standard IVF rule: with FIXED C, per-query
-    probe cost O(nprobe·N/C) is still linear in N (the LSH
-    fixed-grid lesson, gentler slope); C ~ √N keeps both the
-    centroid scan and the probed-list scan at O(√N).  Explicit
-    integers stay oracle-exact."""
-    if n_centroids == "auto":
-        n_centroids = max(8, min(65536,
-                                 int(items.count() ** 0.5)))
-    cents = (items.select(F.col(id_col).alias("cid"),
-                          _as_double(F.col(vec_col)).alias("cv"))
-             .orderBy("cid").limit(n_centroids).collect())
-    cent_vecs = [list(r["cv"]) for r in sorted(cents, key=lambda r: r["cid"])]
-    if refine_iters > 0:
-        # Lloyd-refine the seed sample so list centroids track the
-        # data's real clusters (recall, not scale: probe machinery is
-        # identical either way). The gate query keeps refine_iters=0
-        # so the DuckDB oracle can mirror the seed assignment; the
-        # recall win is pytest-gated on a clustered fixture.
-        cent_vecs = lloyd_refine(items, cent_vecs, iters=refine_iters,
-                                 id_col=id_col, vec_col=vec_col)
+    probes are partition-pruned joins."""
+    cents = (items.select(F.col("vec_id").alias("cid"),
+                          _as_double(F.col("embedding")).alias("cv"))
+             .orderBy("cid").limit(IVF_CENTROIDS).collect())
+    cent_vecs = [list(r["cv"])
+                 for r in sorted(cents, key=lambda r: r["cid"])]
     assign1 = ivf_assign_udf(cent_vecs, 1)
-    assign_p = ivf_assign_udf(cent_vecs, nprobe)
+    assign_p = ivf_assign_udf(cent_vecs, IVF_NPROBE)
     # explode-of-1 rather than getItem(0): getItem on a UDF column
     # re-evaluates the UDF per projection; the generator path runs it
     # exactly once per row
-    it = (items.select(F.col(id_col).alias("item_id"),
-                       _as_double(F.col(vec_col)).alias("ivec"))
+    it = (items.select(F.col("vec_id").alias("item_id"),
+                       _as_double(F.col("embedding")).alias("ivec"))
           .select("item_id", "ivec",
                   F.explode(assign1(F.col("ivec"))).alias("list_id")))
-    qs = (queries.select(F.col(query_id_col).alias("query_id"),
-                         _as_double(F.col(vec_col)).alias("qvec"))
+    qs = (queries.select(F.col("query_id"),
+                         _as_double(F.col("embedding")).alias("qvec"))
           .select("query_id", "qvec",
                   F.explode(assign_p(F.col("qvec"))).alias("list_id")))
     # item lists are disjoint and probe lists distinct per query, so a
@@ -349,13 +297,11 @@ def ivf_topk(items: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("item_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOPK)
             .select("query_id", "item_id", "cos_sim", "rank"))
 
 
-def label_centroids(items: DataFrame, dim: int, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    label_col: str = "label") -> DataFrame:
+def label_centroids(items: DataFrame, dim: int) -> DataFrame:
     """Per-label centroid, via posexplode → groupBy(label, dim) → avg.
 
     One shuffle keyed (label, dim) — at 100 TB this beats collecting
@@ -363,18 +309,17 @@ def label_centroids(items: DataFrame, dim: int, id_col: str = "vec_id",
     partition to |labels|×dim rows before the exchange.
     """
     exploded = items.select(
-        label_col, F.posexplode(_as_double(F.col(vec_col)))
+        "label", F.posexplode(_as_double(F.col("embedding")))
         .alias("dim_idx", "component"))
-    return (exploded.groupBy(label_col, "dim_idx")
+    return (exploded.groupBy("label", "dim_idx")
             .agg(F.round(F.avg("component"), 6).alias("centroid_component"),
                  F.count(F.lit(1)).alias("n_vectors")))
 
 
 def embedding_near_dup_pairs(items: DataFrame, dim: int,
                              threshold: float = 0.95,
-                             bands: int = 4, planes_per_band: int = 6,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
+                             bands: int = 4,
+                             planes_per_band: int = 6) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cos ≥ threshold),
     banded multi-probe LSH: a pair is scored when any of the ``bands``
     independent plane-sets buckets it together.  The within-bucket
@@ -392,8 +337,8 @@ def embedding_near_dup_pairs(items: DataFrame, dim: int,
         bands, planes_per_band = lsh_params_for(
             items.count(), threshold=threshold)
     bb = band_bucket_udf(dim, bands, planes_per_band)
-    it = items.select(F.col(id_col).alias("id"),
-                      _as_double(F.col(vec_col)).alias("vec"))
+    it = items.select(F.col("vec_id").alias("id"),
+                      _as_double(F.col("embedding")).alias("vec"))
     it = it.select("id", "vec",
                    F.posexplode(bb(F.col("vec"))).alias("band", "bucket"))
     # pre-shuffle on the join keys so BOTH sides of the self-join
@@ -413,10 +358,11 @@ def embedding_near_dup_pairs(items: DataFrame, dim: int,
             .distinct())
 
 
-def semantic_dedup(items: DataFrame, dim: int, threshold: float = 0.95,
-                   bands: int = 4, planes_per_band: int = 6,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+SEMANTIC_DEDUP_THRESHOLD = 0.4
+
+
+def semantic_dedup(items: DataFrame, dim: int,
+                   planes_per_band: int = 6) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): keep ONE representative per group of
     semantically near-identical documents, judged in embedding space.
@@ -437,7 +383,7 @@ def semantic_dedup(items: DataFrame, dim: int, threshold: float = 0.95,
     stable keeper matters more than which near-identical copy
     survives, same contract as every other dedup family here).
 
-    Returns (``id_col``, group, keep): every input id, its group
+    Returns (``vec_id``, group, keep): every input id, its group
     label (= itself for singletons) and whether it survives.  Filter
     ``keep`` to materialize the deduplicated corpus; group by
     ``group`` for cluster-size diagnostics.
@@ -453,13 +399,13 @@ def semantic_dedup(items: DataFrame, dim: int, threshold: float = 0.95,
     """
     from ferenda_spark.operators.dedup import components
 
-    pairs = embedding_near_dup_pairs(items, dim, threshold, bands,
-                                     planes_per_band, id_col, vec_col)
+    pairs = embedding_near_dup_pairs(items, dim, SEMANTIC_DEDUP_THRESHOLD,
+                                     LSH_BANDS, planes_per_band)
     comp = components(pairs)
-    ids = items.select(F.col(id_col).alias("id")).distinct()
+    ids = items.select(F.col("vec_id").alias("id")).distinct()
     grp = F.coalesce(F.col("comp"), F.col("id"))
     return (ids.join(comp, "id", "left")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("vec_id"),
                     grp.alias("group"),
                     (grp == F.col("id")).alias("keep")))
 
@@ -475,19 +421,16 @@ def semantic_dedup(items: DataFrame, dim: int, threshold: float = 0.95,
 # ---------------------------------------------------------------------------
 
 def pq_codebooks(items: DataFrame, dim: int, m: int = 8,
-                 ksub: int = 16, id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> list:
+                 ksub: int = 16) -> list:
     """Per-sub-space codebooks: the ``ksub`` lowest-id vectors'
     sub-slices (the IVF seed convention — deterministic, bounded
-    collect, SQL-restatable; Lloyd-refine per sub-space via
-    ``lloyd_refine`` on slices when recall matters more than oracle
-    exactness).  Returns ``m`` lists of ``ksub`` centroids of
+    collect, SQL-restatable).  Returns ``m`` lists of ``ksub`` centroids of
     ``dim/m`` components each."""
     if dim % m:
         raise ValueError(f"pq: dim {dim} not divisible by m {m}")
     d = dim // m
-    rows = (items.select(F.col(id_col).alias("id"),
-                         _as_double(F.col(vec_col)).alias("v"))
+    rows = (items.select(F.col("vec_id").alias("id"),
+                         _as_double(F.col("embedding")).alias("v"))
             .orderBy("id").limit(ksub).collect())
     vecs = [list(r["v"]) for r in sorted(rows, key=lambda r: r["id"])]
     return [[v[s * d:(s + 1) * d] for v in vecs] for s in range(m)]
@@ -524,10 +467,11 @@ def pq_encode_udf(codebooks: list):
     return pandas_udf(f, "array<int>")
 
 
-def pq_topk(items: DataFrame, queries: DataFrame, dim: int,
-            k: int = 5, m: int = 8, ksub: int = 16,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            query_id_col: str = "query_id") -> DataFrame:
+PQ_KSUB = 16
+PQ_M = 8
+
+
+def pq_topk(items: DataFrame, queries: DataFrame, dim: int) -> DataFrame:
     """PQ/ADC approximate top-k: ``(query_id, item_id, adist, rank)``
     — rank by ascending asymmetric distance (ties → lower item id).
 
@@ -542,15 +486,15 @@ def pq_topk(items: DataFrame, queries: DataFrame, dim: int,
     """
     import numpy as np
 
-    cbs = pq_codebooks(items, dim, m, ksub, id_col, vec_col)
-    d = dim // m
+    cbs = pq_codebooks(items, dim, PQ_M, PQ_KSUB)
+    d = dim // PQ_M
     enc = pq_encode_udf(cbs)
-    codes = (items.select(F.col(id_col).alias("item_id"),
-                          _as_double(F.col(vec_col)).alias("v"))
+    codes = (items.select(F.col("vec_id").alias("item_id"),
+                          _as_double(F.col("embedding")).alias("v"))
              .select("item_id", F.posexplode(enc(F.col("v")))
                      .alias("s", "code")))
-    qrows = (queries.select(F.col(query_id_col).alias("query_id"),
-                            _as_double(F.col(vec_col)).alias("v"))
+    qrows = (queries.select(F.col("query_id"),
+                            _as_double(F.col("embedding")).alias("v"))
              .collect())
     C = [np.floor(np.asarray(cb, dtype=np.float64) * 1000.0)
          .astype(np.int64) for cb in cbs]
@@ -558,7 +502,7 @@ def pq_topk(items: DataFrame, queries: DataFrame, dim: int,
     for r in qrows:
         q = np.floor(np.asarray(list(r["v"]), dtype=np.float64)
                      * 1000.0).astype(np.int64)
-        for s in range(m):
+        for s in range(PQ_M):
             qs = q[s * d:(s + 1) * d]
             dist = ((C[s] - qs[None, :]) ** 2).sum(axis=1)
             for code, dv in enumerate(dist):
@@ -573,15 +517,17 @@ def pq_topk(items: DataFrame, queries: DataFrame, dim: int,
     w = Window.partitionBy("query_id").orderBy(
         F.asc("adist"), F.asc("item_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOPK)
             .select("query_id", "item_id", "adist", "rank"))
 
 
-def hash_embed(docs: DataFrame, dim: int = 64, text_col: str = "text",
-               id_col: str = "doc_id",
-               salt: str = "he-v1") -> DataFrame:
+EMBED_SALT = "he-v1"
+EMBED_DIM = 32
+
+
+def hash_embed(docs: DataFrame) -> DataFrame:
     """(id, embedding): signed feature-hashed bag-of-words document
-    vectors — text → ``array<long>`` of length ``dim`` with NO
+    vectors — text → ``array<long>`` of length ``EMBED_DIM`` with NO
     trained model (Weinberger et al., ICML 2009: token j lands in
     bucket h(j) mod dim with sign ±1 from an independent hash bit,
     which keeps inner products unbiased).
@@ -605,7 +551,7 @@ def hash_embed(docs: DataFrame, dim: int = 64, text_col: str = "text",
     from ferenda_spark.operators.classify import _token_hash60
     from ferenda_spark.operators.textstats import tokens
 
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     # materialize (bucket, sign) ONCE per token before the fold: a
     # hash referenced inside the fold's inner transform would be
     # re-evaluated for every one of the dim array slots (dim× md5
@@ -613,18 +559,18 @@ def hash_embed(docs: DataFrame, dim: int = 64, text_col: str = "text",
     pairs = F.transform(
         toks,
         lambda t: F.struct(
-            (_token_hash60(t, salt) % dim).cast("int").alias("b"),
-            F.when(_token_hash60(t, salt + "#s") % 2 == 1,
+            (_token_hash60(t, EMBED_SALT) % EMBED_DIM).cast("int").alias("b"),
+            F.when(_token_hash60(t, EMBED_SALT + "#s") % 2 == 1,
                    F.lit(-1)).otherwise(F.lit(1)).cast("long")
             .alias("s")))
 
     vec = F.aggregate(
         pairs,
-        F.array_repeat(F.lit(0).cast("long"), dim),
+        F.array_repeat(F.lit(0).cast("long"), EMBED_DIM),
         lambda acc, p: F.transform(
             acc, lambda x, i: x + F.when(i == p["b"], p["s"])
             .otherwise(F.lit(0).cast("long"))))
-    return docs.select(F.col(id_col).alias("id"),
+    return docs.select(F.col("doc_id").alias("id"),
                        vec.alias("embedding"))
 
 

@@ -106,8 +106,7 @@ def parse_sitemap_xml(src_url: str, xml: str) -> list[dict]:
     return out
 
 
-def parse_sitemaps(fetched: DataFrame, url_col: str = "url",
-                   xml_col: str = "xml") -> DataFrame:
+def parse_sitemaps(fetched: DataFrame) -> DataFrame:
     """``(url, xml)`` → one SITEMAP_SCHEMA row per entry (or one
     error row per malformed input) — stateless Arrow pass, no
     shuffle."""
@@ -117,9 +116,9 @@ def parse_sitemaps(fetched: DataFrame, url_col: str = "url",
                 "priority_milli", "error"]
         for pdf in it:
             rows: list[dict] = []
-            for src, xml in zip(pdf[url_col], pdf[xml_col]):
+            for src, xml in zip(pdf["url"], pdf["xml"]):
                 rows.extend(parse_sitemap_xml(src, xml))
             yield pd.DataFrame(rows, columns=cols)
 
-    return fetched.select(url_col, xml_col).mapInPandas(
+    return fetched.select("url", "xml").mapInPandas(
         batches, schema=SITEMAP_SCHEMA)

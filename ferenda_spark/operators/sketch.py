@@ -54,40 +54,41 @@ def _cms_col(h: Column, i: int, width: int) -> Column:
     return ((F.lit(a) * h + F.lit(b)) % CMS_P) % width
 
 
-def cms_sketch(keys: DataFrame, key_col: str = "key",
-               depth: int = 4, width: int = 1024) -> DataFrame:
+CMS_WIDTH = 512
+CMS_DEPTH = 4
+
+
+def cms_sketch(keys: DataFrame) -> DataFrame:
     """(row, col, cnt) — the d×w Count-Min counter matrix of the key
     column's occurrence counts (one increment per input ROW; pre-count
     duplicates upstream if weighted updates are wanted).  At most
     ``depth·width`` output rows whatever the key cardinality; merge
     two sketches of the same shape by summing cnt per (row, col)."""
-    h = _h60(F.col(key_col))
+    h = _h60(F.col("key"))
     cells = F.array(*[
         F.struct(F.lit(i).alias("row"),
-                 _cms_col(h, i, width).alias("col"))
-        for i in range(depth)])
+                 _cms_col(h, i, CMS_WIDTH).alias("col"))
+        for i in range(CMS_DEPTH)])
     return (keys.select(F.explode(cells).alias("c"))
             .groupBy(F.col("c.row").alias("row"),
                      F.col("c.col").alias("col"))
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
-def cms_lookup(sketch: DataFrame, probes: DataFrame,
-               key_col: str = "key", depth: int = 4,
-               width: int = 1024) -> DataFrame:
+def cms_lookup(sketch: DataFrame, probes: DataFrame) -> DataFrame:
     """(key, est) — the Count-Min point estimate for every probe key:
     min over the d counters the key hashes to (missing cell = 0, so
-    never-seen keys estimate 0).  ``depth``/``width`` must match the
+    never-seen keys estimate 0).  ``CMS_DEPTH``/``CMS_WIDTH`` must match the
     sketch's build parameters — a mismatched geometry probes the
     wrong cells and silently overestimates, so pass them explicitly.
     The probe side is tiny (d rows per probe) and joins the ≤ d·w-row
     sketch broadcast."""
-    h = _h60(F.col(key_col))
+    h = _h60(F.col("key"))
     cells = F.array(*[
         F.struct(F.lit(i).alias("row"),
-                 _cms_col(h, i, width).alias("col"))
-        for i in range(depth)])
-    pos = (probes.select(F.col(key_col).alias("key"),
+                 _cms_col(h, i, CMS_WIDTH).alias("col"))
+        for i in range(CMS_DEPTH)])
+    pos = (probes.select(F.col("key"),
                          F.explode(cells).alias("c"))
            .select("key", F.col("c.row").alias("row"),
                    F.col("c.col").alias("col")))

@@ -128,7 +128,7 @@ never matches — keep EXISTS vars on the group's always-bound side.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1796,23 +1796,29 @@ def _subselect_plan(edges: DataFrame, sub: Query, max_depth,
                     scope: str | None) -> _Plan:
     """Compile a nested SELECT to a joinable plan.
 
-    Aggregating subqueries ride the full _select_out pipeline; their
-    projected columns join the outer group as plain value columns
-    (aggregate outputs are fresh literals — no term-kind metadata to
-    preserve).  PLAIN projections instead carry the inner plan's
-    ``__lit__/__dt__/__lang__`` metadata through projection, DISTINCT
-    and modifiers, so an outer join on a subquery var that bound
-    literals keeps RDF term-kind identity (DISTINCT over value+kind
-    is the spec's term-distinctness, not a widening)."""
+    Both shapes carry the inner plan's ``__lit__/__dt__/__lang__``
+    metadata for every projected var that has it, so an outer join on
+    a subquery var that bound literals keeps RDF term-kind identity.
+    PLAIN projections carry it through projection, DISTINCT and
+    modifiers (DISTINCT over value+kind is the spec's
+    term-distinctness, not a widening).  Aggregating subqueries ride
+    the full _select_out pipeline and group over value+kind for such
+    a GROUP BY key; aggregate outputs are fresh literals with no
+    metadata to carry."""
     inner = _group_plan(edges, sub.where, max_depth, clo_cache, scope)
     if isinstance(inner, _StarPlan):
         inner = inner.resolve()
     plain = [v for v in sub.select_vars if not isinstance(v, Agg)]
     aggs = [a for a in sub.select_vars if isinstance(a, Agg)]
     if aggs or sub.having:
-        df = _select_out(inner, sub)
+        meta = [v for v in plain if v in inner.objvars]
+        kinds = [f"__{k}__{v}" for v in meta for k in ("lit", "dt", "lang")]
+        keyed = replace(sub, select_vars=list(sub.select_vars) + kinds,
+                        group_by=list(sub.group_by) + kinds)
+        df = _select_out(_Plan(inner.df, inner.vars | set(kinds),
+                               inner.objvars), keyed)
         names = set(plain) | {a.alias for a in aggs}
-        return _Plan(df, names, set())
+        return _Plan(df, names, set(meta))
     missing = [v for v in plain if v not in inner.vars]
     if missing:
         raise ValueError(f"sparql: SELECT of unbound vars {missing}")
@@ -1828,14 +1834,13 @@ def _subselect_plan(edges: DataFrame, sub: Query, max_depth,
     return _Plan(_apply_modifiers(df, sub), set(plain), set(meta))
 
 
-def construct_annotations(edges: DataFrame, uri: str,
-                          max_depth: int | None = None) -> DataFrame:
+def construct_annotations(edges: DataFrame, uri: str) -> DataFrame:
     """The reference's default annotation graph for one document
     (res/sparql/annotations.rq, interpolated with %(uri)s): every
     triple about the document or its parts, plus isReferencedBy
     back-links from citing resources (documentrepository.py:1829-1891).
     """
-    return sparql_query(edges, ANNOTATIONS_RQ, {"uri": uri}, max_depth)
+    return sparql_query(edges, ANNOTATIONS_RQ, {"uri": uri}, None)
 
 
 #: the reference's res/sparql/annotations.rq shape (same semantics,

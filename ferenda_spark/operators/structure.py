@@ -100,17 +100,16 @@ class StatuteParser:
         return out
 
 
-def statute_structure(docs: DataFrame, text_col: str = "text",
-                      url_col: str = "url") -> DataFrame:
+def statute_structure(docs: DataFrame) -> DataFrame:
     """Plain-text statute documents → flat structure-node rows
     (S3 text reader + G7 structure parser)."""
-    src = docs.select(url_col, text_col)
+    src = docs.select("url", "text")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parser = StatuteParser()  # built once per task
         for pdf in batches:
             rows = []
-            for url, text in zip(pdf[url_col], pdf[text_col]):
+            for url, text in zip(pdf["url"], pdf["text"]):
                 for node in parser.parse(paragraphs(text or "")):
                     rows.append({"url": url, **node})
             yield pd.DataFrame(

@@ -182,8 +182,7 @@ def extract_jsonld(url: str, html: str) -> list[dict]:
     return rows
 
 
-def jsonld_triples(pages: DataFrame, url_col: str = "url",
-                   html_col: str = "html") -> DataFrame:
+def jsonld_triples(pages: DataFrame) -> DataFrame:
     """pages(url, html) → JSONLD_SCHEMA triples — one stateless Arrow
     pass (html may be binary or string), no shuffle."""
 
@@ -192,13 +191,13 @@ def jsonld_triples(pages: DataFrame, url_col: str = "url",
                 "obj_datatype", "obj_lang", "error"]
         for pdf in it:
             rows: list[dict] = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf["html"]):
                 if isinstance(html, (bytes, bytearray, memoryview)):
                     html = bytes(html).decode("utf-8", errors="replace")
                 rows.extend(extract_jsonld(url, html))
             yield pd.DataFrame(rows, columns=cols)
 
-    return pages.select(url_col, html_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         batches, schema=JSONLD_SCHEMA)
 
 
@@ -402,8 +401,7 @@ def extract_microdata(url: str, html: str) -> list[dict]:
     return rows
 
 
-def microdata_triples(pages: DataFrame, url_col: str = "url",
-                      html_col: str = "html") -> DataFrame:
+def microdata_triples(pages: DataFrame) -> DataFrame:
     """pages(url, html) → JSONLD_SCHEMA triples from itemscope
     markup — one stateless Arrow pass, no shuffle."""
 
@@ -412,13 +410,13 @@ def microdata_triples(pages: DataFrame, url_col: str = "url",
                 "obj_datatype", "obj_lang", "error"]
         for pdf in it:
             rows: list[dict] = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf["html"]):
                 if isinstance(html, (bytes, bytearray, memoryview)):
                     html = bytes(html).decode("utf-8", errors="replace")
                 rows.extend(extract_microdata(url, html))
             yield pd.DataFrame(rows, columns=cols)
 
-    return pages.select(url_col, html_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         batches, schema=JSONLD_SCHEMA)
 
 
@@ -687,8 +685,7 @@ def extract_rdfa(url: str, html: str) -> list[dict]:
     return rows
 
 
-def rdfa_triples(pages: DataFrame, url_col: str = "url",
-                 html_col: str = "html") -> DataFrame:
+def rdfa_triples(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html) → JSONLD_SCHEMA triples from RDFa-Lite
     markup — one stateless Arrow pass, no shuffle."""
 
@@ -697,13 +694,13 @@ def rdfa_triples(pages: DataFrame, url_col: str = "url",
                 "obj_datatype", "obj_lang", "error"]
         for pdf in it:
             rows: list[dict] = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf[html_col]):
                 if isinstance(html, (bytes, bytearray, memoryview)):
                     html = bytes(html).decode("utf-8", errors="replace")
                 rows.extend(extract_rdfa(url, html))
             yield pd.DataFrame(rows, columns=cols)
 
-    return pages.select(url_col, html_col).mapInPandas(
+    return pages.select("url", html_col).mapInPandas(
         batches, schema=JSONLD_SCHEMA)
 
 
@@ -800,8 +797,7 @@ def extract_head_meta(url: str, html: str) -> list[dict]:
             for (k, key, v, hl, p) in parser.out]
 
 
-def head_meta(pages: DataFrame, url_col: str = "url",
-              html_col: str = "html") -> DataFrame:
+def head_meta(pages: DataFrame) -> DataFrame:
     """pages(url, html) → HEADMETA_SCHEMA rows (title / meta / link
     harvest) — one stateless Arrow pass, no shuffle."""
 
@@ -809,11 +805,11 @@ def head_meta(pages: DataFrame, url_col: str = "url",
         cols = ["src_url", "kind", "key", "value", "hreflang", "pos"]
         for pdf in it:
             rows: list[dict] = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf["html"]):
                 if isinstance(html, (bytes, bytearray, memoryview)):
                     html = bytes(html).decode("utf-8", errors="replace")
                 rows.extend(extract_head_meta(url, html))
             yield pd.DataFrame(rows, columns=cols)
 
-    return pages.select(url_col, html_col).mapInPandas(
+    return pages.select("url", "html").mapInPandas(
         batches, schema=HEADMETA_SCHEMA)

@@ -82,19 +82,17 @@ def _quality_cols(text_col: str) -> list[Column]:
     ]
 
 
-def quality_score(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Composite quality score in [0,1]: length band + stopword ratio
     + lexical diversity. The formula is fixed and SQL-reproducible."""
-    return docs.select(id_col, *_quality_cols(text_col))
+    return docs.select("doc_id", *_quality_cols("text"))
 
 
-def langid(docs: DataFrame, text_col: str = "text",
-           id_col: str = "doc_id") -> DataFrame:
+def langid(docs: DataFrame) -> DataFrame:
     """Predicted language = argmax of per-language marker-word hits
     (ties broken by LANG_ORDER). Pure columns; the scores live in a
     struct array so greatest-by is one array_max."""
-    return docs.select(id_col, *_langid_cols(text_col))
+    return docs.select("doc_id", *_langid_cols("text"))
 
 
 def _langid_cols(text_col: str) -> list[Column]:
@@ -160,15 +158,19 @@ GOPHER_REQ_STOPWORDS = ("the", "be", "to", "of", "and", "that",
                         "have", "with")
 
 
+#: the published Gopher bands (Rae et al. 2021)
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_LEN = 3.0
+GOPHER_MAX_MEAN_LEN = 10.0
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MAX_BULLET_FRAC = 0.9
+GOPHER_MAX_ELLIPSIS_FRAC = 0.3
+GOPHER_MIN_ALPHA_FRAC = 0.8
+
+
 def gopher_rules(docs: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id",
-                 min_words: int = 50, max_words: int = 100_000,
-                 min_mean_len: float = 3.0, max_mean_len: float = 10.0,
-                 max_symbol_ratio: float = 0.1,
-                 max_bullet_frac: float = 0.9,
-                 max_ellipsis_frac: float = 0.3,
-                 min_alpha_frac: float = 0.8,
-                 min_stopwords: int = 2) -> DataFrame:
+                 min_words: int = 50, min_stopwords: int = 2) -> DataFrame:
     """The Gopher rule-based quality filter (Rae et al. 2021): keep a
     document only if its word count, mean word length, symbol-to-word
     ratio (# and ellipses), bullet-line and ellipsis-line fractions,
@@ -206,13 +208,13 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
         F.array(*[F.lit(w) for w in GOPHER_REQ_STOPWORDS]),
         lambda w: F.array_contains(lower_toks, w)))
     rules = {
-        "rule_n_words": (n >= min_words) & (n <= max_words),
-        "rule_mean_len": (mean_len >= min_mean_len)
-        & (mean_len <= max_mean_len),
-        "rule_symbols": symbol_ratio <= max_symbol_ratio,
-        "rule_bullets": bullet_frac <= max_bullet_frac,
-        "rule_ellipsis": ellipsis_frac <= max_ellipsis_frac,
-        "rule_alpha": alpha_frac >= min_alpha_frac,
+        "rule_n_words": (n >= min_words) & (n <= GOPHER_MAX_WORDS),
+        "rule_mean_len": (mean_len >= GOPHER_MIN_MEAN_LEN)
+        & (mean_len <= GOPHER_MAX_MEAN_LEN),
+        "rule_symbols": symbol_ratio <= GOPHER_MAX_SYMBOL_RATIO,
+        "rule_bullets": bullet_frac <= GOPHER_MAX_BULLET_FRAC,
+        "rule_ellipsis": ellipsis_frac <= GOPHER_MAX_ELLIPSIS_FRAC,
+        "rule_alpha": alpha_frac >= GOPHER_MIN_ALPHA_FRAC,
         "rule_stopwords": n_req_stop >= min_stopwords,
     }
     keep = None
@@ -231,8 +233,7 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
         keep.alias("keep"))
 
 
-def text_metrics(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def text_metrics(docs: DataFrame) -> DataFrame:
     """EVERY row-local text-analysis signal in ONE projection: token
     stats, quality score, language ID, fingerprints, and repetition
     signals — the curation feature vector a training-data pipeline
@@ -243,14 +244,14 @@ def text_metrics(docs: DataFrame, text_col: str = "text",
     the repetition mode) while running them as five separate jobs
     would scan the corpus five times."""
     return docs.select(
-        id_col,
-        *_token_stat_cols(text_col),
-        *_quality_cols(text_col),
-        *_langid_cols(text_col),
-        *_fingerprint_cols(text_col),
-        _repetition_struct(text_col).alias("_s"),
+        "doc_id",
+        *_token_stat_cols("text"),
+        *_quality_cols("text"),
+        *_langid_cols("text"),
+        *_fingerprint_cols("text"),
+        _repetition_struct("text").alias("_s"),
     ).select(
-        id_col, "n_tokens", "n_subtokens", "n_chars_measured",
+        "doc_id", "n_tokens", "n_subtokens", "n_chars_measured",
         "n_distinct_tokens", "mean_token_len", "stopword_ratio",
         "lexical_diversity", "quality", "pred_lang", "marker_hits",
         "rolling_fp", "text_md5",
@@ -270,8 +271,7 @@ PII_PATTERNS = [
 ]
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Scrub direct identifiers from a text corpus: emails, IPv4
     addresses, and 9+-digit runs (phone/account shaped) each become a
     ``<NAME>`` token, with per-type match counts kept as curation
@@ -290,7 +290,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text",
     clean = text
     for name, pat in PII_PATTERNS:
         clean = F.regexp_replace(clean, pat, f"<{name.upper()}>")
-    return docs.select(F.col(id_col), *counts, clean.alias("clean_text"))
+    return docs.select(F.col("doc_id"), *counts, clean.alias("clean_text"))
 
 
 #: Unicode script ranges for the mix profile (BMP core blocks — the
@@ -306,8 +306,7 @@ SCRIPT_RANGES = [
 ]
 
 
-def script_mix(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def script_mix(docs: DataFrame) -> DataFrame:
     """Per-document Unicode script profile: one count column per
     major script family, the dominant script, and a homograph flag —
     all pure codegen (``regexp_count`` per range in the scan, zero
@@ -321,7 +320,7 @@ def script_mix(docs: DataFrame, text_col: str = "text",
     ``dominant_script`` breaks count ties by the fixed family order
     (deterministic; 'none' when no scripted character occurs).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     counts = {name: F.regexp_count(t, F.lit(f"[{rng}]")).cast("long")
               for name, rng in SCRIPT_RANGES}
     cols = [counts[n].alias(f"n_{n}") for n, _ in SCRIPT_RANGES]
@@ -331,9 +330,9 @@ def script_mix(docs: DataFrame, text_col: str = "text",
         c = F.col(f"n_{name}")
         dom = F.when(c > best, F.lit(name)).otherwise(dom)
         best = F.when(c > best, c).otherwise(best)
-    out = docs.select(F.col(id_col), *cols)
+    out = docs.select(F.col("doc_id"), *cols)
     return out.select(
-        id_col, *[f"n_{n}" for n, _ in SCRIPT_RANGES],
+        "doc_id", *[f"n_{n}" for n, _ in SCRIPT_RANGES],
         dom.alias("dominant_script"),
         ((F.col("n_latin") > 0) & (F.col("n_cyrillic") > 0))
         .alias("latin_cyrillic_mix"))

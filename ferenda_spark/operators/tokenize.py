@@ -194,10 +194,12 @@ def _bpe_train_driver(syms_list: list[list[str]],
     return merges
 
 
+DRIVER_THRESHOLD = 10_000_000
+CHECKPOINT_EVERY = 8
+
+
 def bpe_train(docs_or_words: DataFrame, n_merges: int,
-              text_col: str = "text", min_pair_freq: int = 2,
-              checkpoint_every: int = 8,
-              driver_threshold: int = 10_000_000) -> list[tuple]:
+              text_col: str = "text", min_pair_freq: int = 2) -> list[tuple]:
     """Train ``n_merges`` BPE merges on the corpus; returns
     ``[(rank, left, right, freq), ...]`` in learned order.
 
@@ -209,14 +211,14 @@ def bpe_train(docs_or_words: DataFrame, n_merges: int,
     it).  Determinism: ties on frequency break by lexicographic
     (left, right), so reruns and the SQL oracle agree bit-for-bit.
 
-    When the distinct-word table has at most ``driver_threshold``
+    When the distinct-word table has at most ``DRIVER_THRESHOLD``
     rows it is collected ONCE and the merge loop runs in memory
     (:func:`_bpe_train_driver`) — the components()/scc() driver
     fast-path precedent.  Heaps' law keeps even a 10^12-document
     corpus's distinct-word table around 10^8 rows, so real trainings
     are one corpus pass + one collect, not ``n_merges`` sequential
     Spark jobs; the distributed loop below remains the contract for
-    tables above the threshold (or ``driver_threshold=0``)."""
+    tables above the threshold."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     cols = set(docs_or_words.columns)
@@ -226,7 +228,7 @@ def bpe_train(docs_or_words: DataFrame, n_merges: int,
         "wcount",
         F.filter(F.split("word", ""), lambda c: c != "").alias("syms"))
     words = words.persist()
-    if driver_threshold > 0 and words.count() <= driver_threshold:
+    if words.count() <= DRIVER_THRESHOLD:
         try:
             rows = words.collect()
         finally:
@@ -255,7 +257,7 @@ def bpe_train(docs_or_words: DataFrame, n_merges: int,
             nxt = words.select(
                 "wcount", _merge_fold(F.col("syms"), left, right)
                 .alias("syms"))
-            if (rank + 1) % checkpoint_every == 0:
+            if (rank + 1) % CHECKPOINT_EVERY == 0:
                 nxt = nxt.localCheckpoint(eager=True)
             nxt = nxt.persist()
             words.unpersist()

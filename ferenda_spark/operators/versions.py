@@ -31,14 +31,13 @@ from pyspark.sql import functions as F
 from ferenda_spark.functions.text import natural_sort_key_col
 
 
-def latest_versions(versions: DataFrame, key: str = "url",
-                    ts: str = "valid_from") -> DataFrame:
+def latest_versions(versions: DataFrame) -> DataFrame:
     """One row per document: its current version (max valid_from,
     version ordinal as tiebreak — NATURAL order, so 'v10' outranks
     'v9'), plus the version count."""
-    w = Window.partitionBy(key).orderBy(
-        F.desc(ts), F.desc(natural_sort_key_col(F.col("version"))))
-    counts = Window.partitionBy(key)
+    w = Window.partitionBy("url").orderBy(
+        F.desc("valid_from"), F.desc(natural_sort_key_col(F.col("version"))))
+    counts = Window.partitionBy("url")
     return (versions
             .withColumn("n_versions", F.count(F.lit(1)).over(counts))
             .withColumn("_rn", F.row_number().over(w))
@@ -46,28 +45,23 @@ def latest_versions(versions: DataFrame, key: str = "url",
             .drop("_rn"))
 
 
-def in_effect(at, ts: str = "valid_from",
-              end: str = "valid_to") -> "F.Column":
+def in_effect(at) -> "F.Column":
     """TemporalElement.in_effect(d) as a Column predicate:
     ``valid_from ≤ d < valid_to``, a null ``valid_to`` meaning
     still in force (elements.py:445-447)."""
-    return (F.col(ts) <= F.lit(at)) & (
-        F.col(end).isNull() | (F.lit(at) < F.col(end)))
+    return (F.col("valid_from") <= F.lit(at)) & (
+        F.col("valid_to").isNull() | (F.lit(at) < F.col("valid_to")))
 
 
-def versions_asof(versions: DataFrame, at, key: str = "url",
-                  ts: str = "valid_from",
-                  end: str | None = None) -> DataFrame:
+def versions_asof(versions: DataFrame, at) -> DataFrame:
     """The version of each document in effect at date ``at``.
 
-    With ``end`` set (the expiry column), validity is two-sided: a
-    repealed document — one whose latest version's expiry is ≤ at —
-    has NO row in the result."""
-    w = Window.partitionBy(key).orderBy(
-        F.desc(ts), F.desc(natural_sort_key_col(F.col("version"))))
-    eligible = (versions.filter(in_effect(at, ts, end))
-                if end is not None
-                else versions.filter(F.col(ts) <= F.lit(at)))
+    Validity is two-sided on ``valid_from``/``valid_to`` (the expiry
+    column): a repealed document — one whose latest version's expiry
+    is ≤ at — has NO row in the result."""
+    w = Window.partitionBy("url").orderBy(
+        F.desc("valid_from"), F.desc(natural_sort_key_col(F.col("version"))))
+    eligible = versions.filter(in_effect(at))
     return (eligible
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

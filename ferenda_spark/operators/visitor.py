@@ -66,8 +66,7 @@ def _walk(node: dict, children: dict, fn, state) -> None:
         _walk(child, children, fn, newstate)
 
 
-def visit_nodes(nodes: DataFrame, visitors: Iterable[Visitor],
-                url_col: str = "url") -> DataFrame:
+def visit_nodes(nodes: DataFrame, visitors: Iterable[Visitor]) -> DataFrame:
     """Run each (fn, initial_state) visitor depth-first over every
     document's node tree; return nodes + ``anno`` map column.
 
@@ -107,7 +106,7 @@ def visit_nodes(nodes: DataFrame, visitors: Iterable[Visitor],
             rows, columns=["url", "node_id", "kind", "ordinal",
                            "parent_id", "depth", "text", "anno"])
 
-    return (nodes.groupBy(url_col)
+    return (nodes.groupBy("url")
             .applyInPandas(lambda _, pdf: run(pdf),
                            schema=VISIT_SCHEMA))
 

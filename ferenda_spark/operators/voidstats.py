@@ -51,8 +51,7 @@ def class_partitions(edges: DataFrame,
 
 
 def class_links(edges: DataFrame,
-                type_pred: str = TYPE_PRED,
-                approximate: bool = False) -> DataFrame:
+                type_pred: str = TYPE_PRED) -> DataFrame:
     """The class-link matrix: ``(subj_class, pred, obj_class,
     n_triples, n_subjects, n_objects)`` — how instances of one class
     point at instances of another, per predicate (the schema-level
@@ -64,9 +63,8 @@ def class_links(edges: DataFrame,
     property_partitions — the audit the VoID export relies on).
     Plan: the type table is derived once and joined twice (typed
     subjects are a fraction of triples — AQE broadcasts when small);
-    one combinable groupBy; ``approximate`` swaps exact distincts for
-    HLL at web scale."""
-    nd = F.approx_count_distinct if approximate else F.countDistinct
+    one combinable groupBy."""
+    nd = F.countDistinct
     types = (edges.filter(F.col("pred") == type_pred)
              .groupBy(F.col("subj").alias("n"))
              .agg(F.min("obj").alias("cls")))

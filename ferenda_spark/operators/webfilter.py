@@ -22,55 +22,43 @@ from pyspark.sql import functions as F
 from ferenda_spark.functions.web import registered_domain_col, url_host_col
 
 
-def with_domain(docs: DataFrame, url_col: str = "url") -> DataFrame:
+def with_domain(docs: DataFrame) -> DataFrame:
     """docs + ``host`` + ``domain`` (eTLD+1) columns, scan-side."""
-    host = url_host_col(F.col(url_col))
+    host = url_host_col(F.col("url"))
     return (docs.withColumn("host", host)
             .withColumn("domain", registered_domain_col(F.col("host"))))
 
 
-def domain_stats(docs: DataFrame, url_col: str = "url") -> DataFrame:
+def domain_stats(docs: DataFrame) -> DataFrame:
     """(domain, n_docs, n_hosts) — the reputation-table aggregation a
     blocklist/score pass consumes. One shuffle on the domain key."""
-    return (with_domain(docs, url_col)
+    return (with_domain(docs)
             .groupBy("domain")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.countDistinct("host").alias("n_hosts")))
 
 
-def domain_filter(docs: DataFrame, url_col: str = "url",
-                  blocklist: list[str] | DataFrame | None = None,
-                  allowlist: list[str] | DataFrame | None = None
+def domain_filter(docs: DataFrame,
+                  blocklist: list[str] | DataFrame | None = None
                   ) -> DataFrame:
-    """Drop rows whose registered domain is blocklisted (or not
-    allowlisted). Rows whose URL yields NO domain (malformed) are
-    dropped too — a row that can't be attributed can't be vetted.
+    """Drop rows whose registered domain is blocklisted. Rows whose
+    URL yields NO domain (malformed) are dropped too — a row that
+    can't be attributed can't be vetted.
 
-    List inputs compile to ``isin`` literals; DataFrame inputs (one
-    ``domain`` column) join broadcast, left_anti for the blocklist and
-    left_semi for the allowlist.
+    A list compiles to ``isin`` literals; a DataFrame (one ``domain``
+    column) joins broadcast, left_anti.
     """
-    d = with_domain(docs, url_col).filter(F.col("domain").isNotNull())
+    d = with_domain(docs).filter(F.col("domain").isNotNull())
     if blocklist is not None:
         if isinstance(blocklist, DataFrame):
             d = d.join(F.broadcast(blocklist.select("domain")),
                        "domain", "left_anti")
         elif blocklist:
             d = d.filter(~F.col("domain").isin(*blocklist))
-    if allowlist is not None:
-        if isinstance(allowlist, DataFrame):
-            d = d.join(F.broadcast(allowlist.select("domain")),
-                       "domain", "left_semi")
-        else:
-            if not allowlist:
-                # keep the output schema identical to every other path
-                return d.filter(F.lit(False)).drop("host", "domain")
-            d = d.filter(F.col("domain").isin(*allowlist))
     return d.drop("host", "domain")
 
 
-def latest_fetch(fetches: DataFrame, url_col: str = "url",
-                 ts_col: str = "warc_ts") -> DataFrame:
+def latest_fetch(fetches: DataFrame) -> DataFrame:
     """Crawl-snapshot dedup: newest fetch per CANONICAL url.
 
     A corpus assembled from several crawl snapshots holds the same
@@ -96,19 +84,18 @@ def latest_fetch(fetches: DataFrame, url_col: str = "url",
     from ferenda_spark.functions.web import canonical_url_col
 
     w = Window.partitionBy("canonical_url")
-    wo = w.orderBy(F.col(ts_col).desc(), F.col(url_col),
+    wo = w.orderBy(F.col("warc_ts").desc(), F.col("url"),
                    F.xxhash64(*[F.col(c) for c in fetches.columns]))
     return (fetches
             .withColumn("canonical_url",
-                        canonical_url_col(F.col(url_col)))
+                        canonical_url_col(F.col("url")))
             .withColumn("_rn", F.row_number().over(wo))
             .withColumn("n_fetches", F.count(F.lit(1)).over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn"))
 
 
-def url_templates(docs: DataFrame, url_col: str = "url",
-                  min_count: int = 1) -> DataFrame:
+def url_templates(docs: DataFrame) -> DataFrame:
     """(template, n_urls, sample_url) — URL-template mining: collapse
     every url to its path template (``functions/web.py::
     url_template_col`` — digit/hex/uuid/slug segments classified,
@@ -128,20 +115,15 @@ def url_templates(docs: DataFrame, url_col: str = "url",
     = min(url) is exact and deterministic, never a collect.
     """
     from ferenda_spark.functions.web import url_template_col
-    t = (docs.select(url_template_col(F.col(url_col)).alias("template"),
-                     F.col(url_col).alias("u"))
+    t = (docs.select(url_template_col(F.col("url")).alias("template"),
+                     F.col("url").alias("u"))
          .filter(F.col("template").isNotNull()))
-    out = (t.groupBy("template")
-           .agg(F.count(F.lit(1)).alias("n_urls"),
-                F.min("u").alias("sample_url")))
-    if min_count > 1:
-        out = out.filter(F.col("n_urls") >= min_count)
-    return out
+    return (t.groupBy("template")
+            .agg(F.count(F.lit(1)).alias("n_urls"),
+                 F.min("u").alias("sample_url")))
 
 
-def declared_canonical_fetch(fetches: DataFrame, url_col: str = "url",
-                             ts_col: str = "warc_ts",
-                             html_col: str = "html") -> DataFrame:
+def declared_canonical_fetch(fetches: DataFrame) -> DataFrame:
     """Crawl-snapshot dedup keyed by the PAGE-DECLARED canonical.
 
     ``latest_fetch`` collapses *syntactic* url variants; this
@@ -158,7 +140,7 @@ def declared_canonical_fetch(fetches: DataFrame, url_col: str = "url",
     this), normalized through canonical_url_col; pages declaring
     nothing fall back to their own normalized url — so the operator
     strictly refines latest_fetch.  Winner per key: newest
-    ``ts_col``, ties broken by raw url then a full-row hash (the
+    ``warc_ts``, ties broken by raw url then a full-row hash (the
     latest_fetch total order), emitted with ``canonical_url`` (the
     dedup key), ``declared`` (whether it came from a rel=canonical)
     and ``n_fetches``.
@@ -177,22 +159,22 @@ def declared_canonical_fetch(fetches: DataFrame, url_col: str = "url",
     from ferenda_spark.operators.structured_data import head_meta
 
     declared = (
-        head_meta(fetches, url_col=url_col, html_col=html_col)
+        head_meta(fetches)
         .filter((F.col("kind") == "link")
                 & (F.col("key") == "canonical"))
-        .groupBy(F.col("src_url").alias(url_col))
+        .groupBy(F.col("src_url").alias("url"))
         .agg(F.min(F.struct("pos", "value")).alias("_first"))
-        .select(url_col, F.col("_first.value").alias("_declared")))
+        .select("url", F.col("_first.value").alias("_declared")))
 
-    keyed = (fetches.join(declared, url_col, "left")
+    keyed = (fetches.join(declared, "url", "left")
              .withColumn("declared", F.col("_declared").isNotNull())
              .withColumn(
                  "canonical_url",
                  canonical_url_col(F.coalesce(F.col("_declared"),
-                                              F.col(url_col))))
+                                              F.col("url"))))
              .drop("_declared"))
     w = Window.partitionBy("canonical_url")
-    wo = w.orderBy(F.col(ts_col).desc(), F.col(url_col),
+    wo = w.orderBy(F.col("warc_ts").desc(), F.col("url"),
                    F.xxhash64(*[F.col(c) for c in fetches.columns]))
     return (keyed
             .withColumn("_rn", F.row_number().over(wo))
@@ -201,8 +183,7 @@ def declared_canonical_fetch(fetches: DataFrame, url_col: str = "url",
             .drop("_rn"))
 
 
-def noindex_filter(pages: DataFrame, url_col: str = "url",
-                   html_col: str = "html") -> DataFrame:
+def noindex_filter(pages: DataFrame) -> DataFrame:
     """Drop pages whose ``<meta name="robots">`` (or the
     Google/Bing-specific variants) declares ``noindex`` or ``none``
     — the page-level opt-out that complements robots.txt's
@@ -224,16 +205,16 @@ def noindex_filter(pages: DataFrame, url_col: str = "url",
     """
     from ferenda_spark.operators.structured_data import head_meta
 
-    meta = head_meta(pages, url_col=url_col, html_col=html_col)
+    meta = head_meta(pages)
     opted_out = (
         meta.filter((F.col("kind") == "meta")
                     & F.col("key").isin("robots", "googlebot",
                                         "bingbot"))
-        .select(F.col("src_url").alias(url_col),
+        .select(F.col("src_url").alias("url"),
                 F.explode(F.split(F.lower("value"), ",")).alias("d"))
         .filter(F.trim(F.col("d")).isin("noindex", "none"))
-        .select(url_col).distinct())
-    return pages.join(opted_out, url_col, "left_anti")
+        .select("url").distinct())
+    return pages.join(opted_out, "url", "left_anti")
 
 
 #: "5; url=/new", "0;URL='x'" — the content syntax of a meta refresh
@@ -241,8 +222,7 @@ _REFRESH_RE = (r"^\s*(\d+)\s*(?:;\s*[uU][rR][lL]\s*=\s*"
                r"['\"]?([^'\"]+?)['\"]?\s*)?$")
 
 
-def meta_refresh_edges(pages: DataFrame, url_col: str = "url",
-                       html_col: str = "html") -> DataFrame:
+def meta_refresh_edges(pages: DataFrame) -> DataFrame:
     """(src, dst, delay_sec): client-side redirects declared as
     ``<meta http-equiv="refresh" content="N; url=...">`` — the
     redirect hop HTTP archives do NOT record (the server returned
@@ -263,7 +243,7 @@ def meta_refresh_edges(pages: DataFrame, url_col: str = "url",
     uniformly."""
     from ferenda_spark.operators.structured_data import head_meta
 
-    meta = head_meta(pages, url_col=url_col, html_col=html_col)
+    meta = head_meta(pages)
     r = (meta.filter((F.col("kind") == "meta")
                      & (F.col("key") == "refresh"))
          .groupBy(F.col("src_url").alias("src"))
@@ -289,8 +269,7 @@ def meta_refresh_edges(pages: DataFrame, url_col: str = "url",
             .filter(F.col("dst") != F.col("src")))
 
 
-def hreflang_clusters(pages: DataFrame, url_col: str = "url",
-                      html_col: str = "html") -> DataFrame:
+def hreflang_clusters(pages: DataFrame) -> DataFrame:
     """(url, cluster, hreflang): multilingual document families from
     ``<link rel="alternate" hreflang=...>`` — a site publishing the
     same article in five languages declares the other four on every
@@ -315,7 +294,7 @@ def hreflang_clusters(pages: DataFrame, url_col: str = "url",
     from ferenda_spark.operators.dedup import components
     from ferenda_spark.operators.structured_data import head_meta
 
-    meta = head_meta(pages, url_col=url_col, html_col=html_col)
+    meta = head_meta(pages)
     alts = (meta.filter((F.col("kind") == "link")
                         & (F.col("key") == "alternate")
                         & F.col("hreflang").isNotNull())
@@ -324,18 +303,18 @@ def hreflang_clusters(pages: DataFrame, url_col: str = "url",
                     F.col("hreflang"), "pos"))
     # the page's own tag: the first alternate pointing at itself
     self_tag = (alts.filter(F.col("dst") == F.col("src"))
-                .groupBy(F.col("src").alias(url_col))
+                .groupBy(F.col("src").alias("url"))
                 .agg(F.min(F.struct("pos", "hreflang")).alias("_f"))
-                .select(url_col,
+                .select("url",
                         F.col("_f.hreflang").alias("hreflang")))
     edges = (alts.filter(F.col("dst") != F.col("src"))
              .select(F.xxhash64("src").alias("id_a"),
                      F.xxhash64("dst").alias("id_b"))
              .distinct())
-    nodes = (pages.select(F.col(url_col))
-             .unionByName(alts.select(F.col("dst").alias(url_col)))
+    nodes = (pages.select(F.col("url"))
+             .unionByName(alts.select(F.col("dst").alias("url")))
              .distinct()
-             .withColumn("_h", F.xxhash64(F.col(url_col))))
+             .withColumn("_h", F.xxhash64(F.col("url"))))
     comp = components(edges)
     labeled = (nodes.join(comp.withColumnRenamed("id", "_h"), "_h",
                           "left")
@@ -343,7 +322,7 @@ def hreflang_clusters(pages: DataFrame, url_col: str = "url",
                                             F.col("_h"))))
     # component label back to a URL: min url within each component
     canon = (labeled.groupBy("_c")
-             .agg(F.min(url_col).alias("cluster")))
+             .agg(F.min("url").alias("cluster")))
     return (labeled.join(canon, "_c")
-            .join(self_tag, url_col, "left")
-            .select(url_col, "cluster", "hreflang"))
+            .join(self_tag, "url", "left")
+            .select("url", "cluster", "hreflang"))

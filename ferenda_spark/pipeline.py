@@ -73,8 +73,7 @@ def build_triples(pages: DataFrame, entities: DataFrame,
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
-                 store: GraphStore, stage: str = "materialize",
-                 doc_url_regex: str | None = None,
+                 store: GraphStore, doc_url_regex: str | None = None,
                  config_salt: str = "") -> dict:
     """Incremental run: process only pending pages, commit snapshots.
 
@@ -120,7 +119,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     import time as _time
 
     t0 = _time.time()
-    todo = pending_pages(pages, store, stage, config_salt)
+    todo = pending_pages(pages, store, config_salt)
     # a no-op run stops here, before any Python worker starts
     if todo.isEmpty():
         return {"pages": 0, "triples": 0, "skipped": True}
@@ -151,7 +150,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
             store.merge_current(per_page, commit_id)
 
             duration = _time.time() - t0
-            prov = provenance_rows(per_page, stage, commit_id,
+            prov = provenance_rows(per_page, "materialize", commit_id,
                                    rows_out_col=F.size("triples"),
                                    duration_s=duration)
             store.append(prov.observe(

@@ -43,10 +43,10 @@ CDX_JSON_SCHEMA = ("url string, status string, mime string, "
                    "redirect string")
 
 
-def parse_cdxj(lines: DataFrame, line_col: str = "line") -> DataFrame:
+def parse_cdxj(lines: DataFrame) -> DataFrame:
     """``(line)`` → (surt, ts, url, status, mime, filename, offset,
     length, error) — all codegen, no shuffle."""
-    line = F.col(line_col)
+    line = F.col("line")
     step = lines.select(
         line.alias("_line"),
         F.substring_index(line, " ", 1).alias("surt"),
@@ -83,13 +83,12 @@ def parse_cdxj(lines: DataFrame, line_col: str = "line") -> DataFrame:
         "error")
 
 
-def latest_capture(cdx: DataFrame, ok_only: bool = True) -> DataFrame:
+def latest_capture(cdx: DataFrame) -> DataFrame:
     """Newest capture per SURT key — ``max(struct(ts, ...))``, one
     shuffle with map-side partial max (hot keys never funnel raw
     rows to one reducer)."""
-    src = cdx.filter(F.col("error").isNull() & F.col("ts").isNotNull())
-    if ok_only:
-        src = src.filter(F.col("status") == "200")
+    src = cdx.filter(F.col("error").isNull() & F.col("ts").isNotNull()
+                     & (F.col("status") == "200"))
     best = F.max(F.struct(
         F.col("ts"), F.col("url"), F.col("status"), F.col("mime"),
         F.col("filename"), F.col("offset"), F.col("length"),
@@ -100,7 +99,10 @@ def latest_capture(cdx: DataFrame, ok_only: bool = True) -> DataFrame:
                     "b.redirect"))
 
 
-def fetch_plan(captures: DataFrame, max_gap: int = 65536) -> DataFrame:
+FETCH_MAX_GAP = 32
+
+
+def fetch_plan(captures: DataFrame) -> DataFrame:
     """Captures (filename, offset, length, …) → (filename, seg,
     range_start, range_end, n_records) coalesced read instructions."""
     w = Window.partitionBy("filename").orderBy("offset")
@@ -109,7 +111,7 @@ def fetch_plan(captures: DataFrame, max_gap: int = 65536) -> DataFrame:
         w.rowsBetween(Window.unboundedPreceding, -1))
     starts_new = F.when(
         prev_end.isNull() |
-        (F.col("offset") - prev_end > F.lit(int(max_gap))), 1
+        (F.col("offset") - prev_end > F.lit(FETCH_MAX_GAP)), 1
     ).otherwise(0)
     segd = (captures
             .filter(F.col("filename").isNotNull()

@@ -97,8 +97,7 @@ _RESOURCE_RE = r"^[A-Za-z][A-Za-z0-9+.-]*:[^\s\"]+$"
 
 
 def format_ntriples(triples: DataFrame,
-                    prefixes: dict[str, str] | None = None,
-                    graph_col: str | None = None) -> DataFrame:
+                    prefixes: dict[str, str] | None = None) -> DataFrame:
     """One N-Triples ``line`` per input triple.
 
     Input columns: ``subj``, ``pred``, ``obj``, plus (optionally)
@@ -143,21 +142,9 @@ def format_ntriples(triples: DataFrame,
               F.concat(F.lit("^^<"), dtype, F.lit(">")))
         .otherwise(F.lit("")))
     obj_term = F.when(is_lit, lit_term).otherwise(term(obj_res))
-    if graph_col is not None:
-        # N-Quads: the optional graph label before the terminator; a
-        # NULL graph row degrades to a plain triple statement (legal
-        # N-Quads — the default graph)
-        gc = F.col(graph_col)
-        if prefixes:
-            gc = expand_curies(gc, prefixes)
-        tail = F.when(gc.isNotNull(),
-                      F.concat(F.lit(" "), term(gc), F.lit(" ."))) \
-            .otherwise(F.lit(" ."))
-    else:
-        tail = F.lit(" .")
     return triples.select(
         F.concat(term(subj), F.lit(" "), term(pred), F.lit(" "),
-                 obj_term, tail).alias("line"))
+                 obj_term, F.lit(" .")).alias("line"))
 
 
 # blank-node labels per the N-Triples grammar (letters, digits,
@@ -170,15 +157,10 @@ _NT_O = (rf"(<[^>]*>|{_NT_BNODE}|"
          r'"((?:[^"\\]|\\.)*)"'
          r"(?:@([A-Za-z][A-Za-z0-9-]*))?(?:\^\^<([^>]*)>)?)")
 _NT_LINE = rf"^[ \t]*{_NT_S}[ \t]+{_NT_P}[ \t]+{_NT_O}[ \t]*\.[ \t\r]*$"
-# N-Quads: the same statement with an optional graph label (group 7)
-_NQ_LINE = (rf"^[ \t]*{_NT_S}[ \t]+{_NT_P}[ \t]+{_NT_O}"
-            rf"(?:[ \t]+(<[^>]*>|{_NT_BNODE}))?[ \t]*\.[ \t\r]*$")
 
 
 def parse_ntriples(lines: DataFrame,
-                   prefixes: dict[str, str] | None = None,
-                   line_col: str = "line",
-                   quads: bool = False) -> DataFrame:
+                   prefixes: dict[str, str] | None = None) -> DataFrame:
     """Distributed N-Triples parser: one anchored regex classifies
     each line (column-side; no Python).  Comment / blank lines are
     dropped per spec; anything else that does not parse — including a
@@ -188,15 +170,11 @@ def parse_ntriples(lines: DataFrame,
     contracts parsed IRIs back to the store's CURIE vocabulary.
 
     Output: (subj, pred, obj, obj_is_literal, obj_lang, obj_datatype,
-    error) — plus ``graph`` when ``quads=True``, which accepts the
-    N-Quads grammar (optional graph label per statement; a plain
-    triple line parses with a NULL graph).  With ``quads=False`` a
-    quad line is an error row, per the N-Triples grammar.
+    error).  A quad line is an error row, per the N-Triples grammar.
     """
-    c = F.col(line_col)
-    pattern = _NQ_LINE if quads else _NT_LINE
-    g = [F.regexp_extract(c, pattern, i)
-         for i in range(8 if quads else 7)]
+    c = F.col("line")
+    pattern = _NT_LINE
+    g = [F.regexp_extract(c, pattern, i) for i in range(7)]
     parsed = (lines
               .filter(~c.rlike(r"^[ \t]*(#|$)"))
               .withColumn("_m", c.rlike(pattern))
@@ -231,11 +209,6 @@ def parse_ntriples(lines: DataFrame,
         F.when(err.isNull() & (F.col("_dt") != ""),
                strip_iri(F.col("_dt"))).alias("obj_datatype"),
     ]
-    if quads:
-        parsed = parsed.withColumn("_g", g[7])
-        out_cols.append(
-            F.when(err.isNull() & (F.col("_g") != ""),
-                   strip_iri(F.col("_g"))).alias("graph"))
     return parsed.select(*out_cols, err.alias("error"))
 
 

@@ -123,21 +123,16 @@ def build_warcinfo_record(filename: str = "segment.warc") -> bytes:
     return CRLF.join(headers) + CRLF + CRLF + info + CRLF + CRLF
 
 
-def build_warc(records: Iterable[tuple], warcinfo: bool = True,
-               gzip_members: bool = False) -> bytes:
+def build_warc(records: Iterable[tuple]) -> bytes:
     """(url, ts, body[, content_type[, status]]) tuples → one WARC
-    segment.  ``gzip_members`` emits the ``.warc.gz`` convention: each
-    record its own gzip member (mtime pinned to 0 for determinism)."""
+    segment in the ``.warc.gz`` convention: each record its own gzip
+    member (mtime pinned to 0 for determinism)."""
     out = io.BytesIO()
 
     def emit(raw: bytes):
-        if gzip_members:
-            out.write(gzip.compress(raw, mtime=0))
-        else:
-            out.write(raw)
+        out.write(gzip.compress(raw, mtime=0))
 
-    if warcinfo:
-        emit(build_warcinfo_record())
+    emit(build_warcinfo_record())
     for rec in records:
         url, ts, body = rec[0], rec[1], rec[2]
         ctype = rec[3] if len(rec) > 3 else "text/html"
@@ -442,8 +437,7 @@ def _batched_pdfs(row_iter):
         yield _records_pdf(rows)
 
 
-def read_warc(spark: SparkSession, path: str,
-              glob: str = "*.warc*") -> DataFrame:
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Directory of WARC segments → one row per WARC record.
 
     One distributed ``binaryFile`` scan (a segment per row/task — the
@@ -453,7 +447,7 @@ def read_warc(spark: SparkSession, path: str,
     decompressed record plus one bounded output batch at a time, NOT
     the whole ~5 GB decompressed segment."""
     raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", glob)
+           .option("pathGlobFilter", "*.warc*")
            .option("recursiveFileLookup", "true")
            .load(path)
            .select("path", "content"))
@@ -468,23 +462,19 @@ def read_warc(spark: SparkSession, path: str,
     return raw.mapInPandas(parse_batches, schema=WARC_RECORD_SCHEMA)
 
 
-def pages_from_warc(records: DataFrame, lang: str = None) -> DataFrame:
+def pages_from_warc(records: DataFrame) -> DataFrame:
     """WARC record rows → the pipeline's pages shape
-    ``(url, warc_ts, html)`` (+ constant lang when given): HTTP-200
+    ``(url, warc_ts, html)``: HTTP-200
     ``response`` records only, one row per fetch."""
-    pages = (records
-             .filter((F.col("record_type") == "response")
-                     & (F.col("http_status") == 200)
-                     & F.col("error").isNull()
-                     & F.col("url").isNotNull())
-             .select("url", "warc_ts", F.col("body").alias("html")))
-    if lang is not None:
-        pages = pages.withColumn("lang", F.lit(lang))
-    return pages
+    return (records
+            .filter((F.col("record_type") == "response")
+                    & (F.col("http_status") == 200)
+                    & F.col("error").isNull()
+                    & F.col("url").isNotNull())
+            .select("url", "warc_ts", F.col("body").alias("html")))
 
 
-def warc_segments_from_pages(pages: DataFrame,
-                             gzip_members: bool = True) -> DataFrame:
+def warc_segments_from_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html) → one WARC segment blob per input
     partition (the export sink / roundtrip path).  Each task
     serializes its partition independently — no shuffle; segment
@@ -511,8 +501,7 @@ def warc_segments_from_pages(pages: DataFrame,
                 recs.append((url, ts, bytes(html)))
         if recs:
             yield pd.DataFrame(
-                {"segment": [build_warc(recs,
-                                        gzip_members=gzip_members)]})
+                {"segment": [build_warc(recs)]})
 
     return src.mapInPandas(to_segments, schema="segment binary")
 
@@ -553,12 +542,10 @@ def html_lang_col(html) -> "F.Column":
 # WET (extracted-text conversion records — the Common Crawl WET layer)
 # ---------------------------------------------------------------------------
 
-def build_conversion_record(url: str, ts, text: str,
-                            refers_to: str | None = None) -> bytes:
+def build_conversion_record(url: str, ts, text: str) -> bytes:
     """One WARC ``conversion`` record (the WET convention: extracted
     plain text of a page as ``Content-Type: text/plain``, bare body,
-    no HTTP message; ``WARC-Refers-To`` links back to the source
-    response record when known)."""
+    no HTTP message)."""
     url = _header_safe(url, "url")
     ts_s = format_warc_ts(ts)
     body = text.encode("utf-8")
@@ -569,9 +556,6 @@ def build_conversion_record(url: str, ts, text: str,
         b"WARC-Date: " + ts_s.encode(),
         b"WARC-Target-URI: " + url.encode(),
     ]
-    if refers_to:
-        headers.append(b"WARC-Refers-To: "
-                       + _header_safe(refers_to, "refers_to").encode())
     headers += [
         b"Content-Type: text/plain",
         ("Content-Length: %d" % len(body)).encode(),
@@ -579,8 +563,7 @@ def build_conversion_record(url: str, ts, text: str,
     return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
 
 
-def wet_segments_from_docs(docs: DataFrame,
-                           gzip_members: bool = True) -> DataFrame:
+def wet_segments_from_docs(docs: DataFrame) -> DataFrame:
     """docs(url, warc_ts, text) → one WET segment blob per input
     partition: warcinfo + a ``conversion`` record per document — the
     extracted-text distribution layer (Common Crawl's .wet.gz files)
@@ -597,10 +580,7 @@ def wet_segments_from_docs(docs: DataFrame,
         wrote = False
 
         def emit(raw: bytes):
-            if gzip_members:
-                out.write(gzip.compress(raw, mtime=0))
-            else:
-                out.write(raw)
+            out.write(gzip.compress(raw, mtime=0))
 
         for pdf in batches:
             for url, ts, text in zip(pdf["url"], pdf["warc_ts"],
@@ -654,8 +634,7 @@ def docs_roundtrip_wet(docs: DataFrame) -> DataFrame:
 # WAT (metadata records — the Common Crawl WAT layer)
 # ---------------------------------------------------------------------------
 
-def build_metadata_record(url: str, ts, meta_json: str,
-                          refers_to: str | None = None) -> bytes:
+def build_metadata_record(url: str, ts, meta_json: str) -> bytes:
     """One WARC ``metadata`` record (the WAT convention: a JSON
     envelope describing a captured page — fetch headers, outlinks,
     title — as ``Content-Type: application/json``)."""
@@ -669,9 +648,6 @@ def build_metadata_record(url: str, ts, meta_json: str,
         b"WARC-Date: " + ts_s.encode(),
         b"WARC-Target-URI: " + url.encode(),
     ]
-    if refers_to:
-        headers.append(b"WARC-Refers-To: "
-                       + _header_safe(refers_to, "refers_to").encode())
     headers += [
         b"Content-Type: application/json",
         ("Content-Length: %d" % len(body)).encode(),
@@ -679,8 +655,7 @@ def build_metadata_record(url: str, ts, meta_json: str,
     return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
 
 
-def wat_segments_from_pages(pages: DataFrame,
-                            gzip_members: bool = True) -> DataFrame:
+def wat_segments_from_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html) → one WAT segment blob per
     partition: a ``metadata`` record per page whose JSON envelope
     carries the fields a link-graph consumer needs — ``url``, ``ts``,
@@ -708,10 +683,7 @@ def wat_segments_from_pages(pages: DataFrame,
         wrote = False
 
         def emit(raw: bytes):
-            if gzip_members:
-                out.write(gzip.compress(raw, mtime=0))
-            else:
-                out.write(raw)
+            out.write(gzip.compress(raw, mtime=0))
 
         for pdf in batches:
             for url, ts, html in zip(pdf["url"], pdf["warc_ts"],

@@ -57,19 +57,18 @@ def test_latest_capture(spark):
         "line string"))
     ok = latest_capture(df).collect()
     assert len(ok) == 1 and ok[0]["filename"] == "w1.warc.gz"
-    anys = latest_capture(df, ok_only=False).collect()
-    assert anys[0]["filename"] == "w2.warc.gz"
 
 
-def test_fetch_plan_merges_ranges(spark):
+def test_fetch_plan_merges_ranges(spark, monkeypatch):
     caps = spark.createDataFrame(
         [("f1", 0, 100), ("f1", 150, 50),      # gap 50 <= 64: merge
          ("f1", 10, 20),                       # contained in [0,100)
          ("f1", 10000, 10), ("f2", 5, 5)],
         "filename string, offset long, length long")
+    monkeypatch.setattr("ferenda_spark.sources.cdx.FETCH_MAX_GAP", 64)
     plan = {(r["filename"], r["range_start"]):
             (r["range_end"], r["n_records"])
-            for r in fetch_plan(caps, max_gap=64).collect()}
+            for r in fetch_plan(caps).collect()}
     assert plan == {("f1", 0): (200, 3),
                     ("f1", 10000): (10010, 1),
                     ("f2", 5): (10, 1)}

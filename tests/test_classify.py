@@ -60,29 +60,37 @@ def test_trained_bucket_weights(spark):
         quality_score(docs, weights=[1, 2], n_buckets=8).collect()
 
 
-def test_threshold_mean_semantics(spark):
+def test_threshold_mean_semantics(spark, monkeypatch):
     """keep compares the MEAN weight to the threshold via integer
     multiplication: sum·1000 ≥ thr·n."""
     docs = _docs(spark)
+    monkeypatch.setattr(
+        "ferenda_spark.operators.classify.QUALITY_THRESHOLD_MILLI", 10**9)
     out = {r["id"]: r for r in quality_score(
-        docs, threshold_milli=10**9).collect()}
+        docs).collect()}
     # an absurd threshold rejects every non-empty doc
     assert not out[1]["keep"] and not out[3]["keep"]
+    monkeypatch.setattr(
+        "ferenda_spark.operators.classify.QUALITY_THRESHOLD_MILLI", -(10**9))
     out_lo = {r["id"]: r for r in quality_score(
-        docs, threshold_milli=-(10**9)).collect()}
+        docs).collect()}
     assert all(r["keep"] for r in out_lo.values())
 
-def test_empty_doc_positive_threshold_rejected(spark):
+def test_empty_doc_positive_threshold_rejected(spark, monkeypatch):
     """Review fix: an empty doc must NOT pass a positive-threshold
     gate (sum*1000 >= thr*0 would hold for every thr)."""
     docs = spark.createDataFrame([(1, ""), (2, "")],
                                  "doc_id long, text string")
-    out = quality_score(docs, threshold_milli=500).collect()
+    monkeypatch.setattr(
+        "ferenda_spark.operators.classify.QUALITY_THRESHOLD_MILLI", 500)
+    out = quality_score(docs).collect()
     assert all(not r["keep"] for r in out)
-    out0 = quality_score(docs, threshold_milli=0).collect()
+    monkeypatch.setattr(
+        "ferenda_spark.operators.classify.QUALITY_THRESHOLD_MILLI", 0)
+    out0 = quality_score(docs).collect()
     assert all(r["keep"] for r in out0)
 
-def test_broadcast_weights_match_literal_path(spark):
+def test_broadcast_weights_match_literal_path(spark, monkeypatch):
     """The broadcast pandas-UDF path (large n_buckets) must score
     identically to the literal-array codegen path — same hashing
     trick, different delivery of the weight table."""
@@ -92,14 +100,15 @@ def test_broadcast_weights_match_literal_path(spark):
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "beta beta"), (3, "")],
         "doc_id long, text string")
+    monkeypatch.setattr(
+        "ferenda_spark.operators.classify.QUALITY_THRESHOLD_MILLI", 5)
     lit = sorted(map(tuple, quality_score(
-        docs, weights=weights, n_buckets=n, threshold_milli=5).collect()))
+        docs, weights=weights, n_buckets=n).collect()))
     orig = classify._LITERAL_MAX_BUCKETS
     classify._LITERAL_MAX_BUCKETS = 1          # force the broadcast path
     try:
         bc = sorted(map(tuple, quality_score(
-            docs, weights=weights, n_buckets=n,
-            threshold_milli=5).collect()))
+            docs, weights=weights, n_buckets=n).collect()))
     finally:
         classify._LITERAL_MAX_BUCKETS = orig
     assert lit == bc
@@ -125,25 +134,26 @@ def test_large_model_broadcast_no_literal_plan(spark):
     assert abs(out[2]["score_sum_milli"]) <= 2 * 1000
 
 
-def test_train_nb_weights_discriminates(spark):
+def test_train_nb_weights_discriminates(spark, monkeypatch):
     from ferenda_spark.operators.classify import train_nb_weights
     rows = [(True, "excellent prose excellent prose insight"),
             (True, "insight excellent careful prose"),
             (False, "spam spam winner click spam"),
             (False, "click winner spam click")]
     labeled = spark.createDataFrame(rows, "label boolean, text string")
-    w = train_nb_weights(labeled, n_buckets=256)
+    monkeypatch.setattr("ferenda_spark.operators.classify.NB_BUCKETS", 256)
+    w = train_nb_weights(labeled)
     assert len(w) == 256
     scored = {r["id"]: r for r in quality_score(
         spark.createDataFrame(
             [(1, "excellent insight prose"), (2, "spam click winner")],
             "doc_id long, text string"),
-        weights=w, n_buckets=256, threshold_milli=0).collect()}
+        weights=w, n_buckets=256).collect()}
     # trained log-odds separate the classes with the right signs
     assert scored[1]["score_sum_milli"] > 0 and scored[1]["keep"]
     assert scored[2]["score_sum_milli"] < 0 and not scored[2]["keep"]
     # deterministic replay
-    assert train_nb_weights(labeled, n_buckets=256) == w
+    assert train_nb_weights(labeled) == w
     # untouched buckets share the smoothing-only constant
     import collections
     fill = collections.Counter(w).most_common(1)[0][0]
@@ -151,14 +161,15 @@ def test_train_nb_weights_discriminates(spark):
     assert 0 < len(touched) <= 7   # ≤ distinct training tokens
 
 
-def test_train_nb_weights_single_class_raises(spark):
+def test_train_nb_weights_single_class_raises(spark, monkeypatch):
     import pytest as _pytest
 
     from ferenda_spark.operators.classify import train_nb_weights
     labeled = spark.createDataFrame(
         [(True, "only positive text here")], "label boolean, text string")
     with _pytest.raises(ValueError, match="single-class"):
-        train_nb_weights(labeled, n_buckets=64)
+        monkeypatch.setattr("ferenda_spark.operators.classify.NB_BUCKETS", 64)
+        train_nb_weights(labeled)
 
 
 def test_score_eval_threshold_sweep(spark):

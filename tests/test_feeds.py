@@ -71,7 +71,7 @@ def test_writer_reader_roundtrip_with_links(spark):
           "https://s.com/a/1"),
          ("news", 2, "C <2>", dt.datetime(2024, 1, 3, 0, 0, 0),
           "https://s.com/a/2")],
-        "feed string, entry_id int, title string, ts timestamp, "
+        "feed string, event_id int, title string, ts timestamp, "
         "link string")
     feeds = atom_feeds(entries, link_col="link")
     got = {r["entry_id"]: r for r in feed_entries(

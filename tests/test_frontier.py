@@ -145,7 +145,7 @@ def test_schedule_fetches(spark):
     assert bare[0]["not_before_millis"] == 0
 
 
-def test_revisit_schedule_monotone_in_churn(spark):
+def test_revisit_schedule_monotone_in_churn(spark, monkeypatch):
     """More observed change → larger λ̂ → shorter revisit; clamping
     holds at both ends; all-unchanged hosts get a finite small λ̂."""
     import math
@@ -169,7 +169,7 @@ def test_revisit_schedule_monotone_in_churn(spark):
     # cold host: tiny λ̂ clamps to the 30-day ceiling
     assert got["cold.example"]["revisit_s"] == 30 * day
     # ultra-hot host with a tight band clamps to the floor
-    tight = revisit_schedule(prof, interval_s=7 * day,
-                             min_interval_s=10 ** 6).collect()
+    monkeypatch.setattr("ferenda_spark.operators.crawl.MIN_REVISIT_S", 10 ** 6)
+    tight = revisit_schedule(prof, interval_s=7 * day).collect()
     m = {r["host"]: r["revisit_s"] for r in tight}
     assert m["hot.example"] == 10 ** 6

@@ -103,7 +103,7 @@ def test_phrase_scoring_composes_with_terms(spark):
     assert out[1] == p and out[3] == p
 
 
-def test_repo_boosts_excludes_and_paging(spark):
+def test_repo_boosts_excludes_and_paging(spark, monkeypatch):
     """wsgiapp.py:388-435 API surface: exclude_repos drops a repo's
     docs, boost_repos scales scores BEFORE top-k (a boosted doc can
     displace unboosted ones), and pagenum/pagelen return one page plus
@@ -132,15 +132,17 @@ def test_repo_boosts_excludes_and_paging(spark):
     assert set(byrank.values()) == {1, 2, 3}
 
     # paging: page 2 of pagelen=1 is the SECOND-ranked doc + envelope
+    monkeypatch.setattr("ferenda_spark.operators.fulltext.PAGELEN", 1)
     page = ft.fulltext_search(idx, idf, ["beta"], repos=repos,
-                              pagenum=2, pagelen=1).collect()
+                              pagenum=2).collect()
     assert len(page) == 1
     r = page[0]
     assert r["rank"] == 2 and r["start_index"] == 1
     assert r["items_per_page"] == 1 and r["total_results"] == 3
 
     # empty query with paging: stable envelope schema, zero rows
-    empty = ft.fulltext_search(idx, idf, ["   "], pagenum=1, pagelen=5)
+    monkeypatch.setattr("ferenda_spark.operators.fulltext.PAGELEN", 5)
+    empty = ft.fulltext_search(idx, idf, ["   "], pagenum=1)
     assert empty.count() == 0
     assert set(empty.columns) == {"id", "score", "rank", "start_index",
                                   "items_per_page", "total_results"}
@@ -151,7 +153,7 @@ def test_repo_boosts_excludes_and_paging(spark):
         ft.fulltext_search(idx, idf, ["beta"], boost_repos={"ra": 2})
 
 
-def test_bm25_tracks_float_formula_and_length_norm(spark):
+def test_bm25_tracks_float_formula_and_length_norm(spark, monkeypatch):
     """The BIGINT fixed-point BM25 must track the float Okapi formula
     (Robertson/Zaragoza 2009) within fixed-point truncation, and
     length normalization must hold: equal tf, longer doc scores less."""
@@ -164,8 +166,9 @@ def test_bm25_tracks_float_formula_and_length_norm(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string, src string")
     idx = ft.fulltext_index(d, "doc_id", {"text": 1})
+    monkeypatch.setattr("ferenda_spark.operators.fulltext.BM25_TOP_K", 10)
     out = {r["id"]: r["score"]
-           for r in ft.bm25_search(idx, 4, ["beta"], k=10).collect()}
+           for r in ft.bm25_search(idx, 4, ["beta"]).collect()}
     assert set(out) == {1, 2, 3}
     # length normalization: same tf, shorter doc wins
     assert out[2] > out[1]
@@ -184,8 +187,9 @@ def test_bm25_tracks_float_formula_and_length_norm(spark):
 def test_bm25_field_restriction_and_empty(spark):
     d = _corpus(spark)
     idx = ft.fulltext_index(d, "doc_id", {"title": 4, "text": 1})
-    # title-only: only docs with 'beta' in title (doc 3)
-    only = ft.bm25_search(idx, 4, ["beta"], fields=["title"]).collect()
+    # a title-only index: only docs with 'beta' in title (doc 3)
+    title_idx = ft.fulltext_index(d, "doc_id", {"title": 4})
+    only = ft.bm25_search(title_idx, 4, ["beta"]).collect()
     assert [r["id"] for r in only] == [3]
     # empty query: stable schema, zero rows
     empty = ft.bm25_search(idx, 4, ["   "])

@@ -168,15 +168,6 @@ def test_check_constraints(spark):
         prof.check(t, [("x", "n", "between", 1.0)])
 
 
-def test_profile_approximate_mode(spark):
-    """HLL mode returns the same shape with near-exact counts at toy
-    scale (the 10^12-row path)."""
-    p = {r["column"]: r for r in
-         prof.profile(_table(spark), ["doc_id"],
-                      approximate=True).collect()}
-    assert abs(p["doc_id"]["n_distinct"] - 3) <= 1
-
-
 def test_validate_graph_cli(spark, tmp_path, capsys):
     """tools/validate_graph.py against a real pipeline store: VoID
     summary line, SHACL stats line, nonzero exit on nonconformance,
@@ -235,13 +226,9 @@ def test_validate_graph_cli(spark, tmp_path, capsys):
 
 
 def test_check_guards_and_df_input(spark):
-    """unique+approximate is refused loudly; a checks DataFrame is
-    consumed by field name regardless of column order; int thresholds
-    coerce."""
+    """A checks DataFrame is consumed by field name regardless of
+    column order; int thresholds coerce."""
     t = _table(spark)
-    with pytest.raises(ValueError, match="HyperLogLog"):
-        prof.check(t, [("u", "doc_id", "unique", 0.0)],
-                   approximate=True)
     # reordered columns + int threshold
     cdf = spark.createDataFrame(
         [("n", "d", "distinct_at_least", 2)],
@@ -370,20 +357,18 @@ def test_void_hll_error_band_at_gate_scale(spark):
         assert abs(ap[p] - ex[p]) / ex[p] <= 0.15, (p, ap[p], ex[p])
 
 
-def test_numeric_quantiles(spark):
-    """Exact interpolated percentiles per numeric column in one pass;
-    approximate mode returns the same shape."""
+def test_numeric_quantiles(spark, monkeypatch):
+    """Exact interpolated percentiles per numeric column in one pass,
+    at every probability of ``QUANTILE_PROBS``."""
     t = _table(spark)
+    monkeypatch.setattr(
+        "ferenda_spark.operators.profile.QUANTILE_PROBS", (0.5, 1.0))
     q = {(r["column"], r["p"]): r["value"] for r in
-         prof.numeric_quantiles(t, probs=(0.5, 1.0)).collect()}
+         prof.numeric_quantiles(t).collect()}
     # n values sorted: [-5, 10, 20, 30] -> median = 15, max = 30
     assert q[("n", 0.5)] == 15.0
     assert q[("n", 1.0)] == 30.0
     assert q[("doc_id", 1.0)] == 4.0
-    ap = {(r["column"], r["p"]): r["value"] for r in
-          prof.numeric_quantiles(t, ["n"], probs=(0.5,),
-                                 approximate=True).collect()}
-    assert ap[("n", 0.5)] in (10.0, 15.0, 20.0)  # sketch, any median
     with pytest.raises(ValueError, match="no numeric"):
         prof.numeric_quantiles(t.select("text"))
 

@@ -122,15 +122,6 @@ def test_sameas_canonicalize_rewrites_and_collapses(identity_graph):
     ]
 
 
-def test_sameas_precomputed_map_reused(spark, identity_graph):
-    m = sameas_map(identity_graph)
-    got = sorted(tuple(r) for r in sameas_canonicalize(
-        identity_graph, rewrite_map=m).collect())
-    direct = sorted(tuple(r) for r in
-                    sameas_canonicalize(identity_graph).collect())
-    assert got == direct
-
-
 def test_sameas_no_links_is_identity(spark):
     g = _t(spark, [("a", "p:x", "b")])
     assert [tuple(r) for r in sameas_canonicalize(g).collect()] == \
@@ -152,21 +143,21 @@ def test_rdfs_instance_side_never_merge_joins(graph):
 
 
 def test_sameas_rewrite_is_broadcast(identity_graph):
-    # materialize the map first, as a production batch would persist
-    # it — the assertion covers the corpus-rewrite path, not the
-    # node-scale map construction
-    m = sameas_map(identity_graph).localCheckpoint()
-    plan = _plan(sameas_canonicalize(identity_graph, rewrite_map=m))
+    # sameas_map materializes the node-scale map before it returns, so
+    # the plan left is the corpus-rewrite path
+    plan = _plan(sameas_canonicalize(identity_graph))
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 2
 
 
 def test_strict_closure_driver_equals_distributed(spark):
-    """The driver-BFS fast path and the distributed fixpoint are the
-    same function: identical pair sets on chains, diamonds, cycles,
-    self-loops and random digraphs."""
+    """The driver BFS (``_py_strict_closure``, the small-TBox path)
+    and the distributed fixpoint are the same function: identical
+    pair sets on chains, diamonds, cycles, self-loops and random
+    digraphs."""
     import random
-    from ferenda_spark.operators.infer import _strict_closure
+    from ferenda_spark.operators.infer import (_py_strict_closure,
+                                               _strict_closure)
     rnd = random.Random(7)
     cases = [
         [("a", "b"), ("b", "c"), ("c", "d")],                # chain
@@ -180,9 +171,8 @@ def test_strict_closure_driver_equals_distributed(spark):
     ]
     for pairs in cases:
         df = spark.createDataFrame(pairs, "sub string, sup string")
-        fast = {tuple(r) for r in _strict_closure(df).collect()}
-        slow = {tuple(r) for r in
-                _strict_closure(df, driver_max=0).collect()}
+        fast = _py_strict_closure(pairs)
+        slow = {tuple(r) for r in _strict_closure(df).collect()}
         assert fast == slow, pairs
 
 
@@ -192,27 +182,25 @@ def test_strict_closure_empty(spark):
     assert _strict_closure(df).collect() == []
 
 
-def test_closed_schema_local_equals_distributed(spark, graph):
+def test_closed_schema_local_equals_distributed(spark, graph,
+                                               monkeypatch):
     """The driver-side (local-relation) ClosedSchema and the
     distributed-fixpoint one must be the same closure — and
     rdfs_materialize must produce the identical graph through both."""
     from ferenda_spark.operators.infer import ClosedSchema
     mixed, schema, instance = graph
     local = ClosedSchema(schema)
-    dist = ClosedSchema(schema, driver_max=0)
+    want = {tuple(r) for r in
+            rdfs_materialize(instance, schema=schema).collect()}
+    monkeypatch.setattr(infer, "_DRIVER_CLOSURE_MAX", 0)
+    dist = ClosedSchema(schema)
     for name in ("sc", "sp", "eff_dom", "eff_rng", "triples"):
         a = {tuple(r) for r in getattr(local, name).collect()}
         b = {tuple(r) for r in getattr(dist, name).collect()}
         assert a == b, name
     got = {tuple(r) for r in
-           rdfs_materialize(instance, closed=dist).collect()}
-    want = {tuple(r) for r in
-            rdfs_materialize(instance, closed=local).collect()}
-    assert got == want
-    # the closed-TBox path emits batch ∪ entailments, no schema rows
-    assert want == {t for t in EXPECTED
-                    if t[1] not in (infer.SUBCLASS, infer.SUBPROP,
-                                    infer.DOMAIN, infer.RANGE)}
+           rdfs_materialize(instance, schema=schema).collect()}
+    assert got == want == EXPECTED
 
 
 def test_owl_inverse_symmetric_transitive_exact(spark):

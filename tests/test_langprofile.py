@@ -30,9 +30,10 @@ def test_char_ngrams_normalization(spark):
     assert rows[1]["g"] == []
 
 
-def test_train_and_classify_separates_languages(spark):
+def test_train_and_classify_separates_languages(spark, monkeypatch):
     labeled = spark.createDataFrame(CORPUS, "lang string, text string")
-    prof = train_lang_profiles(labeled, k=60)
+    monkeypatch.setattr("ferenda_spark.operators.langprofile.PROFILE_K", 60)
+    prof = train_lang_profiles(labeled)
     rows = prof.collect()
     assert {r["lang"] for r in rows} == {"en", "sv"}
     assert max(r["rank"] for r in rows) <= 60
@@ -45,23 +46,28 @@ def test_train_and_classify_separates_languages(spark):
         [(1, "the other thing was with the dog"),
          (2, "det var den andra texten med det vanliga")],
         "doc_id long, text string")
+    monkeypatch.setattr("ferenda_spark.operators.langprofile.DOC_K", 40)
+    monkeypatch.setattr("ferenda_spark.operators.langprofile.OOP_PENALTY", 60)
     got = {r["id"]: r["lang_pred"] for r in classify_language(
-        tests, prof, k_doc=40, penalty=60).collect()}
+        tests, prof).collect()}
     assert got == {1: "en", 2: "sv"}
     # deterministic replay
     again = {r["id"]: r["lang_pred"] for r in classify_language(
-        tests, prof, k_doc=40, penalty=60).collect()}
+        tests, prof).collect()}
     assert again == got
 
 
-def test_classify_penalty_and_absent_empty_docs(spark):
+def test_classify_penalty_and_absent_empty_docs(spark, monkeypatch):
     labeled = spark.createDataFrame(CORPUS, "lang string, text string")
-    prof = train_lang_profiles(labeled, k=60)
+    monkeypatch.setattr("ferenda_spark.operators.langprofile.PROFILE_K", 60)
+    prof = train_lang_profiles(labeled)
     docs = spark.createDataFrame(
         [(1, "zzz qqq xxx www vvv"), (2, "ab")],
         "doc_id long, text string")
+    monkeypatch.setattr("ferenda_spark.operators.langprofile.DOC_K", 40)
+    monkeypatch.setattr("ferenda_spark.operators.langprofile.OOP_PENALTY", 60)
     out = {r["id"]: r for r in classify_language(
-        docs, prof, k_doc=40, penalty=60).collect()}
+        docs, prof).collect()}
     # all-unknown grams: every gram pays the full penalty, and the
     # tie between languages breaks by language code
     r = out[1]

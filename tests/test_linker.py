@@ -56,7 +56,7 @@ def test_length_band_blocking_identical_to_unblocked(spark):
         assert got[v] == want, (v, got[v], want)
 
 
-def test_fuzzy_miss_cap_logged_and_unlinked(spark, capsys):
+def test_fuzzy_miss_cap_logged_and_unlinked(spark, capsys, monkeypatch):
     """Misses past max_fuzzy_misses stay unlinked (null), kept ones
     (lexicographically smallest) still fuzzy-link; the drop count is
     printed, never silent."""
@@ -66,9 +66,9 @@ def test_fuzzy_miss_cap_logged_and_unlinked(spark, capsys):
          ("zz-no-such-entity-1",),
          ("zz-no-such-entity-2",)],
         "label string")
+    monkeypatch.setattr("ferenda_spark.operators.linker.MAX_FUZZY_MISSES", 1)
     got = {r["label"]: r["entity_uri"]
-           for r in link_labels(mentions, ents,
-                                max_fuzzy_misses=1).collect()}
+           for r in link_labels(mentions, ents).collect()}
     assert got["Aetwork Working Group"] == \
         "https://example.org/res/org/network-working-group"
     assert got["zz-no-such-entity-1"] is None

@@ -74,7 +74,7 @@ def test_buckets_equal_frequency_and_order(spark):
         + [(i, "qq zz xx") for i in range(5, 7)],
         "doc_id long, text string")
     scored = score_perplexity(docs, lm)
-    out = perplexity_buckets(scored, n_buckets=3).collect()
+    out = perplexity_buckets(scored).collect()
     sizes = {}
     by_doc = {}
     for r in out:
@@ -89,6 +89,6 @@ def test_buckets_equal_frequency_and_order(spark):
 def test_buckets_empty_input(spark):
     lm = _fit(spark)
     docs = spark.createDataFrame([], "doc_id long, text string")
-    out = perplexity_buckets(score_perplexity(docs, lm), n_buckets=3)
+    out = perplexity_buckets(score_perplexity(docs, lm))
     assert out.count() == 0
     assert "bucket" in out.columns

@@ -112,13 +112,14 @@ def test_patch_store_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_ivf_queries_broadcast(spark):
+def test_ivf_queries_broadcast(spark, monkeypatch):
     """IVF probe side broadcasts; items are never shuffled."""
     from ferenda_spark.operators.similarity import ivf_topk
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    plan = _plan(ivf_topk(emb, qs, dim=64, k=3))
+    monkeypatch.setattr("ferenda_spark.operators.similarity.TOPK", 3)
+    plan = _plan(ivf_topk(emb, qs, dim=64))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -182,7 +183,7 @@ def test_token_spans_single_winner_shuffle(spark):
     function (which would single-partition hot hashes)."""
     from ferenda_spark.operators.dedup import duplicate_token_spans
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = _plan(duplicate_token_spans(docs, window=20))
+    plan = _plan(duplicate_token_spans(docs))
     assert "Window" not in plan
     assert "partial_min" in plan or "HashAggregate" in plan
 
@@ -241,8 +242,7 @@ def test_dedup_against_index_streams_the_index(spark):
     batch = spark.range(100, 104).selectExpr(
         "id as doc_id",
         "concat('batch words number ', id, ' other filler tokens') as text")
-    plan = _plan(dedup.dedup_against_index(batch, index, k=8, bands=4,
-                                           self_dedup=False))
+    plan = _plan(dedup.dedup_against_index(batch, index))
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2
     assert "LeftSemi" in plan
@@ -264,11 +264,12 @@ def test_url_template_stays_in_codegen(spark):
     assert plan.count("Exchange") <= 2  # partial/final agg split + AQE
 
 
-def test_cms_sketch_single_aggregate_no_python(spark):
+def test_cms_sketch_single_aggregate_no_python(spark, monkeypatch):
     from ferenda_spark.operators.sketch import cms_sketch
     df = spark.createDataFrame([(f"k{i%7}",) for i in range(100)],
                                "key string")
-    plan = _plan(cms_sketch(df, depth=4, width=64))
+    monkeypatch.setattr("ferenda_spark.operators.sketch.CMS_WIDTH", 64)
+    plan = _plan(cms_sketch(df))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "WindowExec" not in plan
@@ -328,7 +329,7 @@ def test_declared_canonical_no_python_after_harvest(spark):
     assert wins and all("canonical_url" in seg for seg in wins)
 
 
-def test_langid_profile_window_partitioned_by_lang(spark):
+def test_langid_profile_window_partitioned_by_lang(spark, monkeypatch):
     """The training window runs over PRE-AGGREGATED (lang, gram)
     counts partitioned by lang — never a global single-partition
     window (the r2 WindowExec lesson)."""
@@ -336,7 +337,8 @@ def test_langid_profile_window_partitioned_by_lang(spark):
     docs = spark.createDataFrame(
         [("en", "the thing there"), ("sv", "det var det")],
         "lang string, text string")
-    plan = _plan(train_lang_profiles(docs, k=10))
+    monkeypatch.setattr("ferenda_spark.operators.langprofile.PROFILE_K", 10)
+    plan = _plan(train_lang_profiles(docs))
     w = plan[plan.index("Window"):plan.index("Window") + 200]
     assert "lang" in w          # partitioned by lang, never global
     # gram counts pre-aggregate map-side before the shuffle
@@ -356,13 +358,14 @@ def test_score_eval_single_shuffle(spark):
     assert "Window" not in plan and "BatchEvalPython" not in plan
 
 
-def test_harmonic_centrality_combinable_aggregate(spark):
+def test_harmonic_centrality_combinable_aggregate(spark, monkeypatch):
     """The centrality reduction over distance rows is one groupBy
     with map-side partials — no window, no python."""
     from ferenda_spark.operators.rank import harmonic_centrality
     edges = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     lms = spark.createDataFrame([(2,)], "node long")
-    plan = _plan(harmonic_centrality(edges, lms, max_depth=4))
+    monkeypatch.setattr("ferenda_spark.operators.rank.HARMONIC_MAX_DEPTH", 4)
+    plan = _plan(harmonic_centrality(edges, lms))
     assert "partial_sum" in plan or "partial_count" in plan
     assert "Window" not in plan and "BatchEvalPython" not in plan
 

@@ -73,10 +73,6 @@ def test_pagerank_dangling_mass_redistributed(spark):
         assert abs(micro / 1e6 - want[v]) < 1e-4, (v, micro, want[v])
     # mass conserved up to floor truncation: Σ rank ≈ 1
     assert abs(sum(got.values()) / 1e6 - 1.0) < 1e-3
-    # the drop variant strictly loses C's mass
-    dropped = {r["node"]: r["rank_micro"]
-               for r in pagerank(df, iters=4, dangling="drop").collect()}
-    assert sum(dropped.values()) < sum(got.values())
 
 
 # ---- HITS ----------------------------------------------------------------
@@ -111,7 +107,7 @@ def _hits_int(edges, iters):
 def test_hits_matches_int_reference(spark):
     df = spark.createDataFrame(EDGES, "src string, dst string")
     got = {r["node"]: (r["hub_micro"], r["auth_micro"])
-           for r in hits(df, iters=2).collect()}
+           for r in hits(df).collect()}
     h, a = _hits_int(EDGES, iters=2)
     assert got == {v: (h[v], a[v]) for v in h}
     # C is the strongest authority (3 in-links); A the strongest hub
@@ -122,17 +118,18 @@ def test_hits_matches_int_reference(spark):
     assert got["D"][1] == 0 and got["D"][0] > 0
 
 
-def test_hits_deterministic_across_partitionings(spark):
+def test_hits_deterministic_across_partitionings(spark, monkeypatch):
     df1 = spark.createDataFrame(EDGES, "src string, dst string").repartition(1)
     df7 = spark.createDataFrame(EDGES, "src string, dst string").repartition(7)
-    r1 = sorted(map(tuple, hits(df1, iters=3).collect()))
-    r7 = sorted(map(tuple, hits(df7, iters=3).collect()))
+    monkeypatch.setattr("ferenda_spark.operators.rank.HITS_ITERS", 3)
+    r1 = sorted(map(tuple, hits(df1).collect()))
+    r7 = sorted(map(tuple, hits(df7).collect()))
     assert r1 == r7
 
 
 def test_hits_empty(spark):
     df = spark.createDataFrame([], "src string, dst string")
-    assert hits(df, iters=2).count() == 0
+    assert hits(df).count() == 0
 
 
 # ---- triangles -------------------------------------------------------------
@@ -203,7 +200,7 @@ def test_triangles_none(spark):
     assert triangles(df).count() == 0
 
 
-def test_link_prediction_ra_exact_and_hub_cap(spark):
+def test_link_prediction_ra_exact_and_hub_cap(spark, monkeypatch):
     """RA scores on a hand-checked graph: score = Σ 10^6 DIV deg(w)
     over common neighbors; adjacent pairs excluded; a hub above the
     degree cap stops generating candidates (and only loses its
@@ -229,7 +226,8 @@ def test_link_prediction_ra_exact_and_hub_cap(spark):
         [("a", "b"), ("a", "w"), ("w", "b")], "src string, dst string")
     assert link_prediction_ra(edges3).count() == 0
     # hub cap: w exceeds max_hub_degree -> no candidates at all
-    assert link_prediction_ra(edges, max_hub_degree=2).count() == 0
+    monkeypatch.setattr("ferenda_spark.operators.rank.RA_MAX_HUB_DEGREE", 2)
+    assert link_prediction_ra(edges).count() == 0
 
 
 def test_label_propagation_triangle_and_determinism(spark):
@@ -241,13 +239,13 @@ def test_label_propagation_triangle_and_determinism(spark):
            ("x", "y"), ("y", "z"), ("z", "x")]
     edges = spark.createDataFrame(tri, "src string, dst string")
     out = {r["node"]: r["label"]
-           for r in label_propagation(edges, iters=2).collect()}
+           for r in label_propagation(edges).collect()}
     # round 1: every node takes its min neighbor; round 2: majority
     # (a sees b->"a", c->"a" => "a"; b sees a->"b", c->"a" => "a"...)
     assert out == {"a": "a", "b": "a", "c": "a",
                    "x": "x", "y": "x", "z": "x"}
     again = {r["node"]: r["label"]
-             for r in label_propagation(edges, iters=2).collect()}
+             for r in label_propagation(edges).collect()}
     assert out == again
     # two triangles bridged by one edge: hand-trace of the exact
     # 2-round synchronous state.  Round 1 minimums: a->b, b->a,
@@ -258,14 +256,13 @@ def test_label_propagation_triangle_and_determinism(spark):
     # intact and never absorbs the x-triangle's core.
     bridged = tri + [("c", "x")]
     out2 = {r["node"]: r["label"] for r in label_propagation(
-        spark.createDataFrame(bridged, "src string, dst string"),
-        iters=2).collect()}
+        spark.createDataFrame(bridged, "src string, dst string")).collect()}
     assert {out2["a"], out2["b"], out2["c"]} == {"a"}
     assert out2["x"] == "x"
     assert {out2["y"], out2["z"]} == {"c"}
 
 
-def test_k_core_peels_to_fixpoint(spark):
+def test_k_core_peels_to_fixpoint(spark, monkeypatch):
     """Hand-traced: a triangle with a pendant chain — the chain peels
     off over two rounds, the triangle is the 2-core; a 4-clique
     survives k=3 while everything else drops."""
@@ -277,12 +274,14 @@ def test_k_core_peels_to_fixpoint(spark):
     assert out == {"a": 2, "b": 2, "c": 2}
     # exactly-N-rounds contract: after ONE round only e is gone
     # (e had degree 1; d still had degree 2 when peeled rounds start)
+    monkeypatch.setattr("ferenda_spark.operators.rank.K_CORE_ITERS", 1)
     one = {r["node"]: r["degree"]
-           for r in k_core(df, k=2, iters=1).collect()}
+           for r in k_core(df, k=2).collect()}
     assert one == {"a": 2, "b": 2, "c": 3, "d": 1}
     # early-exit == generous-bound (identity rounds are free)
+    monkeypatch.setattr("ferenda_spark.operators.rank.K_CORE_ITERS", 50)
     deep = {r["node"]: r["degree"]
-            for r in k_core(df, k=2, iters=50).collect()}
+            for r in k_core(df, k=2).collect()}
     assert deep == out
     # k=3: 4-clique with a pendant triangle attached at one vertex
     clique = [(a, b) for i, a in enumerate("pqrs")
@@ -296,7 +295,7 @@ def test_k_core_peels_to_fixpoint(spark):
     assert k_core(df, k=5).count() == 0
 
 
-def test_cocitation_and_coupling(spark):
+def test_cocitation_and_coupling(spark, monkeypatch):
     """Hand-traced: s1 cites {t1,t2,t3}, s2 cites {t2,t3}, s3 cites
     {t3} — co-citation counts common citers per target pair; coupling
     counts shared references per source pair; caps drop hub centers."""
@@ -313,12 +312,16 @@ def test_cocitation_and_coupling(spark):
           for r in bibliographic_coupling(df).collect()}
     assert bc == {("s1", "s2"): 2, ("s1", "s3"): 1, ("s2", "s3"): 1}
     # cap: excluding sources with out-degree > 2 removes s1's wedges
+    monkeypatch.setattr(
+        "ferenda_spark.operators.rank.COCITATION_MAX_OUT_DEGREE", 2)
     cc2 = {(r["a"], r["b"]): r["n_cocited"]
-           for r in co_citation(df, max_out_degree=2).collect()}
+           for r in co_citation(df).collect()}
     assert cc2 == {("t2", "t3"): 1}
     # cap on coupling: t3 (in-degree 3) excluded
+    monkeypatch.setattr(
+        "ferenda_spark.operators.rank.COUPLING_MAX_IN_DEGREE", 2)
     bc2 = {(r["a"], r["b"]): r["n_shared"]
-           for r in bibliographic_coupling(df, max_in_degree=2).collect()}
+           for r in bibliographic_coupling(df).collect()}
     assert bc2 == {("s1", "s2"): 1}
 
 
@@ -379,20 +382,30 @@ def _scc_local(edges):
     return out
 
 
-def _scc_spark(spark, edges, **kw):
+def _scc_spark(spark, edges):
     from ferenda_spark.operators.rank import scc
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {r["id"]: r["comp"] for r in scc(df, **kw).collect()}
+    return {r["id"]: r["comp"] for r in scc(df).collect()}
 
 
-def test_scc_rings_bridges_chord(spark):
+def _scc_distributed(spark, edges, monkeypatch, **consts):
+    """scc through the distributed coloring path (``DRIVER_MAX`` 0),
+    with any other rank constants overridden for this call only."""
+    with monkeypatch.context() as m:
+        m.setattr("ferenda_spark.operators.rank.DRIVER_MAX", 0)
+        for name, value in consts.items():
+            m.setattr(f"ferenda_spark.operators.rank.{name}", value)
+        return _scc_spark(spark, edges)
+
+
+def test_scc_rings_bridges_chord(spark, monkeypatch):
     # two 4-rings bridged one way -> separate SCCs; a back chord
-    # merges them; plus a DAG tail and a self-loop.  driver_max=0
-    # forces the DISTRIBUTED coloring path.
+    # merges them; plus a DAG tail and a self-loop, through the
+    # DISTRIBUTED coloring path.
     ring1 = [(0, 1), (1, 2), (2, 3), (3, 0)]
     ring2 = [(10, 11), (11, 12), (12, 13), (13, 10)]
     edges = ring1 + ring2 + [(10, 0)] + [(20, 10), (21, 20), (5, 5)]
-    got = _scc_spark(spark, edges, driver_max=0)
+    got = _scc_distributed(spark, edges, monkeypatch)
     want = _scc_local(edges)
     assert got == want
     assert got[0] == got[1] == got[2] == got[3] == 0
@@ -411,7 +424,7 @@ def test_scc_pure_dag_all_singletons(spark):
     assert got == {v: v for v in range(9)}
 
 
-def test_scc_matches_kosaraju_on_random_graphs(spark):
+def test_scc_matches_kosaraju_on_random_graphs(spark, monkeypatch):
     import random
     for seed in (7, 19, 23):
         rng = random.Random(seed)
@@ -426,13 +439,14 @@ def test_scc_matches_kosaraju_on_random_graphs(spark):
     rng = random.Random(101)
     edges = sorted({(rng.randrange(16), rng.randrange(16))
                     for _ in range(36)})
-    assert _scc_spark(spark, edges, driver_max=0) == _scc_local(edges)
+    assert _scc_distributed(spark, edges, monkeypatch) == \
+        _scc_local(edges)
 
 
-def test_scc_nonconvergence_raises(spark):
+def test_scc_nonconvergence_raises(spark, monkeypatch):
     import pytest
     # a 16-chain of 2-cycles forms 16 SCCs in a 16-deep condensation
-    # path; with max_rounds=1 the periphery cannot retire
+    # path; with one coloring round the periphery cannot retire
     edges = []
     for g in range(16):
         a, b = 2 * g, 2 * g + 1
@@ -442,7 +456,7 @@ def test_scc_nonconvergence_raises(spark):
     ok = _scc_spark(spark, edges)        # fast path: converges
     assert ok == _scc_local(edges)
     with pytest.raises(RuntimeError, match="scc"):
-        _scc_spark(spark, edges, driver_max=0, max_rounds=1)
+        _scc_distributed(spark, edges, monkeypatch, SCC_MAX_ROUNDS=1)
 
 
 # ---------------------------------------------------------- trustrank
@@ -531,7 +545,7 @@ def test_condensation_projects_scc_dag(spark):
     assert dag == {(1, 3), (9, 1)}
 
 
-def test_topo_levels_driver_and_distributed_agree(spark):
+def test_topo_levels_driver_and_distributed_agree(spark, monkeypatch):
     from ferenda_spark.operators.rank import topo_levels
     # diamond + tail: longest path decides the level
     edges = [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4), (9, 2)]
@@ -539,12 +553,13 @@ def test_topo_levels_driver_and_distributed_agree(spark):
     want = {0: 0, 9: 0, 1: 1, 2: 1, 3: 2, 4: 3}
     got = {r["node"]: r["level"] for r in topo_levels(e).collect()}
     assert got == want
+    monkeypatch.setattr("ferenda_spark.operators.rank.DRIVER_MAX", 0)
     dist = {r["node"]: r["level"]
-            for r in topo_levels(e, driver_max=0).collect()}
+            for r in topo_levels(e).collect()}
     assert dist == want
 
 
-def test_topo_levels_cycle_raises(spark):
+def test_topo_levels_cycle_raises(spark, monkeypatch):
     import pytest
     from ferenda_spark.operators.rank import topo_levels
     e = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
@@ -552,7 +567,9 @@ def test_topo_levels_cycle_raises(spark):
     with pytest.raises(ValueError, match="cycle"):
         topo_levels(e)
     with pytest.raises(ValueError, match="cycle"):
-        topo_levels(e, driver_max=0, max_iters=10)
+        monkeypatch.setattr("ferenda_spark.operators.rank.DRIVER_MAX", 0)
+        monkeypatch.setattr("ferenda_spark.operators.rank.TOPO_MAX_ITERS", 10)
+        topo_levels(e)
 
 
 # ----------------------------------------------- landmark distances
@@ -627,53 +644,15 @@ def test_degree_assortativity_star_vs_clique(spark):
     assert (r_b["n_edges"], r_b["r"]) == (r_cl["n_edges"], r_cl["r"])
 
 
-def test_pagerank_warm_start_reconverges(spark):
-    """Warm start is exact power iteration from the given vector:
-    seeding the uniform prior reproduces the cold run bit-for-bit,
-    seeding converged ranks is idempotent on the unchanged graph, and
-    after an edge delta a short warm run tracks the long cold run."""
-    from pyspark.sql import functions as F
-    from ferenda_spark.operators.rank import SCALE, pagerank
-    base = [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"), ("d", "c")]
-    e0 = spark.createDataFrame(base, "src string, dst string")
-    # seeding the uniform prior == cold start, exactly
-    nodes = sorted({x for e in base for x in e})
-    uniform = spark.createDataFrame(
-        [(v, SCALE // len(nodes) // 10**6) for v in nodes],
-        "node string, rank_micro long")
-    cold3 = sorted(map(tuple, pagerank(e0, iters=3).collect()))
-    warm3 = sorted(map(tuple,
-                       pagerank(e0, iters=3, init=uniform).collect()))
-    assert cold3 == warm3
-    # converged ranks re-fed on the unchanged graph stay put
-    prior = pagerank(e0, iters=60)
-    conv = {r["node"]: r["rank_micro"] for r in prior.collect()}
-    again = {r["node"]: r["rank_micro"]
-             for r in pagerank(e0, iters=1, init=prior).collect()}
-    for v, want in conv.items():
-        assert abs(again[v] - want) <= max(2, want // 500), \
-            (v, again[v], want)
-    # after a delta, a SHORT warm run lands within the damping
-    # envelope of a LONG cold run (0.85^6 of the perturbation)
-    e1 = spark.createDataFrame(base + [("a", "d")],
-                               "src string, dst string")
-    cold = {r["node"]: r["rank_micro"]
-            for r in pagerank(e1, iters=60).collect()}
-    warm = {r["node"]: r["rank_micro"]
-            for r in pagerank(e1, iters=8, init=prior).collect()}
-    for v, want in cold.items():
-        assert abs(warm[v] - want) <= max(2, want // 10), (v, warm[v],
-                                                           want)
-
-
-def test_harmonic_centrality_landmark_estimate(spark):
+def test_harmonic_centrality_landmark_estimate(spark, monkeypatch):
     from ferenda_spark.operators.rank import harmonic_centrality
     # path graph 0→1→2→3 plus isolated pair 8→9
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (8, 9)], "src long, dst long")
     lms = spark.createDataFrame([(3,), (9,)], "node long")
+    monkeypatch.setattr("ferenda_spark.operators.rank.HARMONIC_MAX_DEPTH", 6)
     out = {r["node"]: r for r in harmonic_centrality(
-        edges, lms, max_depth=6).collect()}
+        edges, lms).collect()}
     # node 0: d(0,3)=3, 9 unreachable → 1000000//3; N=6, k=2
     assert out["0"]["k_reached"] == 1
     assert out["0"]["inv_dist_sum_micro"] == 333333
@@ -683,11 +662,7 @@ def test_harmonic_centrality_landmark_estimate(spark):
     # landmarks exclude themselves (dist 0 skipped): node 3 reaches
     # neither other landmark → absent
     assert "3" not in out
-    # explicit n_nodes overrides the endpoint count
-    out2 = {r["node"]: r for r in harmonic_centrality(
-        edges, lms, max_depth=6, n_nodes=101).collect()}
-    assert out2["8"]["harmonic_micro"] == 1000000 * 100 // 2
     import pytest as _pytest
     with _pytest.raises(ValueError, match="empty landmark"):
         harmonic_centrality(edges, spark.createDataFrame(
-            [], "node long"), max_depth=3)
+            [], "node long"))

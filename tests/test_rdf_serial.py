@@ -138,7 +138,8 @@ def test_load_tool_empty_dump_and_partition_spec(spark, tmp_path):
     error (not a fake parse-failure), and --partition-by lays the
     loaded snapshot out for predicate pruning."""
     import sys
-    sys.path.insert(0, "/root/repo")
+    from pathlib import Path
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from tools.load_ntriples import run as load_run
     empty = tmp_path / "empty"
     empty.mkdir()

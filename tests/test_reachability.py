@@ -18,6 +18,19 @@ definition reached.  Anything unreached is deleted together with its
 unit tests, unless ``ALLOWLIST`` keeps it for one of two reasons: it is
 the Python restatement a remaining test uses as the expected value of a
 reached definition (``ORACLE``), or it is test harness (``HARNESS``).
+
+The same walk keeps options from outliving their last varied caller.
+Every defaulted parameter of a function or method defined in a reached
+package module, and called by name from reached code, gets one value
+per program call site: the keyword argument, else the positional
+argument at its index, else the default.  A value that is not a literal
+counts as varied, and so does any parameter a ``*args``/``**kwargs``
+argument could feed.  A parameter whose every value is the same literal
+is one value with an option around it: the value becomes a constant in
+the body and the branches it deselects are deleted, unless
+``OPTION_ALLOWLIST`` keeps it as a deployment setting (``DEPLOYMENT``:
+a path, glob or file name) or as test harness (``HARNESS``: a test can
+reach the behaviour no other way).
 """
 
 import ast
@@ -29,6 +42,7 @@ PACKAGE = "ferenda_spark"
 
 ORACLE = "test oracle for "
 HARNESS = "test harness: "
+DEPLOYMENT = "deployment setting: "
 
 ALLOWLIST = {
     "functions.web.url_path": ORACLE + "url_path_col",
@@ -48,6 +62,9 @@ ALLOWLIST = {
     "operators.metadata.assert_required_predicates":
         HARNESS + "rdf:type-per-subject check in test_triples",
 }
+
+
+OPTION_ALLOWLIST: dict[str, str] = {}
 
 
 def _roots(repo):
@@ -133,14 +150,11 @@ def _units(tree):
     return units, rest
 
 
-def unreached(repo, package=PACKAGE, roots=None, keep=()):
-    """(unreached modules, unreached top-level definitions), each as
-    names dotted below ``package``, for the program rooted at ``roots``
-    (default: the entry point, ``bench.py``, ``tools/`` and
-    ``perfbench/``).  Definitions in ``keep`` count as reached, and so
-    does what they use."""
+def _reach(repo, package, roots, keep):
+    """Walk the program to its fixpoint: (parsed package modules as
+    {name: (rest refs, {unit: refs}, units, rest)}, reached modules,
+    reached (module, unit) pairs, the parsed root files)."""
     repo = Path(repo)
-    prefix = len(package) + 1
     modules = {}
     for path in sorted((repo / package).rglob("*.py")):
         name = _module_name(path, repo)
@@ -148,7 +162,8 @@ def unreached(repo, package=PACKAGE, roots=None, keep=()):
         units, rest = _units(ast.parse(path.read_text(), str(path)))
         modules[name] = (
             _refs(rest, name, is_package),
-            {u: _refs(stmts, name, is_package) for u, stmts in units.items()})
+            {u: _refs(stmts, name, is_package) for u, stmts in units.items()},
+            units, rest)
 
     names, imported = set(), set()
 
@@ -159,15 +174,17 @@ def unreached(repo, package=PACKAGE, roots=None, keep=()):
             imported.update(".".join(parts[:i])
                             for i in range(1, len(parts) + 1))
 
-    for path in (_roots(repo) if roots is None else roots):
-        take(_refs([ast.parse(Path(path).read_text(), str(path))],
-                   "__main__", False))
+    root_trees = [ast.parse(Path(path).read_text(), str(path))
+                  for path in (_roots(repo) if roots is None else roots)]
+    for tree in root_trees:
+        take(_refs([tree], "__main__", False))
 
+    prefix = len(package) + 1
     reached_mods, reached_units = set(), set()
     changed = True
     while changed:
         changed = False
-        for m, (rest, units) in modules.items():
+        for m, (rest, units, _, _) in modules.items():
             if m not in reached_mods and m in imported:
                 reached_mods.add(m)
                 take(rest)
@@ -180,13 +197,115 @@ def unreached(repo, package=PACKAGE, roots=None, keep=()):
                     reached_units.add((m, u))
                     take(refs)
                     changed = True
+    return modules, reached_mods, reached_units, root_trees
 
+
+def unreached(repo, package=PACKAGE, roots=None, keep=()):
+    """(unreached modules, unreached top-level definitions), each as
+    names dotted below ``package``, for the program rooted at ``roots``
+    (default: the entry point, ``bench.py``, ``tools/`` and
+    ``perfbench/``).  Definitions in ``keep`` count as reached, and so
+    does what they use."""
+    modules, reached_mods, reached_units, _ = _reach(repo, package, roots,
+                                                     keep)
+    prefix = len(package) + 1
     dead_mods = {m[prefix:] for m in modules
                  if m not in reached_mods and m != package}
     dead_defs = {f"{m[prefix:]}.{u}" if m != package else u
                  for m in reached_mods for u in modules[m][1]
                  if (m, u) not in reached_units}
     return dead_mods, dead_defs
+
+
+def _literal(node):
+    """A hashable stand-in for a literal expression, or None."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError,
+            RecursionError):
+        return None
+    return type(value).__name__, repr(value)
+
+
+def _defaulted(fn, is_method):
+    """(name, positional index or None, default) for every defaulted
+    parameter of ``fn``; the index counts from the first argument a
+    call site writes (past ``self`` for a method)."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(arg.arg, i - is_method, d)
+           for i, (arg, d) in enumerate(zip(pos[first:], a.defaults), first)]
+    out += [(arg.arg, None, d)
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _site_value(call, name, index, default):
+    """The value a call site gives one parameter, or None if varied."""
+    for k in call.keywords:
+        if k.arg == name:
+            return _literal(k.value)
+    star = next((i for i, x in enumerate(call.args)
+                 if isinstance(x, ast.Starred)), None)
+    if index is not None and star is not None and index >= star:
+        return None
+    if index is not None and 0 <= index < len(call.args):
+        return _literal(call.args[index])
+    if any(k.arg is None for k in call.keywords):
+        return None
+    return _literal(default)
+
+
+def one_value_options(repo, package=PACKAGE, roots=None):
+    """{parameter dotted below ``package``: its one literal value} for
+    every defaulted parameter of a reached package function or method
+    that every program call site gives the same literal."""
+    modules, reached_mods, reached_units, root_trees = _reach(
+        repo, package, roots, ())
+    prefix = len(package) + 1
+    defs = {}        # called name -> [(qualified name, params)]
+
+    def collect(node, qual, in_class):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, ast.ClassDef):
+                collect(ch, f"{qual}.{ch.name}", True)
+            elif isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(isinstance(d, ast.Name)
+                             and d.id == "staticmethod"
+                             for d in ch.decorator_list)
+                params = _defaulted(ch, in_class and not static)
+                fq = f"{qual}.{ch.name}"
+                called = (qual.rsplit(".", 1)[-1]
+                          if in_class and ch.name == "__init__" else ch.name)
+                defs.setdefault(called, []).append((fq, params))
+                collect(ch, fq, False)
+            else:
+                collect(ch, qual, in_class)
+
+    program = list(root_trees)
+    for m in sorted(reached_mods):
+        _, _, units, rest = modules[m]
+        tree = ast.Module(body=[s for u, stmts in units.items()
+                                if (m, u) in reached_units for s in stmts]
+                          + rest, type_ignores=[])
+        program.append(tree)
+        collect(tree, m[prefix:] if m != package else "", False)
+
+    values = {}
+    for tree in program:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = (f.id if isinstance(f, ast.Name)
+                    else f.attr if isinstance(f, ast.Attribute) else None)
+            for fq, params in defs.get(name, ()):
+                for pname, index, default in params:
+                    values.setdefault(f"{fq}.{pname}".lstrip("."), set()) \
+                        .add(_site_value(call, pname, index, default))
+    return {q: next(iter(v))[1] for q, v in values.items()
+            if len(v) == 1 and None not in v}
 
 
 def test_program_reaches_every_module_and_definition():
@@ -226,3 +345,37 @@ def test_scanner_reports_exactly_the_unreached_definitions(tmp_path):
     dead_mods, dead_defs = unreached(tmp_path, "pkg", [root])
     assert dead_mods == {"orphan"}
     assert dead_defs == {"lib.unused", "lib.helper"}
+
+
+def test_no_option_takes_one_value():
+    flagged = one_value_options(REPO)
+    extra = {q: v for q, v in flagged.items() if q not in OPTION_ALLOWLIST}
+    assert not extra, (
+        "parameters every program call site gives one literal (make each "
+        f"a constant and delete the branches it deselects): {extra}")
+
+
+def test_option_allowlist_entries_are_one_value_and_justified():
+    flagged = one_value_options(REPO)
+    stale = sorted(set(OPTION_ALLOWLIST) - set(flagged))
+    assert not stale, f"allowlisted but varied (drop the entry): {stale}"
+    for qual, reason in OPTION_ALLOWLIST.items():
+        assert reason.startswith((DEPLOYMENT, HARNESS)), (qual, reason)
+
+
+def test_scanner_reports_exactly_the_one_value_options(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "lib.py").write_text(
+        "def op(df, varied=1, never=2, same=3):\n    return df\n\n"
+        "def fed(df, opt=4):\n    return df\n")
+    root = tmp_path / "main.py"
+    root.write_text(
+        "import sys\nfrom pkg.lib import fed, op\n"
+        "op(0, varied=len(sys.argv), same=7)\n"
+        "op(0, 5, same=7)\n"
+        "kw = {'opt': 9}\n"
+        "fed(0, **kw)\n")
+    assert one_value_options(tmp_path, "pkg", [root]) == {
+        "lib.op.never": "2", "lib.op.same": "7"}

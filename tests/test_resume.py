@@ -313,7 +313,7 @@ def test_read_current_node_dedups_replay(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(
         pipeline, "pending_pages",
-        lambda pages, store, stage, salt: with_input_hash(pages, salt))
+        lambda pages, store, salt: with_input_hash(pages, salt))
     assert run_pipeline(spark, pages, ents, store)["pages"] == 6
     assert store.read("node").count() == 2 * len(want)
 
@@ -393,7 +393,7 @@ def test_read_current_edge_replay_by_second_writer(spark, tmp_path,
     run_pipeline(spark, pages, ents, store)
     with monkeypatch.context() as m:
         m.setattr(pipeline, "pending_pages",
-                  lambda pages, store, stage, salt:
+                  lambda pages, store, salt:
                   with_input_hash(pages, salt))
         assert run_pipeline(spark, pages, ents, store)["pages"] == 6
     assert store.read("edge").count() == 2 * store.read_current(
@@ -541,7 +541,7 @@ def test_regenerate_exact_dependent_set(spark, tmp_path):
     assert 1 < len(want) < N
 
 
-def test_stale_set_cycle_and_depth(spark):
+def test_stale_set_cycle_and_depth(spark, monkeypatch):
     """Cycles terminate; depth is the minimum dependency distance."""
     from ferenda_spark.operators.regen import stale_set
     deps = spark.createDataFrame(
@@ -551,8 +551,9 @@ def test_stale_set_cycle_and_depth(spark):
     changed = spark.createDataFrame([("A",)], "url string")
     got = {(r["url"], r["depth"]) for r in stale_set(deps, changed).collect()}
     assert got == {("A", 0), ("B", 1), ("D", 1), ("C", 2)}
+    monkeypatch.setattr("ferenda_spark.operators.regen.STALE_MAX_DEPTH", 1)
     bounded = {(r["url"], r["depth"])
-               for r in stale_set(deps, changed, max_depth=1).collect()}
+               for r in stale_set(deps, changed).collect()}
     assert bounded == {("A", 0), ("B", 1), ("D", 1)}
 
 

@@ -67,10 +67,11 @@ def test_shards_contiguous_and_ordered(spark, docs):
         assert a.last_key < b.first_key
 
 
-def test_salt_changes_order_not_membership(spark, docs):
+def test_salt_changes_order_not_membership(spark, docs, monkeypatch):
     a = assign_shards(docs, budget=20000, weight_col="n_chars")
-    b = assign_shards(docs, budget=20000, weight_col="n_chars",
-                      salt="shard-v2")
+    monkeypatch.setattr(
+        "ferenda_spark.operators.shards.SHARD_SALT", "shard-v2")
+    b = assign_shards(docs, budget=20000, weight_col="n_chars")
     ka = [r.doc_id for r in a.orderBy("shuffle_key").limit(20).collect()]
     kb = [r.doc_id for r in b.orderBy("shuffle_key").limit(20).collect()]
     assert ka != kb  # independent permutation

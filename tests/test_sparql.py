@@ -1075,6 +1075,24 @@ def test_subquery_aggregate_join(spark):
     assert got2 == {("A#S1", "B")}
 
 
+def test_subquery_aggregate_keeps_literal_group_key(spark):
+    """A GROUP BY key that bound literals keeps its term kind through
+    the aggregate subselect, so an outer join on it still matches the
+    literal objects."""
+    q = """
+    SELECT ?x ?title ?n WHERE {
+      { SELECT ?title (COUNT(?s) AS ?n) WHERE {
+          ?s dcterms:title ?title .
+        } GROUP BY ?title }
+      ?x dcterms:title ?title .
+    }
+    """
+    got = {(r["x"], r["title"], r["n"])
+           for r in sparql_query(_edges(spark), q).collect()}
+    assert got == {("A", "Doc A", 1), ("B", "Doc B", 1),
+                   ("C", "Doc C", 1)}
+
+
 def test_subquery_plain_projection_keeps_term_kind(spark):
     """A plain subselect carries literal/IRI metadata through: its
     DISTINCT is term-distinct and outer isUri() still works."""

@@ -314,7 +314,7 @@ def test_rdfa_triples_spark_matches_twin(spark):
     assert "Exchange" not in plan
 
 
-def test_rdfa_render_roundtrip_identity(spark):
+def test_rdfa_render_roundtrip_identity(spark, monkeypatch):
     """rdfa_triples(render_xhtml_pages(meta, nodes)) recovers meta ∪
     node types — the reference's render/parse_metadata_from_soup
     identity, on a hand-built two-node act."""
@@ -331,7 +331,8 @@ def test_rdfa_render_roundtrip_identity(spark):
         "url string, node_id string, kind string, ordinal string, "
         "parent_id string, depth int, text string")
     langs = spark.createDataFrame([(url, "sv")], "url string, lang string")
-    pages = render_xhtml_pages(meta, nodes, langs=langs, max_depth=2)
+    monkeypatch.setattr("ferenda_spark.operators.render.RENDER_MAX_DEPTH", 2)
+    pages = render_xhtml_pages(meta, nodes, langs=langs)
     got = {(r["subj"], r["pred"], r["obj"], r["obj_is_literal"],
             r["obj_lang"])
            for r in rdfa_triples(pages, html_col="xhtml").collect()

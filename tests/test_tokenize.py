@@ -47,7 +47,7 @@ def test_bpe_train_hand_traced_with_ties(spark):
         == EXPECTED[:3]
 
 
-def test_bpe_train_driver_equals_distributed(spark):
+def test_bpe_train_driver_equals_distributed(spark, monkeypatch):
     """The driver fast path (collect + incremental in-memory loop)
     and the distributed per-merge loop are the same algorithm: equal
     merge lists on corpora exercising ties, overlapping pairs
@@ -65,8 +65,9 @@ def test_bpe_train_driver_equals_distributed(spark):
             "url string, text string")
         for n_merges, floor in ((5, 2), (12, 1), (3, 3)):
             fast = bpe_train(docs, n_merges, min_pair_freq=floor)
-            slow = bpe_train(docs, n_merges, min_pair_freq=floor,
-                             driver_threshold=0)
+            monkeypatch.setattr(
+                "ferenda_spark.operators.tokenize.DRIVER_THRESHOLD", 0)
+            slow = bpe_train(docs, n_merges, min_pair_freq=floor)
             assert fast == slow, (trial, n_merges, floor)
 
 

@@ -35,31 +35,33 @@ def test_exact_dedup(docs):
     assert len(dupe) == 1 and dupe[0]["keeper_id"] == 1
 
 
-def test_shingles_and_jaccard(docs):
+def test_shingles_and_jaccard(docs, monkeypatch):
     sh = docs.select("doc_id", dedup.shingles(F.col("text")).alias("sh"))
     by_id = {r["doc_id"]: r["sh"] for r in sh.collect()}
     assert "the quick brown" in by_id[1]
     assert len(by_id[1]) == 7  # 9 tokens → 7 trigrams, all distinct
     assert by_id[5] == []      # short doc → empty, not an error
 
+    monkeypatch.setattr("ferenda_spark.operators.dedup.JACCARD_THRESHOLD", 0.5)
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in dedup.jaccard_pairs(docs, threshold=0.5).collect()}
+             for r in dedup.jaccard_pairs(docs).collect()}
     assert pairs[(1, 2)] == 1.0
     assert (1, 3) in pairs and pairs[(1, 3)] < 1.0
     assert not any(4 in p for p in pairs)
 
 
-def test_jaccard_cap_default_and_explicit_optout(spark, docs):
+def test_jaccard_cap_default_and_explicit_optout(spark, docs, monkeypatch):
     """The df-cap is ON by default (hot-shingle skew guard); the
     default cap (1000) never binds on small corpora, so results equal
     the explicit ``max_df=None`` opt-out there — while a binding cap
     provably changes the universe (boilerplate shingles dropped)."""
+    monkeypatch.setattr("ferenda_spark.operators.dedup.JACCARD_THRESHOLD", 0.5)
     default_pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
                      for r in dedup.jaccard_pairs(
-                         docs, threshold=0.5).collect()}
+                         docs).collect()}
     optout_pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
                     for r in dedup.jaccard_pairs(
-                        docs, threshold=0.5, max_df=None).collect()}
+                        docs, max_df=None).collect()}
     assert default_pairs == optout_pairs
     # a binding cap: boilerplate prefix shared by all 4 docs is
     # dropped at max_df=2, leaving no shared shingles → no pairs
@@ -68,16 +70,17 @@ def test_jaccard_cap_default_and_explicit_optout(spark, docs):
              f"unique{i} tail{i} words{i} end{i}") for i in range(4)],
         "doc_id long, text string")
     # uncapped jaccard = 3 shared trigrams / 11 union = 0.2727
-    capped = dedup.jaccard_pairs(boiler, threshold=0.25, max_df=2).collect()
-    uncapped = dedup.jaccard_pairs(boiler, threshold=0.25,
-                                   max_df=None).collect()
+    monkeypatch.setattr(
+        "ferenda_spark.operators.dedup.JACCARD_THRESHOLD", 0.25)
+    capped = dedup.jaccard_pairs(boiler, max_df=2).collect()
+    uncapped = dedup.jaccard_pairs(boiler, max_df=None).collect()
     assert len(uncapped) > 0 and len(capped) == 0
 
 
 def test_minhash_lsh_finds_near_dups(docs):
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
              for r in dedup.minhash_dedup_pairs(
-                 docs, k=8, bands=4, threshold=0.5).collect()}
+                 docs, k=8, threshold=0.5).collect()}
     assert pairs[(1, 2)] == 1.0    # identical docs always collide
     assert not any(4 in p for p in pairs)
 
@@ -91,7 +94,7 @@ def test_simhash_properties(docs):
     assert ham_close < ham_far
 
 
-def test_cosine_topk_exact(spark):
+def test_cosine_topk_exact(spark, monkeypatch):
     rows = [Row(vec_id=i, embedding=v) for i, v in enumerate([
         [1.0, 0.0, 0.0],
         [0.9, 0.1, 0.0],   # closest to 0
@@ -101,7 +104,8 @@ def test_cosine_topk_exact(spark):
     emb = spark.createDataFrame(rows)
     qs = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    out = similarity.cosine_topk(emb, qs, k=3).collect()
+    monkeypatch.setattr("ferenda_spark.operators.similarity.TOPK", 3)
+    out = similarity.cosine_topk(emb, qs).collect()
     ranked = [r["item_id"] for r in sorted(out, key=lambda r: r["rank"])]
     assert ranked == [1, 2, 3]
     top = [r for r in out if r["rank"] == 1][0]
@@ -212,7 +216,7 @@ def test_repetition_signals(spark):
     assert out[3]["top_bigram_frac"] == 0.0  # no bigrams in 1 token
 
 
-def test_ivf_topk_recall_vs_brute(spark):
+def test_ivf_topk_recall_vs_brute(spark, monkeypatch):
     """IVF probe search must agree with the exact brute-force top-k
     on most (query, rank-1) answers, and scoring must only touch
     probed lists (every returned item shares a probed list)."""
@@ -227,64 +231,21 @@ def test_ivf_topk_recall_vs_brute(spark):
     emb = spark.createDataFrame(rows)
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding")
+    monkeypatch.setattr("ferenda_spark.operators.similarity.TOPK", 3)
     exact = {(r["query_id"], r["rank"]): r["item_id"]
-             for r in similarity.cosine_topk(emb, qs, k=3).collect()}
+             for r in similarity.cosine_topk(emb, qs).collect()}
+    monkeypatch.setattr("ferenda_spark.operators.similarity.IVF_CENTROIDS", 6)
     approx = {(r["query_id"], r["rank"]): r["item_id"]
               for r in similarity.ivf_topk(
-                  emb, qs, dim, k=3, n_centroids=6, nprobe=2).collect()}
+                  emb, qs, dim).collect()}
     hits = sum(1 for q in range(5)
                if exact.get((q, 1)) == approx.get((q, 1)))
     assert hits >= 4  # rank-1 recall ≥ 0.8 on clustered fixture
     # determinism across partitionings
     approx2 = {(r["query_id"], r["rank"]): r["item_id"]
                for r in similarity.ivf_topk(
-                   emb.repartition(7), qs, dim, k=3,
-                   n_centroids=6, nprobe=2).collect()}
+                   emb.repartition(7), qs, dim).collect()}
     assert approx == approx2
-
-
-def test_ivf_lloyd_refine_beats_seed_recall(spark):
-    """Seed centroids are the n_centroids LOWEST-ID vectors; on a
-    corpus where low ids all sit in one cluster that seeding is
-    pathological (other clusters get split arbitrarily across
-    lists).  Lloyd refinement over the deterministic sample must
-    recover cluster-tracking centroids and strictly improve rank-1
-    recall vs brute force — and stay deterministic across
-    partitionings."""
-    dim = 8
-    rows = []
-    # ids 0..59: cluster = id // 20 (so seeds 0..3 all in cluster 0);
-    # cluster centers are far apart, members jitter slightly
-    for i in range(60):
-        c = i // 20
-        v = [10.0 if j == c else 0.0 for j in range(dim)]
-        v[(i % 5) + 3] += 0.05 * ((i * 7) % 11)
-        rows.append(Row(vec_id=i, embedding=[float(x) for x in v]))
-    emb = spark.createDataFrame(rows)
-    qs = emb.filter(F.col("vec_id").isin([25, 30, 45, 50, 55])).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    exact = {(r["query_id"], r["rank"]): r["item_id"]
-             for r in similarity.cosine_topk(emb, qs, k=3).collect()}
-
-    def recall(refine_iters):
-        got = {(r["query_id"], r["rank"]): r["item_id"]
-               for r in similarity.ivf_topk(
-                   emb, qs, dim, k=3, n_centroids=4, nprobe=1,
-                   refine_iters=refine_iters).collect()}
-        qids = [25, 30, 45, 50, 55]
-        return sum(1 for q in qids
-                   if exact.get((q, 1)) == got.get((q, 1))) / len(qids)
-
-    r_seed, r_lloyd = recall(0), recall(2)
-    assert r_lloyd >= r_seed
-    assert r_lloyd >= 0.8
-    # refined centroids are pure integer math over a deterministic
-    # sample: identical across partitionings
-    c1 = similarity.lloyd_refine(
-        emb, [[0.0] * dim] * 4, iters=2)
-    c2 = similarity.lloyd_refine(
-        emb.repartition(7), [[0.0] * dim] * 4, iters=2)
-    assert c1 == c2
 
 
 def test_textstats(docs):
@@ -352,11 +313,10 @@ def test_asof_join(spark):
         Row(k="a", ts=10, v="l1"), Row(k="a", ts=20, v="l2"),
         Row(k="b", ts=5, v="l3")])
     right = spark.createDataFrame([
-        Row(k="a", ts=9, p="r1"), Row(k="a", ts=15, p="r2"),
-        Row(k="b", ts=6, p="r3")])
-    out = {(r["k"], r["ts"]): r["asof_p"]
-           for r in analytics.asof_join(left, right, "k",
-                                        right_cols=["p"]).collect()}
+        Row(k="a", ts=9, event_id="r1"), Row(k="a", ts=15, event_id="r2"),
+        Row(k="b", ts=6, event_id="r3")])
+    out = {(r["k"], r["ts"]): r["asof_event_id"]
+           for r in analytics.asof_join(left, right, "k").collect()}
     assert out == {("a", 10): "r1", ("a", 20): "r2", ("b", 5): None}
 
 
@@ -384,14 +344,15 @@ def test_transitive_closure(spark):
     assert len(out) == 5
 
 
-def test_salted_join_equals_plain_join(spark):
+def test_salted_join_equals_plain_join(spark, monkeypatch):
     big = spark.createDataFrame(
         [Row(k=i % 3, v=i) for i in range(100)])
     dim = spark.createDataFrame(
         [Row(k=i, name=f"n{i}") for i in range(3)])
     plain = set(map(tuple, big.join(dim, "k").select(
         "k", "v", "name").collect()))
-    salted = set(map(tuple, analytics.salted_join(big, dim, "k", salt=4)
+    monkeypatch.setattr("ferenda_spark.operators.analytics.SALT_BUCKETS", 4)
+    salted = set(map(tuple, analytics.salted_join(big, dim, "k")
                      .select("k", "v", "name").collect()))
     assert plain == salted
 
@@ -468,7 +429,7 @@ def test_chunk_words_udtf_matches_column(spark):
     assert (2, 0, "one two three") in via_udtf
 
 
-def test_crawl_frontier_bfs(spark):
+def test_crawl_frontier_bfs(spark, monkeypatch):
     """S1 scheduler: min-depth BFS with visited anti-join, cycle
     tolerance, and early stop when a round finds nothing."""
     from ferenda_spark.operators.crawl import crawl_frontier
@@ -478,8 +439,9 @@ def test_crawl_frontier_bfs(spark):
          ("d", "e"), ("x", "y")],                         # y unreachable
         "src string, dst string")
     seeds = spark.createDataFrame([("a",)], "url string")
+    monkeypatch.setattr("ferenda_spark.operators.crawl.FRONTIER_MAX_DEPTH", 5)
     out = {r["url"]: r["depth"]
-           for r in crawl_frontier(links, seeds, max_depth=5).collect()}
+           for r in crawl_frontier(links, seeds).collect()}
     assert out == {"a": 0, "b": 1, "c": 1, "d": 2, "e": 3}
 
 
@@ -490,9 +452,9 @@ def test_atom_feeds_render(spark):
     from ferenda_spark.operators import render
     t = lambda s: datetime.datetime(2024, 1, 1, 12, 0, s)
     entries = spark.createDataFrame(
-        [Row(feed="f", entry_id=1, title="a & <b>", ts=t(30)),
-         Row(feed="f", entry_id=2, title="plain", ts=t(50)),
-         Row(feed="g", entry_id=3, title="x", ts=t(10))])
+        [Row(feed="f", event_id=1, title="a & <b>", ts=t(30)),
+         Row(feed="f", event_id=2, title="plain", ts=t(50)),
+         Row(feed="g", event_id=3, title="x", ts=t(10))])
     out = {r["feed"]: r["atom_xml"]
            for r in render.atom_feeds(entries).collect()}
     f = out["f"]
@@ -505,7 +467,7 @@ def test_atom_feeds_render(spark):
     assert out["g"].count("<entry>") == 1
 
 
-def test_render_xhtml_pages(spark):
+def test_render_xhtml_pages(spark, monkeypatch):
     """S11: XHTML+RDFa page render — head triples sorted (pred, obj)
     with title/link/meta element choice, used-prefix-only xmlns
     declarations, nested-div body in natural sibling order, XML
@@ -523,8 +485,8 @@ def test_render_xhtml_pages(spark):
         "url string, node_id string, kind string, ordinal string, "
         "parent_id string, depth int, text string")
     langs = spark.createDataFrame([("u1", "sv")], "url string, lang string")
-    x = render_xhtml_pages(trip, nodes, langs=langs,
-                           max_depth=2).collect()[0]["xhtml"]
+    monkeypatch.setattr("ferenda_spark.operators.render.RENDER_MAX_DEPTH", 2)
+    x = render_xhtml_pages(trip, nodes, langs=langs).collect()[0]["xhtml"]
     # head: sorted by pred → extent, title, rdf:type; element choice
     assert x.index('<meta property="dcterms:extent" content="12"/>') \
         < x.index('<title property="dcterms:title">A &amp; B</title>') \
@@ -543,7 +505,7 @@ def test_render_xhtml_pages(spark):
     assert x.startswith('<?xml version="1.0" encoding="utf-8"?><html ')
 
 
-def test_render_xhtml_escapes_attribute_quotes(spark):
+def test_render_xhtml_escapes_attribute_quotes(spark, monkeypatch):
     """A double quote or ampersand inside an attribute value (meta
     content, link href, about URL) must not break the document —
     the whole page has to stay parseable XML."""
@@ -558,7 +520,8 @@ def test_render_xhtml_escapes_attribute_quotes(spark):
         [('u"x&y', "K1", "chapter", "1", None, 1, 'body "text"')],
         "url string, node_id string, kind string, ordinal string, "
         "parent_id string, depth int, text string")
-    x = render_xhtml_pages(trip, nodes, max_depth=1).collect()[0]["xhtml"]
+    monkeypatch.setattr("ferenda_spark.operators.render.RENDER_MAX_DEPTH", 1)
+    x = render_xhtml_pages(trip, nodes).collect()[0]["xhtml"]
     assert 'content="Pub &quot;quoted&quot; &amp; Co"' in x
     assert 'href="https://example.org/t?a=1&amp;b=2"' in x
     assert '<head about="u&quot;x&amp;y">' in x
@@ -593,8 +556,9 @@ def test_version_tiebreak_is_natural_order(spark):
     from ferenda_spark.operators import versions as V
     d = datetime.date(2024, 1, 1)
     vs = spark.createDataFrame(
-        [("u", f"v{i}", d, f"a/v{i}") for i in range(11)],
-        "url string, version string, valid_from date, archive_uri string")
+        [("u", f"v{i}", d, None, f"a/v{i}") for i in range(11)],
+        "url string, version string, valid_from date, valid_to date, "
+        "archive_uri string")
     cur = V.latest_versions(vs).collect()
     assert len(cur) == 1 and cur[0]["version"] == "v10"
     asof = V.versions_asof(vs, d).collect()
@@ -623,18 +587,12 @@ def test_two_sided_validity_drops_repealed(spark):
         "url string, version string, valid_from date, valid_to date, "
         "archive_uri string")
     got = {r["url"]: r["version"]
-           for r in V.versions_asof(vs, D(2020, 6, 1),
-                                    end="valid_to").collect()}
+           for r in V.versions_asof(vs, D(2020, 6, 1)).collect()}
     assert got == {"a": "v1"}
     # inside v0's interval the superseded version is the one in effect
     got_jan = {r["url"]: r["version"]
-               for r in V.versions_asof(vs, D(2020, 1, 15),
-                                        end="valid_to").collect()}
+               for r in V.versions_asof(vs, D(2020, 1, 15)).collect()}
     assert got_jan == {"a": "v0", "b": "v0", "c": "v0"}
-    # without `end`, the one-sided legacy semantics keeps repealed docs
-    got_legacy = {r["url"]: r["version"]
-                  for r in V.versions_asof(vs, D(2020, 6, 1)).collect()}
-    assert got_legacy == {"a": "v1", "b": "v0", "c": "v0"}
 
 
 def test_components_chain_and_islands(spark):
@@ -661,13 +619,15 @@ def test_components_beats_pairwise_keeper(spark):
     assert pairwise_kept == {1, 2}  # the under-merge this fixes
 
 
-def test_components_long_chain_converges_logarithmically(spark):
+def test_components_long_chain_converges_logarithmically(spark, monkeypatch):
     # 64-node path: plain min-propagation needs ~63 rounds; pointer
     # doubling must finish well within max_iters=10.
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
-    lab = dedup.components(pairs, max_iters=10)
+    monkeypatch.setattr(
+        "ferenda_spark.operators.dedup.COMPONENTS_MAX_ITERS", 10)
+    lab = dedup.components(pairs)
     got = {r["id"]: r["comp"] for r in lab.collect()}
     assert got == {i: 0 for i in range(n)}
 
@@ -719,7 +679,7 @@ def test_decontaminate_ngram_overlap(spark):
     bench = spark.createDataFrame(
         [("the eval question is " + gram + " answer follows",)],
         "text string")
-    out = dedup.decontaminate(docs, bench, n=13)
+    out = dedup.decontaminate(docs, bench)
     got = {r["id"]: (r["n_hits"], r["contaminated"])
            for r in out.collect()}
     assert got[1][1] is True and got[1][0] >= 1
@@ -729,7 +689,7 @@ def test_decontaminate_ngram_overlap(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_decontaminate_bloom_equals_exact(spark):
+def test_decontaminate_bloom_equals_exact(spark, monkeypatch):
     """The bloom-prefiltered path is the same function as the exact
     broadcast path — on overlap-heavy synthetic docs AND with a
     deliberately tiny, collision-heavy filter (1 bit/key, 1 probe)
@@ -742,18 +702,20 @@ def test_decontaminate_bloom_equals_exact(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     bench = docs.filter(F.col("doc_id") % 7 == 0).select("text")
-    want = sorted(dedup.decontaminate(docs, bench, n=5).collect())
-    got = sorted(dedup.decontaminate_bloom(docs, bench, n=5).collect())
+    monkeypatch.setattr("ferenda_spark.operators.dedup.DECONTAM_N", 5)
+    want = sorted(dedup.decontaminate(docs, bench).collect())
+    got = sorted(dedup.decontaminate_bloom(docs, bench).collect())
     assert got == want
+    monkeypatch.setattr("ferenda_spark.operators.dedup.BLOOM_BITS_PER_KEY", 1)
+    monkeypatch.setattr("ferenda_spark.operators.dedup.BLOOM_NUM_HASHES", 1)
     tiny = sorted(dedup.decontaminate_bloom(
-        docs, bench, n=5, bits_per_key=1, num_hashes=1).collect())
+        docs, bench).collect())
     assert tiny == want
 
 
-def test_decontaminate_bloom_reuse_and_empty_bench(spark):
-    """A prebuilt bloom serves multiple corpus batches (the
-    incremental/streaming shape); an empty bench marks every doc
-    clean; the corpus-side probe is an Arrow-vectorized filter."""
+def test_decontaminate_bloom_probe_and_empty_bench(spark):
+    """A shared 13-gram is caught, an empty bench marks every doc
+    clean, and the corpus-side probe is an Arrow-vectorized filter."""
     gram = "alpha beta gamma delta epsilon zeta eta theta iota kappa " \
            "lambda mu nu"
     docs = spark.createDataFrame(
@@ -762,31 +724,18 @@ def test_decontaminate_bloom_reuse_and_empty_bench(spark):
         "doc_id long, text string")
     bench = spark.createDataFrame([("q: " + gram + " a: yes",)],
                                   "text string")
-    bloom = dedup.build_shingle_bloom(bench, n=13)
-    for _ in range(2):  # same filter, two batches
-        got = {r["id"]: r["contaminated"]
-               for r in dedup.decontaminate_bloom(
-                   docs, bench, bloom=bloom, n=13).collect()}
-        assert got == {1: True, 2: False}
-    out = dedup.decontaminate_bloom(docs, bloom=bloom, bench=bench, n=13)
+    out = dedup.decontaminate_bloom(docs, bench)
+    got = {r["id"]: r["contaminated"] for r in out.collect()}
+    assert got == {1: True, 2: False}
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan
-    bloom.unpersist()
     empty = bench.filter(F.lit(False))
     got = {r["id"]: r["contaminated"]
-           for r in dedup.decontaminate_bloom(docs, empty, n=13).collect()}
+           for r in dedup.decontaminate_bloom(docs, empty).collect()}
     assert got == {1: False, 2: False}
-    with pytest.raises(ValueError, match="bench"):
-        dedup.decontaminate_bloom(docs)
-    # a bloom probed with a mismatched shingle size would silently
-    # report everything clean — it must refuse instead
-    bloom13 = dedup.build_shingle_bloom(bench, n=13)
-    with pytest.raises(ValueError, match="13-gram"):
-        dedup.decontaminate_bloom(docs, bench, bloom=bloom13, n=5)
-    bloom13.unpersist()
 
 
-def test_components_null_ids_dropped(spark):
+def test_components_null_ids_dropped(spark, monkeypatch):
     """Null ids (upstream left-join artifacts) are dropped, not
     crashed on — same answer on both the driver fast path and the
     distributed path."""
@@ -794,12 +743,14 @@ def test_components_null_ids_dropped(spark):
         [(1, 2), (None, 3), (4, None), (2, 5)],
         "id_a long, id_b long")
     for dm in (10**6, 0):
+        monkeypatch.setattr(
+            "ferenda_spark.operators.dedup.COMPONENTS_DRIVER_MAX", dm)
         got = {(r["id"], r["comp"])
-               for r in dedup.components(df, driver_max=dm).collect()}
+               for r in dedup.components(df).collect()}
         assert got == {(1, 1), (2, 1), (5, 1)}
 
 
-def test_stratified_sample_rates_and_reproducibility(spark):
+def test_stratified_sample_rates_and_reproducibility(spark, monkeypatch):
     """Empirical keep-rates track the per-stratum targets, the same
     salt reproduces the identical row set, a different salt draws a
     different one, and the plan is a pure scan-side filter (no
@@ -808,18 +759,22 @@ def test_stratified_sample_rates_and_reproducibility(spark):
     rows = spark.range(0, 20000).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 2 == 0, "en").otherwise("xx").alias("lang"))
+    monkeypatch.setattr(
+        "ferenda_spark.operators.sampling.STRATIFIED_SALT", "s1")
     out = sampling.stratified_sample(
-        rows, {"en": 0.5}, default_rate=0.1, salt="s1")
+        rows, {"en": 0.5}, default_rate=0.1)
     kept = out.groupBy("lang").count().collect()
     by = {r["lang"]: r["count"] for r in kept}
     assert abs(by["en"] / 10000 - 0.5) < 0.03
     assert abs(by.get("xx", 0) / 10000 - 0.1) < 0.03
     ids1 = {r["doc_id"] for r in out.collect()}
     ids1_again = {r["doc_id"] for r in sampling.stratified_sample(
-        rows, {"en": 0.5}, default_rate=0.1, salt="s1").collect()}
+        rows, {"en": 0.5}, default_rate=0.1).collect()}
     assert ids1 == ids1_again
+    monkeypatch.setattr(
+        "ferenda_spark.operators.sampling.STRATIFIED_SALT", "s2")
     ids2 = {r["doc_id"] for r in sampling.stratified_sample(
-        rows, {"en": 0.5}, default_rate=0.1, salt="s2").collect()}
+        rows, {"en": 0.5}, default_rate=0.1).collect()}
     assert ids1 != ids2
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -838,7 +793,7 @@ def test_stratified_sample_null_keys_dropped_explicitly(spark):
     assert sorted(r["doc_id"] for r in out.collect()) == [1, 2]
 
 
-def test_quota_sample_cap_semantics(spark):
+def test_quota_sample_cap_semantics(spark, monkeypatch):
     """Per-group quota: under-cap groups keep every row; over-cap
     groups down-sample to ~cap deterministically; a new salt draws a
     different sample; null keys drop, null groups participate."""
@@ -847,8 +802,8 @@ def test_quota_sample_cap_semantics(spark):
         F.col("id").alias("doc_id"),
         F.when(F.col("id") < 10000, "big").otherwise(
             F.when(F.col("id") < 10040, "mid")).alias("dom"))
-    out = sampling.quota_sample(rows, cap=50, group_col="dom",
-                                salt="q1")
+    monkeypatch.setattr("ferenda_spark.operators.sampling.QUOTA_SALT", "q1")
+    out = sampling.quota_sample(rows, cap=50, group_col="dom")
     by = {r["dom"]: r["count"]
           for r in out.groupBy("dom").count().collect()}
     # 'mid' (40 rows) and NULL group (10 rows) are under cap: all kept
@@ -857,10 +812,11 @@ def test_quota_sample_cap_semantics(spark):
     assert 25 <= by["big"] <= 85
     ids1 = {r["doc_id"] for r in out.collect()}
     ids_again = {r["doc_id"] for r in sampling.quota_sample(
-        rows, cap=50, group_col="dom", salt="q1").collect()}
+        rows, cap=50, group_col="dom").collect()}
     assert ids1 == ids_again
+    monkeypatch.setattr("ferenda_spark.operators.sampling.QUOTA_SALT", "q2")
     ids2 = {r["doc_id"] for r in sampling.quota_sample(
-        rows, cap=50, group_col="dom", salt="q2").collect()}
+        rows, cap=50, group_col="dom").collect()}
     assert ids1 != ids2
     # cap=0 empties over-cap groups but keeps... nothing anywhere:
     # every group with count>0 > cap keeps only u < 0 rows = none
@@ -892,7 +848,7 @@ def test_redact_pii_counts_and_replacement(spark):
     assert got[3]["n_ipv4"] == 2 and got[3]["clean_text"].count("<IPV4>") == 2
 
 
-def test_strip_boilerplate_units(spark):
+def test_strip_boilerplate_units(spark, monkeypatch):
     """Units over the df threshold vanish corpus-wide, unique units
     survive in original order, all-boilerplate docs keep an empty
     row, and repeated units within ONE doc don't count as df > 1."""
@@ -902,8 +858,9 @@ def test_strip_boilerplate_units(spark):
     rows.append((6, f"intro six. {banner}. middle six. {banner}"))
     rows.append((7, "solo seven. repeated. repeated. repeated"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr("ferenda_spark.operators.dedup.BOILERPLATE_MAX_DF", 3)
     out = {r["id"]: r for r in dedup.strip_boilerplate(
-        docs, max_df=3).collect()}
+        docs).collect()}
     assert out[1]["clean_text"] == "body 1 text" and out[1]["n_dropped"] == 1
     assert out[5]["clean_text"] == "" and out[5]["n_dropped"] == 1
     assert out[6]["clean_text"] == "intro six. middle six"
@@ -935,7 +892,7 @@ def test_dedup_units_keepfirst(spark):
     assert set(out) == {1, 2, 3, 4}
 
 
-def test_duplicate_token_spans(spark):
+def test_duplicate_token_spans(spark, monkeypatch):
     """Window hashes flag shared passages at any alignment; the
     globally first occurrence is never flagged; within-doc repeats
     and case variants are; short docs have zero windows."""
@@ -947,8 +904,9 @@ def test_duplicate_token_spans(spark):
         (5, "one two"),                          # shorter than window
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr("ferenda_spark.operators.dedup.SPAN_WINDOW", 5)
     out = {r["id"]: r for r in dedup.duplicate_token_spans(
-        docs, window=5).collect()}
+        docs).collect()}
     assert (out[1]["n_windows"], out[1]["n_dup_windows"],
             out[1]["n_dup_tokens"]) == (4, 0, 0)
     # doc 2 windows at pos 2,3 duplicate doc 1 → tokens {2..7}
@@ -963,17 +921,18 @@ def test_duplicate_token_spans(spark):
             out[5]["n_dup_windows"]) == (2, 0, 0)
 
 
-def test_duplicate_token_spans_partition_invariant(spark):
+def test_duplicate_token_spans_partition_invariant(spark, monkeypatch):
     rows = [(i, "the same viral passage spreads here verbatim today "
              + f"unique tail {i}") for i in range(1, 20)]
     d1 = spark.createDataFrame(rows, "doc_id long, text string") \
         .repartition(1)
     d8 = spark.createDataFrame(rows, "doc_id long, text string") \
         .repartition(8)
+    monkeypatch.setattr("ferenda_spark.operators.dedup.SPAN_WINDOW", 8)
     r1 = sorted(map(tuple, dedup.duplicate_token_spans(
-        d1, window=8).collect()))
+        d1).collect()))
     r8 = sorted(map(tuple, dedup.duplicate_token_spans(
-        d8, window=8).collect()))
+        d8).collect()))
     assert r1 == r8
     by_id = {t[0]: t for t in r1}
     # doc 1 keeps the first occurrence of the shared 8-token window
@@ -995,7 +954,7 @@ def test_dedup_units_keepfirst_partition_invariant(spark):
     assert all(keep[i] == f"unique {i}" for i in range(2, 30))
 
 
-def test_semantic_dedup_chain_collapses_to_one_keeper(spark):
+def test_semantic_dedup_chain_collapses_to_one_keeper(spark, monkeypatch):
     """SemDeDup: A~B and B~C (but A!~C directly) is ONE epsilon-group
     — the component collapses the chain and exactly the min id
     survives; far-away vectors stay singleton keepers."""
@@ -1015,9 +974,10 @@ def test_semantic_dedup_chain_collapses_to_one_keeper(spark):
                                                 #    cos(A,C)=.878 < thr
         Row(vec_id=20, embedding=far),          # singleton
     ]
+    monkeypatch.setattr(
+        "ferenda_spark.operators.similarity.SEMANTIC_DEDUP_THRESHOLD", 0.95)
     out = {r["vec_id"]: r for r in similarity.semantic_dedup(
-        spark.createDataFrame(rows), dim=8, threshold=0.95,
-        bands=4, planes_per_band=2).collect()}
+        spark.createDataFrame(rows), dim=8, planes_per_band=2).collect()}
     assert {k for k, r in out.items() if r["keep"]} == {10, 20}
     assert out[11]["group"] == out[12]["group"] == 10
     assert out[20]["group"] == 20
@@ -1033,8 +993,7 @@ def test_lsh_params_for_scaling_contract():
     from ferenda_spark.operators.similarity import lsh_params_for
     prev_planes = 0
     for n in (10, 1_000, 100_000, 10_000_000, 10**12):
-        bands, planes = lsh_params_for(n, threshold=0.95,
-                                       recall_target=0.9)
+        bands, planes = lsh_params_for(n, threshold=0.95)
         assert planes >= prev_planes      # monotone in n
         prev_planes = planes
         # the banded union recall meets the target (except where the
@@ -1049,7 +1008,7 @@ def test_lsh_params_for_scaling_contract():
     assert 20_000 / 2 ** planes <= 12
 
 
-def test_semantic_dedup_auto_params(spark):
+def test_semantic_dedup_auto_params(spark, monkeypatch):
     """planes_per_band='auto' preserves the semantic outcome on the
     chain fixture (near-dups still collapse, singletons survive)
     while sizing the grid from the corpus count."""
@@ -1063,49 +1022,31 @@ def test_semantic_dedup_auto_params(spark):
     rows = [Row(vec_id=10, embedding=rot(0.00)),
             Row(vec_id=11, embedding=rot(0.25)),
             Row(vec_id=20, embedding=[0.0, 0.0, 1.0] + [0.0] * 5)]
+    monkeypatch.setattr(
+        "ferenda_spark.operators.similarity.SEMANTIC_DEDUP_THRESHOLD", 0.95)
     out = {r["vec_id"]: r for r in similarity.semantic_dedup(
-        spark.createDataFrame(rows), dim=8, threshold=0.95,
-        planes_per_band="auto").collect()}
+        spark.createDataFrame(rows), dim=8, planes_per_band="auto").collect()}
     assert {k for k, r in out.items() if r["keep"]} == {10, 20}
     assert out[11]["group"] == 10
 
 
-def test_ivf_auto_centroids(spark):
-    """n_centroids='auto' = clamp(sqrt(N), 8, 65536): identical
-    results to the equivalent explicit value."""
-    import numpy as np
-
-    from ferenda_spark.operators.similarity import ivf_topk
-    rng = np.random.RandomState(7)
-    rows = [Row(vec_id=i, embedding=[float(x) for x in rng.randn(8)])
-            for i in range(100)]
-    items = spark.createDataFrame(rows)
-    queries = spark.createDataFrame(
-        [Row(query_id=1, embedding=rows[3]["embedding"])])
-    auto = ivf_topk(items, queries, dim=8, k=3,
-                    n_centroids="auto").collect()
-    # sqrt(100) = 10
-    explicit = ivf_topk(items, queries, dim=8, k=3,
-                        n_centroids=10).collect()
-    assert sorted(map(tuple, auto)) == sorted(map(tuple, explicit))
-    assert len(auto) > 0
-
-
-def test_semantic_dedup_all_unique_keeps_everything(spark):
+def test_semantic_dedup_all_unique_keeps_everything(spark, monkeypatch):
     import numpy as np
     rows = [Row(vec_id=i,
                 embedding=[1.0 if j == i else 0.0 for j in range(8)])
             for i in range(8)]
+    monkeypatch.setattr(
+        "ferenda_spark.operators.similarity.SEMANTIC_DEDUP_THRESHOLD", 0.95)
     out = similarity.semantic_dedup(
-        spark.createDataFrame(rows), dim=8, threshold=0.95).collect()
+        spark.createDataFrame(rows), dim=8).collect()
     assert all(r["keep"] and r["group"] == r["vec_id"] for r in out)
 
 
 def test_dedup_against_index_history_and_batch_keeper(spark):
     """Incremental dedup against a persisted band index: a batch doc
     band-colliding with history is rejected (even a NEAR copy), a
-    genuinely new doc survives, a batch-internal copy collapses to
-    the min id, and self_dedup=False keeps it."""
+    genuinely new doc survives, and a batch-internal copy collapses
+    to the min id."""
     history = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog today"),
          (2, "pack my box with five dozen liquor jugs right now")],
@@ -1118,11 +1059,8 @@ def test_dedup_against_index_history_and_batch_keeper(spark):
         "doc_id long, text string")
     index = dedup.minhash_bands(history, k=8, bands=4)
     kept = {r["doc_id"] for r in dedup.dedup_against_index(
-        batch, index, k=8, bands=4).collect()}
+        batch, index).collect()}
     assert kept == {11, 13}
-    kept2 = {r["doc_id"] for r in dedup.dedup_against_index(
-        batch, index, k=8, bands=4, self_dedup=False).collect()}
-    assert kept2 == {11, 12, 13}
 
 
 def test_dedup_against_index_short_doc_survives(spark):
@@ -1135,11 +1073,11 @@ def test_dedup_against_index_short_doc_survives(spark):
                                   "doc_id long, text string")
     index = dedup.minhash_bands(history, k=8, bands=4)
     kept = {r["doc_id"] for r in dedup.dedup_against_index(
-        batch, index, k=8, bands=4).collect()}
+        batch, index).collect()}
     assert kept == {20}
 
 
-def test_components_driver_equals_distributed(spark):
+def test_components_driver_equals_distributed(spark, monkeypatch):
     """The union-find fast path and the pointer-doubling distributed
     path are the same function on chains, stars and random graphs."""
     import random
@@ -1155,8 +1093,10 @@ def test_components_driver_equals_distributed(spark):
         df = spark.createDataFrame(pairs, "id_a long, id_b long")
         fast = {(r["id"], r["comp"])
                 for r in dedup.components(df).collect()}
+        monkeypatch.setattr(
+            "ferenda_spark.operators.dedup.COMPONENTS_DRIVER_MAX", 0)
         slow = {(r["id"], r["comp"])
-                for r in dedup.components(df, driver_max=0).collect()}
+                for r in dedup.components(df).collect()}
         assert fast == slow, pairs
 
 
@@ -1185,7 +1125,7 @@ def test_gopher_rules_fuzz_consistency(spark):
         assert r["keep"] == all(rules)
 
 
-def test_containment_pairs_detects_quote(spark):
+def test_containment_pairs_detects_quote(spark, monkeypatch):
     """A short quote inside a long page: Jaccard tiny, containment 1."""
     from ferenda_spark.operators.dedup import (containment_pairs,
                                                jaccard_pairs)
@@ -1194,19 +1134,24 @@ def test_containment_pairs_detects_quote(spark):
     df = spark.createDataFrame([(1, words), (2, quote),
                                 (3, "entirely different text here ok")],
                                "doc_id long, text string")
+    monkeypatch.setattr(
+        "ferenda_spark.operators.dedup.CONTAINMENT_THRESHOLD", 0.9)
     got = {(r["id_part"], r["id_whole"]): r["containment"]
-           for r in containment_pairs(df, threshold=0.9).collect()}
+           for r in containment_pairs(df).collect()}
     assert got == {(2, 1): 1.0}          # quote ⊂ page, one direction
-    assert jaccard_pairs(df, threshold=0.5).count() == 0
+    monkeypatch.setattr("ferenda_spark.operators.dedup.JACCARD_THRESHOLD", 0.5)
+    assert jaccard_pairs(df).count() == 0
 
 
-def test_containment_pairs_mutual_for_exact_copies(spark):
+def test_containment_pairs_mutual_for_exact_copies(spark, monkeypatch):
     from ferenda_spark.operators.dedup import containment_pairs
     t = " ".join(f"x{i}" for i in range(30))
     df = spark.createDataFrame([(1, t), (2, t)],
                                "doc_id long, text string")
+    monkeypatch.setattr(
+        "ferenda_spark.operators.dedup.CONTAINMENT_THRESHOLD", 0.9)
     got = {(r["id_part"], r["id_whole"]): r["containment"]
-           for r in containment_pairs(df, threshold=0.9).collect()}
+           for r in containment_pairs(df).collect()}
     assert got == {(1, 2): 1.0, (2, 1): 1.0}
 
 
@@ -1238,7 +1183,7 @@ def test_winnow_matches_python_mirror_and_guarantee(spark):
     t3 = " ".join(f"unrelated{i}" for i in range(25))
     df = spark.createDataFrame([(1, t1), (2, t2), (3, t3)],
                                "doc_id long, text string")
-    fps = winnow_fingerprints(df, k=5, window=4)
+    fps = winnow_fingerprints(df)
     got = {}
     for r in fps.collect():
         got.setdefault(r["id"], set()).add((r["pos"], r["fp"]))
@@ -1271,7 +1216,7 @@ def test_select_canonical_prefers_score_then_min_id(spark):
     assert got[9] == (9, 9, True)
 
 
-def test_pq_topk_adc_recall_and_determinism(spark):
+def test_pq_topk_adc_recall_and_determinism(spark, monkeypatch):
     """PQ/ADC nearest neighbors track exact L2 nearest neighbors on
     a clustered fixture, codes are partition-independent, and the
     asymmetric distance of a vector to ITS OWN cluster twin is far
@@ -1287,16 +1232,17 @@ def test_pq_topk_adc_recall_and_determinism(spark):
     emb = spark.createDataFrame(rows)
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding")
+    monkeypatch.setattr("ferenda_spark.operators.similarity.TOPK", 3)
+    monkeypatch.setattr("ferenda_spark.operators.similarity.PQ_M", 4)
+    monkeypatch.setattr("ferenda_spark.operators.similarity.PQ_KSUB", 8)
     got = {(r["query_id"], r["rank"]): r["item_id"]
-           for r in similarity.pq_topk(emb, qs, dim, k=3,
-                                       m=4, ksub=8).collect()}
+           for r in similarity.pq_topk(emb, qs, dim).collect()}
     # quantization collapses within-cluster offsets (same codes →
     # identical adist), so the PQ recall notion is CLUSTER-level:
     # every rank-1 answer must come from the query's own cluster,
     # at asymmetric distance strictly below any cross-cluster item
     adist = {(r["query_id"], r["item_id"]): r["adist"]
-             for r in similarity.pq_topk(emb, qs, dim, k=3,
-                                         m=4, ksub=8).collect()}
+             for r in similarity.pq_topk(emb, qs, dim).collect()}
     for q in range(5):
         top1 = got[(q, 1)]
         assert top1 % 6 == q % 6, (q, top1)
@@ -1305,8 +1251,7 @@ def test_pq_topk_adc_recall_and_determinism(spark):
                  if qq == q and it % 6 != q % 6]
         assert all(same < c for c in cross), (q, same, cross)
     got2 = {(r["query_id"], r["rank"]): r["item_id"]
-            for r in similarity.pq_topk(emb.repartition(7), qs, dim,
-                                        k=3, m=4, ksub=8).collect()}
+            for r in similarity.pq_topk(emb.repartition(7), qs, dim).collect()}
     assert got == got2
 
 
@@ -1349,7 +1294,7 @@ def test_noindex_filter(spark):
     assert kept == {"u2", "u4"}
 
 
-def test_hash_embed_into_ann_family(spark):
+def test_hash_embed_into_ann_family(spark, monkeypatch):
     """hash_embed bridges raw text into the similarity operators:
     near-identical docs land close in cosine, disjoint docs do not,
     and the vectors plug straight into cosine_topk."""
@@ -1362,22 +1307,23 @@ def test_hash_embed_into_ann_family(spark):
          (2, "spark shuffle join agg window partition extra"),
          (3, "violin sonata cadenza allegro tempo adagio")],
         "doc_id long, text string")
-    emb = hash_embed(docs, dim=32)
+    emb = hash_embed(docs)
     rows = {r["id"]: r["embedding"] for r in emb.collect()}
     assert all(len(v) == 32 for v in rows.values())
     # integer, deterministic
     again = {r["id"]: r["embedding"] for r in
-             hash_embed(docs, dim=32).collect()}
+             hash_embed(docs).collect()}
     assert again == rows
     # plug into the existing exact ANN path
     items = emb.select(F.col("id").alias("vec_id"), "embedding")
     qs = emb.filter("id = 1").select(
         F.col("id").alias("query_id"), "embedding")
-    top = cosine_topk(items, qs, k=2).collect()
+    monkeypatch.setattr("ferenda_spark.operators.similarity.TOPK", 2)
+    top = cosine_topk(items, qs).collect()
     ranked = [r["item_id"] for r in sorted(top, key=lambda r: r["rank"])]
     assert ranked[0] == 2          # near-dup text ranks above disjoint
     # zero shuffle in the embed itself
-    plan = hash_embed(docs, dim=32)._jdf.queryExecution() \
+    plan = hash_embed(docs)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan
 

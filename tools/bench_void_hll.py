@@ -11,12 +11,14 @@ exercised in anger with a documented accuracy band."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import _mp_canary  # noqa: E402
 from ferenda_spark.operators import voidstats  # noqa: E402

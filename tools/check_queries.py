@@ -11,13 +11,15 @@ normalized rows. Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from ferenda_spark.session import get_spark  # noqa: E402
@@ -49,19 +51,35 @@ def main():
 
     spark = get_spark(app_name="check-queries", master="local[8]",
                       shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
 
     # the driver only sees queries()/oracle_sql() (the 50 gates);
     # locally we verify the extra_* entries too
     qs = {**entry_mod.queries(), **entry_mod.extra_queries()}
     oracles = {**entry_mod.oracle_sql(), **entry_mod.extra_oracle_sql()}
+    failures = compare(spark, con, sf_dir,
+                       {n: f for n, f in qs.items()
+                        if not only or n in only}, oracles)
+
+    print("\n==", "ALL OK" if not failures else f"FAILURES: {failures}")
+    sys.exit(1 if failures else 0)
+
+
+def oracle_connection(sf_dir):
+    """A DuckDB connection with one view per testdata table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(spark, con, sf_dir, qs, oracles):
+    """Run each named query of ``qs`` on Spark and its ``oracles``
+    entry on DuckDB, print one OK/FAIL/ROWS-ONLY line per query and
+    return the names that failed."""
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -106,9 +124,7 @@ def main():
                   f"({time.time() - t0:.1f}s)")
         else:
             failures.append(name)
-
-    print("\n==", "ALL OK" if not failures else f"FAILURES: {failures}")
-    sys.exit(1 if failures else 0)
+    return failures
 
 
 if __name__ == "__main__":

@@ -18,11 +18,13 @@ a future rotation puts them in a window.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from ferenda_spark.session import get_spark  # noqa: E402
