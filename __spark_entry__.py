@@ -1,15 +1,16 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)``   — flagship KG-construction run on sf0.001.
-``queries()``      — one entry per implemented operator (SURVEY.md §2
-                     + training-data extensions), each (spark, sf_dir)
-                     → DataFrame.
-``oracle_sql()``   — matching ANSI SQL for DuckDB over the same
-                     parquet views. The KG pipeline itself is oracled
-                     by deriving the pages table deterministically
-                     from `documents` (pure arithmetic on doc_id), so
-                     DuckDB can reconstruct the expected triples
-                     independently.
+``registry()``     — every query, registered once as name → (builder,
+                     oracle SQL).  The builder maps (spark, sf_dir) to
+                     a DataFrame; the oracle is ANSI SQL for DuckDB
+                     over the same parquet views.  The KG pipeline
+                     itself is oracled by deriving the pages table
+                     deterministically from `documents` (pure
+                     arithmetic on doc_id), so DuckDB can reconstruct
+                     the expected triples independently.
+``queries()``      — the GATE_ORDER builders, which the driver
+``oracle_sql()``     value-checks against their oracles.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, ShortType
 
 from ferenda_spark.fixtures.pages import CATEGORIES, MONTHS, PUBLISHERS, BASE
-from ferenda_spark.fixtures.pages import entities_df
+from ferenda_spark.fixtures.pages import entities_df, publisher_uri
 from ferenda_spark.operators import analytics, dedup, multimodal, similarity
 from ferenda_spark.operators import textstats
 from ferenda_spark.operators.extract import extract
@@ -393,8 +394,8 @@ def _sh_expr(words: str, n: int = 3) -> str:
             f"for i in generate_series(1, len({words}) - {n - 1})]) "
             f"ELSE [] END")
 
-_JACCARD_CORE = """
-e AS (SELECT id, unnest(sh) AS shingle FROM t),
+# pairwise shingle Jaccard over e(id, shingle): jac(id_a, id_b, jaccard)
+_JACCARD_SCORES = """
 sz AS (SELECT id, count(*) AS sz FROM e GROUP BY id),
 inter AS (
   SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
@@ -410,16 +411,6 @@ jac AS (
 
 _DOT = ("list_reduce(list_prepend(0.0, [{a}[i] * {b}[i] "
         "for i in generate_series(1, 64)]), (x, y) -> x + y)")
-
-
-def _bucket_sql(v: str, n_planes: int = 4) -> str:
-    terms = []
-    for j in range(n_planes):
-        prods = (f"[{v}[i+1] * ((((i*31 + {j}*17 + 7) % 11) - 5)::DOUBLE) "
-                 f"for i in generate_series(0, 63)]")
-        d = f"list_reduce(list_prepend(0.0, {prods}), (x, y) -> x + y)"
-        terms.append(f"CASE WHEN {d} > 0 THEN {1 << j} ELSE 0 END")
-    return "(" + " + ".join(terms) + ")"
 
 
 def _band_bucket_sql(v: str, band: int, planes_per_band: int = 6) -> str:
@@ -458,6 +449,246 @@ def _cos_sql(a: str, b: str) -> str:
         nb=_DOT.format(a=b, b=b))
 
 
+# connected components of the undirected pair list cand(id_a, id_b):
+# a recursive min-label closure, comp(id, comp) with comp the least id
+# reachable (dedup_components, canonical_docs, sim_semantic_dedup*)
+_COMPONENTS_CTE = """edges AS (SELECT id_a AS u, id_b AS v FROM cand
+          UNION SELECT id_b, id_a FROM cand),
+reach AS (
+  SELECT u AS id, u AS r FROM edges
+  UNION
+  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
+comp AS (SELECT id, CAST(min(r) AS BIGINT) AS comp
+         FROM reach GROUP BY id)"""
+
+# 32-bit SimHash: per word the md5 prefix as a BIGINT (th), bit j set
+# when more than half of a doc's words set it
+_SIMHASH_TH = ("list_transform(" + _WORDS.format(c="text") + ", "
+               "w -> CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT))")
+_SIMHASH_BITS = " + ".join(
+    f"CASE WHEN 2 * len(list_filter(th, h -> (h >> {j}) & 1 = 1)) "
+    f"> len(th) THEN {1 << j} ELSE 0 END"
+    for j in range(32))
+
+# the simhash near-dup chain: the first 100 docs and their near copies
+# → simhash → 4 banded 8-bit blocks → candidate pairs within Hamming
+# distance 6 → their components (dedup_simhash_pairs, dedup_components,
+# canonical_docs)
+_SIMHASH_BANDED_CTE = f"""
+corpus AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 100
+  UNION ALL
+  SELECT doc_id + 10000000, 'near duplicate copy ' || text
+  FROM documents WHERE doc_id < 100
+),
+t AS (SELECT doc_id AS id, {_SIMHASH_TH} AS th FROM corpus),
+sigs AS (SELECT id, CAST({_SIMHASH_BITS} AS BIGINT) AS simhash FROM t),
+banded AS (
+  SELECT id, simhash, g.b AS band,
+         (simhash >> (g.b * 8)) & 255 AS block
+  FROM sigs, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g)"""
+_SIMHASH_COMPONENTS_CTE = f"""{_SIMHASH_BANDED_CTE},
+cand AS (
+  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+  FROM banded a JOIN banded b
+    ON a.band = b.band AND a.block = b.block AND a.id < b.id
+  WHERE bit_count(xor(a.simhash::UBIGINT, b.simhash::UBIGINT)) <= 6),
+{_COMPONENTS_CTE}"""
+
+# banded-LSH candidate pairs over itb(id, v, band, bucket) with their
+# cosine (sim_embedding_neardup, sim_semantic_dedup*)
+_LSH_PAIRS_CTE = f"""pairs AS (
+  SELECT a.id AS id_a, b.id AS id_b,
+         {_cos_sql('a.v', 'b.v')} AS cos_sim
+  FROM itb a JOIN itb b
+    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id)"""
+
+
+def _semdedup_sql(where: str, bands: str) -> str:
+    """SemDeDup over the embeddings ``where`` selects, banded by
+    ``bands``: the cos ≥ 0.4 pairs, then one survivor (the least id)
+    per component; ids outside every pair keep."""
+    return f"""
+WITH RECURSIVE it AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings WHERE {where}),
+itb AS ({bands}),
+{_LSH_PAIRS_CTE},
+cand AS (SELECT DISTINCT id_a, id_b FROM pairs WHERE cos_sim >= 0.4),
+{_COMPONENTS_CTE}
+SELECT CAST(e.vec_id AS BIGINT) AS vec_id,
+       CAST(coalesce(c.comp, e.vec_id) AS BIGINT) AS "group",
+       coalesce(c.comp, e.vec_id) = e.vec_id AS keep
+FROM (SELECT vec_id FROM embeddings WHERE {where}) e
+LEFT JOIN comp c ON e.vec_id = c.id
+"""
+
+
+# integer PageRank over cites(src, dst), 3 iterations unrolled into
+# it1..it3; every term is BIGINT floor division so the engines agree
+# bit-for-bit.  The dangling term mirrors rank.py: dm = Σ r over nodes
+# with no out-edges, each node's damped update adds dm // n
+# (kg_pagerank, kg_host_rank).
+_PR_ITER = """
+it{i} AS (
+  SELECT n.node,
+         CAST((SELECT 15 * (1000000000000 // n) // 100 FROM nn)
+              + (85 * (COALESCE(s.inc, 0) +
+              (SELECT COALESCE(sum(r.r), 0) FROM it{prev} r
+               WHERE r.node NOT IN (SELECT src FROM cites))
+              // (SELECT n FROM nn))) // 100 AS BIGINT) AS r
+  FROM prnodes n LEFT JOIN (
+    SELECT c.dst AS node, CAST(sum(r.r // o.outdeg) AS BIGINT) AS inc
+    FROM cites c JOIN it{prev} r ON c.src = r.node
+                 JOIN outd o ON c.src = o.src
+    GROUP BY c.dst) s ON s.node = n.node
+)"""
+_PAGERANK_CTE = """prnodes AS MATERIALIZED (
+  SELECT src AS node FROM cites UNION SELECT dst FROM cites),
+nn AS (SELECT count(*) AS n FROM prnodes),
+outd AS (SELECT src, count(*) AS outdeg FROM cites GROUP BY src),
+it0 AS (SELECT node, CAST((SELECT 1000000000000 // n FROM nn) AS BIGINT)
+               AS r FROM prnodes),""" + ",".join(
+    _PR_ITER.format(i=i, prev=i - 1) for i in (1, 2, 3))
+
+# Cavnar–Trenkle language ID (langid_trained_docs, langid_classify_docs):
+# the char-3-gram windows g(doc_id, lang, gram) of each normalized
+# document, ...
+_LANGID_GRAMS_CTE = r"""src AS (
+  SELECT doc_id, lang,
+         regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS s
+  FROM documents),
+g AS (
+  SELECT doc_id, lang, u.gram
+  FROM src, unnest(list_transform(
+      generate_series(1, greatest(len(s) - 2, 0)),
+      i -> substr(s, CAST(i AS INT), 3))) AS u(gram))"""
+# ... then each document classified against prof(lang, gram, rank): its
+# top-80 grams by out-of-place distance (miss penalty 150), argmin over
+# (dist, lang)
+_LANGID_CLASSIFY_SQL = """dg AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
+dprof AS (
+  SELECT doc_id, gram, drank FROM (
+    SELECT *, row_number() OVER (PARTITION BY doc_id
+                ORDER BY cnt DESC, gram) AS drank FROM dg)
+  WHERE drank <= 80),
+langs AS (SELECT DISTINCT lang FROM prof),
+dist AS (
+  SELECT d.doc_id, l.lang,
+         CAST(sum(coalesce(abs(d.drank - p.rank), 150)) AS BIGINT)
+           AS dist
+  FROM dprof d CROSS JOIN langs l
+  LEFT JOIN prof p ON p.lang = l.lang AND p.gram = d.gram
+  GROUP BY 1, 2)
+SELECT doc_id AS id, lang AS lang_pred, dist FROM (
+  SELECT *, row_number() OVER (PARTITION BY doc_id
+              ORDER BY dist, lang) AS rn FROM dist)
+WHERE rn = 1
+"""
+
+# url_templates_docs / template_budget_docs: per doc_id one url in
+# four shapes and its expected template, rebuilt arithmetically (the
+# classifier never runs; the hex arm keeps the all-digits edge, {d}
+# not {x}, and 'Profile' lowercases)
+_TEMPLATE_URLS_CTE = """t AS (
+  SELECT doc_id,
+         'site' || CAST(doc_id % 10 AS VARCHAR) || '.com' AS host,
+         doc_id % 4 AS m,
+         lpad(lower(to_hex(doc_id)), 8, '0') AS hx
+  FROM documents),
+u AS (
+  SELECT doc_id,
+    CASE m
+      WHEN 0 THEN 'https://' || host || '/product/'
+                  || CAST(doc_id AS VARCHAR)
+      WHEN 1 THEN 'https://' || host || '/'
+                  || CAST(doc_id % 5 + 2019 AS VARCHAR) || '/'
+                  || CAST(doc_id % 12 + 1 AS VARCHAR) || '/post-'
+                  || CAST(doc_id AS VARCHAR)
+      WHEN 2 THEN 'https://' || host || '/u/' || hx || '/Profile'
+      ELSE 'https://' || host || '/search?q=term'
+           || CAST(doc_id AS VARCHAR) || '&page='
+           || CAST(doc_id % 7 AS VARCHAR)
+    END AS url,
+    CASE m
+      WHEN 0 THEN host || '/product/{d}'
+      WHEN 1 THEN host || '/{d}/{d}/{a}'
+      WHEN 2 THEN host || '/u/'
+                  || CASE WHEN regexp_matches(hx, '^[0-9]+$')
+                          THEN '{d}' ELSE '{x}' END || '/profile'
+      ELSE host || '/search?page,q'
+    END AS template
+  FROM t)"""
+
+# the 210-node ring/bridge/chord webgraph e(src, dst) of the SCC family
+# (kg_scc, kg_condensation): the reachability closure, and per node
+# comp = the least id it reaches and is reached from (itself if none)
+_SCC_COMP_CTE = """d AS (SELECT DISTINCT doc_id % 210 AS v FROM documents),
+e AS MATERIALIZED (
+  SELECT v AS src, v - (v % 10) + ((v + 1) % 10) AS dst FROM d
+  UNION
+  SELECT v, v - 10 FROM d WHERE v % 10 = 0 AND v >= 10
+  UNION
+  SELECT v, v + 10 FROM d WHERE v % 40 = 0 AND v <= 199),
+reach AS MATERIALIZED (
+  WITH RECURSIVE r(a, b) AS (
+    SELECT src, dst FROM e
+    UNION
+    SELECT r.a, e.dst FROM r JOIN e ON r.b = e.src)
+  SELECT a, b FROM r),
+nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
+mutual AS (SELECT r1.a AS u, r1.b AS w FROM reach r1
+           JOIN reach r2 ON r1.a = r2.b AND r1.b = r2.a),
+comp AS MATERIALIZED (
+  SELECT n.id, least(n.id, coalesce(min(m.w), n.id)) AS comp
+  FROM nodes n LEFT JOIN mutual m ON m.u = n.id GROUP BY n.id)"""
+
+# hop distances to landmarks {0, 7} over the 60-node doubling graph
+# (kg_landmark_dist, kg_harmonic_landmarks): every path of depth <= 15
+# enumerated by a recursive CTE walking edges BACKWARD from the
+# landmarks, min per (node, landmark) — the BFS first-discovery
+# distance
+_LANDMARK_DIST_CTE = """dd AS (SELECT DISTINCT doc_id % 60 AS v FROM documents),
+e AS MATERIALIZED (
+  SELECT v AS src, (v + 1) % 60 AS dst FROM dd
+  UNION
+  SELECT v, (v * 2) % 60 FROM dd),
+walk AS (
+  WITH RECURSIVE w(node, landmark, dist) AS (
+    SELECT CAST(v AS BIGINT), CAST(v AS BIGINT), CAST(0 AS BIGINT)
+    FROM (VALUES (0), (7)) lm(v)
+    UNION
+    SELECT CAST(e.src AS BIGINT), w.landmark, w.dist + 1
+    FROM w JOIN e ON e.dst = w.node
+    WHERE w.dist < 15)
+  SELECT node, landmark, min(dist) AS dist
+  FROM w GROUP BY node, landmark)"""
+
+# crawl_churn_docs / revisit_schedule_docs: two snapshots of one url
+# space (1-in-7 new, 1-in-11 gone, 1-in-5 survivors rehashed) and the
+# full-outer hash join classifying each url, j(host, status)
+_CHURN_CTE = """prev AS (
+  SELECT 'https://site' || CAST(doc_id % 13 AS VARCHAR) || '.com/d'
+           || CAST(doc_id AS VARCHAR) AS url,
+         md5(text || CASE WHEN doc_id % 5 = 0 THEN ':v1' ELSE '' END)
+           AS ph,
+         'site' || CAST(doc_id % 13 AS VARCHAR) || '.com' AS host
+  FROM documents WHERE doc_id % 7 <> 3),
+curr AS (
+  SELECT 'https://site' || CAST(doc_id % 13 AS VARCHAR) || '.com/d'
+           || CAST(doc_id AS VARCHAR) AS url,
+         md5(text) AS ch,
+         'site' || CAST(doc_id % 13 AS VARCHAR) || '.com' AS host
+  FROM documents WHERE doc_id % 11 <> 4),
+j AS (
+  SELECT COALESCE(p.host, c.host) AS host,
+         CASE WHEN p.url IS NULL THEN 'new'
+              WHEN c.url IS NULL THEN 'gone'
+              WHEN p.ph = c.ch THEN 'unchanged'
+              ELSE 'modified' END AS status
+  FROM prev p FULL OUTER JOIN curr c ON p.url = c.url)"""
+
+
 # ---------------------------------------------------------------------------
 # entry
 # ---------------------------------------------------------------------------
@@ -488,32 +719,9 @@ _LANGID_PROFILE = (
        for i, g in enumerate(reversed(_LANGID_PX_GRAMS))]
     + [("rz", g, i + 1) for i, g in enumerate(_LANGID_RZ_GRAMS)])
 
-# The driver value-checks the FIRST 50 queries() entries (observed
-# cap, CORRECTNESS_r02).  GATE_ORDER curates exactly 50 gates —
-# never-driver-checked and this-round-changed queries FIRST — while
-# every remaining query moves to extra_queries()/extra_oracle_sql(),
-# still oracle-verified locally by tools/check_queries.py and
-# benchable via bench.py.
+# The driver value-checks the first 50 queries() entries: all of GATE_ORDER.
+# kg_extract_text and kg_edges are the flagship gates and never rotate out.
 GATE_ORDER = [
-    # --- ROUND-5 ROTATION (the VERDICT r4 "Next round #1" task): the
-    # 48 queries that have never held a driver row — computed exactly
-    # as _all_queries() minus every green row in CORRECTNESS_r01..r04
-    # — take the 48 rotating slots, so after this window EVERY
-    # registered query has at least one historical driver row.  The
-    # 48 swap-outs were all driver-green in r4 (see CORRECTNESS_r04)
-    # and stay locally oracle-checked as extras via
-    # tools/check_queries.py + tools/gate.py.  Family coverage of the
-    # outgoing gates is preserved in-window: webgraph ranking by
-    # kg_triangles/kg_linkpred/kg_communities/kg_cocitation/
-    # kg_harmonic_landmarks/kg_landmark_dist/kg_assortativity, the
-    # SPARQL surface by kg_sparql_aggregates/_graph_scoped, curation
-    # chains by curation_pipeline_v5, structured-data extraction by
-    # kg_metadata_triad/head_meta_docs/rdfa_roundtrip_docs, the WARC
-    # family by wet_roundtrip_docs/wat_links_docs, dedup by
-    # canonical_docs/canonical_declared_dedup/text_neardup_hash/
-    # strip_paragraphs_docs, training-data quality by
-    # nb_classifier_docs/classifier_eval_docs/threshold_calibration_
-    # docs/langid_trained_docs, and the tokenizer by bpe_train/encode.
     "anchor_alias_linking", "anchor_text_docs", "atom_roundtrip_events",
     "bpe_encode_docs", "bpe_train_docs", "canonical_declared_dedup",
     "canonical_docs", "check_documents", "classifier_eval_docs",
@@ -522,50 +730,49 @@ GATE_ORDER = [
     "kg_class_links", "kg_class_partitions", "kg_cocitation",
     "kg_communities", "kg_degree_histogram", "kg_harmonic_landmarks",
     "kg_landmark_dist", "kg_linkpred", "kg_metadata_triad",
-    "kg_shacl_violations", "kg_sparql_aggregates",
-    "kg_sparql_graph_scoped", "kg_triangles", "kg_void_description",
-    "langid_trained_docs", "main_content_docs", "meta_refresh_docs",
-    "nb_classifier_docs", "noindex_filter_docs", "profile_documents",
-    "quantiles_documents", "quota_sample_docs", "rdfa_roundtrip_docs",
-    "revisit_schedule_docs", "rss_discovery_docs", "script_mix_docs",
-    "sim_pq_topk", "strip_paragraphs_docs", "text_neardup_hash",
+    "kg_shacl_violations", "kg_sparql_regex_paths", "kg_sparql_subquery",
+    "kg_triangles", "kg_void_description", "langid_classify_docs",
+    "main_content_docs", "meta_refresh_docs", "nb_classifier_docs",
+    "noindex_filter_docs", "profile_documents", "quantiles_documents",
+    "quota_sample_docs", "rdfa_roundtrip_docs", "revisit_schedule_docs",
+    "rss_discovery_docs", "script_mix_docs", "sim_semantic_dedup_auto",
+    "strip_paragraphs_docs", "text_neardup_hash",
     "threshold_calibration_docs", "unicode_norm_docs", "wat_links_docs",
     "wet_roundtrip_docs",
-    # flagship KG gates (the north-rule invariants: byte-identical
-    # extracted text per url, exact triple multiset) — never rotated
     "kg_extract_text", "kg_edges",
-    # Queries ADDED in round 5 (after this rotation was sized):
-    # langid_classify_docs, kg_sparql_regex_paths, kg_sparql_subquery,
-    # sim_semantic_dedup_auto — never-driver-checked, all verified
-    # green by tools/gate.py runs this round (logged in BENCH.md);
-    # they are the rotation pool for any future window.
 ]
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The 50 driver-gated queries, in GATE_ORDER."""
-    allq = _all_queries()
-    return {n: allq[n] for n in GATE_ORDER}
+Query = Callable[[SparkSession, str], DataFrame]
 
 
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Queries beyond the driver's 50-entry cap: redundant with a
-    GATE_ORDER gate family-wise (e.g. the three individual ANN paths
-    folded into sim_ann_topk) but kept runnable for bench granularity
-    and local oracle checks."""
-    allq = _all_queries()
-    return {n: f for n, f in allq.items() if n not in GATE_ORDER}
+def queries() -> dict[str, Query]:
+    """The driver-gated builders, in GATE_ORDER."""
+    reg = registry()
+    return {n: reg[n][0] for n in GATE_ORDER}
 
 
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+def oracle_sql() -> dict[str, str]:
+    """The DuckDB oracle of each queries() entry, in GATE_ORDER."""
+    reg = registry()
+    return {n: reg[n][1] for n in GATE_ORDER}
+
+
+def registry() -> dict[str, tuple[Query, str]]:
+    """Every query, registered once: name → (builder, DuckDB oracle
+    SQL over the same parquet views).  The oracle follows its
+    builder."""
+    reg: dict[str, tuple[Query, str]] = {}
 
     # ---- KG pipeline -----------------------------------------------------
     def kg_extract_text(spark, sf):
         ext = extract(_pages(spark, sf), doc_url_regex=DOC_PAGE_URL_RE)
         return ext.filter(F.col("is_doc")).select(
             "url", F.md5(F.encode("text", "UTF-8")).alias("text_md5"))
-    q["kg_extract_text"] = kg_extract_text
+    reg["kg_extract_text"] = kg_extract_text, f"""
+WITH {_F_CTE}
+SELECT url, md5({_EXPECTED_TEXT}) AS text_md5 FROM f
+"""
 
     def warc_extract_text(spark, sf):
         """The full crawl-archive path: pages → WARC segments (one per
@@ -581,7 +788,9 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ext = extract(pages, doc_url_regex=DOC_PAGE_URL_RE)
         return ext.filter(F.col("is_doc")).select(
             "url", F.md5(F.encode("text", "UTF-8")).alias("text_md5"))
-    q["warc_extract_text"] = warc_extract_text
+    # the WARC roundtrip must reproduce the identical per-url text:
+    # same oracle as the direct extract gate
+    reg["warc_extract_text"] = warc_extract_text, reg["kg_extract_text"][1]
 
     def wet_roundtrip_docs(spark, sf):
         """The WET (extracted-text) distribution layer: documents →
@@ -604,7 +813,17 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return back.select(
             "url", F.col("warc_ts").cast("string").alias("ts"),
             F.md5(F.encode("text", "UTF-8")).alias("text_md5"))
-    q["wet_roundtrip_docs"] = wet_roundtrip_docs
+    # WET roundtrip: identity — url/ts/text reconstructed from
+    # documents exactly as the gate synthesized them (second-precision
+    # ts is preserved by the WARC date format)
+    reg["wet_roundtrip_docs"] = wet_roundtrip_docs, """
+SELECT 'https://w.example/doc/' || CAST(doc_id AS VARCHAR) AS url,
+       strftime(TIMESTAMP '2024-03-01 00:00:00'
+                + to_seconds(doc_id % 86400), '%Y-%m-%d %H:%M:%S')
+         AS ts,
+       md5(text) AS text_md5
+FROM documents
+"""
 
     def wat_links_docs(spark, sf):
         """The WAT (metadata) layer: synthetic two-anchor pages →
@@ -630,7 +849,18 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("warc_ts"),
             F.encode(html, "UTF-8").alias("html"))
         return links_roundtrip_wat(pages)
-    q["wat_links_docs"] = wat_links_docs
+    # WAT link edges rebuilt arithmetically: two anchors per page
+    reg["wat_links_docs"] = wat_links_docs, """
+SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR) AS src,
+       'https://example.org/res/doc/'
+         || CAST(doc_id * 7 % 499 + 1 AS VARCHAR) AS dst
+FROM documents
+UNION ALL
+SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR),
+       'https://example.org/res/doc/'
+         || CAST(doc_id * 13 % 499 + 1 AS VARCHAR)
+FROM documents
+"""
 
     def unicode_norm_docs(spark, sf):
         """Unicode canonicalization (functions/text.py nfc_col /
@@ -652,9 +882,25 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .alias("nfc_md5"),
             F.md5(F.encode(strip_accents_col(F.col("text")), "UTF-8"))
             .alias("folded_md5"))
-    q["unicode_norm_docs"] = unicode_norm_docs
+    # unicode canonicalization via DuckDB's utf8proc: identical
+    # injected suffix (combining acute, precomposed e-acute,
+    # combining ring), md5 over the UTF-8 bytes both sides
+    reg["unicode_norm_docs"] = unicode_norm_docs, """
+WITH t AS (
+  SELECT doc_id,
+         text || ' cafe' || chr(769) || ' ' || chr(233)
+              || ' a' || chr(778) || 'gang' AS text
+  FROM documents)
+SELECT doc_id,
+       md5(nfc_normalize(text)) AS nfc_md5,
+       md5(strip_accents(text)) AS folded_md5
+FROM t
+"""
 
-    q["kg_edges"] = lambda spark, sf: _kg_edges(spark, sf)
+    reg["kg_edges"] = _kg_edges, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT * FROM golden
+"""
 
     def kg_void_description(spark, sf):
         """VoID property partitions (W3C VoID): per-predicate triple /
@@ -663,13 +909,24 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         voidstats.void_triples."""
         from ferenda_spark.operators import voidstats
         return voidstats.property_partitions(_kg_edges(spark, sf))
-    q["kg_void_description"] = kg_void_description
+    reg["kg_void_description"] = kg_void_description, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT pred, count(*) AS n_triples,
+       CAST(count(DISTINCT subj) AS BIGINT) AS n_subjects,
+       CAST(count(DISTINCT obj) AS BIGINT) AS n_objects
+FROM golden GROUP BY pred
+"""
 
     def kg_class_partitions(spark, sf):
         """VoID class partitions: void:entities per rdf:type class."""
         from ferenda_spark.operators import voidstats
         return voidstats.class_partitions(_kg_edges(spark, sf))
-    q["kg_class_partitions"] = kg_class_partitions
+    reg["kg_class_partitions"] = kg_class_partitions, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT obj AS rdf_class,
+       CAST(count(DISTINCT subj) AS BIGINT) AS n_entities
+FROM golden WHERE pred = 'rdf:type' GROUP BY obj
+"""
 
     def kg_degree_histogram(spark, sf):
         """Degree distribution of the KG (out over subjects, in over
@@ -677,7 +934,17 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         whether its joins need salting."""
         from ferenda_spark.operators import voidstats
         return voidstats.degree_histogram(_kg_edges(spark, sf))
-    q["kg_degree_histogram"] = kg_degree_histogram
+    reg["kg_degree_histogram"] = kg_degree_histogram, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+outd AS (SELECT subj AS node, count(*) AS degree FROM golden
+         GROUP BY subj),
+ind AS (SELECT obj AS node, count(*) AS degree FROM golden
+        WHERE NOT obj_is_literal GROUP BY obj)
+SELECT 'out' AS direction, degree, count(*) AS n_nodes
+FROM outd GROUP BY degree
+UNION ALL
+SELECT 'in', degree, count(*) FROM ind GROUP BY degree
+"""
 
     def kg_shacl_violations(spark, sf):
         """SHACL-lite validation report: minCount / maxCount /
@@ -688,12 +955,67 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ferenda_spark.operators import shacl
         shapes = spark.createDataFrame(SHACL_SHAPES, shacl.SHAPE_DDL)
         return shacl.shacl_validate(_kg_edges(spark, sf), shapes)
-    q["kg_shacl_violations"] = kg_shacl_violations
+    reg["kg_shacl_violations"] = kg_shacl_violations, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+shapes AS (SELECT * FROM {_shacl_shapes_values()}),
+targets AS (
+  SELECT DISTINCT g.subj AS focus, s.*
+  FROM golden g JOIN shapes s
+    ON g.pred = 'rdf:type' AND g.obj = s.target_class),
+joined AS (
+  SELECT t.focus, t.shape_id, t.path, t.min_count, t.max_count,
+         t.node_kind, t.datatype, g.obj, g.obj_is_literal,
+         g.obj_datatype
+  FROM targets t LEFT JOIN golden g
+    ON g.subj = t.focus AND g.pred = t.path),
+agg AS (
+  SELECT focus, shape_id, path, min_count, max_count, node_kind,
+         datatype,
+         count(obj) AS n_values,
+         coalesce(sum(CASE WHEN node_kind IS NOT NULL
+                            AND obj IS NOT NULL
+                            AND ((node_kind = 'IRI' AND obj_is_literal)
+                              OR (node_kind = 'Literal'
+                                  AND NOT obj_is_literal))
+                      THEN 1 ELSE 0 END), 0) AS n_kind_bad,
+         coalesce(sum(CASE WHEN datatype IS NOT NULL
+                            AND obj IS NOT NULL
+                            AND obj_datatype IS DISTINCT FROM datatype
+                      THEN 1 ELSE 0 END), 0) AS n_dt_bad
+  FROM joined
+  GROUP BY focus, shape_id, path, min_count, max_count, node_kind,
+           datatype)
+SELECT focus, shape_id, path, 'minCount' AS "constraint",
+       CAST(n_values AS BIGINT) AS actual,
+       CAST(min_count AS VARCHAR) AS expected
+FROM agg WHERE min_count IS NOT NULL AND n_values < min_count
+UNION ALL
+SELECT focus, shape_id, path, 'maxCount',
+       CAST(n_values AS BIGINT), CAST(max_count AS VARCHAR)
+FROM agg WHERE max_count IS NOT NULL AND n_values > max_count
+UNION ALL
+SELECT focus, shape_id, path, 'nodeKind',
+       CAST(n_kind_bad AS BIGINT), node_kind
+FROM agg WHERE n_kind_bad > 0
+UNION ALL
+SELECT focus, shape_id, path, 'datatype',
+       CAST(n_dt_bad AS BIGINT), datatype
+FROM agg WHERE n_dt_bad > 0
+"""
 
     def kg_nodes(spark, sf):
         return nodes_from_triples(_kg_edges(spark, sf)).select(
             "uri", "rdf_type", "label")
-    q["kg_nodes"] = kg_nodes
+    reg["kg_nodes"] = kg_nodes, f"""
+WITH {_F_CTE}
+SELECT url AS uri, {_CAT_TYPE} AS rdf_type, title AS label FROM f
+UNION ALL
+SELECT url || '#S1', 'bibo:DocumentPart', 'Introduction' FROM f
+UNION ALL
+SELECT url || '#S1.1', 'bibo:DocumentPart', 'Details' FROM f
+UNION ALL
+SELECT url || '#S2', 'bibo:DocumentPart', 'References' FROM f
+"""
 
     def kg_citations_by_target(spark, sf):
         e = _kg_edges(spark, sf)
@@ -702,7 +1024,12 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy(F.col("obj").alias("target"))
             .agg(F.count(F.lit(1)).alias("n_citations"),
                  F.countDistinct("subj").alias("n_citing_fragments")))
-    q["kg_citations_by_target"] = kg_citations_by_target
+    reg["kg_citations_by_target"] = kg_citations_by_target, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT obj AS target, count(*) AS n_citations,
+       count(DISTINCT subj) AS n_citing_fragments
+FROM golden WHERE pred = 'dcterms:references' GROUP BY obj
+"""
 
     def kg_closure(spark, sf):
         e = _kg_edges(spark, sf)
@@ -710,7 +1037,23 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    .select(F.col("subj").alias("child"),
                            F.col("obj").alias("parent")))
         return _longify(analytics.transitive_closure(part_of, max_depth=4))
-    q["kg_closure"] = kg_closure
+    reg["kg_closure"] = kg_closure, f"""
+WITH RECURSIVE {_F_CTE},
+edges AS (
+  SELECT url || '#S1' AS child, url AS parent FROM f
+  UNION ALL SELECT url || '#S1.1', url || '#S1' FROM f
+  UNION ALL SELECT url || '#S2', url FROM f
+),
+closure AS (
+  SELECT child AS descendant, parent AS ancestor, 1 AS depth FROM edges
+  UNION ALL
+  SELECT c.descendant, e.parent, c.depth + 1
+  FROM closure c JOIN edges e ON c.ancestor = e.child
+  WHERE c.depth < 4
+)
+SELECT descendant, ancestor, CAST(min(depth) AS BIGINT) AS depth
+FROM closure GROUP BY 1, 2
+"""
 
     def kg_citation_classes(spark, sf):
         """Per-class citation counts — the grammar-registry coverage
@@ -737,7 +1080,28 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy(cls.alias("cls"))
             .agg(F.count(F.lit(1)).alias("n"),
                  F.countDistinct("obj").alias("n_targets")))
-    q["kg_citation_classes"] = kg_citation_classes
+    reg["kg_citation_classes"] = kg_citation_classes, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT CASE
+    WHEN obj LIKE 'https://example.org/res/bcp/%' THEN 'bcp'
+    WHEN obj LIKE 'https://example.org/res/std/%' THEN 'std'
+    WHEN obj LIKE 'https://example.org/res/draft/%' THEN 'draft'
+    WHEN obj LIKE 'https://doi.org/%' THEN 'doi'
+    WHEN obj LIKE 'https://example.org/res/iso/%' THEN 'iso'
+    WHEN obj LIKE 'https://example.org/res/eu/dir/%' AND obj LIKE '%#A%'
+        THEN 'eu_article'
+    WHEN obj LIKE 'https://example.org/res/eu/dir/%' THEN 'eu_directive'
+    WHEN obj LIKE 'https://example.org/res/ecj/%' THEN 'ecj_case'
+    WHEN obj LIKE 'https://example.org/res/rfc/%' AND obj LIKE '%#C%'
+        THEN 'nested_struct'
+    WHEN obj LIKE 'https://example.org/res/rfc/%' AND obj LIKE '%#S%'
+        THEN 'rfc_section'
+    WHEN obj LIKE 'https://example.org/res/rfc/%' THEN 'rfc'
+    ELSE 'url' END AS cls,
+  count(*) AS n, count(DISTINCT obj) AS n_targets
+FROM golden WHERE pred = 'dcterms:references'
+GROUP BY 1
+"""
 
     def kg_structure_tree(spark, sf):
         """Statute-depth structure parse (G7): 5-level node tree from
@@ -748,7 +1112,53 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         acts = statute_pages_from_documents(_docs(spark, sf))
         return _longify(statute_structure(acts))
-    q["kg_structure_tree"] = kg_structure_tree
+
+    # statute structure tree: reconstruct the expected node table from
+    # the same doc_id arithmetic that generated the text (see
+    # sources/testdata.statute_pages_from_documents)
+    _struct_ctes = """a AS (
+  SELECT doc_id, doc_id % 2 + 2 AS nchap, doc_id % 5 = 0 AS has_letters,
+         'https://example.org/res/act/' || CAST(doc_id AS VARCHAR) AS url
+  FROM documents),
+chap AS (
+  SELECT a.*, CAST(g.c AS BIGINT) AS c
+  FROM a, (SELECT unnest(generate_series(1, 3)) AS c) g
+  WHERE g.c <= nchap),
+secs AS (
+  SELECT chap.*, 2 * (c - 1) + gi.i AS s
+  FROM chap, (SELECT unnest([1, 2]) AS i) gi)"""
+    _struct_select = """
+SELECT url, 'K' || c AS node_id, 'chapter' AS kind,
+       CAST(c AS VARCHAR) AS ordinal, CAST(NULL AS VARCHAR) AS parent_id,
+       CAST(1 AS BIGINT) AS depth,
+       (['General Provisions', 'Obligations', 'Supervision'])[CAST(c AS INT)]
+           AS text
+FROM chap
+UNION ALL
+SELECT url, 'K' || c || 'P' || s, 'section', CAST(s AS VARCHAR),
+       'K' || c, 2, 'Provisions on handling.' FROM secs
+UNION ALL
+SELECT url, 'K' || c || 'P' || s || 'S1', 'piece', '1',
+       'K' || c || 'P' || s, 3,
+       'First piece of section ' || s || '.' FROM secs
+UNION ALL
+SELECT url, 'K' || c || 'P' || s || 'S2', 'piece', '2',
+       'K' || c || 'P' || s, 3,
+       'Second piece of section ' || s || '.' FROM secs WHERE s % 3 = 0
+UNION ALL
+SELECT url, 'K' || c || 'P' || s || 'S1N' || gn.n, 'item',
+       CAST(gn.n AS VARCHAR), 'K' || c || 'P' || s || 'S1', 4,
+       (['first', 'second'])[gn.n] || ' item of section ' || s || '.'
+FROM secs, (SELECT unnest([1, 2]) AS n) gn WHERE s % 2 = 1
+UNION ALL
+SELECT url, 'K' || c || 'P' || s || 'S1N2B' || gl.l, 'letter', gl.l,
+       'K' || c || 'P' || s || 'S1N2', 5,
+       CASE gl.l WHEN 'a' THEN 'first' ELSE 'second' END
+           || ' letter item.'
+FROM secs, (SELECT unnest(['a', 'b']) AS l) gl
+WHERE s % 2 = 1 AND has_letters
+"""
+    reg["kg_structure_tree"] = kg_structure_tree, f"WITH {_struct_ctes} {_struct_select}"
 
     def visit_structure_docs(spark, sf):
         """G9: the visitor surface (visitor_functions/visit_node,
@@ -773,7 +1183,20 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("anno")["uri"].alias("uri"),
             F.col("anno")["path"].alias("path"),
             F.col("anno")["chapter"].alias("chapter"))
-    q["visit_structure_docs"] = visit_structure_docs
+    reg["visit_structure_docs"] = visit_structure_docs, f"""
+WITH {_struct_ctes},
+nodes AS ({_struct_select})
+SELECT n.url, n.node_id,
+       n.url || '#' || n.node_id AS uri,
+       concat_ws('/', p4.node_id, p3.node_id, p2.node_id,
+                 p1.node_id, n.node_id) AS path,
+       regexp_extract(n.node_id, '^K([0-9]+)', 1) AS chapter
+FROM nodes n
+LEFT JOIN nodes p1 ON p1.url = n.url AND p1.node_id = n.parent_id
+LEFT JOIN nodes p2 ON p2.url = n.url AND p2.node_id = p1.parent_id
+LEFT JOIN nodes p3 ON p3.url = n.url AND p3.node_id = p2.parent_id
+LEFT JOIN nodes p4 ON p4.url = n.url AND p4.node_id = p3.parent_id
+"""
 
     def render_xhtml_docs(spark, sf):
         """S11: XHTML+RDFa page render (render_xhtml,
@@ -815,7 +1238,83 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         langs = d.select(url.alias("url"), "lang")
         nodes = statute_structure(statute_pages_from_documents(d))
         return render_xhtml_pages(meta, nodes, langs=langs)
-    q["render_xhtml_docs"] = render_xhtml_docs
+
+    _esc = ("replace(replace(replace({c}, '&', '&amp;'), "
+            "'<', '&lt;'), '>', '&gt;')")
+    # attribute-value escape: text escape + '"' -> &quot; (mirrors
+    # render.escape_attr)
+    _esca = ("replace(" + _esc + ", '\"', '&quot;')")
+    _lvl = ("SELECT k.url, k.parent_id AS node_id, "
+            "string_agg('<div about=\"' || "
+            + _esca.format(c="k.url") + " || '#' || k.node_id "
+            "|| '\" typeof=\"' || k.kind || '\"><p>' || "
+            + _esc.format(c="k.text") + " || '</p>' || {ch} || "
+            "'</div>', '' ORDER BY k.skey) AS ch "
+            "FROM k {join} WHERE k.depth = {d} GROUP BY 1, 2")
+    reg["render_xhtml_docs"] = render_xhtml_docs, f"""
+WITH {_struct_ctes},
+nodes AS ({_struct_select}),
+k AS (SELECT *, lpad(ordinal, 8, '0') AS skey FROM nodes),
+l5 AS ({_lvl.format(ch="''", join="", d=5)}),
+l4 AS ({_lvl.format(ch="coalesce(c5.ch, '')",
+                    join="LEFT JOIN l5 c5 ON c5.url = k.url "
+                         "AND c5.node_id = k.node_id", d=4)}),
+l3 AS ({_lvl.format(ch="coalesce(c4.ch, '')",
+                    join="LEFT JOIN l4 c4 ON c4.url = k.url "
+                         "AND c4.node_id = k.node_id", d=3)}),
+l2 AS ({_lvl.format(ch="coalesce(c3.ch, '')",
+                    join="LEFT JOIN l3 c3 ON c3.url = k.url "
+                         "AND c3.node_id = k.node_id", d=2)}),
+body AS (
+  SELECT k.url, '<body about="' || {_esca.format(c="k.url")} || '">' ||
+         string_agg('<div about="' || {_esca.format(c="k.url")} ||
+                    '#' || k.node_id ||
+                    '" typeof="' || k.kind || '"><p>' ||
+                    {_esc.format(c="k.text")} || '</p>' ||
+                    coalesce(c2.ch, '') || '</div>',
+                    '' ORDER BY k.skey) || '</body>' AS body_xml
+  FROM k LEFT JOIN l2 c2 ON c2.url = k.url AND c2.node_id = k.node_id
+  WHERE k.depth = 1 GROUP BY 1),
+meta AS (
+  SELECT 'https://example.org/res/act/' || CAST(doc_id AS VARCHAR)
+           AS url, lang, t.pred, t.obj
+  FROM documents, LATERAL (SELECT * FROM (VALUES
+    ('dcterms:title', 'Act ' || CAST(doc_id AS VARCHAR)),
+    ('rdf:type', 'https://example.org/ontology/rfc#Act'),
+    ('dcterms:publisher', 'https://example.org/org/' || source),
+    ('dcterms:language', lang),
+    ('dcterms:extent', CAST(n_chars AS VARCHAR))) v(pred, obj)) t),
+heads AS (
+  SELECT url, any_value(lang) AS lang,
+    '<head about="' || {_esca.format(c="url")} || '">' || string_agg(
+      CASE
+        WHEN pred = 'dcterms:title'
+             AND NOT regexp_matches(obj, '^https?://')
+          THEN '<title property="dcterms:title">' ||
+               {_esc.format(c="obj")} || '</title>'
+        WHEN regexp_matches(obj, '^https?://')
+          THEN '<link rel="' || pred || '" href="' ||
+               {_esca.format(c="obj")} || '"/>'
+        ELSE '<meta property="' || pred || '" content="' ||
+             {_esca.format(c="obj")} || '"/>'
+      END, '' ORDER BY pred, obj) || '</head>' AS head_xml,
+    array_to_string(list_transform(
+      list_sort(list_distinct(list(split_part(pred, ':', 1)))),
+      p -> ' xmlns:' || p || '="' || CASE p
+        WHEN 'dcterms' THEN 'http://purl.org/dc/terms/'
+        WHEN 'rdf' THEN 'http://www.w3.org/1999/02/22-rdf-syntax-ns#'
+        WHEN 'rdfs' THEN 'http://www.w3.org/2000/01/rdf-schema#'
+        WHEN 'rfc' THEN 'https://example.org/ontology/rfc#'
+        WHEN 'prov' THEN 'http://www.w3.org/ns/prov#'
+      END || '"'), '') AS decls
+  FROM meta GROUP BY url)
+SELECT h.url,
+  '<?xml version="1.0" encoding="utf-8"?>' ||
+  '<html xmlns="http://www.w3.org/1999/xhtml"' || h.decls ||
+  ' version="XHTML+RDFa 1.1" xml:lang="' || h.lang || '">' ||
+  h.head_xml || b.body_xml || '</html>' AS xhtml
+FROM heads h JOIN body b ON b.url = h.url
+"""
 
     def rdfa_roundtrip_docs(spark, sf):
         """RDFa write→read roundtrip — the identity the reference
@@ -838,7 +1337,29 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return rdfa_triples(pages, html_col="xhtml").select(
             "src_url", "subj", "pred", "obj", "obj_is_literal",
             "obj_datatype", "obj_lang")
-    q["rdfa_roundtrip_docs"] = rdfa_roundtrip_docs
+    reg["rdfa_roundtrip_docs"] = rdfa_roundtrip_docs, f"""
+WITH {_struct_ctes},
+nodes AS ({_struct_select}),
+meta AS (
+  SELECT 'https://example.org/res/act/' || CAST(doc_id AS VARCHAR)
+           AS url, lang, t.pred, t.obj
+  FROM documents, LATERAL (SELECT * FROM (VALUES
+    ('dcterms:title', 'Act ' || CAST(doc_id AS VARCHAR)),
+    ('rdf:type', 'https://example.org/ontology/rfc#Act'),
+    ('dcterms:publisher', 'https://example.org/org/' || source),
+    ('dcterms:language', lang),
+    ('dcterms:extent', CAST(n_chars AS VARCHAR))) v(pred, obj)) t)
+SELECT url AS src_url, url AS subj, pred, obj,
+       NOT regexp_matches(obj, '^https?://') AS obj_is_literal,
+       CAST(NULL AS VARCHAR) AS obj_datatype,
+       CASE WHEN NOT regexp_matches(obj, '^https?://') THEN lang
+            END AS obj_lang
+FROM meta
+UNION ALL
+SELECT url, url || '#' || node_id, 'rdf:type', kind, FALSE,
+       NULL, NULL
+FROM nodes
+"""
 
     def kg_structure_closure(spark, sf):
         """Transitive ancestor closure over the statute tree — the
@@ -855,7 +1376,23 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.coalesce(F.concat("url", F.lit("#"), "parent_id"),
                        F.col("url")).alias("parent"))
         return _longify(analytics.transitive_closure(edges, max_depth=5))
-    q["kg_structure_closure"] = kg_structure_closure
+    reg["kg_structure_closure"] = kg_structure_closure, f"""
+WITH RECURSIVE {_struct_ctes},
+nodes AS ({_struct_select}),
+edges AS (
+  SELECT url || '#' || node_id AS child,
+         coalesce(url || '#' || parent_id, url) AS parent
+  FROM nodes),
+closure AS (
+  SELECT child AS descendant, parent AS ancestor, 1 AS depth FROM edges
+  UNION ALL
+  SELECT c.descendant, e.parent, c.depth + 1
+  FROM closure c JOIN edges e ON c.ancestor = e.child
+  WHERE c.depth < 5
+)
+SELECT descendant, ancestor, CAST(min(depth) AS BIGINT) AS depth
+FROM closure GROUP BY 1, 2
+"""
 
     def fulltext_search_docs(spark, sf):
         """S9/Q1: fielded inverted index + boost-ranked search
@@ -870,7 +1407,33 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _longify(ft.fulltext_search(
             idx, None, ["table", "window", "spark"], k=20,
             n_docs=d.count()))
-    q["fulltext_search_docs"] = fulltext_search_docs
+
+    _ft_toks = ("list_filter(string_split_regex(lower(trim({c})), "
+                "'\\s+'), t -> t <> '')")
+    _ft_ctes = f"""rows AS (
+  SELECT doc_id AS id, 'source' AS field, CAST(4 AS BIGINT) AS boost,
+         unnest({_ft_toks.format(c='source')}) AS term FROM documents
+  UNION ALL
+  SELECT doc_id, 'text', 1, unnest({_ft_toks.format(c='text')})
+  FROM documents),
+tf AS (SELECT term, field, boost, id, count(*) AS tf
+       FROM rows GROUP BY 1, 2, 3, 4),
+idf AS (SELECT term, CAST(floor(1000 * ln(
+            CAST((SELECT count(*) FROM documents) AS DOUBLE)
+            / count(DISTINCT id))) AS BIGINT) AS idf_milli
+        FROM tf GROUP BY term)"""
+    reg["fulltext_search_docs"] = fulltext_search_docs, f"""
+WITH {_ft_ctes},
+hits AS (
+  SELECT tf.id, CAST(sum(tf.tf * tf.boost * idf.idf_milli) AS BIGINT)
+             AS score
+  FROM tf JOIN idf USING (term)
+  WHERE term IN ('table', 'window', 'spark') GROUP BY tf.id)
+SELECT id, score, rank FROM (
+  SELECT id, score,
+         row_number() OVER (ORDER BY score DESC, id) AS rank
+  FROM hits) WHERE rank <= 20
+"""
 
     def fulltext_fielded(spark, sf):
         """Q1 composed with P8/P9 and phrase search: a term query,
@@ -892,7 +1455,33 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             fields=["text"], eligible=eligible,
             phrases=["table window"], pindex=pidx,
             n_docs=d.count()))
-    q["fulltext_fielded"] = fulltext_fielded
+    reg["fulltext_fielded"] = fulltext_fielded, f"""
+WITH {_ft_ctes},
+pidx AS (SELECT doc_id AS id, unnest(toks) AS term,
+                generate_subscripts(toks, 1) AS pos
+         FROM (SELECT doc_id, {_ft_toks.format(c='text')} AS toks
+               FROM documents)),
+ph AS (SELECT p0.id, count(*) AS hits
+       FROM (SELECT id, pos FROM pidx WHERE term = 'table') p0
+       JOIN pidx p1 ON p1.id = p0.id AND p1.pos = p0.pos + 1
+                    AND p1.term = 'window'
+       GROUP BY p0.id),
+pidf AS (SELECT CAST(sum(idf_milli) AS BIGINT) AS p_idf FROM idf
+         WHERE term IN ('table', 'window')),
+contrib AS (
+  SELECT tf.id, tf.tf * tf.boost * idf.idf_milli AS part
+  FROM tf JOIN idf USING (term)
+  WHERE (term IN ('table') OR term LIKE 'win%') AND field = 'text'
+  UNION ALL
+  SELECT ph.id, ph.hits * 1 * pidf.p_idf AS part FROM ph, pidf),
+hits AS (
+  SELECT id, CAST(sum(part) AS BIGINT) AS score
+  FROM contrib WHERE id BETWEEN 100 AND 399 GROUP BY id)
+SELECT id, score, rank FROM (
+  SELECT id, score,
+         row_number() OVER (ORDER BY score DESC, id) AS rank
+  FROM hits) WHERE rank <= 15
+"""
 
     def fulltext_api_page(spark, sf):
         """Q1/W5 API-shaped: the reference's query endpoint envelope
@@ -911,7 +1500,32 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             boost_repos={"src3": 10, "src7": 3},
             exclude_repos=["src5"],
             pagenum=2))
-    q["fulltext_api_page"] = fulltext_api_page
+    # the API-page envelope: same scoring, repo multiplier + exclude
+    # between scoring and ranking, then one page + envelope fields
+    reg["fulltext_api_page"] = fulltext_api_page, f"""
+WITH {_ft_ctes},
+hits AS (
+  SELECT tf.id, CAST(sum(tf.tf * tf.boost * idf.idf_milli) AS BIGINT)
+             AS score
+  FROM tf JOIN idf USING (term)
+  WHERE term IN ('table', 'window', 'spark') GROUP BY tf.id),
+shaped AS (
+  SELECT h.id,
+         CAST(h.score * CASE d.source WHEN 'src3' THEN 10
+                                      WHEN 'src7' THEN 3
+                                      ELSE 1 END AS BIGINT) AS score
+  FROM hits h JOIN documents d ON h.id = d.doc_id
+  WHERE d.source <> 'src5'),
+total AS (SELECT CAST(count(*) AS BIGINT) AS total_results FROM shaped)
+SELECT id, score, rank,
+       CAST(10 AS BIGINT) AS start_index,
+       CAST(10 AS BIGINT) AS items_per_page,
+       total_results
+FROM (SELECT id, score,
+             row_number() OVER (ORDER BY score DESC, id) AS rank
+      FROM shaped), total
+WHERE rank > 10 AND rank <= 20
+"""
 
     def fulltext_bm25_docs(spark, sf):
         """Q1 with the ES scoring model: Okapi BM25 (the reference's
@@ -925,7 +1539,32 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         idx = ft.fulltext_index(d, "doc_id", {"source": 4, "text": 1})
         return _longify(ft.bm25_search(
             idx, d.count(), ["table", "window", "spark"]))
-    q["fulltext_bm25_docs"] = fulltext_bm25_docs
+    # BM25: same tokenizer/idf CTEs; dl/avgdl and the fixed-point
+    # formula restated with DuckDB's // (floor division, identical to
+    # Spark's div for positive BIGINTs)
+    reg["fulltext_bm25_docs"] = fulltext_bm25_docs, f"""
+WITH {_ft_ctes},
+dl AS (SELECT id, field, CAST(sum(tf) AS BIGINT) AS dl
+       FROM tf GROUP BY 1, 2),
+avg AS (SELECT field, (sum(dl) * 1000) // count(*) AS avgdl_milli
+        FROM dl GROUP BY field),
+parts AS (
+  SELECT tf.id,
+         tf.boost * ((idf.idf_milli * tf.tf * 2200 * avg.avgdl_milli)
+           // ((tf.tf * 1000000 * avg.avgdl_milli
+                + 1200 * (250 * avg.avgdl_milli + 750 * dl.dl * 1000))
+               // 1000)) AS part
+  FROM tf JOIN idf USING (term)
+       JOIN dl ON tf.id = dl.id AND tf.field = dl.field
+       JOIN avg ON tf.field = avg.field
+  WHERE term IN ('table', 'window', 'spark')),
+hits AS (SELECT id, CAST(sum(part) AS BIGINT) AS score
+         FROM parts GROUP BY id)
+SELECT id, score, rank FROM (
+  SELECT id, score,
+         row_number() OVER (ORDER BY score DESC, id) AS rank
+  FROM hits) WHERE rank <= 20
+"""
 
     def doc_versions_views(spark, sf):
         """J8 both halves in one gate: per document, the CURRENT
@@ -946,7 +1585,44 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "url", F.col("version").alias("asof_version"),
             F.col("valid_from").alias("asof_valid_from"))
         return _longify(latest.join(asof, "url", "left"))
-    q["doc_versions_views"] = doc_versions_views
+
+    _versions_cte = """v AS (
+  SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR) AS url,
+         'v' || CAST(g.i AS VARCHAR) AS version,
+         DATE '2020-01-01' + INTERVAL (CAST(doc_id % 200 AS INT)
+             + CAST(g.i AS INT) * 37) DAY AS valid_from,
+         CASE WHEN g.i < doc_id % 3
+              THEN DATE '2020-01-01' + INTERVAL (CAST(doc_id % 200 AS INT)
+                   + CAST(g.i AS INT) * 37 + 37) DAY
+              WHEN doc_id % 6 = 5
+              THEN DATE '2020-01-01' + INTERVAL (CAST(doc_id % 200 AS INT)
+                   + CAST(g.i AS INT) * 37 + 30) DAY
+         END AS valid_to,
+         CASE WHEN g.i = doc_id % 3
+              THEN 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
+              ELSE 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
+                   || '/arkiv/v' || CAST(g.i AS VARCHAR) END AS archive_uri,
+         doc_id % 3 + 1 AS n_versions
+  FROM documents, (SELECT unnest(generate_series(0, 2)) AS i) g
+  WHERE g.i <= doc_id % 3)"""
+
+    reg["doc_versions_views"] = doc_versions_views, f"""
+WITH {_versions_cte},
+latest AS (
+  SELECT url, version AS latest_version, archive_uri, n_versions
+  FROM v WHERE version = 'v' || CAST(n_versions - 1 AS VARCHAR)),
+eligible AS (
+  SELECT url, version, CAST(valid_from AS DATE) AS valid_from,
+         row_number() OVER (PARTITION BY url
+                            ORDER BY valid_from DESC,
+                            CAST(ltrim(version, 'v') AS BIGINT) DESC) AS rn
+  FROM v WHERE valid_from <= DATE '2020-06-15'
+    AND (valid_to IS NULL OR DATE '2020-06-15' < valid_to))
+SELECT l.url, l.latest_version, l.archive_uri, l.n_versions,
+       e.version AS asof_version, e.valid_from AS asof_valid_from
+FROM latest l LEFT JOIN (SELECT * FROM eligible WHERE rn = 1) e
+  ON l.url = e.url
+"""
 
     def feedsets_events(spark, sf):
         """A4: per-type feeds plus the union 'All' feed, newest-first,
@@ -956,7 +1632,17 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _longify(analytics.feedsets(
             e, "event_type", "ts", feed_size=25)
             .select("feed", "event_id", "rank"))
-    q["feedsets_events"] = feedsets_events
+    reg["feedsets_events"] = feedsets_events, """
+WITH tagged AS (
+  SELECT event_id, ts, feed
+  FROM events, unnest([event_type, 'All']) AS t(feed)),
+ranked AS (
+  SELECT feed, event_id,
+         row_number() OVER (PARTITION BY feed
+                            ORDER BY ts DESC, event_id) AS rank
+  FROM tagged)
+SELECT feed, event_id, rank FROM ranked WHERE rank <= 25
+"""
 
     def atom_feeds_events(spark, sf):
         """S11/A4 tail: Atom XML documents per feed (incl. 'All'),
@@ -970,7 +1656,35 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         F.concat(F.col("event_type"), F.lit(" #"),
                                  F.col("event_id"))))
         return render.atom_feeds(top)
-    q["atom_feeds_events"] = atom_feeds_events
+    reg["atom_feeds_events"] = atom_feeds_events, """
+WITH tagged AS (
+  SELECT event_id, event_type, ts, feed
+  FROM events, unnest([event_type, 'All']) AS t(feed)),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY feed
+                               ORDER BY ts DESC, event_id) AS rank
+  FROM tagged),
+top AS (SELECT * FROM ranked WHERE rank <= 10),
+ent AS (SELECT feed, event_id, ts,
+        '<entry><id>urn:entry:' || event_id || '</id><title>'
+        || replace(replace(replace(event_type || ' #' || event_id,
+                                   '&', '&amp;'), '<', '&lt;'),
+                   '>', '&gt;')
+        || '</title><updated>'
+        || strftime(ts, '%Y-%m-%dT%H:%M:%SZ')
+        || '</updated></entry>' AS xml
+        FROM top)
+SELECT feed,
+  '<?xml version="1.0" encoding="utf-8"?>'
+  || '<feed xmlns="http://www.w3.org/2005/Atom"><title>'
+  || replace(replace(replace(feed, '&', '&amp;'), '<', '&lt;'),
+             '>', '&gt;')
+  || '</title><updated>' || strftime(max(ts), '%Y-%m-%dT%H:%M:%SZ')
+  || '</updated>'
+  || string_agg(xml, '' ORDER BY ts DESC, event_id)
+  || '</feed>' AS atom_xml
+FROM ent GROUP BY feed
+"""
 
     def atom_roundtrip_events(spark, sf):
         """Feed write→read roundtrip: the Atom documents from the
@@ -998,7 +1712,21 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("src_url").alias("feed"), "format", "feed_title",
             "entry_id", "title", "link",
             F.col("updated").cast("long").alias("updated_epoch"))
-    q["atom_roundtrip_events"] = atom_roundtrip_events
+    reg["atom_roundtrip_events"] = atom_roundtrip_events, """
+WITH tagged AS (
+  SELECT event_id, event_type, ts, feed
+  FROM events, unnest([event_type, 'All']) AS t(feed)),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY feed
+                               ORDER BY ts DESC, event_id) AS rank
+  FROM tagged)
+SELECT feed, 'atom' AS format, feed AS feed_title,
+       'urn:entry:' || event_id AS entry_id,
+       event_type || ' #' || event_id AS title,
+       'https://ev.example/e/' || event_id AS link,
+       CAST(floor(epoch(ts)) AS BIGINT) AS updated_epoch
+FROM ranked WHERE rank <= 10
+"""
 
     def rss_discovery_docs(spark, sf):
         """RSS 2.0 discovery parse (sources/feeds.py): per doc one
@@ -1033,7 +1761,27 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return ent.select(
             "src_url", "format", "feed_title", "entry_id", "title",
             "link", F.col("updated").cast("long").alias("updated_epoch"))
-    q["rss_discovery_docs"] = rss_discovery_docs
+    reg["rss_discovery_docs"] = rss_discovery_docs, """
+WITH d AS (
+  SELECT doc_id,
+    'https://news' || CAST(doc_id % 5 AS VARCHAR) || '.example'
+      AS site,
+    CAST(doc_id AS VARCHAR) AS did
+  FROM documents)
+SELECT site || '/feed/' || did AS src_url, 'rss' AS format,
+       'Site ' || CAST(doc_id % 5 AS VARCHAR) AS feed_title,
+       'urn:d:' || did AS entry_id, 'Story ' || did AS title,
+       site || '/a/' || did AS link,
+       1704067200 + doc_id * 97 AS updated_epoch
+FROM d
+UNION ALL
+SELECT site || '/feed/' || did, 'rss',
+       'Site ' || CAST(doc_id % 5 AS VARCHAR),
+       site || '/a/' || did || '/comments', 'Comments ' || did,
+       site || '/a/' || did || '/comments',
+       CAST(NULL AS BIGINT)
+FROM d
+"""
 
     def grouped_agg_value_median(spark, sf):
         """§2.11 GROUPED_AGG pandas UDF surface: per-type median event
@@ -1053,7 +1801,11 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                .agg(F.round(median_udf("value"), 4).alias("median_value")))
         cnt = e.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
         return _longify(med.join(cnt, "event_type"))
-    q["grouped_agg_value_median"] = grouped_agg_value_median
+    reg["grouped_agg_value_median"] = grouped_agg_value_median, """
+SELECT event_type, round(median(value), 4) AS median_value,
+       count(*) AS n
+FROM events GROUP BY event_type
+"""
 
     def kg_facet_multitype(spark, sf):
         """Multi-type facet guards: per-facet rdftype FILTER + the
@@ -1068,7 +1820,25 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ]
         return _longify(facet_statistics(
             e, facets, types=["bibo:Standard", "bibo:Report"]))
-    q["kg_facet_multitype"] = kg_facet_multitype
+    reg["kg_facet_multitype"] = kg_facet_multitype, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+wide AS (
+  SELECT subj,
+         max(CASE WHEN pred = 'rdf:type' THEN obj END) AS rdftype,
+         max(CASE WHEN pred = 'dcterms:issued' THEN obj END) AS issued,
+         max(CASE WHEN pred = 'dcterms:title' THEN obj END) AS title
+  FROM golden GROUP BY subj),
+typed AS (
+  SELECT CASE WHEN rdftype = 'bibo:Standard'
+              THEN substr(issued, 1, 4) END AS std_year,
+         CASE WHEN rdftype = 'bibo:Report'
+              THEN substr(lower(trim(title)), 1, 1) END AS rep_letter
+  FROM wide WHERE rdftype IN ('bibo:Standard', 'bibo:Report'))
+SELECT 'std_year' AS facet, std_year AS value, count(*) AS n
+FROM typed GROUP BY 2
+UNION ALL
+SELECT 'rep_letter', rep_letter, count(*) FROM typed GROUP BY 2
+"""
 
     def kg_keyword_inversion(spark, sf):
         e = _kg_edges(spark, sf)
@@ -1076,7 +1846,13 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _longify(inv.select(
             "term", F.array_join("members", ",").alias("members_csv"),
             "n_members"))
-    q["kg_keyword_inversion"] = kg_keyword_inversion
+    reg["kg_keyword_inversion"] = kg_keyword_inversion, f"""
+WITH {_F_CTE}
+SELECT {_CAT_URI} AS term,
+       string_agg(url, ',' ORDER BY url) AS members_csv,
+       count(DISTINCT url) AS n_members
+FROM f GROUP BY 1
+"""
 
     def keyword_termset_docs(spark, sf):
         """P7: term sanitization as a dedicated op (keyword.py:169-177
@@ -1100,11 +1876,32 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             t.groupBy("term")
             .agg(F.countDistinct("doc_id").alias("n_docs"))
             .filter(F.col("n_docs") >= 40))
-    q["keyword_termset_docs"] = keyword_termset_docs
+    reg["keyword_termset_docs"] = keyword_termset_docs, """
+WITH tok AS (
+  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok
+  FROM documents),
+san AS (
+  SELECT doc_id,
+         trim(regexp_replace(replace(tok, chr(160), ' '),
+                             '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')) AS t
+  FROM tok),
+terms AS (
+  SELECT doc_id, t AS term FROM san
+  WHERE len(t) BETWEEN 2 AND 100
+    AND substr(t, 1, 1) NOT IN ('.', '/', ':')
+    AND substr(t, len(t), 1) NOT IN ('.', ','))
+SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+FROM terms GROUP BY term HAVING count(DISTINCT doc_id) >= 40
+"""
 
     def kg_dependency_edges(spark, sf):
         return analytics.dependency_edges(_kg_edges(spark, sf))
-    q["kg_dependency_edges"] = kg_dependency_edges
+    reg["kg_dependency_edges"] = kg_dependency_edges, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT subj, pred, obj FROM golden
+WHERE pred NOT IN ('rdf:type', 'owl:sameAs') AND NOT obj_is_literal
+  AND obj NOT IN (SELECT DISTINCT subj FROM golden)
+"""
 
     def kg_resolved_citations(spark, sf):
         # J2: the skewed citation-resolution join (zipf-hot targets);
@@ -1116,7 +1913,23 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         resolved = resolve_citations(e, pages, salt=8)
         return _longify(resolved.groupBy("target_url")
                         .agg(F.count(F.lit(1)).alias("n")))
-    q["kg_resolved_citations"] = kg_resolved_citations
+
+    _resolve_cte = r"""
+c AS (SELECT subj, obj,
+             regexp_extract(regexp_replace(obj, '#.*$', ''),
+                            '/res/(?:rfc|doc)/(\d+)', 1) AS basefile
+      FROM golden WHERE pred = 'dcterms:references'),
+t AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) AS basefile,
+             'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
+                 AS target_url
+      FROM documents)"""
+
+    reg["kg_resolved_citations"] = kg_resolved_citations, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte}
+SELECT t.target_url, count(*) AS n
+FROM c LEFT JOIN t ON c.basefile = t.basefile
+GROUP BY t.target_url
+"""
 
     def crawl_reachable(spark, sf):
         """S1: distributed crawl scheduler — BFS frontier over the
@@ -1135,7 +1948,23 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         seeds = pages.filter(
             F.regexp_extract("url", r"(\d+)$", 1).cast("long") % 25 == 0)
         return _longify(crawl_frontier(links, seeds))
-    q["crawl_reachable"] = crawl_reachable
+    reg["crawl_reachable"] = crawl_reachable, f"""
+WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte},
+links AS (SELECT DISTINCT regexp_replace(c.subj, '#.*$', '') AS src,
+                 t.target_url AS dst
+          FROM c JOIN t ON c.basefile = t.basefile),
+seeds AS (SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
+              AS url
+          FROM documents WHERE doc_id % 25 = 0),
+r AS (
+  SELECT url, 0 AS depth FROM seeds
+  UNION ALL
+  SELECT l.dst AS url, r.depth + 1 AS depth
+  FROM r JOIN links l ON l.src = r.url
+  WHERE r.depth < 3
+)
+SELECT url, CAST(min(depth) AS BIGINT) AS depth FROM r GROUP BY url
+"""
 
     def kg_regen_dependents(spark, sf):
         """Dependency-triggered regeneration (regen.py): every 17th
@@ -1151,14 +1980,36 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         changed = pages.filter(
             F.regexp_extract("url", r"(\d+)$", 1).cast("long") % 17 == 0)
         return _longify(stale_set(deps, changed))
-    q["kg_regen_dependents"] = kg_regen_dependents
+    reg["kg_regen_dependents"] = kg_regen_dependents, f"""
+WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte},
+deps AS (SELECT DISTINCT t.target_url AS url,
+                regexp_replace(c.subj, '#.*$', '') AS depends_on
+         FROM c JOIN t ON c.basefile = t.basefile
+         WHERE t.target_url != regexp_replace(c.subj, '#.*$', '')),
+changed AS (SELECT 'https://example.org/res/doc/' ||
+                   CAST(doc_id AS VARCHAR) AS url
+            FROM documents WHERE doc_id % 17 = 0),
+r AS (
+  SELECT url, 0 AS depth FROM changed
+  UNION ALL
+  SELECT d.url, r.depth + 1 AS depth
+  FROM r JOIN deps d ON d.depends_on = r.url
+  WHERE r.depth < 4
+)
+SELECT url, CAST(min(depth) AS BIGINT) AS depth FROM r GROUP BY url
+"""
 
     def kg_inbound_refs(spark, sf):
         from ferenda_spark.operators.resolve import inbound_references
         e = _kg_edges(spark, sf)
         pages = _pages(spark, sf).select("url")
         return inbound_references(e, pages)
-    q["kg_inbound_refs"] = kg_inbound_refs
+    reg["kg_inbound_refs"] = kg_inbound_refs, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte}
+SELECT DISTINCT t.target_url AS subj,
+       'dcterms:isReferencedBy' AS pred, c.subj AS obj
+FROM c JOIN t ON c.basefile = t.basefile
+"""
 
     def kg_facet_statistics(spark, sf):
         from ferenda_spark.functions.facets import Facet, facet_statistics
@@ -1167,14 +2018,41 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                   Facet("dcterms:issued", "year"),
                   Facet("dcterms:title", "firstletter")]
         return _longify(facet_statistics(e, facets))
-    q["kg_facet_statistics"] = kg_facet_statistics
+    reg["kg_facet_statistics"] = kg_facet_statistics, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+wide AS (
+  SELECT subj,
+         max(CASE WHEN pred = 'rdf:type' THEN obj END) AS type,
+         substr(max(CASE WHEN pred = 'dcterms:issued' THEN obj END),
+                1, 4) AS issued_year,
+         substr(lower(trim(max(CASE WHEN pred = 'dcterms:title'
+                                    THEN obj END))), 1, 1)
+             AS title_firstletter
+  FROM golden GROUP BY subj)
+SELECT 'type' AS facet, type AS value, count(*) AS n
+FROM wide GROUP BY type
+UNION ALL
+SELECT 'issued_year', issued_year, count(*) FROM wide GROUP BY issued_year
+UNION ALL
+SELECT 'title_firstletter', title_firstletter, count(*)
+FROM wide GROUP BY title_firstletter
+"""
 
     def kg_facet_projection(spark, sf):
         e = _kg_edges(spark, sf)
         return analytics.facet_projection(
             e, ["rdf:type", "dcterms:title", "dcterms:identifier",
                 "dcterms:issued", "dcterms:publisher"])
-    q["kg_facet_projection"] = kg_facet_projection
+    reg["kg_facet_projection"] = kg_facet_projection, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT subj AS uri,
+       max(CASE WHEN pred = 'rdf:type' THEN obj END) AS type,
+       max(CASE WHEN pred = 'dcterms:title' THEN obj END) AS title,
+       max(CASE WHEN pred = 'dcterms:identifier' THEN obj END) AS identifier,
+       max(CASE WHEN pred = 'dcterms:issued' THEN obj END) AS issued,
+       max(CASE WHEN pred = 'dcterms:publisher' THEN obj END) AS publisher
+FROM golden GROUP BY subj
+"""
 
     def kg_sql_citations(spark, sf):
         # the SQL query surface (SURVEY Q2): plain spark.sql over the
@@ -1185,7 +2063,12 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             FROM edge
             WHERE pred = 'dcterms:references' AND obj LIKE '%#S%'
             GROUP BY obj""")
-    q["kg_sql_citations"] = kg_sql_citations
+    reg["kg_sql_citations"] = kg_sql_citations, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT obj AS target, count(*) AS n FROM golden
+WHERE pred = 'dcterms:references' AND obj LIKE '%#S%'
+GROUP BY obj
+"""
 
     def kg_sparql_annotations(spark, sf):
         """The SPARQL query surface (SURVEY Q3): the reference's
@@ -1206,7 +2089,52 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         uri = edges.filter(F.col("pred") == "rfc:updates") \
                    .agg(F.min("obj")).collect()[0][0]
         return sparql_query(edges, RFC_ANNOTATIONS_RQ, {"uri": uri})
-    q["kg_sparql_annotations"] = kg_sparql_annotations
+    # rfc-annotations.rq semantics over golden: literal self-metadata,
+    # transitive referencer metadata (minus unrelated references),
+    # updater/obsoleter metadata, inverse isUpdatedBy/isObsoletedBy/
+    # isReferencedBy links — target = the smallest rfc:updates obj
+    reg["kg_sparql_annotations"] = kg_sparql_annotations, f"""
+WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE},
+tgt AS (SELECT min(obj) AS uri FROM golden WHERE pred = 'rfc:updates'),
+refs AS (
+  SELECT g.subj FROM golden g, tgt
+  WHERE g.pred = 'dcterms:references' AND g.obj = tgt.uri
+  UNION
+  SELECT g.subj FROM golden g JOIN refs r ON g.obj = r.subj
+  WHERE g.pred = 'dcterms:references'
+),
+upd AS (
+  SELECT g.subj, g.pred AS via FROM golden g, tgt
+  WHERE g.obj = tgt.uri AND g.pred IN ('rfc:updates', 'rfc:obsoletes')
+)
+SELECT DISTINCT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang
+FROM (
+  SELECT g.* FROM golden g, tgt WHERE g.subj = tgt.uri AND g.obj_is_literal
+  UNION ALL
+  SELECT g.* FROM golden g JOIN refs r ON g.subj = r.subj, tgt
+  WHERE g.pred != 'dcterms:references' OR g.obj LIKE tgt.uri || '%'
+  UNION ALL
+  -- SPARQL semantics: ?referencer only binds alongside a surviving
+  -- (?p, ?o) solution in the same group — a referencer whose every
+  -- triple is a dcterms:references to a non-prefix target emits NO
+  -- isReferencedBy link (ADVICE r3: this arm was unconditional)
+  SELECT tgt.uri, 'dcterms:isReferencedBy', r.subj, FALSE,
+         CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR) FROM refs r, tgt
+  WHERE EXISTS (SELECT 1 FROM golden g
+                WHERE g.subj = r.subj
+                  AND (g.pred != 'dcterms:references'
+                       OR g.obj LIKE tgt.uri || '%'))
+  UNION ALL
+  SELECT g.* FROM golden g JOIN upd u ON g.subj = u.subj
+  WHERE g.pred != 'dcterms:references'
+  UNION ALL
+  SELECT tgt.uri,
+         CASE WHEN u.via = 'rfc:obsoletes' THEN 'rfc:isObsoletedBy'
+              ELSE 'rfc:isUpdatedBy' END,
+         u.subj, FALSE, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
+  FROM upd u, tgt
+)
+"""
 
     def kg_sparql_describe(spark, sf):
         """The reference's default annotations.rq (res/sparql/
@@ -1215,7 +2143,28 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from ferenda_spark.operators.sparql import construct_annotations
         return construct_annotations(
             _kg_edges(spark, sf), BASE + "res/doc/0")
-    q["kg_sparql_describe"] = kg_sparql_describe
+    reg["kg_sparql_describe"] = kg_sparql_describe, f"""
+WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE},
+parts AS (
+  SELECT 'https://example.org/res/doc/0' AS p
+  UNION
+  SELECT g.subj FROM golden g JOIN parts pp ON g.obj = pp.p
+  WHERE g.pred = 'dcterms:isPartOf'
+)
+SELECT DISTINCT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang
+FROM (
+  SELECT g.* FROM golden g JOIN parts p ON g.subj = p.p
+  UNION ALL
+  SELECT g.* FROM golden g
+  WHERE g.subj IN (SELECT c.subj FROM golden c JOIN parts p ON c.obj = p.p
+                   WHERE c.pred = 'dcterms:references')
+  UNION ALL
+  SELECT c.obj, 'dcterms:isReferencedBy', c.subj, FALSE,
+         CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
+  FROM golden c JOIN parts p ON c.obj = p.p
+  WHERE c.pred = 'dcterms:references'
+)
+"""
 
     def kg_sparql_describe_form(spark, sf):
         """Q3 (round-4): the real DESCRIBE query form — concise
@@ -1231,7 +2180,20 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "DESCRIBE <%(uri)s> ?d WHERE "
             "{ ?d dcterms:isPartOf <%(uri)s> . }",
             {"uri": BASE + "res/doc/3"}))
-    q["kg_sparql_describe_form"] = kg_sparql_describe_form
+    # annotations.rq semantics for doc 0: triples of the doc and its
+    # isPartOf* descendants, plus isReferencedBy onto cited parts
+    reg["kg_sparql_describe_form"] = kg_sparql_describe_form, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+subs AS (
+  SELECT 'https://example.org/res/doc/3' AS subj
+  UNION
+  SELECT subj FROM golden
+  WHERE pred = 'dcterms:isPartOf'
+    AND obj = 'https://example.org/res/doc/3')
+SELECT DISTINCT g.subj, g.pred, g.obj, g.obj_is_literal,
+       g.obj_datatype, g.obj_lang
+FROM golden g JOIN subs USING (subj)
+"""
 
     def kg_sparql_subdocs(spark, sf):
         """The reference's describe-with-subdocs.rq shape
@@ -1261,7 +2223,44 @@ WHERE {
   FILTER(STRSTARTS(STR(?target), "%(uri)s#"))
 }
 """, {"uri": uri})
-    q["kg_sparql_subdocs"] = kg_sparql_subdocs
+    # describe-with-subdocs.rq: referencers of the hub's fragments,
+    # root = the referer's document (the only isPartOf* ancestor
+    # carrying dcterms:identifier), OPTIONAL bibo:chapter decoration
+    reg["kg_sparql_subdocs"] = kg_sparql_subdocs, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+tgt AS (SELECT min(obj) AS uri FROM golden WHERE pred = 'rfc:updates'),
+refs AS (
+  SELECT DISTINCT g.subj AS referer, g.obj AS target
+  FROM golden g, tgt
+  WHERE g.pred = 'dcterms:references' AND g.obj LIKE tgt.uri || '#%'),
+root AS (
+  SELECT DISTINCT referer,
+         regexp_replace(referer, '#.*$', '') AS rootdoc FROM refs)
+SELECT DISTINCT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang
+FROM (
+  SELECT r.target AS subj, 'dcterms:isReferencedBy' AS pred,
+         r.referer AS obj, FALSE AS obj_is_literal,
+         CAST(NULL AS VARCHAR) AS obj_datatype,
+         CAST(NULL AS VARCHAR) AS obj_lang FROM refs r
+  UNION ALL
+  SELECT rt.referer, 'dcterms:isPartOf', rt.rootdoc, FALSE, NULL, NULL
+  FROM root rt
+  UNION ALL
+  SELECT g.subj, 'bibo:chapter', g.obj, TRUE, NULL, NULL
+  FROM golden g JOIN root rt ON g.subj = rt.referer
+  WHERE g.pred = 'bibo:chapter'
+  UNION ALL
+  SELECT g.subj, 'rdf:type', g.obj, FALSE, NULL, NULL
+  FROM golden g JOIN (SELECT DISTINCT rootdoc FROM root) rd
+       ON g.subj = rd.rootdoc
+  WHERE g.pred = 'rdf:type'
+  UNION ALL
+  SELECT g.subj, 'dcterms:identifier', g.obj, TRUE, NULL, NULL
+  FROM golden g JOIN (SELECT DISTINCT rootdoc FROM root) rd
+       ON g.subj = rd.rootdoc
+  WHERE g.pred = 'dcterms:identifier'
+)
+"""
 
     def kg_sparql_topcited(spark, sf):
         """The reference's API-shaped query surface (wsgiapp.py:
@@ -1279,7 +2278,14 @@ GROUP BY ?target
 ORDER BY DESC(?n) ?target
 LIMIT 20
 """)
-    q["kg_sparql_topcited"] = kg_sparql_topcited
+    reg["kg_sparql_topcited"] = kg_sparql_topcited, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE}
+SELECT obj AS target, count(*) AS n
+FROM golden WHERE pred = 'dcterms:references'
+GROUP BY obj
+ORDER BY n DESC, target
+LIMIT 20
+"""
 
     def kg_sparql_graph_scoped(spark, sf):
         """Quad-store query: edges carry a graph column (derived:
@@ -1313,7 +2319,25 @@ GROUP BY ?s
 ORDER BY DESC(?n_std_refs) ?s
 LIMIT 20
 """)
-    q["kg_sparql_graph_scoped"] = kg_sparql_graph_scoped
+    reg["kg_sparql_graph_scoped"] = kg_sparql_graph_scoped, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+cls AS (SELECT subj AS doc,
+               CASE WHEN obj = 'bibo:Standard' THEN 'g:std'
+                    ELSE 'g:other' END AS gg
+        FROM golden
+        WHERE pred = 'rdf:type'
+          AND obj IN ('bibo:Standard', 'bibo:Report')),
+quads AS (SELECT g.subj, g.pred, g.obj,
+                 coalesce(c.gg, 'g:other') AS graph
+          FROM golden g LEFT JOIN cls c
+            ON regexp_replace(g.subj, '#.*', '') = c.doc)
+SELECT subj AS s, count(obj) AS n_std_refs
+FROM quads
+WHERE graph = 'g:std' AND pred = 'dcterms:references'
+GROUP BY subj
+ORDER BY n_std_refs DESC, s
+LIMIT 20
+"""
 
     def kg_sparql_aggregates(spark, sf):
         """The full SPARQL 1.1 aggregate set minus
@@ -1336,7 +2360,22 @@ HAVING (?n >= 2)
 ORDER BY DESC(?n) ?s
 LIMIT 25
 """)
-    q["kg_sparql_aggregates"] = kg_sparql_aggregates
+    reg["kg_sparql_aggregates"] = kg_sparql_aggregates, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+r AS (SELECT subj AS s, obj AS o FROM golden
+      WHERE pred = 'dcterms:references'),
+ch AS (SELECT subj AS s, obj AS c FROM golden
+       WHERE pred = 'bibo:chapter'),
+j AS (SELECT r.s, r.o, ch.c FROM r JOIN ch USING (s)),
+a AS (SELECT s, count(o) AS n, min(o) AS "first", max(o) AS "last",
+             sum(TRY_CAST(c AS DOUBLE)) AS chapters,
+             avg(TRY_CAST(c AS DOUBLE)) AS meanch,
+             string_agg(DISTINCT o, ', ' ORDER BY o) AS refs,
+             min(c) AS anych
+      FROM j GROUP BY s)
+SELECT s, n, "first", "last", chapters, meanch, refs, anych
+FROM a WHERE n >= 2 ORDER BY n DESC, s LIMIT 25
+"""
 
     def kg_sparql_regex_paths(spark, sf):
         """The round-5 SPARQL extensions in one gate: zero-or-one
@@ -1354,7 +2393,22 @@ SELECT DISTINCT ?s ?d WHERE {
   FILTER (regex(str(?t), "^(intro|det)", "i") && lang(?dt) = "fr")
 }
 """)
-    q["kg_sparql_regex_paths"] = kg_sparql_regex_paths
+    reg["kg_sparql_regex_paths"] = kg_sparql_regex_paths, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+step AS (SELECT subj, obj FROM golden
+         WHERE pred = 'dcterms:isPartOf' AND NOT obj_is_literal),
+nodes AS (SELECT subj AS n FROM golden
+          UNION SELECT obj FROM golden WHERE NOT obj_is_literal),
+pairs AS (SELECT subj AS s, obj AS d FROM step
+          UNION SELECT n, n FROM nodes),
+t AS (SELECT subj, obj, obj_lang FROM golden
+      WHERE pred = 'dcterms:title')
+SELECT DISTINCT p.s, p.d
+FROM pairs p
+JOIN t ts ON ts.subj = p.s
+         AND regexp_matches(lower(ts.obj), '^(intro|det)')
+JOIN t td ON td.subj = p.d AND coalesce(td.obj_lang, '') = 'fr'
+"""
 
     def kg_sparql_subquery(spark, sf):
         """Nested SELECT (SPARQL 1.1 §12, round 5): aggregate
@@ -1371,7 +2425,16 @@ SELECT ?s ?n ?ch WHERE {
   ?s bibo:chapter ?ch .
 }
 """)
-    q["kg_sparql_subquery"] = kg_sparql_subquery
+    reg["kg_sparql_subquery"] = kg_sparql_subquery, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+top10 AS (
+  SELECT subj AS s, CAST(count(*) AS BIGINT) AS n
+  FROM golden WHERE pred = 'dcterms:references'
+  GROUP BY subj ORDER BY n DESC, s LIMIT 10)
+SELECT top10.s, top10.n, g.obj AS ch
+FROM top10 JOIN golden g
+  ON g.subj = top10.s AND g.pred = 'bibo:chapter'
+"""
 
     def kg_pagerank(spark, sf):
         """Head-entity importance over the citation graph: fixed-
@@ -1386,7 +2449,20 @@ SELECT ?s ?n ?ch WHERE {
         pr = pagerank(cites, iters=3)
         return analytics.ranked_topk(
             pr, [("rank_micro", True), ("node", False)], 20)
-    q["kg_pagerank"] = kg_pagerank
+
+    reg["kg_pagerank"] = kg_pagerank, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+cites AS (
+  SELECT subj AS src, obj AS dst FROM golden
+  WHERE pred = 'dcterms:references'
+),
+{_PAGERANK_CTE}
+SELECT node, rank_micro, CAST(rn AS INT) AS rank FROM (
+  SELECT node, CAST(r // 1000000 AS BIGINT) AS rank_micro,
+         row_number() OVER (ORDER BY r // 1000000 DESC, node) AS rn
+  FROM it3)
+WHERE rn <= 20
+"""
 
     def kg_trustrank(spark, sf):
         """Seed-personalized PageRank (rank.py trustrank, the VLDB
@@ -1408,7 +2484,55 @@ SELECT ?s ?n ?ch WHERE {
         tr = trustrank(cites, seeds, iters=3)
         return analytics.ranked_topk(
             tr, [("trust_micro", True), ("node", False)], 20)
-    q["kg_trustrank"] = kg_trustrank
+
+    # one TrustRank iteration: kg_pagerank's arithmetic with the
+    # teleport personalized to the seed flag — base term and dangling
+    # share land ONLY on seeds (rank.py trustrank, VLDB 2004 scheme)
+    _tr_iter = """
+it{i} AS (
+  SELECT n.node, n.is_seed,
+         CAST(CASE WHEN n.is_seed THEN {base} ELSE 0 END
+              + (85 * (COALESCE(s.inc, 0) +
+                 CASE WHEN n.is_seed THEN
+                   (SELECT COALESCE(sum(r.r), 0) FROM it{prev} r
+                    WHERE r.node NOT IN (SELECT src FROM cites))
+                   // (SELECT s FROM ns)
+                 ELSE 0 END)) // 100 AS BIGINT) AS r
+  FROM trnodes n LEFT JOIN (
+    SELECT c.dst AS node, CAST(sum(r.r // o.outdeg) AS BIGINT) AS inc
+    FROM cites c JOIN it{prev} r ON c.src = r.node
+                 JOIN outd o ON c.src = o.src
+    GROUP BY c.dst) s ON s.node = n.node
+)"""
+    _tr_base = "(SELECT 15 * (1000000000000 // s) // 100 FROM ns)"
+    reg["kg_trustrank"] = kg_trustrank, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+cites AS (
+  SELECT subj AS src, obj AS dst FROM golden
+  WHERE pred = 'dcterms:references'
+),
+seeds AS (
+  SELECT dst AS node FROM cites GROUP BY dst HAVING count(*) >= 5
+),
+trnodes AS (
+  SELECT p.node, p.node IN (SELECT node FROM seeds) AS is_seed
+  FROM (SELECT src AS node FROM cites UNION SELECT dst FROM cites) p
+),
+ns AS (SELECT count(*) AS s FROM seeds),
+outd AS (SELECT src, count(*) AS outdeg FROM cites GROUP BY src),
+it0 AS (SELECT node, is_seed,
+               CAST(CASE WHEN is_seed THEN
+                 (SELECT 1000000000000 // s FROM ns) ELSE 0 END
+                 AS BIGINT) AS r FROM trnodes),
+{_tr_iter.format(i=1, prev=0, base=_tr_base)},
+{_tr_iter.format(i=2, prev=1, base=_tr_base)},
+{_tr_iter.format(i=3, prev=2, base=_tr_base)}
+SELECT node, trust_micro, CAST(rn AS INT) AS rank FROM (
+  SELECT node, CAST(r // 1000000 AS BIGINT) AS trust_micro,
+         row_number() OVER (ORDER BY r // 1000000 DESC, node) AS rn
+  FROM it3)
+WHERE rn <= 20
+"""
 
     def kg_hits(spark, sf):
         """Hubs-and-authorities over the citation graph: 2-iteration
@@ -1425,7 +2549,51 @@ SELECT ?s ?n ?ch WHERE {
         return analytics.ranked_topk(
             hs, [("auth_micro", True), ("hub_micro", True),
                  ("node", False)], 20)
-    q["kg_hits"] = kg_hits
+
+    # one HITS iteration: authority raw-sum + L1 renorm, then hub
+    # raw-sum + L1 renorm — integer semantics identical to rank.hits
+    # (sums exact, renorm = raw * 10^6 floor-div total in HUGEINT)
+    _hits_iter = """
+a{i}r AS (
+  SELECT n.node, CAST(COALESCE(s.a, 0) AS BIGINT) AS a
+  FROM hnodes n LEFT JOIN (
+    SELECT c.dst AS node, sum(h.h) AS a
+    FROM cites c JOIN h{prev} h ON c.src = h.node GROUP BY c.dst) s
+  ON s.node = n.node),
+a{i} AS (
+  SELECT node, CAST(CASE WHEN (SELECT sum(a) FROM a{i}r) > 0
+    THEN CAST(a AS HUGEINT) * 1000000 // (SELECT sum(a) FROM a{i}r)
+    ELSE 0 END AS BIGINT) AS a FROM a{i}r),
+h{i}r AS (
+  SELECT n.node, CAST(COALESCE(s.h, 0) AS BIGINT) AS h
+  FROM hnodes n LEFT JOIN (
+    SELECT c.src AS node, sum(a.a) AS h
+    FROM cites c JOIN a{i} a ON c.dst = a.node GROUP BY c.src) s
+  ON s.node = n.node),
+h{i} AS (
+  SELECT node, CAST(CASE WHEN (SELECT sum(h) FROM h{i}r) > 0
+    THEN CAST(h AS HUGEINT) * 1000000 // (SELECT sum(h) FROM h{i}r)
+    ELSE 0 END AS BIGINT) AS h FROM h{i}r)"""
+    # MATERIALIZED: each iteration references cites/hnodes several
+    # times; without it DuckDB inlines the whole golden-triples CTE
+    # chain once per reference and exhausts file handles
+    reg["kg_hits"] = kg_hits, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+cites AS MATERIALIZED (
+  SELECT subj AS src, obj AS dst FROM golden
+  WHERE pred = 'dcterms:references'
+),
+hnodes AS MATERIALIZED (
+  SELECT src AS node FROM cites UNION SELECT dst FROM cites),
+h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM hnodes),
+{_hits_iter.format(i=1, prev=0)},
+{_hits_iter.format(i=2, prev=1)}
+SELECT node, hub_micro, auth_micro, CAST(rn AS INT) AS rank FROM (
+  SELECT h.node, h.h AS hub_micro, a.a AS auth_micro,
+         row_number() OVER (ORDER BY a.a DESC, h.h DESC, h.node) AS rn
+  FROM h2 h JOIN a2 a ON h.node = a.node)
+WHERE rn <= 20
+"""
 
     def kg_triangles(spark, sf):
         """Community structure of the citation graph: per-node
@@ -1443,7 +2611,37 @@ SELECT ?s ?n ?ch WHERE {
                .select(F.col("subj").alias("src"),
                        F.col("obj").alias("dst")))
         return triangles(rel)
-    q["kg_triangles"] = kg_triangles
+    # triangles: the oracle enumerates each triangle a<b<c exactly
+    # once over the canonical undirected edge set — value-equal to
+    # the engine's degree-ordered enumeration
+    reg["kg_triangles"] = kg_triangles, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+und AS MATERIALIZED (
+  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
+  FROM golden
+  WHERE pred IN ('dcterms:references', 'dcterms:isPartOf',
+                 'rfc:updates', 'rfc:obsoletes')
+    AND subj <> obj),
+deg AS MATERIALIZED (
+  SELECT node, count(*) AS degree FROM (
+    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
+  GROUP BY 1),
+tri AS MATERIALIZED (
+  SELECT e1.u AS a, e1.v AS b, e2.v AS c
+  FROM und e1
+  JOIN und e2 ON e1.v = e2.u
+  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v),
+per_node AS (
+  SELECT node, count(*) AS n_triangles FROM (
+    SELECT a AS node FROM tri UNION ALL
+    SELECT b FROM tri UNION ALL
+    SELECT c FROM tri)
+  GROUP BY 1)
+SELECT p.node, d.degree, p.n_triangles,
+       (2000 * p.n_triangles) // (d.degree * (d.degree - 1))
+         AS coeff_milli
+FROM per_node p JOIN deg d ON p.node = d.node
+"""
 
     def kg_linkpred(spark, sf):
         """Missing-citation prediction: Resource-Allocation index
@@ -1460,7 +2658,35 @@ SELECT ?s ?n ?ch WHERE {
         ra = link_prediction_ra(cites)
         return analytics.ranked_topk(
             ra, [("score_micro", True), ("u", False), ("v", False)], 50)
-    q["kg_linkpred"] = kg_linkpred
+    reg["kg_linkpred"] = kg_linkpred, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+und AS MATERIALIZED (
+  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
+  FROM golden WHERE pred = 'dcterms:references' AND subj <> obj),
+deg AS MATERIALIZED (
+  SELECT node, count(*) AS degree FROM (
+    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
+  GROUP BY 1),
+adj AS (SELECT u AS w, v AS n FROM und
+        UNION ALL SELECT v, u FROM und),
+mids AS (SELECT a.w, a.n, d.degree FROM adj a
+         JOIN deg d ON a.w = d.node WHERE d.degree <= 50),
+cand AS (
+  SELECT a1.n AS u, a2.n AS v, a1.degree
+  FROM mids a1 JOIN (SELECT w, n FROM mids) a2
+    ON a1.w = a2.w AND a1.n < a2.n),
+scored AS (
+  SELECT u, v, CAST(sum(1000000 // degree) AS BIGINT) AS score_micro,
+         count(*) AS n_common
+  FROM cand GROUP BY 1, 2),
+fresh AS (
+  SELECT s.* FROM scored s
+  WHERE NOT EXISTS (SELECT 1 FROM und
+                    WHERE und.u = s.u AND und.v = s.v))
+SELECT u, v, score_micro, n_common, rank FROM (
+  SELECT *, row_number() OVER (ORDER BY score_micro DESC, u, v)
+    AS rank FROM fresh) WHERE rank <= 50
+"""
 
     def kg_communities(spark, sf):
         """Citation-graph communities: 2 rounds of synchronous label
@@ -1473,7 +2699,32 @@ SELECT ?s ?n ?ch WHERE {
                  .select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")))
         return label_propagation(cites)
-    q["kg_communities"] = kg_communities
+    # LPA: both rounds restated with the general argmax form
+    # (cnt DESC, label ASC), labels initialized to the node id
+    reg["kg_communities"] = kg_communities, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+und AS MATERIALIZED (
+  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
+  FROM golden WHERE pred = 'dcterms:references' AND subj <> obj),
+adj AS MATERIALIZED (
+  SELECT u AS node, v AS nbr FROM und
+  UNION ALL SELECT v, u FROM und),
+c1 AS (SELECT a.node, a.nbr AS label, count(*) AS cnt
+       FROM adj a GROUP BY 1, 2),
+l1 AS MATERIALIZED (
+  SELECT node, label FROM (
+    SELECT node, label, row_number() OVER (
+      PARTITION BY node ORDER BY cnt DESC, label) AS rn FROM c1)
+  WHERE rn = 1),
+c2 AS (SELECT a.node, l1.label, count(*) AS cnt
+       FROM adj a JOIN l1 ON a.nbr = l1.node GROUP BY 1, 2),
+l2 AS (
+  SELECT node, label FROM (
+    SELECT node, label, row_number() OVER (
+      PARTITION BY node ORDER BY cnt DESC, label) AS rn FROM c2)
+  WHERE rn = 1)
+SELECT node, label FROM l2
+"""
 
     def kg_kcore(spark, sf):
         """2-core of the citation graph after exactly 3 peel rounds
@@ -1486,7 +2737,35 @@ SELECT ?s ?n ?ch WHERE {
                  .select(F.col("subj").alias("src"),
                          F.col("obj").alias("dst")))
         return k_core(cites, k=2)
-    q["kg_kcore"] = kg_kcore
+    # three unrolled peel rounds (round = degree census -> keep >= 2
+    # -> edges with both endpoints kept); identity rounds harmless
+    reg["kg_kcore"] = kg_kcore, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+e0 AS MATERIALIZED (
+  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
+  FROM golden WHERE pred = 'dcterms:references' AND subj <> obj),
+k1 AS (SELECT node FROM (
+         SELECT u AS node FROM e0 UNION ALL SELECT v FROM e0)
+       GROUP BY node HAVING count(*) >= 2),
+e1 AS MATERIALIZED (
+  SELECT u, v FROM e0 WHERE u IN (SELECT node FROM k1)
+                        AND v IN (SELECT node FROM k1)),
+k2 AS (SELECT node FROM (
+         SELECT u AS node FROM e1 UNION ALL SELECT v FROM e1)
+       GROUP BY node HAVING count(*) >= 2),
+e2 AS MATERIALIZED (
+  SELECT u, v FROM e1 WHERE u IN (SELECT node FROM k2)
+                        AND v IN (SELECT node FROM k2)),
+k3 AS (SELECT node FROM (
+         SELECT u AS node FROM e2 UNION ALL SELECT v FROM e2)
+       GROUP BY node HAVING count(*) >= 2),
+e3 AS MATERIALIZED (
+  SELECT u, v FROM e2 WHERE u IN (SELECT node FROM k3)
+                        AND v IN (SELECT node FROM k3))
+SELECT node, count(*) AS degree FROM (
+  SELECT u AS node FROM e3 UNION ALL SELECT v FROM e3)
+GROUP BY node
+"""
 
     def kg_cocitation(spark, sf):
         """Co-citation + bibliographic coupling (rank.py): the two
@@ -1507,7 +2786,26 @@ SELECT ?s ?n ?ch WHERE {
               .select(F.lit("couple").alias("kind"), "a", "b",
                       F.col("n_shared").alias("n")))
         return cc.unionByName(bc)
-    q["kg_cocitation"] = kg_cocitation
+    # both wedge directions with the same 50-fanout center cap
+    reg["kg_cocitation"] = kg_cocitation, f"""
+WITH {_F_CTE}, {_TRIPLES_CTE},
+cites AS MATERIALIZED (
+  SELECT DISTINCT subj AS src, obj AS dst FROM golden
+  WHERE pred = 'dcterms:references'),
+oksrc AS (SELECT src FROM cites GROUP BY src HAVING count(*) <= 50),
+okdst AS (SELECT dst FROM cites GROUP BY dst HAVING count(*) <= 50),
+cs AS (SELECT c.src, c.dst FROM cites c
+       JOIN oksrc USING (src)),
+cd AS (SELECT c.src, c.dst FROM cites c
+       JOIN okdst USING (dst))
+SELECT 'cocite' AS kind, l.dst AS a, r.dst AS b, count(*) AS n
+FROM cs l JOIN cs r ON l.src = r.src AND l.dst < r.dst
+GROUP BY l.dst, r.dst
+UNION ALL
+SELECT 'couple', l.src, r.src, count(*)
+FROM cd l JOIN cd r ON l.dst = r.dst AND l.src < r.src
+GROUP BY l.src, r.src
+"""
 
     def kg_publisher_stats(spark, sf):
         e = _kg_edges(spark, sf)
@@ -1515,7 +2813,11 @@ SELECT ?s ?n ?ch WHERE {
             e.filter(F.col("pred") == "dcterms:publisher")
             .groupBy(F.col("obj").alias("publisher"))
             .agg(F.countDistinct("subj").alias("n_docs")))
-    q["kg_publisher_stats"] = kg_publisher_stats
+    reg["kg_publisher_stats"] = kg_publisher_stats, f"""
+WITH {_F_CTE}
+SELECT {_PUB_URI} AS publisher, count(DISTINCT url) AS n_docs
+FROM f GROUP BY 1
+"""
 
     # ---- relational / analytics -----------------------------------------
     def q1_pricing(spark, sf):
@@ -1531,7 +2833,16 @@ SELECT ?s ?n ?ch WHERE {
                  .alias("sum_disc_price"),
                  F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
                  F.count(F.lit(1)).alias("count_order")))
-    q["q1_pricing"] = q1_pricing
+    reg["q1_pricing"] = q1_pricing, """
+SELECT l_returnflag, l_linestatus,
+       round(sum(l_quantity), 2) AS sum_qty,
+       round(sum(l_extendedprice), 2) AS sum_base_price,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+       round(avg(l_quantity), 4) AS avg_qty,
+       count(*) AS count_order
+FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
+GROUP BY l_returnflag, l_linestatus
+"""
 
     def q3_shipping(spark, sf):
         c = load_table(spark, sf, "customer").filter(
@@ -1551,7 +2862,23 @@ SELECT ?s ?n ?ch WHERE {
         # TakeOrdered top-10, not a global ranking window
         return _longify(analytics.ranked_topk(
             rev, [("revenue", True), ("l_orderkey", False)], 10))
-    q["q3_shipping"] = q3_shipping
+    reg["q3_shipping"] = q3_shipping, """
+WITH rev AS (
+  SELECT l_orderkey,
+         CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS orderdate,
+         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+  FROM lineitem
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  WHERE c_mktsegment = 'BUILDING'
+    AND CAST(o_orderdate AS DATE) < DATE '1998-06-01'
+    AND CAST(l_shipdate AS DATE) >= DATE '1998-06-01'
+  GROUP BY 1, 2)
+SELECT * FROM (
+  SELECT l_orderkey, orderdate, revenue,
+         row_number() OVER (ORDER BY revenue DESC, l_orderkey) AS rank
+  FROM rev) WHERE rank <= 10
+"""
 
     def q5_local_supplier(spark, sf):
         c = load_table(spark, sf, "customer")
@@ -1574,7 +2901,19 @@ SELECT ?s ?n ?ch WHERE {
                                * (1 - F.col("l_discount"))), 2)
                  .alias("revenue"),
                  F.count(F.lit(1)).alias("n_lineitems")))
-    q["q5_local_supplier"] = q5_local_supplier
+    reg["q5_local_supplier"] = q5_local_supplier, """
+SELECT r_name, n_name,
+       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       count(*) AS n_lineitems
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+WHERE c_nationkey = s_nationkey
+GROUP BY r_name, n_name
+"""
 
     def facet_stats_cube(spark, sf):
         o = load_table(spark, sf, "orders")
@@ -1582,7 +2921,12 @@ SELECT ?s ?n ?ch WHERE {
             o, ["o_orderstatus", "o_orderpriority"])
             .withColumn("grouping_mask",
                         F.col("grouping_mask").cast("long")))
-    q["facet_stats_cube"] = facet_stats_cube
+    reg["facet_stats_cube"] = facet_stats_cube, """
+SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+       CAST(grouping(o_orderstatus) * 1
+            + grouping(o_orderpriority) * 2 AS BIGINT) AS grouping_mask
+FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+"""
 
     def topk_orders(spark, sf):
         o = load_table(spark, sf, "orders")
@@ -1590,14 +2934,27 @@ SELECT ?s ?n ?ch WHERE {
             o.select("o_orderpriority", "o_orderkey", "o_totalprice"),
             ["o_orderpriority"], "o_totalprice", 3)
         return _longify(top)
-    q["topk_orders"] = topk_orders
+    reg["topk_orders"] = topk_orders, """
+SELECT * FROM (
+  SELECT o_orderpriority, o_orderkey, o_totalprice,
+         row_number() OVER (PARTITION BY o_orderpriority
+                            ORDER BY o_totalprice DESC, o_orderkey) AS rank
+  FROM orders) WHERE rank <= 3
+"""
 
     def events_pagination(spark, sf):
         e = load_table(spark, sf, "events")
         return _longify(analytics.paginate(
             e.select("event_id", "event_type", "ts"), "event_type", "ts")
             .select("event_id", "event_type", "rn", "page"))
-    q["events_pagination"] = events_pagination
+    reg["events_pagination"] = events_pagination, """
+SELECT event_id, event_type,
+       row_number() OVER (PARTITION BY event_type ORDER BY ts DESC) AS rn,
+       CAST(floor((row_number() OVER (PARTITION BY event_type
+                                      ORDER BY ts DESC) - 1) / 100)
+            AS BIGINT) AS page
+FROM events
+"""
 
     def asof_purchase_click(spark, sf):
         e = load_table(spark, sf, "events")
@@ -1610,14 +2967,31 @@ SELECT ?s ?n ?ch WHERE {
             F.col("event_id").alias("purchase_event"),
             "user_id",
             F.col("asof_event_id").alias("click_event")))
-    q["asof_purchase_click"] = asof_purchase_click
+    reg["asof_purchase_click"] = asof_purchase_click, """
+SELECT a.event_id AS purchase_event, a.user_id, b.event_id AS click_event
+FROM (SELECT * FROM events WHERE event_type = 'purchase') a
+ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') b
+  ON a.user_id = b.user_id AND a.ts >= b.ts
+"""
 
     def sessionize_events(spark, sf):
         e = load_table(spark, sf, "events")
         return _longify(analytics.sessionize(
             e.select("event_id", "user_id", "ts"))
             .select("event_id", "user_id", "session_id"))
-    q["sessionize_events"] = sessionize_events
+    reg["sessionize_events"] = sessionize_events, """
+WITH flagged AS (
+  SELECT event_id, user_id, ts,
+         CASE WHEN lag(ts) OVER w IS NULL THEN 1
+              WHEN CAST(floor(epoch(ts)) AS BIGINT)
+                   - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
+              THEN 1 ELSE 0 END AS n
+  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+SELECT event_id, user_id,
+       CAST(sum(n) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+FROM flagged
+"""
 
     def range_filters(spark, sf):
         e = load_table(spark, sf, "events")
@@ -1628,7 +3002,12 @@ SELECT ?s ?n ?ch WHERE {
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.round(F.sum("value"), 2).alias("total_value")))
-    q["range_filters"] = range_filters
+    reg["range_filters"] = range_filters, """
+SELECT event_type, count(*) AS n, round(sum(value), 2) AS total_value
+FROM events
+WHERE value BETWEEN 5 AND 20 AND year(ts) = 2024 AND event_type LIKE '%i%'
+GROUP BY event_type
+"""
 
     def setops_users(spark, sf):
         e = load_table(spark, sf, "events")
@@ -1637,7 +3016,11 @@ SELECT ?s ?n ?ch WHERE {
         erroring = e.filter((F.col("event_type") == "error")
                             & (F.col("value") > 200)).select("user_id")
         return buyers.subtract(erroring)
-    q["setops_users"] = setops_users
+    reg["setops_users"] = setops_users, """
+SELECT user_id FROM events WHERE event_type = 'purchase' AND value > 200
+EXCEPT
+SELECT user_id FROM events WHERE event_type = 'error' AND value > 200
+"""
 
     def natural_sort_parts(spark, sf):
         p = load_table(spark, sf, "part")
@@ -1651,12 +3034,30 @@ SELECT ?s ?n ?ch WHERE {
         return _longify(analytics.global_rank(
             df, [natural_sort_key_col(F.col("label")),
                  F.asc("p_partkey")]))
-    q["natural_sort_parts"] = natural_sort_parts
+    reg["natural_sort_parts"] = natural_sort_parts, """
+SELECT p_partkey,
+       'item ' || CAST(p_size AS VARCHAR) || ' rev '
+           || CAST(p_partkey % 10 AS VARCHAR) AS label,
+       row_number() OVER (ORDER BY p_size, p_partkey % 10, p_partkey) AS rank
+FROM part
+"""
 
     # ---- training-data ops ----------------------------------------------
     def dedup_exact_docs(spark, sf):
         return _longify(dedup.exact_dedup(_dup_corpus(spark, sf, 100)))
-    q["dedup_exact_docs"] = dedup_exact_docs
+
+    _corpus = """
+corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 10000000, text FROM documents WHERE doc_id < 100
+)"""
+    reg["dedup_exact_docs"] = dedup_exact_docs, f"""
+WITH {_corpus}
+SELECT md5(text) AS text_md5, min(doc_id) AS keeper_id,
+       count(*) AS n_copies
+FROM corpus GROUP BY 1
+"""
 
     def dedup_jaccard(spark, sf):
         """Both jaccard_pairs semantics in ONE gate, tagged by
@@ -1672,7 +3073,38 @@ SELECT ?s ?n ?ch WHERE {
             .unionByName(
                 dedup.jaccard_pairs(corpus, max_df=20)
                 .withColumn("variant", F.lit("capped"))))
-    q["dedup_jaccard"] = dedup_jaccard
+
+    _near_corpus = """
+corpus AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 150
+  UNION ALL
+  SELECT doc_id + 10000000, 'near duplicate copy ' || text
+  FROM documents WHERE doc_id < 100
+)"""
+    words_c = _WORDS.format(c="text")
+    _jac_default = f"""
+WITH {_near_corpus},
+t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
+e AS (SELECT id, unnest(sh) AS shingle FROM t),
+{_JACCARD_SCORES}
+SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.8
+"""
+    _jac_capped = f"""
+WITH {_near_corpus},
+t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
+e0 AS (SELECT id, unnest(sh) AS shingle FROM t),
+hot AS (SELECT shingle FROM (
+          SELECT shingle, count(*) AS df FROM e0 GROUP BY 1)
+        WHERE df > 20),
+e AS (SELECT * FROM e0 WHERE shingle NOT IN (SELECT shingle FROM hot)),
+{_JACCARD_SCORES}
+SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.8
+"""
+    reg["dedup_jaccard"] = dedup_jaccard, f"""
+SELECT id_a, id_b, jaccard, 'default' AS variant FROM ({_jac_default})
+UNION ALL
+SELECT id_a, id_b, jaccard, 'capped' AS variant FROM ({_jac_capped})
+"""
 
     def containment_docs(spark, sf):
         """Directed near-containment (dedup.containment_pairs): 120-
@@ -1690,7 +3122,35 @@ SELECT ?s ?n ?ch WHERE {
             F.substring("text", 1, 120).alias("text"))
         return _longify(dedup.containment_pairs(
             docs.unionByName(excerpts)))
-    q["containment_docs"] = containment_docs
+    # directed containment from the same shingle arithmetic: one a<b
+    # intersection, both directions divided by their own size (the
+    # max_df=1000 default is non-binding on this 210-doc corpus)
+    reg["containment_docs"] = containment_docs, f"""
+WITH corpus AS (
+  SELECT doc_id, text FROM documents WHERE doc_id < 150
+  UNION ALL
+  SELECT doc_id + 10000000, substr(text, 1, 120)
+  FROM documents WHERE doc_id < 60
+),
+t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
+e AS (SELECT id, unnest(sh) AS shingle FROM t),
+sz AS (SELECT id, count(*) AS sz FROM e GROUP BY id),
+inter AS (
+  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
+  FROM e a JOIN e b ON a.shingle = b.shingle AND a.id < b.id
+  GROUP BY 1, 2),
+bothdir AS (
+  SELECT id_a, id_b, n_inter, sa.sz AS sz_a, sb.sz AS sz_b
+  FROM inter
+  JOIN sz sa ON sa.id = inter.id_a
+  JOIN sz sb ON sb.id = inter.id_b)
+SELECT id_part, id_whole, containment FROM (
+  SELECT id_a AS id_part, id_b AS id_whole,
+         round(n_inter / sz_a, 4) AS containment FROM bothdir
+  UNION ALL
+  SELECT id_b, id_a, round(n_inter / sz_b, 4) FROM bothdir)
+WHERE containment >= 0.7
+"""
 
     def cms_heavy_hitters_docs(spark, sf):
         """Count-Min sketch (operators/sketch.py): the d=4 × w=512
@@ -1712,7 +3172,40 @@ SELECT ?s ?n ?ch WHERE {
                .localCheckpoint(eager=True))
         est = cms_lookup(sk, top.select("key"))
         return top.join(est, "key").select("key", "exact", "est")
-    q["cms_heavy_hitters_docs"] = cms_heavy_hitters_docs
+    # the identical Count-Min arithmetic (sketch.py): md5 fold mod
+    # the Mersenne prime, the (a_i·h + b_i) mod p mod w family,
+    # min-of-d-counters estimate — bit-exact counters, no tolerance
+    reg["cms_heavy_hitters_docs"] = cms_heavy_hitters_docs, f"""
+WITH toks AS (
+  SELECT unnest({_WORDS.format(c='text')}) AS key
+  FROM documents WHERE doc_id < 200),
+h AS (
+  SELECT key,
+         CAST(concat('0x', substr(md5(key), 1, 15)) AS BIGINT)
+         % 2147483647 AS h60
+  FROM toks),
+cells AS (
+  SELECT g.r AS row,
+         ((((2654435761 * (g.r + 1)) % 2147483647) * h60
+           + (40503 * (g.r + 1) + 17) % 2147483647)
+          % 2147483647) % 512 AS col
+  FROM h, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS r) g),
+sketch AS (SELECT row, col, count(*) AS cnt FROM cells GROUP BY 1, 2),
+exact AS (SELECT key, count(*) AS exact FROM toks GROUP BY key),
+top AS (SELECT key, exact FROM exact ORDER BY exact DESC, key LIMIT 20),
+pos AS (
+  SELECT t.key, t.exact, g.r AS row,
+         ((((2654435761 * (g.r + 1)) % 2147483647)
+           * (CAST(concat('0x', substr(md5(t.key), 1, 15)) AS BIGINT)
+              % 2147483647)
+           + (40503 * (g.r + 1) + 17) % 2147483647)
+          % 2147483647) % 512 AS col
+  FROM top t,
+       (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS r) g)
+SELECT p.key, p.exact, min(coalesce(s.cnt, 0)) AS est
+FROM pos p LEFT JOIN sketch s ON s.row = p.row AND s.col = p.col
+GROUP BY p.key, p.exact
+"""
 
     def winnow_fingerprints_docs(spark, sf):
         """Winnowed fingerprints (dedup.winnow_fingerprints, SIGMOD
@@ -1724,14 +3217,85 @@ SELECT ?s ?n ?ch WHERE {
         from ferenda_spark.operators.dedup import winnow_fingerprints
         docs = _docs(spark, sf).filter(F.col("doc_id") < 80)
         return _longify(winnow_fingerprints(docs))
-    q["winnow_fingerprints_docs"] = winnow_fingerprints_docs
+    # the winnowing selection replayed exactly: 5-gram md5 60-bit
+    # hashes, window-of-4 minimum, rightmost tie via reversed
+    # list_position (k=5, w=4 mirror of winnow_fingerprints)
+    reg["winnow_fingerprints_docs"] = winnow_fingerprints_docs, """
+WITH base AS (
+  SELECT doc_id AS id,
+         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+                     w -> w <> '') AS toks
+  FROM documents WHERE doc_id < 80),
+hashed AS (
+  SELECT id,
+         CASE WHEN len(toks) >= 5 THEN
+           [CAST(concat('0x', substr(md5(
+                array_to_string(toks[i:i+4], ' ')), 1, 15)) AS BIGINT)
+            for i in generate_series(1, len(toks) - 4)]
+         ELSE [] END AS h
+  FROM base),
+sel AS (
+  SELECT id,
+         [{'pos': CAST(j + (4 - list_position(
+               list_reverse(h[j:j+3]), list_min(h[j:j+3])) + 1)
+               - 1 AS BIGINT),
+           'fp': list_min(h[j:j+3])}
+          for j in generate_series(1, len(h) - 3)] AS fps
+  FROM hashed WHERE len(h) >= 4)
+SELECT DISTINCT id, s.pos AS pos, s.fp AS fp
+FROM (SELECT id, unnest(fps) AS s FROM sel)
+"""
 
     def dedup_minhash_lsh(spark, sf):
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 150) | (F.col("doc_id") >= _COPY_OFFSET))
         return _longify(dedup.minhash_dedup_pairs(
             corpus, k=8, threshold=0.8))
-    q["dedup_minhash_lsh"] = dedup_minhash_lsh
+
+    # mirrors dedup.minhash_signature: one md5 per shingle folded to a
+    # 60-bit int, then k=8 universal hashes (a_i*h + b_i) mod p
+    _p = 2147483647
+    hs_expr = ("list_transform(sh, s -> CAST(concat('0x', "
+               "substr(md5(s), 1, 15)) AS BIGINT) % " + str(_p) + ")")
+
+    sig_expr = (
+        "[list_min([(((2654435761 * (i + 1)) % {p}) * h "
+        "+ (40503 * (i + 1) + 17) % {p}) % {p} for h in hv]) "
+        "for i in generate_series(0, 7)]").format(p=_p)
+    # shared CTE block: corpus → banded-MinHash candidate pairs with
+    # verified intersections (used by dedup_minhash_lsh AND the
+    # composed curation_survivors oracle — one copy of the math)
+    _MINHASH_CTES = f"""t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
+hv AS (SELECT id, sh, {hs_expr} AS hv FROM t WHERE len(sh) > 0),
+sigs AS (SELECT id, {sig_expr} AS sig FROM hv),
+bands AS (
+  SELECT id, g.b AS band,
+         CAST(sig[2 * g.b + 1] AS VARCHAR) || '|' ||
+         CAST(sig[2 * g.b + 2] AS VARCHAR) AS band_key
+  FROM sigs, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g),
+cand AS (
+  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.band_key = b.band_key AND a.id < b.id),
+e AS (SELECT id, unnest(sh) AS shingle FROM t),
+sz AS (SELECT id, count(*) AS sz FROM e GROUP BY id),
+inter AS (
+  SELECT c.id_a, c.id_b, count(*) AS n_inter
+  FROM cand c
+  JOIN e ea ON ea.id = c.id_a
+  JOIN e eb ON eb.id = c.id_b AND ea.shingle = eb.shingle
+  GROUP BY 1, 2)"""
+
+    reg["dedup_minhash_lsh"] = dedup_minhash_lsh, f"""
+WITH {_near_corpus},
+{_MINHASH_CTES}
+SELECT id_a, id_b,
+       round(n_inter / (sa.sz + sb.sz - n_inter), 4) AS jaccard
+FROM inter
+JOIN sz sa ON sa.id = inter.id_a
+JOIN sz sb ON sb.id = inter.id_b
+WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 4) >= 0.8
+"""
 
     def dedup_incremental_docs(spark, sf):
         """Incremental (daily-batch) dedup against a persisted MinHash
@@ -1757,7 +3321,45 @@ SELECT ?s ?n ?ch WHERE {
         return _longify(
             dedup.dedup_against_index(batch, index)
             .select("doc_id"))
-    q["dedup_incremental_docs"] = dedup_incremental_docs
+
+    # incremental dedup: the same band math over a named source
+    def _bands_cte(src: str, pre: str) -> str:
+        return f"""{pre}t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM {src}),
+{pre}hv AS (SELECT id, {hs_expr} AS hv FROM {pre}t WHERE len(sh) > 0),
+{pre}sig AS (SELECT id, {sig_expr} AS sig FROM {pre}hv),
+{pre}bands AS (
+  SELECT id, g.b AS band,
+         CAST(sig[2 * g.b + 1] AS VARCHAR) || '|' ||
+         CAST(sig[2 * g.b + 2] AS VARCHAR) AS band_key
+  FROM {pre}sig,
+       (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g)"""
+
+    reg["dedup_incremental_docs"] = dedup_incremental_docs, f"""
+WITH hist AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
+fresh AS (SELECT doc_id, text FROM documents
+          WHERE doc_id >= 300 AND doc_id < 450),
+batch AS (
+  SELECT doc_id, text FROM fresh
+  UNION ALL
+  SELECT doc_id + {_COPY_OFFSET}, 'near duplicate copy ' || text
+  FROM documents WHERE doc_id < 50
+  UNION ALL
+  SELECT doc_id + {2 * _COPY_OFFSET}, text FROM fresh
+  WHERE doc_id < 320),
+{_bands_cte("hist", "h")},
+{_bands_cte("batch", "b")},
+dead_hist AS (
+  SELECT DISTINCT b.id FROM bbands b
+  JOIN hbands h ON b.band = h.band AND b.band_key = h.band_key),
+kb AS (SELECT * FROM bbands
+       WHERE id NOT IN (SELECT id FROM dead_hist)),
+w AS (SELECT band, band_key, min(id) AS w FROM kb GROUP BY 1, 2),
+losers AS (SELECT DISTINCT kb.id FROM kb
+           JOIN w USING (band, band_key) WHERE kb.id > w.w)
+SELECT CAST(b.doc_id AS BIGINT) AS doc_id FROM batch b
+WHERE b.doc_id NOT IN (SELECT id FROM dead_hist)
+  AND b.doc_id NOT IN (SELECT id FROM losers)
+"""
 
     def _rdfs_instance(spark, sf):
         """Doc-derived ABox: an asserted lang type, a lang attribute
@@ -1792,7 +3394,76 @@ SELECT ?s ?n ?ch WHERE {
             F.when(F.col("pred") == "rdf:type", F.col("obj"))
             .otherwise(F.lit("")).alias("cls"))
             .agg(F.count("*").alias("n")))
-    q["kg_rdfs_entailed"] = kg_rdfs_entailed
+
+    # RDFS ρdf materialization: the same rule set as operators/infer
+    # (closed TBox, one ABox pass), stated with recursive CTEs; the
+    # mat CTE is shared with the SPARQL-over-entailed-graph oracle
+    _rdfs_values = ", ".join(f"('{s}', '{p}', '{ob}')"
+                             for s, p, ob in _RDFS_SCHEMA)
+    _rdfs_mat_cte = f"""
+WITH RECURSIVE
+inst AS (
+  SELECT 'd:' || doc_id AS subj, 'rdf:type' AS pred,
+         'c:lang_' || lang AS obj FROM documents
+  UNION ALL
+  SELECT 'd:' || doc_id, 'p:haslang', lang FROM documents
+  UNION ALL
+  SELECT 'd:' || doc_id, 'p:cites', 'd:' || (doc_id - 1)
+  FROM documents WHERE doc_id > 0),
+sch(subj, pred, obj) AS (VALUES {_rdfs_values}),
+scp AS (SELECT subj AS sub, obj AS sup FROM sch
+        WHERE pred = 'rdfs:subClassOf'),
+sc(sub, sup) AS (
+  SELECT sub, sup FROM scp
+  UNION
+  SELECT sc.sub, scp.sup FROM sc JOIN scp ON scp.sub = sc.sup),
+spp AS (SELECT subj AS sub, obj AS sup FROM sch
+        WHERE pred = 'rdfs:subPropertyOf'),
+sp(sub, sup) AS (
+  SELECT sub, sup FROM spp
+  UNION
+  SELECT sp.sub, spp.sup FROM sp JOIN spp ON spp.sub = sp.sup),
+scs AS (SELECT sub, sup FROM sc WHERE sub <> sup),
+sps AS (SELECT sub, sup FROM sp WHERE sub <> sup),
+dom AS (SELECT subj AS sub, obj AS cls FROM sch
+        WHERE pred = 'rdfs:domain'),
+rng AS (SELECT subj AS sub, obj AS cls FROM sch
+        WHERE pred = 'rdfs:range'),
+effdom AS (SELECT sub, cls FROM dom
+           UNION
+           SELECT sps.sub, dom.cls FROM sps
+           JOIN dom ON dom.sub = sps.sup),
+effrng AS (SELECT sub, cls FROM rng
+           UNION
+           SELECT sps.sub, rng.cls FROM sps
+           JOIN rng ON rng.sub = sps.sup),
+plain AS (SELECT * FROM inst WHERE pred <> 'rdf:type'),
+alltypes AS (
+  SELECT subj, obj FROM inst WHERE pred = 'rdf:type'
+  UNION ALL
+  SELECT p.subj, e.cls FROM plain p JOIN effdom e ON e.sub = p.pred
+  UNION ALL
+  SELECT p.obj, e.cls FROM plain p JOIN effrng e ON e.sub = p.pred),
+mat AS (
+  SELECT DISTINCT subj, pred, obj FROM (
+    SELECT subj, pred, obj FROM inst
+    UNION ALL SELECT subj, pred, obj FROM sch
+    UNION ALL
+    SELECT p.subj, sps.sup, p.obj FROM plain p
+    JOIN sps ON sps.sub = p.pred
+    UNION ALL SELECT subj, 'rdf:type', obj FROM alltypes
+    UNION ALL
+    SELECT t.subj, 'rdf:type', scs.sup FROM alltypes t
+    JOIN scs ON scs.sub = t.obj
+    UNION ALL SELECT sub, 'rdfs:subClassOf', sup FROM scs
+    UNION ALL SELECT sub, 'rdfs:subPropertyOf', sup FROM sps))
+"""
+
+    reg["kg_rdfs_entailed"] = kg_rdfs_entailed, _rdfs_mat_cte + """
+SELECT pred, CASE WHEN pred = 'rdf:type' THEN obj ELSE '' END AS cls,
+       count(*) AS n
+FROM mat GROUP BY 1, 2
+"""
 
     def kg_sparql_entailed(spark, sf):
         """SPARQL over the ENTAILED graph — the composition the
@@ -1823,7 +3494,11 @@ GROUP BY ?cls
 ORDER BY DESC(?n) ?cls
 LIMIT 10
 """)
-    q["kg_sparql_entailed"] = kg_sparql_entailed
+    reg["kg_sparql_entailed"] = kg_sparql_entailed, _rdfs_mat_cte + """
+SELECT obj AS cls, count(*) AS n FROM mat
+WHERE pred = 'rdf:type'
+GROUP BY 1 ORDER BY n DESC, cls LIMIT 10
+"""
 
     def kg_sameas_canonical(spark, sf):
         """owl:sameAs canonicalization (operators/infer.py): mirror
@@ -1859,7 +3534,38 @@ LIMIT 10
         out = sameas_canonicalize(sameas.unionByName(edges))
         return out.filter(F.col("pred") == "p:cites") \
             .select("subj", "obj")
-    q["kg_sameas_canonical"] = kg_sameas_canonical
+    # sameAs canonicalization: components = min uri reachable over
+    # the symmetric identity edges (recursive CTE), then rewrite
+    reg["kg_sameas_canonical"] = kg_sameas_canonical, """
+WITH RECURSIVE
+sa AS (
+  SELECT 'm1:' || doc_id AS a, 'd:' || doc_id AS b
+  FROM documents WHERE doc_id < 200
+  UNION ALL
+  SELECT 'm2:' || doc_id, 'm1:' || doc_id
+  FROM documents WHERE doc_id < 100),
+e AS (SELECT a, b FROM sa UNION SELECT b, a FROM sa),
+nodes AS (SELECT DISTINCT a AS n FROM e),
+reach(n, anc) AS (
+  SELECT n, n FROM nodes
+  UNION
+  SELECT e.a, reach.anc FROM reach JOIN e ON e.b = reach.n),
+canon AS (SELECT n, min(anc) AS canon FROM reach GROUP BY n),
+edges AS (
+  SELECT CASE WHEN doc_id < 200 THEN 'm1:' || doc_id
+              ELSE 'd:' || doc_id END AS subj,
+         CASE WHEN doc_id - 1 < 100 THEN 'm2:' || (doc_id - 1)
+              ELSE 'd:' || (doc_id - 1) END AS obj
+  FROM documents WHERE doc_id > 0
+  UNION ALL
+  SELECT 'd:' || doc_id, 'd:' || (doc_id - 1)
+  FROM documents WHERE doc_id > 0 AND doc_id < 50)
+SELECT DISTINCT coalesce(cs.canon, edges.subj) AS subj,
+                coalesce(co.canon, edges.obj) AS obj
+FROM edges
+LEFT JOIN canon cs ON cs.n = edges.subj
+LEFT JOIN canon co ON co.n = edges.obj
+"""
 
     def kg_owl_properties(spark, sf):
         """OWL property entailment (operators/infer.py): p:next is
@@ -1889,7 +3595,31 @@ LIMIT 10
             decls.unionByName(nxt).unionByName(near))
         sid = F.substring("subj", 3, 20).try_cast("long")
         return mat.filter(sid < 64)
-    q["kg_owl_properties"] = kg_owl_properties
+    # OWL property rules: recursive-CTE next-closure, prev = mirror,
+    # near = symmetric double
+    reg["kg_owl_properties"] = kg_owl_properties, """
+WITH RECURSIVE
+nxt AS (SELECT 'd:' || doc_id AS s, 'd:' || (doc_id - 1) AS o
+        FROM documents WHERE doc_id % 8 <> 0),
+near AS (SELECT 'd:' || doc_id AS s, 'd:' || (doc_id + 1) AS o
+         FROM documents WHERE doc_id % 20 = 0),
+clo(s, o) AS (
+  SELECT s, o FROM nxt
+  UNION
+  SELECT clo.s, nxt.o FROM clo JOIN nxt ON nxt.s = clo.o),
+mat AS (
+  SELECT DISTINCT subj, pred, obj FROM (
+    SELECT 'p:next' AS subj, 'rdf:type' AS pred,
+           'owl:TransitiveProperty' AS obj
+    UNION ALL SELECT 'p:prev', 'owl:inverseOf', 'p:next'
+    UNION ALL SELECT 'p:near', 'rdf:type', 'owl:SymmetricProperty'
+    UNION ALL SELECT s, 'p:next', o FROM clo
+    UNION ALL SELECT o, 'p:prev', s FROM clo
+    UNION ALL SELECT s, 'p:near', o FROM near
+    UNION ALL SELECT o, 'p:near', s FROM near))
+SELECT subj, pred, obj FROM mat
+WHERE TRY_CAST(substr(subj, 3) AS BIGINT) < 64
+"""
 
     def rdf_ntriples_roundtrip(spark, sf):
         """N-Triples wire round trip (sources/rdf_serial.py): doc-
@@ -1931,7 +3661,26 @@ LIMIT 10
             snull.alias("obj_lang"), snull.alias("obj_datatype"))
         triples = t1.unionByName(t2).unionByName(t3)
         return parse_ntriples(format_ntriples(triples, pfx), pfx)
-    q["rdf_ntriples_roundtrip"] = rdf_ntriples_roundtrip
+    # N-Triples round trip: the oracle restates the generated INPUT —
+    # the wire format must be a perfect inverse pair
+    reg["rdf_ntriples_roundtrip"] = rdf_ntriples_roundtrip, r"""
+WITH base AS (SELECT doc_id, text, lang, n_chars FROM documents)
+SELECT 'd:' || doc_id AS subj, 'p:title' AS pred,
+       'He said "' || substr(text, 1, 20) || '"' || chr(10)
+         || 'on line' || chr(9) || 'two \ end' AS obj,
+       TRUE AS obj_is_literal, lang AS obj_lang,
+       CAST(NULL AS VARCHAR) AS obj_datatype,
+       CAST(NULL AS VARCHAR) AS error
+FROM base
+UNION ALL
+SELECT 'd:' || doc_id, 'p:nchars', CAST(n_chars AS VARCHAR),
+       TRUE, NULL, 'xsd:integer', NULL
+FROM base
+UNION ALL
+SELECT 'd:' || doc_id, 'p:cites', 'd:' || (doc_id - 1),
+       FALSE, NULL, NULL, NULL
+FROM base WHERE doc_id > 0
+"""
 
     def curation_survivors(spark, sf):
         """End-to-end curation chain — the composed workflow a
@@ -1955,18 +3704,87 @@ LIMIT 10
             .filter((F.col("quality") >= 0.5)
                     & (F.col("pred_lang") == "en"))
             .select("doc_id", "quality", "pred_lang"))
-    q["curation_survivors"] = curation_survivors
+
+    stop_list = _sql_list(textstats.STOPWORDS)
+    def _quality_ctes(src: str) -> str:
+        """(doc_id, text) src → qm CTE with n/n_stop/n_dist — shared
+        by text_metrics and curation_survivors."""
+        return f"""qw AS (SELECT doc_id, {words_c} AS w FROM {src}),
+m AS (SELECT doc_id, len(w) AS n,
+             len(list_filter(w, x -> list_contains({stop_list}, x))) AS n_stop,
+             len(list_distinct(w)) AS n_dist
+      FROM qw)"""
+
+    _QUALITY_EXPR = """round(CAST(0.4 AS DOUBLE) * least(n / CAST(50.0 AS DOUBLE), 1.0)
+             + CAST(0.3 AS DOUBLE)
+               * least(n_stop / greatest(n, 1) * 5, 1.0)
+             + CAST(0.3 AS DOUBLE) * (n_dist / greatest(n, 1)), 4)"""
+
+    lang_hits = []
+    for lang in textstats.LANG_ORDER:
+        ml = _sql_list(textstats.LANG_MARKERS[lang])
+        lang_hits.append(
+            f"len(list_filter(w, x -> list_contains({ml}, x))) AS h_{lang}")
+    keys = ", ".join(f"h_{l} * 100 - {r} AS k_{l}"
+                     for r, l in enumerate(textstats.LANG_ORDER))
+    maxk = "greatest(" + ", ".join(
+        f"k_{l}" for l in textstats.LANG_ORDER) + ")"
+    pred_case = "CASE " + " ".join(
+        f"WHEN k_{l} = {maxk} THEN '{l}'"
+        for l in textstats.LANG_ORDER) + " END"
+    hits_case = "CASE " + " ".join(
+        f"WHEN k_{l} = {maxk} THEN h_{l}"
+        for l in textstats.LANG_ORDER) + " END"
+    def _langid_ctes(src: str) -> str:
+        """(doc_id, text) src → k CTE with per-language keys — shared
+        by text_metrics and curation_survivors."""
+        return f"""lw AS (SELECT doc_id, {_WORDS.format(c='lower(text)')} AS w FROM {src}),
+lh AS (SELECT doc_id, {', '.join(lang_hits)} FROM lw),
+k AS (SELECT doc_id, {keys},
+             h_en, h_es, h_fr, h_de, h_zh FROM lh)"""
+
+    reg["curation_survivors"] = curation_survivors, f"""
+WITH {_near_corpus},
+{_MINHASH_CTES},
+dropped AS (
+  SELECT DISTINCT inter.id_b AS doc_id
+  FROM inter JOIN sz sa ON sa.id = inter.id_a
+             JOIN sz sb ON sb.id = inter.id_b
+  WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 4) >= 0.8),
+kept AS (SELECT doc_id, text FROM corpus
+         WHERE doc_id NOT IN (SELECT doc_id FROM dropped)),
+{_quality_ctes('kept')},
+qual AS (SELECT doc_id, {_QUALITY_EXPR} AS quality FROM m),
+{_langid_ctes('kept')},
+lang AS (SELECT doc_id, {pred_case} AS pred_lang FROM k)
+SELECT kept.doc_id, q.quality, l.pred_lang
+FROM kept JOIN qual q USING (doc_id) JOIN lang l USING (doc_id)
+WHERE q.quality >= 0.5 AND l.pred_lang = 'en'
+"""
 
     def dedup_simhash(spark, sf):
         return _longify(dedup.simhash_signatures(_docs(spark, sf)))
-    q["dedup_simhash"] = dedup_simhash
+
+    reg["dedup_simhash"] = dedup_simhash, f"""
+WITH t AS (SELECT doc_id AS id, {_SIMHASH_TH} AS th FROM documents)
+SELECT id, CAST({_SIMHASH_BITS} AS BIGINT) AS simhash FROM t
+"""
 
     def dedup_simhash_pairs(spark, sf):
         corpus = _dup_corpus(spark, sf, 100, mutate=True).filter(
             (F.col("doc_id") < 100) | (F.col("doc_id") >= _COPY_OFFSET))
         return _longify(dedup.simhash_near_pairs(
             corpus))
-    q["dedup_simhash_pairs"] = dedup_simhash_pairs
+    reg["dedup_simhash_pairs"] = dedup_simhash_pairs, f"""
+WITH {_SIMHASH_BANDED_CTE},
+pairs AS (
+  SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+         bit_count(xor(a.simhash::UBIGINT, b.simhash::UBIGINT))::BIGINT
+             AS hamming
+  FROM banded a JOIN banded b
+    ON a.band = b.band AND a.block = b.block AND a.id < b.id)
+SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 6
+"""
 
     def dedup_components(spark, sf):
         """Cluster-correct near-dup grouping: SimHash pairs →
@@ -1979,7 +3797,13 @@ LIMIT 10
         pairs = dedup.simhash_near_pairs(
             corpus)
         return _longify(dedup.component_clusters(pairs))
-    q["dedup_components"] = dedup_components
+    reg["dedup_components"] = dedup_components, f"""
+WITH RECURSIVE {_SIMHASH_COMPONENTS_CTE},
+sizes AS (SELECT comp, CAST(count(*) AS BIGINT) AS csize
+          FROM comp GROUP BY comp)
+SELECT CAST(c.id AS BIGINT) AS id, c.comp, s.csize
+FROM comp c JOIN sizes s USING (comp)
+"""
 
     def canonical_docs(spark, sf):
         """Quality-aware canonical selection (dedup.select_canonical):
@@ -1996,7 +3820,25 @@ LIMIT 10
         scored = corpus.withColumn("score", F.length("text"))
         return _longify(dedup.select_canonical(scored, clusters,
                                                score_col="score"))
-    q["canonical_docs"] = canonical_docs
+    # canonical selection: the identical component closure, score =
+    # text length, winner per comp by (score DESC, id ASC); docs
+    # outside every cluster are their own singleton comp
+    reg["canonical_docs"] = canonical_docs, f"""
+WITH RECURSIVE {_SIMHASH_COMPONENTS_CTE},
+member AS (
+  SELECT CAST(c.doc_id AS BIGINT) AS id,
+         CAST(length(c.text) AS BIGINT) AS score,
+         coalesce(k.comp, c.doc_id) AS comp
+  FROM corpus c LEFT JOIN comp k ON k.id = c.doc_id),
+win AS (
+  SELECT comp, id AS keeper_id FROM (
+    SELECT comp, id, row_number() OVER (
+      PARTITION BY comp ORDER BY score DESC, id ASC) AS rn
+    FROM member) WHERE rn = 1)
+SELECT m.id, m.comp, m.score, w.keeper_id,
+       m.id = w.keeper_id AS is_keeper
+FROM member m JOIN win w USING (comp)
+"""
 
     def decontaminate_docs(spark, sf):
         """Train/eval decontamination: every doc sharing any word
@@ -2005,7 +3847,19 @@ LIMIT 10
         d = _docs(spark, sf)
         bench = d.filter(F.col("doc_id") % 50 == 0).select("text")
         return _longify(dedup.decontaminate(d, bench))
-    q["decontaminate_docs"] = decontaminate_docs
+
+    _words13 = _WORDS.format(c="text")
+    reg["decontaminate_docs"] = decontaminate_docs, f"""
+WITH t AS (SELECT doc_id AS id, {_sh_expr(_words13, 13)} AS sh
+           FROM documents),
+b AS (SELECT DISTINCT unnest(sh) AS shingle FROM t WHERE id % 50 = 0),
+e AS (SELECT id, unnest(sh) AS shingle FROM t),
+h AS (SELECT e.id, CAST(count(DISTINCT e.shingle) AS BIGINT) AS n_hits
+      FROM e JOIN b USING (shingle) GROUP BY e.id)
+SELECT t.id, coalesce(h.n_hits, 0) AS n_hits,
+       coalesce(h.n_hits, 0) > 0 AS contaminated
+FROM t LEFT JOIN h ON h.id = t.id
+"""
 
     def decontaminate_bloom_docs(spark, sf):
         """The bench-too-big-to-broadcast variant: a fixed-size
@@ -2016,7 +3870,8 @@ LIMIT 10
         d = _docs(spark, sf)
         bench = d.filter(F.col("doc_id") % 50 == 0).select("text")
         return _longify(dedup.decontaminate_bloom(d, bench))
-    q["decontaminate_bloom_docs"] = decontaminate_bloom_docs
+    # the bloom prefilter is exact after its verify join — same oracle
+    reg["decontaminate_bloom_docs"] = decontaminate_bloom_docs, reg["decontaminate_docs"][1]
 
     def sample_mixture_docs(spark, sf):
         """Deterministic per-language mixture sample: en kept at 0.5,
@@ -2026,7 +3881,18 @@ LIMIT 10
         d = _docs(spark, sf).select("doc_id", "lang")
         return _longify(sampling.stratified_sample(
             d, {"en": 0.5, "zh": 0.2}, default_rate=0.05))
-    q["sample_mixture_docs"] = sample_mixture_docs
+
+
+    from ferenda_spark.operators.sampling import rate_threshold
+
+    reg["sample_mixture_docs"] = sample_mixture_docs, f"""
+SELECT doc_id, lang FROM documents
+WHERE CAST(concat('0x', substr(md5('mix-v1:' ||
+        CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+  < CASE lang WHEN 'en' THEN {rate_threshold(0.5)}
+              WHEN 'zh' THEN {rate_threshold(0.2)}
+              ELSE {rate_threshold(0.05)} END
+"""
 
     def quota_sample_docs(spark, sf):
         """Per-group document quota (the C4/RefinedWeb per-domain URL
@@ -2037,7 +3903,15 @@ LIMIT 10
         d = _docs(spark, sf).select("doc_id", "source")
         return _longify(sampling.quota_sample(
             d, cap=10, group_col="source"))
-    q["quota_sample_docs"] = quota_sample_docs
+    reg["quota_sample_docs"] = quota_sample_docs, """
+WITH n AS (SELECT source, count(*) AS grp_n FROM documents GROUP BY 1)
+SELECT d.doc_id, d.source
+FROM documents d JOIN n ON d.source IS NOT DISTINCT FROM n.source
+WHERE n.grp_n <= 10
+   OR CAST(concat('0x', substr(md5('quota-v1:' ||
+        CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+      < 10 * (1152921504606846976 // n.grp_n)
+"""
 
     def training_shards_docs(spark, sf):
         """Deterministic training-shard packing: every document's
@@ -2049,7 +3923,28 @@ LIMIT 10
         d = _docs(spark, sf).select("doc_id", "n_chars")
         a = assign_shards(d, budget=50000, weight_col="n_chars")
         return a.select("doc_id", "shuffle_key", "shard")
-    q["training_shards_docs"] = training_shards_docs
+
+    # shard packing restated as ONE global window (the semantics the
+    # bucketed two-phase implementation must reproduce exactly)
+    _SHARD_CTE = """
+t AS (
+  SELECT doc_id, n_chars AS w,
+    CAST(concat('0x', substr(md5('shard-v1:' ||
+         CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hkey
+  FROM documents),
+c AS (
+  SELECT doc_id, hkey, w,
+    CAST(sum(w) OVER (ORDER BY hkey, doc_id
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         AS BIGINT) - w AS prev
+  FROM t)
+"""
+    reg["training_shards_docs"] = training_shards_docs, f"""
+WITH {_SHARD_CTE}
+SELECT doc_id, hkey AS shuffle_key,
+       CAST(prev // 50000 AS BIGINT) AS shard
+FROM c
+"""
 
     def training_shard_manifest(spark, sf):
         """Per-shard accounting sidecar over the same assignment."""
@@ -2058,7 +3953,14 @@ LIMIT 10
         d = _docs(spark, sf).select("doc_id", "n_chars")
         a = assign_shards(d, budget=50000, weight_col="n_chars")
         return shard_manifest(a, "n_chars")
-    q["training_shard_manifest"] = training_shard_manifest
+    reg["training_shard_manifest"] = training_shard_manifest, f"""
+WITH {_SHARD_CTE}
+SELECT CAST(prev // 50000 AS BIGINT) AS shard,
+       count(*) AS n_docs,
+       CAST(sum(w) AS BIGINT) AS total_weight,
+       min(hkey) AS first_key, max(hkey) AS last_key
+FROM c GROUP BY 1
+"""
 
     def pack_contexts_docs(spark, sf):
         """Concat-and-split context packing: every (document,
@@ -2069,7 +3971,20 @@ LIMIT 10
         p = pack_contexts(d, context_len=512, weight_col="n_chars")
         return p.select("doc_id", "ctx", "ctx_offset",
                         "slice_start", "slice_len")
-    q["pack_contexts_docs"] = pack_contexts_docs
+    reg["pack_contexts_docs"] = pack_contexts_docs, f"""
+WITH {_SHARD_CTE},
+e AS (
+  SELECT doc_id, prev, w,
+         unnest(generate_series(prev // 512, (prev + w - 1) // 512))
+           AS ctx
+  FROM c WHERE w > 0)
+SELECT doc_id, ctx,
+  greatest(prev - ctx * 512, 0) AS ctx_offset,
+  greatest(ctx * 512 - prev, 0) AS slice_start,
+  (least((ctx + 1) * 512, prev + w) - prev)
+    - greatest(ctx * 512 - prev, 0) AS slice_len
+FROM e
+"""
 
     def latest_fetch_docs(spark, sf):
         """Crawl-snapshot dedup: the corpus plus synthesized refetch
@@ -2091,7 +4006,20 @@ LIMIT 10
             "canonical_url", F.col("url").alias("winner_url"),
             F.col("warc_ts").cast("long").alias("latest_epoch"),
             "n_fetches")
-    q["latest_fetch_docs"] = latest_fetch_docs
+    reg["latest_fetch_docs"] = latest_fetch_docs, f"""
+WITH {_F_CTE}
+SELECT url AS canonical_url,
+  CASE WHEN doc_id % 7 = 0 THEN url || '/'
+       WHEN doc_id % 5 = 0 THEN url || '#top'
+       ELSE url END AS winner_url,
+  1704067200 + doc_id * 137
+    + CASE WHEN doc_id % 7 = 0 THEN 172800
+           WHEN doc_id % 5 = 0 THEN 86400 ELSE 0 END AS latest_epoch,
+  CAST(1 + CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END
+         + CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END
+       AS BIGINT) AS n_fetches
+FROM f
+"""
 
     def head_meta_docs(spark, sf):
         """Page-head metadata harvest (structured_data.head_meta):
@@ -2123,7 +4051,32 @@ LIMIT 10
         pages = _docs(spark, sf).select(url.alias("url"),
                                         html.alias("html"))
         return head_meta(pages)
-    q["head_meta_docs"] = head_meta_docs
+    reg["head_meta_docs"] = head_meta_docs, """
+WITH d AS (
+  SELECT doc_id,
+    'https://news' || CAST(doc_id % 5 AS VARCHAR) || '.example'
+      AS site,
+    'https://news' || CAST(doc_id % 5 AS VARCHAR) || '.example/a/'
+      || CAST(doc_id AS VARCHAR) AS url,
+    CAST(doc_id AS VARCHAR) AS did,
+    CAST(doc_id - doc_id % 3 AS VARCHAR) AS leader
+  FROM documents)
+SELECT url AS src_url, 'title' AS kind, '' AS key,
+       'Story ' || did AS value, CAST(NULL AS VARCHAR) AS hreflang,
+       0 AS pos
+FROM d
+UNION ALL
+SELECT url, 'meta', 'og:title', 'OG ' || did, NULL, 1 FROM d
+UNION ALL
+SELECT url, 'meta', 'description',
+       'D' || CAST(doc_id % 11 AS VARCHAR), NULL, 2 FROM d
+UNION ALL
+SELECT url, 'link', 'alternate', site || '/sv/' || did, 'sv', 3
+FROM d
+UNION ALL
+SELECT url, 'link', 'canonical', site || '/art/' || leader, NULL, 4
+FROM d WHERE doc_id % 3 <> 0
+"""
 
     def canonical_declared_dedup(spark, sf):
         """Declared-canonical snapshot dedup (webfilter.
@@ -2157,7 +4110,26 @@ LIMIT 10
             "canonical_url", F.col("url").alias("winner_url"),
             F.col("warc_ts").cast("long").alias("latest_epoch"),
             "declared", "n_fetches")
-    q["canonical_declared_dedup"] = canonical_declared_dedup
+    reg["canonical_declared_dedup"] = canonical_declared_dedup, """
+WITH d AS (
+  SELECT doc_id,
+    'https://m.site/a/' || CAST(doc_id AS VARCHAR) AS url,
+    1704067200 + doc_id * 7 AS epoch,
+    doc_id % 4 <> 0 AS declares,
+    doc_id - doc_id % 3 AS leader
+  FROM documents),
+k AS (
+  SELECT *, CASE WHEN declares
+    THEN 'https://site.example/art/' || CAST(leader AS VARCHAR)
+    ELSE url END AS canon
+  FROM d)
+SELECT canon AS canonical_url,
+       arg_max(url, epoch) AS winner_url,
+       max(epoch) AS latest_epoch,
+       arg_max(declares, epoch) AS declared,
+       count(*) AS n_fetches
+FROM k GROUP BY 1
+"""
 
     def bpe_train_docs(spark, sf):
         """Distributed BPE tokenizer training (tokenize.bpe_train):
@@ -2175,7 +4147,47 @@ LIMIT 10
         return merges_df(spark, merges).select(
             "rank", F.col("left").alias("left_sym"),
             F.col("right").alias("right_sym"), "freq")
-    q["bpe_train_docs"] = bpe_train_docs
+
+    # BPE training: four unrolled merge rounds.  Each round: symbol
+    # pairs via window-lead over the unnested symbol strings, argmax
+    # with the (cnt DESC, l, r) total order, then the merge applied
+    # as ONE literal replace over the chr(31)-delimited string —
+    # provably the same greedy leftmost pass as the engine's fold.
+    _bpe_round = """p{k} AS (
+  SELECT l, r, sum(wcount) AS cnt FROM (
+    SELECT wcount, sym AS l,
+           lead(sym) OVER (PARTITION BY word ORDER BY i) AS r
+    FROM (SELECT word, wcount,
+                 unnest(string_split(trim(s, chr(31)),
+                                     chr(31) || chr(31))) AS sym,
+                 generate_subscripts(string_split(trim(s, chr(31)),
+                     chr(31) || chr(31)), 1) AS i
+          FROM w{j})) WHERE r IS NOT NULL GROUP BY 1, 2),
+b{k} AS (SELECT l, r, cnt FROM p{k} WHERE cnt >= 2
+         ORDER BY cnt DESC, l, r LIMIT 1),
+w{k} AS (SELECT word, wcount,
+  CASE WHEN b{k}.l IS NULL THEN s ELSE
+    replace(s,
+            chr(31) || b{k}.l || chr(31) || chr(31) || b{k}.r || chr(31),
+            chr(31) || b{k}.l || b{k}.r || chr(31)) END AS s
+  FROM w{j} LEFT JOIN b{k} ON TRUE)"""
+    _bpe_rounds = ",\n".join(
+        _bpe_round.format(k=k, j=k - 1) for k in (1, 2, 3, 4))
+    reg["bpe_train_docs"] = bpe_train_docs, f"""
+WITH w0 AS (
+  SELECT word, count(*) AS wcount,
+         chr(31) || array_to_string(regexp_extract_all(word, '.'),
+                                    chr(31) || chr(31)) || chr(31) AS s
+  FROM (SELECT unnest(regexp_extract_all(lower(text),
+            '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS word FROM documents)
+  GROUP BY 1),
+{_bpe_rounds}
+SELECT 0 AS rank, l AS left_sym, r AS right_sym,
+       CAST(cnt AS BIGINT) AS freq FROM b1
+UNION ALL SELECT 1, l, r, CAST(cnt AS BIGINT) FROM b2
+UNION ALL SELECT 2, l, r, CAST(cnt AS BIGINT) FROM b3
+UNION ALL SELECT 3, l, r, CAST(cnt AS BIGINT) FROM b4
+"""
 
     def bpe_encode_docs(spark, sf):
         """BPE encoding under a fixed ranked merge table
@@ -2191,7 +4203,27 @@ LIMIT 10
         return enc.select(
             "doc_id", "n_tokens",
             F.md5(F.array_join("tokens", " ")).alias("tokens_md5"))
-    q["bpe_encode_docs"] = bpe_encode_docs
+
+    _bpe_w = ("chr(31) || array_to_string(regexp_extract_all(w, '.'), "
+              "chr(31) || chr(31)) || chr(31)")
+    for _l, _r in _BPE_FIXED_MERGES:
+        _bpe_w = (f"replace({_bpe_w}, chr(31) || '{_l}' || chr(31) || "
+                  f"chr(31) || '{_r}' || chr(31), "
+                  f"chr(31) || '{_l}{_r}' || chr(31))")
+    reg["bpe_encode_docs"] = bpe_encode_docs, f"""
+WITH t AS (
+  SELECT doc_id, regexp_extract_all(lower(text),
+      '[a-z]+|[0-9]+|[^a-z0-9\\s]') AS words
+  FROM documents),
+e AS (
+  SELECT doc_id, flatten(list_transform(words, w ->
+    string_split(trim({_bpe_w}, chr(31)),
+                 chr(31) || chr(31)))) AS toks
+  FROM t)
+SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
+       md5(array_to_string(toks, ' ')) AS tokens_md5
+FROM e
+"""
 
     def main_content_docs(spark, sf):
         """Main-content extraction (content.main_content): chrome-
@@ -2223,7 +4255,27 @@ LIMIT 10
         pages = _docs(spark, sf).select(url.alias("url"),
                                         html.alias("html"))
         return main_content(pages)
-    q["main_content_docs"] = main_content_docs
+    reg["main_content_docs"] = main_content_docs, """
+WITH d AS (
+  SELECT CAST(doc_id AS VARCHAR) AS did FROM documents),
+b AS (
+  SELECT did,
+    'Paragraph one of document ' || did ||
+      ' discusses the protocol at considerable length for testing.'
+      AS p1,
+    'Second paragraph of document ' || did ||
+      ' has one inline reference but remains mostly prose.' AS p2,
+    'Related item one for ' || did || ' Related item two for '
+      || did AS rel
+  FROM d)
+SELECT 'https://wild.example/p/' || did AS url,
+       p1 || chr(10) || p2 AS content,
+       2 AS n_kept, 2 AS n_dropped,
+       CAST(len(p1) + len(p2) AS BIGINT) AS content_chars,
+       CAST(len(p1) + len(p2) + len('tiny') + len(rel) AS BIGINT)
+         AS total_chars
+FROM b
+"""
 
     def curation_pipeline_v5(spark, sf):
         """The session-8 ingest story end-to-end: a two-snapshot
@@ -2297,7 +4349,43 @@ LIMIT 10
                           key_col="url")
         return a.select("url", "shard",
                         F.col("w").alias("n_tokens"))
-    q["curation_pipeline_v5"] = curation_pipeline_v5
+    reg["curation_pipeline_v5"] = curation_pipeline_v5, f"""
+WITH d AS (
+  SELECT doc_id, CAST(doc_id AS VARCHAR) AS did,
+         doc_id % 3 = 0 AS bonus
+  FROM documents),
+c AS (
+  SELECT 'https://wild.example/p/' || did AS url,
+    'Paragraph one of document ' || did ||
+      ' discusses the protocol at considerable length for testing.'
+    || chr(10) ||
+    'Second paragraph of document ' || did ||
+      ' has one inline reference but remains mostly prose.'
+    || CASE WHEN bonus THEN chr(10)
+         || 'Bonus paragraph for document ' || did
+         || ' adds enough extra prose to clear the token floor'
+         || ' comfortably.'
+       ELSE '' END AS content
+  FROM d),
+tok AS (
+  SELECT url, CAST(len(flatten(list_transform(
+      regexp_extract_all(lower(content),
+                         '[a-z]+|[0-9]+|[^a-z0-9\\s]'),
+      w -> string_split(trim({_bpe_w}, chr(31)),
+                        chr(31) || chr(31))))) AS BIGINT) AS n_tokens
+  FROM c),
+kept AS (SELECT * FROM tok WHERE n_tokens >= 170),
+t AS (SELECT url, n_tokens,
+        CAST(concat('0x', substr(md5('shard-v1:' || url), 1, 15))
+             AS BIGINT) AS hkey
+      FROM kept),
+cs AS (SELECT url, n_tokens,
+        CAST(sum(n_tokens) OVER (ORDER BY hkey, url
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+             AS BIGINT) - n_tokens AS prev
+       FROM t)
+SELECT url, CAST(prev // 2000 AS BIGINT) AS shard, n_tokens FROM cs
+"""
 
     def nb_classifier_docs(spark, sf):
         """TRAINED quality classifier end-to-end (classify.
@@ -2315,7 +4403,43 @@ LIMIT 10
                            "text")
         w = train_nb_weights(labeled)
         return quality_score(d, weights=w, n_buckets=512)
-    q["nb_classifier_docs"] = nb_classifier_docs
+
+    _nb_ctes = """tk AS (
+  SELECT doc_id, lang,
+         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
+                     x -> x != '') AS toks
+  FROM documents),
+ex AS (
+  SELECT doc_id, lang = 'en' AS y,
+         CAST(concat('0x', substr(md5('qw-v1:' || u.t), 1, 15))
+              AS BIGINT) % 512 AS b
+  FROM tk, unnest(toks) AS u(t)),
+c AS (
+  SELECT b, sum(CASE WHEN y THEN 1 ELSE 0 END) AS pos,
+         sum(CASE WHEN y THEN 0 ELSE 1 END) AS neg
+  FROM ex GROUP BY b),
+tot AS (SELECT sum(pos) AS pt, sum(neg) AS nt FROM c),
+w AS (
+  SELECT b, CAST(floor(1000 * (ln(pos + 1) - ln(neg + 1)
+             + ln((nt + 512) * 1.0 / (pt + 512))) + 0.5) AS BIGINT)
+           AS wt
+  FROM c, tot),
+sc AS (
+  SELECT doc_id, count(*) AS n, sum(wt) AS s
+  FROM ex JOIN w USING (b) GROUP BY doc_id),
+scored AS (
+  SELECT tk.doc_id AS id, tk.lang,
+         CAST(len(tk.toks) AS BIGINT) AS n_tokens,
+         CAST(coalesce(sc.s, 0) AS BIGINT) AS score_sum_milli
+  FROM tk LEFT JOIN sc ON sc.doc_id = tk.doc_id)"""
+
+    reg["nb_classifier_docs"] = nb_classifier_docs, f"""
+WITH {_nb_ctes}
+SELECT id, n_tokens, score_sum_milli,
+       CASE WHEN n_tokens = 0 THEN TRUE
+            ELSE score_sum_milli * 1000 >= 0 END AS keep
+FROM scored
+"""
 
     def strip_paragraphs_docs(spark, sf):
         """Intra-document repeated-paragraph removal
@@ -2342,7 +4466,25 @@ LIMIT 10
                 .otherwise(F.concat(a, nl, b, nl, c)))
         synth = _docs(spark, sf).select("doc_id", text.alias("text"))
         return strip_repeated_paragraphs(synth)
-    q["strip_paragraphs_docs"] = strip_paragraphs_docs
+    reg["strip_paragraphs_docs"] = strip_paragraphs_docs, """
+WITH d AS (
+  SELECT doc_id,
+    'Alpha paragraph of doc ' || CAST(doc_id AS VARCHAR)
+      || ' with unique content.' AS a,
+    'Beta paragraph shared text for ' || CAST(doc_id AS VARCHAR)
+      || '.' AS b,
+    'Gamma closing paragraph ' || CAST(doc_id AS VARCHAR) || '.' AS c
+  FROM documents)
+SELECT doc_id,
+  CASE WHEN doc_id % 3 = 0 THEN a || chr(10) || b || chr(10) || c
+       WHEN doc_id % 3 = 1 THEN a
+       ELSE a || chr(10) || b || chr(10) || c END AS text,
+  CASE WHEN doc_id % 3 = 0 THEN 5
+       WHEN doc_id % 3 = 1 THEN 3 ELSE 3 END AS n_paras,
+  CASE WHEN doc_id % 3 = 0 THEN 2
+       WHEN doc_id % 3 = 1 THEN 2 ELSE 0 END AS n_removed
+FROM d
+"""
 
     def noindex_filter_docs(spark, sf):
         """Robots-meta opt-out (webfilter.noindex_filter): pages
@@ -2365,7 +4507,11 @@ LIMIT 10
         pages = _docs(spark, sf).select(url.alias("url"),
                                         html.alias("html"))
         return noindex_filter(pages).select("url")
-    q["noindex_filter_docs"] = noindex_filter_docs
+    reg["noindex_filter_docs"] = noindex_filter_docs, """
+SELECT 'https://idx.example/p/' || CAST(doc_id AS VARCHAR) AS url
+FROM documents
+WHERE NOT (doc_id % 4 = 0 OR doc_id % 7 = 1)
+"""
 
     def langid_trained_docs(spark, sf):
         """Trained language ID (langprofile.py): Cavnar–Trenkle
@@ -2387,7 +4533,15 @@ LIMIT 10
         g = explode_grams(d, ["doc_id", "lang"]).persist()
         prof = train_lang_profiles(d, grams=g)
         return classify_language(d, prof, grams=g)
-    q["langid_trained_docs"] = langid_trained_docs
+    reg["langid_trained_docs"] = langid_trained_docs, f"""
+WITH {_LANGID_GRAMS_CTE},
+tg AS (SELECT lang, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
+prof AS (
+  SELECT lang, gram, rank FROM (
+    SELECT *, row_number() OVER (PARTITION BY lang
+                ORDER BY cnt DESC, gram) AS rank FROM tg)
+  WHERE rank <= 150),
+{_LANGID_CLASSIFY_SQL}"""
 
     def langid_classify_docs(spark, sf):
         """Deployment-shaped language ID: classification ONLY,
@@ -2404,7 +4558,13 @@ LIMIT 10
         d = _docs(spark, sf).repartition(
             spark.sparkContext.defaultParallelism)
         return classify_language(d, prof)
-    q["langid_classify_docs"] = langid_classify_docs
+
+    _langid_values = ", ".join(
+        f"('{lg}', '{gr}', {rk})" for lg, gr, rk in _LANGID_PROFILE)
+    reg["langid_classify_docs"] = langid_classify_docs, f"""
+WITH prof(lang, gram, rank) AS (VALUES {_langid_values}),
+{_LANGID_GRAMS_CTE},
+{_LANGID_CLASSIFY_SQL}"""
 
     def hash_embed_docs(spark, sf):
         """Model-free document embeddings (similarity.hash_embed):
@@ -2417,7 +4577,23 @@ LIMIT 10
         return (emb.select("id", F.posexplode("embedding")
                            .alias("j", "v"))
                 .filter(F.col("v") != 0))
-    q["hash_embed_docs"] = hash_embed_docs
+    reg["hash_embed_docs"] = hash_embed_docs, """
+WITH tk AS (
+  SELECT doc_id,
+         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
+                     x -> x != '') AS toks
+  FROM documents),
+ex AS (
+  SELECT doc_id,
+    CAST(concat('0x', substr(md5('he-v1:' || u.t), 1, 15))
+         AS BIGINT) % 32 AS j,
+    CASE WHEN CAST(concat('0x', substr(md5('he-v1#s:' || u.t), 1, 15))
+              AS BIGINT) % 2 = 1 THEN -1 ELSE 1 END AS s
+  FROM tk, unnest(toks) AS u(t))
+SELECT doc_id AS id, CAST(j AS INT) AS j,
+       CAST(sum(s) AS BIGINT) AS v
+FROM ex GROUP BY 1, 2 HAVING sum(s) <> 0
+"""
 
     def classifier_eval_docs(spark, sf):
         """Model-selection loop for the trained classifier
@@ -2438,7 +4614,33 @@ LIMIT 10
                           (F.col("lang") == "en").alias("label"))
         return score_eval(scored, labels,
                           thresholds=[-1200, -1000, -800, 0])
-    q["classifier_eval_docs"] = classifier_eval_docs
+    reg["classifier_eval_docs"] = classifier_eval_docs, f"""
+WITH {_nb_ctes},
+e AS (
+  SELECT s.*, s.lang = 'en' AS y, t.thr
+  FROM scored s, (VALUES (-1200), (-1000), (-800), (0)) t(thr)),
+k AS (
+  SELECT thr, y,
+    CASE WHEN n_tokens = 0 THEN thr <= 0
+         ELSE score_sum_milli * 1000 >= CAST(thr AS BIGINT) * n_tokens
+    END AS kept
+  FROM e),
+agg AS (
+  SELECT thr AS threshold_milli,
+    sum(CASE WHEN kept AND y THEN 1 ELSE 0 END) AS tp,
+    sum(CASE WHEN kept AND NOT y THEN 1 ELSE 0 END) AS fp,
+    sum(CASE WHEN NOT kept AND y THEN 1 ELSE 0 END) AS fn,
+    sum(CASE WHEN NOT kept AND NOT y THEN 1 ELSE 0 END) AS tn
+  FROM k GROUP BY 1)
+SELECT threshold_milli,
+  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+  CAST(fn AS BIGINT) AS fn, CAST(tn AS BIGINT) AS tn,
+  CASE WHEN tp + fp > 0 THEN CAST(tp * 1000 // (tp + fp) AS BIGINT)
+       END AS precision_milli,
+  CASE WHEN tp + fn > 0 THEN CAST(tp * 1000 // (tp + fn) AS BIGINT)
+       END AS recall_milli
+FROM agg
+"""
 
     def kg_metadata_triad(spark, sf):
         """All three embedded-metadata harvesters over ONE page set
@@ -2477,7 +4679,24 @@ LIMIT 10
              .unionByName(rdfa_triples(pages)))
         return (t.filter(F.col("error").isNull())
                 .select(*cols).distinct())
-    q["kg_metadata_triad"] = kg_metadata_triad
+    reg["kg_metadata_triad"] = kg_metadata_triad, """
+WITH d AS (
+  SELECT 'https://shop' || CAST(doc_id % 3 AS VARCHAR)
+           || '.example/p/' || CAST(doc_id AS VARCHAR) AS url,
+         CAST(doc_id AS VARCHAR) AS did,
+         CAST(doc_id % 90 + 10 AS VARCHAR) AS price
+  FROM documents)
+SELECT url || '#prod' AS subj, 'rdf:type' AS pred,
+       'schema:Product' AS obj, FALSE AS obj_is_literal FROM d
+UNION ALL
+SELECT url || '#prod', 'schema:name', 'P' || did, TRUE FROM d
+UNION ALL
+SELECT url || '#offer', 'rdf:type', 'schema:Offer', FALSE FROM d
+UNION ALL
+SELECT url || '#offer', 'schema:price', price, TRUE FROM d
+UNION ALL
+SELECT url || '#prod', 'schema:sku', 'S' || did, TRUE FROM d
+"""
 
     def threshold_calibration_docs(spark, sf):
         """Keep-rate threshold calibration (classify.
@@ -2498,7 +4717,28 @@ LIMIT 10
             [(r["threshold_milli"], r["kept"], r["n"],
               r["n_empty"])],
             "threshold_milli long, kept long, n long, n_empty long")
-    q["threshold_calibration_docs"] = threshold_calibration_docs
+    reg["threshold_calibration_docs"] = threshold_calibration_docs, f"""
+WITH {_nb_ctes},
+m AS (
+  -- exact FLOOR division mirroring classify.threshold_for_keep_rate
+  -- (DuckDB integer // truncates toward zero, floor != trunc for
+  -- the negative score sums NB log-odds produce)
+  SELECT (score_sum_milli * 1000
+          - ((score_sum_milli * 1000 % n_tokens + n_tokens)
+             % n_tokens)) // n_tokens AS m
+  FROM scored WHERE n_tokens > 0),
+p AS (SELECT count(*) AS n FROM m),
+kk AS (SELECT CAST((300 * n + 999) // 1000 AS BIGINT) AS k, n FROM p),
+thr AS (
+  SELECT m AS t FROM m, kk ORDER BY m DESC
+  LIMIT 1 OFFSET (SELECT k - 1 FROM kk))
+SELECT CAST(thr.t AS BIGINT) AS threshold_milli,
+       (SELECT count(*) FROM m WHERE m.m >= thr.t) AS kept,
+       CAST(kk.n AS BIGINT) AS n,
+       CAST((SELECT count(*) FROM scored WHERE n_tokens = 0)
+            AS BIGINT) AS n_empty
+FROM thr, kk
+"""
 
     def meta_refresh_docs(spark, sf):
         """Client-side redirects (webfilter.meta_refresh_edges →
@@ -2533,7 +4773,19 @@ LIMIT 10
                                         html.alias("html"))
         edges = meta_refresh_edges(pages)
         return resolve_redirects(edges.select("src", "dst"))
-    q["meta_refresh_docs"] = meta_refresh_docs
+    reg["meta_refresh_docs"] = meta_refresh_docs, """
+WITH d AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS did
+           FROM documents)
+SELECT 'https://w.example/p/' || did AS src,
+       'https://w.example/art/' || did AS final_url,
+       CAST(1 AS BIGINT) AS hops, TRUE AS resolved
+FROM d WHERE doc_id % 4 = 1
+UNION ALL
+SELECT 'https://w.example/p/' || did,
+       'https://w.example/art/' || CAST(doc_id - 1 AS VARCHAR),
+       CAST(2 AS BIGINT), TRUE
+FROM d WHERE doc_id % 4 = 2
+"""
 
     def anchor_alias_linking(spark, sf):
         """Web-anchor entity linking (anchors.anchor_profile →
@@ -2572,7 +4824,18 @@ LIMIT 10
             .alias("label"))
         return link_labels(mentions, ents).select(
             "doc_id", "label", "entity_uri")
-    q["anchor_alias_linking"] = anchor_alias_linking
+    reg["anchor_alias_linking"] = anchor_alias_linking, """
+WITH d AS (
+  SELECT doc_id, CAST(doc_id AS VARCHAR) AS did,
+         CAST(doc_id % 29 AS VARCHAR) AS k
+  FROM documents)
+SELECT doc_id,
+  CASE WHEN doc_id % 7 = 0 THEN 'zzqx' || did
+       ELSE 'Topic phrase ' || k END AS label,
+  CASE WHEN doc_id % 7 = 0 THEN CAST(NULL AS VARCHAR)
+       ELSE 'https://hub.example/res/topic/' || k END AS entity_uri
+FROM d
+"""
 
     def text_neardup_hash(spark, sf):
         """Model-free semantic near-dup on raw TEXT
@@ -2608,3399 +4871,7 @@ LIMIT 10
             F.col("id").alias("doc_id"), idot.alias("dot"),
             nsq(va).alias("na"), nsq(vb).alias("nb"),
             int_cosine_test(va, vb, 950).alias("is_near"))
-    q["text_neardup_hash"] = text_neardup_hash
-
-    def hreflang_clusters_docs(spark, sf):
-        """Multilingual document families (webfilter.
-        hreflang_clusters): en/sv/de triples with deliberately
-        ASYMMETRIC declarations — the en page lists all variants,
-        the sv page lists only en (and never itself, so its own
-        hreflang stays NULL), the de page lists de+en — must
-        cluster transitively under one min-url label, including
-        the last partial family whose de PAGE does not exist but
-        whose de url is still a referenced node.  Oracle: the
-        family rows in closed form."""
-        from ferenda_spark.operators.webfilter import hreflang_clusters
-        r = F.col("doc_id") % 3
-        L = (F.col("doc_id") - r).cast("string")
-        lang = (F.when(r == 0, "en").when(r == 1, "sv")
-                .otherwise("de"))
-        url = F.concat(F.lit("https://x.example/"), lang,
-                       F.lit("/"), L)
-        html = F.concat(
-            F.lit("<html><head>"),
-            F.when(r == 0, F.concat(
-                F.lit('<link rel="alternate" hreflang="en" '
-                      'href="https://x.example/en/'), L,
-                F.lit('"><link rel="alternate" hreflang="sv" '
-                      'href="/sv/'), L,
-                F.lit('"><link rel="alternate" hreflang="de" '
-                      'href="/de/'), L, F.lit('">')))
-            .when(r == 1, F.concat(
-                F.lit('<link rel="alternate" hreflang="en" '
-                      'href="/en/'), L, F.lit('">')))
-            .otherwise(F.concat(
-                F.lit('<link rel="alternate" hreflang="de" '
-                      'href="https://x.example/de/'), L,
-                F.lit('"><link rel="alternate" hreflang="en" '
-                      'href="/en/'), L, F.lit('">'))),
-            F.lit("</head><body>x</body></html>"))
-        pages = _docs(spark, sf).select(url.alias("url"),
-                                        html.alias("html"))
-        return hreflang_clusters(pages)
-    q["hreflang_clusters_docs"] = hreflang_clusters_docs
-
-    def curation_pipeline_v4(spark, sf):
-        """The ingest-to-export story in one query: multi-snapshot
-        crawl (refetch variants at later times, same content) →
-        newest-fetch-per-canonical-url dedup → Arrow extract →
-        document-quality floor (length ≥ 420) → deterministic
-        training-shard packing → per-shard manifest.  Every stage is
-        an independently-gated operator; the oracle recomposes the
-        identical chain in SQL."""
-        from ferenda_spark.operators.shards import (assign_shards,
-                                                    shard_manifest)
-        from ferenda_spark.operators.webfilter import latest_fetch
-        p = _pages(spark, sf).select("url", "warc_ts", "html", "lang")
-        d_id = F.regexp_extract(F.col("url"), r"(\d+)$", 1).cast("long")
-        v1 = (p.filter(d_id % 5 == 0).withColumn(
-            "url", F.concat(F.col("url"), F.lit("#top"))).withColumn(
-            "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")))
-        v2 = (p.filter(d_id % 7 == 0).withColumn(
-            "url", F.concat(F.col("url"), F.lit("/"))).withColumn(
-            "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 DAY")))
-        fetched = latest_fetch(p.unionByName(v1).unionByName(v2))
-        # canonical identity for the rest of the chain (the winner's
-        # raw url may carry a fragment/slash variant)
-        pages = fetched.select(F.col("canonical_url").alias("url"),
-                               "html", "lang")
-        ext = extract(pages, doc_url_regex=DOC_PAGE_URL_RE)
-        kept = (ext.filter(F.col("is_doc"))
-                .select("url", F.length("text").cast("long").alias("w"))
-                .filter(F.col("w") >= 420)
-                # lazy localCheckpoint: shard packing scans its input
-                # twice (bucket totals + windowed cumsum) — the tiny
-                # (url, w) projection materializes ONCE, at
-                # assign_shards' bucket-totals collect (which runs at
-                # DataFrame-construction time by design), so the
-                # Arrow extract and the dedup window never re-run
-                .localCheckpoint(eager=False))
-        a = assign_shards(kept, budget=50000, weight_col="w",
-                          key_col="url")
-        return (shard_manifest(a, "w")
-                .select("shard", "n_docs", "total_weight"))
-    q["curation_pipeline_v4"] = curation_pipeline_v4
-
-    def redact_pii_docs(spark, sf):
-        """PII scrub over a corpus with deterministically injected
-        identifiers (emails on doc_id%7, IPv4 on %11, 9-digit runs on
-        %13): per-type counts + the redacted text, both engines
-        running the identical RE2-safe patterns."""
-        d = _docs(spark, sf).select("doc_id", "text")
-        did = F.col("doc_id").cast("string")
-        injected = d.select("doc_id", F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit(" contact user"), did,
-                            F.lit("@example.com"))).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0,
-                   F.concat(F.lit(" from 10.0.0."),
-                            (F.col("doc_id") % 256).cast("string"))
-                   ).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 13 == 0,
-                   F.concat(F.lit(" ref 9"),
-                            F.lpad(did, 8, "0"))).otherwise(F.lit("")),
-        ).alias("text"))
-        return _longify(textstats.redact_pii(injected))
-    q["redact_pii_docs"] = redact_pii_docs
-
-    def strip_boilerplate_docs(spark, sf):
-        """Line-level boilerplate removal over a corpus with
-        deterministically injected repeated sentences: units seen in
-        >10 distinct docs (the two injected banners) are dropped,
-        per-doc unique trailing notes and the body survive."""
-        d = _docs(spark, sf).select("doc_id", "text")
-        did = F.col("doc_id")
-        inj = d.select("doc_id", F.concat(
-            F.col("text"),
-            F.when(did % 2 == 0,
-                   F.lit(". Subscribe to our newsletter today")
-                   ).otherwise(F.lit("")),
-            F.when(did % 3 == 0,
-                   F.lit(". All rights reserved worldwide")
-                   ).otherwise(F.lit("")),
-            F.when(did % 5 == 0,
-                   F.concat(F.lit(". unique trailing note "),
-                            did.cast("string"))).otherwise(F.lit("")),
-        ).alias("text"))
-        return _longify(dedup.strip_boilerplate(inj))
-    q["strip_boilerplate_docs"] = strip_boilerplate_docs
-
-    def dedup_keepfirst_docs(spark, sf):
-        """Exact duplicate-unit removal, keep-first (Lee et al.-style
-        substring dedup at sentence granularity) over a corpus with
-        deterministically injected duplicates: a license quote
-        prepended to every 4th doc and one of three shared appendix
-        sentences appended to every 7th — each duplicated unit must
-        survive only at its smallest (doc_id, pos) occurrence."""
-        d = _docs(spark, sf).select("doc_id", "text")
-        did = F.col("doc_id")
-        inj = d.select("doc_id", F.concat(
-            F.when(did % 4 == 0,
-                   F.lit("Quoted license text applies here. ")
-                   ).otherwise(F.lit("")),
-            F.col("text"),
-            F.when(did % 7 == 0,
-                   F.concat(F.lit(". shared appendix "),
-                            (did % 3).cast("string"))).otherwise(F.lit("")),
-        ).alias("text"))
-        return _longify(dedup.dedup_units_keepfirst(inj))
-    q["dedup_keepfirst_docs"] = dedup_keepfirst_docs
-
-    _SPAN_PASSAGE = ("this license text is shared verbatim across many "
-                     "documents and must be flagged as a duplicated span "
-                     "by the window pass")
-
-    def dedup_token_spans_docs(spark, sf):
-        """Token-window exact-substring duplicate detection (Lee et
-        al. ExactSubstr, windowed-hash variant) over a corpus with a
-        21-token passage injected into every 6th doc: the injected
-        span's windows must be flagged everywhere except the globally
-        first occurrence, at any alignment."""
-        d = _docs(spark, sf).select("doc_id", "text")
-        inj = d.select("doc_id", F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 6 == 0,
-                   F.lit(" " + _SPAN_PASSAGE)).otherwise(F.lit("")),
-        ).alias("text"))
-        return _longify(dedup.duplicate_token_spans(inj))
-    q["dedup_token_spans_docs"] = dedup_token_spans_docs
-
-    def quality_classifier_docs(spark, sf):
-        """Model-based quality filtering (fastText-architecture
-        hashed-feature linear scorer, operators/classify.py): one
-        codegen projection over the token array, zero shuffle; the
-        deterministic hash-derived weights stand in for trained
-        parameters so the oracle can value-compare the full plan."""
-        from ferenda_spark.operators.classify import quality_score
-        return _longify(quality_score(
-            _docs(spark, sf).select("doc_id", "text")))
-    q["quality_classifier_docs"] = quality_classifier_docs
-
-    def lm_perplexity_docs(spark, sf):
-        """CCNet-style LM quality split (operators/lmscore.py): fit an
-        add-one bigram LM on the trusted slice (lang='en', the
-        reference-corpus analog), score every document's Σ ln P, and
-        ntile into head/middle/tail buckets — the standard perplexity
-        filter between language-ID and dedup.  The bucket rank comes
-        from the two-phase global_rank (no single-partition window);
-        the LM joins broadcast."""
-        from ferenda_spark.operators.lmscore import (fit_bigram_lm,
-                                                     perplexity_buckets,
-                                                     score_perplexity)
-        docs = _docs(spark, sf).select("doc_id", "text", "lang")
-        lm = fit_bigram_lm(docs.filter(F.col("lang") == "en"))
-        scored = score_perplexity(docs, lm)
-        out = perplexity_buckets(scored)
-        lm["bigram"].unpersist()
-        return _longify(out)
-    q["lm_perplexity_docs"] = lm_perplexity_docs
-
-    def anchor_text_docs(spark, sf):
-        """Anchor-text enrichment (operators/anchors.py): pages with
-        deterministic doc_id-derived hyperlinks go through the REAL
-        HTML anchor parser (Arrow mapInPandas), root-relative hrefs
-        resolve against the source origin, and the per-target profile
-        (inlink counts + crowd-sourced top anchor) aggregates with a
-        keyed — never global — window.  The oracle restates the link
-        structure arithmetically, so a value match proves the whole
-        parse→resolve→aggregate chain."""
-        from ferenda_spark.operators.anchors import (anchor_pairs,
-                                                     anchor_profile,
-                                                     resolve_hrefs)
-        d = F.col("doc_id")
-        html = F.format_string(
-            '<html><body><p>See <a href="https://ex.org/doc/%d">'
-            'ref %d</a> and <a href="/rel/%d"><b>see</b>\n also %d'
-            '</a>.<a name="s%d">sec</a></p></body></html>',
-            d % 37, d % 5, d % 11, d % 3, d)
-        pages = _docs(spark, sf).select(
-            F.format_string("https://src.example/%d", d).alias("url"),
-            F.encode(html, "UTF-8").alias("html"))
-        pairs = resolve_hrefs(anchor_pairs(pages))
-        return _longify(anchor_profile(pairs))
-    q["anchor_text_docs"] = anchor_text_docs
-
-    def domain_stats_docs(spark, sf):
-        """URL/domain-level curation (operators/webfilter.py): host +
-        eTLD+1 extraction (incl. a multi-label public suffix) over
-        URLs synthesized from doc_id, aggregated into the per-domain
-        reputation table; the oracle reconstructs the expected domain
-        arithmetically, independent of the extraction code."""
-        from ferenda_spark.operators.webfilter import domain_stats
-        did = F.col("doc_id")
-        tld = (F.when(did % 3 == 0, "com")
-               .when(did % 3 == 1, "org").otherwise("co.uk"))
-        docs = _docs(spark, sf).select(
-            "doc_id",
-            F.concat(F.lit("https://"),
-                     F.when(did % 5 == 0, "sub.").otherwise(""),
-                     F.lit("site"), (did % 20).cast("string"),
-                     F.lit("."), tld,
-                     F.lit("/p/"), did.cast("string")).alias("url"))
-        return _longify(domain_stats(docs))
-    q["domain_stats_docs"] = domain_stats_docs
-
-    def url_templates_docs(spark, sf):
-        """URL-template mining (operators/webfilter.py::url_templates
-        over functions/web.py::url_template_col): urls synthesized
-        from doc_id in four shapes — /product/<id>, a dated
-        /<year>/<month>/post-<id> slug, a /u/<hex8>/Profile page, and
-        a /search?q=…&page=… query — collapse to their templates
-        ({d}/{x}/{a} segment classes, sorted query NAMES only); the
-        oracle reconstructs every expected template arithmetically
-        from doc_id, independent of the classifier code (incl. the
-        hex-that-happens-to-be-all-digits edge: such segments are
-        {d}, not {x})."""
-        from ferenda_spark.operators.webfilter import url_templates
-        did = F.col("doc_id")
-        host = F.concat(F.lit("site"), (did % 10).cast("string"),
-                        F.lit(".com"))
-        url = (F.when(did % 4 == 0,
-                      F.concat(F.lit("https://"), host,
-                               F.lit("/product/"), did.cast("string")))
-               .when(did % 4 == 1,
-                     F.concat(F.lit("https://"), host, F.lit("/"),
-                              (did % 5 + 2019).cast("string"),
-                              F.lit("/"), (did % 12 + 1).cast("string"),
-                              F.lit("/post-"), did.cast("string")))
-               .when(did % 4 == 2,
-                     F.concat(F.lit("https://"), host, F.lit("/u/"),
-                              F.lpad(F.lower(F.hex(did)), 8, "0"),
-                              F.lit("/Profile")))
-               .otherwise(
-                   F.concat(F.lit("https://"), host,
-                            F.lit("/search?q=term"), did.cast("string"),
-                            F.lit("&page="), (did % 7).cast("string"))))
-        docs = _docs(spark, sf).select("doc_id", url.alias("url"))
-        return _longify(url_templates(docs))
-    q["url_templates_docs"] = url_templates_docs
-
-    def template_budget_docs(spark, sf):
-        """Composed crawl-budget enforcement: url_templates'
-        classifier keys each url by its TEMPLATE, then quota_sample
-        caps every template at ~12 urls with the deterministic
-        salted-threshold draw — the whole trap-pruning chain a
-        frontier runs (a calendar trap's template is down-sampled to
-        the budget; rare templates pass untouched).  The oracle
-        recomposes both stages independently: templates rebuilt
-        arithmetically from doc_id, the quota threshold restated in
-        BIGINT."""
-        from ferenda_spark.functions.web import url_template_col
-        from ferenda_spark.operators import sampling
-        did = F.col("doc_id")
-        host = F.concat(F.lit("site"), (did % 10).cast("string"),
-                        F.lit(".com"))
-        url = (F.when(did % 4 == 0,
-                      F.concat(F.lit("https://"), host,
-                               F.lit("/product/"), did.cast("string")))
-               .when(did % 4 == 1,
-                     F.concat(F.lit("https://"), host, F.lit("/"),
-                              (did % 5 + 2019).cast("string"),
-                              F.lit("/"), (did % 12 + 1).cast("string"),
-                              F.lit("/post-"), did.cast("string")))
-               .when(did % 4 == 2,
-                     F.concat(F.lit("https://"), host, F.lit("/u/"),
-                              F.lpad(F.lower(F.hex(did)), 8, "0"),
-                              F.lit("/Profile")))
-               .otherwise(
-                   F.concat(F.lit("https://"), host,
-                            F.lit("/search?q=term"), did.cast("string"),
-                            F.lit("&page="), (did % 7).cast("string"))))
-        docs = (_docs(spark, sf).select("doc_id", url.alias("url"))
-                .withColumn("template", url_template_col(F.col("url"))))
-        kept = sampling.quota_sample(docs, cap=12, group_col="template")
-        return _longify(kept.select("doc_id", "template"))
-    q["template_budget_docs"] = template_budget_docs
-
-    def robots_filter_docs(spark, sf):
-        """RFC 9309 robots admission (operators/robots.py): ten
-        synthetic hosts, even hosts carry a robots.txt (hosts 0,4,8
-        with an exact `ferendabot` group that overrides `*`
-        EXCLUSIVELY, hosts 2,6 with only the `*` group: /private/
-        disallow, /private/pub/ allow override, /*.tmp$ wildcard+
-        anchor), odd hosts have no robots row (spec: absence means
-        allow).  Urls take one of four path classes per doc_id.  The
-        oracle re-derives every (allowed, prec) decision purely
-        arithmetically from doc_id — group selection, longest-match
-        precedence and the missing-row default all have to agree."""
-        from ferenda_spark.operators.robots import (parse_robots,
-                                                    robots_decisions)
-        star = ("User-agent: *\nDisallow: /private/\n"
-                "Allow: /private/pub/\nDisallow: /*.tmp$\n")
-        robots = spark.createDataFrame(
-            [("site%d.com" % h,
-              star + ("User-agent: ferendabot\nDisallow: /doc/\n"
-                      if h % 4 == 0 else ""))
-             for h in range(0, 10, 2)],
-            "domain string, robots_txt string")
-        did = F.col("doc_id")
-        path = (F.when(did % 4 == 0, F.concat(F.lit("/private/p"),
-                                              did.cast("string")))
-                .when(did % 4 == 1, F.concat(F.lit("/private/pub/p"),
-                                             did.cast("string")))
-                .when(did % 4 == 2, F.concat(F.lit("/p"),
-                                             did.cast("string"),
-                                             F.lit(".tmp")))
-                .otherwise(F.concat(F.lit("/doc/p"),
-                                    did.cast("string"))))
-        docs = _docs(spark, sf).select(
-            "doc_id",
-            F.concat(F.lit("https://site"), (did % 10).cast("string"),
-                     F.lit(".com"), path).alias("url"))
-        rules = parse_robots(robots, agent="ferendabot")
-        return _longify(
-            robots_decisions(docs, rules)
-            .select("doc_id", "robots_allowed", "robots_prec"))
-    q["robots_filter_docs"] = robots_filter_docs
-
-    def sitemap_discovery(spark, sf):
-        """Sitemap frontier discovery (operators/sitemaps.py): per-host
-        urlset XML is assembled IN Spark from doc_id arithmetic (loc
-        always; lastmod always; changefreq only when doc_id%5==0;
-        priority 0.{doc_id%11} only when doc_id%3==0 — the %11==10 case
-        pins the two-digit-fraction parse), then parsed back by the
-        distributed Arrow reader.  The oracle restates every entry row
-        arithmetically — loc-through-priority must round-trip."""
-        from ferenda_spark.operators.sitemaps import parse_sitemaps
-        did = F.col("doc_id")
-        entry = F.concat(
-            F.lit("<url><loc>https://site"), (did % 7).cast("string"),
-            F.lit(".com/p"), did.cast("string"), F.lit("</loc>"),
-            F.lit("<lastmod>2024-01-"),
-            F.lpad(((did % 28) + 1).cast("string"), 2, "0"),
-            F.lit("</lastmod>"),
-            F.when(did % 5 == 0,
-                   F.lit("<changefreq>daily</changefreq>"))
-            .otherwise(F.lit("")),
-            F.when(did % 3 == 0,
-                   F.concat(F.lit("<priority>0."),
-                            (did % 11).cast("string"),
-                            F.lit("</priority>"))).otherwise(F.lit("")),
-            F.lit("</url>"))
-        maps = (_docs(spark, sf)
-                .select((F.col("doc_id") % 7).alias("h"), entry.alias("e"))
-                .groupBy("h")
-                .agg(F.concat(
-                    F.lit('<urlset xmlns="http://www.sitemaps.org/'
-                          'schemas/sitemap/0.9">'),
-                    F.concat_ws("", F.collect_list("e")),
-                    F.lit("</urlset>")).alias("xml"))
-                .select(F.concat(F.lit("https://site"),
-                                 F.col("h").cast("string"),
-                                 F.lit(".com/sitemap.xml")).alias("url"),
-                        "xml"))
-        return _longify(
-            parse_sitemaps(maps)
-            .select("loc", "lastmod", "changefreq", "priority_milli"))
-    q["sitemap_discovery"] = sitemap_discovery
-
-    def fetch_schedule_docs(spark, sf):
-        """Politeness scheduling (crawl.py::schedule_fetches composed
-        with robots.py crawl-delay parsing): 50 synthetic hosts, even
-        hosts publish `Crawl-delay: h%7` (h%7==0 pins the zero-delay
-        case), odd hosts have no robots row (default 1 req/s); each
-        host's queue is url-ordered.  The oracle restates the per-host
-        row_number and the slot arithmetic."""
-        from ferenda_spark.operators.crawl import schedule_fetches
-        from ferenda_spark.operators.robots import parse_robots
-        robots = spark.createDataFrame(
-            [("site%d.com" % h,
-              "User-agent: *\nCrawl-delay: %d\n" % (h % 7))
-             for h in range(0, 50, 2)],
-            "domain string, robots_txt string")
-        did = F.col("doc_id")
-        frontier = _docs(spark, sf).select(
-            "doc_id",
-            F.concat(F.lit("https://site"), (did % 50).cast("string"),
-                     F.lit(".com/p"), did.cast("string")).alias("url"))
-        out = schedule_fetches(frontier, parse_robots(robots))
-        return _longify(out.select("doc_id", "host", "fetch_seq",
-                                   "not_before_millis"))
-    q["fetch_schedule_docs"] = fetch_schedule_docs
-
-    def jsonld_extract_docs(spark, sf):
-        """schema.org JSON-LD harvest (structured_data.py): pages with
-        an ld+json block synthesized from doc_id arithmetic (typed
-        node, integer literal, two-element array, @id-less nested
-        Person) are fed through the Arrow extractor; the oracle
-        restates all eight triples per page — CURIE expansion, literal
-        datatyping, array fan-out and the deterministic skolem
-        fragment of the nested node must all agree."""
-        from ferenda_spark.operators.structured_data import (
-            jsonld_triples,
-        )
-        did = F.col("doc_id").cast("string")
-        url = F.concat(F.lit("https://site"),
-                       (F.col("doc_id") % 7).cast("string"),
-                       F.lit(".com/p"), did)
-        block = F.concat(
-            F.lit('{"@context":"https://schema.org","@id":"'), url,
-            F.lit('","@type":"Article","headline":"Doc '), did,
-            F.lit('","wordCount":'),
-            (F.col("doc_id") % 997).cast("string"),
-            F.lit(',"keywords":["k'),
-            (F.col("doc_id") % 7).cast("string"), F.lit('","k'),
-            ((F.col("doc_id") + 1) % 7).cast("string"),
-            F.lit('"],"author":{"@type":"Person","name":"Author '),
-            (F.col("doc_id") % 50).cast("string"), F.lit('"}}'))
-        pages = _docs(spark, sf).select(
-            url.alias("url"),
-            F.concat(F.lit('<html><head>'
-                           '<script type="application/ld+json">'),
-                     block,
-                     F.lit("</script></head><body></body></html>"))
-            .alias("html"))
-        return (jsonld_triples(pages)
-                .filter(F.col("error").isNull())
-                .select("subj", "pred", "obj", "obj_is_literal",
-                        "obj_datatype", "obj_lang"))
-    q["jsonld_extract_docs"] = jsonld_extract_docs
-
-    def microdata_extract_docs(spark, sf):
-        """HTML microdata harvest (structured_data.py
-        microdata_triples): the attribute-markup leg of the Web Data
-        Commons triad.  Pages carry an itemscope Product (itemid
-        subject, text / meta@content / a@href property kinds) with a
-        nested @id-less Offer whose subject is the deterministic
-        pre-order skolem ``#md/1``; the oracle restates all seven
-        triples per page arm by arm."""
-        from ferenda_spark.operators.structured_data import (
-            microdata_triples,
-        )
-        did = F.col("doc_id").cast("string")
-        url = F.concat(F.lit("https://site"),
-                       (F.col("doc_id") % 7).cast("string"),
-                       F.lit(".com/p"), did)
-        html = F.concat(
-            F.lit('<html><body><div itemscope '
-                  'itemtype="https://schema.org/Product" itemid="'),
-            url, F.lit('#prod"><span itemprop="name">Product '), did,
-            F.lit('</span><meta itemprop="sku" content="SKU-'),
-            (F.col("doc_id") % 997).cast("string"),
-            F.lit('"><a itemprop="url" href="https://site'),
-            (F.col("doc_id") % 7).cast("string"), F.lit(".com/buy/"),
-            did, F.lit('">buy</a><div itemprop="offers" itemscope '
-                       'itemtype="https://schema.org/Offer">'
-                       '<span itemprop="price">'),
-            (F.col("doc_id") % 100).cast("string"),
-            F.lit("</span></div></div></body></html>"))
-        pages = _docs(spark, sf).select(url.alias("url"),
-                                        html.alias("html"))
-        return (microdata_triples(pages)
-                .filter(F.col("error").isNull())
-                .select("subj", "pred", "obj", "obj_is_literal",
-                        "obj_datatype", "obj_lang"))
-    q["microdata_extract_docs"] = microdata_extract_docs
-
-    def kg_scc(spark, sf):
-        """Strongly connected components (rank.py scc): FW/BW
-        min-label coloring over a deterministic 210-node webgraph —
-        21 ten-page link rings (the cycle structure components()
-        cannot see), one-way bridges between consecutive rings (a DAG
-        condensation), and five back chords that each merge two rings
-        into one 20-node SCC.  Oracle: recursive-CTE transitive
-        closure, comp = min over mutually-reachable ids."""
-        from ferenda_spark.operators.rank import scc
-        return scc(_scc_graph(spark, sf))
-    q["kg_scc"] = kg_scc
-
-    def _scc_graph(spark, sf):
-        """The deterministic 210-node ring/bridge/chord webgraph the
-        SCC-family gates share (see kg_scc docstring)."""
-        v = F.col("v")
-        d = (_docs(spark, sf)
-             .select((F.col("doc_id") % 210).alias("v")).distinct())
-        ring = d.select(v.alias("src"),
-                        (v - v % 10 + (v + 1) % 10).alias("dst"))
-        bridge = (d.filter((v % 10 == 0) & (v >= 10))
-                  .select(v.alias("src"), (v - 10).alias("dst")))
-        chord = (d.filter((v % 40 == 0) & (v <= 199))
-                 .select(v.alias("src"), (v + 10).alias("dst")))
-        return ring.unionByName(bridge).unionByName(chord)
-
-    def kg_condensation(spark, sf):
-        """Condensation DAG + dependency layering (rank.py
-        condensation/topo_levels composed over scc): the 210-node
-        ring/bridge/chord webgraph collapses to a 16-component chain
-        (five chord-merged 20-node SCCs + eleven single rings);
-        bridges orient ring k → ring k-1, so the ring-20 component is
-        the unique level-0 source and the merged rings-0/1 component
-        the level-15 sink.  Output (comp, level, n_members) — the
-        processing order incremental regeneration would schedule.
-        Oracle: the kg_scc mutual-reachability CTE, comp-projected
-        distinct edges, longest-path levels via recursive CTE."""
-        from ferenda_spark.operators.rank import (condensation, scc,
-                                                  topo_levels)
-        edges = _scc_graph(spark, sf).localCheckpoint(eager=True)
-        comps = scc(edges)
-        dag = condensation(edges, comps)
-        lv = topo_levels(dag.select(F.col("csrc").alias("src"),
-                                    F.col("cdst").alias("dst")))
-        members = (comps.groupBy("comp")
-                   .agg(F.count(F.lit(1)).alias("n_members")))
-        return (members
-                .join(lv.withColumnRenamed("node", "comp"), "comp",
-                      "left")
-                .select("comp",
-                        F.coalesce("level", F.lit(0).cast("long"))
-                        .alias("level"),
-                        "n_members"))
-    q["kg_condensation"] = kg_condensation
-
-    def kg_landmark_dist(spark, sf):
-        """Landmark BFS distances (rank.py landmark_distances): exact
-        hop distance from every node to landmarks {0, 7} over a
-        60-node doubling graph (v → v+1 mod 60 and v → 2v mod 60 —
-        log-diameter, the expander shape real webgraphs have); all
-        landmarks advance in ONE iterated frontier join.  Oracle:
-        recursive-CTE path enumeration bounded at depth 15, min per
-        (node, landmark)."""
-        from ferenda_spark.operators.rank import landmark_distances
-        v = F.col("v")
-        d = (_docs(spark, sf)
-             .select((F.col("doc_id") % 60).alias("v")).distinct())
-        edges = (d.select(v.alias("src"), ((v + 1) % 60).alias("dst"))
-                 .unionByName(
-                     d.select(v.alias("src"), ((v * 2) % 60).alias("dst"))))
-        lms = spark.createDataFrame([(0,), (7,)], "node long")
-        out = landmark_distances(edges, lms, max_depth=15)
-        return out.select(F.col("node").cast("long").alias("node"),
-                          F.col("landmark").cast("long").alias("landmark"),
-                          "dist")
-    q["kg_landmark_dist"] = kg_landmark_dist
-
-    def kg_harmonic_landmarks(spark, sf):
-        """Landmark-sampled harmonic centrality (rank.py
-        harmonic_centrality) over the same 60-node doubling graph
-        and {0, 7} landmark set as kg_landmark_dist — one combinable
-        groupBy over the distance rows, all-integer micro units.
-        Oracle: the recursive-CTE distances plus the identical
-        DIV arithmetic."""
-        from ferenda_spark.operators.rank import harmonic_centrality
-        v = F.col("v")
-        d = (_docs(spark, sf)
-             .select((F.col("doc_id") % 60).alias("v")).distinct())
-        edges = (d.select(v.alias("src"), ((v + 1) % 60).alias("dst"))
-                 .unionByName(
-                     d.select(v.alias("src"),
-                              ((v * 2) % 60).alias("dst"))))
-        lms = spark.createDataFrame([(0,), (7,)], "node long")
-        out = harmonic_centrality(edges, lms)
-        return out.select(F.col("node").cast("long").alias("node"),
-                          "k_reached", "inv_dist_sum_micro",
-                          "harmonic_micro")
-    q["kg_harmonic_landmarks"] = kg_harmonic_landmarks
-
-    def kg_assortativity(spark, sf):
-        """Degree assortativity (rank.py degree_assortativity) of the
-        citation graph: Pearson correlation of endpoint degrees over
-        distinct undirected edges — exact BIGINT sums, one double
-        expression, so the oracle reproduces r bit-for-bit.  Webgraphs
-        run disassortative; a positive r flags link-farm structure."""
-        from ferenda_spark.operators.rank import degree_assortativity
-        e = _kg_edges(spark, sf)
-        cites = (e.filter(F.col("pred") == "dcterms:references")
-                 .select(F.col("subj").alias("src"),
-                         F.col("obj").alias("dst")))
-        return degree_assortativity(cites)
-    q["kg_assortativity"] = kg_assortativity
-
-    def kg_class_links(spark, sf):
-        """Class-link matrix (voidstats.class_links): per (subject
-        class, predicate, object class) triple/distinct counts over
-        the KG — the VoID-linkset schema summary; multi-typed
-        entities count under min(class) (deterministic single class),
-        untyped endpoints under NULL so the matrix partitions the
-        non-type triples exactly."""
-        from ferenda_spark.operators.voidstats import class_links
-        return _longify(class_links(_kg_edges(spark, sf)))
-    q["kg_class_links"] = kg_class_links
-
-    def zorder_layout_docs(spark, sf):
-        """Z-order layout key (operators/layout.py): the Morton
-        interleave of two derived dimensions as one codegen BIGINT —
-        the multi-dim file-pruning sort key for the Iceberg graph
-        tables.  Oracle: the identical shift/mask spread chain in
-        DuckDB (both engines are signed-64 with the same &,|,<<)."""
-        from ferenda_spark.operators.layout import zorder_key2
-        did = F.col("doc_id")
-        return _docs(spark, sf).select(
-            "doc_id",
-            zorder_key2(did % 1024, (did * 37) % 1024).alias("zkey"))
-    q["zorder_layout_docs"] = zorder_layout_docs
-
-    def kg_fused_metadata(spark, sf):
-        """Structured+unstructured fusion: schema.org blocks whose
-        pages declare ``"sameAs": {"@id": <stable doc uri>}`` (the
-        standard web-markup idiom for canonical identity) are
-        harvested by structured_data.py, then infer.py's sameAs
-        canonicalization rewrites every page-url-keyed triple onto
-        the stable uri — web metadata lands on the SAME nodes the
-        text pipeline mints, with identity links consumed rather
-        than left for query-time UNIONs.  The canonical spelling is
-        the cluster min (id.example.org < site*.com throughout)."""
-        from ferenda_spark.operators.infer import sameas_canonicalize
-        from ferenda_spark.operators.structured_data import (
-            jsonld_triples,
-        )
-        did = F.col("doc_id").cast("string")
-        url = F.concat(F.lit("https://site"),
-                       (F.col("doc_id") % 7).cast("string"),
-                       F.lit(".com/p"), did)
-        canon = F.concat(F.lit("https://id.example.org/doc/"), did)
-        block = F.concat(
-            F.lit('{"@context":"https://schema.org","@id":"'), url,
-            F.lit('","@type":"Article","headline":"Doc '), did,
-            F.lit('","sameAs":{"@id":"'), canon, F.lit('"}}'))
-        pages = _docs(spark, sf).select(
-            url.alias("url"),
-            F.concat(F.lit('<script type="application/ld+json">'),
-                     block, F.lit("</script>")).alias("html"))
-        t = (jsonld_triples(pages).filter(F.col("error").isNull())
-             .select("subj", "pred", "obj"))
-        return sameas_canonicalize(t, sameas_pred="schema:sameAs")
-    q["kg_fused_metadata"] = kg_fused_metadata
-
-    def _cdx_lines(spark, sf, capture: int):
-        """One synthetic CDXJ line per doc for capture 0 or 1."""
-        did = F.col("doc_id")
-        ds = did.cast("string")
-        if capture == 0:
-            ts, status = F.concat(F.lit("2023"), F.lpad(ds, 10, "0")), \
-                F.lit("200")
-            fname, off, ln = "w0.warc.gz", did * 10, 5
-        else:
-            ts = F.concat(F.lit("2024"), F.lpad(ds, 10, "0"))
-            status = F.when(did % 3 == 0, "500").otherwise("200")
-            fname, off, ln = "w1.warc.gz", did * 20, 7
-        return _docs(spark, sf).select(F.concat(
-            F.lit("com,site"), (did % 7).cast("string"), F.lit(")/p"),
-            ds, F.lit(" "), ts,
-            F.lit(' {"url": "https://site'), (did % 7).cast("string"),
-            F.lit(".com/p"), ds, F.lit('", "status": "'), status,
-            F.lit('", "mime": "text/html", "filename": "' + fname
-                  + '", "offset": "'), off.cast("string"),
-            F.lit('", "length": "%d"}' % ln)).alias("line"))
-
-    def cdx_latest_capture(spark, sf):
-        """CDXJ index parse + newest-OK-capture dedup (sources/
-        cdx.py): two synthetic crawls per url — the 2024 capture wins
-        except where its status is 500 (every third doc), which falls
-        back to the 2023 capture.  Oracle restates the winner
-        arithmetically."""
-        from ferenda_spark.sources.cdx import latest_capture, parse_cdxj
-        lines = (_cdx_lines(spark, sf, 0)
-                 .unionByName(_cdx_lines(spark, sf, 1)))
-        return latest_capture(parse_cdxj(lines)).select(
-            "surt", "ts", "url", "filename", "offset", "length")
-    q["cdx_latest_capture"] = cdx_latest_capture
-
-    def cdx_fetch_plan(spark, sf):
-        """Byte-range read planning over the parsed index: per WARC
-        file, records 80 bytes apart (gap 30 ≤ 32: merge) in runs of
-        four, then a 1000-byte jump (new segment) — the full
-        lines → parse → coalesced-ranges chain.  Oracle restates the
-        segment arithmetic."""
-        from ferenda_spark.sources.cdx import fetch_plan, parse_cdxj
-        did = F.col("doc_id")
-        r = F.expr("doc_id div 5")
-        offset = r * 80 + F.expr("(doc_id div 5) div 4") * 1000
-        lines = _docs(spark, sf).select(F.concat(
-            F.lit("com,site)/p"), did.cast("string"), F.lit(" 2024"),
-            F.lpad(did.cast("string"), 10, "0"),
-            F.lit(' {"url": "https://site.com/p'), did.cast("string"),
-            F.lit('", "status": "200", "filename": "w'),
-            (did % 5).cast("string"),
-            F.lit('.warc.gz", "offset": "'), offset.cast("string"),
-            F.lit('", "length": "50"}')).alias("line"))
-        return fetch_plan(parse_cdxj(lines))
-    q["cdx_fetch_plan"] = cdx_fetch_plan
-
-    def redirect_resolution(spark, sf):
-        """HTTP redirect-chain resolution (crawl.py
-        resolve_redirects): synthetic chains r(did) -> r(did-1)
-        ending at multiples of 5 (1-4 hops) plus one deliberate
-        2-cycle c1 <-> c2; pointer doubling (4 rounds = 16 hops)
-        resolves every chain and reports the cycle loudly as
-        resolved=false.  Oracle = hop-bounded recursive CTE with the
-        identical min(dst) capture collapse."""
-        from ferenda_spark.operators.crawl import resolve_redirects
-        did = F.col("doc_id")
-        r = F.lit("https://m.example.org/r")
-        chain = (_docs(spark, sf).filter(did % 5 != 0)
-                 .select(F.concat(r, did.cast("string")).alias("src"),
-                         F.concat(r, (did - 1).cast("string"))
-                         .alias("dst")))
-        c = F.lit("https://m.example.org/c")
-        cyc = (_docs(spark, sf).filter(did.isin(1, 2))
-               .select(F.concat(c, did.cast("string")).alias("src"),
-                       F.concat(c, (F.lit(3) - did).cast("string"))
-                       .alias("dst")))
-        return _longify(resolve_redirects(chain.unionByName(cyc)))
-    q["redirect_resolution"] = redirect_resolution
-
-    def kg_host_graph(spark, sf):
-        """Host-level webgraph projection (crawl.py host_graph): two
-        synthetic cross-site links per doc over a 7-host universe,
-        intra-host links dropped, weights = link count + distinct
-        source pages.  Oracle restates the host arithmetic and the
-        GROUP BY."""
-        from ferenda_spark.operators.crawl import host_graph
-        did = F.col("doc_id")
-        src = F.concat(F.lit("https://site"), (did % 7).cast("string"),
-                       F.lit(".com/p"), did.cast("string"))
-        e1 = _docs(spark, sf).select(
-            src.alias("src"),
-            F.concat(F.lit("https://site"), (did % 5).cast("string"),
-                     F.lit(".com/x"), did.cast("string")).alias("dst"))
-        e2 = _docs(spark, sf).select(
-            src.alias("src"),
-            F.concat(F.lit("https://site"),
-                     ((did + 3) % 7).cast("string"),
-                     F.lit(".com/y"),
-                     F.expr("doc_id div 2").cast("string"))
-            .alias("dst"))
-        return host_graph(e1.unionByName(e2))
-    q["kg_host_graph"] = kg_host_graph
-
-    def kg_host_rank(spark, sf):
-        """Domain-authority ranking: the host-graph projection
-        (crawl.py host_graph) composed with integer PageRank
-        (rank.py pagerank) — the Common-Crawl-style host-rank signal
-        a web curation pipeline uses for seed prioritization and
-        quota weighting.  A wider 97/89-host universe than the
-        kg_host_graph gate so the rank vector has real structure;
-        the oracle re-derives the distinct host edges and unrolls
-        the same three BIGINT iterations."""
-        from ferenda_spark.operators.crawl import host_graph
-        from ferenda_spark.operators.rank import pagerank
-        did = F.col("doc_id")
-        src = F.concat(F.lit("https://site"), (did % 97).cast("string"),
-                       F.lit(".com/p"), did.cast("string"))
-        e1 = _docs(spark, sf).select(
-            src.alias("src"),
-            F.concat(F.lit("https://site"), (did % 89).cast("string"),
-                     F.lit(".com/x"), did.cast("string")).alias("dst"))
-        e2 = _docs(spark, sf).select(
-            src.alias("src"),
-            F.concat(F.lit("https://site"),
-                     ((did + 31) % 97).cast("string"),
-                     F.lit(".com/y"), did.cast("string")).alias("dst"))
-        hg = host_graph(e1.unionByName(e2))
-        pr = pagerank(hg.select(F.col("src_host").alias("src"),
-                                F.col("dst_host").alias("dst")),
-                      iters=3).withColumnRenamed("node", "host")
-        return analytics.ranked_topk(
-            pr, [("rank_micro", True), ("host", False)], 20)
-    q["kg_host_rank"] = kg_host_rank
-
-    def crawl_churn_docs(spark, sf):
-        """Crawl-over-crawl change detection (crawl.py snapshot_churn
-        → host_churn): two synthetic snapshots of the same url space
-        — 1-in-7 urls new, 1-in-11 gone, 1-in-5 of the survivors
-        rehashed (modified) — classified per url by ONE full-outer
-        hash join, then profiled per host with integer per-mille
-        churn for recrawl budgeting.  Oracle restates the join and
-        every conditional count."""
-        from ferenda_spark.operators.crawl import (host_churn,
-                                                   snapshot_churn)
-        d = _docs(spark, sf)
-        did = F.col("doc_id")
-        url = F.concat(F.lit("https://site"), (did % 13).cast("string"),
-                       F.lit(".com/d"), did.cast("string"))
-        old_text = F.when(did % 5 == 0,
-                          F.concat(F.col("text"), F.lit(":v1"))) \
-                    .otherwise(F.col("text"))
-        prev = d.filter(did % 7 != 3).select(
-            url.alias("url"),
-            F.md5(F.encode(old_text, "UTF-8")).alias("content_hash"))
-        curr = d.filter(did % 11 != 4).select(
-            url.alias("url"),
-            F.md5(F.encode(F.col("text"), "UTF-8")).alias("content_hash"))
-        return host_churn(snapshot_churn(prev, curr))
-    q["crawl_churn_docs"] = crawl_churn_docs
-
-    def revisit_schedule_docs(spark, sf):
-        """Recrawl scheduling (crawl.py revisit_schedule over the
-        crawl_churn_docs fixture): per host the Cho & Garcia-Molina
-        bias-corrected change-rate estimate λ̂ = -ln((n-X+.5)/(n+.5))/Δ
-        over surviving pages (Δ = 7 days between the snapshots) and
-        the 1/λ̂ revisit interval clamped to [1h, 30d] — churning
-        hosts earn short intervals.  Exact-integer counts, one double
-        expression, oracle bit-identical."""
-        from ferenda_spark.operators.crawl import (host_churn,
-                                                   revisit_schedule,
-                                                   snapshot_churn)
-        d = _docs(spark, sf)
-        did = F.col("doc_id")
-        url = F.concat(F.lit("https://site"), (did % 13).cast("string"),
-                       F.lit(".com/d"), did.cast("string"))
-        old_text = F.when(did % 5 == 0,
-                          F.concat(F.col("text"), F.lit(":v1"))) \
-                    .otherwise(F.col("text"))
-        prev = d.filter(did % 7 != 3).select(
-            url.alias("url"),
-            F.md5(F.encode(old_text, "UTF-8")).alias("content_hash"))
-        curr = d.filter(did % 11 != 4).select(
-            url.alias("url"),
-            F.md5(F.encode(F.col("text"), "UTF-8")).alias("content_hash"))
-        prof = host_churn(snapshot_churn(prev, curr))
-        return revisit_schedule(prof, interval_s=7 * 86400)
-    q["revisit_schedule_docs"] = revisit_schedule_docs
-
-    def script_mix_docs(spark, sf):
-        """Unicode script profile (textstats.script_mix): per doc_id
-        class a Cyrillic / CJK / Greek suffix is injected (class 0
-        mixes Latin WITH Cyrillic — the homograph-spoofing shape);
-        counts per script family, dominant script by fixed-order
-        strict-max, and the latin_cyrillic_mix flag.  Oracle: the
-        identical ranges (imported from the operator) via
-        regexp_extract_all + the same CASE cascade."""
-        from ferenda_spark.operators.textstats import script_mix
-        did = F.col("doc_id")
-        t = F.concat(
-            F.col("text"),
-            F.when(did % 4 == 0, " раураl сайт")
-            .when(did % 4 == 1, " 漢字テスト文書")
-            .when(did % 4 == 2, " ελληνικά γράμματα")
-            .otherwise(""))
-        docs = _docs(spark, sf).select("doc_id", t.alias("text"))
-        return script_mix(docs)
-    q["script_mix_docs"] = script_mix_docs
-
-    def sim_pq_topk(spark, sf):
-        """Product-quantization ANN (similarity.pq_topk, the Jégou
-        ADC construction): 64-dim embeddings → 8 sub-space codes
-        (codebooks = sub-slices of the 16 lowest-id vectors, the IVF
-        seed convention), queries scored via per-query distance
-        tables over the codes only — the compressed-domain search
-        that turns 10^12×64 floats into 8-byte codes.  Exact int64
-        milli-quantized metric throughout, so the oracle replays
-        every code assignment, table cell and rank."""
-        from ferenda_spark.operators.similarity import pq_topk
-        embs = load_table(spark, sf, "embeddings")
-        queries = (embs.filter(F.col("vec_id") < 10)
-                   .select(F.col("vec_id").alias("query_id"),
-                           "embedding"))
-        return _longify(pq_topk(embs, queries, dim=64))
-    q["sim_pq_topk"] = sim_pq_topk
-
-    def graph_random_walks(spark, sf):
-        """Graph-embedding walk corpus (rank.py random_walks): one
-        deterministic 3-step walk per node over the halving graph
-        n(did) -> n(did div 2) / n(did div 3) (did > 0; n0 is the
-        sink).  The oracle re-derives every hop: argmin of the
-        salted-md5 variate h('walk-v1':walk_id:t:v) over the
-        neighbors, the exact skip-gram input a re-run or another
-        engine must reproduce."""
-        from ferenda_spark.operators.rank import random_walks
-        did = F.col("doc_id")
-        docs = _docs(spark, sf).filter(did > 0)
-        n = lambda c: F.concat(F.lit("n"), c.cast("string"))
-        adj = (docs.select(n(did).alias("src"),
-                           n(F.expr("doc_id div 2")).alias("dst"))
-               .unionByName(
-                   docs.select(n(did).alias("src"),
-                               n(F.expr("doc_id div 3")).alias("dst"))))
-        return _longify(random_walks(adj))
-    q["graph_random_walks"] = graph_random_walks
-
-    def curation_pipeline_docs(spark, sf):
-        """The round-3 curation toolkit composed end-to-end, the way
-        a mixing job actually runs it: strip corpus-frequency
-        boilerplate → redact PII → drop exact duplicates of the
-        cleaned text (min-id keeper) → deterministic per-language
-        mixture sample. Every stage is an existing gated operator;
-        the oracle recomposes the identical chain in SQL."""
-        from ferenda_spark.operators import sampling
-        d = _docs(spark, sf).select("doc_id", "lang", "text")
-        did = F.col("doc_id")
-        inj = d.select("doc_id", "lang", F.concat(
-            F.col("text"),
-            F.when(did % 2 == 0,
-                   F.lit(". Subscribe to our newsletter today")
-                   ).otherwise(F.lit("")),
-            F.when(did % 7 == 0,
-                   F.concat(F.lit(". contact user"), did.cast("string"),
-                            F.lit("@example.com"))).otherwise(F.lit("")),
-        ).alias("text"))
-        stripped = dedup.strip_boilerplate(inj).select(
-            F.col("id").alias("doc_id"), F.col("clean_text"))
-        redacted = textstats.redact_pii(
-            stripped, text_col="clean_text").select(
-            "doc_id", F.col("clean_text").alias("final_text"))
-        keepers = dedup.exact_dedup(
-            redacted, text_col="final_text", id_col="doc_id").select(
-            F.col("keeper_id").alias("doc_id"), "text_md5")
-        sampled = sampling.stratified_sample(
-            keepers.join(d.select("doc_id", "lang"), "doc_id"),
-            {"en": 0.8}, default_rate=0.5)
-        return _longify(sampled.select("doc_id", "lang", "text_md5"))
-    q["curation_pipeline_docs"] = curation_pipeline_docs
-
-    def curation_pipeline_v3(spark, sf):
-        """The round-3-late toolkit composed end-to-end: URL/domain
-        blocklist filter → hashed-feature quality classifier →
-        keep-first duplicate-unit removal → exact-dedup keeper. Every
-        stage is an existing driver-gated operator; the oracle
-        recomposes the identical chain in SQL."""
-        from ferenda_spark.operators.classify import quality_score
-        from ferenda_spark.operators.webfilter import domain_filter
-        d = _docs(spark, sf).select("doc_id", "lang", "text")
-        did = F.col("doc_id")
-        tld = (F.when(did % 3 == 0, "com")
-               .when(did % 3 == 1, "org").otherwise("co.uk"))
-        withurl = d.withColumn("url", F.concat(
-            F.lit("https://"),
-            F.when(did % 5 == 0, "sub.").otherwise(""),
-            F.lit("site"), (did % 20).cast("string"), F.lit("."), tld,
-            F.lit("/p/"), did.cast("string")))
-        vetted = domain_filter(
-            withurl, blocklist=[f"site{k}.co.uk" for k in range(20)])
-        quality = quality_score(vetted).filter(F.col("keep")) \
-            .select(F.col("id").alias("doc_id"))
-        good = vetted.join(quality, "doc_id", "left_semi")
-        uniq = dedup.dedup_units_keepfirst(good).select(
-            F.col("id").alias("doc_id"), "clean_text")
-        keepers = dedup.exact_dedup(
-            uniq, text_col="clean_text", id_col="doc_id").select(
-            F.col("keeper_id").alias("doc_id"), "text_md5")
-        return _longify(
-            keepers.join(d.select("doc_id", "lang"), "doc_id")
-            .select("doc_id", "lang", "text_md5"))
-    q["curation_pipeline_v3"] = curation_pipeline_v3
-
-    def toc_documents(spark, sf):
-        d = _docs(spark, sf)
-        toc = analytics.toc_pages(d.select("lang", "source"),
-                                  "lang", "source")
-        return _longify(toc.select(
-            "lang", F.array_join("titles", ",").alias("titles_csv"), "n"))
-    q["toc_documents"] = toc_documents
-
-    def mint_documents(spark, sf):
-        from ferenda_spark.functions.minting import UriTemplate, mint
-        d = _docs(spark, sf).select(
-            "doc_id", "source",
-            F.when(F.col("doc_id") % 2 == 0,
-                   F.col("doc_id")).alias("even_id"))
-        templates = [
-            UriTemplate(priority=1, uri_template="res/even/{even_id}",
-                        bindings=["even_id"]),
-            UriTemplate(priority=2, uri_template="res/src/{source}",
-                        bindings=["source"], slug=["source"]),
-        ]
-        return mint(d, templates, BASE).select("doc_id", "uri")
-    q["mint_documents"] = mint_documents
-
-    def patch_documents(spark, sf):
-        """G10: per-document unified-diff patches (reference
-        patch_if_needed) — applied patch upcases line 2; a bogus-
-        context patch must flag 'conflict' and keep the text."""
-        from ferenda_spark.operators import patch as patch_op
-        d = _docs(spark, sf)
-        words = F.split(F.col("text"), " ")
-        l1 = F.array_join(F.slice(words, 1, 10), " ")
-        l2 = F.array_join(F.slice(words, 11, 10), " ")
-        l3 = F.array_join(F.slice(words, 21, 1000000), " ")
-        base = d.select("doc_id",
-                        F.concat_ws("\n", l1, l2, l3).alias("text"),
-                        l1.alias("_l1"), l2.alias("_l2"), l3.alias("_l3"))
-        good = base.filter(F.col("doc_id") % 5 == 0).select(
-            "doc_id",
-            F.concat_ws(
-                "\n",
-                F.lit("@@ -1,3 +1,3 @@ normalize line2"),
-                F.concat(F.lit(" "), F.col("_l1")),
-                F.concat(F.lit("-"), F.col("_l2")),
-                F.concat(F.lit("+"), F.upper(F.col("_l2"))),
-                F.concat(F.lit(" "), F.col("_l3"))).alias("patch"))
-        bad = base.filter(F.col("doc_id") % 5 == 3).select(
-            "doc_id",
-            F.concat_ws(
-                "\n",
-                F.lit("@@ -1,2 +1,2 @@ bogus"),
-                F.lit(" THIS CONTEXT DOES NOT EXIST"),
-                F.lit("-NOR THIS"),
-                F.lit("+REPLACEMENT")).alias("patch"))
-        out = patch_op.apply_patches(base.select("doc_id", "text"),
-                                     good.unionByName(bad))
-        return out.select("doc_id", "patched_text",
-                          "patch_status", "patch_desc")
-    q["patch_documents"] = patch_documents
-
-    def sim_topk_cosine(spark, sf):
-        emb = load_table(spark, sf, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        return _longify(similarity.cosine_topk(emb, qs))
-    q["sim_topk_cosine"] = sim_topk_cosine
-
-    def sim_lsh_topk(spark, sf):
-        emb = load_table(spark, sf, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        return _longify(similarity.lsh_topk(emb, qs, dim=64))
-    q["sim_lsh_topk"] = sim_lsh_topk
-
-    def sim_ivf_topk(spark, sf):
-        """IVF-list ANN: 8 seed-sampled centroid lists, nprobe=2."""
-        emb = load_table(spark, sf, "embeddings")
-        qs = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding")
-        return _longify(similarity.ivf_topk(
-            emb, qs, dim=64))
-    q["sim_ivf_topk"] = sim_ivf_topk
-
-    def sim_ann_topk(spark, sf):
-        """The three ANN strategies — exact brute-force cosine,
-        banded hyperplane LSH, and IVF list-probe — value-checked
-        side by side in ONE gate (identical (query_id, item_id,
-        cos_sim, rank) shape, tagged by `method`).  The individual
-        paths stay in extra_queries() for per-method bench timing."""
-        out = sim_topk_cosine(spark, sf).withColumn(
-            "method", F.lit("brute"))
-        for m, fn in (("lsh", sim_lsh_topk), ("ivf", sim_ivf_topk)):
-            out = out.unionByName(
-                fn(spark, sf).withColumn("method", F.lit(m)))
-        return out
-    q["sim_ann_topk"] = sim_ann_topk
-
-    def sim_label_centroids(spark, sf):
-        emb = load_table(spark, sf, "embeddings")
-        return _longify(similarity.label_centroids(emb, dim=64))
-    q["sim_label_centroids"] = sim_label_centroids
-
-    def sim_embedding_neardup(spark, sf):
-        emb = load_table(spark, sf, "embeddings")
-        return _longify(similarity.embedding_near_dup_pairs(
-            emb, dim=64, threshold=0.4))
-    q["sim_embedding_neardup"] = sim_embedding_neardup
-
-    def sim_semantic_dedup(spark, sf):
-        """SemDeDup: one survivor per connected component of the
-        cos ≥ 0.4 near-dup pair graph (banded-LSH blocked)."""
-        emb = load_table(spark, sf, "embeddings")
-        return _longify(similarity.semantic_dedup(
-            emb, dim=64))
-    q["sim_semantic_dedup"] = sim_semantic_dedup
-
-    def sim_semantic_dedup_auto(spark, sf):
-        """SemDeDup under corpus-auto-sized LSH (round 5): the same
-        epsilon-grouping, with planes_per_band="auto" deriving
-        (bands, planes) from one corpus count via lsh_params_for.
-        The corpus is PINNED to vec_id < 200 so the derived grid —
-        (22 bands, 5 planes) at threshold 0.4 — is a static shape
-        the oracle restates exactly; bigger corpora exercise the
-        sizing in BENCH.md's sf1 probe, exactness lives here."""
-        emb = (load_table(spark, sf, "embeddings")
-               .filter(F.col("vec_id") < 200))
-        return _longify(similarity.semantic_dedup(
-            emb, dim=64, planes_per_band="auto"))
-    q["sim_semantic_dedup_auto"] = sim_semantic_dedup_auto
-
-    def text_metrics(spark, sf):
-        """A7 + curation feature vector: token stats, quality,
-        language ID, fingerprints, and Gopher-style repetition
-        signals in ONE row-local projection (one scan, zero
-        shuffles) — the per-document feature row a training-data
-        curation job computes."""
-        return _longify(textstats.text_metrics(_docs(spark, sf)))
-    q["text_metrics"] = text_metrics
-
-    def gopher_rules_docs(spark, sf):
-        """The Gopher rule-based quality filter (word-count band,
-        mean word length, symbol/bullet/ellipsis ratios, alphabetic
-        fraction, required stopwords) — one codegen projection, zero
-        shuffles; every band replayed verbatim in the oracle."""
-        return _longify(textstats.gopher_rules(_docs(spark, sf)))
-    q["gopher_rules_docs"] = gopher_rules_docs
-
-    def profile_documents(spark, sf):
-        """Deequ-style per-column profile of the ingest table in one
-        aggregation pass: row/null/distinct counts, completeness,
-        min/max per column."""
-        from ferenda_spark.operators import profile as prof
-        return prof.profile(
-            _docs(spark, sf),
-            ["doc_id", "text", "lang", "source", "n_chars"])
-    q["profile_documents"] = profile_documents
-
-    def quantiles_documents(spark, sf):
-        """Exact interpolated percentiles (percentile_cont semantics)
-        per numeric column, one aggregation pass."""
-        from ferenda_spark.operators import profile as prof
-        return prof.numeric_quantiles(
-            _docs(spark, sf))
-    q["quantiles_documents"] = quantiles_documents
-
-    def check_documents(spark, sf):
-        """Declarative constraint checks over one profile pass:
-        uniqueness of the id, completeness of every column, value
-        bounds, language diversity — pass/fail per constraint, never
-        a throw."""
-        from ferenda_spark.operators import profile as prof
-        return prof.check(_docs(spark, sf), DOC_CHECKS)
-    q["check_documents"] = check_documents
-
-    def _boxes(spark, sf):
-        """Deterministic synthetic PDF-textbox table (the decode step
-        is a declared codec stub — operators/boxes.py docstring);
-        mirrored by _BOXES_SQL in the oracles."""
-        d = _docs(spark, sf).select("doc_id")
-        b = d.select("doc_id", F.explode(
-            F.sequence(F.lit(0), F.lit(19))).alias("i"))
-        i = F.col("i")
-        left = (F.when(i % 5 == 4, 320 + i)
-                .when(i % 7 == 0, 60 + i)
-                .otherwise(F.lit(100)))
-        top = F.when(i == 0, F.lit(10)).otherwise(80 + (i * 37) % 600)
-        size = (F.when(i % 10 == 1, 16)
-                .when((i % 10 == 2) & (F.col("doc_id") % 2 == 0), 12)
-                .when(i % 15 == 3, 5)
-                .otherwise(F.lit(10)))
-        fam = (F.when(i % 10 == 1, F.lit("Serif-Bold"))
-               .when((i % 10 == 2) & (F.col("doc_id") % 2 == 0),
-                     F.lit("Serif-Italic"))
-               .otherwise(F.lit("Serif")))
-        return b.select(
-            "doc_id", (i % 4).alias("page_no"),
-            F.lit(600).alias("page_width"),
-            F.lit(800).alias("page_height"),
-            left.alias("left"), (left + 380).alias("right"),
-            top.alias("top"), (top + 12).alias("bottom"),
-            fam.alias("font_family"), size.alias("font_size"),
-            F.when(i == 0, 2).otherwise(40 + (i * 13) % 40)
-            .alias("n_chars"))
-
-    def pdf_margin_metrics(spark, sf):
-        """A9: char-weighted margin modes + significance-threshold
-        header/footer zones over the textbox table."""
-        from ferenda_spark.operators import boxes as boxes_op
-        return _longify(boxes_op.margin_metrics(_boxes(spark, sf)))
-    q["pdf_margin_metrics"] = pdf_margin_metrics
-
-    def pdf_style_metrics(spark, sf):
-        """A8: style hierarchy (default/h1..h3/footnoteref) by
-        char-weighted font usage."""
-        from ferenda_spark.operators import boxes as boxes_op
-        return _longify(boxes_op.style_metrics(_boxes(spark, sf)))
-    q["pdf_style_metrics"] = pdf_style_metrics
-
-    def fragments_udtf(spark, sf):
-        """§2.11 UDTF surface: LATERAL word-chunk expansion."""
-        from ferenda_spark.functions import tablefns
-        tablefns.register(spark)
-        _docs(spark, sf).createOrReplaceTempView("docs_udtf_in")
-        return _longify(spark.sql(
-            "SELECT doc_id, f.frag_no, f.fragment "
-            "FROM docs_udtf_in, LATERAL chunk_words(text, 10) AS f"))
-    q["fragments_udtf"] = fragments_udtf
-
-    def url_canonical_dedup(spark, sf):
-        """Canonical-URL dedup: five messy variants per page (case,
-        default port, trailing slash, param order, fragment) must
-        collapse to ONE canonical key; the oracle states the expected
-        canonical form independently."""
-        from ferenda_spark.functions.web import canonical_url_col
-        d = _docs(spark, sf)
-        k = (F.col("doc_id") % 100).cast("string")
-        m = F.floor(F.col("doc_id") / 100) % 5
-        messy = (
-            F.when(m == 0, F.concat(
-                F.lit("http://example.com/p/"), k, F.lit("?a=1&b=2")))
-            .when(m == 1, F.concat(
-                F.lit("HTTP://EXAMPLE.COM/p/"), k, F.lit("?a=1&b=2")))
-            .when(m == 2, F.concat(
-                F.lit("http://example.com:80/p/"), k, F.lit("?a=1&b=2")))
-            .when(m == 3, F.concat(
-                F.lit("http://example.com/p/"), k, F.lit("/?b=2&a=1")))
-            .otherwise(F.concat(
-                F.lit("http://example.com/p/"), k,
-                F.lit("?a=1&b=2#sec-3"))))
-        return _longify(
-            d.select(canonical_url_col(messy).alias("canonical_url"))
-            .groupBy("canonical_url")
-            .agg(F.count(F.lit(1)).alias("n_variants")))
-    q["url_canonical_dedup"] = url_canonical_dedup
-
-    def media_meta(spark, sf):
-        media = multimodal.attach_media(_docs(spark, sf))
-        return _longify(multimodal.media_metadata(media))
-    q["media_meta"] = media_meta
-
-    def streaming_hourly_events(spark, sf):
-        e = load_table(spark, sf, "events")
-        return _longify(
-            e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.round(F.sum("value"), 2).alias("total_value"))
-            .select(F.col("w.start").cast("string").alias("hour"),
-                    "event_type", "n", "total_value"))
-    q["streaming_hourly_events"] = streaming_hourly_events
-
-    def salted_join_suppliers(spark, sf):
-        li = load_table(spark, sf, "lineitem").select(
-            F.col("l_suppkey").alias("s_suppkey"), "l_quantity")
-        s = load_table(spark, sf, "supplier").select("s_suppkey", "s_name")
-        joined = analytics.salted_join(li, s, "s_suppkey")
-        return _longify(
-            joined.groupBy("s_name")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.round(F.sum("l_quantity"), 2).alias("total_qty")))
-    q["salted_join_suppliers"] = salted_join_suppliers
-
-    def first_success_events(spark, sf):
-        # J6 composite coalesce: per user, the first (lowest event_id)
-        # event that "succeeded" (value > 1), sources tried in order
-        e = load_table(spark, sf, "events")
-        return _longify(analytics.first_success(
-            e.select("user_id", "event_id", "event_type", "value"),
-            key="user_id", priority_col="event_id").withColumn(
-                "value", F.round("value", 2)))
-    q["first_success_events"] = first_success_events
-
-    def entity_link_fuzzy(spark, sf):
-        """J1 fuzzy phase, value-gated: the PUBLISHERS fixture
-        *declares* which variants must link (close, ratio ≥ 0.8) and
-        which must NOT (far) — the oracle is that declaration, so the
-        difflib cutoff semantics are checked against data designed
-        for it, not re-derived."""
-        from ferenda_spark.fixtures.pages import PUBLISHERS
-        rows = []
-        for canonical, close, far in PUBLISHERS:
-            rows.append((canonical,))
-            rows += [(v,) for v in close] + [(v,) for v in far]
-        mentions = spark.createDataFrame(rows, "label string")
-        ents = entities_df(spark).filter(F.col("kind") == "publisher")
-        return link_labels(mentions, ents).select("label", "entity_uri")
-    q["entity_link_fuzzy"] = entity_link_fuzzy
-
-    return q
-
-
-# ---------------------------------------------------------------------------
-# oracles
-# ---------------------------------------------------------------------------
-
-def oracle_sql() -> dict[str, str]:
-    """Oracles for the 50 driver-gated queries, in GATE_ORDER."""
-    allo = _all_oracles()
-    return {n: allo[n] for n in GATE_ORDER if n in allo}
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    """Oracles for extra_queries() — checked locally, not by the
-    driver."""
-    allo = _all_oracles()
-    return {n: s for n, s in allo.items() if n not in GATE_ORDER}
-
-
-def _all_oracles() -> dict[str, str]:
-    o: dict[str, str] = {}
-
-    o["kg_extract_text"] = f"""
-WITH {_F_CTE}
-SELECT url, md5({_EXPECTED_TEXT}) AS text_md5 FROM f
-"""
-    # the WARC roundtrip must reproduce the identical per-url text:
-    # same oracle as the direct extract gate
-    o["warc_extract_text"] = o["kg_extract_text"]
-
-    # WET roundtrip: identity — url/ts/text reconstructed from
-    # documents exactly as the gate synthesized them (second-precision
-    # ts is preserved by the WARC date format)
-    o["wet_roundtrip_docs"] = """
-SELECT 'https://w.example/doc/' || CAST(doc_id AS VARCHAR) AS url,
-       strftime(TIMESTAMP '2024-03-01 00:00:00'
-                + to_seconds(doc_id % 86400), '%Y-%m-%d %H:%M:%S')
-         AS ts,
-       md5(text) AS text_md5
-FROM documents
-"""
-
-    # WAT link edges rebuilt arithmetically: two anchors per page
-    o["wat_links_docs"] = """
-SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR) AS src,
-       'https://example.org/res/doc/'
-         || CAST(doc_id * 7 % 499 + 1 AS VARCHAR) AS dst
-FROM documents
-UNION ALL
-SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR),
-       'https://example.org/res/doc/'
-         || CAST(doc_id * 13 % 499 + 1 AS VARCHAR)
-FROM documents
-"""
-
-    # unicode canonicalization via DuckDB's utf8proc: identical
-    # injected suffix (combining acute, precomposed e-acute,
-    # combining ring), md5 over the UTF-8 bytes both sides
-    o["unicode_norm_docs"] = """
-WITH t AS (
-  SELECT doc_id,
-         text || ' cafe' || chr(769) || ' ' || chr(233)
-              || ' a' || chr(778) || 'gang' AS text
-  FROM documents)
-SELECT doc_id,
-       md5(nfc_normalize(text)) AS nfc_md5,
-       md5(strip_accents(text)) AS folded_md5
-FROM t
-"""
-
-    o["kg_edges"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT * FROM golden
-"""
-
-    o["kg_void_description"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT pred, count(*) AS n_triples,
-       CAST(count(DISTINCT subj) AS BIGINT) AS n_subjects,
-       CAST(count(DISTINCT obj) AS BIGINT) AS n_objects
-FROM golden GROUP BY pred
-"""
-
-    o["kg_class_partitions"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT obj AS rdf_class,
-       CAST(count(DISTINCT subj) AS BIGINT) AS n_entities
-FROM golden WHERE pred = 'rdf:type' GROUP BY obj
-"""
-
-    o["kg_degree_histogram"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-outd AS (SELECT subj AS node, count(*) AS degree FROM golden
-         GROUP BY subj),
-ind AS (SELECT obj AS node, count(*) AS degree FROM golden
-        WHERE NOT obj_is_literal GROUP BY obj)
-SELECT 'out' AS direction, degree, count(*) AS n_nodes
-FROM outd GROUP BY degree
-UNION ALL
-SELECT 'in', degree, count(*) FROM ind GROUP BY degree
-"""
-
-    o["kg_shacl_violations"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-shapes AS (SELECT * FROM {_shacl_shapes_values()}),
-targets AS (
-  SELECT DISTINCT g.subj AS focus, s.*
-  FROM golden g JOIN shapes s
-    ON g.pred = 'rdf:type' AND g.obj = s.target_class),
-joined AS (
-  SELECT t.focus, t.shape_id, t.path, t.min_count, t.max_count,
-         t.node_kind, t.datatype, g.obj, g.obj_is_literal,
-         g.obj_datatype
-  FROM targets t LEFT JOIN golden g
-    ON g.subj = t.focus AND g.pred = t.path),
-agg AS (
-  SELECT focus, shape_id, path, min_count, max_count, node_kind,
-         datatype,
-         count(obj) AS n_values,
-         coalesce(sum(CASE WHEN node_kind IS NOT NULL
-                            AND obj IS NOT NULL
-                            AND ((node_kind = 'IRI' AND obj_is_literal)
-                              OR (node_kind = 'Literal'
-                                  AND NOT obj_is_literal))
-                      THEN 1 ELSE 0 END), 0) AS n_kind_bad,
-         coalesce(sum(CASE WHEN datatype IS NOT NULL
-                            AND obj IS NOT NULL
-                            AND obj_datatype IS DISTINCT FROM datatype
-                      THEN 1 ELSE 0 END), 0) AS n_dt_bad
-  FROM joined
-  GROUP BY focus, shape_id, path, min_count, max_count, node_kind,
-           datatype)
-SELECT focus, shape_id, path, 'minCount' AS "constraint",
-       CAST(n_values AS BIGINT) AS actual,
-       CAST(min_count AS VARCHAR) AS expected
-FROM agg WHERE min_count IS NOT NULL AND n_values < min_count
-UNION ALL
-SELECT focus, shape_id, path, 'maxCount',
-       CAST(n_values AS BIGINT), CAST(max_count AS VARCHAR)
-FROM agg WHERE max_count IS NOT NULL AND n_values > max_count
-UNION ALL
-SELECT focus, shape_id, path, 'nodeKind',
-       CAST(n_kind_bad AS BIGINT), node_kind
-FROM agg WHERE n_kind_bad > 0
-UNION ALL
-SELECT focus, shape_id, path, 'datatype',
-       CAST(n_dt_bad AS BIGINT), datatype
-FROM agg WHERE n_dt_bad > 0
-"""
-
-    o["kg_nodes"] = f"""
-WITH {_F_CTE}
-SELECT url AS uri, {_CAT_TYPE} AS rdf_type, title AS label FROM f
-UNION ALL
-SELECT url || '#S1', 'bibo:DocumentPart', 'Introduction' FROM f
-UNION ALL
-SELECT url || '#S1.1', 'bibo:DocumentPart', 'Details' FROM f
-UNION ALL
-SELECT url || '#S2', 'bibo:DocumentPart', 'References' FROM f
-"""
-
-    o["kg_citations_by_target"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT obj AS target, count(*) AS n_citations,
-       count(DISTINCT subj) AS n_citing_fragments
-FROM golden WHERE pred = 'dcterms:references' GROUP BY obj
-"""
-
-    o["kg_closure"] = f"""
-WITH RECURSIVE {_F_CTE},
-edges AS (
-  SELECT url || '#S1' AS child, url AS parent FROM f
-  UNION ALL SELECT url || '#S1.1', url || '#S1' FROM f
-  UNION ALL SELECT url || '#S2', url FROM f
-),
-closure AS (
-  SELECT child AS descendant, parent AS ancestor, 1 AS depth FROM edges
-  UNION ALL
-  SELECT c.descendant, e.parent, c.depth + 1
-  FROM closure c JOIN edges e ON c.ancestor = e.child
-  WHERE c.depth < 4
-)
-SELECT descendant, ancestor, CAST(min(depth) AS BIGINT) AS depth
-FROM closure GROUP BY 1, 2
-"""
-
-    o["kg_citation_classes"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT CASE
-    WHEN obj LIKE 'https://example.org/res/bcp/%' THEN 'bcp'
-    WHEN obj LIKE 'https://example.org/res/std/%' THEN 'std'
-    WHEN obj LIKE 'https://example.org/res/draft/%' THEN 'draft'
-    WHEN obj LIKE 'https://doi.org/%' THEN 'doi'
-    WHEN obj LIKE 'https://example.org/res/iso/%' THEN 'iso'
-    WHEN obj LIKE 'https://example.org/res/eu/dir/%' AND obj LIKE '%#A%'
-        THEN 'eu_article'
-    WHEN obj LIKE 'https://example.org/res/eu/dir/%' THEN 'eu_directive'
-    WHEN obj LIKE 'https://example.org/res/ecj/%' THEN 'ecj_case'
-    WHEN obj LIKE 'https://example.org/res/rfc/%' AND obj LIKE '%#C%'
-        THEN 'nested_struct'
-    WHEN obj LIKE 'https://example.org/res/rfc/%' AND obj LIKE '%#S%'
-        THEN 'rfc_section'
-    WHEN obj LIKE 'https://example.org/res/rfc/%' THEN 'rfc'
-    ELSE 'url' END AS cls,
-  count(*) AS n, count(DISTINCT obj) AS n_targets
-FROM golden WHERE pred = 'dcterms:references'
-GROUP BY 1
-"""
-
-    # statute structure tree: reconstruct the expected node table from
-    # the same doc_id arithmetic that generated the text (see
-    # sources/testdata.statute_pages_from_documents)
-    _struct_ctes = """a AS (
-  SELECT doc_id, doc_id % 2 + 2 AS nchap, doc_id % 5 = 0 AS has_letters,
-         'https://example.org/res/act/' || CAST(doc_id AS VARCHAR) AS url
-  FROM documents),
-chap AS (
-  SELECT a.*, CAST(g.c AS BIGINT) AS c
-  FROM a, (SELECT unnest(generate_series(1, 3)) AS c) g
-  WHERE g.c <= nchap),
-secs AS (
-  SELECT chap.*, 2 * (c - 1) + gi.i AS s
-  FROM chap, (SELECT unnest([1, 2]) AS i) gi)"""
-    _struct_select = """
-SELECT url, 'K' || c AS node_id, 'chapter' AS kind,
-       CAST(c AS VARCHAR) AS ordinal, CAST(NULL AS VARCHAR) AS parent_id,
-       CAST(1 AS BIGINT) AS depth,
-       (['General Provisions', 'Obligations', 'Supervision'])[CAST(c AS INT)]
-           AS text
-FROM chap
-UNION ALL
-SELECT url, 'K' || c || 'P' || s, 'section', CAST(s AS VARCHAR),
-       'K' || c, 2, 'Provisions on handling.' FROM secs
-UNION ALL
-SELECT url, 'K' || c || 'P' || s || 'S1', 'piece', '1',
-       'K' || c || 'P' || s, 3,
-       'First piece of section ' || s || '.' FROM secs
-UNION ALL
-SELECT url, 'K' || c || 'P' || s || 'S2', 'piece', '2',
-       'K' || c || 'P' || s, 3,
-       'Second piece of section ' || s || '.' FROM secs WHERE s % 3 = 0
-UNION ALL
-SELECT url, 'K' || c || 'P' || s || 'S1N' || gn.n, 'item',
-       CAST(gn.n AS VARCHAR), 'K' || c || 'P' || s || 'S1', 4,
-       (['first', 'second'])[gn.n] || ' item of section ' || s || '.'
-FROM secs, (SELECT unnest([1, 2]) AS n) gn WHERE s % 2 = 1
-UNION ALL
-SELECT url, 'K' || c || 'P' || s || 'S1N2B' || gl.l, 'letter', gl.l,
-       'K' || c || 'P' || s || 'S1N2', 5,
-       CASE gl.l WHEN 'a' THEN 'first' ELSE 'second' END
-           || ' letter item.'
-FROM secs, (SELECT unnest(['a', 'b']) AS l) gl
-WHERE s % 2 = 1 AND has_letters
-"""
-    o["kg_structure_tree"] = f"WITH {_struct_ctes} {_struct_select}"
-
-    o["visit_structure_docs"] = f"""
-WITH {_struct_ctes},
-nodes AS ({_struct_select})
-SELECT n.url, n.node_id,
-       n.url || '#' || n.node_id AS uri,
-       concat_ws('/', p4.node_id, p3.node_id, p2.node_id,
-                 p1.node_id, n.node_id) AS path,
-       regexp_extract(n.node_id, '^K([0-9]+)', 1) AS chapter
-FROM nodes n
-LEFT JOIN nodes p1 ON p1.url = n.url AND p1.node_id = n.parent_id
-LEFT JOIN nodes p2 ON p2.url = n.url AND p2.node_id = p1.parent_id
-LEFT JOIN nodes p3 ON p3.url = n.url AND p3.node_id = p2.parent_id
-LEFT JOIN nodes p4 ON p4.url = n.url AND p4.node_id = p3.parent_id
-"""
-
-    _esc = ("replace(replace(replace({c}, '&', '&amp;'), "
-            "'<', '&lt;'), '>', '&gt;')")
-    # attribute-value escape: text escape + '"' -> &quot; (mirrors
-    # render.escape_attr)
-    _esca = ("replace(" + _esc + ", '\"', '&quot;')")
-    _lvl = ("SELECT k.url, k.parent_id AS node_id, "
-            "string_agg('<div about=\"' || "
-            + _esca.format(c="k.url") + " || '#' || k.node_id "
-            "|| '\" typeof=\"' || k.kind || '\"><p>' || "
-            + _esc.format(c="k.text") + " || '</p>' || {ch} || "
-            "'</div>', '' ORDER BY k.skey) AS ch "
-            "FROM k {join} WHERE k.depth = {d} GROUP BY 1, 2")
-    o["render_xhtml_docs"] = f"""
-WITH {_struct_ctes},
-nodes AS ({_struct_select}),
-k AS (SELECT *, lpad(ordinal, 8, '0') AS skey FROM nodes),
-l5 AS ({_lvl.format(ch="''", join="", d=5)}),
-l4 AS ({_lvl.format(ch="coalesce(c5.ch, '')",
-                    join="LEFT JOIN l5 c5 ON c5.url = k.url "
-                         "AND c5.node_id = k.node_id", d=4)}),
-l3 AS ({_lvl.format(ch="coalesce(c4.ch, '')",
-                    join="LEFT JOIN l4 c4 ON c4.url = k.url "
-                         "AND c4.node_id = k.node_id", d=3)}),
-l2 AS ({_lvl.format(ch="coalesce(c3.ch, '')",
-                    join="LEFT JOIN l3 c3 ON c3.url = k.url "
-                         "AND c3.node_id = k.node_id", d=2)}),
-body AS (
-  SELECT k.url, '<body about="' || {_esca.format(c="k.url")} || '">' ||
-         string_agg('<div about="' || {_esca.format(c="k.url")} ||
-                    '#' || k.node_id ||
-                    '" typeof="' || k.kind || '"><p>' ||
-                    {_esc.format(c="k.text")} || '</p>' ||
-                    coalesce(c2.ch, '') || '</div>',
-                    '' ORDER BY k.skey) || '</body>' AS body_xml
-  FROM k LEFT JOIN l2 c2 ON c2.url = k.url AND c2.node_id = k.node_id
-  WHERE k.depth = 1 GROUP BY 1),
-meta AS (
-  SELECT 'https://example.org/res/act/' || CAST(doc_id AS VARCHAR)
-           AS url, lang, t.pred, t.obj
-  FROM documents, LATERAL (SELECT * FROM (VALUES
-    ('dcterms:title', 'Act ' || CAST(doc_id AS VARCHAR)),
-    ('rdf:type', 'https://example.org/ontology/rfc#Act'),
-    ('dcterms:publisher', 'https://example.org/org/' || source),
-    ('dcterms:language', lang),
-    ('dcterms:extent', CAST(n_chars AS VARCHAR))) v(pred, obj)) t),
-heads AS (
-  SELECT url, any_value(lang) AS lang,
-    '<head about="' || {_esca.format(c="url")} || '">' || string_agg(
-      CASE
-        WHEN pred = 'dcterms:title'
-             AND NOT regexp_matches(obj, '^https?://')
-          THEN '<title property="dcterms:title">' ||
-               {_esc.format(c="obj")} || '</title>'
-        WHEN regexp_matches(obj, '^https?://')
-          THEN '<link rel="' || pred || '" href="' ||
-               {_esca.format(c="obj")} || '"/>'
-        ELSE '<meta property="' || pred || '" content="' ||
-             {_esca.format(c="obj")} || '"/>'
-      END, '' ORDER BY pred, obj) || '</head>' AS head_xml,
-    array_to_string(list_transform(
-      list_sort(list_distinct(list(split_part(pred, ':', 1)))),
-      p -> ' xmlns:' || p || '="' || CASE p
-        WHEN 'dcterms' THEN 'http://purl.org/dc/terms/'
-        WHEN 'rdf' THEN 'http://www.w3.org/1999/02/22-rdf-syntax-ns#'
-        WHEN 'rdfs' THEN 'http://www.w3.org/2000/01/rdf-schema#'
-        WHEN 'rfc' THEN 'https://example.org/ontology/rfc#'
-        WHEN 'prov' THEN 'http://www.w3.org/ns/prov#'
-      END || '"'), '') AS decls
-  FROM meta GROUP BY url)
-SELECT h.url,
-  '<?xml version="1.0" encoding="utf-8"?>' ||
-  '<html xmlns="http://www.w3.org/1999/xhtml"' || h.decls ||
-  ' version="XHTML+RDFa 1.1" xml:lang="' || h.lang || '">' ||
-  h.head_xml || b.body_xml || '</html>' AS xhtml
-FROM heads h JOIN body b ON b.url = h.url
-"""
-
-    o["rdfa_roundtrip_docs"] = f"""
-WITH {_struct_ctes},
-nodes AS ({_struct_select}),
-meta AS (
-  SELECT 'https://example.org/res/act/' || CAST(doc_id AS VARCHAR)
-           AS url, lang, t.pred, t.obj
-  FROM documents, LATERAL (SELECT * FROM (VALUES
-    ('dcterms:title', 'Act ' || CAST(doc_id AS VARCHAR)),
-    ('rdf:type', 'https://example.org/ontology/rfc#Act'),
-    ('dcterms:publisher', 'https://example.org/org/' || source),
-    ('dcterms:language', lang),
-    ('dcterms:extent', CAST(n_chars AS VARCHAR))) v(pred, obj)) t)
-SELECT url AS src_url, url AS subj, pred, obj,
-       NOT regexp_matches(obj, '^https?://') AS obj_is_literal,
-       CAST(NULL AS VARCHAR) AS obj_datatype,
-       CASE WHEN NOT regexp_matches(obj, '^https?://') THEN lang
-            END AS obj_lang
-FROM meta
-UNION ALL
-SELECT url, url || '#' || node_id, 'rdf:type', kind, FALSE,
-       NULL, NULL
-FROM nodes
-"""
-
-    o["kg_structure_closure"] = f"""
-WITH RECURSIVE {_struct_ctes},
-nodes AS ({_struct_select}),
-edges AS (
-  SELECT url || '#' || node_id AS child,
-         coalesce(url || '#' || parent_id, url) AS parent
-  FROM nodes),
-closure AS (
-  SELECT child AS descendant, parent AS ancestor, 1 AS depth FROM edges
-  UNION ALL
-  SELECT c.descendant, e.parent, c.depth + 1
-  FROM closure c JOIN edges e ON c.ancestor = e.child
-  WHERE c.depth < 5
-)
-SELECT descendant, ancestor, CAST(min(depth) AS BIGINT) AS depth
-FROM closure GROUP BY 1, 2
-"""
-
-    o["kg_facet_multitype"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-wide AS (
-  SELECT subj,
-         max(CASE WHEN pred = 'rdf:type' THEN obj END) AS rdftype,
-         max(CASE WHEN pred = 'dcterms:issued' THEN obj END) AS issued,
-         max(CASE WHEN pred = 'dcterms:title' THEN obj END) AS title
-  FROM golden GROUP BY subj),
-typed AS (
-  SELECT CASE WHEN rdftype = 'bibo:Standard'
-              THEN substr(issued, 1, 4) END AS std_year,
-         CASE WHEN rdftype = 'bibo:Report'
-              THEN substr(lower(trim(title)), 1, 1) END AS rep_letter
-  FROM wide WHERE rdftype IN ('bibo:Standard', 'bibo:Report'))
-SELECT 'std_year' AS facet, std_year AS value, count(*) AS n
-FROM typed GROUP BY 2
-UNION ALL
-SELECT 'rep_letter', rep_letter, count(*) FROM typed GROUP BY 2
-"""
-
-    o["feedsets_events"] = """
-WITH tagged AS (
-  SELECT event_id, ts, feed
-  FROM events, unnest([event_type, 'All']) AS t(feed)),
-ranked AS (
-  SELECT feed, event_id,
-         row_number() OVER (PARTITION BY feed
-                            ORDER BY ts DESC, event_id) AS rank
-  FROM tagged)
-SELECT feed, event_id, rank FROM ranked WHERE rank <= 25
-"""
-
-    o["atom_feeds_events"] = """
-WITH tagged AS (
-  SELECT event_id, event_type, ts, feed
-  FROM events, unnest([event_type, 'All']) AS t(feed)),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY feed
-                               ORDER BY ts DESC, event_id) AS rank
-  FROM tagged),
-top AS (SELECT * FROM ranked WHERE rank <= 10),
-ent AS (SELECT feed, event_id, ts,
-        '<entry><id>urn:entry:' || event_id || '</id><title>'
-        || replace(replace(replace(event_type || ' #' || event_id,
-                                   '&', '&amp;'), '<', '&lt;'),
-                   '>', '&gt;')
-        || '</title><updated>'
-        || strftime(ts, '%Y-%m-%dT%H:%M:%SZ')
-        || '</updated></entry>' AS xml
-        FROM top)
-SELECT feed,
-  '<?xml version="1.0" encoding="utf-8"?>'
-  || '<feed xmlns="http://www.w3.org/2005/Atom"><title>'
-  || replace(replace(replace(feed, '&', '&amp;'), '<', '&lt;'),
-             '>', '&gt;')
-  || '</title><updated>' || strftime(max(ts), '%Y-%m-%dT%H:%M:%SZ')
-  || '</updated>'
-  || string_agg(xml, '' ORDER BY ts DESC, event_id)
-  || '</feed>' AS atom_xml
-FROM ent GROUP BY feed
-"""
-
-    o["atom_roundtrip_events"] = """
-WITH tagged AS (
-  SELECT event_id, event_type, ts, feed
-  FROM events, unnest([event_type, 'All']) AS t(feed)),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY feed
-                               ORDER BY ts DESC, event_id) AS rank
-  FROM tagged)
-SELECT feed, 'atom' AS format, feed AS feed_title,
-       'urn:entry:' || event_id AS entry_id,
-       event_type || ' #' || event_id AS title,
-       'https://ev.example/e/' || event_id AS link,
-       CAST(floor(epoch(ts)) AS BIGINT) AS updated_epoch
-FROM ranked WHERE rank <= 10
-"""
-
-    o["rss_discovery_docs"] = """
-WITH d AS (
-  SELECT doc_id,
-    'https://news' || CAST(doc_id % 5 AS VARCHAR) || '.example'
-      AS site,
-    CAST(doc_id AS VARCHAR) AS did
-  FROM documents)
-SELECT site || '/feed/' || did AS src_url, 'rss' AS format,
-       'Site ' || CAST(doc_id % 5 AS VARCHAR) AS feed_title,
-       'urn:d:' || did AS entry_id, 'Story ' || did AS title,
-       site || '/a/' || did AS link,
-       1704067200 + doc_id * 97 AS updated_epoch
-FROM d
-UNION ALL
-SELECT site || '/feed/' || did, 'rss',
-       'Site ' || CAST(doc_id % 5 AS VARCHAR),
-       site || '/a/' || did || '/comments', 'Comments ' || did,
-       site || '/a/' || did || '/comments',
-       CAST(NULL AS BIGINT)
-FROM d
-"""
-
-    o["grouped_agg_value_median"] = """
-SELECT event_type, round(median(value), 4) AS median_value,
-       count(*) AS n
-FROM events GROUP BY event_type
-"""
-
-    _versions_cte = """v AS (
-  SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR) AS url,
-         'v' || CAST(g.i AS VARCHAR) AS version,
-         DATE '2020-01-01' + INTERVAL (CAST(doc_id % 200 AS INT)
-             + CAST(g.i AS INT) * 37) DAY AS valid_from,
-         CASE WHEN g.i < doc_id % 3
-              THEN DATE '2020-01-01' + INTERVAL (CAST(doc_id % 200 AS INT)
-                   + CAST(g.i AS INT) * 37 + 37) DAY
-              WHEN doc_id % 6 = 5
-              THEN DATE '2020-01-01' + INTERVAL (CAST(doc_id % 200 AS INT)
-                   + CAST(g.i AS INT) * 37 + 30) DAY
-         END AS valid_to,
-         CASE WHEN g.i = doc_id % 3
-              THEN 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
-              ELSE 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
-                   || '/arkiv/v' || CAST(g.i AS VARCHAR) END AS archive_uri,
-         doc_id % 3 + 1 AS n_versions
-  FROM documents, (SELECT unnest(generate_series(0, 2)) AS i) g
-  WHERE g.i <= doc_id % 3)"""
-
-    o["doc_versions_views"] = f"""
-WITH {_versions_cte},
-latest AS (
-  SELECT url, version AS latest_version, archive_uri, n_versions
-  FROM v WHERE version = 'v' || CAST(n_versions - 1 AS VARCHAR)),
-eligible AS (
-  SELECT url, version, CAST(valid_from AS DATE) AS valid_from,
-         row_number() OVER (PARTITION BY url
-                            ORDER BY valid_from DESC,
-                            CAST(ltrim(version, 'v') AS BIGINT) DESC) AS rn
-  FROM v WHERE valid_from <= DATE '2020-06-15'
-    AND (valid_to IS NULL OR DATE '2020-06-15' < valid_to))
-SELECT l.url, l.latest_version, l.archive_uri, l.n_versions,
-       e.version AS asof_version, e.valid_from AS asof_valid_from
-FROM latest l LEFT JOIN (SELECT * FROM eligible WHERE rn = 1) e
-  ON l.url = e.url
-"""
-
-    _ft_toks = ("list_filter(string_split_regex(lower(trim({c})), "
-                "'\\s+'), t -> t <> '')")
-    _ft_ctes = f"""rows AS (
-  SELECT doc_id AS id, 'source' AS field, CAST(4 AS BIGINT) AS boost,
-         unnest({_ft_toks.format(c='source')}) AS term FROM documents
-  UNION ALL
-  SELECT doc_id, 'text', 1, unnest({_ft_toks.format(c='text')})
-  FROM documents),
-tf AS (SELECT term, field, boost, id, count(*) AS tf
-       FROM rows GROUP BY 1, 2, 3, 4),
-idf AS (SELECT term, CAST(floor(1000 * ln(
-            CAST((SELECT count(*) FROM documents) AS DOUBLE)
-            / count(DISTINCT id))) AS BIGINT) AS idf_milli
-        FROM tf GROUP BY term)"""
-    o["fulltext_search_docs"] = f"""
-WITH {_ft_ctes},
-hits AS (
-  SELECT tf.id, CAST(sum(tf.tf * tf.boost * idf.idf_milli) AS BIGINT)
-             AS score
-  FROM tf JOIN idf USING (term)
-  WHERE term IN ('table', 'window', 'spark') GROUP BY tf.id)
-SELECT id, score, rank FROM (
-  SELECT id, score,
-         row_number() OVER (ORDER BY score DESC, id) AS rank
-  FROM hits) WHERE rank <= 20
-"""
-
-    # the API-page envelope: same scoring, repo multiplier + exclude
-    # between scoring and ranking, then one page + envelope fields
-    o["fulltext_api_page"] = f"""
-WITH {_ft_ctes},
-hits AS (
-  SELECT tf.id, CAST(sum(tf.tf * tf.boost * idf.idf_milli) AS BIGINT)
-             AS score
-  FROM tf JOIN idf USING (term)
-  WHERE term IN ('table', 'window', 'spark') GROUP BY tf.id),
-shaped AS (
-  SELECT h.id,
-         CAST(h.score * CASE d.source WHEN 'src3' THEN 10
-                                      WHEN 'src7' THEN 3
-                                      ELSE 1 END AS BIGINT) AS score
-  FROM hits h JOIN documents d ON h.id = d.doc_id
-  WHERE d.source <> 'src5'),
-total AS (SELECT CAST(count(*) AS BIGINT) AS total_results FROM shaped)
-SELECT id, score, rank,
-       CAST(10 AS BIGINT) AS start_index,
-       CAST(10 AS BIGINT) AS items_per_page,
-       total_results
-FROM (SELECT id, score,
-             row_number() OVER (ORDER BY score DESC, id) AS rank
-      FROM shaped), total
-WHERE rank > 10 AND rank <= 20
-"""
-
-    # BM25: same tokenizer/idf CTEs; dl/avgdl and the fixed-point
-    # formula restated with DuckDB's // (floor division, identical to
-    # Spark's div for positive BIGINTs)
-    o["fulltext_bm25_docs"] = f"""
-WITH {_ft_ctes},
-dl AS (SELECT id, field, CAST(sum(tf) AS BIGINT) AS dl
-       FROM tf GROUP BY 1, 2),
-avg AS (SELECT field, (sum(dl) * 1000) // count(*) AS avgdl_milli
-        FROM dl GROUP BY field),
-parts AS (
-  SELECT tf.id,
-         tf.boost * ((idf.idf_milli * tf.tf * 2200 * avg.avgdl_milli)
-           // ((tf.tf * 1000000 * avg.avgdl_milli
-                + 1200 * (250 * avg.avgdl_milli + 750 * dl.dl * 1000))
-               // 1000)) AS part
-  FROM tf JOIN idf USING (term)
-       JOIN dl ON tf.id = dl.id AND tf.field = dl.field
-       JOIN avg ON tf.field = avg.field
-  WHERE term IN ('table', 'window', 'spark')),
-hits AS (SELECT id, CAST(sum(part) AS BIGINT) AS score
-         FROM parts GROUP BY id)
-SELECT id, score, rank FROM (
-  SELECT id, score,
-         row_number() OVER (ORDER BY score DESC, id) AS rank
-  FROM hits) WHERE rank <= 20
-"""
-
-    o["fulltext_fielded"] = f"""
-WITH {_ft_ctes},
-pidx AS (SELECT doc_id AS id, unnest(toks) AS term,
-                generate_subscripts(toks, 1) AS pos
-         FROM (SELECT doc_id, {_ft_toks.format(c='text')} AS toks
-               FROM documents)),
-ph AS (SELECT p0.id, count(*) AS hits
-       FROM (SELECT id, pos FROM pidx WHERE term = 'table') p0
-       JOIN pidx p1 ON p1.id = p0.id AND p1.pos = p0.pos + 1
-                    AND p1.term = 'window'
-       GROUP BY p0.id),
-pidf AS (SELECT CAST(sum(idf_milli) AS BIGINT) AS p_idf FROM idf
-         WHERE term IN ('table', 'window')),
-contrib AS (
-  SELECT tf.id, tf.tf * tf.boost * idf.idf_milli AS part
-  FROM tf JOIN idf USING (term)
-  WHERE (term IN ('table') OR term LIKE 'win%') AND field = 'text'
-  UNION ALL
-  SELECT ph.id, ph.hits * 1 * pidf.p_idf AS part FROM ph, pidf),
-hits AS (
-  SELECT id, CAST(sum(part) AS BIGINT) AS score
-  FROM contrib WHERE id BETWEEN 100 AND 399 GROUP BY id)
-SELECT id, score, rank FROM (
-  SELECT id, score,
-         row_number() OVER (ORDER BY score DESC, id) AS rank
-  FROM hits) WHERE rank <= 15
-"""
-
-    o["keyword_termset_docs"] = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok
-  FROM documents),
-san AS (
-  SELECT doc_id,
-         trim(regexp_replace(replace(tok, chr(160), ' '),
-                             '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')) AS t
-  FROM tok),
-terms AS (
-  SELECT doc_id, t AS term FROM san
-  WHERE len(t) BETWEEN 2 AND 100
-    AND substr(t, 1, 1) NOT IN ('.', '/', ':')
-    AND substr(t, len(t), 1) NOT IN ('.', ','))
-SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-FROM terms GROUP BY term HAVING count(DISTINCT doc_id) >= 40
-"""
-
-    o["kg_keyword_inversion"] = f"""
-WITH {_F_CTE}
-SELECT {_CAT_URI} AS term,
-       string_agg(url, ',' ORDER BY url) AS members_csv,
-       count(DISTINCT url) AS n_members
-FROM f GROUP BY 1
-"""
-
-    o["kg_dependency_edges"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT subj, pred, obj FROM golden
-WHERE pred NOT IN ('rdf:type', 'owl:sameAs') AND NOT obj_is_literal
-  AND obj NOT IN (SELECT DISTINCT subj FROM golden)
-"""
-
-    _resolve_cte = r"""
-c AS (SELECT subj, obj,
-             regexp_extract(regexp_replace(obj, '#.*$', ''),
-                            '/res/(?:rfc|doc)/(\d+)', 1) AS basefile
-      FROM golden WHERE pred = 'dcterms:references'),
-t AS (SELECT DISTINCT CAST(doc_id AS VARCHAR) AS basefile,
-             'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
-                 AS target_url
-      FROM documents)"""
-
-    o["kg_resolved_citations"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte}
-SELECT t.target_url, count(*) AS n
-FROM c LEFT JOIN t ON c.basefile = t.basefile
-GROUP BY t.target_url
-"""
-
-    o["kg_inbound_refs"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte}
-SELECT DISTINCT t.target_url AS subj,
-       'dcterms:isReferencedBy' AS pred, c.subj AS obj
-FROM c JOIN t ON c.basefile = t.basefile
-"""
-
-    o["crawl_reachable"] = f"""
-WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte},
-links AS (SELECT DISTINCT regexp_replace(c.subj, '#.*$', '') AS src,
-                 t.target_url AS dst
-          FROM c JOIN t ON c.basefile = t.basefile),
-seeds AS (SELECT 'https://example.org/res/doc/' || CAST(doc_id AS VARCHAR)
-              AS url
-          FROM documents WHERE doc_id % 25 = 0),
-r AS (
-  SELECT url, 0 AS depth FROM seeds
-  UNION ALL
-  SELECT l.dst AS url, r.depth + 1 AS depth
-  FROM r JOIN links l ON l.src = r.url
-  WHERE r.depth < 3
-)
-SELECT url, CAST(min(depth) AS BIGINT) AS depth FROM r GROUP BY url
-"""
-
-    o["kg_regen_dependents"] = f"""
-WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE}, {_resolve_cte},
-deps AS (SELECT DISTINCT t.target_url AS url,
-                regexp_replace(c.subj, '#.*$', '') AS depends_on
-         FROM c JOIN t ON c.basefile = t.basefile
-         WHERE t.target_url != regexp_replace(c.subj, '#.*$', '')),
-changed AS (SELECT 'https://example.org/res/doc/' ||
-                   CAST(doc_id AS VARCHAR) AS url
-            FROM documents WHERE doc_id % 17 = 0),
-r AS (
-  SELECT url, 0 AS depth FROM changed
-  UNION ALL
-  SELECT d.url, r.depth + 1 AS depth
-  FROM r JOIN deps d ON d.depends_on = r.url
-  WHERE r.depth < 4
-)
-SELECT url, CAST(min(depth) AS BIGINT) AS depth FROM r GROUP BY url
-"""
-
-    o["kg_facet_statistics"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-wide AS (
-  SELECT subj,
-         max(CASE WHEN pred = 'rdf:type' THEN obj END) AS type,
-         substr(max(CASE WHEN pred = 'dcterms:issued' THEN obj END),
-                1, 4) AS issued_year,
-         substr(lower(trim(max(CASE WHEN pred = 'dcterms:title'
-                                    THEN obj END))), 1, 1)
-             AS title_firstletter
-  FROM golden GROUP BY subj)
-SELECT 'type' AS facet, type AS value, count(*) AS n
-FROM wide GROUP BY type
-UNION ALL
-SELECT 'issued_year', issued_year, count(*) FROM wide GROUP BY issued_year
-UNION ALL
-SELECT 'title_firstletter', title_firstletter, count(*)
-FROM wide GROUP BY title_firstletter
-"""
-
-    o["kg_facet_projection"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT subj AS uri,
-       max(CASE WHEN pred = 'rdf:type' THEN obj END) AS type,
-       max(CASE WHEN pred = 'dcterms:title' THEN obj END) AS title,
-       max(CASE WHEN pred = 'dcterms:identifier' THEN obj END) AS identifier,
-       max(CASE WHEN pred = 'dcterms:issued' THEN obj END) AS issued,
-       max(CASE WHEN pred = 'dcterms:publisher' THEN obj END) AS publisher
-FROM golden GROUP BY subj
-"""
-
-    o["kg_sql_citations"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT obj AS target, count(*) AS n FROM golden
-WHERE pred = 'dcterms:references' AND obj LIKE '%#S%'
-GROUP BY obj
-"""
-
-    # rfc-annotations.rq semantics over golden: literal self-metadata,
-    # transitive referencer metadata (minus unrelated references),
-    # updater/obsoleter metadata, inverse isUpdatedBy/isObsoletedBy/
-    # isReferencedBy links — target = the smallest rfc:updates obj
-    o["kg_sparql_annotations"] = f"""
-WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE},
-tgt AS (SELECT min(obj) AS uri FROM golden WHERE pred = 'rfc:updates'),
-refs AS (
-  SELECT g.subj FROM golden g, tgt
-  WHERE g.pred = 'dcterms:references' AND g.obj = tgt.uri
-  UNION
-  SELECT g.subj FROM golden g JOIN refs r ON g.obj = r.subj
-  WHERE g.pred = 'dcterms:references'
-),
-upd AS (
-  SELECT g.subj, g.pred AS via FROM golden g, tgt
-  WHERE g.obj = tgt.uri AND g.pred IN ('rfc:updates', 'rfc:obsoletes')
-)
-SELECT DISTINCT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang
-FROM (
-  SELECT g.* FROM golden g, tgt WHERE g.subj = tgt.uri AND g.obj_is_literal
-  UNION ALL
-  SELECT g.* FROM golden g JOIN refs r ON g.subj = r.subj, tgt
-  WHERE g.pred != 'dcterms:references' OR g.obj LIKE tgt.uri || '%'
-  UNION ALL
-  -- SPARQL semantics: ?referencer only binds alongside a surviving
-  -- (?p, ?o) solution in the same group — a referencer whose every
-  -- triple is a dcterms:references to a non-prefix target emits NO
-  -- isReferencedBy link (ADVICE r3: this arm was unconditional)
-  SELECT tgt.uri, 'dcterms:isReferencedBy', r.subj, FALSE,
-         CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR) FROM refs r, tgt
-  WHERE EXISTS (SELECT 1 FROM golden g
-                WHERE g.subj = r.subj
-                  AND (g.pred != 'dcterms:references'
-                       OR g.obj LIKE tgt.uri || '%'))
-  UNION ALL
-  SELECT g.* FROM golden g JOIN upd u ON g.subj = u.subj
-  WHERE g.pred != 'dcterms:references'
-  UNION ALL
-  SELECT tgt.uri,
-         CASE WHEN u.via = 'rfc:obsoletes' THEN 'rfc:isObsoletedBy'
-              ELSE 'rfc:isUpdatedBy' END,
-         u.subj, FALSE, CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-  FROM upd u, tgt
-)
-"""
-
-    # annotations.rq semantics for doc 0: triples of the doc and its
-    # isPartOf* descendants, plus isReferencedBy onto cited parts
-    o["kg_sparql_describe_form"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-subs AS (
-  SELECT 'https://example.org/res/doc/3' AS subj
-  UNION
-  SELECT subj FROM golden
-  WHERE pred = 'dcterms:isPartOf'
-    AND obj = 'https://example.org/res/doc/3')
-SELECT DISTINCT g.subj, g.pred, g.obj, g.obj_is_literal,
-       g.obj_datatype, g.obj_lang
-FROM golden g JOIN subs USING (subj)
-"""
-
-    o["kg_sparql_describe"] = f"""
-WITH RECURSIVE {_F_CTE}, {_TRIPLES_CTE},
-parts AS (
-  SELECT 'https://example.org/res/doc/0' AS p
-  UNION
-  SELECT g.subj FROM golden g JOIN parts pp ON g.obj = pp.p
-  WHERE g.pred = 'dcterms:isPartOf'
-)
-SELECT DISTINCT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang
-FROM (
-  SELECT g.* FROM golden g JOIN parts p ON g.subj = p.p
-  UNION ALL
-  SELECT g.* FROM golden g
-  WHERE g.subj IN (SELECT c.subj FROM golden c JOIN parts p ON c.obj = p.p
-                   WHERE c.pred = 'dcterms:references')
-  UNION ALL
-  SELECT c.obj, 'dcterms:isReferencedBy', c.subj, FALSE,
-         CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
-  FROM golden c JOIN parts p ON c.obj = p.p
-  WHERE c.pred = 'dcterms:references'
-)
-"""
-
-    o["kg_sparql_topcited"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE}
-SELECT obj AS target, count(*) AS n
-FROM golden WHERE pred = 'dcterms:references'
-GROUP BY obj
-ORDER BY n DESC, target
-LIMIT 20
-"""
-
-    o["kg_sparql_graph_scoped"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-cls AS (SELECT subj AS doc,
-               CASE WHEN obj = 'bibo:Standard' THEN 'g:std'
-                    ELSE 'g:other' END AS gg
-        FROM golden
-        WHERE pred = 'rdf:type'
-          AND obj IN ('bibo:Standard', 'bibo:Report')),
-quads AS (SELECT g.subj, g.pred, g.obj,
-                 coalesce(c.gg, 'g:other') AS graph
-          FROM golden g LEFT JOIN cls c
-            ON regexp_replace(g.subj, '#.*', '') = c.doc)
-SELECT subj AS s, count(obj) AS n_std_refs
-FROM quads
-WHERE graph = 'g:std' AND pred = 'dcterms:references'
-GROUP BY subj
-ORDER BY n_std_refs DESC, s
-LIMIT 20
-"""
-
-    o["kg_sparql_aggregates"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-r AS (SELECT subj AS s, obj AS o FROM golden
-      WHERE pred = 'dcterms:references'),
-ch AS (SELECT subj AS s, obj AS c FROM golden
-       WHERE pred = 'bibo:chapter'),
-j AS (SELECT r.s, r.o, ch.c FROM r JOIN ch USING (s)),
-a AS (SELECT s, count(o) AS n, min(o) AS "first", max(o) AS "last",
-             sum(TRY_CAST(c AS DOUBLE)) AS chapters,
-             avg(TRY_CAST(c AS DOUBLE)) AS meanch,
-             string_agg(DISTINCT o, ', ' ORDER BY o) AS refs,
-             min(c) AS anych
-      FROM j GROUP BY s)
-SELECT s, n, "first", "last", chapters, meanch, refs, anych
-FROM a WHERE n >= 2 ORDER BY n DESC, s LIMIT 25
-"""
-
-    o["kg_sparql_subquery"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-top10 AS (
-  SELECT subj AS s, CAST(count(*) AS BIGINT) AS n
-  FROM golden WHERE pred = 'dcterms:references'
-  GROUP BY subj ORDER BY n DESC, s LIMIT 10)
-SELECT top10.s, top10.n, g.obj AS ch
-FROM top10 JOIN golden g
-  ON g.subj = top10.s AND g.pred = 'bibo:chapter'
-"""
-
-    o["kg_sparql_regex_paths"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-step AS (SELECT subj, obj FROM golden
-         WHERE pred = 'dcterms:isPartOf' AND NOT obj_is_literal),
-nodes AS (SELECT subj AS n FROM golden
-          UNION SELECT obj FROM golden WHERE NOT obj_is_literal),
-pairs AS (SELECT subj AS s, obj AS d FROM step
-          UNION SELECT n, n FROM nodes),
-t AS (SELECT subj, obj, obj_lang FROM golden
-      WHERE pred = 'dcterms:title')
-SELECT DISTINCT p.s, p.d
-FROM pairs p
-JOIN t ts ON ts.subj = p.s
-         AND regexp_matches(lower(ts.obj), '^(intro|det)')
-JOIN t td ON td.subj = p.d AND coalesce(td.obj_lang, '') = 'fr'
-"""
-
-    # describe-with-subdocs.rq: referencers of the hub's fragments,
-    # root = the referer's document (the only isPartOf* ancestor
-    # carrying dcterms:identifier), OPTIONAL bibo:chapter decoration
-    o["kg_sparql_subdocs"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-tgt AS (SELECT min(obj) AS uri FROM golden WHERE pred = 'rfc:updates'),
-refs AS (
-  SELECT DISTINCT g.subj AS referer, g.obj AS target
-  FROM golden g, tgt
-  WHERE g.pred = 'dcterms:references' AND g.obj LIKE tgt.uri || '#%'),
-root AS (
-  SELECT DISTINCT referer,
-         regexp_replace(referer, '#.*$', '') AS rootdoc FROM refs)
-SELECT DISTINCT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang
-FROM (
-  SELECT r.target AS subj, 'dcterms:isReferencedBy' AS pred,
-         r.referer AS obj, FALSE AS obj_is_literal,
-         CAST(NULL AS VARCHAR) AS obj_datatype,
-         CAST(NULL AS VARCHAR) AS obj_lang FROM refs r
-  UNION ALL
-  SELECT rt.referer, 'dcterms:isPartOf', rt.rootdoc, FALSE, NULL, NULL
-  FROM root rt
-  UNION ALL
-  SELECT g.subj, 'bibo:chapter', g.obj, TRUE, NULL, NULL
-  FROM golden g JOIN root rt ON g.subj = rt.referer
-  WHERE g.pred = 'bibo:chapter'
-  UNION ALL
-  SELECT g.subj, 'rdf:type', g.obj, FALSE, NULL, NULL
-  FROM golden g JOIN (SELECT DISTINCT rootdoc FROM root) rd
-       ON g.subj = rd.rootdoc
-  WHERE g.pred = 'rdf:type'
-  UNION ALL
-  SELECT g.subj, 'dcterms:identifier', g.obj, TRUE, NULL, NULL
-  FROM golden g JOIN (SELECT DISTINCT rootdoc FROM root) rd
-       ON g.subj = rd.rootdoc
-  WHERE g.pred = 'dcterms:identifier'
-)
-"""
-
-    # integer PageRank, 3 iterations unrolled; every term is BIGINT
-    # floor division so the engines agree bit-for-bit.  The dangling
-    # term mirrors rank.py: dm = Σ r over nodes with no out-edges,
-    # each node's damped update adds dm // n.
-    _pr_iter = """
-it{i} AS (
-  SELECT n.node,
-         CAST({base} + (85 * (COALESCE(s.inc, 0) +
-              (SELECT COALESCE(sum(r.r), 0) FROM it{prev} r
-               WHERE r.node NOT IN (SELECT src FROM cites))
-              // (SELECT n FROM nn))) // 100 AS BIGINT) AS r
-  FROM prnodes n LEFT JOIN (
-    SELECT c.dst AS node, CAST(sum(r.r // o.outdeg) AS BIGINT) AS inc
-    FROM cites c JOIN it{prev} r ON c.src = r.node
-                 JOIN outd o ON c.src = o.src
-    GROUP BY c.dst) s ON s.node = n.node
-)"""
-    o["kg_pagerank"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-cites AS (
-  SELECT subj AS src, obj AS dst FROM golden
-  WHERE pred = 'dcterms:references'
-),
-prnodes AS (
-  SELECT src AS node FROM cites UNION SELECT dst FROM cites
-),
-nn AS (SELECT count(*) AS n FROM prnodes),
-outd AS (SELECT src, count(*) AS outdeg FROM cites GROUP BY src),
-it0 AS (SELECT node, CAST((SELECT 1000000000000 // n FROM nn) AS BIGINT)
-               AS r FROM prnodes),
-{_pr_iter.format(i=1, prev=0,
-                 base='(SELECT 15 * (1000000000000 // n) // 100 FROM nn)')},
-{_pr_iter.format(i=2, prev=1,
-                 base='(SELECT 15 * (1000000000000 // n) // 100 FROM nn)')},
-{_pr_iter.format(i=3, prev=2,
-                 base='(SELECT 15 * (1000000000000 // n) // 100 FROM nn)')}
-SELECT node, rank_micro, CAST(rn AS INT) AS rank FROM (
-  SELECT node, CAST(r // 1000000 AS BIGINT) AS rank_micro,
-         row_number() OVER (ORDER BY r // 1000000 DESC, node) AS rn
-  FROM it3)
-WHERE rn <= 20
-"""
-
-    # one TrustRank iteration: kg_pagerank's arithmetic with the
-    # teleport personalized to the seed flag — base term and dangling
-    # share land ONLY on seeds (rank.py trustrank, VLDB 2004 scheme)
-    _tr_iter = """
-it{i} AS (
-  SELECT n.node, n.is_seed,
-         CAST(CASE WHEN n.is_seed THEN {base} ELSE 0 END
-              + (85 * (COALESCE(s.inc, 0) +
-                 CASE WHEN n.is_seed THEN
-                   (SELECT COALESCE(sum(r.r), 0) FROM it{prev} r
-                    WHERE r.node NOT IN (SELECT src FROM cites))
-                   // (SELECT s FROM ns)
-                 ELSE 0 END)) // 100 AS BIGINT) AS r
-  FROM trnodes n LEFT JOIN (
-    SELECT c.dst AS node, CAST(sum(r.r // o.outdeg) AS BIGINT) AS inc
-    FROM cites c JOIN it{prev} r ON c.src = r.node
-                 JOIN outd o ON c.src = o.src
-    GROUP BY c.dst) s ON s.node = n.node
-)"""
-    _tr_base = "(SELECT 15 * (1000000000000 // s) // 100 FROM ns)"
-    o["kg_trustrank"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-cites AS (
-  SELECT subj AS src, obj AS dst FROM golden
-  WHERE pred = 'dcterms:references'
-),
-seeds AS (
-  SELECT dst AS node FROM cites GROUP BY dst HAVING count(*) >= 5
-),
-trnodes AS (
-  SELECT p.node, p.node IN (SELECT node FROM seeds) AS is_seed
-  FROM (SELECT src AS node FROM cites UNION SELECT dst FROM cites) p
-),
-ns AS (SELECT count(*) AS s FROM seeds),
-outd AS (SELECT src, count(*) AS outdeg FROM cites GROUP BY src),
-it0 AS (SELECT node, is_seed,
-               CAST(CASE WHEN is_seed THEN
-                 (SELECT 1000000000000 // s FROM ns) ELSE 0 END
-                 AS BIGINT) AS r FROM trnodes),
-{_tr_iter.format(i=1, prev=0, base=_tr_base)},
-{_tr_iter.format(i=2, prev=1, base=_tr_base)},
-{_tr_iter.format(i=3, prev=2, base=_tr_base)}
-SELECT node, trust_micro, CAST(rn AS INT) AS rank FROM (
-  SELECT node, CAST(r // 1000000 AS BIGINT) AS trust_micro,
-         row_number() OVER (ORDER BY r // 1000000 DESC, node) AS rn
-  FROM it3)
-WHERE rn <= 20
-"""
-
-    # one HITS iteration: authority raw-sum + L1 renorm, then hub
-    # raw-sum + L1 renorm — integer semantics identical to rank.hits
-    # (sums exact, renorm = raw * 10^6 floor-div total in HUGEINT)
-    _hits_iter = """
-a{i}r AS (
-  SELECT n.node, CAST(COALESCE(s.a, 0) AS BIGINT) AS a
-  FROM hnodes n LEFT JOIN (
-    SELECT c.dst AS node, sum(h.h) AS a
-    FROM cites c JOIN h{prev} h ON c.src = h.node GROUP BY c.dst) s
-  ON s.node = n.node),
-a{i} AS (
-  SELECT node, CAST(CASE WHEN (SELECT sum(a) FROM a{i}r) > 0
-    THEN CAST(a AS HUGEINT) * 1000000 // (SELECT sum(a) FROM a{i}r)
-    ELSE 0 END AS BIGINT) AS a FROM a{i}r),
-h{i}r AS (
-  SELECT n.node, CAST(COALESCE(s.h, 0) AS BIGINT) AS h
-  FROM hnodes n LEFT JOIN (
-    SELECT c.src AS node, sum(a.a) AS h
-    FROM cites c JOIN a{i} a ON c.dst = a.node GROUP BY c.src) s
-  ON s.node = n.node),
-h{i} AS (
-  SELECT node, CAST(CASE WHEN (SELECT sum(h) FROM h{i}r) > 0
-    THEN CAST(h AS HUGEINT) * 1000000 // (SELECT sum(h) FROM h{i}r)
-    ELSE 0 END AS BIGINT) AS h FROM h{i}r)"""
-    # MATERIALIZED: each iteration references cites/hnodes several
-    # times; without it DuckDB inlines the whole golden-triples CTE
-    # chain once per reference and exhausts file handles
-    o["kg_hits"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-cites AS MATERIALIZED (
-  SELECT subj AS src, obj AS dst FROM golden
-  WHERE pred = 'dcterms:references'
-),
-hnodes AS MATERIALIZED (
-  SELECT src AS node FROM cites UNION SELECT dst FROM cites),
-h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM hnodes),
-{_hits_iter.format(i=1, prev=0)},
-{_hits_iter.format(i=2, prev=1)}
-SELECT node, hub_micro, auth_micro, CAST(rn AS INT) AS rank FROM (
-  SELECT h.node, h.h AS hub_micro, a.a AS auth_micro,
-         row_number() OVER (ORDER BY a.a DESC, h.h DESC, h.node) AS rn
-  FROM h2 h JOIN a2 a ON h.node = a.node)
-WHERE rn <= 20
-"""
-
-    o["first_success_events"] = """
-SELECT user_id, event_id, event_type, round(value, 2) AS value
-FROM (SELECT user_id, event_id, event_type, value,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY event_id) AS rn
-      FROM events) WHERE rn = 1
-"""
-
-    o["kg_publisher_stats"] = f"""
-WITH {_F_CTE}
-SELECT {_PUB_URI} AS publisher, count(DISTINCT url) AS n_docs
-FROM f GROUP BY 1
-"""
-
-    o["q1_pricing"] = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(avg(l_quantity), 4) AS avg_qty,
-       count(*) AS count_order
-FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-    o["q3_shipping"] = """
-WITH rev AS (
-  SELECT l_orderkey,
-         CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS orderdate,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  WHERE c_mktsegment = 'BUILDING'
-    AND CAST(o_orderdate AS DATE) < DATE '1998-06-01'
-    AND CAST(l_shipdate AS DATE) >= DATE '1998-06-01'
-  GROUP BY 1, 2)
-SELECT * FROM (
-  SELECT l_orderkey, orderdate, revenue,
-         row_number() OVER (ORDER BY revenue DESC, l_orderkey) AS rank
-  FROM rev) WHERE rank <= 10
-"""
-
-    o["q5_local_supplier"] = """
-SELECT r_name, n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE c_nationkey = s_nationkey
-GROUP BY r_name, n_name
-"""
-
-    o["facet_stats_cube"] = """
-SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-       CAST(grouping(o_orderstatus) * 1
-            + grouping(o_orderpriority) * 2 AS BIGINT) AS grouping_mask
-FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-"""
-
-    o["topk_orders"] = """
-SELECT * FROM (
-  SELECT o_orderpriority, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_orderpriority
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rank
-  FROM orders) WHERE rank <= 3
-"""
-
-    o["events_pagination"] = """
-SELECT event_id, event_type,
-       row_number() OVER (PARTITION BY event_type ORDER BY ts DESC) AS rn,
-       CAST(floor((row_number() OVER (PARTITION BY event_type
-                                      ORDER BY ts DESC) - 1) / 100)
-            AS BIGINT) AS page
-FROM events
-"""
-
-    o["asof_purchase_click"] = """
-SELECT a.event_id AS purchase_event, a.user_id, b.event_id AS click_event
-FROM (SELECT * FROM events WHERE event_type = 'purchase') a
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') b
-  ON a.user_id = b.user_id AND a.ts >= b.ts
-"""
-
-    o["sessionize_events"] = """
-WITH flagged AS (
-  SELECT event_id, user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL THEN 1
-              WHEN CAST(floor(epoch(ts)) AS BIGINT)
-                   - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-              THEN 1 ELSE 0 END AS n
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-SELECT event_id, user_id,
-       CAST(sum(n) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-FROM flagged
-"""
-
-    o["range_filters"] = """
-SELECT event_type, count(*) AS n, round(sum(value), 2) AS total_value
-FROM events
-WHERE value BETWEEN 5 AND 20 AND year(ts) = 2024 AND event_type LIKE '%i%'
-GROUP BY event_type
-"""
-
-    o["setops_users"] = """
-SELECT user_id FROM events WHERE event_type = 'purchase' AND value > 200
-EXCEPT
-SELECT user_id FROM events WHERE event_type = 'error' AND value > 200
-"""
-
-    o["natural_sort_parts"] = """
-SELECT p_partkey,
-       'item ' || CAST(p_size AS VARCHAR) || ' rev '
-           || CAST(p_partkey % 10 AS VARCHAR) AS label,
-       row_number() OVER (ORDER BY p_size, p_partkey % 10, p_partkey) AS rank
-FROM part
-"""
-
-    _corpus = """
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000000, text FROM documents WHERE doc_id < 100
-)"""
-    o["dedup_exact_docs"] = f"""
-WITH {_corpus}
-SELECT md5(text) AS text_md5, min(doc_id) AS keeper_id,
-       count(*) AS n_copies
-FROM corpus GROUP BY 1
-"""
-
-    _near_corpus = """
-corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 150
-  UNION ALL
-  SELECT doc_id + 10000000, 'near duplicate copy ' || text
-  FROM documents WHERE doc_id < 100
-)"""
-    words_c = _WORDS.format(c="text")
-    _jac_default = f"""
-WITH {_near_corpus},
-t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
-{_JACCARD_CORE}
-SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.8
-"""
-
-    # mirrors dedup.minhash_signature: one md5 per shingle folded to a
-    # 60-bit int, then k=8 universal hashes (a_i*h + b_i) mod p
-    _p = 2147483647
-    hs_expr = ("list_transform(sh, s -> CAST(concat('0x', "
-               "substr(md5(s), 1, 15)) AS BIGINT) % " + str(_p) + ")")
-    _JACCARD_CAPPED = """
-e0 AS (SELECT id, unnest(sh) AS shingle FROM t),
-hot AS (SELECT shingle FROM (
-          SELECT shingle, count(*) AS df FROM e0 GROUP BY 1)
-        WHERE df > 20),
-e AS (SELECT * FROM e0 WHERE shingle NOT IN (SELECT shingle FROM hot)),
-sz AS (SELECT id, count(*) AS sz FROM e GROUP BY id),
-inter AS (
-  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-  FROM e a JOIN e b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2),
-jac AS (
-  SELECT id_a, id_b,
-         round(n_inter / (sa.sz + sb.sz - n_inter), 4) AS jaccard
-  FROM inter
-  JOIN sz sa ON sa.id = inter.id_a
-  JOIN sz sb ON sb.id = inter.id_b)
-"""
-    _jac_capped = f"""
-WITH {_near_corpus},
-t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
-{_JACCARD_CAPPED}
-SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.8
-"""
-    o["dedup_jaccard"] = f"""
-SELECT id_a, id_b, jaccard, 'default' AS variant FROM ({_jac_default})
-UNION ALL
-SELECT id_a, id_b, jaccard, 'capped' AS variant FROM ({_jac_capped})
-"""
-
-    # directed containment from the same shingle arithmetic: one a<b
-    # intersection, both directions divided by their own size (the
-    # max_df=1000 default is non-binding on this 210-doc corpus)
-    o["containment_docs"] = f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 150
-  UNION ALL
-  SELECT doc_id + 10000000, substr(text, 1, 120)
-  FROM documents WHERE doc_id < 60
-),
-t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
-e AS (SELECT id, unnest(sh) AS shingle FROM t),
-sz AS (SELECT id, count(*) AS sz FROM e GROUP BY id),
-inter AS (
-  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-  FROM e a JOIN e b ON a.shingle = b.shingle AND a.id < b.id
-  GROUP BY 1, 2),
-bothdir AS (
-  SELECT id_a, id_b, n_inter, sa.sz AS sz_a, sb.sz AS sz_b
-  FROM inter
-  JOIN sz sa ON sa.id = inter.id_a
-  JOIN sz sb ON sb.id = inter.id_b)
-SELECT id_part, id_whole, containment FROM (
-  SELECT id_a AS id_part, id_b AS id_whole,
-         round(n_inter / sz_a, 4) AS containment FROM bothdir
-  UNION ALL
-  SELECT id_b, id_a, round(n_inter / sz_b, 4) FROM bothdir)
-WHERE containment >= 0.7
-"""
-
-    # the identical Count-Min arithmetic (sketch.py): md5 fold mod
-    # the Mersenne prime, the (a_i·h + b_i) mod p mod w family,
-    # min-of-d-counters estimate — bit-exact counters, no tolerance
-    o["cms_heavy_hitters_docs"] = f"""
-WITH toks AS (
-  SELECT unnest({_WORDS.format(c='text')}) AS key
-  FROM documents WHERE doc_id < 200),
-h AS (
-  SELECT key,
-         CAST(concat('0x', substr(md5(key), 1, 15)) AS BIGINT)
-         % 2147483647 AS h60
-  FROM toks),
-cells AS (
-  SELECT g.r AS row,
-         ((((2654435761 * (g.r + 1)) % 2147483647) * h60
-           + (40503 * (g.r + 1) + 17) % 2147483647)
-          % 2147483647) % 512 AS col
-  FROM h, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS r) g),
-sketch AS (SELECT row, col, count(*) AS cnt FROM cells GROUP BY 1, 2),
-exact AS (SELECT key, count(*) AS exact FROM toks GROUP BY key),
-top AS (SELECT key, exact FROM exact ORDER BY exact DESC, key LIMIT 20),
-pos AS (
-  SELECT t.key, t.exact, g.r AS row,
-         ((((2654435761 * (g.r + 1)) % 2147483647)
-           * (CAST(concat('0x', substr(md5(t.key), 1, 15)) AS BIGINT)
-              % 2147483647)
-           + (40503 * (g.r + 1) + 17) % 2147483647)
-          % 2147483647) % 512 AS col
-  FROM top t,
-       (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS r) g)
-SELECT p.key, p.exact, min(coalesce(s.cnt, 0)) AS est
-FROM pos p LEFT JOIN sketch s ON s.row = p.row AND s.col = p.col
-GROUP BY p.key, p.exact
-"""
-
-    # the winnowing selection replayed exactly: 5-gram md5 60-bit
-    # hashes, window-of-4 minimum, rightmost tie via reversed
-    # list_position (k=5, w=4 mirror of winnow_fingerprints)
-    o["winnow_fingerprints_docs"] = """
-WITH base AS (
-  SELECT doc_id AS id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     w -> w <> '') AS toks
-  FROM documents WHERE doc_id < 80),
-hashed AS (
-  SELECT id,
-         CASE WHEN len(toks) >= 5 THEN
-           [CAST(concat('0x', substr(md5(
-                array_to_string(toks[i:i+4], ' ')), 1, 15)) AS BIGINT)
-            for i in generate_series(1, len(toks) - 4)]
-         ELSE [] END AS h
-  FROM base),
-sel AS (
-  SELECT id,
-         [{'pos': CAST(j + (4 - list_position(
-               list_reverse(h[j:j+3]), list_min(h[j:j+3])) + 1)
-               - 1 AS BIGINT),
-           'fp': list_min(h[j:j+3])}
-          for j in generate_series(1, len(h) - 3)] AS fps
-  FROM hashed WHERE len(h) >= 4)
-SELECT DISTINCT id, s.pos AS pos, s.fp AS fp
-FROM (SELECT id, unnest(fps) AS s FROM sel)
-"""
-
-    sig_expr = (
-        "[list_min([(((2654435761 * (i + 1)) % {p}) * h "
-        "+ (40503 * (i + 1) + 17) % {p}) % {p} for h in hv]) "
-        "for i in generate_series(0, 7)]").format(p=_p)
-    # shared CTE block: corpus → banded-MinHash candidate pairs with
-    # verified intersections (used by dedup_minhash_lsh AND the
-    # composed curation_survivors oracle — one copy of the math)
-    _MINHASH_CTES = f"""t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM corpus),
-hv AS (SELECT id, sh, {hs_expr} AS hv FROM t WHERE len(sh) > 0),
-sigs AS (SELECT id, {sig_expr} AS sig FROM hv),
-bands AS (
-  SELECT id, g.b AS band,
-         CAST(sig[2 * g.b + 1] AS VARCHAR) || '|' ||
-         CAST(sig[2 * g.b + 2] AS VARCHAR) AS band_key
-  FROM sigs, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.id < b.id),
-e AS (SELECT id, unnest(sh) AS shingle FROM t),
-sz AS (SELECT id, count(*) AS sz FROM e GROUP BY id),
-inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS n_inter
-  FROM cand c
-  JOIN e ea ON ea.id = c.id_a
-  JOIN e eb ON eb.id = c.id_b AND ea.shingle = eb.shingle
-  GROUP BY 1, 2)"""
-
-    o["dedup_minhash_lsh"] = f"""
-WITH {_near_corpus},
-{_MINHASH_CTES}
-SELECT id_a, id_b,
-       round(n_inter / (sa.sz + sb.sz - n_inter), 4) AS jaccard
-FROM inter
-JOIN sz sa ON sa.id = inter.id_a
-JOIN sz sb ON sb.id = inter.id_b
-WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 4) >= 0.8
-"""
-
-    # incremental dedup: the same band math over a named source
-    def _bands_cte(src: str, pre: str) -> str:
-        return f"""{pre}t AS (SELECT doc_id AS id, {_sh_expr(words_c)} AS sh FROM {src}),
-{pre}hv AS (SELECT id, {hs_expr} AS hv FROM {pre}t WHERE len(sh) > 0),
-{pre}sig AS (SELECT id, {sig_expr} AS sig FROM {pre}hv),
-{pre}bands AS (
-  SELECT id, g.b AS band,
-         CAST(sig[2 * g.b + 1] AS VARCHAR) || '|' ||
-         CAST(sig[2 * g.b + 2] AS VARCHAR) AS band_key
-  FROM {pre}sig,
-       (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g)"""
-
-    o["dedup_incremental_docs"] = f"""
-WITH hist AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
-fresh AS (SELECT doc_id, text FROM documents
-          WHERE doc_id >= 300 AND doc_id < 450),
-batch AS (
-  SELECT doc_id, text FROM fresh
-  UNION ALL
-  SELECT doc_id + {_COPY_OFFSET}, 'near duplicate copy ' || text
-  FROM documents WHERE doc_id < 50
-  UNION ALL
-  SELECT doc_id + {2 * _COPY_OFFSET}, text FROM fresh
-  WHERE doc_id < 320),
-{_bands_cte("hist", "h")},
-{_bands_cte("batch", "b")},
-dead_hist AS (
-  SELECT DISTINCT b.id FROM bbands b
-  JOIN hbands h ON b.band = h.band AND b.band_key = h.band_key),
-kb AS (SELECT * FROM bbands
-       WHERE id NOT IN (SELECT id FROM dead_hist)),
-w AS (SELECT band, band_key, min(id) AS w FROM kb GROUP BY 1, 2),
-losers AS (SELECT DISTINCT kb.id FROM kb
-           JOIN w USING (band, band_key) WHERE kb.id > w.w)
-SELECT CAST(b.doc_id AS BIGINT) AS doc_id FROM batch b
-WHERE b.doc_id NOT IN (SELECT id FROM dead_hist)
-  AND b.doc_id NOT IN (SELECT id FROM losers)
-"""
-
-    # RDFS ρdf materialization: the same rule set as operators/infer
-    # (closed TBox, one ABox pass), stated with recursive CTEs; the
-    # mat CTE is shared with the SPARQL-over-entailed-graph oracle
-    _rdfs_values = ", ".join(f"('{s}', '{p}', '{ob}')"
-                             for s, p, ob in _RDFS_SCHEMA)
-    _rdfs_mat_cte = f"""
-WITH RECURSIVE
-inst AS (
-  SELECT 'd:' || doc_id AS subj, 'rdf:type' AS pred,
-         'c:lang_' || lang AS obj FROM documents
-  UNION ALL
-  SELECT 'd:' || doc_id, 'p:haslang', lang FROM documents
-  UNION ALL
-  SELECT 'd:' || doc_id, 'p:cites', 'd:' || (doc_id - 1)
-  FROM documents WHERE doc_id > 0),
-sch(subj, pred, obj) AS (VALUES {_rdfs_values}),
-scp AS (SELECT subj AS sub, obj AS sup FROM sch
-        WHERE pred = 'rdfs:subClassOf'),
-sc(sub, sup) AS (
-  SELECT sub, sup FROM scp
-  UNION
-  SELECT sc.sub, scp.sup FROM sc JOIN scp ON scp.sub = sc.sup),
-spp AS (SELECT subj AS sub, obj AS sup FROM sch
-        WHERE pred = 'rdfs:subPropertyOf'),
-sp(sub, sup) AS (
-  SELECT sub, sup FROM spp
-  UNION
-  SELECT sp.sub, spp.sup FROM sp JOIN spp ON spp.sub = sp.sup),
-scs AS (SELECT sub, sup FROM sc WHERE sub <> sup),
-sps AS (SELECT sub, sup FROM sp WHERE sub <> sup),
-dom AS (SELECT subj AS sub, obj AS cls FROM sch
-        WHERE pred = 'rdfs:domain'),
-rng AS (SELECT subj AS sub, obj AS cls FROM sch
-        WHERE pred = 'rdfs:range'),
-effdom AS (SELECT sub, cls FROM dom
-           UNION
-           SELECT sps.sub, dom.cls FROM sps
-           JOIN dom ON dom.sub = sps.sup),
-effrng AS (SELECT sub, cls FROM rng
-           UNION
-           SELECT sps.sub, rng.cls FROM sps
-           JOIN rng ON rng.sub = sps.sup),
-plain AS (SELECT * FROM inst WHERE pred <> 'rdf:type'),
-alltypes AS (
-  SELECT subj, obj FROM inst WHERE pred = 'rdf:type'
-  UNION ALL
-  SELECT p.subj, e.cls FROM plain p JOIN effdom e ON e.sub = p.pred
-  UNION ALL
-  SELECT p.obj, e.cls FROM plain p JOIN effrng e ON e.sub = p.pred),
-mat AS (
-  SELECT DISTINCT subj, pred, obj FROM (
-    SELECT subj, pred, obj FROM inst
-    UNION ALL SELECT subj, pred, obj FROM sch
-    UNION ALL
-    SELECT p.subj, sps.sup, p.obj FROM plain p
-    JOIN sps ON sps.sub = p.pred
-    UNION ALL SELECT subj, 'rdf:type', obj FROM alltypes
-    UNION ALL
-    SELECT t.subj, 'rdf:type', scs.sup FROM alltypes t
-    JOIN scs ON scs.sub = t.obj
-    UNION ALL SELECT sub, 'rdfs:subClassOf', sup FROM scs
-    UNION ALL SELECT sub, 'rdfs:subPropertyOf', sup FROM sps))
-"""
-
-    o["kg_rdfs_entailed"] = _rdfs_mat_cte + """
-SELECT pred, CASE WHEN pred = 'rdf:type' THEN obj ELSE '' END AS cls,
-       count(*) AS n
-FROM mat GROUP BY 1, 2
-"""
-
-    o["kg_sparql_entailed"] = _rdfs_mat_cte + """
-SELECT obj AS cls, count(*) AS n FROM mat
-WHERE pred = 'rdf:type'
-GROUP BY 1 ORDER BY n DESC, cls LIMIT 10
-"""
-
-    # OWL property rules: recursive-CTE next-closure, prev = mirror,
-    # near = symmetric double
-    o["kg_owl_properties"] = """
-WITH RECURSIVE
-nxt AS (SELECT 'd:' || doc_id AS s, 'd:' || (doc_id - 1) AS o
-        FROM documents WHERE doc_id % 8 <> 0),
-near AS (SELECT 'd:' || doc_id AS s, 'd:' || (doc_id + 1) AS o
-         FROM documents WHERE doc_id % 20 = 0),
-clo(s, o) AS (
-  SELECT s, o FROM nxt
-  UNION
-  SELECT clo.s, nxt.o FROM clo JOIN nxt ON nxt.s = clo.o),
-mat AS (
-  SELECT DISTINCT subj, pred, obj FROM (
-    SELECT 'p:next' AS subj, 'rdf:type' AS pred,
-           'owl:TransitiveProperty' AS obj
-    UNION ALL SELECT 'p:prev', 'owl:inverseOf', 'p:next'
-    UNION ALL SELECT 'p:near', 'rdf:type', 'owl:SymmetricProperty'
-    UNION ALL SELECT s, 'p:next', o FROM clo
-    UNION ALL SELECT o, 'p:prev', s FROM clo
-    UNION ALL SELECT s, 'p:near', o FROM near
-    UNION ALL SELECT o, 'p:near', s FROM near))
-SELECT subj, pred, obj FROM mat
-WHERE TRY_CAST(substr(subj, 3) AS BIGINT) < 64
-"""
-
-    # N-Triples round trip: the oracle restates the generated INPUT —
-    # the wire format must be a perfect inverse pair
-    o["rdf_ntriples_roundtrip"] = r"""
-WITH base AS (SELECT doc_id, text, lang, n_chars FROM documents)
-SELECT 'd:' || doc_id AS subj, 'p:title' AS pred,
-       'He said "' || substr(text, 1, 20) || '"' || chr(10)
-         || 'on line' || chr(9) || 'two \ end' AS obj,
-       TRUE AS obj_is_literal, lang AS obj_lang,
-       CAST(NULL AS VARCHAR) AS obj_datatype,
-       CAST(NULL AS VARCHAR) AS error
-FROM base
-UNION ALL
-SELECT 'd:' || doc_id, 'p:nchars', CAST(n_chars AS VARCHAR),
-       TRUE, NULL, 'xsd:integer', NULL
-FROM base
-UNION ALL
-SELECT 'd:' || doc_id, 'p:cites', 'd:' || (doc_id - 1),
-       FALSE, NULL, NULL, NULL
-FROM base WHERE doc_id > 0
-"""
-
-    # sameAs canonicalization: components = min uri reachable over
-    # the symmetric identity edges (recursive CTE), then rewrite
-    o["kg_sameas_canonical"] = """
-WITH RECURSIVE
-sa AS (
-  SELECT 'm1:' || doc_id AS a, 'd:' || doc_id AS b
-  FROM documents WHERE doc_id < 200
-  UNION ALL
-  SELECT 'm2:' || doc_id, 'm1:' || doc_id
-  FROM documents WHERE doc_id < 100),
-e AS (SELECT a, b FROM sa UNION SELECT b, a FROM sa),
-nodes AS (SELECT DISTINCT a AS n FROM e),
-reach(n, anc) AS (
-  SELECT n, n FROM nodes
-  UNION
-  SELECT e.a, reach.anc FROM reach JOIN e ON e.b = reach.n),
-canon AS (SELECT n, min(anc) AS canon FROM reach GROUP BY n),
-edges AS (
-  SELECT CASE WHEN doc_id < 200 THEN 'm1:' || doc_id
-              ELSE 'd:' || doc_id END AS subj,
-         CASE WHEN doc_id - 1 < 100 THEN 'm2:' || (doc_id - 1)
-              ELSE 'd:' || (doc_id - 1) END AS obj
-  FROM documents WHERE doc_id > 0
-  UNION ALL
-  SELECT 'd:' || doc_id, 'd:' || (doc_id - 1)
-  FROM documents WHERE doc_id > 0 AND doc_id < 50)
-SELECT DISTINCT coalesce(cs.canon, edges.subj) AS subj,
-                coalesce(co.canon, edges.obj) AS obj
-FROM edges
-LEFT JOIN canon cs ON cs.n = edges.subj
-LEFT JOIN canon co ON co.n = edges.obj
-"""
-
-    th_expr = (f"list_transform({words_c}, "
-               "w -> CAST(concat('0x', substr(md5(w), 1, 8)) AS BIGINT))")
-    bit_terms = " + ".join(
-        f"CASE WHEN 2 * len(list_filter(th, h -> (h >> {j}) & 1 = 1)) "
-        f"> len(th) THEN {1 << j} ELSE 0 END"
-        for j in range(32))
-    o["dedup_simhash"] = f"""
-WITH t AS (SELECT doc_id AS id, {th_expr} AS th FROM documents)
-SELECT id, CAST({bit_terms} AS BIGINT) AS simhash FROM t
-"""
-
-    _near_corpus_100 = """
-corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 100
-  UNION ALL
-  SELECT doc_id + 10000000, 'near duplicate copy ' || text
-  FROM documents WHERE doc_id < 100
-)"""
-    sh_bit_terms = " + ".join(
-        f"CASE WHEN 2 * len(list_filter(th, h -> (h >> {j}) & 1 = 1)) "
-        f"> len(th) THEN {1 << j} ELSE 0 END"
-        for j in range(32))
-    o["dedup_simhash_pairs"] = f"""
-WITH {_near_corpus_100},
-t AS (SELECT doc_id AS id, {th_expr} AS th FROM corpus),
-sigs AS (SELECT id, CAST({sh_bit_terms} AS BIGINT) AS simhash FROM t),
-banded AS (
-  SELECT id, simhash, g.b AS band,
-         (simhash >> (g.b * 8)) & 255 AS block
-  FROM sigs, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g),
-pairs AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-         bit_count(xor(a.simhash::UBIGINT, b.simhash::UBIGINT))::BIGINT
-             AS hamming
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.block = b.block AND a.id < b.id)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 6
-"""
-
-    o["dedup_components"] = f"""
-WITH RECURSIVE {_near_corpus_100},
-t AS (SELECT doc_id AS id, {th_expr} AS th FROM corpus),
-sigs AS (SELECT id, CAST({sh_bit_terms} AS BIGINT) AS simhash FROM t),
-banded AS (
-  SELECT id, simhash, g.b AS band,
-         (simhash >> (g.b * 8)) & 255 AS block
-  FROM sigs, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.block = b.block AND a.id < b.id
-  WHERE bit_count(xor(a.simhash::UBIGINT, b.simhash::UBIGINT)) <= 6),
-edges AS (SELECT id_a AS u, id_b AS v FROM cand
-          UNION SELECT id_b, id_a FROM cand),
-reach AS (
-  SELECT u AS id, u AS r FROM edges
-  UNION
-  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
-comp AS (SELECT id, CAST(min(r) AS BIGINT) AS comp
-         FROM reach GROUP BY id),
-sizes AS (SELECT comp, CAST(count(*) AS BIGINT) AS csize
-          FROM comp GROUP BY comp)
-SELECT CAST(c.id AS BIGINT) AS id, c.comp, s.csize
-FROM comp c JOIN sizes s USING (comp)
-"""
-
-    # canonical selection: the identical component closure, score =
-    # text length, winner per comp by (score DESC, id ASC); docs
-    # outside every cluster are their own singleton comp
-    o["canonical_docs"] = f"""
-WITH RECURSIVE {_near_corpus_100},
-t AS (SELECT doc_id AS id, {th_expr} AS th FROM corpus),
-sigs AS (SELECT id, CAST({sh_bit_terms} AS BIGINT) AS simhash FROM t),
-banded AS (
-  SELECT id, simhash, g.b AS band,
-         (simhash >> (g.b * 8)) & 255 AS block
-  FROM sigs, (SELECT CAST(unnest(generate_series(0, 3)) AS INT) AS b) g),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.block = b.block AND a.id < b.id
-  WHERE bit_count(xor(a.simhash::UBIGINT, b.simhash::UBIGINT)) <= 6),
-edges AS (SELECT id_a AS u, id_b AS v FROM cand
-          UNION SELECT id_b, id_a FROM cand),
-reach AS (
-  SELECT u AS id, u AS r FROM edges
-  UNION
-  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
-ccomp AS (SELECT id, CAST(min(r) AS BIGINT) AS comp
-          FROM reach GROUP BY id),
-member AS (
-  SELECT CAST(c.doc_id AS BIGINT) AS id,
-         CAST(length(c.text) AS BIGINT) AS score,
-         coalesce(ccomp.comp, c.doc_id) AS comp
-  FROM corpus c LEFT JOIN ccomp ON ccomp.id = c.doc_id),
-win AS (
-  SELECT comp, id AS keeper_id FROM (
-    SELECT comp, id, row_number() OVER (
-      PARTITION BY comp ORDER BY score DESC, id ASC) AS rn
-    FROM member) WHERE rn = 1)
-SELECT m.id, m.comp, m.score, w.keeper_id,
-       m.id = w.keeper_id AS is_keeper
-FROM member m JOIN win w USING (comp)
-"""
-
-
-    from ferenda_spark.operators.sampling import rate_threshold
-    # shard packing restated as ONE global window (the semantics the
-    # bucketed two-phase implementation must reproduce exactly)
-    _SHARD_CTE = """
-t AS (
-  SELECT doc_id, n_chars AS w,
-    CAST(concat('0x', substr(md5('shard-v1:' ||
-         CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hkey
-  FROM documents),
-c AS (
-  SELECT doc_id, hkey, w,
-    CAST(sum(w) OVER (ORDER BY hkey, doc_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         AS BIGINT) - w AS prev
-  FROM t)
-"""
-    o["training_shards_docs"] = f"""
-WITH {_SHARD_CTE}
-SELECT doc_id, hkey AS shuffle_key,
-       CAST(prev // 50000 AS BIGINT) AS shard
-FROM c
-"""
-    o["training_shard_manifest"] = f"""
-WITH {_SHARD_CTE}
-SELECT CAST(prev // 50000 AS BIGINT) AS shard,
-       count(*) AS n_docs,
-       CAST(sum(w) AS BIGINT) AS total_weight,
-       min(hkey) AS first_key, max(hkey) AS last_key
-FROM c GROUP BY 1
-"""
-
-    o["pack_contexts_docs"] = f"""
-WITH {_SHARD_CTE},
-e AS (
-  SELECT doc_id, prev, w,
-         unnest(generate_series(prev // 512, (prev + w - 1) // 512))
-           AS ctx
-  FROM c WHERE w > 0)
-SELECT doc_id, ctx,
-  greatest(prev - ctx * 512, 0) AS ctx_offset,
-  greatest(ctx * 512 - prev, 0) AS slice_start,
-  (least((ctx + 1) * 512, prev + w) - prev)
-    - greatest(ctx * 512 - prev, 0) AS slice_len
-FROM e
-"""
-
-    o["latest_fetch_docs"] = f"""
-WITH {_F_CTE}
-SELECT url AS canonical_url,
-  CASE WHEN doc_id % 7 = 0 THEN url || '/'
-       WHEN doc_id % 5 = 0 THEN url || '#top'
-       ELSE url END AS winner_url,
-  1704067200 + doc_id * 137
-    + CASE WHEN doc_id % 7 = 0 THEN 172800
-           WHEN doc_id % 5 = 0 THEN 86400 ELSE 0 END AS latest_epoch,
-  CAST(1 + CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END
-         + CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END
-       AS BIGINT) AS n_fetches
-FROM f
-"""
-
-    o["head_meta_docs"] = """
-WITH d AS (
-  SELECT doc_id,
-    'https://news' || CAST(doc_id % 5 AS VARCHAR) || '.example'
-      AS site,
-    'https://news' || CAST(doc_id % 5 AS VARCHAR) || '.example/a/'
-      || CAST(doc_id AS VARCHAR) AS url,
-    CAST(doc_id AS VARCHAR) AS did,
-    CAST(doc_id - doc_id % 3 AS VARCHAR) AS leader
-  FROM documents)
-SELECT url AS src_url, 'title' AS kind, '' AS key,
-       'Story ' || did AS value, CAST(NULL AS VARCHAR) AS hreflang,
-       0 AS pos
-FROM d
-UNION ALL
-SELECT url, 'meta', 'og:title', 'OG ' || did, NULL, 1 FROM d
-UNION ALL
-SELECT url, 'meta', 'description',
-       'D' || CAST(doc_id % 11 AS VARCHAR), NULL, 2 FROM d
-UNION ALL
-SELECT url, 'link', 'alternate', site || '/sv/' || did, 'sv', 3
-FROM d
-UNION ALL
-SELECT url, 'link', 'canonical', site || '/art/' || leader, NULL, 4
-FROM d WHERE doc_id % 3 <> 0
-"""
-
-    o["canonical_declared_dedup"] = """
-WITH d AS (
-  SELECT doc_id,
-    'https://m.site/a/' || CAST(doc_id AS VARCHAR) AS url,
-    1704067200 + doc_id * 7 AS epoch,
-    doc_id % 4 <> 0 AS declares,
-    doc_id - doc_id % 3 AS leader
-  FROM documents),
-k AS (
-  SELECT *, CASE WHEN declares
-    THEN 'https://site.example/art/' || CAST(leader AS VARCHAR)
-    ELSE url END AS canon
-  FROM d)
-SELECT canon AS canonical_url,
-       arg_max(url, epoch) AS winner_url,
-       max(epoch) AS latest_epoch,
-       arg_max(declares, epoch) AS declared,
-       count(*) AS n_fetches
-FROM k GROUP BY 1
-"""
-
-    # BPE training: four unrolled merge rounds.  Each round: symbol
-    # pairs via window-lead over the unnested symbol strings, argmax
-    # with the (cnt DESC, l, r) total order, then the merge applied
-    # as ONE literal replace over the chr(31)-delimited string —
-    # provably the same greedy leftmost pass as the engine's fold.
-    _bpe_round = """p{k} AS (
-  SELECT l, r, sum(wcount) AS cnt FROM (
-    SELECT wcount, sym AS l,
-           lead(sym) OVER (PARTITION BY word ORDER BY i) AS r
-    FROM (SELECT word, wcount,
-                 unnest(string_split(trim(s, chr(31)),
-                                     chr(31) || chr(31))) AS sym,
-                 generate_subscripts(string_split(trim(s, chr(31)),
-                     chr(31) || chr(31)), 1) AS i
-          FROM w{j})) WHERE r IS NOT NULL GROUP BY 1, 2),
-b{k} AS (SELECT l, r, cnt FROM p{k} WHERE cnt >= 2
-         ORDER BY cnt DESC, l, r LIMIT 1),
-w{k} AS (SELECT word, wcount,
-  CASE WHEN b{k}.l IS NULL THEN s ELSE
-    replace(s,
-            chr(31) || b{k}.l || chr(31) || chr(31) || b{k}.r || chr(31),
-            chr(31) || b{k}.l || b{k}.r || chr(31)) END AS s
-  FROM w{j} LEFT JOIN b{k} ON TRUE)"""
-    _bpe_rounds = ",\n".join(
-        _bpe_round.format(k=k, j=k - 1) for k in (1, 2, 3, 4))
-    o["bpe_train_docs"] = f"""
-WITH w0 AS (
-  SELECT word, count(*) AS wcount,
-         chr(31) || array_to_string(regexp_extract_all(word, '.'),
-                                    chr(31) || chr(31)) || chr(31) AS s
-  FROM (SELECT unnest(regexp_extract_all(lower(text),
-            '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS word FROM documents)
-  GROUP BY 1),
-{_bpe_rounds}
-SELECT 0 AS rank, l AS left_sym, r AS right_sym,
-       CAST(cnt AS BIGINT) AS freq FROM b1
-UNION ALL SELECT 1, l, r, CAST(cnt AS BIGINT) FROM b2
-UNION ALL SELECT 2, l, r, CAST(cnt AS BIGINT) FROM b3
-UNION ALL SELECT 3, l, r, CAST(cnt AS BIGINT) FROM b4
-"""
-
-    _bpe_w = ("chr(31) || array_to_string(regexp_extract_all(w, '.'), "
-              "chr(31) || chr(31)) || chr(31)")
-    for _l, _r in _BPE_FIXED_MERGES:
-        _bpe_w = (f"replace({_bpe_w}, chr(31) || '{_l}' || chr(31) || "
-                  f"chr(31) || '{_r}' || chr(31), "
-                  f"chr(31) || '{_l}{_r}' || chr(31))")
-    o["bpe_encode_docs"] = f"""
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(lower(text),
-      '[a-z]+|[0-9]+|[^a-z0-9\\s]') AS words
-  FROM documents),
-e AS (
-  SELECT doc_id, flatten(list_transform(words, w ->
-    string_split(trim({_bpe_w}, chr(31)),
-                 chr(31) || chr(31)))) AS toks
-  FROM t)
-SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-       md5(array_to_string(toks, ' ')) AS tokens_md5
-FROM e
-"""
-
-    o["curation_pipeline_v5"] = f"""
-WITH d AS (
-  SELECT doc_id, CAST(doc_id AS VARCHAR) AS did,
-         doc_id % 3 = 0 AS bonus
-  FROM documents),
-c AS (
-  SELECT 'https://wild.example/p/' || did AS url,
-    'Paragraph one of document ' || did ||
-      ' discusses the protocol at considerable length for testing.'
-    || chr(10) ||
-    'Second paragraph of document ' || did ||
-      ' has one inline reference but remains mostly prose.'
-    || CASE WHEN bonus THEN chr(10)
-         || 'Bonus paragraph for document ' || did
-         || ' adds enough extra prose to clear the token floor'
-         || ' comfortably.'
-       ELSE '' END AS content
-  FROM d),
-tok AS (
-  SELECT url, CAST(len(flatten(list_transform(
-      regexp_extract_all(lower(content),
-                         '[a-z]+|[0-9]+|[^a-z0-9\\s]'),
-      w -> string_split(trim({_bpe_w}, chr(31)),
-                        chr(31) || chr(31))))) AS BIGINT) AS n_tokens
-  FROM c),
-kept AS (SELECT * FROM tok WHERE n_tokens >= 170),
-t AS (SELECT url, n_tokens,
-        CAST(concat('0x', substr(md5('shard-v1:' || url), 1, 15))
-             AS BIGINT) AS hkey
-      FROM kept),
-cs AS (SELECT url, n_tokens,
-        CAST(sum(n_tokens) OVER (ORDER BY hkey, url
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS BIGINT) - n_tokens AS prev
-       FROM t)
-SELECT url, CAST(prev // 2000 AS BIGINT) AS shard, n_tokens FROM cs
-"""
-
-    _nb_ctes = """tk AS (
-  SELECT doc_id, lang,
-         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS toks
-  FROM documents),
-ex AS (
-  SELECT doc_id, lang = 'en' AS y,
-         CAST(concat('0x', substr(md5('qw-v1:' || u.t), 1, 15))
-              AS BIGINT) % 512 AS b
-  FROM tk, unnest(toks) AS u(t)),
-c AS (
-  SELECT b, sum(CASE WHEN y THEN 1 ELSE 0 END) AS pos,
-         sum(CASE WHEN y THEN 0 ELSE 1 END) AS neg
-  FROM ex GROUP BY b),
-tot AS (SELECT sum(pos) AS pt, sum(neg) AS nt FROM c),
-w AS (
-  SELECT b, CAST(floor(1000 * (ln(pos + 1) - ln(neg + 1)
-             + ln((nt + 512) * 1.0 / (pt + 512))) + 0.5) AS BIGINT)
-           AS wt
-  FROM c, tot),
-sc AS (
-  SELECT doc_id, count(*) AS n, sum(wt) AS s
-  FROM ex JOIN w USING (b) GROUP BY doc_id),
-scored AS (
-  SELECT tk.doc_id AS id, tk.lang,
-         CAST(len(tk.toks) AS BIGINT) AS n_tokens,
-         CAST(coalesce(sc.s, 0) AS BIGINT) AS score_sum_milli
-  FROM tk LEFT JOIN sc ON sc.doc_id = tk.doc_id)"""
-
-    o["nb_classifier_docs"] = f"""
-WITH {_nb_ctes}
-SELECT id, n_tokens, score_sum_milli,
-       CASE WHEN n_tokens = 0 THEN TRUE
-            ELSE score_sum_milli * 1000 >= 0 END AS keep
-FROM scored
-"""
-
-    o["classifier_eval_docs"] = f"""
-WITH {_nb_ctes},
-e AS (
-  SELECT s.*, s.lang = 'en' AS y, t.thr
-  FROM scored s, (VALUES (-1200), (-1000), (-800), (0)) t(thr)),
-k AS (
-  SELECT thr, y,
-    CASE WHEN n_tokens = 0 THEN thr <= 0
-         ELSE score_sum_milli * 1000 >= CAST(thr AS BIGINT) * n_tokens
-    END AS kept
-  FROM e),
-agg AS (
-  SELECT thr AS threshold_milli,
-    sum(CASE WHEN kept AND y THEN 1 ELSE 0 END) AS tp,
-    sum(CASE WHEN kept AND NOT y THEN 1 ELSE 0 END) AS fp,
-    sum(CASE WHEN NOT kept AND y THEN 1 ELSE 0 END) AS fn,
-    sum(CASE WHEN NOT kept AND NOT y THEN 1 ELSE 0 END) AS tn
-  FROM k GROUP BY 1)
-SELECT threshold_milli,
-  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-  CAST(fn AS BIGINT) AS fn, CAST(tn AS BIGINT) AS tn,
-  CASE WHEN tp + fp > 0 THEN CAST(tp * 1000 // (tp + fp) AS BIGINT)
-       END AS precision_milli,
-  CASE WHEN tp + fn > 0 THEN CAST(tp * 1000 // (tp + fn) AS BIGINT)
-       END AS recall_milli
-FROM agg
-"""
-
-    o["hash_embed_docs"] = """
-WITH tk AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS toks
-  FROM documents),
-ex AS (
-  SELECT doc_id,
-    CAST(concat('0x', substr(md5('he-v1:' || u.t), 1, 15))
-         AS BIGINT) % 32 AS j,
-    CASE WHEN CAST(concat('0x', substr(md5('he-v1#s:' || u.t), 1, 15))
-              AS BIGINT) % 2 = 1 THEN -1 ELSE 1 END AS s
-  FROM tk, unnest(toks) AS u(t))
-SELECT doc_id AS id, CAST(j AS INT) AS j,
-       CAST(sum(s) AS BIGINT) AS v
-FROM ex GROUP BY 1, 2 HAVING sum(s) <> 0
-"""
-
-    _langid_values = ", ".join(
-        f"('{lg}', '{gr}', {rk})" for lg, gr, rk in _LANGID_PROFILE)
-    o["langid_classify_docs"] = f"""
-WITH prof(lang, gram, rank) AS (VALUES {_langid_values}),
-src AS (
-  SELECT doc_id,
-         regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS s
-  FROM documents),
-g AS (
-  SELECT doc_id, u.gram
-  FROM src, unnest(list_transform(
-      generate_series(1, greatest(len(s) - 2, 0)),
-      i -> substr(s, CAST(i AS INT), 3))) AS u(gram)),
-dg AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
-dprof AS (
-  SELECT doc_id, gram, drank FROM (
-    SELECT *, row_number() OVER (PARTITION BY doc_id
-                ORDER BY cnt DESC, gram) AS drank FROM dg)
-  WHERE drank <= 80),
-langs AS (SELECT DISTINCT lang FROM prof),
-dist AS (
-  SELECT d.doc_id, l.lang,
-         CAST(sum(coalesce(abs(d.drank - p.rank), 150)) AS BIGINT)
-           AS dist
-  FROM dprof d CROSS JOIN langs l
-  LEFT JOIN prof p ON p.lang = l.lang AND p.gram = d.gram
-  GROUP BY 1, 2)
-SELECT doc_id AS id, lang AS lang_pred, dist FROM (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-              ORDER BY dist, lang) AS rn FROM dist)
-WHERE rn = 1
-"""
-
-    o["langid_trained_docs"] = """
-WITH src AS (
-  SELECT doc_id, lang,
-         regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS s
-  FROM documents),
-g AS (
-  SELECT doc_id, lang, u.gram
-  FROM src, unnest(list_transform(
-      generate_series(1, greatest(len(s) - 2, 0)),
-      i -> substr(s, CAST(i AS INT), 3))) AS u(gram)),
-tg AS (SELECT lang, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
-prof AS (
-  SELECT lang, gram, rank FROM (
-    SELECT *, row_number() OVER (PARTITION BY lang
-                ORDER BY cnt DESC, gram) AS rank FROM tg)
-  WHERE rank <= 150),
-dg AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY 1, 2),
-dprof AS (
-  SELECT doc_id, gram, drank FROM (
-    SELECT *, row_number() OVER (PARTITION BY doc_id
-                ORDER BY cnt DESC, gram) AS drank FROM dg)
-  WHERE drank <= 80),
-langs AS (SELECT DISTINCT lang FROM prof),
-dist AS (
-  SELECT d.doc_id, l.lang,
-         CAST(sum(coalesce(abs(d.drank - p.rank), 150)) AS BIGINT)
-           AS dist
-  FROM dprof d CROSS JOIN langs l
-  LEFT JOIN prof p ON p.lang = l.lang AND p.gram = d.gram
-  GROUP BY 1, 2)
-SELECT doc_id AS id, lang AS lang_pred, dist FROM (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-              ORDER BY dist, lang) AS rn FROM dist)
-WHERE rn = 1
-"""
-
-    o["hreflang_clusters_docs"] = """
-WITH fam AS (
-  SELECT DISTINCT CAST(doc_id - doc_id % 3 AS VARCHAR) AS L,
-         doc_id - doc_id % 3 AS ln
-  FROM documents),
-mx AS (SELECT max(doc_id) AS m FROM documents)
-SELECT 'https://x.example/en/' || L AS url,
-       'https://x.example/de/' || L AS cluster,
-       'en' AS hreflang
-FROM fam
-UNION ALL
-SELECT 'https://x.example/sv/' || L,
-       'https://x.example/de/' || L, CAST(NULL AS VARCHAR)
-FROM fam
-UNION ALL
-SELECT 'https://x.example/de/' || L,
-       'https://x.example/de/' || L,
-       CASE WHEN ln + 2 <= mx.m THEN 'de' END
-FROM fam, mx
-"""
-
-    o["text_neardup_hash"] = """
+    reg["text_neardup_hash"] = text_neardup_hash, """
 WITH d AS (
   SELECT doc_id, text,
     CASE WHEN doc_id % 3 = 0 THEN text || ' zzz yyy'
@@ -6049,124 +4920,105 @@ JOIN nb ON nb.doc_id = d.doc_id
 LEFT JOIN dt ON dt.doc_id = d.doc_id
 """
 
-    o["anchor_alias_linking"] = """
-WITH d AS (
-  SELECT doc_id, CAST(doc_id AS VARCHAR) AS did,
-         CAST(doc_id % 29 AS VARCHAR) AS k
-  FROM documents)
-SELECT doc_id,
-  CASE WHEN doc_id % 7 = 0 THEN 'zzqx' || did
-       ELSE 'Topic phrase ' || k END AS label,
-  CASE WHEN doc_id % 7 = 0 THEN CAST(NULL AS VARCHAR)
-       ELSE 'https://hub.example/res/topic/' || k END AS entity_uri
-FROM d
-"""
-
-    o["meta_refresh_docs"] = """
-WITH d AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS did
-           FROM documents)
-SELECT 'https://w.example/p/' || did AS src,
-       'https://w.example/art/' || did AS final_url,
-       CAST(1 AS BIGINT) AS hops, TRUE AS resolved
-FROM d WHERE doc_id % 4 = 1
+    def hreflang_clusters_docs(spark, sf):
+        """Multilingual document families (webfilter.
+        hreflang_clusters): en/sv/de triples with deliberately
+        ASYMMETRIC declarations — the en page lists all variants,
+        the sv page lists only en (and never itself, so its own
+        hreflang stays NULL), the de page lists de+en — must
+        cluster transitively under one min-url label, including
+        the last partial family whose de PAGE does not exist but
+        whose de url is still a referenced node.  Oracle: the
+        family rows in closed form."""
+        from ferenda_spark.operators.webfilter import hreflang_clusters
+        r = F.col("doc_id") % 3
+        L = (F.col("doc_id") - r).cast("string")
+        lang = (F.when(r == 0, "en").when(r == 1, "sv")
+                .otherwise("de"))
+        url = F.concat(F.lit("https://x.example/"), lang,
+                       F.lit("/"), L)
+        html = F.concat(
+            F.lit("<html><head>"),
+            F.when(r == 0, F.concat(
+                F.lit('<link rel="alternate" hreflang="en" '
+                      'href="https://x.example/en/'), L,
+                F.lit('"><link rel="alternate" hreflang="sv" '
+                      'href="/sv/'), L,
+                F.lit('"><link rel="alternate" hreflang="de" '
+                      'href="/de/'), L, F.lit('">')))
+            .when(r == 1, F.concat(
+                F.lit('<link rel="alternate" hreflang="en" '
+                      'href="/en/'), L, F.lit('">')))
+            .otherwise(F.concat(
+                F.lit('<link rel="alternate" hreflang="de" '
+                      'href="https://x.example/de/'), L,
+                F.lit('"><link rel="alternate" hreflang="en" '
+                      'href="/en/'), L, F.lit('">'))),
+            F.lit("</head><body>x</body></html>"))
+        pages = _docs(spark, sf).select(url.alias("url"),
+                                        html.alias("html"))
+        return hreflang_clusters(pages)
+    reg["hreflang_clusters_docs"] = hreflang_clusters_docs, """
+WITH fam AS (
+  SELECT DISTINCT CAST(doc_id - doc_id % 3 AS VARCHAR) AS L,
+         doc_id - doc_id % 3 AS ln
+  FROM documents),
+mx AS (SELECT max(doc_id) AS m FROM documents)
+SELECT 'https://x.example/en/' || L AS url,
+       'https://x.example/de/' || L AS cluster,
+       'en' AS hreflang
+FROM fam
 UNION ALL
-SELECT 'https://w.example/p/' || did,
-       'https://w.example/art/' || CAST(doc_id - 1 AS VARCHAR),
-       CAST(2 AS BIGINT), TRUE
-FROM d WHERE doc_id % 4 = 2
-"""
-
-    o["threshold_calibration_docs"] = f"""
-WITH {_nb_ctes},
-m AS (
-  -- exact FLOOR division mirroring classify.threshold_for_keep_rate
-  -- (DuckDB integer // truncates toward zero, floor != trunc for
-  -- the negative score sums NB log-odds produce)
-  SELECT (score_sum_milli * 1000
-          - ((score_sum_milli * 1000 % n_tokens + n_tokens)
-             % n_tokens)) // n_tokens AS m
-  FROM scored WHERE n_tokens > 0),
-p AS (SELECT count(*) AS n FROM m),
-kk AS (SELECT CAST((300 * n + 999) // 1000 AS BIGINT) AS k, n FROM p),
-thr AS (
-  SELECT m AS t FROM m, kk ORDER BY m DESC
-  LIMIT 1 OFFSET (SELECT k - 1 FROM kk))
-SELECT CAST(thr.t AS BIGINT) AS threshold_milli,
-       (SELECT count(*) FROM m WHERE m.m >= thr.t) AS kept,
-       CAST(kk.n AS BIGINT) AS n,
-       CAST((SELECT count(*) FROM scored WHERE n_tokens = 0)
-            AS BIGINT) AS n_empty
-FROM thr, kk
-"""
-
-    o["kg_metadata_triad"] = """
-WITH d AS (
-  SELECT 'https://shop' || CAST(doc_id % 3 AS VARCHAR)
-           || '.example/p/' || CAST(doc_id AS VARCHAR) AS url,
-         CAST(doc_id AS VARCHAR) AS did,
-         CAST(doc_id % 90 + 10 AS VARCHAR) AS price
-  FROM documents)
-SELECT url || '#prod' AS subj, 'rdf:type' AS pred,
-       'schema:Product' AS obj, FALSE AS obj_is_literal FROM d
+SELECT 'https://x.example/sv/' || L,
+       'https://x.example/de/' || L, CAST(NULL AS VARCHAR)
+FROM fam
 UNION ALL
-SELECT url || '#prod', 'schema:name', 'P' || did, TRUE FROM d
-UNION ALL
-SELECT url || '#offer', 'rdf:type', 'schema:Offer', FALSE FROM d
-UNION ALL
-SELECT url || '#offer', 'schema:price', price, TRUE FROM d
-UNION ALL
-SELECT url || '#prod', 'schema:sku', 'S' || did, TRUE FROM d
+SELECT 'https://x.example/de/' || L,
+       'https://x.example/de/' || L,
+       CASE WHEN ln + 2 <= mx.m THEN 'de' END
+FROM fam, mx
 """
 
-    o["strip_paragraphs_docs"] = """
-WITH d AS (
-  SELECT doc_id,
-    'Alpha paragraph of doc ' || CAST(doc_id AS VARCHAR)
-      || ' with unique content.' AS a,
-    'Beta paragraph shared text for ' || CAST(doc_id AS VARCHAR)
-      || '.' AS b,
-    'Gamma closing paragraph ' || CAST(doc_id AS VARCHAR) || '.' AS c
-  FROM documents)
-SELECT doc_id,
-  CASE WHEN doc_id % 3 = 0 THEN a || chr(10) || b || chr(10) || c
-       WHEN doc_id % 3 = 1 THEN a
-       ELSE a || chr(10) || b || chr(10) || c END AS text,
-  CASE WHEN doc_id % 3 = 0 THEN 5
-       WHEN doc_id % 3 = 1 THEN 3 ELSE 3 END AS n_paras,
-  CASE WHEN doc_id % 3 = 0 THEN 2
-       WHEN doc_id % 3 = 1 THEN 2 ELSE 0 END AS n_removed
-FROM d
-"""
-
-    o["noindex_filter_docs"] = """
-SELECT 'https://idx.example/p/' || CAST(doc_id AS VARCHAR) AS url
-FROM documents
-WHERE NOT (doc_id % 4 = 0 OR doc_id % 7 = 1)
-"""
-
-    o["main_content_docs"] = """
-WITH d AS (
-  SELECT CAST(doc_id AS VARCHAR) AS did FROM documents),
-b AS (
-  SELECT did,
-    'Paragraph one of document ' || did ||
-      ' discusses the protocol at considerable length for testing.'
-      AS p1,
-    'Second paragraph of document ' || did ||
-      ' has one inline reference but remains mostly prose.' AS p2,
-    'Related item one for ' || did || ' Related item two for '
-      || did AS rel
-  FROM d)
-SELECT 'https://wild.example/p/' || did AS url,
-       p1 || chr(10) || p2 AS content,
-       2 AS n_kept, 2 AS n_dropped,
-       CAST(len(p1) + len(p2) AS BIGINT) AS content_chars,
-       CAST(len(p1) + len(p2) + len('tiny') + len(rel) AS BIGINT)
-         AS total_chars
-FROM b
-"""
-
-    o["curation_pipeline_v4"] = f"""
+    def curation_pipeline_v4(spark, sf):
+        """The ingest-to-export story in one query: multi-snapshot
+        crawl (refetch variants at later times, same content) →
+        newest-fetch-per-canonical-url dedup → Arrow extract →
+        document-quality floor (length ≥ 420) → deterministic
+        training-shard packing → per-shard manifest.  Every stage is
+        an independently-gated operator; the oracle recomposes the
+        identical chain in SQL."""
+        from ferenda_spark.operators.shards import (assign_shards,
+                                                    shard_manifest)
+        from ferenda_spark.operators.webfilter import latest_fetch
+        p = _pages(spark, sf).select("url", "warc_ts", "html", "lang")
+        d_id = F.regexp_extract(F.col("url"), r"(\d+)$", 1).cast("long")
+        v1 = (p.filter(d_id % 5 == 0).withColumn(
+            "url", F.concat(F.col("url"), F.lit("#top"))).withColumn(
+            "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")))
+        v2 = (p.filter(d_id % 7 == 0).withColumn(
+            "url", F.concat(F.col("url"), F.lit("/"))).withColumn(
+            "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 DAY")))
+        fetched = latest_fetch(p.unionByName(v1).unionByName(v2))
+        # canonical identity for the rest of the chain (the winner's
+        # raw url may carry a fragment/slash variant)
+        pages = fetched.select(F.col("canonical_url").alias("url"),
+                               "html", "lang")
+        ext = extract(pages, doc_url_regex=DOC_PAGE_URL_RE)
+        kept = (ext.filter(F.col("is_doc"))
+                .select("url", F.length("text").cast("long").alias("w"))
+                .filter(F.col("w") >= 420)
+                # lazy localCheckpoint: shard packing scans its input
+                # twice (bucket totals + windowed cumsum) — the tiny
+                # (url, w) projection materializes ONCE, at
+                # assign_shards' bucket-totals collect (which runs at
+                # DataFrame-construction time by design), so the
+                # Arrow extract and the dedup window never re-run
+                .localCheckpoint(eager=False))
+        a = assign_shards(kept, budget=50000, weight_col="w",
+                          key_col="url")
+        return (shard_manifest(a, "w")
+                .select("shard", "n_docs", "total_weight"))
+    reg["curation_pipeline_v4"] = curation_pipeline_v4, f"""
 WITH {_F_CTE},
 kept AS (
   SELECT url, CAST(len({_EXPECTED_TEXT}) AS BIGINT) AS w
@@ -6187,29 +5039,32 @@ SELECT CAST(prev // 50000 AS BIGINT) AS shard,
 FROM c GROUP BY 1
 """
 
-    o["sample_mixture_docs"] = f"""
-SELECT doc_id, lang FROM documents
-WHERE CAST(concat('0x', substr(md5('mix-v1:' ||
-        CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-  < CASE lang WHEN 'en' THEN {rate_threshold(0.5)}
-              WHEN 'zh' THEN {rate_threshold(0.2)}
-              ELSE {rate_threshold(0.05)} END
-"""
-
-    o["quota_sample_docs"] = """
-WITH n AS (SELECT source, count(*) AS grp_n FROM documents GROUP BY 1)
-SELECT d.doc_id, d.source
-FROM documents d JOIN n ON d.source IS NOT DISTINCT FROM n.source
-WHERE n.grp_n <= 10
-   OR CAST(concat('0x', substr(md5('quota-v1:' ||
-        CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-      < 10 * (1152921504606846976 // n.grp_n)
-"""
+    def redact_pii_docs(spark, sf):
+        """PII scrub over a corpus with deterministically injected
+        identifiers (emails on doc_id%7, IPv4 on %11, 9-digit runs on
+        %13): per-type counts + the redacted text, both engines
+        running the identical RE2-safe patterns."""
+        d = _docs(spark, sf).select("doc_id", "text")
+        did = F.col("doc_id").cast("string")
+        injected = d.select("doc_id", F.concat(
+            F.col("text"),
+            F.when(F.col("doc_id") % 7 == 0,
+                   F.concat(F.lit(" contact user"), did,
+                            F.lit("@example.com"))).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 11 == 0,
+                   F.concat(F.lit(" from 10.0.0."),
+                            (F.col("doc_id") % 256).cast("string"))
+                   ).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 13 == 0,
+                   F.concat(F.lit(" ref 9"),
+                            F.lpad(did, 8, "0"))).otherwise(F.lit("")),
+        ).alias("text"))
+        return _longify(textstats.redact_pii(injected))
 
     from ferenda_spark.operators.textstats import PII_PATTERNS
     _pp = dict(PII_PATTERNS)
     _pii_e, _pii_i, _pii_n = _pp["email"], _pp["ipv4"], _pp["longnum"]
-    o["redact_pii_docs"] = f"""
+    reg["redact_pii_docs"] = redact_pii_docs, f"""
 WITH inj AS (
   SELECT doc_id, text ||
     CASE WHEN doc_id % 7 = 0 THEN ' contact user' ||
@@ -6230,7 +5085,27 @@ SELECT doc_id,
 FROM inj
 """
 
-    o["strip_boilerplate_docs"] = """
+    def strip_boilerplate_docs(spark, sf):
+        """Line-level boilerplate removal over a corpus with
+        deterministically injected repeated sentences: units seen in
+        >10 distinct docs (the two injected banners) are dropped,
+        per-doc unique trailing notes and the body survive."""
+        d = _docs(spark, sf).select("doc_id", "text")
+        did = F.col("doc_id")
+        inj = d.select("doc_id", F.concat(
+            F.col("text"),
+            F.when(did % 2 == 0,
+                   F.lit(". Subscribe to our newsletter today")
+                   ).otherwise(F.lit("")),
+            F.when(did % 3 == 0,
+                   F.lit(". All rights reserved worldwide")
+                   ).otherwise(F.lit("")),
+            F.when(did % 5 == 0,
+                   F.concat(F.lit(". unique trailing note "),
+                            did.cast("string"))).otherwise(F.lit("")),
+        ).alias("text"))
+        return _longify(dedup.strip_boilerplate(inj))
+    reg["strip_boilerplate_docs"] = strip_boilerplate_docs, """
 WITH inj AS (
   SELECT doc_id, text ||
     CASE WHEN doc_id % 2 = 0
@@ -6256,9 +5131,28 @@ SELECT t.doc_id AS id, coalesce(a.clean_text, '') AS clean_text,
 FROM tot t LEFT JOIN agg a ON a.doc_id = t.doc_id
 """
 
+    def dedup_keepfirst_docs(spark, sf):
+        """Exact duplicate-unit removal, keep-first (Lee et al.-style
+        substring dedup at sentence granularity) over a corpus with
+        deterministically injected duplicates: a license quote
+        prepended to every 4th doc and one of three shared appendix
+        sentences appended to every 7th — each duplicated unit must
+        survive only at its smallest (doc_id, pos) occurrence."""
+        d = _docs(spark, sf).select("doc_id", "text")
+        did = F.col("doc_id")
+        inj = d.select("doc_id", F.concat(
+            F.when(did % 4 == 0,
+                   F.lit("Quoted license text applies here. ")
+                   ).otherwise(F.lit("")),
+            F.col("text"),
+            F.when(did % 7 == 0,
+                   F.concat(F.lit(". shared appendix "),
+                            (did % 3).cast("string"))).otherwise(F.lit("")),
+        ).alias("text"))
+        return _longify(dedup.dedup_units_keepfirst(inj))
     # keep-first duplicate-unit removal: the winner of each normalized
     # unit is its smallest (doc_id, pos) occurrence
-    o["dedup_keepfirst_docs"] = """
+    reg["dedup_keepfirst_docs"] = dedup_keepfirst_docs, """
 WITH inj AS (
   SELECT doc_id,
     CASE WHEN doc_id % 4 = 0
@@ -6281,219 +5175,114 @@ SELECT t.doc_id AS id, coalesce(a.clean_text, '') AS clean_text,
 FROM tot t LEFT JOIN agg a ON a.doc_id = t.doc_id
 """
 
-    # domain stats: the expected registered domain is reconstructed
-    # from the same doc_id arithmetic that built the URL — an
-    # extraction-independent statement of the eTLD+1 rule
-    o["domain_stats_docs"] = """
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN 'sub.' ELSE '' END ||
-         'site' || CAST(doc_id % 20 AS VARCHAR) || '.' ||
-         (['com', 'org', 'co.uk'])[CAST(doc_id % 3 AS INT) + 1] AS host,
-         'site' || CAST(doc_id % 20 AS VARCHAR) || '.' ||
-         (['com', 'org', 'co.uk'])[CAST(doc_id % 3 AS INT) + 1] AS domain
-  FROM documents)
-SELECT domain, count(*) AS n_docs,
-       count(DISTINCT host) AS n_hosts
-FROM d GROUP BY domain
-"""
+    _SPAN_PASSAGE = ("this license text is shared verbatim across many "
+                     "documents and must be flagged as a duplicated span "
+                     "by the window pass")
 
-    # every expected template reconstructed arithmetically from
-    # doc_id — the classifier never runs; the hex arm keeps the
-    # all-digits edge ({d}, not {x}) and 'Profile' lowercases
-    o["url_templates_docs"] = """
-WITH t AS (
-  SELECT doc_id,
-         'site' || CAST(doc_id % 10 AS VARCHAR) || '.com' AS host,
-         doc_id % 4 AS m,
-         lpad(lower(to_hex(doc_id)), 8, '0') AS hx
+    def dedup_token_spans_docs(spark, sf):
+        """Token-window exact-substring duplicate detection (Lee et
+        al. ExactSubstr, windowed-hash variant) over a corpus with a
+        21-token passage injected into every 6th doc: the injected
+        span's windows must be flagged everywhere except the globally
+        first occurrence, at any alignment."""
+        d = _docs(spark, sf).select("doc_id", "text")
+        inj = d.select("doc_id", F.concat(
+            F.col("text"),
+            F.when(F.col("doc_id") % 6 == 0,
+                   F.lit(" " + _SPAN_PASSAGE)).otherwise(F.lit("")),
+        ).alias("text"))
+        return _longify(dedup.duplicate_token_spans(inj))
+    # token-window substring dedup: windows are md5 of 20 joined
+    # lowercased tokens; winner = smallest (doc_id, pos); duplicate
+    # token count = DISTINCT positions under non-winner windows
+    reg["dedup_token_spans_docs"] = dedup_token_spans_docs, """
+WITH inj AS (
+  SELECT doc_id, lower(text) ||
+    CASE WHEN doc_id % 6 = 0
+         THEN ' this license text is shared verbatim across many' ||
+              ' documents and must be flagged as a duplicated span' ||
+              ' by the window pass'
+         ELSE '' END AS text
   FROM documents),
-u AS (
-  SELECT
-    CASE m
-      WHEN 0 THEN 'https://' || host || '/product/'
-                  || CAST(doc_id AS VARCHAR)
-      WHEN 1 THEN 'https://' || host || '/'
-                  || CAST(doc_id % 5 + 2019 AS VARCHAR) || '/'
-                  || CAST(doc_id % 12 + 1 AS VARCHAR) || '/post-'
-                  || CAST(doc_id AS VARCHAR)
-      WHEN 2 THEN 'https://' || host || '/u/' || hx || '/Profile'
-      ELSE 'https://' || host || '/search?q=term'
-           || CAST(doc_id AS VARCHAR) || '&page='
-           || CAST(doc_id % 7 AS VARCHAR)
-    END AS url,
-    CASE m
-      WHEN 0 THEN host || '/product/{d}'
-      WHEN 1 THEN host || '/{d}/{d}/{a}'
-      WHEN 2 THEN host || '/u/'
-                  || CASE WHEN regexp_matches(hx, '^[0-9]+$')
-                          THEN '{d}' ELSE '{x}' END || '/profile'
-      ELSE host || '/search?page,q'
-    END AS template
-  FROM t)
-SELECT template, count(*) AS n_urls, min(url) AS sample_url
-FROM u GROUP BY template
-"""
-
-    # both composition stages restated independently: the template
-    # arithmetic above + quota_sample's BIGINT threshold draw
-    o["template_budget_docs"] = """
-WITH t AS (
+base AS (
   SELECT doc_id,
-         'site' || CAST(doc_id % 10 AS VARCHAR) || '.com' AS host,
-         doc_id % 4 AS m,
-         lpad(lower(to_hex(doc_id)), 8, '0') AS hx
-  FROM documents),
-u AS (
+         list_filter(regexp_split_to_array(trim(text), '\\s+'),
+                     x -> x != '') AS toks
+  FROM inj),
+sized AS (SELECT doc_id, toks, len(toks) AS n_tokens FROM base),
+occ AS (
+  SELECT doc_id, g.i AS pos,
+         CAST(concat('0x', substr(
+             md5(array_to_string(list_slice(toks, g.i, g.i + 19), ' ')),
+             1, 15)) AS BIGINT) AS whash
+  FROM sized, unnest(generate_series(1, n_tokens - 19)) AS g(i)),
+marked AS (
+  SELECT doc_id, pos,
+         count(*) OVER (PARTITION BY whash) AS n_occ,
+         row_number() OVER (PARTITION BY whash
+                            ORDER BY doc_id, pos) AS rn
+  FROM occ),
+dups AS (SELECT doc_id, pos FROM marked WHERE n_occ > 1 AND rn > 1),
+duptok AS (
+  SELECT doc_id, count(DISTINCT g.t) AS n_dup_tokens
+  FROM dups, unnest(generate_series(pos, pos + 19)) AS g(t)
+  GROUP BY doc_id),
+nw AS (SELECT doc_id, count(*) AS n_windows FROM occ GROUP BY doc_id),
+nd AS (SELECT doc_id, count(*) AS n_dup_windows FROM dups GROUP BY doc_id)
+SELECT s.doc_id AS id, CAST(s.n_tokens AS BIGINT) AS n_tokens,
+       CAST(coalesce(nw.n_windows, 0) AS BIGINT) AS n_windows,
+       CAST(coalesce(nd.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
+       CAST(coalesce(dt.n_dup_tokens, 0) AS BIGINT) AS n_dup_tokens
+FROM sized s
+LEFT JOIN nw ON nw.doc_id = s.doc_id
+LEFT JOIN nd ON nd.doc_id = s.doc_id
+LEFT JOIN duptok dt ON dt.doc_id = s.doc_id
+"""
+
+    def quality_classifier_docs(spark, sf):
+        """Model-based quality filtering (fastText-architecture
+        hashed-feature linear scorer, operators/classify.py): one
+        codegen projection over the token array, zero shuffle; the
+        deterministic hash-derived weights stand in for trained
+        parameters so the oracle can value-compare the full plan."""
+        from ferenda_spark.operators.classify import quality_score
+        return _longify(quality_score(
+            _docs(spark, sf).select("doc_id", "text")))
+    reg["quality_classifier_docs"] = quality_classifier_docs, """
+WITH tk AS (
   SELECT doc_id,
-    CASE m
-      WHEN 0 THEN host || '/product/{d}'
-      WHEN 1 THEN host || '/{d}/{d}/{a}'
-      WHEN 2 THEN host || '/u/'
-                  || CASE WHEN regexp_matches(hx, '^[0-9]+$')
-                          THEN '{d}' ELSE '{x}' END || '/profile'
-      ELSE host || '/search?page,q'
-    END AS template
-  FROM t),
-n AS (SELECT template, count(*) AS grp_n FROM u GROUP BY 1)
-SELECT u.doc_id, u.template
-FROM u JOIN n ON u.template = n.template
-WHERE n.grp_n <= 12
-   OR CAST(concat('0x', substr(md5('quota-v1:' ||
-        CAST(u.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-      < 12 * (1152921504606846976 // n.grp_n)
-"""
-
-    # robots decisions, re-derived arithmetically: host h = doc_id%10,
-    # path class pc = doc_id%4.  Odd h: no robots row -> allowed/NULL.
-    # h%4==0: the exact ferendabot group (Disallow /doc/, prec 5)
-    # governs EXCLUSIVELY -> only pc=3 denied.  h%4==2: the * group ->
-    # pc=0 denied by /private/ (prec 9), pc=1 allowed by the longer
-    # /private/pub/ (prec 13), pc=2 denied by /*.tmp$ (prec 7), pc=3
-    # unmatched -> allowed/NULL.
-    o["robots_filter_docs"] = """
-WITH u AS (
-  SELECT doc_id, doc_id % 10 AS h, doc_id % 4 AS pc FROM documents)
-SELECT doc_id,
-  CASE WHEN h % 2 = 1 THEN TRUE
-       WHEN h % 4 = 0 THEN pc <> 3
-       ELSE pc = 1 OR pc = 3 END AS robots_allowed,
-  CASE WHEN h % 2 = 1 THEN NULL
-       WHEN h % 4 = 0 THEN CASE WHEN pc = 3 THEN 5 END
-       ELSE CASE pc WHEN 0 THEN 9 WHEN 1 THEN 13 WHEN 2 THEN 7 END
-  END::BIGINT AS robots_prec
-FROM u
-"""
-
-    # every sitemap entry restated arithmetically: loc/lastmod always,
-    # changefreq only when doc_id%5==0, priority only when doc_id%3==0
-    # (0.k -> k*100 except k=10 -> "0.10" = 100), spec default 500
-    o["sitemap_discovery"] = """
-SELECT 'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/p'
-         || CAST(doc_id AS VARCHAR) AS loc,
-       '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-         AS lastmod,
-       CASE WHEN doc_id % 5 = 0 THEN 'daily' END AS changefreq,
-       CASE WHEN doc_id % 3 = 0 THEN
-         CASE WHEN doc_id % 11 = 10 THEN 100
-              ELSE (doc_id % 11) * 100 END
-       ELSE 500 END::BIGINT AS priority_milli
-FROM documents
-"""
-
-    # per-host url-ordered queue; even hosts delay (h%7) seconds from
-    # their robots record, odd hosts the 1 req/s default
-    o["fetch_schedule_docs"] = """
-WITH u AS (
-  SELECT doc_id, doc_id % 50 AS h,
-         'https://site' || CAST(doc_id % 50 AS VARCHAR) || '.com/p'
-           || CAST(doc_id AS VARCHAR) AS url
-  FROM documents),
-s AS (
-  SELECT doc_id, h, row_number() OVER (PARTITION BY h ORDER BY url)
-           AS fetch_seq
-  FROM u)
-SELECT doc_id, 'site' || CAST(h AS VARCHAR) || '.com' AS host,
-       fetch_seq,
-       (fetch_seq - 1)
-         * (CASE WHEN h % 2 = 0 THEN (h % 7) * 1000 ELSE 1000 END)
-         AS not_before_millis
-FROM s
-"""
-
-    # the eight JSON-LD triples per page, restated arm by arm
-    o["jsonld_extract_docs"] = """
-WITH u AS (
-  SELECT doc_id,
-         'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/p'
-           || CAST(doc_id AS VARCHAR) AS url
+         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
+                     x -> x != '') AS toks
   FROM documents)
-SELECT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang FROM (
-  SELECT url AS subj, 'rdf:type' AS pred, 'schema:Article' AS obj,
-         FALSE AS obj_is_literal, NULL::VARCHAR AS obj_datatype,
-         NULL::VARCHAR AS obj_lang FROM u
-  UNION ALL
-  SELECT url, 'schema:headline', 'Doc ' || CAST(doc_id AS VARCHAR),
-         TRUE, NULL, NULL FROM u
-  UNION ALL
-  SELECT url, 'schema:wordCount', CAST(doc_id % 997 AS VARCHAR),
-         TRUE, 'xsd:integer', NULL FROM u
-  UNION ALL
-  SELECT url, 'schema:keywords', 'k' || CAST(doc_id % 7 AS VARCHAR),
-         TRUE, NULL, NULL FROM u
-  UNION ALL
-  SELECT url, 'schema:keywords',
-         'k' || CAST((doc_id + 1) % 7 AS VARCHAR), TRUE, NULL, NULL
-  FROM u
-  UNION ALL
-  SELECT url, 'schema:author', url || '#jsonld/0/author', FALSE,
-         NULL, NULL FROM u
-  UNION ALL
-  SELECT url || '#jsonld/0/author', 'rdf:type', 'schema:Person',
-         FALSE, NULL, NULL FROM u
-  UNION ALL
-  SELECT url || '#jsonld/0/author', 'schema:name',
-         'Author ' || CAST(doc_id % 50 AS VARCHAR), TRUE, NULL, NULL
-  FROM u)
+SELECT doc_id AS id, CAST(len(toks) AS BIGINT) AS n_tokens,
+       CAST(coalesce(list_aggregate(list_transform(toks,
+            t -> CAST(concat('0x', substr(md5('qw-v1:' || t), 1, 15))
+                      AS BIGINT) % 2001 - 1000), 'sum'), 0) AS BIGINT)
+           AS score_sum_milli,
+       CAST(coalesce(list_aggregate(list_transform(toks,
+            t -> CAST(concat('0x', substr(md5('qw-v1:' || t), 1, 15))
+                      AS BIGINT) % 2001 - 1000), 'sum'), 0) AS BIGINT)
+           * 1000 >= 0 AS keep
+FROM tk
 """
 
-    # the seven microdata triples restated arm by arm; the nested
-    # Offer's subject is the pre-order skolem ordinal 1 (the Product
-    # is item 0 even though its itemid overrides the subject)
-    o["microdata_extract_docs"] = """
-WITH u AS (
-  SELECT doc_id,
-         'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/p'
-           || CAST(doc_id AS VARCHAR) AS url
-  FROM documents)
-SELECT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang FROM (
-  SELECT url || '#prod' AS subj, 'rdf:type' AS pred,
-         'schema:Product' AS obj, FALSE AS obj_is_literal,
-         NULL::VARCHAR AS obj_datatype, NULL::VARCHAR AS obj_lang
-  FROM u
-  UNION ALL
-  SELECT url || '#prod', 'schema:name',
-         'Product ' || CAST(doc_id AS VARCHAR), TRUE, NULL, NULL
-  FROM u
-  UNION ALL
-  SELECT url || '#prod', 'schema:sku',
-         'SKU-' || CAST(doc_id % 997 AS VARCHAR), TRUE, NULL, NULL
-  FROM u
-  UNION ALL
-  SELECT url || '#prod', 'schema:url',
-         'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/buy/'
-           || CAST(doc_id AS VARCHAR), FALSE, NULL, NULL FROM u
-  UNION ALL
-  SELECT url || '#md/1', 'rdf:type', 'schema:Offer', FALSE, NULL,
-         NULL FROM u
-  UNION ALL
-  SELECT url || '#prod', 'schema:offers', url || '#md/1', FALSE,
-         NULL, NULL FROM u
-  UNION ALL
-  SELECT url || '#md/1', 'schema:price',
-         CAST(doc_id % 100 AS VARCHAR), TRUE, NULL, NULL FROM u)
-"""
-
+    def lm_perplexity_docs(spark, sf):
+        """CCNet-style LM quality split (operators/lmscore.py): fit an
+        add-one bigram LM on the trusted slice (lang='en', the
+        reference-corpus analog), score every document's Σ ln P, and
+        ntile into head/middle/tail buckets — the standard perplexity
+        filter between language-ID and dedup.  The bucket rank comes
+        from the two-phase global_rank (no single-partition window);
+        the LM joins broadcast."""
+        from ferenda_spark.operators.lmscore import (fit_bigram_lm,
+                                                     perplexity_buckets,
+                                                     score_perplexity)
+        docs = _docs(spark, sf).select("doc_id", "text", "lang")
+        lm = fit_bigram_lm(docs.filter(F.col("lang") == "en"))
+        scored = score_perplexity(docs, lm)
+        out = perplexity_buckets(scored)
+        lm["bigram"].unpersist()
+        return _longify(out)
     # hashed-feature linear quality scorer: per-token weight =
     # md5('qw-v1:'||token) folded to [0, 2^60) then mapped into
     # [-1000, 1000]; keep ⇔ sum·1000 ≥ 0·n (threshold 0)
@@ -6501,7 +5290,7 @@ SELECT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang FROM (
     # scratch — add-one smoothing over the training vocab, unseen
     # context scores 1/V; ntile(3) mirrors perplexity_buckets' exact
     # equal-frequency closed form
-    o["lm_perplexity_docs"] = """
+    reg["lm_perplexity_docs"] = lm_perplexity_docs, """
 WITH train_toks AS MATERIALIZED (
   SELECT list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
                      x -> x <> '') AS t
@@ -6550,175 +5339,534 @@ SELECT doc_id, n_bigrams, n_oov, logprob_milli,
 FROM filled
 """
 
-    # triangles: the oracle enumerates each triangle a<b<c exactly
-    # once over the canonical undirected edge set — value-equal to
-    # the engine's degree-ordered enumeration
-    o["kg_triangles"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-und AS MATERIALIZED (
-  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
-  FROM golden
-  WHERE pred IN ('dcterms:references', 'dcterms:isPartOf',
-                 'rfc:updates', 'rfc:obsoletes')
-    AND subj <> obj),
-deg AS MATERIALIZED (
-  SELECT node, count(*) AS degree FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-  GROUP BY 1),
-tri AS MATERIALIZED (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM und e1
-  JOIN und e2 ON e1.v = e2.u
-  JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v),
-per_node AS (
-  SELECT node, count(*) AS n_triangles FROM (
-    SELECT a AS node FROM tri UNION ALL
-    SELECT b FROM tri UNION ALL
-    SELECT c FROM tri)
-  GROUP BY 1)
-SELECT p.node, d.degree, p.n_triangles,
-       (2000 * p.n_triangles) // (d.degree * (d.degree - 1))
-         AS coeff_milli
-FROM per_node p JOIN deg d ON p.node = d.node
+    def anchor_text_docs(spark, sf):
+        """Anchor-text enrichment (operators/anchors.py): pages with
+        deterministic doc_id-derived hyperlinks go through the REAL
+        HTML anchor parser (Arrow mapInPandas), root-relative hrefs
+        resolve against the source origin, and the per-target profile
+        (inlink counts + crowd-sourced top anchor) aggregates with a
+        keyed — never global — window.  The oracle restates the link
+        structure arithmetically, so a value match proves the whole
+        parse→resolve→aggregate chain."""
+        from ferenda_spark.operators.anchors import (anchor_pairs,
+                                                     anchor_profile,
+                                                     resolve_hrefs)
+        d = F.col("doc_id")
+        html = F.format_string(
+            '<html><body><p>See <a href="https://ex.org/doc/%d">'
+            'ref %d</a> and <a href="/rel/%d"><b>see</b>\n also %d'
+            '</a>.<a name="s%d">sec</a></p></body></html>',
+            d % 37, d % 5, d % 11, d % 3, d)
+        pages = _docs(spark, sf).select(
+            F.format_string("https://src.example/%d", d).alias("url"),
+            F.encode(html, "UTF-8").alias("html"))
+        pairs = resolve_hrefs(anchor_pairs(pages))
+        return _longify(anchor_profile(pairs))
+    # anchor profile: the synthesized link structure restated
+    # arithmetically — two links per doc, the named anchor ignored,
+    # "<b>see</b>\n also N" whitespace-normalized to "see also N",
+    # "/rel/K" origin-resolved
+    reg["anchor_text_docs"] = anchor_text_docs, """
+WITH p AS (
+  SELECT 'https://src.example/' || doc_id AS src,
+         'https://ex.org/doc/' || (doc_id % 37) AS h1,
+         'ref ' || (doc_id % 5) AS a1,
+         'https://src.example/rel/' || (doc_id % 11) AS h2,
+         'see also ' || (doc_id % 3) AS a2
+  FROM documents),
+pairs AS (
+  SELECT src, h1 AS href, a1 AS anchor FROM p
+  UNION ALL
+  SELECT src, h2 AS href, a2 AS anchor FROM p),
+by_anchor AS (
+  SELECT href, anchor, count(*) AS n FROM pairs GROUP BY 1, 2),
+top AS (
+  SELECT href, anchor AS top_anchor, n AS top_anchor_n FROM (
+    SELECT href, anchor, n,
+           row_number() OVER (PARTITION BY href
+                              ORDER BY n DESC, anchor) AS rn
+    FROM by_anchor) WHERE rn = 1),
+tot AS (
+  SELECT href, count(*) AS n_links, count(DISTINCT src) AS n_sources
+  FROM pairs GROUP BY 1)
+SELECT t.href, t.n_links, t.n_sources, x.top_anchor, x.top_anchor_n
+FROM tot t JOIN top x ON t.href = x.href
 """
 
-    o["kg_linkpred"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-und AS MATERIALIZED (
-  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
-  FROM golden WHERE pred = 'dcterms:references' AND subj <> obj),
-deg AS MATERIALIZED (
-  SELECT node, count(*) AS degree FROM (
-    SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-  GROUP BY 1),
-adj AS (SELECT u AS w, v AS n FROM und
-        UNION ALL SELECT v, u FROM und),
-mids AS (SELECT a.w, a.n, d.degree FROM adj a
-         JOIN deg d ON a.w = d.node WHERE d.degree <= 50),
-cand AS (
-  SELECT a1.n AS u, a2.n AS v, a1.degree
-  FROM mids a1 JOIN (SELECT w, n FROM mids) a2
-    ON a1.w = a2.w AND a1.n < a2.n),
-scored AS (
-  SELECT u, v, CAST(sum(1000000 // degree) AS BIGINT) AS score_micro,
-         count(*) AS n_common
-  FROM cand GROUP BY 1, 2),
-fresh AS (
-  SELECT s.* FROM scored s
-  WHERE NOT EXISTS (SELECT 1 FROM und
-                    WHERE und.u = s.u AND und.v = s.v))
-SELECT u, v, score_micro, n_common, rank FROM (
-  SELECT *, row_number() OVER (ORDER BY score_micro DESC, u, v)
-    AS rank FROM fresh) WHERE rank <= 50
+    def domain_stats_docs(spark, sf):
+        """URL/domain-level curation (operators/webfilter.py): host +
+        eTLD+1 extraction (incl. a multi-label public suffix) over
+        URLs synthesized from doc_id, aggregated into the per-domain
+        reputation table; the oracle reconstructs the expected domain
+        arithmetically, independent of the extraction code."""
+        from ferenda_spark.operators.webfilter import domain_stats
+        did = F.col("doc_id")
+        tld = (F.when(did % 3 == 0, "com")
+               .when(did % 3 == 1, "org").otherwise("co.uk"))
+        docs = _docs(spark, sf).select(
+            "doc_id",
+            F.concat(F.lit("https://"),
+                     F.when(did % 5 == 0, "sub.").otherwise(""),
+                     F.lit("site"), (did % 20).cast("string"),
+                     F.lit("."), tld,
+                     F.lit("/p/"), did.cast("string")).alias("url"))
+        return _longify(domain_stats(docs))
+    # domain stats: the expected registered domain is reconstructed
+    # from the same doc_id arithmetic that built the URL — an
+    # extraction-independent statement of the eTLD+1 rule
+    reg["domain_stats_docs"] = domain_stats_docs, """
+WITH d AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 5 = 0 THEN 'sub.' ELSE '' END ||
+         'site' || CAST(doc_id % 20 AS VARCHAR) || '.' ||
+         (['com', 'org', 'co.uk'])[CAST(doc_id % 3 AS INT) + 1] AS host,
+         'site' || CAST(doc_id % 20 AS VARCHAR) || '.' ||
+         (['com', 'org', 'co.uk'])[CAST(doc_id % 3 AS INT) + 1] AS domain
+  FROM documents)
+SELECT domain, count(*) AS n_docs,
+       count(DISTINCT host) AS n_hosts
+FROM d GROUP BY domain
 """
 
-    # LPA: both rounds restated with the general argmax form
-    # (cnt DESC, label ASC), labels initialized to the node id
-    o["kg_communities"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-und AS MATERIALIZED (
-  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
-  FROM golden WHERE pred = 'dcterms:references' AND subj <> obj),
-adj AS MATERIALIZED (
-  SELECT u AS node, v AS nbr FROM und
-  UNION ALL SELECT v, u FROM und),
-c1 AS (SELECT a.node, a.nbr AS label, count(*) AS cnt
-       FROM adj a GROUP BY 1, 2),
-l1 AS MATERIALIZED (
-  SELECT node, label FROM (
-    SELECT node, label, row_number() OVER (
-      PARTITION BY node ORDER BY cnt DESC, label) AS rn FROM c1)
-  WHERE rn = 1),
-c2 AS (SELECT a.node, l1.label, count(*) AS cnt
-       FROM adj a JOIN l1 ON a.nbr = l1.node GROUP BY 1, 2),
-l2 AS (
-  SELECT node, label FROM (
-    SELECT node, label, row_number() OVER (
-      PARTITION BY node ORDER BY cnt DESC, label) AS rn FROM c2)
-  WHERE rn = 1)
-SELECT node, label FROM l2
+    def _template_urls(spark, sf):
+        """(doc_id, url): one url per doc in four shapes — a product
+        page, a dated post slug, a hex profile id and a search query
+        (the fixture of url_templates_docs and template_budget_docs)."""
+        did = F.col("doc_id")
+        host = F.concat(F.lit("site"), (did % 10).cast("string"),
+                        F.lit(".com"))
+        url = (F.when(did % 4 == 0,
+                      F.concat(F.lit("https://"), host,
+                               F.lit("/product/"), did.cast("string")))
+               .when(did % 4 == 1,
+                     F.concat(F.lit("https://"), host, F.lit("/"),
+                              (did % 5 + 2019).cast("string"),
+                              F.lit("/"), (did % 12 + 1).cast("string"),
+                              F.lit("/post-"), did.cast("string")))
+               .when(did % 4 == 2,
+                     F.concat(F.lit("https://"), host, F.lit("/u/"),
+                              F.lpad(F.lower(F.hex(did)), 8, "0"),
+                              F.lit("/Profile")))
+               .otherwise(
+                   F.concat(F.lit("https://"), host,
+                            F.lit("/search?q=term"), did.cast("string"),
+                            F.lit("&page="), (did % 7).cast("string"))))
+        return _docs(spark, sf).select("doc_id", url.alias("url"))
+
+    def url_templates_docs(spark, sf):
+        """URL-template mining (operators/webfilter.py::url_templates
+        over functions/web.py::url_template_col): urls synthesized
+        from doc_id in four shapes — /product/<id>, a dated
+        /<year>/<month>/post-<id> slug, a /u/<hex8>/Profile page, and
+        a /search?q=…&page=… query — collapse to their templates
+        ({d}/{x}/{a} segment classes, sorted query NAMES only); the
+        oracle reconstructs every expected template arithmetically
+        from doc_id, independent of the classifier code (incl. the
+        hex-that-happens-to-be-all-digits edge: such segments are
+        {d}, not {x})."""
+        from ferenda_spark.operators.webfilter import url_templates
+        return _longify(url_templates(_template_urls(spark, sf)))
+    reg["url_templates_docs"] = url_templates_docs, f"""
+WITH {_TEMPLATE_URLS_CTE}
+SELECT template, count(*) AS n_urls, min(url) AS sample_url
+FROM u GROUP BY template
 """
 
-    # three unrolled peel rounds (round = degree census -> keep >= 2
-    # -> edges with both endpoints kept); identity rounds harmless
-    o["kg_kcore"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-e0 AS MATERIALIZED (
-  SELECT DISTINCT least(subj, obj) AS u, greatest(subj, obj) AS v
-  FROM golden WHERE pred = 'dcterms:references' AND subj <> obj),
-k1 AS (SELECT node FROM (
-         SELECT u AS node FROM e0 UNION ALL SELECT v FROM e0)
-       GROUP BY node HAVING count(*) >= 2),
-e1 AS MATERIALIZED (
-  SELECT u, v FROM e0 WHERE u IN (SELECT node FROM k1)
-                        AND v IN (SELECT node FROM k1)),
-k2 AS (SELECT node FROM (
-         SELECT u AS node FROM e1 UNION ALL SELECT v FROM e1)
-       GROUP BY node HAVING count(*) >= 2),
-e2 AS MATERIALIZED (
-  SELECT u, v FROM e1 WHERE u IN (SELECT node FROM k2)
-                        AND v IN (SELECT node FROM k2)),
-k3 AS (SELECT node FROM (
-         SELECT u AS node FROM e2 UNION ALL SELECT v FROM e2)
-       GROUP BY node HAVING count(*) >= 2),
-e3 AS MATERIALIZED (
-  SELECT u, v FROM e2 WHERE u IN (SELECT node FROM k3)
-                        AND v IN (SELECT node FROM k3))
-SELECT node, count(*) AS degree FROM (
-  SELECT u AS node FROM e3 UNION ALL SELECT v FROM e3)
-GROUP BY node
+    def template_budget_docs(spark, sf):
+        """Composed crawl-budget enforcement: url_templates'
+        classifier keys each url by its TEMPLATE, then quota_sample
+        caps every template at ~12 urls with the deterministic
+        salted-threshold draw — the whole trap-pruning chain a
+        frontier runs (a calendar trap's template is down-sampled to
+        the budget; rare templates pass untouched).  The oracle
+        recomposes both stages independently: templates rebuilt
+        arithmetically from doc_id, the quota threshold restated in
+        BIGINT."""
+        from ferenda_spark.functions.web import url_template_col
+        from ferenda_spark.operators import sampling
+        docs = _template_urls(spark, sf).withColumn(
+            "template", url_template_col(F.col("url")))
+        kept = sampling.quota_sample(docs, cap=12, group_col="template")
+        return _longify(kept.select("doc_id", "template"))
+    # both composition stages restated independently: the template
+    # arithmetic above + quota_sample's BIGINT threshold draw
+    reg["template_budget_docs"] = template_budget_docs, f"""
+WITH {_TEMPLATE_URLS_CTE},
+n AS (SELECT template, count(*) AS grp_n FROM u GROUP BY 1)
+SELECT u.doc_id, u.template
+FROM u JOIN n ON u.template = n.template
+WHERE n.grp_n <= 12
+   OR CAST(concat('0x', substr(md5('quota-v1:' ||
+        CAST(u.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+      < 12 * (1152921504606846976 // n.grp_n)
 """
 
+    def robots_filter_docs(spark, sf):
+        """RFC 9309 robots admission (operators/robots.py): ten
+        synthetic hosts, even hosts carry a robots.txt (hosts 0,4,8
+        with an exact `ferendabot` group that overrides `*`
+        EXCLUSIVELY, hosts 2,6 with only the `*` group: /private/
+        disallow, /private/pub/ allow override, /*.tmp$ wildcard+
+        anchor), odd hosts have no robots row (spec: absence means
+        allow).  Urls take one of four path classes per doc_id.  The
+        oracle re-derives every (allowed, prec) decision purely
+        arithmetically from doc_id — group selection, longest-match
+        precedence and the missing-row default all have to agree."""
+        from ferenda_spark.operators.robots import (parse_robots,
+                                                    robots_decisions)
+        star = ("User-agent: *\nDisallow: /private/\n"
+                "Allow: /private/pub/\nDisallow: /*.tmp$\n")
+        robots = spark.createDataFrame(
+            [("site%d.com" % h,
+              star + ("User-agent: ferendabot\nDisallow: /doc/\n"
+                      if h % 4 == 0 else ""))
+             for h in range(0, 10, 2)],
+            "domain string, robots_txt string")
+        did = F.col("doc_id")
+        path = (F.when(did % 4 == 0, F.concat(F.lit("/private/p"),
+                                              did.cast("string")))
+                .when(did % 4 == 1, F.concat(F.lit("/private/pub/p"),
+                                             did.cast("string")))
+                .when(did % 4 == 2, F.concat(F.lit("/p"),
+                                             did.cast("string"),
+                                             F.lit(".tmp")))
+                .otherwise(F.concat(F.lit("/doc/p"),
+                                    did.cast("string"))))
+        docs = _docs(spark, sf).select(
+            "doc_id",
+            F.concat(F.lit("https://site"), (did % 10).cast("string"),
+                     F.lit(".com"), path).alias("url"))
+        rules = parse_robots(robots, agent="ferendabot")
+        return _longify(
+            robots_decisions(docs, rules)
+            .select("doc_id", "robots_allowed", "robots_prec"))
+    # robots decisions, re-derived arithmetically: host h = doc_id%10,
+    # path class pc = doc_id%4.  Odd h: no robots row -> allowed/NULL.
+    # h%4==0: the exact ferendabot group (Disallow /doc/, prec 5)
+    # governs EXCLUSIVELY -> only pc=3 denied.  h%4==2: the * group ->
+    # pc=0 denied by /private/ (prec 9), pc=1 allowed by the longer
+    # /private/pub/ (prec 13), pc=2 denied by /*.tmp$ (prec 7), pc=3
+    # unmatched -> allowed/NULL.
+    reg["robots_filter_docs"] = robots_filter_docs, """
+WITH u AS (
+  SELECT doc_id, doc_id % 10 AS h, doc_id % 4 AS pc FROM documents)
+SELECT doc_id,
+  CASE WHEN h % 2 = 1 THEN TRUE
+       WHEN h % 4 = 0 THEN pc <> 3
+       ELSE pc = 1 OR pc = 3 END AS robots_allowed,
+  CASE WHEN h % 2 = 1 THEN NULL
+       WHEN h % 4 = 0 THEN CASE WHEN pc = 3 THEN 5 END
+       ELSE CASE pc WHEN 0 THEN 9 WHEN 1 THEN 13 WHEN 2 THEN 7 END
+  END::BIGINT AS robots_prec
+FROM u
+"""
+
+    def sitemap_discovery(spark, sf):
+        """Sitemap frontier discovery (operators/sitemaps.py): per-host
+        urlset XML is assembled IN Spark from doc_id arithmetic (loc
+        always; lastmod always; changefreq only when doc_id%5==0;
+        priority 0.{doc_id%11} only when doc_id%3==0 — the %11==10 case
+        pins the two-digit-fraction parse), then parsed back by the
+        distributed Arrow reader.  The oracle restates every entry row
+        arithmetically — loc-through-priority must round-trip."""
+        from ferenda_spark.operators.sitemaps import parse_sitemaps
+        did = F.col("doc_id")
+        entry = F.concat(
+            F.lit("<url><loc>https://site"), (did % 7).cast("string"),
+            F.lit(".com/p"), did.cast("string"), F.lit("</loc>"),
+            F.lit("<lastmod>2024-01-"),
+            F.lpad(((did % 28) + 1).cast("string"), 2, "0"),
+            F.lit("</lastmod>"),
+            F.when(did % 5 == 0,
+                   F.lit("<changefreq>daily</changefreq>"))
+            .otherwise(F.lit("")),
+            F.when(did % 3 == 0,
+                   F.concat(F.lit("<priority>0."),
+                            (did % 11).cast("string"),
+                            F.lit("</priority>"))).otherwise(F.lit("")),
+            F.lit("</url>"))
+        maps = (_docs(spark, sf)
+                .select((F.col("doc_id") % 7).alias("h"), entry.alias("e"))
+                .groupBy("h")
+                .agg(F.concat(
+                    F.lit('<urlset xmlns="http://www.sitemaps.org/'
+                          'schemas/sitemap/0.9">'),
+                    F.concat_ws("", F.collect_list("e")),
+                    F.lit("</urlset>")).alias("xml"))
+                .select(F.concat(F.lit("https://site"),
+                                 F.col("h").cast("string"),
+                                 F.lit(".com/sitemap.xml")).alias("url"),
+                        "xml"))
+        return _longify(
+            parse_sitemaps(maps)
+            .select("loc", "lastmod", "changefreq", "priority_milli"))
+    # every sitemap entry restated arithmetically: loc/lastmod always,
+    # changefreq only when doc_id%5==0, priority only when doc_id%3==0
+    # (0.k -> k*100 except k=10 -> "0.10" = 100), spec default 500
+    reg["sitemap_discovery"] = sitemap_discovery, """
+SELECT 'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/p'
+         || CAST(doc_id AS VARCHAR) AS loc,
+       '2024-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
+         AS lastmod,
+       CASE WHEN doc_id % 5 = 0 THEN 'daily' END AS changefreq,
+       CASE WHEN doc_id % 3 = 0 THEN
+         CASE WHEN doc_id % 11 = 10 THEN 100
+              ELSE (doc_id % 11) * 100 END
+       ELSE 500 END::BIGINT AS priority_milli
+FROM documents
+"""
+
+    def fetch_schedule_docs(spark, sf):
+        """Politeness scheduling (crawl.py::schedule_fetches composed
+        with robots.py crawl-delay parsing): 50 synthetic hosts, even
+        hosts publish `Crawl-delay: h%7` (h%7==0 pins the zero-delay
+        case), odd hosts have no robots row (default 1 req/s); each
+        host's queue is url-ordered.  The oracle restates the per-host
+        row_number and the slot arithmetic."""
+        from ferenda_spark.operators.crawl import schedule_fetches
+        from ferenda_spark.operators.robots import parse_robots
+        robots = spark.createDataFrame(
+            [("site%d.com" % h,
+              "User-agent: *\nCrawl-delay: %d\n" % (h % 7))
+             for h in range(0, 50, 2)],
+            "domain string, robots_txt string")
+        did = F.col("doc_id")
+        frontier = _docs(spark, sf).select(
+            "doc_id",
+            F.concat(F.lit("https://site"), (did % 50).cast("string"),
+                     F.lit(".com/p"), did.cast("string")).alias("url"))
+        out = schedule_fetches(frontier, parse_robots(robots))
+        return _longify(out.select("doc_id", "host", "fetch_seq",
+                                   "not_before_millis"))
+    # per-host url-ordered queue; even hosts delay (h%7) seconds from
+    # their robots record, odd hosts the 1 req/s default
+    reg["fetch_schedule_docs"] = fetch_schedule_docs, """
+WITH u AS (
+  SELECT doc_id, doc_id % 50 AS h,
+         'https://site' || CAST(doc_id % 50 AS VARCHAR) || '.com/p'
+           || CAST(doc_id AS VARCHAR) AS url
+  FROM documents),
+s AS (
+  SELECT doc_id, h, row_number() OVER (PARTITION BY h ORDER BY url)
+           AS fetch_seq
+  FROM u)
+SELECT doc_id, 'site' || CAST(h AS VARCHAR) || '.com' AS host,
+       fetch_seq,
+       (fetch_seq - 1)
+         * (CASE WHEN h % 2 = 0 THEN (h % 7) * 1000 ELSE 1000 END)
+         AS not_before_millis
+FROM s
+"""
+
+    def jsonld_extract_docs(spark, sf):
+        """schema.org JSON-LD harvest (structured_data.py): pages with
+        an ld+json block synthesized from doc_id arithmetic (typed
+        node, integer literal, two-element array, @id-less nested
+        Person) are fed through the Arrow extractor; the oracle
+        restates all eight triples per page — CURIE expansion, literal
+        datatyping, array fan-out and the deterministic skolem
+        fragment of the nested node must all agree."""
+        from ferenda_spark.operators.structured_data import (
+            jsonld_triples,
+        )
+        did = F.col("doc_id").cast("string")
+        url = F.concat(F.lit("https://site"),
+                       (F.col("doc_id") % 7).cast("string"),
+                       F.lit(".com/p"), did)
+        block = F.concat(
+            F.lit('{"@context":"https://schema.org","@id":"'), url,
+            F.lit('","@type":"Article","headline":"Doc '), did,
+            F.lit('","wordCount":'),
+            (F.col("doc_id") % 997).cast("string"),
+            F.lit(',"keywords":["k'),
+            (F.col("doc_id") % 7).cast("string"), F.lit('","k'),
+            ((F.col("doc_id") + 1) % 7).cast("string"),
+            F.lit('"],"author":{"@type":"Person","name":"Author '),
+            (F.col("doc_id") % 50).cast("string"), F.lit('"}}'))
+        pages = _docs(spark, sf).select(
+            url.alias("url"),
+            F.concat(F.lit('<html><head>'
+                           '<script type="application/ld+json">'),
+                     block,
+                     F.lit("</script></head><body></body></html>"))
+            .alias("html"))
+        return (jsonld_triples(pages)
+                .filter(F.col("error").isNull())
+                .select("subj", "pred", "obj", "obj_is_literal",
+                        "obj_datatype", "obj_lang"))
+    # the eight JSON-LD triples per page, restated arm by arm
+    reg["jsonld_extract_docs"] = jsonld_extract_docs, """
+WITH u AS (
+  SELECT doc_id,
+         'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/p'
+           || CAST(doc_id AS VARCHAR) AS url
+  FROM documents)
+SELECT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang FROM (
+  SELECT url AS subj, 'rdf:type' AS pred, 'schema:Article' AS obj,
+         FALSE AS obj_is_literal, NULL::VARCHAR AS obj_datatype,
+         NULL::VARCHAR AS obj_lang FROM u
+  UNION ALL
+  SELECT url, 'schema:headline', 'Doc ' || CAST(doc_id AS VARCHAR),
+         TRUE, NULL, NULL FROM u
+  UNION ALL
+  SELECT url, 'schema:wordCount', CAST(doc_id % 997 AS VARCHAR),
+         TRUE, 'xsd:integer', NULL FROM u
+  UNION ALL
+  SELECT url, 'schema:keywords', 'k' || CAST(doc_id % 7 AS VARCHAR),
+         TRUE, NULL, NULL FROM u
+  UNION ALL
+  SELECT url, 'schema:keywords',
+         'k' || CAST((doc_id + 1) % 7 AS VARCHAR), TRUE, NULL, NULL
+  FROM u
+  UNION ALL
+  SELECT url, 'schema:author', url || '#jsonld/0/author', FALSE,
+         NULL, NULL FROM u
+  UNION ALL
+  SELECT url || '#jsonld/0/author', 'rdf:type', 'schema:Person',
+         FALSE, NULL, NULL FROM u
+  UNION ALL
+  SELECT url || '#jsonld/0/author', 'schema:name',
+         'Author ' || CAST(doc_id % 50 AS VARCHAR), TRUE, NULL, NULL
+  FROM u)
+"""
+
+    def microdata_extract_docs(spark, sf):
+        """HTML microdata harvest (structured_data.py
+        microdata_triples): the attribute-markup leg of the Web Data
+        Commons triad.  Pages carry an itemscope Product (itemid
+        subject, text / meta@content / a@href property kinds) with a
+        nested @id-less Offer whose subject is the deterministic
+        pre-order skolem ``#md/1``; the oracle restates all seven
+        triples per page arm by arm."""
+        from ferenda_spark.operators.structured_data import (
+            microdata_triples,
+        )
+        did = F.col("doc_id").cast("string")
+        url = F.concat(F.lit("https://site"),
+                       (F.col("doc_id") % 7).cast("string"),
+                       F.lit(".com/p"), did)
+        html = F.concat(
+            F.lit('<html><body><div itemscope '
+                  'itemtype="https://schema.org/Product" itemid="'),
+            url, F.lit('#prod"><span itemprop="name">Product '), did,
+            F.lit('</span><meta itemprop="sku" content="SKU-'),
+            (F.col("doc_id") % 997).cast("string"),
+            F.lit('"><a itemprop="url" href="https://site'),
+            (F.col("doc_id") % 7).cast("string"), F.lit(".com/buy/"),
+            did, F.lit('">buy</a><div itemprop="offers" itemscope '
+                       'itemtype="https://schema.org/Offer">'
+                       '<span itemprop="price">'),
+            (F.col("doc_id") % 100).cast("string"),
+            F.lit("</span></div></div></body></html>"))
+        pages = _docs(spark, sf).select(url.alias("url"),
+                                        html.alias("html"))
+        return (microdata_triples(pages)
+                .filter(F.col("error").isNull())
+                .select("subj", "pred", "obj", "obj_is_literal",
+                        "obj_datatype", "obj_lang"))
+    # the seven microdata triples restated arm by arm; the nested
+    # Offer's subject is the pre-order skolem ordinal 1 (the Product
+    # is item 0 even though its itemid overrides the subject)
+    reg["microdata_extract_docs"] = microdata_extract_docs, """
+WITH u AS (
+  SELECT doc_id,
+         'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/p'
+           || CAST(doc_id AS VARCHAR) AS url
+  FROM documents)
+SELECT subj, pred, obj, obj_is_literal, obj_datatype, obj_lang FROM (
+  SELECT url || '#prod' AS subj, 'rdf:type' AS pred,
+         'schema:Product' AS obj, FALSE AS obj_is_literal,
+         NULL::VARCHAR AS obj_datatype, NULL::VARCHAR AS obj_lang
+  FROM u
+  UNION ALL
+  SELECT url || '#prod', 'schema:name',
+         'Product ' || CAST(doc_id AS VARCHAR), TRUE, NULL, NULL
+  FROM u
+  UNION ALL
+  SELECT url || '#prod', 'schema:sku',
+         'SKU-' || CAST(doc_id % 997 AS VARCHAR), TRUE, NULL, NULL
+  FROM u
+  UNION ALL
+  SELECT url || '#prod', 'schema:url',
+         'https://site' || CAST(doc_id % 7 AS VARCHAR) || '.com/buy/'
+           || CAST(doc_id AS VARCHAR), FALSE, NULL, NULL FROM u
+  UNION ALL
+  SELECT url || '#md/1', 'rdf:type', 'schema:Offer', FALSE, NULL,
+         NULL FROM u
+  UNION ALL
+  SELECT url || '#prod', 'schema:offers', url || '#md/1', FALSE,
+         NULL, NULL FROM u
+  UNION ALL
+  SELECT url || '#md/1', 'schema:price',
+         CAST(doc_id % 100 AS VARCHAR), TRUE, NULL, NULL FROM u)
+"""
+
+    def kg_scc(spark, sf):
+        """Strongly connected components (rank.py scc): FW/BW
+        min-label coloring over a deterministic 210-node webgraph —
+        21 ten-page link rings (the cycle structure components()
+        cannot see), one-way bridges between consecutive rings (a DAG
+        condensation), and five back chords that each merge two rings
+        into one 20-node SCC.  Oracle: recursive-CTE transitive
+        closure, comp = min over mutually-reachable ids."""
+        from ferenda_spark.operators.rank import scc
+        return scc(_scc_graph(spark, sf))
     # SCC restated from first principles: reachability closure via
     # recursive CTE, comp(v) = min id u with v->*u and u->*v (the
     # node itself included via the rings' (a,a) closure rows and the
     # coalesce for cycle-free nodes)
-    o["kg_scc"] = """
-WITH d AS (SELECT DISTINCT doc_id % 210 AS v FROM documents),
-e AS MATERIALIZED (
-  SELECT v AS src, v - (v % 10) + ((v + 1) % 10) AS dst FROM d
-  UNION
-  SELECT v, v - 10 FROM d WHERE v % 10 = 0 AND v >= 10
-  UNION
-  SELECT v, v + 10 FROM d WHERE v % 40 = 0 AND v <= 199),
-reach AS MATERIALIZED (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT src, dst FROM e
-    UNION
-    SELECT r.a, e.dst FROM r JOIN e ON r.b = e.src)
-  SELECT a, b FROM r),
-nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-mutual AS (SELECT r1.a AS u, r1.b AS w FROM reach r1
-           JOIN reach r2 ON r1.a = r2.b AND r1.b = r2.a)
-SELECT n.id, least(n.id, coalesce(min(m.w), n.id)) AS comp
-FROM nodes n LEFT JOIN mutual m ON m.u = n.id
-GROUP BY n.id
+    reg["kg_scc"] = kg_scc, f"""
+WITH {_SCC_COMP_CTE}
+SELECT id, comp FROM comp
 """
 
+    def _scc_graph(spark, sf):
+        """The deterministic 210-node ring/bridge/chord webgraph the
+        SCC-family gates share (see kg_scc docstring)."""
+        v = F.col("v")
+        d = (_docs(spark, sf)
+             .select((F.col("doc_id") % 210).alias("v")).distinct())
+        ring = d.select(v.alias("src"),
+                        (v - v % 10 + (v + 1) % 10).alias("dst"))
+        bridge = (d.filter((v % 10 == 0) & (v >= 10))
+                  .select(v.alias("src"), (v - 10).alias("dst")))
+        chord = (d.filter((v % 40 == 0) & (v <= 199))
+                 .select(v.alias("src"), (v + 10).alias("dst")))
+        return ring.unionByName(bridge).unionByName(chord)
+
+    def kg_condensation(spark, sf):
+        """Condensation DAG + dependency layering (rank.py
+        condensation/topo_levels composed over scc): the 210-node
+        ring/bridge/chord webgraph collapses to a 16-component chain
+        (five chord-merged 20-node SCCs + eleven single rings);
+        bridges orient ring k → ring k-1, so the ring-20 component is
+        the unique level-0 source and the merged rings-0/1 component
+        the level-15 sink.  Output (comp, level, n_members) — the
+        processing order incremental regeneration would schedule.
+        Oracle: the kg_scc mutual-reachability CTE, comp-projected
+        distinct edges, longest-path levels via recursive CTE."""
+        from ferenda_spark.operators.rank import (condensation, scc,
+                                                  topo_levels)
+        edges = _scc_graph(spark, sf).localCheckpoint(eager=True)
+        comps = scc(edges)
+        dag = condensation(edges, comps)
+        lv = topo_levels(dag.select(F.col("csrc").alias("src"),
+                                    F.col("cdst").alias("dst")))
+        members = (comps.groupBy("comp")
+                   .agg(F.count(F.lit(1)).alias("n_members")))
+        return (members
+                .join(lv.withColumnRenamed("node", "comp"), "comp",
+                      "left")
+                .select("comp",
+                        F.coalesce("level", F.lit(0).cast("long"))
+                        .alias("level"),
+                        "n_members"))
     # condensation layering from first principles: the kg_scc mutual-
     # reachability comp labeling, comp-projected distinct DAG edges,
     # longest-path level by enumerating all path lengths from the
     # in-degree-0 sources (recursive CTE) and taking the max per comp
-    o["kg_condensation"] = """
-WITH d AS (SELECT DISTINCT doc_id % 210 AS v FROM documents),
-e AS MATERIALIZED (
-  SELECT v AS src, v - (v % 10) + ((v + 1) % 10) AS dst FROM d
-  UNION
-  SELECT v, v - 10 FROM d WHERE v % 10 = 0 AND v >= 10
-  UNION
-  SELECT v, v + 10 FROM d WHERE v % 40 = 0 AND v <= 199),
-reach AS MATERIALIZED (
-  WITH RECURSIVE r(a, b) AS (
-    SELECT src, dst FROM e
-    UNION
-    SELECT r.a, e.dst FROM r JOIN e ON r.b = e.src)
-  SELECT a, b FROM r),
-gnodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-mutual AS (SELECT r1.a AS u, r1.b AS w FROM reach r1
-           JOIN reach r2 ON r1.a = r2.b AND r1.b = r2.a),
-comp AS MATERIALIZED (
-  SELECT n.id, least(n.id, coalesce(min(m.w), n.id)) AS comp
-  FROM gnodes n LEFT JOIN mutual m ON m.u = n.id GROUP BY n.id),
+    reg["kg_condensation"] = kg_condensation, f"""
+WITH {_SCC_COMP_CTE},
 cedges AS MATERIALIZED (
   SELECT DISTINCT cs.comp AS csrc, cd.comp AS cdst
   FROM e JOIN comp cs ON cs.id = e.src
@@ -6736,45 +5884,57 @@ FROM (SELECT comp, count(*) AS n_members FROM comp GROUP BY comp) m
 LEFT JOIN lp ON lp.c = m.comp
 """
 
+    def kg_landmark_dist(spark, sf):
+        """Landmark BFS distances (rank.py landmark_distances): exact
+        hop distance from every node to landmarks {0, 7} over a
+        60-node doubling graph (v → v+1 mod 60 and v → 2v mod 60 —
+        log-diameter, the expander shape real webgraphs have); all
+        landmarks advance in ONE iterated frontier join.  Oracle:
+        recursive-CTE path enumeration bounded at depth 15, min per
+        (node, landmark)."""
+        from ferenda_spark.operators.rank import landmark_distances
+        v = F.col("v")
+        d = (_docs(spark, sf)
+             .select((F.col("doc_id") % 60).alias("v")).distinct())
+        edges = (d.select(v.alias("src"), ((v + 1) % 60).alias("dst"))
+                 .unionByName(
+                     d.select(v.alias("src"), ((v * 2) % 60).alias("dst"))))
+        lms = spark.createDataFrame([(0,), (7,)], "node long")
+        out = landmark_distances(edges, lms, max_depth=15)
+        return out.select(F.col("node").cast("long").alias("node"),
+                          F.col("landmark").cast("long").alias("landmark"),
+                          "dist")
     # landmark shortest-path distances from first principles: every
     # (node, landmark, dist) path of depth <= 15 enumerated by a
     # recursive CTE walking edges BACKWARD from the landmarks, then
     # min(dist) per pair — matches BFS first-discovery distances
-    o["kg_landmark_dist"] = """
-WITH dd AS (SELECT DISTINCT doc_id % 60 AS v FROM documents),
-e AS MATERIALIZED (
-  SELECT v AS src, (v + 1) % 60 AS dst FROM dd
-  UNION
-  SELECT v, (v * 2) % 60 FROM dd),
-walk AS (
-  WITH RECURSIVE w(node, landmark, dist) AS (
-    SELECT CAST(v AS BIGINT), CAST(v AS BIGINT), CAST(0 AS BIGINT)
-    FROM (VALUES (0), (7)) lm(v)
-    UNION
-    SELECT CAST(e.src AS BIGINT), w.landmark, w.dist + 1
-    FROM w JOIN e ON e.dst = w.node
-    WHERE w.dist < 15)
-  SELECT node, landmark, dist FROM w)
-SELECT node, landmark, min(dist) AS dist
-FROM walk GROUP BY node, landmark
+    reg["kg_landmark_dist"] = kg_landmark_dist, f"""
+WITH {_LANDMARK_DIST_CTE}
+SELECT node, landmark, dist FROM walk
 """
 
-    o["kg_harmonic_landmarks"] = """
-WITH dd AS (SELECT DISTINCT doc_id % 60 AS v FROM documents),
-e AS MATERIALIZED (
-  SELECT v AS src, (v + 1) % 60 AS dst FROM dd
-  UNION
-  SELECT v, (v * 2) % 60 FROM dd),
-walk AS (
-  WITH RECURSIVE w(node, landmark, dist) AS (
-    SELECT CAST(v AS BIGINT), CAST(v AS BIGINT), CAST(0 AS BIGINT)
-    FROM (VALUES (0), (7)) lm(v)
-    UNION
-    SELECT CAST(e.src AS BIGINT), w.landmark, w.dist + 1
-    FROM w JOIN e ON e.dst = w.node
-    WHERE w.dist < 15)
-  SELECT node, landmark, min(dist) AS dist
-  FROM w GROUP BY node, landmark)
+    def kg_harmonic_landmarks(spark, sf):
+        """Landmark-sampled harmonic centrality (rank.py
+        harmonic_centrality) over the same 60-node doubling graph
+        and {0, 7} landmark set as kg_landmark_dist — one combinable
+        groupBy over the distance rows, all-integer micro units.
+        Oracle: the recursive-CTE distances plus the identical
+        DIV arithmetic."""
+        from ferenda_spark.operators.rank import harmonic_centrality
+        v = F.col("v")
+        d = (_docs(spark, sf)
+             .select((F.col("doc_id") % 60).alias("v")).distinct())
+        edges = (d.select(v.alias("src"), ((v + 1) % 60).alias("dst"))
+                 .unionByName(
+                     d.select(v.alias("src"),
+                              ((v * 2) % 60).alias("dst"))))
+        lms = spark.createDataFrame([(0,), (7,)], "node long")
+        out = harmonic_centrality(edges, lms)
+        return out.select(F.col("node").cast("long").alias("node"),
+                          "k_reached", "inv_dist_sum_micro",
+                          "harmonic_micro")
+    reg["kg_harmonic_landmarks"] = kg_harmonic_landmarks, f"""
+WITH {_LANDMARK_DIST_CTE}
 SELECT node, count(*) AS k_reached,
        CAST(sum(1000000 // dist) AS BIGINT) AS inv_dist_sum_micro,
        CAST(sum(1000000 // dist) * 59 // 2 AS BIGINT)
@@ -6782,9 +5942,21 @@ SELECT node, count(*) AS k_reached,
 FROM walk WHERE dist > 0 GROUP BY node
 """
 
+    def kg_assortativity(spark, sf):
+        """Degree assortativity (rank.py degree_assortativity) of the
+        citation graph: Pearson correlation of endpoint degrees over
+        distinct undirected edges — exact BIGINT sums, one double
+        expression, so the oracle reproduces r bit-for-bit.  Webgraphs
+        run disassortative; a positive r flags link-farm structure."""
+        from ferenda_spark.operators.rank import degree_assortativity
+        e = _kg_edges(spark, sf)
+        cites = (e.filter(F.col("pred") == "dcterms:references")
+                 .select(F.col("subj").alias("src"),
+                         F.col("obj").alias("dst")))
+        return degree_assortativity(cites)
     # assortativity from first principles: distinct undirected edges,
     # integer degree sums, the identical final double expression
-    o["kg_assortativity"] = f"""
+    reg["kg_assortativity"] = kg_assortativity, f"""
 WITH {_F_CTE}, {_TRIPLES_CTE},
 cites AS (
   SELECT subj AS src, obj AS dst FROM golden
@@ -6814,10 +5986,19 @@ SELECT CAST(m2 // 2 AS BIGINT) AS n_edges, sxy, sx, sx AS sy,
 FROM s
 """
 
+    def kg_class_links(spark, sf):
+        """Class-link matrix (voidstats.class_links): per (subject
+        class, predicate, object class) triple/distinct counts over
+        the KG — the VoID-linkset schema summary; multi-typed
+        entities count under min(class) (deterministic single class),
+        untyped endpoints under NULL so the matrix partitions the
+        non-type triples exactly."""
+        from ferenda_spark.operators.voidstats import class_links
+        return _longify(class_links(_kg_edges(spark, sf)))
     # class-link matrix from first principles over the same golden
     # triples: one deterministic class per typed entity (min), NULL
     # for untyped, grouped counts over the non-type triples
-    o["kg_class_links"] = f"""
+    reg["kg_class_links"] = kg_class_links, f"""
 WITH {_F_CTE}, {_TRIPLES_CTE},
 types AS (
   SELECT subj AS n, min(obj) AS cls FROM golden
@@ -6833,6 +6014,18 @@ LEFT JOIN types tob ON tob.n = r.obj
 GROUP BY 1, 2, 3
 """
 
+    def zorder_layout_docs(spark, sf):
+        """Z-order layout key (operators/layout.py): the Morton
+        interleave of two derived dimensions as one codegen BIGINT —
+        the multi-dim file-pruning sort key for the Iceberg graph
+        tables.  Oracle: the identical shift/mask spread chain in
+        DuckDB (both engines are signed-64 with the same &,|,<<)."""
+        from ferenda_spark.operators.layout import zorder_key2
+        did = F.col("doc_id")
+        return _docs(spark, sf).select(
+            "doc_id",
+            zorder_key2(did % 1024, (did * 37) % 1024).alias("zkey"))
+
 
     # the identical Morton spread chain (layout.py::_MASKS2), applied
     # to both dimensions; clamps are no-ops here (dims < 2^31)
@@ -6844,7 +6037,21 @@ GROUP BY 1, 2, 3
             c = f"(({c} | ({c} << {sh})) & {m})"
         return c
 
-    o["zorder_layout_docs"] = f"""
+    _prof_cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    _prof_union = "\nUNION ALL\n".join(f"""
+SELECT '{c}' AS "column", count(*) AS n_rows,
+       count(*) - count({c}) AS n_null,
+       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
+       round(count({c}) / greatest(count(*), 1), 6) AS completeness,
+       CAST(min({c}) AS VARCHAR) AS min_value,
+       CAST(max({c}) AS VARCHAR) AS max_value
+FROM documents""" for c in _prof_cols)
+
+    _checks_rows = ", ".join(
+        f"('{cid}', '{col}', '{kind}', {thr})"
+        for cid, col, kind, thr in DOC_CHECKS)
+
+    reg["zorder_layout_docs"] = zorder_layout_docs, f"""
 WITH d AS (SELECT doc_id, doc_id % 1024 AS x,
                   (doc_id * 37) % 1024 AS y FROM documents)
 SELECT doc_id,
@@ -6852,30 +6059,39 @@ SELECT doc_id,
 FROM d
 """
 
-    # both wedge directions with the same 50-fanout center cap
-    o["kg_cocitation"] = f"""
-WITH {_F_CTE}, {_TRIPLES_CTE},
-cites AS MATERIALIZED (
-  SELECT DISTINCT subj AS src, obj AS dst FROM golden
-  WHERE pred = 'dcterms:references'),
-oksrc AS (SELECT src FROM cites GROUP BY src HAVING count(*) <= 50),
-okdst AS (SELECT dst FROM cites GROUP BY dst HAVING count(*) <= 50),
-cs AS (SELECT c.src, c.dst FROM cites c
-       JOIN oksrc USING (src)),
-cd AS (SELECT c.src, c.dst FROM cites c
-       JOIN okdst USING (dst))
-SELECT 'cocite' AS kind, l.dst AS a, r.dst AS b, count(*) AS n
-FROM cs l JOIN cs r ON l.src = r.src AND l.dst < r.dst
-GROUP BY l.dst, r.dst
-UNION ALL
-SELECT 'couple', l.src, r.src, count(*)
-FROM cd l JOIN cd r ON l.dst = r.dst AND l.src < r.src
-GROUP BY l.src, r.src
-"""
-
+    def kg_fused_metadata(spark, sf):
+        """Structured+unstructured fusion: schema.org blocks whose
+        pages declare ``"sameAs": {"@id": <stable doc uri>}`` (the
+        standard web-markup idiom for canonical identity) are
+        harvested by structured_data.py, then infer.py's sameAs
+        canonicalization rewrites every page-url-keyed triple onto
+        the stable uri — web metadata lands on the SAME nodes the
+        text pipeline mints, with identity links consumed rather
+        than left for query-time UNIONs.  The canonical spelling is
+        the cluster min (id.example.org < site*.com throughout)."""
+        from ferenda_spark.operators.infer import sameas_canonicalize
+        from ferenda_spark.operators.structured_data import (
+            jsonld_triples,
+        )
+        did = F.col("doc_id").cast("string")
+        url = F.concat(F.lit("https://site"),
+                       (F.col("doc_id") % 7).cast("string"),
+                       F.lit(".com/p"), did)
+        canon = F.concat(F.lit("https://id.example.org/doc/"), did)
+        block = F.concat(
+            F.lit('{"@context":"https://schema.org","@id":"'), url,
+            F.lit('","@type":"Article","headline":"Doc '), did,
+            F.lit('","sameAs":{"@id":"'), canon, F.lit('"}}'))
+        pages = _docs(spark, sf).select(
+            url.alias("url"),
+            F.concat(F.lit('<script type="application/ld+json">'),
+                     block, F.lit("</script>")).alias("html"))
+        t = (jsonld_triples(pages).filter(F.col("error").isNull())
+             .select("subj", "pred", "obj"))
+        return sameas_canonicalize(t, sameas_pred="schema:sameAs")
     # after canonicalization both harvested triples sit on the stable
     # uri (the cluster min); the sameAs links themselves are dropped
-    o["kg_fused_metadata"] = """
+    reg["kg_fused_metadata"] = kg_fused_metadata, """
 WITH u AS (
   SELECT doc_id,
          'https://id.example.org/doc/' || CAST(doc_id AS VARCHAR)
@@ -6888,9 +6104,41 @@ SELECT canon, 'schema:headline', 'Doc ' || CAST(doc_id AS VARCHAR)
 FROM u
 """
 
+    def _cdx_lines(spark, sf, capture: int):
+        """One synthetic CDXJ line per doc for capture 0 or 1."""
+        did = F.col("doc_id")
+        ds = did.cast("string")
+        if capture == 0:
+            ts, status = F.concat(F.lit("2023"), F.lpad(ds, 10, "0")), \
+                F.lit("200")
+            fname, off, ln = "w0.warc.gz", did * 10, 5
+        else:
+            ts = F.concat(F.lit("2024"), F.lpad(ds, 10, "0"))
+            status = F.when(did % 3 == 0, "500").otherwise("200")
+            fname, off, ln = "w1.warc.gz", did * 20, 7
+        return _docs(spark, sf).select(F.concat(
+            F.lit("com,site"), (did % 7).cast("string"), F.lit(")/p"),
+            ds, F.lit(" "), ts,
+            F.lit(' {"url": "https://site'), (did % 7).cast("string"),
+            F.lit(".com/p"), ds, F.lit('", "status": "'), status,
+            F.lit('", "mime": "text/html", "filename": "' + fname
+                  + '", "offset": "'), off.cast("string"),
+            F.lit('", "length": "%d"}' % ln)).alias("line"))
+
+    def cdx_latest_capture(spark, sf):
+        """CDXJ index parse + newest-OK-capture dedup (sources/
+        cdx.py): two synthetic crawls per url — the 2024 capture wins
+        except where its status is 500 (every third doc), which falls
+        back to the 2023 capture.  Oracle restates the winner
+        arithmetically."""
+        from ferenda_spark.sources.cdx import latest_capture, parse_cdxj
+        lines = (_cdx_lines(spark, sf, 0)
+                 .unionByName(_cdx_lines(spark, sf, 1)))
+        return latest_capture(parse_cdxj(lines)).select(
+            "surt", "ts", "url", "filename", "offset", "length")
     # the 2024 capture wins unless its status is 500 (doc_id%3==0),
     # then the 2023 one; restated per column
-    o["cdx_latest_capture"] = """
+    reg["cdx_latest_capture"] = cdx_latest_capture, """
 SELECT 'com,site' || CAST(doc_id % 7 AS VARCHAR) || ')/p'
          || CAST(doc_id AS VARCHAR) AS surt,
        CAST((CASE WHEN doc_id % 3 = 0 THEN '2023' ELSE '2024' END
@@ -6906,9 +6154,28 @@ SELECT 'com,site' || CAST(doc_id % 7 AS VARCHAR) || ')/p'
 FROM documents
 """
 
+    def cdx_fetch_plan(spark, sf):
+        """Byte-range read planning over the parsed index: per WARC
+        file, records 80 bytes apart (gap 30 ≤ 32: merge) in runs of
+        four, then a 1000-byte jump (new segment) — the full
+        lines → parse → coalesced-ranges chain.  Oracle restates the
+        segment arithmetic."""
+        from ferenda_spark.sources.cdx import fetch_plan, parse_cdxj
+        did = F.col("doc_id")
+        r = F.expr("doc_id div 5")
+        offset = r * 80 + F.expr("(doc_id div 5) div 4") * 1000
+        lines = _docs(spark, sf).select(F.concat(
+            F.lit("com,site)/p"), did.cast("string"), F.lit(" 2024"),
+            F.lpad(did.cast("string"), 10, "0"),
+            F.lit(' {"url": "https://site.com/p'), did.cast("string"),
+            F.lit('", "status": "200", "filename": "w'),
+            (did % 5).cast("string"),
+            F.lit('.warc.gz", "offset": "'), offset.cast("string"),
+            F.lit('", "length": "50"}')).alias("line"))
+        return fetch_plan(parse_cdxj(lines))
     # runs of four 80-byte-spaced records merge (gap 30 <= 32), the
     # 1000-byte jump starts the next segment
-    o["cdx_fetch_plan"] = """
+    reg["cdx_fetch_plan"] = cdx_fetch_plan, """
 WITH g AS (
   SELECT DISTINCT doc_id % 5 AS f, (doc_id // 5) // 4 AS grp
   FROM documents)
@@ -6920,10 +6187,31 @@ SELECT 'w' || CAST(f AS VARCHAR) || '.warc.gz' AS filename,
 FROM g
 """
 
+    def redirect_resolution(spark, sf):
+        """HTTP redirect-chain resolution (crawl.py
+        resolve_redirects): synthetic chains r(did) -> r(did-1)
+        ending at multiples of 5 (1-4 hops) plus one deliberate
+        2-cycle c1 <-> c2; pointer doubling (4 rounds = 16 hops)
+        resolves every chain and reports the cycle loudly as
+        resolved=false.  Oracle = hop-bounded recursive CTE with the
+        identical min(dst) capture collapse."""
+        from ferenda_spark.operators.crawl import resolve_redirects
+        did = F.col("doc_id")
+        r = F.lit("https://m.example.org/r")
+        chain = (_docs(spark, sf).filter(did % 5 != 0)
+                 .select(F.concat(r, did.cast("string")).alias("src"),
+                         F.concat(r, (did - 1).cast("string"))
+                         .alias("dst")))
+        c = F.lit("https://m.example.org/c")
+        cyc = (_docs(spark, sf).filter(did.isin(1, 2))
+               .select(F.concat(c, did.cast("string")).alias("src"),
+                       F.concat(c, (F.lit(3) - did).cast("string"))
+                       .alias("dst")))
+        return _longify(resolve_redirects(chain.unionByName(cyc)))
     # redirect chains restated as a hop-bounded recursive CTE: the
     # pointer-doubled operator follows exactly min(chain, 2^4) hops,
     # so the oracle walks to hops < 16 and takes the deepest row
-    o["redirect_resolution"] = """
+    reg["redirect_resolution"] = redirect_resolution, """
 WITH RECURSIVE e AS (
   SELECT 'https://m.example.org/r' || CAST(doc_id AS VARCHAR) AS src,
          'https://m.example.org/r' || CAST(doc_id - 1 AS VARCHAR)
@@ -6947,9 +6235,31 @@ FROM fin f
 LEFT JOIN (SELECT DISTINCT src FROM m) d ON f.final_url = d.src
 """
 
+    def kg_host_graph(spark, sf):
+        """Host-level webgraph projection (crawl.py host_graph): two
+        synthetic cross-site links per doc over a 7-host universe,
+        intra-host links dropped, weights = link count + distinct
+        source pages.  Oracle restates the host arithmetic and the
+        GROUP BY."""
+        from ferenda_spark.operators.crawl import host_graph
+        did = F.col("doc_id")
+        src = F.concat(F.lit("https://site"), (did % 7).cast("string"),
+                       F.lit(".com/p"), did.cast("string"))
+        e1 = _docs(spark, sf).select(
+            src.alias("src"),
+            F.concat(F.lit("https://site"), (did % 5).cast("string"),
+                     F.lit(".com/x"), did.cast("string")).alias("dst"))
+        e2 = _docs(spark, sf).select(
+            src.alias("src"),
+            F.concat(F.lit("https://site"),
+                     ((did + 3) % 7).cast("string"),
+                     F.lit(".com/y"),
+                     F.expr("doc_id div 2").cast("string"))
+            .alias("dst"))
+        return host_graph(e1.unionByName(e2))
     # the host projection restated arithmetically (the host of
     # https://siteK.com/... is siteK.com by construction)
-    o["kg_host_graph"] = """
+    reg["kg_host_graph"] = kg_host_graph, """
 WITH l AS (
   SELECT 'site' || CAST(doc_id % 7 AS VARCHAR) || '.com' AS src_host,
          'site' || CAST(doc_id % 5 AS VARCHAR) || '.com' AS dst_host,
@@ -6968,9 +6278,38 @@ FROM l WHERE src_host <> dst_host
 GROUP BY src_host, dst_host
 """
 
+    def kg_host_rank(spark, sf):
+        """Domain-authority ranking: the host-graph projection
+        (crawl.py host_graph) composed with integer PageRank
+        (rank.py pagerank) — the Common-Crawl-style host-rank signal
+        a web curation pipeline uses for seed prioritization and
+        quota weighting.  A wider 97/89-host universe than the
+        kg_host_graph gate so the rank vector has real structure;
+        the oracle re-derives the distinct host edges and unrolls
+        the same three BIGINT iterations."""
+        from ferenda_spark.operators.crawl import host_graph
+        from ferenda_spark.operators.rank import pagerank
+        did = F.col("doc_id")
+        src = F.concat(F.lit("https://site"), (did % 97).cast("string"),
+                       F.lit(".com/p"), did.cast("string"))
+        e1 = _docs(spark, sf).select(
+            src.alias("src"),
+            F.concat(F.lit("https://site"), (did % 89).cast("string"),
+                     F.lit(".com/x"), did.cast("string")).alias("dst"))
+        e2 = _docs(spark, sf).select(
+            src.alias("src"),
+            F.concat(F.lit("https://site"),
+                     ((did + 31) % 97).cast("string"),
+                     F.lit(".com/y"), did.cast("string")).alias("dst"))
+        hg = host_graph(e1.unionByName(e2))
+        pr = pagerank(hg.select(F.col("src_host").alias("src"),
+                                F.col("dst_host").alias("dst")),
+                      iters=3).withColumnRenamed("node", "host")
+        return analytics.ranked_topk(
+            pr, [("rank_micro", True), ("host", False)], 20)
     # host_graph → pagerank composition: distinct host edges, then
     # the same three unrolled BIGINT iterations as kg_pagerank
-    o["kg_host_rank"] = f"""
+    reg["kg_host_rank"] = kg_host_rank, f"""
 WITH hl AS (
   SELECT 'site' || CAST(doc_id % 97 AS VARCHAR) || '.com' AS src_host,
          'site' || CAST(doc_id % 89 AS VARCHAR) || '.com' AS dst_host
@@ -6982,18 +6321,7 @@ WITH hl AS (
 cites AS MATERIALIZED (
   SELECT DISTINCT src_host AS src, dst_host AS dst FROM hl
   WHERE src_host <> dst_host),
-prnodes AS MATERIALIZED (
-  SELECT src AS node FROM cites UNION SELECT dst FROM cites),
-nn AS (SELECT count(*) AS n FROM prnodes),
-outd AS (SELECT src, count(*) AS outdeg FROM cites GROUP BY src),
-it0 AS (SELECT node, CAST((SELECT 1000000000000 // n FROM nn) AS BIGINT)
-               AS r FROM prnodes),
-{_pr_iter.format(i=1, prev=0,
-                 base='(SELECT 15 * (1000000000000 // n) // 100 FROM nn)')},
-{_pr_iter.format(i=2, prev=1,
-                 base='(SELECT 15 * (1000000000000 // n) // 100 FROM nn)')},
-{_pr_iter.format(i=3, prev=2,
-                 base='(SELECT 15 * (1000000000000 // n) // 100 FROM nn)')}
+{_PAGERANK_CTE}
 SELECT host, rank_micro, CAST(rn AS INT) AS rank FROM (
   SELECT node AS host, CAST(r // 1000000 AS BIGINT) AS rank_micro,
          row_number() OVER (ORDER BY r // 1000000 DESC, node) AS rn
@@ -7001,29 +6329,40 @@ SELECT host, rank_micro, CAST(rn AS INT) AS rank FROM (
 WHERE rn <= 20
 """
 
+    def _churn_snapshots(spark, sf):
+        """(prev, curr) crawl snapshots of (url, content_hash) over one
+        url space: 1-in-7 urls new, 1-in-11 gone, 1-in-5 survivors
+        rehashed (crawl_churn_docs, revisit_schedule_docs)."""
+        d = _docs(spark, sf)
+        did = F.col("doc_id")
+        url = F.concat(F.lit("https://site"), (did % 13).cast("string"),
+                       F.lit(".com/d"), did.cast("string"))
+        old_text = F.when(did % 5 == 0,
+                          F.concat(F.col("text"), F.lit(":v1"))) \
+                    .otherwise(F.col("text"))
+        prev = d.filter(did % 7 != 3).select(
+            url.alias("url"),
+            F.md5(F.encode(old_text, "UTF-8")).alias("content_hash"))
+        curr = d.filter(did % 11 != 4).select(
+            url.alias("url"),
+            F.md5(F.encode(F.col("text"), "UTF-8")).alias("content_hash"))
+        return prev, curr
+
+    def crawl_churn_docs(spark, sf):
+        """Crawl-over-crawl change detection (crawl.py snapshot_churn
+        → host_churn): two synthetic snapshots of the same url space
+        — 1-in-7 urls new, 1-in-11 gone, 1-in-5 of the survivors
+        rehashed (modified) — classified per url by ONE full-outer
+        hash join, then profiled per host with integer per-mille
+        churn for recrawl budgeting.  Oracle restates the join and
+        every conditional count."""
+        from ferenda_spark.operators.crawl import (host_churn,
+                                                   snapshot_churn)
+        return host_churn(snapshot_churn(*_churn_snapshots(spark, sf)))
     # the full-outer hash join and every conditional count restated;
     # churn_permille is the same BIGINT floor division
-    o["crawl_churn_docs"] = """
-WITH prev AS (
-  SELECT 'https://site' || CAST(doc_id % 13 AS VARCHAR) || '.com/d'
-           || CAST(doc_id AS VARCHAR) AS url,
-         md5(text || CASE WHEN doc_id % 5 = 0 THEN ':v1' ELSE '' END)
-           AS ph,
-         'site' || CAST(doc_id % 13 AS VARCHAR) || '.com' AS host
-  FROM documents WHERE doc_id % 7 <> 3),
-curr AS (
-  SELECT 'https://site' || CAST(doc_id % 13 AS VARCHAR) || '.com/d'
-           || CAST(doc_id AS VARCHAR) AS url,
-         md5(text) AS ch,
-         'site' || CAST(doc_id % 13 AS VARCHAR) || '.com' AS host
-  FROM documents WHERE doc_id % 11 <> 4),
-j AS (
-  SELECT COALESCE(p.host, c.host) AS host,
-         CASE WHEN p.url IS NULL THEN 'new'
-              WHEN c.url IS NULL THEN 'gone'
-              WHEN p.ph = c.ch THEN 'unchanged'
-              ELSE 'modified' END AS status
-  FROM prev p FULL OUTER JOIN curr c ON p.url = c.url),
+    reg["crawl_churn_docs"] = crawl_churn_docs, f"""
+WITH {_CHURN_CTE},
 g AS (
   SELECT host,
          CAST(sum(CASE WHEN status = 'new' THEN 1 ELSE 0 END)
@@ -7042,30 +6381,24 @@ SELECT host, n_new, n_gone, n_modified, n_unchanged,
 FROM g
 """
 
+    def revisit_schedule_docs(spark, sf):
+        """Recrawl scheduling (crawl.py revisit_schedule over the
+        crawl_churn_docs fixture): per host the Cho & Garcia-Molina
+        bias-corrected change-rate estimate λ̂ = -ln((n-X+.5)/(n+.5))/Δ
+        over surviving pages (Δ = 7 days between the snapshots) and
+        the 1/λ̂ revisit interval clamped to [1h, 30d] — churning
+        hosts earn short intervals.  Exact-integer counts, one double
+        expression, oracle bit-identical."""
+        from ferenda_spark.operators.crawl import (host_churn,
+                                                   revisit_schedule,
+                                                   snapshot_churn)
+        prof = host_churn(snapshot_churn(*_churn_snapshots(spark, sf)))
+        return revisit_schedule(prof, interval_s=7 * 86400)
     # Cho & Garcia-Molina revisit intervals over the same churn
     # arithmetic: λ̂ and 1/λ̂ as ONE double expression over the exact
     # integer counts (Δ = 604800 s, clamp [3600, 2592000])
-    o["revisit_schedule_docs"] = """
-WITH prev AS (
-  SELECT 'https://site' || CAST(doc_id % 13 AS VARCHAR) || '.com/d'
-           || CAST(doc_id AS VARCHAR) AS url,
-         md5(text || CASE WHEN doc_id % 5 = 0 THEN ':v1' ELSE '' END)
-           AS ph,
-         'site' || CAST(doc_id % 13 AS VARCHAR) || '.com' AS host
-  FROM documents WHERE doc_id % 7 <> 3),
-curr AS (
-  SELECT 'https://site' || CAST(doc_id % 13 AS VARCHAR) || '.com/d'
-           || CAST(doc_id AS VARCHAR) AS url,
-         md5(text) AS ch,
-         'site' || CAST(doc_id % 13 AS VARCHAR) || '.com' AS host
-  FROM documents WHERE doc_id % 11 <> 4),
-j AS (
-  SELECT COALESCE(p.host, c.host) AS host,
-         CASE WHEN p.url IS NULL THEN 'new'
-              WHEN c.url IS NULL THEN 'gone'
-              WHEN p.ph = c.ch THEN 'unchanged'
-              ELSE 'modified' END AS status
-  FROM prev p FULL OUTER JOIN curr c ON p.url = c.url),
+    reg["revisit_schedule_docs"] = revisit_schedule_docs, f"""
+WITH {_CHURN_CTE},
 g AS (
   SELECT host,
          CAST(sum(CASE WHEN status = 'modified' THEN 1 ELSE 0 END)
@@ -7086,6 +6419,25 @@ SELECT host, n_pages,
 FROM lam
 """
 
+    def script_mix_docs(spark, sf):
+        """Unicode script profile (textstats.script_mix): per doc_id
+        class a Cyrillic / CJK / Greek suffix is injected (class 0
+        mixes Latin WITH Cyrillic — the homograph-spoofing shape);
+        counts per script family, dominant script by fixed-order
+        strict-max, and the latin_cyrillic_mix flag.  Oracle: the
+        identical ranges (imported from the operator) via
+        regexp_extract_all + the same CASE cascade."""
+        from ferenda_spark.operators.textstats import script_mix
+        did = F.col("doc_id")
+        t = F.concat(
+            F.col("text"),
+            F.when(did % 4 == 0, " раураl сайт")
+            .when(did % 4 == 1, " 漢字テスト文書")
+            .when(did % 4 == 2, " ελληνικά γράμματα")
+            .otherwise(""))
+        docs = _docs(spark, sf).select("doc_id", t.alias("text"))
+        return script_mix(docs)
+
     # script-mix counts with the operator's OWN ranges (imported, so
     # both engines run the literally identical character classes) and
     # the same fixed-order strict-max dominant cascade
@@ -7100,7 +6452,7 @@ FROM lam
                 f"ELSE {_dom} END")
         _best = (f"CASE WHEN n_{_name} > {_best} THEN n_{_name} "
                  f"ELSE {_best} END")
-    o["script_mix_docs"] = f"""
+    reg["script_mix_docs"] = script_mix_docs, f"""
 WITH t AS (
   SELECT doc_id,
          text || CASE
@@ -7120,10 +6472,25 @@ SELECT doc_id, n_latin, n_cyrillic, n_greek, n_cjk, n_arabic,
 FROM c
 """
 
+    def sim_pq_topk(spark, sf):
+        """Product-quantization ANN (similarity.pq_topk, the Jégou
+        ADC construction): 64-dim embeddings → 8 sub-space codes
+        (codebooks = sub-slices of the 16 lowest-id vectors, the IVF
+        seed convention), queries scored via per-query distance
+        tables over the codes only — the compressed-domain search
+        that turns 10^12×64 floats into 8-byte codes.  Exact int64
+        milli-quantized metric throughout, so the oracle replays
+        every code assignment, table cell and rank."""
+        from ferenda_spark.operators.similarity import pq_topk
+        embs = load_table(spark, sf, "embeddings")
+        queries = (embs.filter(F.col("vec_id") < 10)
+                   .select(F.col("vec_id").alias("query_id"),
+                           "embedding"))
+        return _longify(pq_topk(embs, queries, dim=64))
     # PQ/ADC replayed exactly: milli-floored components, per-subspace
     # argmin codes (ties -> lower code), per-query distance tables,
     # summed lookup, rank by (adist, item)
-    o["sim_pq_topk"] = """
+    reg["sim_pq_topk"] = sim_pq_topk, """
 WITH it AS (
   SELECT vec_id,
          list_transform(embedding,
@@ -7162,6 +6529,25 @@ SELECT query_id, item_id, adist, CAST(rank AS BIGINT) AS rank FROM (
   FROM scored) WHERE rank <= 5
 """
 
+    def graph_random_walks(spark, sf):
+        """Graph-embedding walk corpus (rank.py random_walks): one
+        deterministic 3-step walk per node over the halving graph
+        n(did) -> n(did div 2) / n(did div 3) (did > 0; n0 is the
+        sink).  The oracle re-derives every hop: argmin of the
+        salted-md5 variate h('walk-v1':walk_id:t:v) over the
+        neighbors, the exact skip-gram input a re-run or another
+        engine must reproduce."""
+        from ferenda_spark.operators.rank import random_walks
+        did = F.col("doc_id")
+        docs = _docs(spark, sf).filter(did > 0)
+        n = lambda c: F.concat(F.lit("n"), c.cast("string"))
+        adj = (docs.select(n(did).alias("src"),
+                           n(F.expr("doc_id div 2")).alias("dst"))
+               .unionByName(
+                   docs.select(n(did).alias("src"),
+                               n(F.expr("doc_id div 3")).alias("dst"))))
+        return _longify(random_walks(adj))
+
 
     # every hop re-derived: argmin over out-neighbors of the salted
     # md5 variate, total order (h, v) restated as min over
@@ -7170,7 +6556,7 @@ SELECT query_id, item_id, adist, CAST(rank AS BIGINT) AS rank FROM (
     _WALK_PICK = ("min(lpad(CAST(CAST(concat('0x', substr(md5("
                   "'walk-v1:' || {w} || ':{t}:' || a.dst), 1, 15)) "
                   "AS BIGINT) AS VARCHAR), 19, '0') || a.dst)")
-    o["graph_random_walks"] = f"""
+    reg["graph_random_walks"] = graph_random_walks, f"""
 WITH adj AS (
   SELECT 'n' || CAST(doc_id AS VARCHAR) AS src,
          'n' || CAST(doc_id // 2 AS VARCHAR) AS dst
@@ -7199,103 +6585,38 @@ UNION ALL SELECT walk_id, 2, node FROM s2
 UNION ALL SELECT walk_id, 3, node FROM s3
 """
 
-    # anchor profile: the synthesized link structure restated
-    # arithmetically — two links per doc, the named anchor ignored,
-    # "<b>see</b>\n also N" whitespace-normalized to "see also N",
-    # "/rel/K" origin-resolved
-    o["anchor_text_docs"] = """
-WITH p AS (
-  SELECT 'https://src.example/' || doc_id AS src,
-         'https://ex.org/doc/' || (doc_id % 37) AS h1,
-         'ref ' || (doc_id % 5) AS a1,
-         'https://src.example/rel/' || (doc_id % 11) AS h2,
-         'see also ' || (doc_id % 3) AS a2
-  FROM documents),
-pairs AS (
-  SELECT src, h1 AS href, a1 AS anchor FROM p
-  UNION ALL
-  SELECT src, h2 AS href, a2 AS anchor FROM p),
-by_anchor AS (
-  SELECT href, anchor, count(*) AS n FROM pairs GROUP BY 1, 2),
-top AS (
-  SELECT href, anchor AS top_anchor, n AS top_anchor_n FROM (
-    SELECT href, anchor, n,
-           row_number() OVER (PARTITION BY href
-                              ORDER BY n DESC, anchor) AS rn
-    FROM by_anchor) WHERE rn = 1),
-tot AS (
-  SELECT href, count(*) AS n_links, count(DISTINCT src) AS n_sources
-  FROM pairs GROUP BY 1)
-SELECT t.href, t.n_links, t.n_sources, x.top_anchor, x.top_anchor_n
-FROM tot t JOIN top x ON t.href = x.href
-"""
-
-    o["quality_classifier_docs"] = """
-WITH tk AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS toks
-  FROM documents)
-SELECT doc_id AS id, CAST(len(toks) AS BIGINT) AS n_tokens,
-       CAST(coalesce(list_aggregate(list_transform(toks,
-            t -> CAST(concat('0x', substr(md5('qw-v1:' || t), 1, 15))
-                      AS BIGINT) % 2001 - 1000), 'sum'), 0) AS BIGINT)
-           AS score_sum_milli,
-       CAST(coalesce(list_aggregate(list_transform(toks,
-            t -> CAST(concat('0x', substr(md5('qw-v1:' || t), 1, 15))
-                      AS BIGINT) % 2001 - 1000), 'sum'), 0) AS BIGINT)
-           * 1000 >= 0 AS keep
-FROM tk
-"""
-
-    # token-window substring dedup: windows are md5 of 20 joined
-    # lowercased tokens; winner = smallest (doc_id, pos); duplicate
-    # token count = DISTINCT positions under non-winner windows
-    o["dedup_token_spans_docs"] = """
-WITH inj AS (
-  SELECT doc_id, lower(text) ||
-    CASE WHEN doc_id % 6 = 0
-         THEN ' this license text is shared verbatim across many' ||
-              ' documents and must be flagged as a duplicated span' ||
-              ' by the window pass'
-         ELSE '' END AS text
-  FROM documents),
-base AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                     x -> x != '') AS toks
-  FROM inj),
-sized AS (SELECT doc_id, toks, len(toks) AS n_tokens FROM base),
-occ AS (
-  SELECT doc_id, g.i AS pos,
-         CAST(concat('0x', substr(
-             md5(array_to_string(list_slice(toks, g.i, g.i + 19), ' ')),
-             1, 15)) AS BIGINT) AS whash
-  FROM sized, unnest(generate_series(1, n_tokens - 19)) AS g(i)),
-marked AS (
-  SELECT doc_id, pos,
-         count(*) OVER (PARTITION BY whash) AS n_occ,
-         row_number() OVER (PARTITION BY whash
-                            ORDER BY doc_id, pos) AS rn
-  FROM occ),
-dups AS (SELECT doc_id, pos FROM marked WHERE n_occ > 1 AND rn > 1),
-duptok AS (
-  SELECT doc_id, count(DISTINCT g.t) AS n_dup_tokens
-  FROM dups, unnest(generate_series(pos, pos + 19)) AS g(t)
-  GROUP BY doc_id),
-nw AS (SELECT doc_id, count(*) AS n_windows FROM occ GROUP BY doc_id),
-nd AS (SELECT doc_id, count(*) AS n_dup_windows FROM dups GROUP BY doc_id)
-SELECT s.doc_id AS id, CAST(s.n_tokens AS BIGINT) AS n_tokens,
-       CAST(coalesce(nw.n_windows, 0) AS BIGINT) AS n_windows,
-       CAST(coalesce(nd.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
-       CAST(coalesce(dt.n_dup_tokens, 0) AS BIGINT) AS n_dup_tokens
-FROM sized s
-LEFT JOIN nw ON nw.doc_id = s.doc_id
-LEFT JOIN nd ON nd.doc_id = s.doc_id
-LEFT JOIN duptok dt ON dt.doc_id = s.doc_id
-"""
-
-    o["curation_pipeline_docs"] = f"""
+    def curation_pipeline_docs(spark, sf):
+        """The round-3 curation toolkit composed end-to-end, the way
+        a mixing job actually runs it: strip corpus-frequency
+        boilerplate → redact PII → drop exact duplicates of the
+        cleaned text (min-id keeper) → deterministic per-language
+        mixture sample. Every stage is an existing gated operator;
+        the oracle recomposes the identical chain in SQL."""
+        from ferenda_spark.operators import sampling
+        d = _docs(spark, sf).select("doc_id", "lang", "text")
+        did = F.col("doc_id")
+        inj = d.select("doc_id", "lang", F.concat(
+            F.col("text"),
+            F.when(did % 2 == 0,
+                   F.lit(". Subscribe to our newsletter today")
+                   ).otherwise(F.lit("")),
+            F.when(did % 7 == 0,
+                   F.concat(F.lit(". contact user"), did.cast("string"),
+                            F.lit("@example.com"))).otherwise(F.lit("")),
+        ).alias("text"))
+        stripped = dedup.strip_boilerplate(inj).select(
+            F.col("id").alias("doc_id"), F.col("clean_text"))
+        redacted = textstats.redact_pii(
+            stripped, text_col="clean_text").select(
+            "doc_id", F.col("clean_text").alias("final_text"))
+        keepers = dedup.exact_dedup(
+            redacted, text_col="final_text", id_col="doc_id").select(
+            F.col("keeper_id").alias("doc_id"), "text_md5")
+        sampled = sampling.stratified_sample(
+            keepers.join(d.select("doc_id", "lang"), "doc_id"),
+            {"en": 0.8}, default_rate=0.5)
+        return _longify(sampled.select("doc_id", "lang", "text_md5"))
+    reg["curation_pipeline_docs"] = curation_pipeline_docs, f"""
 WITH inj AS (
   SELECT doc_id, lang, text ||
     CASE WHEN doc_id % 2 = 0
@@ -7332,10 +6653,40 @@ WHERE CAST(concat('0x', substr(md5('mix-v1:' ||
                 ELSE {rate_threshold(0.5)} END
 """
 
+    def curation_pipeline_v3(spark, sf):
+        """The round-3-late toolkit composed end-to-end: URL/domain
+        blocklist filter → hashed-feature quality classifier →
+        keep-first duplicate-unit removal → exact-dedup keeper. Every
+        stage is an existing driver-gated operator; the oracle
+        recomposes the identical chain in SQL."""
+        from ferenda_spark.operators.classify import quality_score
+        from ferenda_spark.operators.webfilter import domain_filter
+        d = _docs(spark, sf).select("doc_id", "lang", "text")
+        did = F.col("doc_id")
+        tld = (F.when(did % 3 == 0, "com")
+               .when(did % 3 == 1, "org").otherwise("co.uk"))
+        withurl = d.withColumn("url", F.concat(
+            F.lit("https://"),
+            F.when(did % 5 == 0, "sub.").otherwise(""),
+            F.lit("site"), (did % 20).cast("string"), F.lit("."), tld,
+            F.lit("/p/"), did.cast("string")))
+        vetted = domain_filter(
+            withurl, blocklist=[f"site{k}.co.uk" for k in range(20)])
+        quality = quality_score(vetted).filter(F.col("keep")) \
+            .select(F.col("id").alias("doc_id"))
+        good = vetted.join(quality, "doc_id", "left_semi")
+        uniq = dedup.dedup_units_keepfirst(good).select(
+            F.col("id").alias("doc_id"), "clean_text")
+        keepers = dedup.exact_dedup(
+            uniq, text_col="clean_text", id_col="doc_id").select(
+            F.col("keeper_id").alias("doc_id"), "text_md5")
+        return _longify(
+            keepers.join(d.select("doc_id", "lang"), "doc_id")
+            .select("doc_id", "lang", "text_md5"))
     # v3 chain: the domain blocklist kills doc_id % 3 == 2 (the co.uk
     # third), the classifier keeps mean-weight ≥ 0 docs, keep-first
     # unit dedup runs on the survivors, exact keeper per clean text
-    o["curation_pipeline_v3"] = """
+    reg["curation_pipeline_v3"] = curation_pipeline_v3, """
 WITH vetted AS (
   SELECT doc_id, lang, text FROM documents WHERE doc_id % 3 != 2),
 tk AS (
@@ -7365,75 +6716,32 @@ SELECT k.doc_id, d.lang, k.text_md5
 FROM keepers k JOIN documents d ON d.doc_id = k.doc_id
 """
 
-    _words13 = _WORDS.format(c="text")
-    o["decontaminate_docs"] = f"""
-WITH t AS (SELECT doc_id AS id, {_sh_expr(_words13, 13)} AS sh
-           FROM documents),
-b AS (SELECT DISTINCT unnest(sh) AS shingle FROM t WHERE id % 50 = 0),
-e AS (SELECT id, unnest(sh) AS shingle FROM t),
-h AS (SELECT e.id, CAST(count(DISTINCT e.shingle) AS BIGINT) AS n_hits
-      FROM e JOIN b USING (shingle) GROUP BY e.id)
-SELECT t.id, coalesce(h.n_hits, 0) AS n_hits,
-       coalesce(h.n_hits, 0) > 0 AS contaminated
-FROM t LEFT JOIN h ON h.id = t.id
-"""
-    # the bloom prefilter is exact after its verify join — same oracle
-    o["decontaminate_bloom_docs"] = o["decontaminate_docs"]
-
-    _prof_cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    _prof_union = "\nUNION ALL\n".join(f"""
-SELECT '{c}' AS "column", count(*) AS n_rows,
-       count(*) - count({c}) AS n_null,
-       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-       round(count({c}) / greatest(count(*), 1), 6) AS completeness,
-       CAST(min({c}) AS VARCHAR) AS min_value,
-       CAST(max({c}) AS VARCHAR) AS max_value
-FROM documents""" for c in _prof_cols)
-    o["profile_documents"] = _prof_union
-
-    o["quantiles_documents"] = "\nUNION ALL\n".join(
-        f"""SELECT '{c}' AS "column", CAST({p} AS DOUBLE) AS p,
-round(quantile_cont(CAST({c} AS DOUBLE), {p}), 6) AS value
-FROM documents"""
-        for c in ("doc_id", "n_chars") for p in (0.25, 0.5, 0.95))
-
-    _checks_rows = ", ".join(
-        f"('{cid}', '{col}', '{kind}', {thr})"
-        for cid, col, kind, thr in DOC_CHECKS)
-    o["check_documents"] = f"""
-WITH p AS ({_prof_union}),
-c AS (SELECT check_id, "column", kind,
-             CAST(threshold AS DOUBLE) AS threshold
-      FROM (VALUES {_checks_rows})
-      AS c(check_id, "column", kind, threshold))
-SELECT c.check_id, c."column", c.kind, c.threshold,
-  round(CASE c.kind
-    WHEN 'complete' THEN p.completeness
-    WHEN 'unique' THEN CAST(p.n_distinct AS DOUBLE)
-    WHEN 'distinct_at_least' THEN CAST(p.n_distinct AS DOUBLE)
-    WHEN 'min_at_least' THEN TRY_CAST(p.min_value AS DOUBLE)
-    WHEN 'max_at_most' THEN TRY_CAST(p.max_value AS DOUBLE)
-  END, 6) AS actual,
-  coalesce(CASE c.kind
-    WHEN 'complete' THEN p.completeness >= c.threshold
-    WHEN 'unique' THEN p.n_distinct = (p.n_rows - p.n_null)
-                       AND p.n_null = 0
-    WHEN 'distinct_at_least' THEN p.n_distinct >= c.threshold
-    WHEN 'min_at_least' THEN TRY_CAST(p.min_value AS DOUBLE)
-                             >= c.threshold
-    WHEN 'max_at_most' THEN TRY_CAST(p.max_value AS DOUBLE)
-                            <= c.threshold
-  END, FALSE) AS passed
-FROM c JOIN p ON p."column" = c."column"
-"""
-
-    o["toc_documents"] = """
+    def toc_documents(spark, sf):
+        d = _docs(spark, sf)
+        toc = analytics.toc_pages(d.select("lang", "source"),
+                                  "lang", "source")
+        return _longify(toc.select(
+            "lang", F.array_join("titles", ",").alias("titles_csv"), "n"))
+    reg["toc_documents"] = toc_documents, """
 SELECT lang, string_agg(source, ',' ORDER BY source) AS titles_csv,
        count(*) AS n
 FROM documents GROUP BY lang
 """
 
-    o["mint_documents"] = """
+    def mint_documents(spark, sf):
+        from ferenda_spark.functions.minting import UriTemplate, mint
+        d = _docs(spark, sf).select(
+            "doc_id", "source",
+            F.when(F.col("doc_id") % 2 == 0,
+                   F.col("doc_id")).alias("even_id"))
+        templates = [
+            UriTemplate(priority=1, uri_template="res/even/{even_id}",
+                        bindings=["even_id"]),
+            UriTemplate(priority=2, uri_template="res/src/{source}",
+                        bindings=["source"], slug=["source"]),
+        ]
+        return mint(d, templates, BASE).select("doc_id", "uri")
+    reg["mint_documents"] = mint_documents, """
 SELECT doc_id,
        CASE WHEN doc_id % 2 = 0
             THEN 'https://example.org/res/even/' || CAST(doc_id AS VARCHAR)
@@ -7444,7 +6752,41 @@ SELECT doc_id,
 FROM documents
 """
 
-    o["patch_documents"] = """
+    def patch_documents(spark, sf):
+        """G10: per-document unified-diff patches (reference
+        patch_if_needed) — applied patch upcases line 2; a bogus-
+        context patch must flag 'conflict' and keep the text."""
+        from ferenda_spark.operators import patch as patch_op
+        d = _docs(spark, sf)
+        words = F.split(F.col("text"), " ")
+        l1 = F.array_join(F.slice(words, 1, 10), " ")
+        l2 = F.array_join(F.slice(words, 11, 10), " ")
+        l3 = F.array_join(F.slice(words, 21, 1000000), " ")
+        base = d.select("doc_id",
+                        F.concat_ws("\n", l1, l2, l3).alias("text"),
+                        l1.alias("_l1"), l2.alias("_l2"), l3.alias("_l3"))
+        good = base.filter(F.col("doc_id") % 5 == 0).select(
+            "doc_id",
+            F.concat_ws(
+                "\n",
+                F.lit("@@ -1,3 +1,3 @@ normalize line2"),
+                F.concat(F.lit(" "), F.col("_l1")),
+                F.concat(F.lit("-"), F.col("_l2")),
+                F.concat(F.lit("+"), F.upper(F.col("_l2"))),
+                F.concat(F.lit(" "), F.col("_l3"))).alias("patch"))
+        bad = base.filter(F.col("doc_id") % 5 == 3).select(
+            "doc_id",
+            F.concat_ws(
+                "\n",
+                F.lit("@@ -1,2 +1,2 @@ bogus"),
+                F.lit(" THIS CONTEXT DOES NOT EXIST"),
+                F.lit("-NOR THIS"),
+                F.lit("+REPLACEMENT")).alias("patch"))
+        out = patch_op.apply_patches(base.select("doc_id", "text"),
+                                     good.unionByName(bad))
+        return out.select("doc_id", "patched_text",
+                          "patch_status", "patch_desc")
+    reg["patch_documents"] = patch_documents, """
 WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 l AS (SELECT doc_id,
         coalesce(array_to_string(ws[1:10], ' '), '') AS l1,
@@ -7462,7 +6804,12 @@ SELECT doc_id,
 FROM l
 """
 
-    o["sim_topk_cosine"] = f"""
+    def sim_topk_cosine(spark, sf):
+        emb = load_table(spark, sf, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        return _longify(similarity.cosine_topk(emb, qs))
+    reg["sim_topk_cosine"] = sim_topk_cosine, f"""
 WITH it AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
             FROM embeddings),
 qs AS (SELECT vec_id AS query_id, v AS qv FROM it WHERE vec_id < 10),
@@ -7475,7 +6822,12 @@ SELECT query_id, item_id, cos_sim, rank FROM (
   FROM scored) WHERE rank <= 5
 """
 
-    o["sim_lsh_topk"] = f"""
+    def sim_lsh_topk(spark, sf):
+        emb = load_table(spark, sf, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        return _longify(similarity.lsh_topk(emb, qs, dim=64))
+    reg["sim_lsh_topk"] = sim_lsh_topk, f"""
 WITH it AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
             FROM embeddings),
 itb AS ({_banded_cte('it', 'vec_id')}),
@@ -7492,6 +6844,14 @@ SELECT query_id, item_id, cos_sim, rank FROM (
   FROM scored) WHERE rank <= 5
 """
 
+    def sim_ivf_topk(spark, sf):
+        """IVF-list ANN: 8 seed-sampled centroid lists, nprobe=2."""
+        emb = load_table(spark, sf, "embeddings")
+        qs = emb.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        return _longify(similarity.ivf_topk(
+            emb, qs, dim=64))
+
     # IVF: centroids = 8 lowest-id vectors; exact int64 L2 on
     # milli-quantized components, ties -> lower cid (mirrors the
     # stable argsort in similarity.ivf_assign_udf)
@@ -7501,7 +6861,7 @@ SELECT query_id, item_id, cos_sim, rank FROM (
               " * (CAST(floor(i.v[x+1]*1000) AS BIGINT)"
               " - CAST(floor(c.cv[x+1]*1000) AS BIGINT)) "
               "for x in generate_series(0, 63)]), (a, b) -> a + b)")
-    o["sim_ivf_topk"] = f"""
+    reg["sim_ivf_topk"] = sim_ivf_topk, f"""
 WITH it AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
             FROM embeddings),
 cent AS (SELECT vec_id AS cid, v AS cv FROM it WHERE vec_id < 8),
@@ -7525,18 +6885,10 @@ SELECT query_id, item_id, cos_sim, rank FROM (
   FROM scored) WHERE rank <= 5
 """
 
-    o["sim_ann_topk"] = f"""
-SELECT query_id, item_id, cos_sim, rank, 'brute' AS method
-FROM ({o["sim_topk_cosine"]})
-UNION ALL
-SELECT query_id, item_id, cos_sim, rank, 'lsh' AS method
-FROM ({o["sim_lsh_topk"]})
-UNION ALL
-SELECT query_id, item_id, cos_sim, rank, 'ivf' AS method
-FROM ({o["sim_ivf_topk"]})
-"""
-
-    o["sim_label_centroids"] = """
+    def sim_label_centroids(spark, sf):
+        emb = load_table(spark, sf, "embeddings")
+        return _longify(similarity.label_centroids(emb, dim=64))
+    reg["sim_label_centroids"] = sim_label_centroids, """
 SELECT CAST(label AS BIGINT) AS label, g.i AS dim_idx,
        round(avg(embedding[g.i + 1]), 6) AS centroid_component,
        count(*) AS n_vectors
@@ -7545,116 +6897,62 @@ FROM embeddings,
 GROUP BY label, g.i
 """
 
-    o["sim_embedding_neardup"] = f"""
+    def sim_embedding_neardup(spark, sf):
+        emb = load_table(spark, sf, "embeddings")
+        return _longify(similarity.embedding_near_dup_pairs(
+            emb, dim=64, threshold=0.4))
+    reg["sim_embedding_neardup"] = sim_embedding_neardup, f"""
 WITH it AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
             FROM embeddings),
 itb AS ({_banded_cte('it', 'vec_id')}),
-pairs AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         {_cos_sql('a.v', 'b.v')} AS cos_sim
-  FROM itb a JOIN itb b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id)
+{_LSH_PAIRS_CTE}
 SELECT DISTINCT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= 0.4
 """
 
-    # SemDeDup: identical pair construction, then the same
-    # recursive-CTE min-label closure the dedup_components oracle
-    # states, left-joined back over every id (singletons keep).
-    _banded22 = " UNION ALL ".join(
-        f"SELECT vec_id AS id, v, {b} AS band, "
-        f"{_band_bucket_sql('v', b, 5)} AS bucket FROM it"
-        for b in range(22))
-    o["sim_semantic_dedup_auto"] = f"""
-WITH RECURSIVE it AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings WHERE vec_id < 200),
-itb AS ({_banded22}),
-pairs AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         {_cos_sql('a.v', 'b.v')} AS cos_sim
-  FROM itb a JOIN itb b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id),
-cand AS (SELECT DISTINCT id_a, id_b FROM pairs WHERE cos_sim >= 0.4),
-edges AS (SELECT id_a AS u, id_b AS v FROM cand
-          UNION SELECT id_b, id_a FROM cand),
-reach AS (
-  SELECT u AS id, u AS r FROM edges
-  UNION
-  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
-comp AS (SELECT id, min(r) AS comp FROM reach GROUP BY id)
-SELECT CAST(e.vec_id AS BIGINT) AS vec_id,
-       CAST(coalesce(c.comp, e.vec_id) AS BIGINT) AS "group",
-       coalesce(c.comp, e.vec_id) = e.vec_id AS keep
-FROM (SELECT vec_id FROM embeddings WHERE vec_id < 200) e
-LEFT JOIN comp c ON e.vec_id = c.id
-"""
+    def sim_semantic_dedup(spark, sf):
+        """SemDeDup: one survivor per connected component of the
+        cos ≥ 0.4 near-dup pair graph (banded-LSH blocked)."""
+        emb = load_table(spark, sf, "embeddings")
+        return _longify(similarity.semantic_dedup(
+            emb, dim=64))
+    reg["sim_semantic_dedup"] = sim_semantic_dedup, _semdedup_sql(
+        "true", _banded_cte("it", "vec_id"))
 
-    o["sim_semantic_dedup"] = f"""
-WITH RECURSIVE it AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings),
-itb AS ({_banded_cte('it', 'vec_id')}),
-pairs AS (
-  SELECT a.id AS id_a, b.id AS id_b,
-         {_cos_sql('a.v', 'b.v')} AS cos_sim
-  FROM itb a JOIN itb b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id),
-cand AS (SELECT DISTINCT id_a, id_b FROM pairs WHERE cos_sim >= 0.4),
-edges AS (SELECT id_a AS u, id_b AS v FROM cand
-          UNION SELECT id_b, id_a FROM cand),
-reach AS (
-  SELECT u AS id, u AS r FROM edges
-  UNION
-  SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.id),
-comp AS (SELECT id, min(r) AS comp FROM reach GROUP BY id)
-SELECT CAST(e.vec_id AS BIGINT) AS vec_id,
-       CAST(coalesce(c.comp, e.vec_id) AS BIGINT) AS "group",
-       coalesce(c.comp, e.vec_id) = e.vec_id AS keep
-FROM embeddings e LEFT JOIN comp c ON e.vec_id = c.id
-"""
+    def sim_semantic_dedup_auto(spark, sf):
+        """SemDeDup under corpus-auto-sized LSH (round 5): the same
+        epsilon-grouping, with planes_per_band="auto" deriving
+        (bands, planes) from one corpus count via lsh_params_for.
+        The corpus is PINNED to vec_id < 200 so the derived grid —
+        (22 bands, 5 planes) at threshold 0.4 — is a static shape
+        the oracle restates exactly; bigger corpora exercise the
+        sizing in BENCH.md's sf1 probe, exactness lives here."""
+        emb = (load_table(spark, sf, "embeddings")
+               .filter(F.col("vec_id") < 200))
+        return _longify(similarity.semantic_dedup(
+            emb, dim=64, planes_per_band="auto"))
+
+    # the same SemDeDup chain over the pinned corpus, at the derived
+    # (22 bands, 5 planes) grid
+    reg["sim_semantic_dedup_auto"] = sim_semantic_dedup_auto, _semdedup_sql(
+        "vec_id < 200", " UNION ALL ".join(
+            f"SELECT vec_id AS id, v, {b} AS band, "
+            f"{_band_bucket_sql('v', b, 5)} AS bucket FROM it"
+            for b in range(22)))
+
+    def text_metrics(spark, sf):
+        """A7 + curation feature vector: token stats, quality,
+        language ID, fingerprints, and Gopher-style repetition
+        signals in ONE row-local projection (one scan, zero
+        shuffles) — the per-document feature row a training-data
+        curation job computes."""
+        return _longify(textstats.text_metrics(_docs(spark, sf)))
 
     sub_re = r"([0-9]+|[^\sA-Za-z0-9]+)"
     sub_repl = r" \1 "
     sub_expr = f"regexp_replace(text, '{sub_re}', '{sub_repl}', 'g')"
     sw_words = _WORDS.format(c=sub_expr)
-    stop_list = _sql_list(textstats.STOPWORDS)
-    def _quality_ctes(src: str) -> str:
-        """(doc_id, text) src → qm CTE with n/n_stop/n_dist — shared
-        by text_quality and curation_survivors."""
-        return f"""qw AS (SELECT doc_id, {words_c} AS w FROM {src}),
-m AS (SELECT doc_id, len(w) AS n,
-             len(list_filter(w, x -> list_contains({stop_list}, x))) AS n_stop,
-             len(list_distinct(w)) AS n_dist
-      FROM qw)"""
 
-    _QUALITY_EXPR = """round(CAST(0.4 AS DOUBLE) * least(n / CAST(50.0 AS DOUBLE), 1.0)
-             + CAST(0.3 AS DOUBLE)
-               * least(n_stop / greatest(n, 1) * 5, 1.0)
-             + CAST(0.3 AS DOUBLE) * (n_dist / greatest(n, 1)), 4)"""
-
-    lang_hits = []
-    for rank, lang in enumerate(textstats.LANG_ORDER):
-        ml = _sql_list(textstats.LANG_MARKERS[lang])
-        lang_hits.append(
-            f"len(list_filter(w, x -> list_contains({ml}, x))) AS h_{lang}")
-    keys = ", ".join(f"h_{l} * 100 - {r} AS k_{l}"
-                     for r, l in enumerate(textstats.LANG_ORDER))
-    maxk = "greatest(" + ", ".join(
-        f"k_{l}" for l in textstats.LANG_ORDER) + ")"
-    pred_case = "CASE " + " ".join(
-        f"WHEN k_{l} = {maxk} THEN '{l}'"
-        for l in textstats.LANG_ORDER) + " END"
-    hits_case = "CASE " + " ".join(
-        f"WHEN k_{l} = {maxk} THEN h_{l}"
-        for l in textstats.LANG_ORDER) + " END"
-    def _langid_ctes(src: str) -> str:
-        """(doc_id, text) src → k CTE with per-language keys — shared
-        by text_langid and curation_survivors."""
-        return f"""lw AS (SELECT doc_id, {_WORDS.format(c='lower(text)')} AS w FROM {src}),
-lh AS (SELECT doc_id, {', '.join(lang_hits)} FROM lw),
-k AS (SELECT doc_id, {keys},
-             h_en, h_es, h_fr, h_de, h_zh FROM lh)"""
-
-    o["text_metrics"] = f"""
+    reg["text_metrics"] = text_metrics, f"""
 WITH t AS (SELECT doc_id, text, {words_c} AS w,
            {sw_words} AS sw
            FROM documents),
@@ -7713,8 +7011,15 @@ JOIN qsel USING (doc_id) JOIN lsel USING (doc_id)
 JOIN fp USING (doc_id) JOIN rep USING (doc_id)
 """
 
+    def gopher_rules_docs(spark, sf):
+        """The Gopher rule-based quality filter (word-count band,
+        mean word length, symbol/bullet/ellipsis ratios, alphabetic
+        fraction, required stopwords) — one codegen projection, zero
+        shuffles; every band replayed verbatim in the oracle."""
+        return _longify(textstats.gopher_rules(_docs(spark, sf)))
+
     _lw_words = _WORDS.format(c="lower(text)")
-    o["gopher_rules_docs"] = f"""
+    reg["gopher_rules_docs"] = gopher_rules_docs, f"""
 WITH t AS (SELECT doc_id AS id, text, {words_c} AS w, {_lw_words} AS lw,
            list_filter(string_split(text, chr(10)),
                        l -> trim(l) <> '') AS ln
@@ -7761,24 +7066,98 @@ SELECT id, n_words,
 FROM m
 """
 
-    o["curation_survivors"] = f"""
-WITH {_near_corpus},
-{_MINHASH_CTES},
-dropped AS (
-  SELECT DISTINCT inter.id_b AS doc_id
-  FROM inter JOIN sz sa ON sa.id = inter.id_a
-             JOIN sz sb ON sb.id = inter.id_b
-  WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 4) >= 0.8),
-kept AS (SELECT doc_id, text FROM corpus
-         WHERE doc_id NOT IN (SELECT doc_id FROM dropped)),
-{_quality_ctes('kept')},
-qual AS (SELECT doc_id, {_QUALITY_EXPR} AS quality FROM m),
-{_langid_ctes('kept')},
-lang AS (SELECT doc_id, {pred_case} AS pred_lang FROM k)
-SELECT kept.doc_id, q.quality, l.pred_lang
-FROM kept JOIN qual q USING (doc_id) JOIN lang l USING (doc_id)
-WHERE q.quality >= 0.5 AND l.pred_lang = 'en'
+    def profile_documents(spark, sf):
+        """Deequ-style per-column profile of the ingest table in one
+        aggregation pass: row/null/distinct counts, completeness,
+        min/max per column."""
+        from ferenda_spark.operators import profile as prof
+        return prof.profile(
+            _docs(spark, sf),
+            ["doc_id", "text", "lang", "source", "n_chars"])
+    reg["profile_documents"] = profile_documents, _prof_union
+
+    def quantiles_documents(spark, sf):
+        """Exact interpolated percentiles (percentile_cont semantics)
+        per numeric column, one aggregation pass."""
+        from ferenda_spark.operators import profile as prof
+        return prof.numeric_quantiles(
+            _docs(spark, sf))
+    reg["quantiles_documents"] = quantiles_documents, "\nUNION ALL\n".join(
+        f"""SELECT '{c}' AS "column", CAST({p} AS DOUBLE) AS p,
+round(quantile_cont(CAST({c} AS DOUBLE), {p}), 6) AS value
+FROM documents"""
+        for c in ("doc_id", "n_chars") for p in (0.25, 0.5, 0.95))
+
+    def check_documents(spark, sf):
+        """Declarative constraint checks over one profile pass:
+        uniqueness of the id, completeness of every column, value
+        bounds, language diversity — pass/fail per constraint, never
+        a throw."""
+        from ferenda_spark.operators import profile as prof
+        return prof.check(_docs(spark, sf), DOC_CHECKS)
+    reg["check_documents"] = check_documents, f"""
+WITH p AS ({_prof_union}),
+c AS (SELECT check_id, "column", kind,
+             CAST(threshold AS DOUBLE) AS threshold
+      FROM (VALUES {_checks_rows})
+      AS c(check_id, "column", kind, threshold))
+SELECT c.check_id, c."column", c.kind, c.threshold,
+  round(CASE c.kind
+    WHEN 'complete' THEN p.completeness
+    WHEN 'unique' THEN CAST(p.n_distinct AS DOUBLE)
+    WHEN 'distinct_at_least' THEN CAST(p.n_distinct AS DOUBLE)
+    WHEN 'min_at_least' THEN TRY_CAST(p.min_value AS DOUBLE)
+    WHEN 'max_at_most' THEN TRY_CAST(p.max_value AS DOUBLE)
+  END, 6) AS actual,
+  coalesce(CASE c.kind
+    WHEN 'complete' THEN p.completeness >= c.threshold
+    WHEN 'unique' THEN p.n_distinct = (p.n_rows - p.n_null)
+                       AND p.n_null = 0
+    WHEN 'distinct_at_least' THEN p.n_distinct >= c.threshold
+    WHEN 'min_at_least' THEN TRY_CAST(p.min_value AS DOUBLE)
+                             >= c.threshold
+    WHEN 'max_at_most' THEN TRY_CAST(p.max_value AS DOUBLE)
+                            <= c.threshold
+  END, FALSE) AS passed
+FROM c JOIN p ON p."column" = c."column"
 """
+
+    def _boxes(spark, sf):
+        """Deterministic synthetic PDF-textbox table (the decode step
+        is a declared codec stub — operators/boxes.py docstring);
+        mirrored by _BOXES_SQL in the oracles."""
+        d = _docs(spark, sf).select("doc_id")
+        b = d.select("doc_id", F.explode(
+            F.sequence(F.lit(0), F.lit(19))).alias("i"))
+        i = F.col("i")
+        left = (F.when(i % 5 == 4, 320 + i)
+                .when(i % 7 == 0, 60 + i)
+                .otherwise(F.lit(100)))
+        top = F.when(i == 0, F.lit(10)).otherwise(80 + (i * 37) % 600)
+        size = (F.when(i % 10 == 1, 16)
+                .when((i % 10 == 2) & (F.col("doc_id") % 2 == 0), 12)
+                .when(i % 15 == 3, 5)
+                .otherwise(F.lit(10)))
+        fam = (F.when(i % 10 == 1, F.lit("Serif-Bold"))
+               .when((i % 10 == 2) & (F.col("doc_id") % 2 == 0),
+                     F.lit("Serif-Italic"))
+               .otherwise(F.lit("Serif")))
+        return b.select(
+            "doc_id", (i % 4).alias("page_no"),
+            F.lit(600).alias("page_width"),
+            F.lit(800).alias("page_height"),
+            left.alias("left"), (left + 380).alias("right"),
+            top.alias("top"), (top + 12).alias("bottom"),
+            fam.alias("font_family"), size.alias("font_size"),
+            F.when(i == 0, 2).otherwise(40 + (i * 13) % 40)
+            .alias("n_chars"))
+
+    def pdf_margin_metrics(spark, sf):
+        """A9: char-weighted margin modes + significance-threshold
+        header/footer zones over the textbox table."""
+        from ferenda_spark.operators import boxes as boxes_op
+        return _longify(boxes_op.margin_metrics(_boxes(spark, sf)))
+
     _BOXES_SQL = """
 b AS (
   SELECT doc_id, i,
@@ -7802,7 +7181,7 @@ b AS (
         FROM documents))
 """
 
-    o["pdf_margin_metrics"] = f"""
+    reg["pdf_margin_metrics"] = pdf_margin_metrics, f"""
 WITH {_BOXES_SQL},
 lm AS (SELECT doc_id, lft AS leftmargin FROM (
   SELECT doc_id, lft,
@@ -7836,7 +7215,12 @@ LEFT JOIN lm USING (doc_id) LEFT JOIN rm USING (doc_id)
 LEFT JOIN tz USING (doc_id) LEFT JOIN bz USING (doc_id)
 """
 
-    o["pdf_style_metrics"] = f"""
+    def pdf_style_metrics(spark, sf):
+        """A8: style hierarchy (default/h1..h3/footnoteref) by
+        char-weighted font usage."""
+        from ferenda_spark.operators import boxes as boxes_op
+        return _longify(boxes_op.style_metrics(_boxes(spark, sf)))
+    reg["pdf_style_metrics"] = pdf_style_metrics, f"""
 WITH {_BOXES_SQL},
 st AS (SELECT doc_id, fam, sz, sum(nc) AS w,
               CASE WHEN fam LIKE '%Bold%' THEN 2
@@ -7872,7 +7256,15 @@ FROM (
   UNION ALL SELECT doc_id, level, fam, sz FROM fn)
 """
 
-    o["fragments_udtf"] = """
+    def fragments_udtf(spark, sf):
+        """§2.11 UDTF surface: LATERAL word-chunk expansion."""
+        from ferenda_spark.functions import tablefns
+        tablefns.register(spark)
+        _docs(spark, sf).createOrReplaceTempView("docs_udtf_in")
+        return _longify(spark.sql(
+            "SELECT doc_id, f.frag_no, f.fragment "
+            "FROM docs_udtf_in, LATERAL chunk_words(text, 10) AS f"))
+    reg["fragments_udtf"] = fragments_udtf, """
 WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 c AS (SELECT doc_id,
              [array_to_string(ws[i*10+1 : i*10+10], ' ')
@@ -7885,14 +7277,42 @@ SELECT doc_id,
 FROM c
 """
 
-    o["url_canonical_dedup"] = """
+    def url_canonical_dedup(spark, sf):
+        """Canonical-URL dedup: five messy variants per page (case,
+        default port, trailing slash, param order, fragment) must
+        collapse to ONE canonical key; the oracle states the expected
+        canonical form independently."""
+        from ferenda_spark.functions.web import canonical_url_col
+        d = _docs(spark, sf)
+        k = (F.col("doc_id") % 100).cast("string")
+        m = F.floor(F.col("doc_id") / 100) % 5
+        messy = (
+            F.when(m == 0, F.concat(
+                F.lit("http://example.com/p/"), k, F.lit("?a=1&b=2")))
+            .when(m == 1, F.concat(
+                F.lit("HTTP://EXAMPLE.COM/p/"), k, F.lit("?a=1&b=2")))
+            .when(m == 2, F.concat(
+                F.lit("http://example.com:80/p/"), k, F.lit("?a=1&b=2")))
+            .when(m == 3, F.concat(
+                F.lit("http://example.com/p/"), k, F.lit("/?b=2&a=1")))
+            .otherwise(F.concat(
+                F.lit("http://example.com/p/"), k,
+                F.lit("?a=1&b=2#sec-3"))))
+        return _longify(
+            d.select(canonical_url_col(messy).alias("canonical_url"))
+            .groupBy("canonical_url")
+            .agg(F.count(F.lit(1)).alias("n_variants")))
+    reg["url_canonical_dedup"] = url_canonical_dedup, """
 SELECT 'http://example.com/p/' || (doc_id % 100) || '?a=1&b=2'
            AS canonical_url,
        CAST(count(*) AS BIGINT) AS n_variants
 FROM documents GROUP BY 1
 """
 
-    o["media_meta"] = """
+    def media_meta(spark, sf):
+        media = multimodal.attach_media(_docs(spark, sf))
+        return _longify(multimodal.media_metadata(media))
+    reg["media_meta"] = media_meta, """
 WITH m AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS n,
                   md5(text) AS content_md5 FROM documents),
 k AS (SELECT *, (['image', 'audio', 'video'])[CAST(n % 3 AS INT) + 1] AS kind
@@ -7907,22 +7327,69 @@ SELECT media_id, CAST(n AS BIGINT) AS n_bytes, content_md5, kind,
 FROM k
 """
 
-    o["streaming_hourly_events"] = """
+    def streaming_hourly_events(spark, sf):
+        e = load_table(spark, sf, "events")
+        return _longify(
+            e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.round(F.sum("value"), 2).alias("total_value"))
+            .select(F.col("w.start").cast("string").alias("hour"),
+                    "event_type", "n", "total_value"))
+    reg["streaming_hourly_events"] = streaming_hourly_events, """
 SELECT CAST(date_trunc('hour', ts) AS VARCHAR) AS hour, event_type,
        count(*) AS n, round(sum(value), 2) AS total_value
 FROM events GROUP BY 1, 2
 """
 
-    o["salted_join_suppliers"] = """
+    def salted_join_suppliers(spark, sf):
+        li = load_table(spark, sf, "lineitem").select(
+            F.col("l_suppkey").alias("s_suppkey"), "l_quantity")
+        s = load_table(spark, sf, "supplier").select("s_suppkey", "s_name")
+        joined = analytics.salted_join(li, s, "s_suppkey")
+        return _longify(
+            joined.groupBy("s_name")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.round(F.sum("l_quantity"), 2).alias("total_qty")))
+    reg["salted_join_suppliers"] = salted_join_suppliers, """
 SELECT s_name, count(*) AS n, round(sum(l_quantity), 2) AS total_qty
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
 GROUP BY s_name
 """
 
+    def first_success_events(spark, sf):
+        # J6 composite coalesce: per user, the first (lowest event_id)
+        # event that "succeeded" (value > 1), sources tried in order
+        e = load_table(spark, sf, "events")
+        return _longify(analytics.first_success(
+            e.select("user_id", "event_id", "event_type", "value"),
+            key="user_id", priority_col="event_id").withColumn(
+                "value", F.round("value", 2)))
+    reg["first_success_events"] = first_success_events, """
+SELECT user_id, event_id, event_type, round(value, 2) AS value
+FROM (SELECT user_id, event_id, event_type, value,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY event_id) AS rn
+      FROM events) WHERE rn = 1
+"""
+
+    def entity_link_fuzzy(spark, sf):
+        """J1 fuzzy phase, value-gated: the PUBLISHERS fixture
+        *declares* which variants must link (close, ratio ≥ 0.8) and
+        which must NOT (far) — the oracle is that declaration, so the
+        difflib cutoff semantics are checked against data designed
+        for it, not re-derived."""
+        from ferenda_spark.fixtures.pages import PUBLISHERS
+        rows = []
+        for canonical, close, far in PUBLISHERS:
+            rows.append((canonical,))
+            rows += [(v,) for v in close] + [(v,) for v in far]
+        mentions = spark.createDataFrame(rows, "label string")
+        ents = entities_df(spark).filter(F.col("kind") == "publisher")
+        return link_labels(mentions, ents).select("label", "entity_uri")
+
     # entity_link_fuzzy: the oracle is the PUBLISHERS declaration
     # itself (close variants link to the canonical uri, far variants
     # must come back null) — not a difflib re-derivation.
-    from ferenda_spark.fixtures.pages import PUBLISHERS, publisher_uri
     vals = []
     for canonical, close, far in PUBLISHERS:
         uri = publisher_uri(canonical)
@@ -7934,7 +7401,7 @@ GROUP BY s_name
             label.replace("'", "''"),
             "'" + uri + "'" if uri else "CAST(NULL AS VARCHAR)")
         for label, uri in vals)
-    o["entity_link_fuzzy"] = (
+    reg["entity_link_fuzzy"] = entity_link_fuzzy, (
         f"SELECT * FROM (VALUES {rows_sql}) AS t(label, entity_uri)")
 
-    return o
+    return reg

@@ -1,9 +1,9 @@
 """Benchmark harness.
 
-Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+Default mode: time every registered query (__spark_entry__.registry())
+at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and print ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
 --scaling [N_DOCS [N [4N]]]: run the triple build on the same
 synthetic corpus at two parallelism levels (default N=1 and 4N=4 cores
@@ -25,143 +25,6 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-HEADLINE = [
-    "kg_edges",
-    "kg_citations_by_target",
-    "kg_closure",
-    "kg_sparql_annotations",
-    "kg_pagerank",
-    "kg_structure_tree",
-    "fulltext_search_docs",
-    "q1_pricing",
-    "q5_local_supplier",
-    "topk_orders",
-    "facet_stats_cube",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_components",
-    "dedup_keepfirst_docs",
-    "dedup_token_spans_docs",
-    "quality_classifier_docs",
-    "domain_stats_docs",
-    "decontaminate_docs",
-    "patch_documents",
-    "pdf_style_metrics",
-    "url_canonical_dedup",
-    "sim_topk_cosine",
-    "sim_lsh_topk",
-    "sim_ivf_topk",
-    "sim_semantic_dedup",
-    "kg_regen_dependents",
-    "kg_sparql_subdocs",
-    "kg_sparql_topcited",
-    "curation_pipeline_v3",
-    "text_metrics",
-    "fulltext_fielded",
-    "fulltext_api_page",
-    "media_meta",
-    "sessionize_events",
-    "asof_purchase_click",
-    "streaming_hourly_events",
-    "salted_join_suppliers",
-    # round-4-late additions
-    "warc_extract_text",
-    "training_shards_docs",
-    "curation_pipeline_v4",
-    "dedup_incremental_docs",
-    "kg_rdfs_entailed",
-    "kg_sameas_canonical",
-    "rdf_ntriples_roundtrip",
-    "kg_owl_properties",
-    "kg_sparql_entailed",
-    "decontaminate_bloom_docs",
-    "gopher_rules_docs",
-    "kg_void_description",
-    "kg_shacl_violations",
-    "profile_documents",
-    "check_documents",
-    "kg_sparql_aggregates",
-    "kg_degree_histogram",
-    "kg_sparql_graph_scoped",
-    "kg_class_partitions",
-    "quantiles_documents",
-    # session-4/5 graph + text additions
-    "kg_hits",
-    "kg_triangles",
-    "kg_linkpred",
-    "kg_communities",
-    "lm_perplexity_docs",
-    "anchor_text_docs",
-    "fulltext_bm25_docs",
-    "quota_sample_docs",
-    "robots_filter_docs",
-    "sitemap_discovery",
-    "fetch_schedule_docs",
-    "jsonld_extract_docs",
-    "kg_kcore",
-    "zorder_layout_docs",
-    "kg_cocitation",
-    "kg_fused_metadata",
-    "cdx_latest_capture",
-    "cdx_fetch_plan",
-    # session-6 webgraph additions
-    "redirect_resolution",
-    "kg_host_graph",
-    "graph_random_walks",
-    # session-7 additions
-    "kg_host_rank",
-    "crawl_churn_docs",
-    "microdata_extract_docs",
-    "kg_scc",
-    "kg_trustrank",
-    "url_templates_docs",
-    "kg_condensation",
-    "containment_docs",
-    "cms_heavy_hitters_docs",
-    "template_budget_docs",
-    "winnow_fingerprints_docs",
-    "kg_landmark_dist",
-    "wet_roundtrip_docs",
-    "kg_assortativity",
-    "canonical_docs",
-    "wat_links_docs",
-    "unicode_norm_docs",
-    "kg_class_links",
-    "revisit_schedule_docs",
-    "script_mix_docs",
-    "sim_pq_topk",
-    # session-8 additions
-    "rdfa_roundtrip_docs",
-    "head_meta_docs",
-    "canonical_declared_dedup",
-    "bpe_train_docs",
-    "bpe_encode_docs",
-    "main_content_docs",
-    "rss_discovery_docs",
-    "atom_roundtrip_events",
-    "curation_pipeline_v5",
-    "nb_classifier_docs",
-    "strip_paragraphs_docs",
-    "noindex_filter_docs",
-    "kg_harmonic_landmarks",
-    "langid_trained_docs",
-    "langid_classify_docs",
-    "hash_embed_docs",
-    "classifier_eval_docs",
-    "kg_metadata_triad",
-    "threshold_calibration_docs",
-    "meta_refresh_docs",
-    "anchor_alias_linking",
-    "text_neardup_hash",
-    "hreflang_clusters_docs",
-    # round-5 additions
-    "kg_sparql_regex_paths",
-    "kg_sparql_subquery",
-    "sim_semantic_dedup_auto",
-]
-
 
 def _spark(cpus: int):
     from ferenda_spark.session import get_spark
@@ -203,7 +66,7 @@ def run_default() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     import __spark_entry__ as entry_mod
     spark = _spark(cpus)
-    qs = {**entry_mod.queries(), **entry_mod.extra_queries()}
+    reg = entry_mod.registry()
     timings: dict[str, float] = {}
     kg_triples = 0
     canaries = []
@@ -215,8 +78,7 @@ def run_default() -> None:
     # clean pass rescues the measurement.
     for _pass in range(2):
         canaries.append(_mp_canary())
-        for name in HEADLINE:
-            fn = qs[name]
+        for name, (fn, _) in reg.items():
             spark.catalog.clearCache()
             t0 = time.time()
             df = fn(spark, sf_dir)
@@ -230,7 +92,7 @@ def run_default() -> None:
     total = round(sum(timings.values()), 3)
     kg_tps = round(kg_triples / timings["kg_edges"], 1) if kg_triples else 0
     print(json.dumps({
-        "metric": "headline_queries_total",
+        "metric": "registered_queries_total",
         "value": total,
         "unit": "sec",
         "queries": timings,

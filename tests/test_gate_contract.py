@@ -1,17 +1,19 @@
-"""The driver-gate contract: exactly 50 curated gates, every
-registered query oracle-backed, names stable.
+"""The query registry and the driver-gate contract derived from it.
 
-The driver value-checks the FIRST 50 queries() entries against
-oracle_sql() — a GATE_ORDER typo (a name that is not a registered
-query, a gate without an oracle, a 49- or 51-entry list) silently
-weakens the round's correctness evidence.  Pin it."""
+The driver value-checks the first 50 queries() entries against
+oracle_sql().  Both are projections of registry(), which pairs every
+builder with its oracle, so a query without an oracle cannot be
+written.  A GATE_ORDER typo (an unregistered name, a duplicate, a 49-
+or 51-entry list) would still silently weaken the gate evidence:
+pin it."""
 
 import importlib.util
 import sys
 from pathlib import Path
 
+REPO = Path(__file__).resolve().parent.parent
 # the entry module of the checkout this test file belongs to
-ENTRY = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+ENTRY = REPO / "__spark_entry__.py"
 
 
 def _entry():
@@ -25,34 +27,27 @@ def _entry():
     return m
 
 
+def test_every_entry_pairs_a_builder_with_an_oracle():
+    for name, (fn, sql) in _entry().registry().items():
+        assert callable(fn), name
+        assert isinstance(sql, str) and sql.strip(), name
+
+
 def test_gate_window_is_exactly_50_oracle_backed():
     e = _entry()
+    reg = e.registry()
     assert len(e.GATE_ORDER) == 50
     assert len(set(e.GATE_ORDER)) == 50, "duplicate gate names"
-    q = e.queries()
-    o = e.oracle_sql()
-    assert list(q) == list(e.GATE_ORDER)
-    missing = [n for n in q if n not in o]
-    assert not missing, f"gates without oracles: {missing}"
-
-
-def test_every_registered_query_has_an_oracle():
-    e = _entry()
-    allq = e._all_queries()
-    allo = {**e.oracle_sql(), **e.extra_oracle_sql()}
-    unknown = [n for n in e.GATE_ORDER if n not in allq]
+    unknown = [n for n in e.GATE_ORDER if n not in reg]
     assert not unknown, f"GATE_ORDER names not registered: {unknown}"
-    # every query value-checkable: an entry without an oracle only
-    # gets the weaker rows-only check — keep the set empty
-    missing = sorted(set(allq) - set(allo))
-    assert not missing, f"queries without oracles: {missing}"
-    orphans = sorted(set(allo) - set(allq))
-    assert not orphans, f"oracles without queries: {orphans}"
+    assert {"kg_extract_text", "kg_edges"} <= set(e.GATE_ORDER)
+    assert list(e.queries()) == list(e.GATE_ORDER)
+    assert list(e.oracle_sql()) == list(e.GATE_ORDER)
 
 
-def test_bench_headline_names_are_registered():
-    e = _entry()
-    import bench
-    allq = e._all_queries()
-    unknown = [n for n in bench.HEADLINE if n not in allq]
-    assert not unknown, f"bench headline names not registered: {unknown}"
+def test_sf1_bench_names_are_registered():
+    sys.path.insert(0, str(REPO / "tools"))
+    import bench_sf1
+    reg = _entry().registry()
+    unknown = [n for n in bench_sf1.DEFAULT if n not in reg]
+    assert not unknown, f"bench_sf1 names not registered: {unknown}"

@@ -1,9 +1,9 @@
 """The oracle harness goes red when the code is wrong.
 
-``tools/check_queries.compare`` runs a named query on Spark and its
-DuckDB oracle.  Each case below checks one query family twice: as
-shipped it must compare OK, and with one policy constant of the code
-under test mutated it must FAIL.  A harness that stays green under
+``tools/check_queries.compare`` runs a registry entry's builder on
+Spark and its oracle on DuckDB.  Each case below checks one query
+family twice: as shipped it must compare OK, and with one policy
+constant of the code under test mutated it must FAIL.  A harness that stays green under
 these mutations would prove nothing about the code it gates.
 """
 
@@ -23,13 +23,10 @@ pytestmark = pytest.mark.skipif(not SF.is_dir(),
 
 
 def _failures(spark, name):
-    entry = check_queries.entry_mod
-    qs = {**entry.queries(), **entry.extra_queries()}
-    oracles = {**entry.oracle_sql(), **entry.extra_oracle_sql()}
+    entry = check_queries.entry_mod.registry()[name]
     con = check_queries.oracle_connection(str(SF))
     try:
-        return check_queries.compare(spark, con, str(SF),
-                                     {name: qs[name]}, oracles)
+        return check_queries.compare(spark, con, str(SF), {name: entry})
     finally:
         con.close()
 

@@ -257,6 +257,38 @@ def _site_value(call, name, index, default):
     return _literal(default)
 
 
+def _calls(tree):
+    """(called name, call) for every call in ``tree``.  A class's
+    ``__init__`` is keyed under the class name, so a
+    ``super().__init__(...)`` call counts as a call of each base class."""
+    supers = {}
+    # ast.walk visits an outer class before the classes nested in it,
+    # so a call inside a nested class ends up keyed to the inner bases
+    for cls in ast.walk(tree):
+        if isinstance(cls, ast.ClassDef):
+            bases = [b.id if isinstance(b, ast.Name) else b.attr
+                     for b in cls.bases
+                     if isinstance(b, (ast.Name, ast.Attribute))]
+            for node in ast.walk(cls):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "__init__"
+                        and isinstance(node.func.value, ast.Call)
+                        and isinstance(node.func.value.func, ast.Name)
+                        and node.func.value.func.id == "super"):
+                    supers[node] = bases
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        if call in supers:
+            for base in supers[call]:
+                yield base, call
+            continue
+        f = call.func
+        yield (f.id if isinstance(f, ast.Name)
+               else f.attr if isinstance(f, ast.Attribute) else None), call
+
+
 def one_value_options(repo, package=PACKAGE, roots=None):
     """{parameter dotted below ``package``: its one literal value} for
     every defaulted parameter of a reached package function or method
@@ -294,12 +326,7 @@ def one_value_options(repo, package=PACKAGE, roots=None):
 
     values = {}
     for tree in program:
-        for call in ast.walk(tree):
-            if not isinstance(call, ast.Call):
-                continue
-            f = call.func
-            name = (f.id if isinstance(f, ast.Name)
-                    else f.attr if isinstance(f, ast.Attribute) else None)
+        for name, call in _calls(tree):
             for fq, params in defs.get(name, ()):
                 for pname, index, default in params:
                     values.setdefault(f"{fq}.{pname}".lstrip("."), set()) \
@@ -369,13 +396,18 @@ def test_scanner_reports_exactly_the_one_value_options(tmp_path):
     (pkg / "__init__.py").write_text("")
     (pkg / "lib.py").write_text(
         "def op(df, varied=1, never=2, same=3):\n    return df\n\n"
-        "def fed(df, opt=4):\n    return df\n")
+        "def fed(df, opt=4):\n    return df\n\n"
+        "class A:\n    def __init__(self, x=1):\n        self.x = x\n\n"
+        "class B(A):\n    def __init__(self):\n"
+        "        super().__init__(x=5)\n")
     root = tmp_path / "main.py"
+    # A.__init__.x takes 3 here and 5 through B's super().__init__
     root.write_text(
-        "import sys\nfrom pkg.lib import fed, op\n"
+        "import sys\nfrom pkg.lib import A, B, fed, op\n"
         "op(0, varied=len(sys.argv), same=7)\n"
         "op(0, 5, same=7)\n"
         "kw = {'opt': 9}\n"
-        "fed(0, **kw)\n")
+        "fed(0, **kw)\n"
+        "A(x=3)\nB()\n")
     assert one_value_options(tmp_path, "pkg", [root]) == {
         "lib.op.never": "2", "lib.op.same": "7"}

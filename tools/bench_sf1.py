@@ -35,7 +35,7 @@ DEFAULT = [
 def main() -> None:
     sf1_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
     names = sys.argv[2:] or DEFAULT
-    qs = {**entry_mod.queries(), **entry_mod.extra_queries()}
+    reg = entry_mod.registry()
     spark = get_spark(app_name="bench-sf1", master="local[32]",
                       shuffle_partitions=32)
     rows = {}
@@ -50,7 +50,7 @@ def main() -> None:
         print(f"PASS level={level} canary={canary}", flush=True)
         for name in names:
             t0 = time.time()
-            _force(qs[name](spark, sf_dir))
+            _force(reg[name][0](spark, sf_dir))
             dt = round(time.time() - t0, 2)
             rows.setdefault(name, {})[level] = dt
             print(f"Q {level} {name} {dt}s", flush=True)

@@ -1,9 +1,9 @@
 """Local stand-in for the driver's correctness gate.
 
-Runs every __spark_entry__.queries() entry on Spark and its
-oracle_sql() on DuckDB over the same parquet tables, then compares
-row count, sorted column names, and an order-insensitive multiset of
-normalized rows. Usage:
+Runs every __spark_entry__.registry() builder on Spark and its oracle
+SQL on DuckDB over the same parquet tables, then compares row count,
+sorted column names, and an order-insensitive multiset of normalized
+rows. Usage:
 
     python tools/check_queries.py [sf_dir] [query ...]
 """
@@ -53,13 +53,9 @@ def main():
                       shuffle_partitions=8)
     con = oracle_connection(sf_dir)
 
-    # the driver only sees queries()/oracle_sql() (the 50 gates);
-    # locally we verify the extra_* entries too
-    qs = {**entry_mod.queries(), **entry_mod.extra_queries()}
-    oracles = {**entry_mod.oracle_sql(), **entry_mod.extra_oracle_sql()}
     failures = compare(spark, con, sf_dir,
-                       {n: f for n, f in qs.items()
-                        if not only or n in only}, oracles)
+                       {n: e for n, e in entry_mod.registry().items()
+                        if not only or n in only})
 
     print("\n==", "ALL OK" if not failures else f"FAILURES: {failures}")
     sys.exit(1 if failures else 0)
@@ -74,12 +70,12 @@ def oracle_connection(sf_dir):
     return con
 
 
-def compare(spark, con, sf_dir, qs, oracles):
-    """Run each named query of ``qs`` on Spark and its ``oracles``
-    entry on DuckDB, print one OK/FAIL/ROWS-ONLY line per query and
-    return the names that failed."""
+def compare(spark, con, sf_dir, entries):
+    """Run each registry entry's builder on Spark and its oracle SQL on
+    DuckDB, print one OK/FAIL line per query and return the names that
+    failed."""
     failures = []
-    for name, fn in qs.items():
+    for name, (fn, sql) in entries.items():
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -89,12 +85,8 @@ def compare(spark, con, sf_dir, qs, oracles):
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
             continue
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(srows)} rows "
-                  f"({time.time() - t0:.1f}s)")
-            continue
         try:
-            cur = con.execute(oracles[name])
+            cur = con.execute(sql)
             dcols = [d[0] for d in cur.description]
             drows = cur.fetchall()
         except Exception as e:

@@ -1,4 +1,4 @@
-"""Strict dtype audit of every driver-gated oracle vs its Spark schema.
+"""Strict dtype audit of every registered oracle vs its Spark schema.
 
 The driver's value hash is type-sensitive in ways the normalizing
 multiset compare in check_queries.py is not: DuckDB silently widening
@@ -6,14 +6,11 @@ an aggregate (``sum(BIGINT) -> HUGEINT`` — the round-1 sessionize and
 round-2 fulltext reds) or reading a parquet column narrower than the
 Spark plan emits (INTEGER vs bigint) passes locally and fails the
 gate.  This audit compares the DuckDB relation's column types against
-the Spark DataFrame schema for every queries()/oracle_sql() pair and
-fails on any column whose engine types are not equivalent.
+the Spark DataFrame schema for every registry() entry, so a query is
+clean before any rotation puts it in the gate window, and fails on
+any column whose engine types are not equivalent.
 
-Usage:  python tools/dtype_audit.py [sf_dir] [--all]
-
-``--all`` audits EVERY registered query (extras included), not just
-the 50 driver gates - catching HUGEINT-class drift in extras before
-a future rotation puts them in a window.
+Usage:  python tools/dtype_audit.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -44,9 +41,7 @@ EQUIV = {
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--all"]
-    all_queries = "--all" in sys.argv[1:]
-    sf = args[0] if args else "/root/testdata/sf0.01"
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="dtype-audit", master="local[8]",
                       shuffle_partitions=8)
     con = duckdb.connect()
@@ -54,15 +49,9 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
     bad = []
-    if all_queries:
-        oracles = {**entry_mod.oracle_sql(),
-                   **entry_mod.extra_oracle_sql()}
-        qs = {**entry_mod.queries(), **entry_mod.extra_queries()}
-    else:
-        oracles = entry_mod.oracle_sql()
-        qs = entry_mod.queries()
-    for name, sql in oracles.items():
-        sdf = qs[name](spark, sf)
+    reg = entry_mod.registry()
+    for name, (fn, sql) in reg.items():
+        sdf = fn(spark, sf)
         stypes = {f.name: f.dataType.simpleString()
                   for f in sdf.schema.fields}
         rel = con.sql(sql)
@@ -75,8 +64,7 @@ def main() -> int:
             if dtypes[c] not in EQUIV.get(st, {st.upper()}):
                 bad.append((name, c, st, dtypes[c]))
 
-    print(f"AUDITED {len(oracles)} "
-          f"{'registered' if all_queries else 'gate'} queries")
+    print(f"AUDITED {len(reg)} registered queries")
     for b in bad:
         print("MISMATCH", *b)
     print("CLEAN" if not bad else f"{len(bad)} mismatches")

@@ -4,10 +4,10 @@ one exit code.
     python tools/gate.py [sf_dir] [--skip-pytest]
 
 Stages (each timed, each loud):
-  1. dtype audit     — oracle result dtypes match Spark gate schemas
-                       (tools/dtype_audit.py) for the 50 driver gates
-  2. query oracles   — every queries() + extra_queries() entry vs its
-                       DuckDB oracle at sf_dir (tools/check_queries.py)
+  1. dtype audit     — oracle result dtypes match Spark schemas for
+                       every registered query (tools/dtype_audit.py)
+  2. query oracles   — every registered query vs its DuckDB oracle
+                       (tools/check_queries.py), both at sf_dir
   3. pytest          — the full tests/ suite, -x -q
 
 Exit 0 only when ALL stages pass; per-stage status lines are tagged
@@ -42,7 +42,7 @@ def main() -> None:
     skip_pytest = "--skip-pytest" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     py = sys.executable
-    ok = _run("dtype-audit", [py, "tools/dtype_audit.py"])
+    ok = _run("dtype-audit", [py, "tools/dtype_audit.py", sf_dir])
     ok = _run("query-oracles", [py, "tools/check_queries.py",
                                 sf_dir]) and ok
     if not skip_pytest:
