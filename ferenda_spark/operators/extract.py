@@ -1,9 +1,22 @@
 """Extract stage: HTML bytes → text + header k/v + section rows.
 
 The single Python-side stage of the pipeline, run as ``mapInPandas``
-(Arrow batches; the parser class is instantiated per *task*, rows are
-processed vectorized per batch — no per-row Python at the Spark API
-layer).
+(Arrow batches, rows parsed in a loop per batch — no per-row Python at
+the Spark API layer).
+
+``parse_page`` reads a page with one compiled regex, ``_TOKEN_RE``,
+whose ``finditer`` pass yields start, end and self-closing tags and
+skips comments, declarations, marked sections and processing
+instructions; the text between tags is ``html.unescape``d, and the raw
+text of script and style elements is skipped to its end tag. A small
+state machine over those events keeps what the text needs: block
+elements, ``div`` ``about``/``class``, ``head``/``body`` and the
+DROP_TAGS subtrees. It reads markup, malformed markup included, as the
+stdlib's tolerant ``html.parser`` did, at about half the CPU time
+(tests/test_parse_page_differential.py holds that version and compares
+the two). Where that parser raised, on a ``<![`` without a
+marked-section keyword and on a ``div`` ``about`` without a value, this
+one reads a bogus comment and an empty value.
 
 Semantics are modeled on the reference's soup → element-tree → plain
 text chain (/root/reference/ferenda/elements/html.py:23-71
@@ -20,7 +33,7 @@ BASELINE per-row invariant.
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
+from html import unescape
 from typing import Iterator
 
 import pandas as pd
@@ -50,134 +63,228 @@ EXTRACT_SCHEMA = (
 )
 
 
-class _PageParser(HTMLParser):
-    """Streaming HTML parser producing (fragment-tagged) text chunks.
+def _ci(word: str) -> str:
+    """An ASCII-only case-insensitive pattern for ``word`` (``re.I``
+    would also match ``ſ`` for ``s``)."""
+    return "".join(f"[{c.lower()}{c.upper()}]" for c in word)
 
-    Chunks are the texts of block elements (p, h1-h6, li) inside
-    <body>, with DROP_TAGS subtrees removed. Each chunk is tagged with
-    the section ordinal of the nearest enclosing ``about="#S..."``
-    container (None for document-level chunks, "header" for chunks in
-    a ``class="header"`` div).
+
+# One attribute of a start tag: a name, an optional value (quoted, or
+# bare up to whitespace or ">"), then separators.
+_ATTR_NAME = r"""(?<=['"\s/])[^\s/>][^\s/=>]*"""
+_ATTR_VALUE = r"""'[^']*'|"[^"]*"|(?!['"])[^>\s]*"""
+_ATTR_SEP = r"(?:\s|/(?!>))*"
+_ATTR = rf"{_ATTR_NAME}(?:\s*=+\s*(?:{_ATTR_VALUE}))?{_ATTR_SEP}"
+_ATTR_RE = re.compile(rf"({_ATTR_NAME})(\s*=+\s*({_ATTR_VALUE}))?{_ATTR_SEP}")
+_MARKED = "|".join(map(_ci, ("temp", "cdata", "ignore", "include", "rcdata")))
+_MS_MARKED = "|".join(map(_ci, ("if", "else", "endif")))
+_NAME_END = r"(?![-_.a-zA-Z0-9])"
+
+# Every markup token, tried at each "<" in this order; text between
+# tokens is data.
+# - ``start``: a start tag (``tag`` name, ``lead`` separators, ``attrs``,
+#   ``close`` ">" or "/>"). Without a close it is a malformed tag,
+#   literal text up to the character that ends it.
+# - ``endtag``: an end tag's ``end``/``end2`` name; with neither it is
+#   an ignored "</>" or bogus comment.
+# - comments, marked sections, declarations and processing
+#   instructions: ignored.
+# - ``text``: a construct left open ("<!-- x", '<a href="'), data up to
+#   the next ">". A "<" followed by anything else is data.
+_TOKEN_RE = re.compile(
+    r"<(?:"
+    r"(?P<start>(?>(?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*)(?P<lead>[\s/]*)"
+    r"(?P<attrs>(?:" + _ATTR + r")*)\s*)"
+    r"(?:(?P<close>/?>)|(?=[^a-zA-Z=/>])))"
+    r"|(?P<endtag>/(?:\s*(?P<end>[a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+    r"|(?P<end2>[a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>|[^>]*>))"
+    r"|!--[\s\S]*?--\s*>"
+    r"|!\[(?:" + _MARKED + ")" + _NAME_END + r"[\s\S]*?\]\s*\]\s*>"
+    r"|!\[(?:" + _MS_MARKED + ")" + _NAME_END + r"[\s\S]*?\]\s*>"
+    r"|!(?!--|\[(?:" + _MARKED + "|" + _MS_MARKED + ")" + _NAME_END
+    + r")[^>]*>"
+    r"|\?[^>]*>"
+    r"|(?P<text>[a-zA-Z/!?][^>]*>)"
+    r")")
+# the end tag of a script or style element's raw text
+_RAW_END_RE = {tag: re.compile(r"</\s*" + _ci(tag) + r"\s*>")
+               for tag in ("script", "style")}
+
+_START, _END, _DATA = range(3)
+
+
+def _markup(text: str) -> Iterator[tuple[int, str, re.Match | None]]:
+    """The page as (kind, value, match) events in document order:
+    ``_START`` (lower-cased tag, its token), ``_END`` (lower-cased tag)
+    and ``_DATA`` (text, unescaped; a malformed start tag reads as its
+    own text, kept as written).
+
+    A self-closing tag yields its start and its end. The raw text of a
+    script or style element is skipped to its end tag, or to the end of
+    the page when it has none."""
+    pos, n = 0, len(text)
+    while True:
+        for m in _TOKEN_RE.finditer(text, pos):
+            i = m.start()
+            if i > pos:
+                yield _DATA, unescape(text[pos:i]), None
+            pos = m.end()
+            kind = m.lastgroup
+            if kind == "start":
+                close = m.group("close")
+                if close is None:
+                    yield _DATA, m.group(), None
+                    continue
+                tag = m.group("tag").lower()
+                yield _START, tag, m
+                # "<br/>" self-closes: a "/" before ">" that no
+                # attribute value took
+                if close == "/>" or (m.start("attrs") == m.end("attrs")
+                                     and m.group("lead").endswith("/")):
+                    yield _END, tag, None
+                elif tag in _RAW_END_RE:
+                    e = _RAW_END_RE[tag].search(text, pos)
+                    if e is None:
+                        return
+                    yield _END, tag, None
+                    pos = e.end()
+                    break  # tokenize on from the end tag
+            elif kind == "endtag":
+                tag = m.group("end") or m.group("end2")
+                if tag is not None:
+                    yield _END, tag.lower(), None
+            elif kind == "text":
+                yield _DATA, unescape(m.group()), None
+        else:
+            if pos < n:
+                yield _DATA, unescape(text[pos:]), None
+            return
+
+
+def _attrs(text: str, start: int, end: int) -> dict:
+    """The attributes of a start tag whose attribute run is
+    ``text[start:end]``: lower-cased names, unquoted and unescaped
+    values, ``None`` for a name without a value; the last of a
+    repeated name wins."""
+    attrs = {}
+    while start < end:
+        m = _ATTR_RE.match(text, start)
+        name, rest, value = m.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        if value:
+            value = unescape(value)
+        attrs[name.lower()] = value
+        start = m.end()
+    return attrs
+
+
+def _page_chunks(text: str) -> list[tuple[str | None, bool, str]]:
+    """(section ordinal, is_header, normalized chunk) for each text
+    chunk of an HTML page, in reading order.
+
+    Chunks are the texts of block elements (p, h1-h6, li) outside
+    <head>, with DROP_TAGS subtrees removed. Each chunk is tagged with
+    the section ordinal of the nearest enclosing ``about="#S..."`` div
+    (None for document-level chunks) and whether a ``class="header"``
+    div encloses it. Blocks still open at the end of a truncated page
+    end there.
     """
+    # body content is implicit per the HTML spec (the <body> tag is
+    # optional and missing from plenty of truncated real-web pages):
+    # collect everywhere EXCEPT inside <head>
+    in_head = False
+    in_body = True
+    skip = 0
+    # stack of open block-element text buffers (blocks nest: li > p;
+    # a single buffer dropped the outer block's text)
+    blocks: list[list[str]] = []
+    # div kinds: ("sec", ordinal) | ("hdr", None) | ("plain", None)
+    divs: list[tuple[str, str | None]] = []
+    section: str | None = None
+    in_header = False
+    chunks: list[tuple[str | None, bool, str]] = []
 
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        # body content is implicit per the HTML spec (the <body> tag
-        # is optional and missing from plenty of truncated real-web
-        # pages) — collect everywhere EXCEPT inside <head>
-        self.in_head = False
-        self.in_body = True
-        self.skip_depth = 0
-        # stack of open block-element text buffers (blocks nest:
-        # li > p); a single buffer dropped the outer block's text
-        self.block_stack: list[list[str]] = []
-        # div kinds: ("sec", ordinal) | ("hdr", None) | ("plain", None)
-        self.div_stack: list[tuple[str, str | None]] = []
-        self.current_section: str | None = None
-        self.in_header_div = False
-        self.chunks: list[tuple[str | None, bool, str]] = []
-        # (section_ordinal, is_header, normalized_chunk)
-
-    def _collecting(self) -> bool:
-        return self.in_body and not self.in_head and not self.skip_depth
-
-    def _emit(self, raw: str) -> None:
+    def emit(raw: str) -> None:
         chunk = normalize_space(clean_xml_chars(strip_backspace(raw)))
         if chunk:
-            self.chunks.append(
-                (self.current_section, self.in_header_div, chunk))
+            chunks.append((section, in_header, chunk))
 
-    def handle_starttag(self, tag, attrs):
-        if tag == "head":
-            self.in_head = True
-            return
-        if tag == "body":
-            self.in_head = False
-            self.in_body = True
-            return
-        if tag in DROP_TAGS:
-            self.skip_depth += 1
-            return
-        if not self._collecting():
-            return
-        if tag == "div":
-            a = dict(attrs)
-            about = a.get("about", "")
-            if about.startswith("#S"):
-                self.div_stack.append(("sec", about[2:]))
-                self.current_section = about[2:]
-            else:
-                kind = "hdr" if a.get("class") == "header" else "plain"
-                self.div_stack.append((kind, None))
-                if kind == "hdr":
-                    self.in_header_div = True
-            return
-        if tag in BLOCK_TAGS:
-            if self.block_stack and self.block_stack[-1]:
-                # a block opening inside a block: flush the outer
-                # prefix as its own chunk FIRST so chunks keep
-                # reading order ("intro" before the nested "body",
-                # the reference's as_plaintext order)
-                self._emit("".join(self.block_stack[-1]))
-                self.block_stack[-1] = []
-            self.block_stack.append([])
-
-    def handle_endtag(self, tag):
-        if tag == "head":
-            self.in_head = False
-            return
-        if tag == "body":
-            self.in_body = False
-            return
-        if tag in DROP_TAGS:
-            self.skip_depth = max(0, self.skip_depth - 1)
-            return
-        # end tags INSIDE a dropped subtree must not touch any stack
-        # (HTMLParser only CDATA-modes script/style, so children of
-        # font/map/center still stream through here)
-        if not self.in_body or self.in_head or self.skip_depth:
-            return
-        if tag == "div" and self.div_stack:
-            kind, _ = self.div_stack.pop()
-            if kind == "sec":
-                self.current_section = next(
-                    (v for k, v in reversed(self.div_stack) if k == "sec"),
-                    None)
-            elif kind == "hdr":
-                # header-ness ends only when no header div remains
-                # open (a nested plain div must NOT clear it)
-                self.in_header_div = any(
-                    k == "hdr" for k, _ in self.div_stack)
-            return
-        if tag in BLOCK_TAGS and self.block_stack:
-            self._emit("".join(self.block_stack.pop()))
-
-    def handle_data(self, data):
-        if self._collecting() and self.block_stack:
-            self.block_stack[-1].append(data)
-
-    def flush(self) -> None:
-        """Finalize unterminated blocks at EOF (truncated/invalid
-        real-web HTML must still yield its text)."""
-        while self.block_stack:
-            self._emit("".join(self.block_stack.pop()))
+    for kind, value, m in _markup(text):
+        collecting = in_body and not in_head and not skip
+        if kind == _DATA:
+            if collecting and blocks:
+                blocks[-1].append(value)
+        elif kind == _START:
+            if value == "head":
+                in_head = True
+            elif value == "body":
+                in_head = False
+                in_body = True
+            elif value in DROP_TAGS:
+                skip += 1
+            elif not collecting:
+                pass
+            elif value == "div":
+                a = _attrs(text, m.start("attrs"), m.end("attrs"))
+                about = a.get("about") or ""
+                if about.startswith("#S"):
+                    divs.append(("sec", about[2:]))
+                    section = about[2:]
+                elif a.get("class") == "header":
+                    divs.append(("hdr", None))
+                    in_header = True
+                else:
+                    divs.append(("plain", None))
+            elif value in BLOCK_TAGS:
+                if blocks and blocks[-1]:
+                    # a block opening inside a block: flush the outer
+                    # prefix as its own chunk FIRST so chunks keep
+                    # reading order ("intro" before the nested "body",
+                    # the reference's as_plaintext order)
+                    emit("".join(blocks[-1]))
+                    blocks[-1] = []
+                blocks.append([])
+        elif value == "head":
+            in_head = False
+        elif value == "body":
+            in_body = False
+        elif value in DROP_TAGS:
+            skip = max(0, skip - 1)
+        elif not collecting:
+            # end tags INSIDE a dropped subtree must not touch any
+            # stack (children of font/map/center are markup)
+            pass
+        elif value == "div":
+            if divs:
+                div_kind, _ = divs.pop()
+                if div_kind == "sec":
+                    section = next(
+                        (v for k, v in reversed(divs) if k == "sec"), None)
+                elif div_kind == "hdr":
+                    # header-ness ends only when no header div remains
+                    # open (a nested plain div must NOT clear it)
+                    in_header = any(k == "hdr" for k, _ in divs)
+        elif value in BLOCK_TAGS and blocks:
+            emit("".join(blocks.pop()))
+    while blocks:
+        emit("".join(blocks.pop()))
+    return chunks
 
 
 def parse_page(html_bytes: bytes) -> dict:
     """Parse one page's bytes into text / title / header / sections."""
-    parser = _PageParser()
-    parser.feed(html_bytes.decode("utf-8", errors="replace"))
-    parser.close()
-    parser.flush()
-
-    text = " ".join(c for _, _, c in parser.chunks)
+    chunks = _page_chunks(html_bytes.decode("utf-8", errors="replace"))
+    text = " ".join(c for _, _, c in chunks)
     header: dict[str, str] = {}
     title = None
     preamble: list[str] = []  # doc-level (non-header, non-section) chunks
     sections: list[dict] = []
     sec_index: dict[str, dict] = {}
 
-    for ordinal, in_header, chunk in parser.chunks:
+    for ordinal, in_header, chunk in chunks:
         if in_header and ordinal is None:
             m = _HEADER_KV_RE.match(chunk)
             if m:

@@ -90,7 +90,8 @@ def test_parser_malformed_realweb_shapes():
     """Parser robustness on shapes the synthetic fixture never emits
     but the open web does — each was a real bug:"""
     # 1. an end tag inside a DROP_TAGS subtree must not pop the
-    #    section stack (HTMLParser streams children of center/font)
+    #    section stack (only script/style content is raw text; the
+    #    children of center/font are markup the tokenizer reads)
     p = parse_page(
         b'<html><body><div about="#S1"><p>1. Sec</p>'
         b'<center><div><p>ad</p></div></center>'

@@ -5,21 +5,27 @@ Spark and its oracle on DuckDB.  Each case below checks one query
 family twice: as shipped it must compare OK, and with one policy
 constant of the code under test mutated it must FAIL.  A harness that stays green under
 these mutations would prove nothing about the code it gates.
+
+The sf0.001 testdata comes from ``$SPARK_GRAFT_TEST_SF_DIR``, by default
+the sf0.001 directory that ``TESTDATA.md`` names, not from a path
+relative to the checkout, so a copy of the checkout runs it too.
 """
 
+import os
 import sys
 from pathlib import Path
 
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
-SF = REPO.parent / "testdata" / "sf0.001"
+SF = Path(os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"))
 
 sys.path.insert(0, str(REPO / "tools"))
 import check_queries  # noqa: E402
 
 pytestmark = pytest.mark.skipif(not SF.is_dir(),
-                                reason="needs the sf0.001 testdata")
+                                reason=f"needs the sf0.001 testdata at {SF} "
+                                       "($SPARK_GRAFT_TEST_SF_DIR)")
 
 
 def _failures(spark, name):

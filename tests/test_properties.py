@@ -7,10 +7,12 @@ twin — the semantics of record — is hammered with generated inputs.
 """
 
 import difflib
+import re
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from ferenda_spark.functions.text import normalize_space, strip_backspace
 from ferenda_spark.functions.web import canonical_url
 from ferenda_spark.operators.patch import apply_patch_text
 
@@ -53,6 +55,28 @@ def test_canonical_url_invariants(url):
     if "?" in c:
         params = c.split("?", 1)[1].split("&")
         assert params == sorted(params)       # params sorted
+
+
+# -- whitespace and overstrike ----------------------------------------------
+
+# every str.isspace() character, a backspace, and a few letters
+_SPACES = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
+_spacy = st.text(alphabet=_SPACES + "\x08ab", max_size=24)
+
+
+@settings(max_examples=1000)
+@given(_spacy)
+def test_normalize_space_is_its_regex_definition(s):
+    """The str.split() fast path gives what the canonical definition
+    (NBSP to space, ASCII whitespace runs to one space, trim) gives."""
+    want = re.sub(r"[ \t\n\r\f\v]+", " ", s.replace("\xa0", " ")).strip()
+    assert normalize_space(s) == want
+
+
+@settings(max_examples=300)
+@given(_spacy)
+def test_strip_backspace_is_its_regex_definition(s):
+    assert strip_backspace(s) == re.sub(r".\x08", "", s)
 
 
 # -- patch roundtrip ---------------------------------------------------------
