@@ -22,6 +22,7 @@ Scale shape:
 
 from __future__ import annotations
 
+import re
 from html.parser import HTMLParser
 from typing import Iterator
 
@@ -31,6 +32,13 @@ from pyspark.sql import functions as F
 from ferenda_spark.functions.text import normalize_space
 
 ANCHOR_SCHEMA = "src_url string, href string, anchor string"
+
+# A ``<![`` that the stdlib's marked-section scan accepts: a name
+# token that is one of its keywords. On any other ``<![`` that scan
+# raises AssertionError.
+_MARKED_SECTION = re.compile(
+    r"<!\[(?:temp|cdata|ignore|include|rcdata|if|else|endif)"
+    r"(?![-_.a-zA-Z0-9])", re.I)
 
 
 class _AnchorParser(HTMLParser):
@@ -53,6 +61,14 @@ class _AnchorParser(HTMLParser):
             self.pairs.append(
                 (self.open_href, normalize_space("".join(self.buf))))
         self.open_href, self.buf = None, []
+
+    def parse_html_declaration(self, i):
+        # an unknown ``<![`` is a bogus comment up to the next ``>``,
+        # as extract.parse_page reads it
+        if (self.rawdata.startswith("<![", i)
+                and not _MARKED_SECTION.match(self.rawdata, i)):
+            return self.parse_bogus_comment(i)
+        return super().parse_html_declaration(i)
 
     def handle_starttag(self, tag, attrs):
         if tag == "a":

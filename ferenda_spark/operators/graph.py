@@ -16,7 +16,9 @@ In production this is Iceberg (``df.writeTo(tbl).append()`` /
 The sandbox has no Iceberg runtime jars, so ``GraphStore`` implements
 the identical contract over parquet directories with an atomically
 renamed JSON manifest — every method maps 1:1 onto an Iceberg call,
-noted inline.
+noted inline. As in Iceberg's table metadata, each manifest entry
+records its snapshot's schema, so a read is planned from the manifest
+alone: building it opens no data file and starts no Spark job.
 """
 
 from __future__ import annotations
@@ -29,12 +31,42 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 # The store's own column on a compacted snapshot: the commit id of
 # each rewritten row (an appended snapshot keeps it in its manifest
 # entry instead). Reads add it to tag rows and drop it before
 # returning them.
 COMMIT_COL = "_commit_id"
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable, at every
+    depth: a parquet scan returns its columns so."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True,
+                                       f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _scan_schema(schema: StructType, partition_cols) -> StructType:
+    """The schema a parquet scan of a directory written from a frame
+    of ``schema`` returns: every column nullable, and the partition
+    columns last, in ``partition_cols`` order."""
+    parts = [schema[c] for c in partition_cols]
+    return _nullable(StructType(
+        [f for f in schema.fields if f.name not in partition_cols]
+        + parts))
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -203,14 +235,20 @@ class GraphStore:
                         snap_id: str, **extra) -> dict:
         """Write one snapshot directory and build its manifest entry
         (shared by append, compact and merge_current so the on-disk
-        layout cannot fork between them)."""
+        layout cannot fork between them).
+
+        The entry records the schema a scan of the directory returns
+        (:func:`_scan_schema`), so a read plans from the manifest and
+        opens no parquet footer — Iceberg keeps the schema in table
+        metadata for the same reason."""
         path = os.path.join(self.root, table, snap_id)
-        cols = self.partition_spec.get(table)
+        cols = self.partition_spec.get(table) or []
         w = df.write.mode("overwrite")
         if cols:
             w = w.partitionBy(*cols)
         w.parquet(path)
-        return {"id": snap_id, "path": path, "ts": time.time(), **extra}
+        return {"id": snap_id, "path": path, "ts": time.time(),
+                "schema": _scan_schema(df.schema, cols).json(), **extra}
 
     @contextlib.contextmanager
     def commit(self):
@@ -310,13 +348,23 @@ class GraphStore:
         Filters on a partition column still prune inside each
         partitioned scan; same files either way.
 
+        Each scan takes the schema its manifest entry records, so
+        building the union starts no Spark job: inferring a schema
+        runs one job per snapshot to read parquet footers. An entry
+        without a schema (written before entries carried one) is
+        read with inference.
+
         ``tagged`` gives every row its commit id as ``COMMIT_COL``:
         a compacted snapshot's stored column, else the snapshot's
         manifest entry (NULL outside a commit). Untagged, the stored
         column is dropped."""
         out = None
         for snap in snaps:
-            df = self.spark.read.parquet(snap["path"])
+            reader = self.spark.read
+            if "schema" in snap:
+                reader = reader.schema(
+                    StructType.fromJson(json.loads(snap["schema"])))
+            df = reader.parquet(snap["path"])
             if COMMIT_COL in df.columns:
                 if not tagged:
                     df = df.drop(COMMIT_COL)
@@ -335,7 +383,7 @@ class GraphStore:
         ``current`` table names, per url, the ``input_hash`` and the
         commit whose rows a reader sees (:meth:`merge_current`). The
         view is the union of the table's snapshot scans, each row
-        tagged with its snapshot's commit id, semi-joined to
+        tagged with its snapshot's commit id, inner-joined to
         ``current`` on (src_url, src_hash, commit id). That closes
         three gaps the raw union has:
 
@@ -353,9 +401,10 @@ class GraphStore:
           without a ``dropDuplicates``.
 
         A read therefore runs no provenance aggregate and no shuffle
-        of the graph: it is the snapshot scans plus one semi-join to
-        a table of one row per url, which the planner broadcasts while
-        that table is small.
+        of the graph: it is the snapshot scans, planned from the
+        manifest without a job, plus one join to a table of one row
+        per url, which the planner broadcasts once while that table
+        is small.
 
         Tables without lineage columns (provenance itself, legacy
         appends), and stores without provenance, pass through as
@@ -370,8 +419,15 @@ class GraphStore:
 
     def _current_rows(self, tagged: DataFrame) -> DataFrame:
         """The rows of ``tagged`` that ``current`` names, still
-        tagged; rows without lineage, or of a store without
-        provenance, all pass."""
+        tagged and in ``tagged``'s column order; rows without lineage,
+        or of a store without provenance, all pass.
+
+        An inner join, not a left semi-join: Spark pushes a semi-join
+        into every branch of the snapshot union, and each branch then
+        broadcasts ``current`` in a job of its own; an inner join
+        stays above the union and broadcasts it once. It keeps each
+        row at most once because ``current`` holds one row per url
+        (:meth:`merge_current`)."""
         if "src_url" not in tagged.columns or not self.exists("provenance"):
             return tagged
         self._require_current()
@@ -379,8 +435,8 @@ class GraphStore:
             F.col("url").alias("src_url"),
             F.col("input_hash").alias("src_hash"),
             F.col("commit_id").alias(COMMIT_COL))
-        return tagged.join(cur, ["src_url", "src_hash", COMMIT_COL],
-                           "left_semi")
+        return (tagged.join(cur, ["src_url", "src_hash", COMMIT_COL])
+                .select(*tagged.columns))
 
     def read_at(self, table: str, snapshot_id: str | None = None,
                 as_of_ts: float | None = None) -> DataFrame:

@@ -31,6 +31,25 @@ def test_parse_hostile_inputs():
     assert parse_anchors(b'<a href="/y">  a\n\t b  </a>') == [("/y", "a b")]
 
 
+def test_parse_unknown_marked_section(spark):
+    # a <![ without a marked-section keyword is a bogus comment up to
+    # the next >: anchors on both sides survive, and the page does not
+    # fail its anchor_pairs task
+    html = b'<a href="/x">x</a><![ foo ]><a href="/y">y</a>'
+    assert parse_anchors(html) == [("/x", "x"), ("/y", "y")]
+    assert parse_anchors(b'<a href="/x">x</a><![foo]>') == [("/x", "x")]
+    # a known keyword is still a marked section
+    assert parse_anchors(
+        b'<a href="/x">x<![CDATA[ <b> ]]> z</a>') == [("/x", "x z")]
+    pages = spark.createDataFrame(
+        [("https://s.org/1", html),
+         ("https://s.org/2", b'<a href="/t">T</a>')],
+        "url string, html binary")
+    assert sorted(map(tuple, anchor_pairs(pages).collect())) == [
+        ("https://s.org/1", "/x", "x"), ("https://s.org/1", "/y", "y"),
+        ("https://s.org/2", "/t", "T")]
+
+
 def test_anchor_pairs_and_profile(spark):
     rows = [
         ("https://s.org/1",

@@ -13,6 +13,19 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _jobs(sc, group, action):
+    """Run ``action`` under a job group; its result and the number of
+    Spark jobs it started."""
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_extract_scan_prunes_columns(spark):
     from ferenda_spark.operators.extract import extract
     from ferenda_spark.sources.testdata import (
@@ -493,17 +506,12 @@ def test_run_pipeline_one_html_free_materialization(spark, tmp_path,
     monkeypatch.setattr(cls, "persist", recording_persist)
     monkeypatch.setattr(cls, "cache", recording_persist)
     sc = spark.sparkContext
-    sc.setJobGroup("run_pipeline_fresh", "fresh build")
-    try:
-        assert run_pipeline(spark, pages, ents, store)["pages"] == 30
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+    stats, jobs = _jobs(sc, "run_pipeline_fresh",
+                        lambda: run_pipeline(spark, pages, ents, store))
+    assert stats["pages"] == 30
     assert persisted and all("html" not in cols for cols in persisted), \
         persisted
-    assert len(sc.statusTracker().getJobIdsForGroup(
-        "run_pipeline_fresh")) <= 10
+    assert jobs <= 10
 
     # the no-op rerun: no plan it executes may hold a Python operator
     sql_store = spark._jsparkSession.sharedState().statusStore()
@@ -524,27 +532,69 @@ def test_run_pipeline_one_html_free_materialization(spark, tmp_path,
     assert not [p for p in plans if any(op in p for op in python_ops)]
 
 
-def test_read_current_is_scans_and_a_semi_join(spark, tmp_path):
+def _changed(pages, n):
+    """``pages`` with page ``n``'s html changed."""
+    return pages.withColumn(
+        "html", F.when(F.col("url").endswith(f"/rfc/{n}"),
+                       F.concat(F.col("html"), F.lit(b" ")))
+        .otherwise(F.col("html")))
+
+
+def test_read_current_is_scans_and_one_broadcast_join(spark, tmp_path):
     """read_current("edge") over a store committed twice (the second
     commit retires a changed page) aggregates nothing, shuffles
-    nothing and reads no provenance: it is the snapshot scans
-    semi-joined to the per-url current table."""
+    nothing and reads no provenance: it is the snapshot scans joined
+    once to the per-url current table, which is broadcast once."""
     from ferenda_spark.fixtures.pages import entities_df, pages_df
     from ferenda_spark.operators.graph import GraphStore
     from ferenda_spark.pipeline import run_pipeline
     pages, ents = pages_df(spark, 10, partitions=2), entities_df(spark)
     store = GraphStore(spark, str(tmp_path / "g"))
     run_pipeline(spark, pages, ents, store)
-    changed = pages.withColumn(
-        "html", F.when(F.col("url").endswith("/rfc/3"),
-                       F.concat(F.col("html"), F.lit(b" ")))
-        .otherwise(F.col("html")))
-    assert run_pipeline(spark, changed, ents, store)["pages"] == 1
+    assert run_pipeline(spark, _changed(pages, 3), ents, store)["pages"] == 1
 
     df = store.read_current("edge")
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "Aggregate" not in optimized
-    assert "LeftSemi" in optimized
+    assert "LeftSemi" not in optimized
+    assert optimized.count("Join Inner") == 1, optimized
     plan = _plan(df)
     assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
     assert "/provenance/" not in plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    # the broadcast side is the one scan of current
+    broadcast_side = plan.split("BroadcastExchange")[1]
+    assert broadcast_side.count("FileScan") == 1, plan
+    assert "ReadSchema: struct<url:string,input_hash:string,commit_id:" \
+        in broadcast_side, plan
+
+
+def test_read_current_jobs_do_not_grow_with_commits(spark, tmp_path):
+    """Building read_current("edge") starts no Spark job (the scans
+    take their schemas from the manifest), and running it takes the
+    same number of jobs over 1, 2 and 5 commits, with one broadcast
+    of current whatever the snapshot count."""
+    from ferenda_spark.fixtures.pages import entities_df, pages_df
+    from ferenda_spark.operators.graph import GraphStore
+    from ferenda_spark.pipeline import run_pipeline
+    sc = spark.sparkContext
+    pages, ents = pages_df(spark, 10, partitions=2), entities_df(spark)
+    store = GraphStore(spark, str(tmp_path / "g"))
+    run_pipeline(spark, pages, ents, store)
+    runs = {}
+    for commits in range(1, 6):
+        if commits > 1:
+            assert run_pipeline(spark, _changed(pages, commits + 2), ents,
+                                store)["pages"] == 1
+        if commits not in (1, 2, 5):
+            continue
+        assert len(store.snapshots("edge")) == commits
+        df, built = _jobs(sc, f"read_current_build_{commits}",
+                          lambda: store.read_current("edge"))
+        assert built == 0
+        assert _plan(df).count("BroadcastExchange") == 1
+        rows, ran = _jobs(sc, f"read_current_run_{commits}", df.collect)
+        assert rows
+        runs[commits] = ran
+    assert runs[1] == runs[2] == runs[5], runs

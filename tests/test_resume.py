@@ -67,9 +67,10 @@ def test_resume_after_partial_commit(spark, tmp_path):
 
 def test_same_url_twice_in_one_batch_keeps_lineage(spark, tmp_path):
     """Two versions of one url in one batch: each version's edges and
-    node rows carry their own page's hash, so the current view shows
-    one title and each provenance row counts only its own version's
-    triples (a url join tagged every edge with both hashes)."""
+    node rows carry their own page's hash, current keeps one row for
+    the url, so the current view shows one title, and each provenance
+    row counts only its own version's triples (a url join tagged
+    every edge with both hashes)."""
     store = GraphStore(spark, str(tmp_path / "g"))
     pages = pages_df(spark, 6, partitions=2)
     url = "https://example.org/res/rfc/3"
@@ -86,6 +87,10 @@ def test_same_url_twice_in_one_batch_keeps_lineage(spark, tmp_path):
               .filter((F.col("subj") == url)
                       & (F.col("pred") == "dcterms:title")).collect())
     assert len(titles) == 1
+    # one current row per url: read_current's inner join to current
+    # keeps each edge at most once only because of this
+    cur = store.read("current")
+    assert cur.count() == cur.select("url").distinct().count() == 6
     prov = store.read("provenance").filter(F.col("url") == url).collect()
     assert sorted(r["rows_out"] for r in prov) == [59, 59]
     node_labels = {r["src_hash"]: r["label"] for r in
@@ -596,3 +601,86 @@ def test_partition_spec_prunes_and_preserves(spark, tmp_path):
     assert specless.read("edge").count() == 180 + 30
     assert {(r["subj"], r["pred"], r["obj"])
             for r in specless.read("edge").collect()} == all_rows
+
+
+def _multiset(df):
+    """The rows of ``df`` as a multiset; node's map column rules out
+    ``exceptAll``."""
+    import collections
+    import json
+    return collections.Counter(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+        for r in df.collect())
+
+
+def test_manifest_entry_without_schema_reads_the_same(spark, tmp_path):
+    """Entries written before manifest entries recorded a schema have
+    no ``schema`` key; such a store is read with schema inference and
+    yields the same rows and columns."""
+    import json
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    run_pipeline(spark, pages, ents, store)
+    changed = pages.withColumn(
+        "html", F.when(F.col("url").endswith("/rfc/3"),
+                       F.concat(F.col("html"), F.lit(b" ")))
+        .otherwise(F.col("html")))
+    run_pipeline(spark, changed, ents, store)
+    want = {t: store.read_current(t) for t in ("edge", "node")}
+    want["provenance"] = store.read("provenance")
+    want = {t: (df.schema, _multiset(df)) for t, df in want.items()}
+
+    for table in ("edge", "node", "provenance", "current"):
+        snaps = store.snapshots(table)
+        assert all("schema" in s for s in snaps)
+        store._commit(table, [{k: v for k, v in s.items() if k != "schema"}
+                              for s in snaps])
+    old = GraphStore(spark, str(tmp_path / "g"))
+    for table, (schema, rows) in want.items():
+        got = (old.read("provenance") if table == "provenance"
+               else old.read_current(table))
+        assert got.schema == schema, table
+        assert _multiset(got) == rows, table
+    assert run_pipeline(spark, changed, ents, old)["skipped"] is True
+    # the next commit writes entries with a schema beside the old ones
+    assert run_pipeline(spark, changed.withColumn(
+        "html", F.concat(F.col("html"), F.lit(b" "))), ents,
+        old)["pages"] == 6
+    assert ["schema" in s for s in old.snapshots("edge")] == [
+        False, False, True]
+    assert json.loads(old.snapshots("edge")[-1]["schema"])["type"] \
+        == "struct"
+
+
+def test_partitioned_and_compacted_snapshots_read_recorded_schema(
+        spark, tmp_path):
+    """A partitioned snapshot records its partition column last and a
+    compacted one records its commit-id column, each as the schema a
+    scan of the directory infers; reads built from those schemas
+    return the rows they returned before."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from ferenda_spark.operators.graph import COMMIT_COL
+    store = GraphStore(spark, str(tmp_path / "g"),
+                       partition_spec={"edge": ["pred"]})
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    run_pipeline(spark, pages, ents, store)
+    (entry,) = store.snapshots("edge")
+    recorded = StructType.fromJson(json.loads(entry["schema"]))
+    assert recorded.names[-1] == "pred"
+    assert recorded == spark.read.parquet(entry["path"]).schema
+    before = _multiset(store.read_current("edge"))
+
+    store.compact("edge")
+    (entry,) = store.snapshots("edge")
+    assert entry["compacted"]
+    recorded = StructType.fromJson(json.loads(entry["schema"]))
+    assert COMMIT_COL in recorded.names and recorded.names[-1] == "pred"
+    assert recorded == spark.read.parquet(entry["path"]).schema
+
+    df = store.read_current("edge")
+    assert COMMIT_COL not in df.columns
+    assert _multiset(df) == before
+
