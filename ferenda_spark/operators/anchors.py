@@ -11,8 +11,10 @@ this operator also records *what the citing page calls it*.
 
 Scale shape:
 
-* extraction is an Arrow ``mapInPandas`` over the pages scan — the
-  same stateless per-row parse as operators/extract.py, no shuffle;
+* extraction is an Arrow ``mapInPandas`` over the pages scan, no
+  shuffle: ``parse_anchors`` is one loop over the shared tokenizer's
+  events (functions/markup.py), the parse extract.py runs, and
+  parses attributes of ``a`` tags only;
 * aggregation is two keyed aggs on (href) / (href, anchor) plus a
   *keyed* window (partitioned by href — never a global window) for
   the top-anchor pick; hot targets (the head-entity skew of the
@@ -22,79 +24,50 @@ Scale shape:
 
 from __future__ import annotations
 
-import re
-from html.parser import HTMLParser
 from typing import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ferenda_spark.functions.markup import DATA, END, START, attrs, events
 from ferenda_spark.functions.text import normalize_space
 
 ANCHOR_SCHEMA = "src_url string, href string, anchor string"
 
-# A ``<![`` that the stdlib's marked-section scan accepts: a name
-# token that is one of its keywords. On any other ``<![`` that scan
-# raises AssertionError.
-_MARKED_SECTION = re.compile(
-    r"<!\[(?:temp|cdata|ignore|include|rcdata|if|else|endif)"
-    r"(?![-_.a-zA-Z0-9])", re.I)
 
-
-class _AnchorParser(HTMLParser):
-    """Collects (href, anchor-text) for every ``<a href=...>``.
+def parse_anchors(html_bytes: bytes) -> list[tuple[str, str]]:
+    """(href, anchor text) for every ``<a href=...>`` of a page.
 
     Nested markup inside the anchor contributes its text (``<a><b>x
     </b> y</a>`` → ``x y``).  A new ``<a>`` implicitly closes an open
-    one (the browser recovery rule — real crawl HTML needs it).
-    Anchors without href (named anchors) are ignored.
+    one (the browser recovery rule — real crawl HTML needs it), and
+    the page's end closes the last.  Anchors without href (named
+    anchors) are ignored.
     """
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.open_href: str | None = None
-        self.buf: list[str] = []
-        self.pairs: list[tuple[str, str]] = []
-
-    def _close(self) -> None:
-        if self.open_href is not None:
-            self.pairs.append(
-                (self.open_href, normalize_space("".join(self.buf))))
-        self.open_href, self.buf = None, []
-
-    def parse_html_declaration(self, i):
-        # an unknown ``<![`` is a bogus comment up to the next ``>``,
-        # as extract.parse_page reads it
-        if (self.rawdata.startswith("<![", i)
-                and not _MARKED_SECTION.match(self.rawdata, i)):
-            return self.parse_bogus_comment(i)
-        return super().parse_html_declaration(i)
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "a":
-            self._close()
-            href = dict(attrs).get("href")
+    pairs: list[tuple[str, str]] = []
+    href: str | None = None
+    text: list[str] = []
+    for kind, value, m in events(
+            (html_bytes or b"").decode("utf-8", errors="replace")):
+        if kind == DATA:
             if href is not None:
-                self.open_href = href
-
-    def handle_endtag(self, tag):
-        if tag == "a":
-            self._close()
-
-    def handle_data(self, data):
-        if self.open_href is not None:
-            self.buf.append(data)
-
-    def flush(self) -> None:
-        self._close()
-
-
-def parse_anchors(html_bytes: bytes) -> list[tuple[str, str]]:
-    p = _AnchorParser()
-    p.feed((html_bytes or b"").decode("utf-8", errors="replace"))
-    p.close()
-    p.flush()
-    return p.pairs
+                text.append(value)
+            continue
+        if value != "a":
+            continue
+        # the start and the end of an <a> each close the open anchor;
+        # "<a href=x/>" opens and closes one with no text
+        if href is not None:
+            pairs.append((href, normalize_space("".join(text))))
+            href, text = None, []
+        if kind & START:
+            href = attrs(m).get("href")
+            if kind & END and href is not None:
+                pairs.append((href, ""))
+                href = None
+    if href is not None:
+        pairs.append((href, normalize_space("".join(text))))
+    return pairs
 
 
 def anchor_pairs(pages: DataFrame) -> DataFrame:

@@ -255,10 +255,10 @@ def host_churn(churn: DataFrame) -> DataFrame:
 
 
 MIN_REVISIT_S = 3600
+MAX_REVISIT_S = 30 * 86400
 
 
-def revisit_schedule(profile: DataFrame, interval_s: int,
-                     max_interval_s: int = 30 * 86400) -> DataFrame:
+def revisit_schedule(profile: DataFrame, interval_s: int) -> DataFrame:
     """Per-host recrawl intervals from a :func:`host_churn` profile:
     ``(host, n_pages, lambda_micro, revisit_s)``.
 
@@ -271,7 +271,7 @@ def revisit_schedule(profile: DataFrame, interval_s: int,
 
     — the MLE for Poisson page change with the +0.5 correction that
     keeps an all-changed host finite.  ``revisit_s`` = 1/λ̂ clamped
-    to the [min, max] interval band: the uniform-freshness revisit
+    to [MIN_REVISIT_S, MAX_REVISIT_S]: the uniform-freshness revisit
     policy (revisit about as often as the host changes — churning
     hosts earn short intervals, static archives long ones), the
     scheduling signal ``fetch_schedule``'s politeness layer then
@@ -289,13 +289,13 @@ def revisit_schedule(profile: DataFrame, interval_s: int,
                   / (n.cast("double") + 0.5))
            / F.lit(float(interval_s)))
     raw = F.when(lam > 0, (1.0 / lam)).otherwise(
-        F.lit(float(max_interval_s)))
+        F.lit(float(MAX_REVISIT_S)))
     return (profile
             .filter(n > 0)
             .select("host", n.alias("n_pages"),
                     F.floor(lam * 1_000_000).cast("long")
                     .alias("lambda_micro"),
                     F.floor(F.greatest(
-                        F.least(raw, F.lit(float(max_interval_s))),
+                        F.least(raw, F.lit(float(MAX_REVISIT_S))),
                         F.lit(float(MIN_REVISIT_S))))
                     .cast("long").alias("revisit_s")))

@@ -4,19 +4,16 @@ The single Python-side stage of the pipeline, run as ``mapInPandas``
 (Arrow batches, rows parsed in a loop per batch — no per-row Python at
 the Spark API layer).
 
-``parse_page`` reads a page with one compiled regex, ``_TOKEN_RE``,
-whose ``finditer`` pass yields start, end and self-closing tags and
-skips comments, declarations, marked sections and processing
-instructions; the text between tags is ``html.unescape``d, and the raw
-text of script and style elements is skipped to its end tag. A small
-state machine over those events keeps what the text needs: block
-elements, ``div`` ``about``/``class``, ``head``/``body`` and the
-DROP_TAGS subtrees. It reads markup, malformed markup included, as the
-stdlib's tolerant ``html.parser`` did, at about half the CPU time
-(tests/test_parse_page_differential.py holds that version and compares
-the two). Where that parser raised, on a ``<![`` without a
-marked-section keyword and on a ``div`` ``about`` without a value, this
-one reads a bogus comment and an empty value.
+``parse_page`` is one loop over the shared tokenizer's events
+(functions/markup.py): a small state machine keeps what the text
+needs, namely block elements, ``div`` ``about``/``class`` (the only
+attributes it parses), ``head``/``body`` and the DROP_TAGS subtrees,
+whose script and style raw text it drops with the rest.
+tests/test_parse_page_differential.py holds the version it replaced,
+built on the standard library's HTML parser, and compares the two. Where that version raised,
+on a ``<![`` without a marked-section keyword and on a ``div``
+``about`` without a value, this one reads a bogus comment and an empty
+value.
 
 Semantics are modeled on the reference's soup → element-tree → plain
 text chain (/root/reference/ferenda/elements/html.py:23-71
@@ -33,12 +30,12 @@ BASELINE per-row invariant.
 from __future__ import annotations
 
 import re
-from html import unescape
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ferenda_spark.functions.markup import DATA, END, START, attrs, events
 from ferenda_spark.functions.text import (
     clean_xml_chars,
     normalize_space,
@@ -61,124 +58,6 @@ EXTRACT_SCHEMA = (
     "sections array<struct<ordinal:string, heading:string, text:string>>, "
     "publisher_uri string"
 )
-
-
-def _ci(word: str) -> str:
-    """An ASCII-only case-insensitive pattern for ``word`` (``re.I``
-    would also match ``ſ`` for ``s``)."""
-    return "".join(f"[{c.lower()}{c.upper()}]" for c in word)
-
-
-# One attribute of a start tag: a name, an optional value (quoted, or
-# bare up to whitespace or ">"), then separators.
-_ATTR_NAME = r"""(?<=['"\s/])[^\s/>][^\s/=>]*"""
-_ATTR_VALUE = r"""'[^']*'|"[^"]*"|(?!['"])[^>\s]*"""
-_ATTR_SEP = r"(?:\s|/(?!>))*"
-_ATTR = rf"{_ATTR_NAME}(?:\s*=+\s*(?:{_ATTR_VALUE}))?{_ATTR_SEP}"
-_ATTR_RE = re.compile(rf"({_ATTR_NAME})(\s*=+\s*({_ATTR_VALUE}))?{_ATTR_SEP}")
-_MARKED = "|".join(map(_ci, ("temp", "cdata", "ignore", "include", "rcdata")))
-_MS_MARKED = "|".join(map(_ci, ("if", "else", "endif")))
-_NAME_END = r"(?![-_.a-zA-Z0-9])"
-
-# Every markup token, tried at each "<" in this order; text between
-# tokens is data.
-# - ``start``: a start tag (``tag`` name, ``lead`` separators, ``attrs``,
-#   ``close`` ">" or "/>"). Without a close it is a malformed tag,
-#   literal text up to the character that ends it.
-# - ``endtag``: an end tag's ``end``/``end2`` name; with neither it is
-#   an ignored "</>" or bogus comment.
-# - comments, marked sections, declarations and processing
-#   instructions: ignored.
-# - ``text``: a construct left open ("<!-- x", '<a href="'), data up to
-#   the next ">". A "<" followed by anything else is data.
-_TOKEN_RE = re.compile(
-    r"<(?:"
-    r"(?P<start>(?>(?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*)(?P<lead>[\s/]*)"
-    r"(?P<attrs>(?:" + _ATTR + r")*)\s*)"
-    r"(?:(?P<close>/?>)|(?=[^a-zA-Z=/>])))"
-    r"|(?P<endtag>/(?:\s*(?P<end>[a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
-    r"|(?P<end2>[a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>|[^>]*>))"
-    r"|!--[\s\S]*?--\s*>"
-    r"|!\[(?:" + _MARKED + ")" + _NAME_END + r"[\s\S]*?\]\s*\]\s*>"
-    r"|!\[(?:" + _MS_MARKED + ")" + _NAME_END + r"[\s\S]*?\]\s*>"
-    r"|!(?!--|\[(?:" + _MARKED + "|" + _MS_MARKED + ")" + _NAME_END
-    + r")[^>]*>"
-    r"|\?[^>]*>"
-    r"|(?P<text>[a-zA-Z/!?][^>]*>)"
-    r")")
-# the end tag of a script or style element's raw text
-_RAW_END_RE = {tag: re.compile(r"</\s*" + _ci(tag) + r"\s*>")
-               for tag in ("script", "style")}
-
-_START, _END, _DATA = range(3)
-
-
-def _markup(text: str) -> Iterator[tuple[int, str, re.Match | None]]:
-    """The page as (kind, value, match) events in document order:
-    ``_START`` (lower-cased tag, its token), ``_END`` (lower-cased tag)
-    and ``_DATA`` (text, unescaped; a malformed start tag reads as its
-    own text, kept as written).
-
-    A self-closing tag yields its start and its end. The raw text of a
-    script or style element is skipped to its end tag, or to the end of
-    the page when it has none."""
-    pos, n = 0, len(text)
-    while True:
-        for m in _TOKEN_RE.finditer(text, pos):
-            i = m.start()
-            if i > pos:
-                yield _DATA, unescape(text[pos:i]), None
-            pos = m.end()
-            kind = m.lastgroup
-            if kind == "start":
-                close = m.group("close")
-                if close is None:
-                    yield _DATA, m.group(), None
-                    continue
-                tag = m.group("tag").lower()
-                yield _START, tag, m
-                # "<br/>" self-closes: a "/" before ">" that no
-                # attribute value took
-                if close == "/>" or (m.start("attrs") == m.end("attrs")
-                                     and m.group("lead").endswith("/")):
-                    yield _END, tag, None
-                elif tag in _RAW_END_RE:
-                    e = _RAW_END_RE[tag].search(text, pos)
-                    if e is None:
-                        return
-                    yield _END, tag, None
-                    pos = e.end()
-                    break  # tokenize on from the end tag
-            elif kind == "endtag":
-                tag = m.group("end") or m.group("end2")
-                if tag is not None:
-                    yield _END, tag.lower(), None
-            elif kind == "text":
-                yield _DATA, unescape(m.group()), None
-        else:
-            if pos < n:
-                yield _DATA, unescape(text[pos:]), None
-            return
-
-
-def _attrs(text: str, start: int, end: int) -> dict:
-    """The attributes of a start tag whose attribute run is
-    ``text[start:end]``: lower-cased names, unquoted and unescaped
-    values, ``None`` for a name without a value; the last of a
-    repeated name wins."""
-    attrs = {}
-    while start < end:
-        m = _ATTR_RE.match(text, start)
-        name, rest, value = m.group(1, 2, 3)
-        if not rest:
-            value = None
-        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
-            value = value[1:-1]
-        if value:
-            value = unescape(value)
-        attrs[name.lower()] = value
-        start = m.end()
-    return attrs
 
 
 def _page_chunks(text: str) -> list[tuple[str | None, bool, str]]:
@@ -212,12 +91,14 @@ def _page_chunks(text: str) -> list[tuple[str | None, bool, str]]:
         if chunk:
             chunks.append((section, in_header, chunk))
 
-    for kind, value, m in _markup(text):
-        collecting = in_body and not in_head and not skip
-        if kind == _DATA:
-            if collecting and blocks:
+    for kind, value, m in events(text):
+        if kind == DATA:
+            if in_body and not in_head and not skip and blocks:
                 blocks[-1].append(value)
-        elif kind == _START:
+            continue
+        # a self-closing tag runs the start branch, then the end branch
+        if kind & START:
+            collecting = in_body and not in_head and not skip
             if value == "head":
                 in_head = True
             elif value == "body":
@@ -228,7 +109,7 @@ def _page_chunks(text: str) -> list[tuple[str | None, bool, str]]:
             elif not collecting:
                 pass
             elif value == "div":
-                a = _attrs(text, m.start("attrs"), m.end("attrs"))
+                a = attrs(m)
                 about = a.get("about") or ""
                 if about.startswith("#S"):
                     divs.append(("sec", about[2:]))
@@ -247,28 +128,31 @@ def _page_chunks(text: str) -> list[tuple[str | None, bool, str]]:
                     emit("".join(blocks[-1]))
                     blocks[-1] = []
                 blocks.append([])
-        elif value == "head":
-            in_head = False
-        elif value == "body":
-            in_body = False
-        elif value in DROP_TAGS:
-            skip = max(0, skip - 1)
-        elif not collecting:
-            # end tags INSIDE a dropped subtree must not touch any
-            # stack (children of font/map/center are markup)
-            pass
-        elif value == "div":
-            if divs:
-                div_kind, _ = divs.pop()
-                if div_kind == "sec":
-                    section = next(
-                        (v for k, v in reversed(divs) if k == "sec"), None)
-                elif div_kind == "hdr":
-                    # header-ness ends only when no header div remains
-                    # open (a nested plain div must NOT clear it)
-                    in_header = any(k == "hdr" for k, _ in divs)
-        elif value in BLOCK_TAGS and blocks:
-            emit("".join(blocks.pop()))
+        if kind & END:
+            collecting = in_body and not in_head and not skip
+            if value == "head":
+                in_head = False
+            elif value == "body":
+                in_body = False
+            elif value in DROP_TAGS:
+                skip = max(0, skip - 1)
+            elif not collecting:
+                # end tags INSIDE a dropped subtree must not touch any
+                # stack (children of font/map/center are markup)
+                pass
+            elif value == "div":
+                if divs:
+                    div_kind, _ = divs.pop()
+                    if div_kind == "sec":
+                        section = next((v for k, v in reversed(divs)
+                                        if k == "sec"), None)
+                    elif div_kind == "hdr":
+                        # header-ness ends only when no header div
+                        # remains open (a nested plain div must NOT
+                        # clear it)
+                        in_header = any(k == "hdr" for k, _ in divs)
+            elif value in BLOCK_TAGS and blocks:
+                emit("".join(blocks.pop()))
     while blocks:
         emit("".join(blocks.pop()))
     return chunks

@@ -41,20 +41,33 @@ Subset semantics (documented, fail-loud on the rest):
 
 Output shape is the engine's edge schema (subj, pred, obj,
 obj_is_literal, obj_datatype, obj_lang) plus ``src_url`` and
-``error``; one Arrow ``mapInPandas`` pass, stateless per page, no
-shuffle — the same scan shape as extract.py, so at 10^12 pages this
-runs inside the existing extract scan's budget.
+``error``; one Arrow ``mapInPandas`` pass (``markup.page_rows``),
+stateless per page, no shuffle — the same scan shape as extract.py, so
+at 10^12 pages this runs inside the existing extract scan's budget.
+
+The microdata, RDFa and head-metadata readers below are each one loop
+over the shared tokenizer's events (functions/markup.py), the parse
+extract.py runs; no markup, however malformed, raises in it, so a page
+never loses the triples after a construct the tokenizer skips.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import re
-from html.parser import HTMLParser
-from typing import Iterator
+from urllib.parse import urljoin
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ferenda_spark.functions.markup import (
+    DATA,
+    END,
+    SELF_CLOSING,
+    attrs,
+    events,
+    page_rows,
+)
 
 JSONLD_SCHEMA = ("src_url string, subj string, pred string, obj string, "
                  "obj_is_literal boolean, obj_datatype string, "
@@ -143,23 +156,24 @@ def _walk(node: dict, subj_path: str, url: str, prefix: str | None,
     return subj
 
 
+def _row(url, subj=None, pred=None, obj=None, obj_is_literal=None,
+         obj_datatype=None, obj_lang=None, error=None) -> dict:
+    """One JSONLD_SCHEMA row of page ``url``: a triple or an error."""
+    return {"src_url": url, "subj": subj, "pred": pred, "obj": obj,
+            "obj_is_literal": obj_is_literal,
+            "obj_datatype": obj_datatype, "obj_lang": obj_lang,
+            "error": error}
+
+
 def extract_jsonld(url: str, html: str) -> list[dict]:
-    """Pure-Python twin: all triples of all ld+json blocks of one
-    page, JSONLD_SCHEMA keys; one error row per bad block."""
-
-    def row(subj=None, pred=None, obj=None, obj_is_literal=None,
-            obj_datatype=None, obj_lang=None, error=None) -> dict:
-        return {"src_url": url, "subj": subj, "pred": pred, "obj": obj,
-                "obj_is_literal": obj_is_literal,
-                "obj_datatype": obj_datatype, "obj_lang": obj_lang,
-                "error": error}
-
+    """All triples of all ld+json blocks of one page, JSONLD_SCHEMA
+    keys; one error row per bad block."""
     rows: list[dict] = []
     for b, block in enumerate(_SCRIPT_RE.findall(html or "")):
         try:
             data = json.loads(block)
         except ValueError as exc:
-            rows.append(row(error=f"block {b}: json: {exc}"))
+            rows.append(_row(url, error=f"block {b}: json: {exc}"))
             continue
         ctx = data.get("@context") if isinstance(data, dict) else None
         prefix = (CONTEXT_PREFIXES.get(ctx)
@@ -176,29 +190,16 @@ def extract_jsonld(url: str, html: str) -> list[dict]:
                 _walk(node, f"{b}" if len(nodes) == 1 else f"{b}/{n}",
                       url, prefix, out)
         except _BlockError as exc:
-            rows.append(row(error=f"block {b}: {exc}"))
+            rows.append(_row(url, error=f"block {b}: {exc}"))
             continue
-        rows.extend(row(*t) for t in out)
+        rows.extend(_row(url, *t) for t in out)
     return rows
 
 
 def jsonld_triples(pages: DataFrame) -> DataFrame:
     """pages(url, html) → JSONLD_SCHEMA triples — one stateless Arrow
     pass (html may be binary or string), no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["src_url", "subj", "pred", "obj", "obj_is_literal",
-                "obj_datatype", "obj_lang", "error"]
-        for pdf in it:
-            rows: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = bytes(html).decode("utf-8", errors="replace")
-                rows.extend(extract_jsonld(url, html))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=JSONLD_SCHEMA)
+    return page_rows(pages, extract_jsonld, JSONLD_SCHEMA)
 
 
 # ---- HTML microdata (itemscope/itemprop) -------------------------------
@@ -259,165 +260,103 @@ def _md_norm(text: str) -> str:
     return " ".join(text.split())
 
 
-class _MicrodataParser(HTMLParser):
-    """One page's microdata items → edge-schema tuples + error rows."""
+def _vocab_of(types: list[str]) -> str | None:
+    for t in types:
+        for base, pre in _VOCAB_PREFIXES.items():
+            if t.startswith(base):
+                return pre
+    return None
 
-    def __init__(self, url: str) -> None:
-        super().__init__(convert_charrefs=True)
-        self.url = url
-        self.n_items = 0
-        # item stack frames: (subj, vocab_prefix_or_None)
-        self.items: list[tuple[str, str | None]] = []
-        # open text captures: [subj, pred_list, text_parts]
-        self.captures: list[list] = []
-        # per open element: (tag, pops_item, owns_capture)
-        self.frames: list[tuple[str, bool, bool]] = []
-        self.out: list[tuple] = []
-        self.errors: list[str] = []
 
-    # -- helpers ---------------------------------------------------------
-
-    def _emit(self, subj, pred, obj, is_lit):
-        self.out.append((subj, pred, obj, is_lit, None, None))
-
-    def _vocab_of(self, types: list[str]) -> str | None:
-        for t in types:
-            for base, pre in _VOCAB_PREFIXES.items():
-                if t.startswith(base):
-                    return pre
-        return None
-
-    def _expand_prop(self, name: str, prefix: str | None) -> str:
-        if prefix is None or ":" in name:
-            return name
-        return prefix + name
-
-    def _prop_value_attr(self, tag: str, a: dict) -> tuple | None:
-        """(obj, is_literal) for attribute-valued tags, else None."""
-        if tag == "meta":
-            return (a.get("content", ""), True)
-        if tag in _MD_RESOURCE_HREF:
-            return (a.get("href", ""), False)
-        if tag in _MD_RESOURCE_SRC:
-            return (a.get("src", ""), False)
-        if tag == "time" and a.get("datetime"):
-            return (a["datetime"], True)
-        if tag in ("data", "meter") and a.get("value") is not None:
-            return (a["value"], True)
-        return None
-
-    # -- tag events ------------------------------------------------------
-
-    def _start(self, tag: str, attrs, void: bool) -> None:
-        a = {k: (v if v is not None else "") for k, v in attrs}
-        if "itemref" in a:
-            self.errors.append(f"<{tag} itemref> out of subset")
-            if not void:
-                self.frames.append((tag, False, False))
-            return
-        is_item = "itemscope" in a
-        prop_attr = a.get("itemprop")
-        child_subj = None
-        if is_item:
-            subj = a.get("itemid") or f"{self.url}#md/{self.n_items}"
-            self.n_items += 1
-            types = [t for t in a.get("itemtype", "").split() if t]
-            prefix = self._vocab_of(types)
-            for t in types:
-                self._emit(subj, "rdf:type", _md_contract(t), False)
-            child_subj = subj
-        owns_capture = False
-        if prop_attr is not None:
-            names = [n for n in prop_attr.split() if n]
-            if not self.items:
-                self.errors.append(
-                    f"<{tag} itemprop={prop_attr!r}> outside any item")
-            elif names:
-                psubj, pprefix = self.items[-1]
-                preds = [self._expand_prop(n, pprefix) for n in names]
-                if is_item:
-                    for p in preds:
-                        self._emit(psubj, p, child_subj, False)
-                else:
-                    av = self._prop_value_attr(tag, a)
-                    if av is not None:
-                        obj, is_lit = av
-                        for p in preds:
-                            self._emit(psubj, p, obj, is_lit)
-                    elif not void:
-                        self.captures.append([psubj, preds, []])
-                        owns_capture = True
-        if is_item:
-            self.items.append((child_subj, self._vocab_of(
-                [t for t in a.get("itemtype", "").split() if t])))
-        if not void:
-            self.frames.append((tag, is_item, owns_capture))
-
-    def handle_starttag(self, tag, attrs):
-        self._start(tag, attrs, void=tag in _MD_VOID)
-
-    def handle_startendtag(self, tag, attrs):
-        self._start(tag, attrs, void=True)
-
-    def handle_endtag(self, tag):
-        if not any(f[0] == tag for f in self.frames):
-            return  # stray close tag: ignore, never crash
-        while self.frames:
-            ftag, pops_item, owns_capture = self.frames.pop()
-            if owns_capture:
-                subj, preds, parts = self.captures.pop()
-                text = _md_norm("".join(parts))
-                for p in preds:
-                    self._emit(subj, p, text, True)
-            if pops_item and self.items:
-                self.items.pop()
-            if ftag == tag:
-                break
-
-    def handle_data(self, data):
-        for cap in self.captures:
-            cap[2].append(data)
+def _md_attr_value(tag: str, a: dict) -> tuple | None:
+    """(obj, is_literal) for attribute-valued tags, else None."""
+    if tag == "meta":
+        return (a.get("content", ""), True)
+    if tag in _MD_RESOURCE_HREF:
+        return (a.get("href", ""), False)
+    if tag in _MD_RESOURCE_SRC:
+        return (a.get("src", ""), False)
+    if tag == "time" and a.get("datetime"):
+        return (a["datetime"], True)
+    if tag in ("data", "meter") and a.get("value") is not None:
+        return (a["value"], True)
+    return None
 
 
 def extract_microdata(url: str, html: str) -> list[dict]:
-    """Pure-Python twin: all microdata triples of one page,
-    JSONLD_SCHEMA keys; one error row per out-of-subset construct."""
-    parser = _MicrodataParser(url)
-    try:
-        parser.feed(html or "")
-        parser.close()
-    except Exception as exc:  # malformed HTML: loud row, no crash
-        parser.errors.append(f"parse: {exc}")
-
-    def row(subj=None, pred=None, obj=None, obj_is_literal=None,
-            obj_datatype=None, obj_lang=None, error=None) -> dict:
-        return {"src_url": url, "subj": subj, "pred": pred, "obj": obj,
-                "obj_is_literal": obj_is_literal,
-                "obj_datatype": obj_datatype, "obj_lang": obj_lang,
-                "error": error}
-
-    rows = [row(*t) for t in parser.out]
-    rows.extend(row(error=e) for e in parser.errors)
-    return rows
+    """All microdata triples of one page, JSONLD_SCHEMA keys; one
+    error row per out-of-subset construct."""
+    n_items = 0
+    items: list[tuple[str, str | None]] = []  # open (subj, vocab prefix)
+    captures: list[list] = []   # open text captures: [subj, preds, parts]
+    # per open element: (tag, pops_item, owns_capture)
+    frames: list[tuple[str, bool, bool]] = []
+    out: list[tuple] = []       # (subj, pred, obj, is_literal)
+    errors: list[str] = []
+    for kind, tag, m in events(html or ""):
+        if kind == DATA:  # ``tag`` is the text
+            for cap in captures:
+                cap[2].append(tag)
+            continue
+        if kind == END:
+            if not any(f[0] == tag for f in frames):
+                continue  # stray close tag: ignore, never crash
+            while frames:
+                ftag, pops_item, owns_capture = frames.pop()
+                if owns_capture:
+                    subj, preds, parts = captures.pop()
+                    text = _md_norm("".join(parts))
+                    out.extend((subj, p, text, True) for p in preds)
+                if pops_item and items:
+                    items.pop()
+                if ftag == tag:
+                    break
+            continue
+        # a start tag; a void or self-closing one opens no element
+        void = kind == SELF_CLOSING or tag in _MD_VOID
+        a = {k: v or "" for k, v in attrs(m).items()}
+        if "itemref" in a:
+            errors.append(f"<{tag} itemref> out of subset")
+            if not void:
+                frames.append((tag, False, False))
+            continue
+        is_item = "itemscope" in a
+        if is_item:
+            subj = a.get("itemid") or f"{url}#md/{n_items}"
+            n_items += 1
+            types = a.get("itemtype", "").split()
+            out.extend((subj, "rdf:type", _md_contract(t), False)
+                       for t in types)
+        owns_capture = False
+        prop_attr = a.get("itemprop")
+        if prop_attr is not None:
+            names = prop_attr.split()
+            if not items:
+                errors.append(
+                    f"<{tag} itemprop={prop_attr!r}> outside any item")
+            elif names:
+                psubj, pprefix = items[-1]
+                preds = [n if pprefix is None or ":" in n else pprefix + n
+                         for n in names]
+                if is_item:
+                    out.extend((psubj, p, subj, False) for p in preds)
+                elif (av := _md_attr_value(tag, a)) is not None:
+                    out.extend((psubj, p, *av) for p in preds)
+                elif not void:
+                    captures.append([psubj, preds, []])
+                    owns_capture = True
+        if is_item:
+            items.append((subj, _vocab_of(types)))
+        if not void:
+            frames.append((tag, is_item, owns_capture))
+    return ([_row(url, *t) for t in out]
+            + [_row(url, error=e) for e in errors])
 
 
 def microdata_triples(pages: DataFrame) -> DataFrame:
     """pages(url, html) → JSONLD_SCHEMA triples from itemscope
     markup — one stateless Arrow pass, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["src_url", "subj", "pred", "obj", "obj_is_literal",
-                "obj_datatype", "obj_lang", "error"]
-        for pdf in it:
-            rows: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = bytes(html).decode("utf-8", errors="replace")
-                rows.extend(extract_microdata(url, html))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=JSONLD_SCHEMA)
+    return page_rows(pages, extract_microdata, JSONLD_SCHEMA)
 
 
 # ---- RDFa-Lite reader ---------------------------------------------------
@@ -475,233 +414,164 @@ def microdata_triples(pages: DataFrame) -> DataFrame:
 _PREFIX_DECL_RE = re.compile(r"([A-Za-z][\w.-]*):\s+(\S+)")
 
 
-class _RdfaParser(HTMLParser):
-    """One page's RDFa-Lite markup → edge-schema tuples + error rows."""
-
-    def __init__(self, url: str) -> None:
-        super().__init__(convert_charrefs=True)
-        self.url = url
-        self.prefixes: dict[str, str] = {}
-        self.n_bnodes = 0
-        self.subjects: list[str] = [url]
-        self.langs: list = [None]
-        self.vocabs: list = [None]
-        # open text captures: [subj, preds, datatype, lang, parts]
-        self.captures: list[list] = []
-        # per open element: (tag, pops_subj, pops_lang, pops_vocab,
-        #                    owns_capture)
-        self.frames: list[tuple] = []
-        self.out: list[tuple] = []
-        self.errors: list[str] = []
-
-    def _emit(self, subj, pred, obj, is_lit, dt=None, lang=None):
-        self.out.append((subj, pred, obj, is_lit, dt, lang))
-
-    def _resolve(self, ref: str) -> str:
-        from urllib.parse import urljoin
-        return urljoin(self.url, ref)
-
-    def _bnode(self) -> str:
-        s = f"{self.url}#rdfa/{self.n_bnodes}"
-        self.n_bnodes += 1
-        return s
-
-    def _terms(self, value: str, what: str) -> list[str]:
-        """Space-separated term list → engine names; undeclared CURIE
-        prefixes error instead of being guessed at."""
-        names = []
-        for t in value.split():
-            if "://" in t:
-                names.append(_md_contract(t))
-            elif ":" in t:
-                if t.split(":", 1)[0] in self.prefixes:
-                    names.append(t)
-                else:
-                    self.errors.append(
-                        f"{what}={t!r}: undeclared CURIE prefix")
+def _rdfa_terms(value: str, what: str, prefixes: dict, vocab: str | None,
+                errors: list) -> list[str]:
+    """Space-separated term list → engine names; undeclared CURIE
+    prefixes error instead of being guessed at."""
+    names = []
+    for t in value.split():
+        if "://" in t:
+            names.append(_md_contract(t))
+        elif ":" in t:
+            if t.split(":", 1)[0] in prefixes:
+                names.append(t)
             else:
-                vocab = self.vocabs[-1]
-                names.append(_md_contract(vocab + t) if vocab else t)
-        return names
+                errors.append(f"{what}={t!r}: undeclared CURIE prefix")
+        else:
+            names.append(_md_contract(vocab + t) if vocab else t)
+    return names
 
-    def _start(self, tag: str, attrs, void: bool) -> None:
-        a = {k: (v if v is not None else "") for k, v in attrs}
+
+def extract_rdfa(url: str, html: str) -> list[dict]:
+    """All RDFa-Lite triples of one page, JSONLD_SCHEMA keys; one
+    error row per out-of-subset construct."""
+    prefixes: dict[str, str] = {}
+    bnodes = itertools.count()
+    subjects: list[str] = [url]
+    langs: list = [None]
+    vocabs: list = [None]
+    # open text captures: [subj, preds, datatype, lang, parts]
+    captures: list[list] = []
+    # per open element: (tag, pops_subj, pops_lang, pops_vocab,
+    #                    owns_capture)
+    frames: list[tuple] = []
+    out: list[tuple] = []
+    errors: list[str] = []
+    for kind, tag, m in events(html or ""):
+        if kind == DATA:  # ``tag`` is the text
+            for cap in captures:
+                cap[4].append(tag)
+            continue
+        if kind == END:
+            if not any(f[0] == tag for f in frames):
+                continue  # stray close tag: ignore, never crash
+            while frames:
+                ftag, pops_subj, pops_lang, pops_vocab, owns_capture = \
+                    frames.pop()
+                if owns_capture:
+                    subj, preds, dt, lang, parts = captures.pop()
+                    text = "".join(parts)
+                    out.extend((subj, p, text, True, dt, lang)
+                               for p in preds)
+                if pops_subj:
+                    subjects.pop()
+                if pops_lang:
+                    langs.pop()
+                if pops_vocab:
+                    vocabs.pop()
+                if ftag == tag:
+                    break
+            continue
+        # a start tag; a void or self-closing one opens no scope
+        void = kind == SELF_CLOSING or tag in _MD_VOID
+        a = {k: v or "" for k, v in attrs(m).items()}
         for k, v in a.items():
             if k.startswith("xmlns:"):
-                self.prefixes[k[6:]] = v
-        for m in _PREFIX_DECL_RE.finditer(a.get("prefix", "")):
-            self.prefixes[m.group(1)] = m.group(2)
+                prefixes[k[6:]] = v
+        for d in _PREFIX_DECL_RE.finditer(a.get("prefix", "")):
+            prefixes[d.group(1)] = d.group(2)
 
         bad = [k for k in ("rev", "inlist") if k in a]
         if bad:
-            self.errors.append(f"<{tag} {bad[0]}> out of subset")
+            errors.append(f"<{tag} {bad[0]}> out of subset")
             if not void:
-                self.frames.append((tag, False, False, False, False))
-            return
+                frames.append((tag, False, False, False, False))
+            continue
 
         pops_vocab = "vocab" in a
-        if pops_vocab:
-            self.vocabs.append(a["vocab"].strip() or None)
+        vocab = (a["vocab"].strip() or None) if pops_vocab else vocabs[-1]
         lang_attr = a.get("xml:lang", a.get("lang"))
         pops_lang = lang_attr is not None
-        if pops_lang:
-            self.langs.append(lang_attr or None)
+        lang = (lang_attr or None) if pops_lang else langs[-1]
 
         about = a.get("about")
-        res_ref = None
-        for k in ("resource", "href", "src"):
-            if a.get(k):
-                res_ref = a[k]
-                break
-        props = self._terms(a["property"], "property") \
-            if "property" in a else []
-        rels = self._terms(a["rel"], "rel") if "rel" in a else []
-        types = self._terms(a["typeof"], "typeof") \
-            if "typeof" in a else []
+        res_ref = next((a[k] for k in ("resource", "href", "src")
+                        if a.get(k)), None)
+        props, rels, types = (
+            _rdfa_terms(a[k], k, prefixes, vocab, errors) if k in a else []
+            for k in ("property", "rel", "typeof"))
 
-        stmt_subj = self._resolve(about) if about is not None \
-            else self.subjects[-1]
+        stmt_subj = urljoin(url, about) if about is not None \
+            else subjects[-1]
         dt = None
         if a.get("datatype"):
-            dts = self._terms(a["datatype"], "datatype")
+            dts = _rdfa_terms(a["datatype"], "datatype", prefixes, vocab,
+                              errors)
             dt = dts[0] if dts else None
 
         chained_bnode = None
         owns_capture = False
         if rels:
             if res_ref is None:
-                self.errors.append(
+                errors.append(
                     f"<{tag} rel> without an object IRI (hanging rel) "
                     "out of subset")
             else:
-                for r in rels:
-                    self._emit(stmt_subj, r, self._resolve(res_ref),
-                               False)
+                out.extend((stmt_subj, r, urljoin(url, res_ref), False,
+                            None, None) for r in rels)
         if props:
             if "content" in a:
-                lang = None if dt else self.langs[-1]
-                for p in props:
-                    self._emit(stmt_subj, p, a["content"], True, dt,
-                               lang)
+                plang = None if dt else lang
+                out.extend((stmt_subj, p, a["content"], True, dt, plang)
+                           for p in props)
             elif res_ref is not None and not rels:
-                for p in props:
-                    self._emit(stmt_subj, p, self._resolve(res_ref),
-                               False)
+                out.extend((stmt_subj, p, urljoin(url, res_ref), False,
+                            None, None) for p in props)
             elif types and about is None:
-                chained_bnode = self._bnode()
-                for p in props:
-                    self._emit(stmt_subj, p, chained_bnode, False)
+                chained_bnode = f"{url}#rdfa/{next(bnodes)}"
+                out.extend((stmt_subj, p, chained_bnode, False, None, None)
+                           for p in props)
             elif not void:
-                self.captures.append(
-                    [stmt_subj, props, dt,
-                     None if dt else self.langs[-1], []])
+                captures.append(
+                    [stmt_subj, props, dt, None if dt else lang, []])
                 owns_capture = True
 
         new_subj = None
         if about is not None:
-            new_subj = self._resolve(about)
+            new_subj = urljoin(url, about)
         elif chained_bnode is not None:
             new_subj = chained_bnode
         elif types:
             if res_ref is not None:
-                new_subj = self._resolve(res_ref)
+                new_subj = urljoin(url, res_ref)
             else:
-                new_subj = self._bnode()
+                new_subj = f"{url}#rdfa/{next(bnodes)}"
         elif res_ref is not None and not props and not rels \
                 and "resource" in a:
-            new_subj = self._resolve(a["resource"])
+            new_subj = urljoin(url, a["resource"])
 
-        if types:
-            tsubj = new_subj if new_subj is not None else stmt_subj
-            for t in types:
-                self._emit(tsubj, "rdf:type", t, False)
+        # every typed element has a new subject by now
+        out.extend((new_subj, "rdf:type", t, False, None, None)
+                   for t in types)
 
-        pops_subj = new_subj is not None
-        if pops_subj:
-            self.subjects.append(new_subj)
-
-        if void:
-            # void elements close immediately: unwind pushed scopes
+        if not void:
+            pops_subj = new_subj is not None
             if pops_subj:
-                self.subjects.pop()
+                subjects.append(new_subj)
             if pops_lang:
-                self.langs.pop()
+                langs.append(lang)
             if pops_vocab:
-                self.vocabs.pop()
-        else:
-            self.frames.append((tag, pops_subj, pops_lang, pops_vocab,
-                                owns_capture))
-
-    def handle_starttag(self, tag, attrs):
-        self._start(tag, attrs, void=tag in _MD_VOID)
-
-    def handle_startendtag(self, tag, attrs):
-        self._start(tag, attrs, void=True)
-
-    def handle_endtag(self, tag):
-        if not any(f[0] == tag for f in self.frames):
-            return  # stray close tag: ignore, never crash
-        while self.frames:
-            ftag, pops_subj, pops_lang, pops_vocab, owns_capture = \
-                self.frames.pop()
-            if owns_capture:
-                subj, preds, dt, lang, parts = self.captures.pop()
-                text = "".join(parts)
-                for p in preds:
-                    self._emit(subj, p, text, True, dt, lang)
-            if pops_subj:
-                self.subjects.pop()
-            if pops_lang:
-                self.langs.pop()
-            if pops_vocab:
-                self.vocabs.pop()
-            if ftag == tag:
-                break
-
-    def handle_data(self, data):
-        for cap in self.captures:
-            cap[4].append(data)
-
-
-def extract_rdfa(url: str, html: str) -> list[dict]:
-    """Pure-Python twin: all RDFa-Lite triples of one page,
-    JSONLD_SCHEMA keys; one error row per out-of-subset construct."""
-    parser = _RdfaParser(url)
-    try:
-        parser.feed(html or "")
-        parser.close()
-    except Exception as exc:  # malformed HTML: loud row, no crash
-        parser.errors.append(f"parse: {exc}")
-
-    def row(subj=None, pred=None, obj=None, obj_is_literal=None,
-            obj_datatype=None, obj_lang=None, error=None) -> dict:
-        return {"src_url": url, "subj": subj, "pred": pred, "obj": obj,
-                "obj_is_literal": obj_is_literal,
-                "obj_datatype": obj_datatype, "obj_lang": obj_lang,
-                "error": error}
-
-    rows = [row(*t) for t in parser.out]
-    rows.extend(row(error=e) for e in parser.errors)
-    return rows
+                vocabs.append(vocab)
+            frames.append((tag, pops_subj, pops_lang, pops_vocab,
+                           owns_capture))
+    return ([_row(url, *t) for t in out]
+            + [_row(url, error=e) for e in errors])
 
 
 def rdfa_triples(pages: DataFrame, html_col: str = "html") -> DataFrame:
     """pages(url, html) → JSONLD_SCHEMA triples from RDFa-Lite
     markup — one stateless Arrow pass, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["src_url", "subj", "pred", "obj", "obj_is_literal",
-                "obj_datatype", "obj_lang", "error"]
-        for pdf in it:
-            rows: list[dict] = []
-            for url, html in zip(pdf["url"], pdf[html_col]):
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = bytes(html).decode("utf-8", errors="replace")
-                rows.extend(extract_rdfa(url, html))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", html_col).mapInPandas(
-        batches, schema=JSONLD_SCHEMA)
+    return page_rows(pages, extract_rdfa, JSONLD_SCHEMA, html_col)
 
 
 # ---- page-head metadata harvest -----------------------------------------
@@ -728,88 +598,50 @@ HEADMETA_SCHEMA = ("src_url string, kind string, key string, "
                    "value string, hreflang string, pos int")
 
 
-class _HeadMetaParser(HTMLParser):
-    def __init__(self, url: str) -> None:
-        super().__init__(convert_charrefs=True)
-        self.url = url
-        self.base = url
-        self.base_set = False
-        self.out: list[tuple] = []   # (kind, key, value, hreflang, pos)
-        self.pos = 0
-        self.title_parts: list[str] | None = None
-        self.done_title = False
-
-    def _row(self, kind, key, value, hreflang=None):
-        self.out.append((kind, key, value, hreflang, self.pos))
-        self.pos += 1
-
-    def _start(self, tag, attrs):
-        a = {k: (v if v is not None else "") for k, v in attrs}
-        if tag == "base" and not self.base_set and a.get("href"):
-            from urllib.parse import urljoin
-            self.base = urljoin(self.url, a["href"])
-            self.base_set = True
-        elif tag == "title" and not self.done_title:
-            self.title_parts = []
-        elif tag == "meta":
-            key = a.get("property") or a.get("name") \
-                or a.get("http-equiv")
-            if key and "content" in a:
-                self._row("meta", key.strip().lower(), a["content"])
-        elif tag == "link":
-            href = a.get("href")
-            if href and a.get("rel"):
-                from urllib.parse import urljoin
-                resolved = urljoin(self.base, href)
-                for rel in a["rel"].split():
-                    self._row("link", rel.lower(), resolved,
-                              a.get("hreflang") or None)
-
-    def handle_starttag(self, tag, attrs):
-        self._start(tag, attrs)
-
-    def handle_startendtag(self, tag, attrs):
-        self._start(tag, attrs)
-
-    def handle_endtag(self, tag):
-        if tag == "title" and self.title_parts is not None:
-            self._row("title", "", _md_norm("".join(self.title_parts)))
-            self.title_parts = None
-            self.done_title = True
-
-    def handle_data(self, data):
-        if self.title_parts is not None:
-            self.title_parts.append(data)
-
-
 def extract_head_meta(url: str, html: str) -> list[dict]:
-    """Pure-Python twin: one page's head metadata, HEADMETA_SCHEMA
-    keys; ``pos`` is the tag's document-order ordinal (what makes
-    "FIRST rel=canonical wins" deterministic downstream)."""
-    parser = _HeadMetaParser(url)
-    try:
-        parser.feed(html or "")
-        parser.close()
-    except Exception:
-        pass  # lenient: keep whatever was harvested before the break
-    return [{"src_url": url, "kind": k, "key": key, "value": v,
-             "hreflang": hl, "pos": p}
-            for (k, key, v, hl, p) in parser.out]
+    """One page's head metadata, HEADMETA_SCHEMA keys; ``pos`` is the
+    tag's document-order ordinal (what makes "FIRST rel=canonical
+    wins" deterministic downstream)."""
+    base = None           # the first <base href>, resolved
+    title: list[str] | None = None  # the open <title>'s text
+    done_title = False
+    rows: list[dict] = []
+
+    def row(kind, key, value, hreflang=None):
+        rows.append({"src_url": url, "kind": kind, "key": key,
+                     "value": value, "hreflang": hreflang,
+                     "pos": len(rows)})
+
+    for kind, tag, m in events(html or ""):
+        if kind == DATA:  # ``tag`` is the text
+            if title is not None:
+                title.append(tag)
+        elif kind == END:
+            if tag == "title" and title is not None:
+                row("title", "", _md_norm("".join(title)))
+                title, done_title = None, True
+        elif tag == "title":
+            if not done_title:
+                title = []
+        elif tag in ("base", "meta", "link"):
+            a = {k: v or "" for k, v in attrs(m).items()}
+            if tag == "base":
+                if base is None and a.get("href"):
+                    base = urljoin(url, a["href"])
+            elif tag == "meta":
+                key = a.get("property") or a.get("name") \
+                    or a.get("http-equiv")
+                if key and "content" in a:
+                    row("meta", key.strip().lower(), a["content"])
+            elif a.get("href") and a.get("rel"):
+                resolved = urljoin(base or url, a["href"])
+                for rel in a["rel"].split():
+                    row("link", rel.lower(), resolved,
+                        a.get("hreflang") or None)
+    return rows
 
 
 def head_meta(pages: DataFrame) -> DataFrame:
     """pages(url, html) → HEADMETA_SCHEMA rows (title / meta / link
     harvest) — one stateless Arrow pass, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["src_url", "kind", "key", "value", "hreflang", "pos"]
-        for pdf in it:
-            rows: list[dict] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if isinstance(html, (bytes, bytearray, memoryview)):
-                    html = bytes(html).decode("utf-8", errors="replace")
-                rows.extend(extract_head_meta(url, html))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.select("url", "html").mapInPandas(
-        batches, schema=HEADMETA_SCHEMA)
+    return page_rows(pages, extract_head_meta, HEADMETA_SCHEMA)

@@ -661,10 +661,14 @@ def wat_segments_from_pages(pages: DataFrame) -> DataFrame:
     carries the fields a link-graph consumer needs — ``url``, ``ts``,
     ``title`` and the href ``links`` — so webgraph construction
     (host_graph, pagerank, anchors) runs off the ~20×-smaller WAT
-    layer without touching raw HTML.  The envelope is built with the
-    engine's own extraction primitives (the anchors module's href
-    convention); JSON is serialized with sorted keys so rebuilt
-    archives are byte-identical."""
+    layer without touching raw HTML.  The envelope comes from two
+    byte regexes of its own, not from the markup tokenizer: ``links``
+    are the hrefs of ``<a>`` tags whose value is quoted, non-empty and
+    does not start with ``#``, as written (charrefs not decoded;
+    unquoted, empty and fragment-only hrefs are dropped), and
+    ``title`` is the stripped raw text of the first ``<title>``.  JSON
+    is serialized with sorted keys so rebuilt archives are
+    byte-identical."""
     import json as _json
     import re as _re
 

@@ -76,6 +76,25 @@ def test_content_survives_garbage():
     assert r["n_kept"] == 1
 
 
+def test_unknown_marked_section_keeps_later_blocks():
+    # a <![ without a marked-section keyword is a bogus comment up to
+    # the next >, not the end of the page
+    word = "word " * 8
+    more = "more " * 8
+    r = extract_content("u", f"<p>{word}</p><![ foo ]><p>{more}</p>")
+    assert r["n_kept"] == 2
+    assert r["content"] == f"{word.strip()}\n{more.strip()}"
+
+
+def test_link_text_counts_the_whole_run():
+    # "1 < 2 < ..." is one text run: 21 of 33 chars are link text,
+    # above the 1/3 bound, however the markup splits it
+    r = extract_content(
+        "u", '<p>xxxxxxxxxxx <a href="/">1 < 2 < 3 < 4 < 5 < 6</a></p>')
+    assert r["total_chars"] == 33
+    assert r["n_kept"] == 0 and r["n_dropped"] == 1
+
+
 def test_main_content_spark_matches_twin(spark):
     pages = spark.createDataFrame(
         [("https://a.com/1", PAGE.encode()),

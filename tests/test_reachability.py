@@ -19,6 +19,12 @@ unit tests, unless ``ALLOWLIST`` keeps it for one of two reasons: it is
 the Python restatement a remaining test uses as the expected value of a
 reached definition (``ORACLE``), or it is test harness (``HARNESS``).
 
+The root files' own top-level definitions (``__spark_entry__.py``,
+``bench.py`` and ``tools/*.py``) are walked the same way: one is
+reached when a root file's module-level statements or a reached root
+definition names it, unless ``ROOT_ALLOWLIST`` keeps it as an entry
+point that code outside the program calls (``CONTRACT``).
+
 The same walk keeps options from outliving their last varied caller.
 Every defaulted parameter of a function or method defined in a reached
 package module, and called by name from reached code, gets one value
@@ -34,6 +40,7 @@ reach the behaviour no other way).
 """
 
 import ast
+import operator
 import re
 from pathlib import Path
 
@@ -66,11 +73,23 @@ ALLOWLIST = {
 
 OPTION_ALLOWLIST: dict[str, str] = {}
 
+CONTRACT = "entry point: "
+
+ROOT_ALLOWLIST = {
+    "__spark_entry__.py::oracle_sql":
+        CONTRACT + "the gate oracles, beside queries()",
+}
+
 
 def _roots(repo):
     return ([repo / "__spark_entry__.py", repo / "bench.py"]
             + sorted((repo / "tools").glob("*.py"))
             + sorted((repo / "perfbench").glob("*.py")))
+
+
+def _root_checked(repo):
+    return ([repo / "__spark_entry__.py", repo / "bench.py"]
+            + sorted((repo / "tools").glob("*.py")))
 
 
 def _module_name(path, repo):
@@ -217,12 +236,68 @@ def unreached(repo, package=PACKAGE, roots=None, keep=()):
     return dead_mods, dead_defs
 
 
+def unreached_root_defs(repo, roots=None, checked=None, keep=()):
+    """Top-level definitions of the ``checked`` root files (default:
+    the entry point, ``bench.py`` and ``tools/``) that no reached code
+    names, as ``<path>::<name>``.  Reached code is every root file's
+    module-level statements (all of a root file that is not checked)
+    and the bodies of reached root definitions; definitions in ``keep``
+    count as reached."""
+    repo = Path(repo)
+    roots = _roots(repo) if roots is None else roots
+    checked = set(_root_checked(repo) if checked is None else checked)
+    names, units = set(), {}
+    for path in roots:
+        tree = ast.parse(Path(path).read_text(), str(path))
+        if path not in checked:
+            names |= _refs([tree], "__main__", False).names
+            continue
+        path_units, rest = _units(tree)
+        names |= _refs(rest, "__main__", False).names
+        where = Path(path).relative_to(repo).as_posix()
+        for u, stmts in path_units.items():
+            units[f"{where}::{u}"] = (u, _refs(stmts, "__main__",
+                                               False).names)
+    reached = set()
+    changed = True
+    while changed:
+        changed = False
+        for qual, (u, refs) in units.items():
+            if qual not in reached and (u in names or qual in keep):
+                reached.add(qual)
+                names |= refs
+                changed = True
+    return set(units) - reached
+
+
+_ARITHMETIC = {
+    ast.Add: operator.add, ast.Sub: operator.sub, ast.Mult: operator.mul,
+    ast.Div: operator.truediv, ast.FloorDiv: operator.floordiv,
+    ast.Mod: operator.mod, ast.Pow: operator.pow,
+    ast.USub: operator.neg, ast.UAdd: operator.pos,
+}
+
+
+def _fold(node):
+    """The value of a literal, or of arithmetic over literals."""
+    op = _ARITHMETIC.get(type(getattr(node, "op", None)))
+    if op is None:
+        return ast.literal_eval(node)
+    if isinstance(node, ast.UnaryOp):
+        return op(_fold(node.operand))
+    left, right = _fold(node.left), _fold(node.right)
+    if op is operator.pow and abs(right) > 64:
+        raise ValueError("exponent too large to fold")
+    return op(left, right)
+
+
 def _literal(node):
-    """A hashable stand-in for a literal expression, or None."""
+    """A hashable stand-in for a literal expression, arithmetic over
+    literals folded (``1 / 3``, ``30 * 86400``), or None."""
     try:
-        value = ast.literal_eval(node)
+        value = _fold(node)
     except (ValueError, TypeError, SyntaxError, MemoryError,
-            RecursionError):
+            RecursionError, ArithmeticError):
         return None
     return type(value).__name__, repr(value)
 
@@ -374,6 +449,45 @@ def test_scanner_reports_exactly_the_unreached_definitions(tmp_path):
     assert dead_defs == {"lib.unused", "lib.helper"}
 
 
+def test_root_files_reach_their_definitions():
+    extra = sorted(unreached_root_defs(REPO, keep=ROOT_ALLOWLIST)
+                   - set(ROOT_ALLOWLIST))
+    assert not extra, f"root-file definitions nothing reaches: {extra}"
+
+
+def test_root_allowlist_entries_are_unreached_and_justified():
+    stale = sorted(set(ROOT_ALLOWLIST) - unreached_root_defs(REPO))
+    assert not stale, f"allowlisted but reached (drop the entry): {stale}"
+    for qual, reason in ROOT_ALLOWLIST.items():
+        assert reason.startswith(CONTRACT), (qual, reason)
+
+
+def test_scanner_reports_exactly_the_unreached_root_defs(tmp_path):
+    (tmp_path / "tools").mkdir()
+    main = tmp_path / "main.py"
+    main.write_text(
+        "LIMIT = 3\n\n"
+        "def used():\n    return LIMIT\n\n"
+        "def unused():\n    return helper()\n\n"
+        "def helper():\n    return 1\n\n"
+        "def shared():\n    return 2\n\n"
+        "print(used())\n")
+    cli = tmp_path / "tools" / "cli.py"
+    cli.write_text(
+        "from main import shared\n\n"
+        "def run():\n    return shared()\n\n"
+        "def stale():\n    return run()\n\n"
+        "if __name__ == '__main__':\n    run()\n")
+    # a root that is not checked still reaches what it names
+    other = tmp_path / "other.py"
+    other.write_text("from main import helper\n")
+    roots = [main, cli, other]
+    assert unreached_root_defs(tmp_path, roots, [main, cli]) == {
+        "main.py::unused", "tools/cli.py::stale"}
+    assert unreached_root_defs(tmp_path, [main, cli], [main, cli]) == {
+        "main.py::unused", "main.py::helper", "tools/cli.py::stale"}
+
+
 def test_no_option_takes_one_value():
     flagged = one_value_options(REPO)
     extra = {q: v for q, v in flagged.items() if q not in OPTION_ALLOWLIST}
@@ -397,6 +511,8 @@ def test_scanner_reports_exactly_the_one_value_options(tmp_path):
     (pkg / "lib.py").write_text(
         "def op(df, varied=1, never=2, same=3):\n    return df\n\n"
         "def fed(df, opt=4):\n    return df\n\n"
+        "def ratio(df, share=1 / 3, cap=30 * 86400, neg=-2):\n"
+        "    return df\n\n"
         "class A:\n    def __init__(self, x=1):\n        self.x = x\n\n"
         "class B(A):\n    def __init__(self):\n"
         "        super().__init__(x=5)\n")
@@ -408,6 +524,9 @@ def test_scanner_reports_exactly_the_one_value_options(tmp_path):
         "op(0, 5, same=7)\n"
         "kw = {'opt': 9}\n"
         "fed(0, **kw)\n"
-        "A(x=3)\nB()\n")
+        "A(x=3)\nB()\n"
+        # arithmetic over literals folds: cap varies, neg does not
+        "ratio(0, neg=-(1 + 1))\nratio(0, cap=2 ** 3)\n")
     assert one_value_options(tmp_path, "pkg", [root]) == {
-        "lib.op.never": "2", "lib.op.same": "7"}
+        "lib.op.never": "2", "lib.op.same": "7",
+        "lib.ratio.share": repr(1 / 3), "lib.ratio.neg": "-2"}

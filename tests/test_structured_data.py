@@ -176,6 +176,18 @@ def test_microdata_fail_loud_rows():
     assert extract_microdata("u", None) == []
 
 
+def test_microdata_after_unknown_marked_section():
+    # a <![ without a marked-section keyword is a bogus comment: the
+    # item keeps its later properties and no parse error row appears
+    rows = extract_microdata(
+        "u", '<div itemscope itemtype="https://schema.org/Person">'
+             '<![ x ]><span itemprop="name">Ada</span></div>')
+    assert [r for r in rows if r["error"]] == []
+    assert _triples(rows) == {
+        ("u#md/0", "rdf:type", "schema:Person", False, None, None),
+        ("u#md/0", "schema:name", "Ada", True, None, None)}
+
+
 def test_microdata_vocabless_and_curie_props():
     # no itemtype → names stay verbatim; ':' names never re-prefixed
     rows = extract_microdata(
@@ -348,8 +360,30 @@ def test_rdfa_render_roundtrip_identity(spark, monkeypatch):
 
 # ---- page-head metadata harvest -----------------------------------------
 
+def test_rdfa_after_unknown_marked_section():
+    rows = extract_rdfa(
+        "https://a.com/d",
+        '<div prefix="dcterms: http://purl.org/dc/terms/">'
+        '<p property="dcterms:title">T</p><![ x ]>'
+        '<p property="dcterms:creator">C</p></div>')
+    assert [r for r in rows if r["error"]] == []
+    assert _triples(rows) == {
+        ("https://a.com/d", "dcterms:title", "T", True, None, None),
+        ("https://a.com/d", "dcterms:creator", "C", True, None, None)}
+
+
 from ferenda_spark.operators.structured_data import (extract_head_meta,  # noqa: E402
                                                      head_meta)
+
+
+def test_head_meta_after_unknown_marked_section():
+    rows = extract_head_meta(
+        "https://a.com/x", '<title>T</title><![ x ]>'
+                           '<meta name="robots" content="noindex">'
+                           '<link rel="canonical" href="/c">')
+    assert [(r["kind"], r["key"], r["value"], r["pos"]) for r in rows] == [
+        ("title", "", "T", 0), ("meta", "robots", "noindex", 1),
+        ("link", "canonical", "https://a.com/c", 2)]
 
 
 def test_head_meta_harvest_kinds_base_and_leniency():
