@@ -35,9 +35,6 @@ class UriTemplate:
     for_type: str | None = None
     slug: list[str] = field(default_factory=list)
 
-    def variables(self) -> list[str]:
-        return _VAR_RE.findall(self.uri_template)
-
 
 def compile_template(t: UriTemplate, base: str) -> tuple[Column, Column]:
     """→ (guard condition, uri expression) for one template."""

@@ -7,9 +7,11 @@ documentstore.py:400-470 ``needed()`` mtime freshness, documententry.py
 :266-342 per-document status/duration lineage records): each stage
 writes to a snapshot-committed table; a rerun anti-joins its input
 against the last committed snapshot's (url, input_hash) set, so only
-new/changed documents reprocess, and old snapshots are retained.
-Which page version a read sees is decided at commit time, in the
-small ``current`` table (see :meth:`GraphStore.merge_current`).
+new/changed documents reprocess, and a page's old versions stay in
+the tables. Which page version a read sees is decided at commit time,
+in the small ``current`` table (see :meth:`GraphStore.merge_current`).
+After each commit, :meth:`GraphStore.upkeep` compacts the tables that
+have passed a snapshot bound and vacuums what compaction dropped.
 
 In production this is Iceberg (``df.writeTo(tbl).append()`` /
 ``MERGE INTO`` on (url, input_hash); snapshots are Iceberg snapshots).
@@ -128,6 +130,19 @@ def _try_break_stale(path: str, stale_after_s: float) -> None:
 COMMIT_LOCK_STALE_S = 300.0
 COMMIT_LOCK_TIMEOUT_S = 60.0
 
+# upkeep compacts a table once a commit leaves it with more live
+# snapshots than this. Each live snapshot adds a scan to every read
+# and commit (about 0.04 s and 0.12 s on a 4-CPU host), and a
+# compaction rewrites the whole table; 3 to 5 minimized their sum per
+# commit over 40 commits of 25 pages (the curve is in CHANGES.md), and
+# 4 keeps a read within 1.5x of a one-snapshot store's
+COMPACT_AFTER = 4
+# vacuum deletes an unreferenced snapshot directory only once it has
+# been unreferenced this long: a reader planned on an older manifest
+# may still be scanning it, and a writer's snapshot is unreferenced
+# until its manifest commit
+VACUUM_GRACE_S = 3600.0
+
 
 class GraphStore:
     """Snapshot-committed table store (Iceberg-contract emulation).
@@ -165,14 +180,26 @@ class GraphStore:
             return json.load(f)
 
     def _commit(self, table: str, snapshots: list[dict]) -> None:
-        # Atomic commit: write tmp, rename over manifest — the analog
-        # of an Iceberg metadata-file swap.
+        """Atomic commit: write tmp, rename over manifest — the analog
+        of an Iceberg metadata-file swap. Callers hold the table's
+        commit lock.
+
+        Each directory the commit drops from the manifest has its
+        mtime set to now, so :meth:`vacuum`'s grace period starts when
+        it stops being live, not when it was written: a reader planned
+        on the previous manifest may still be scanning it."""
         p = self._manifest_path(table)
         os.makedirs(os.path.dirname(p), exist_ok=True)
+        live = {s["id"] for s in snapshots}
+        dropped = [s["path"] for s in self._read_manifest(table)
+                   if s["id"] not in live]
         tmp = p + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(snapshots, f, indent=1)
         os.replace(tmp, p)
+        for path in dropped:
+            with contextlib.suppress(FileNotFoundError):
+                os.utime(path)
 
     def _commit_lock(self, table: str):
         """Mutual exclusion for read-merge-commit sequences — the
@@ -279,12 +306,6 @@ class GraphStore:
                  if self._open_commit is not None else {})
         entry = self._write_snapshot(df, table, snap_id, **extra)
         with self._commit_lock(table):
-            # ts is COMMIT time, assigned under the lock: manifest
-            # order and ts order can then never disagree, so
-            # read_at(as_of_ts) is repeatable — a slow writer whose
-            # data write predates a faster peer's commit cannot
-            # appear retroactively in the past
-            entry["ts"] = time.time()
             snaps = self._read_manifest(table)
             snaps.append(entry)
             self._commit(table, snaps)
@@ -301,8 +322,9 @@ class GraphStore:
         when a batch holds two versions of a url. The read-merge-write
         runs under the ``current`` commit lock, so two writers'
         merges serialize and the later commit wins each url it
-        touched."""
-        winners = (pages.groupBy("url")
+        touched. The previous table's directory leaves the manifest
+        and is vacuumed once its grace period has passed."""
+        winners =(pages.groupBy("url")
                    .agg(F.max("input_hash").alias("input_hash"))
                    .select("url", "input_hash",
                            F.lit(commit_id).alias("commit_id")))
@@ -404,7 +426,12 @@ class GraphStore:
         of the graph: it is the snapshot scans, planned from the
         manifest without a job, plus one join to a table of one row
         per url, which the planner broadcasts once while that table
-        is small.
+        is small. An inner join, not a left semi-join: Spark pushes a
+        semi-join into every branch of the snapshot union, and each
+        branch then broadcasts ``current`` in a job of its own; an
+        inner join stays above the union and broadcasts it once. It
+        keeps each row at most once because ``current`` holds one row
+        per url.
 
         Tables without lineage columns (provenance itself, legacy
         appends), and stores without provenance, pass through as
@@ -414,116 +441,36 @@ class GraphStore:
         snaps = self._read_manifest(table)
         if not snaps:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        return self._current_rows(
-            self._read_snapshots(snaps, tagged=True)).drop(COMMIT_COL)
-
-    def _current_rows(self, tagged: DataFrame) -> DataFrame:
-        """The rows of ``tagged`` that ``current`` names, still
-        tagged and in ``tagged``'s column order; rows without lineage,
-        or of a store without provenance, all pass.
-
-        An inner join, not a left semi-join: Spark pushes a semi-join
-        into every branch of the snapshot union, and each branch then
-        broadcasts ``current`` in a job of its own; an inner join
-        stays above the union and broadcasts it once. It keeps each
-        row at most once because ``current`` holds one row per url
-        (:meth:`merge_current`)."""
+        tagged = self._read_snapshots(snaps, tagged=True)
         if "src_url" not in tagged.columns or not self.exists("provenance"):
-            return tagged
+            return tagged.drop(COMMIT_COL)
         self._require_current()
         cur = self.read("current").select(
             F.col("url").alias("src_url"),
             F.col("input_hash").alias("src_hash"),
             F.col("commit_id").alias(COMMIT_COL))
         return (tagged.join(cur, ["src_url", "src_hash", COMMIT_COL])
-                .select(*tagged.columns))
-
-    def read_at(self, table: str, snapshot_id: str | None = None,
-                as_of_ts: float | None = None) -> DataFrame:
-        """Time travel — Iceberg: ``VERSION AS OF`` (``snapshot_id``)
-        / ``TIMESTAMP AS OF`` (``as_of_ts``): the table state at a
-        past commit = the union of manifest entries up to and
-        including that snapshot (append-only commit log).
-
-        Same retention contract as Iceberg: a snapshot rewritten away
-        by :meth:`compact` or expired by :meth:`vacuum` is no longer
-        addressable — its id raises, it does not silently resolve to
-        something else."""
-        snaps = self._read_manifest(table)
-        if not snaps:
-            raise FileNotFoundError(f"table {table} has no snapshots")
-        if (snapshot_id is None) == (as_of_ts is None):
-            raise ValueError("read_at needs exactly one of snapshot_id "
-                             "or as_of_ts")
-        if snapshot_id is not None:
-            ids = [s["id"] for s in snaps]
-            if snapshot_id not in ids:
-                raise KeyError(
-                    f"snapshot {snapshot_id!r} not in table {table} "
-                    f"(compacted or vacuumed away?)")
-            keep = snaps[: ids.index(snapshot_id) + 1]
-        else:
-            # PREFIX semantics, not a ts filter: state as of T = the
-            # manifest prefix ending at the last commit with ts ≤ T.
-            # Commit timestamps are assigned under the commit lock, so
-            # an append-only history is ts-monotone and the two views
-            # agree; after a compaction the rewritten head carries a
-            # NEWER ts than the carried-over tail, and a T inside that
-            # inversion addresses a pre-compaction state that no
-            # longer exists — refuse it (the same retention contract
-            # as an expired snapshot id).
-            last = max((i for i, s in enumerate(snaps)
-                        if s["ts"] <= as_of_ts), default=None)
-            if last is None:
-                raise KeyError(f"table {table} has no snapshot at or "
-                               f"before ts {as_of_ts}")
-            keep = snaps[: last + 1]
-            if any(s["ts"] > as_of_ts for s in keep):
-                raise KeyError(
-                    f"table {table}: ts {as_of_ts} addresses a state "
-                    f"rewritten by compaction (no longer addressable)")
-        return self._read_snapshots(keep)
+                .select(*tagged.columns).drop(COMMIT_COL))
 
     def exists(self, table: str) -> bool:
         return bool(self._read_manifest(table))
 
-    def rollback(self, table: str, n: int = 1) -> None:
-        """Iceberg: rollback_to_snapshot — drop the last n snapshots."""
-        with self._commit_lock(table):
-            snaps = self._read_manifest(table)
-            self._commit(table, snaps[: max(0, len(snaps) - n)])
-
-    def compact(self, table: str, target_partitions: int = 8,
-                current_only: bool = False) -> str:
+    def compact(self, table: str) -> str:
         """Iceberg: ``rewrite_data_files`` — rewrite the snapshots
         live at start-of-compaction into ONE snapshot of
-        ``target_partitions`` files.
+        ``defaultParallelism`` files.
 
-        Incremental runs append one snapshot per micro-batch/stage
-        run; after thousands of runs the table is thousands of small
-        files and every read pays per-file open cost (the classic
-        small-files problem).  The rewrite uses ``repartition`` (a
-        shuffle of data being fully rewritten anyway, like Iceberg's
-        bin-packing rewrite) so the many-small-file read stays fully
-        parallel — ``coalesce`` would fold it into
-        ``target_partitions`` sequential file-opening tasks.
+        Every read and commit scans each live snapshot, so many
+        small commits cost per-scan and per-file (the small-files
+        problem). The rewrite uses ``repartition`` (a shuffle of data
+        being fully rewritten anyway, like Iceberg's bin-packing
+        rewrite) so the many-small-file read stays fully parallel —
+        ``coalesce`` would fold it into a few sequential tasks.
 
-        Concurrency: the rewrite window is long, so the commit
-        validates-and-merges like Iceberg under the commit lock —
-        snapshots appended while the rewrite ran are carried over
-        untouched after the compacted entry.  If any snapshot of the
-        rewrite set is NO LONGER live at commit time (a concurrent
-        compact, rollback, or truncate removed it), the commit
-        ABORTS with :class:`ConcurrentCommitError` and removes its
-        own orphan directory — carrying on would duplicate rows
-        (double-compaction) or resurrect deliberately-dropped ones.
-        Old snapshot directories stay on disk until :meth:`vacuum`
-        (the expire_snapshots analog) — the manifest swap must not
-        race in-flight readers of the old file set.
-
-        Resume state is unaffected: pending_pages reads table
-        contents, not snapshot layout (provenance, not edge/node).
-
+        It rewrites the raw union, every row of every live snapshot,
+        whether a read sees it today or not: a commit whose edge
+        append has landed but whose ``current`` merge has not must
+        keep its rows through a compaction that runs in between.
         Each rewritten row keeps the commit that made it: the
         compacted snapshot stores it as the ``COMMIT_COL`` column
         (the rows come from many commits, so one manifest entry
@@ -532,26 +479,27 @@ class GraphStore:
         changes no view, and a later commit that retires a url
         retires its compacted rows too.
 
-        ``current_only=True`` rewrites the :meth:`read_current` view
-        instead of the raw union: superseded page versions, orphan
-        partial appends, and replay duplicates are dropped in the
-        same pass (the expire-old-versions analog), so subsequent
-        plain ``read`` calls see the exactly-once latest graph."""
+        Concurrency: the rewrite window is long, so the commit
+        validates-and-merges like Iceberg under the commit lock —
+        snapshots appended while the rewrite ran are carried over
+        untouched after the compacted entry. If any snapshot of the
+        rewrite set is NO LONGER live at commit time (a concurrent
+        compaction rewrote it), the commit ABORTS with
+        :class:`ConcurrentCommitError` and removes its own orphan
+        directory — carrying on would duplicate its rows. Old
+        snapshot directories stay on disk until :meth:`vacuum` (the
+        expire_snapshots analog) — the manifest swap must not race
+        in-flight readers of the old file set."""
         import shutil
         before = self._read_manifest(table)
         if not before:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        rows = self._read_snapshots(before, tagged=True)
-        if current_only:
-            rows = self._current_rows(rows)
-        rows = rows.repartition(target_partitions)
+        rows = self._read_snapshots(before, tagged=True).repartition(
+            self.spark.sparkContext.defaultParallelism)
         snap_id = f"compact-{uuid.uuid4().hex[:8]}"
-        entry = self._write_snapshot(rows, table, snap_id,
-                                     compacted=True,
-                                     current_only=current_only)
+        entry = self._write_snapshot(rows, table, snap_id, compacted=True)
         rewritten = {s["id"] for s in before}
         with self._commit_lock(table):
-            entry["ts"] = time.time()   # commit time, like append()
             now = self._read_manifest(table)
             live = {s["id"] for s in now}
             if not rewritten <= live:
@@ -563,24 +511,24 @@ class GraphStore:
             self._commit(table, [entry] + tail)
         return snap_id
 
-    def vacuum(self, table: str, orphan_grace_s: float = 3600.0
-               ) -> list[str]:
+    def vacuum(self, table: str) -> list[str]:
         """Iceberg: ``expire_snapshots`` + orphan-file cleanup —
-        delete snapshot directories no longer referenced by the
-        manifest (after compaction or rollback).
+        delete snapshot directories that the manifest no longer
+        references (after compaction, or a ``current`` rewrite).
 
         Runs under the commit lock so the live set cannot change
-        mid-sweep.  Directories younger than ``orphan_grace_s`` are
-        skipped: a concurrent writer materializes its parquet BEFORE
-        committing the manifest entry, so a just-written uncommitted
-        snapshot must not be swept (the standard orphan-retention
-        rule; pass 0 only when no writers can be active)."""
+        mid-sweep. A directory is kept until ``VACUUM_GRACE_S`` after
+        its mtime: :meth:`_commit` sets that when it drops the
+        directory from the manifest, so a reader still scanning the
+        previous file set keeps it, and a concurrent writer's
+        snapshot, materialized BEFORE its manifest entry is
+        committed, is as young as its write."""
         import shutil
         tdir = os.path.join(self.root, table)
         removed = []
         with self._commit_lock(table):
             live = {s["id"] for s in self._read_manifest(table)}
-            cutoff = time.time() - orphan_grace_s
+            cutoff = time.time() - VACUUM_GRACE_S
             for name in sorted(os.listdir(tdir)):
                 full = os.path.join(tdir, name)
                 if (os.path.isdir(full) and name not in live
@@ -589,9 +537,21 @@ class GraphStore:
                     removed.append(name)
         return removed
 
-    def truncate(self, table: str) -> None:
-        with self._commit_lock(table):
-            self._commit(table, [])
+    def upkeep(self) -> None:
+        """The store's one upkeep path, run by ``run_pipeline`` after
+        each commit: every table a commit writes that has more than
+        ``COMPACT_AFTER`` live snapshots is compacted, then every one
+        is vacuumed (``current`` holds one snapshot, so it is only
+        vacuumed).
+
+        A :class:`ConcurrentCommitError` means a peer compacted or is
+        vacuuming the same table, so its upkeep is being done; it is
+        swallowed, and the commit that ran this still succeeds."""
+        for table in ("edge", "node", "provenance", "current"):
+            with contextlib.suppress(ConcurrentCommitError):
+                if len(self._read_manifest(table)) > COMPACT_AFTER:
+                    self.compact(table)
+                self.vacuum(table)
 
 
 # -- resume / incremental recompute ----------------------------------------

@@ -345,9 +345,11 @@ def extract_microdata(url: str, html: str) -> list[dict]:
                 elif not void:
                     captures.append([psubj, preds, []])
                     owns_capture = True
-        if is_item:
-            items.append((subj, _vocab_of(types)))
         if not void:
+            # a void or self-closing item has no content, so it opens
+            # no item: only an element's end pops one
+            if is_item:
+                items.append((subj, _vocab_of(types)))
             frames.append((tag, is_item, owns_capture))
     return ([_row(url, *t) for t in out]
             + [_row(url, error=e) for e in errors])

@@ -17,6 +17,8 @@
       naming the version reads see                     operators/graph.py
     → provenance append (the resume log): one row per page,
       rows_out = size(triples)                         operators/graph.py
+    → upkeep: compact each table that has passed its snapshot
+      bound, vacuum every table                        operators/graph.py
 
 ``build_triples`` returns the triple DataFrame alone: the explode of
 the same per-page triple array (fused_triples), so both build triples
@@ -112,6 +114,11 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     The page and triple counts come from an Observation on the
     provenance append, not from a pass of their own.
 
+    After the commit, ``GraphStore.upkeep`` compacts each table whose
+    live snapshot count has passed ``COMPACT_AFTER`` and vacuums every
+    table, so reads and later commits scan a bounded number of
+    snapshots however many commits built the store.
+
     ``config_salt`` (see with_input_hash): fingerprint of the run's
     extraction configuration — a rerun with a changed configuration
     reprocesses everything instead of silently skipping.
@@ -158,5 +165,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
                 F.sum("rows_out").alias("triples")), "provenance")
         finally:
             cached.unpersist()
+    store.upkeep()
     return {"pages": counts.get["pages"], "triples": counts.get["triples"],
             "skipped": False, "duration_s": round(duration, 3)}

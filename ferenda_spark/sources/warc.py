@@ -42,6 +42,8 @@ from typing import Iterable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ferenda_spark.functions.markup import DATA, END, START, attrs, events
+
 CRLF = b"\r\n"
 _GZIP_MAGIC = b"\x1f\x8b"
 
@@ -655,31 +657,46 @@ def build_metadata_record(url: str, ts, meta_json: str) -> bytes:
     return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
 
 
+def _title_and_links(html: str) -> tuple[str | None, list[str]]:
+    """The WAT envelope's ``title`` and ``links`` of one page, from one
+    loop over the markup tokenizer's events: the stripped text of the
+    first ``<title>`` element (None without one), and the ``href`` of
+    every ``<a>`` start tag, unescaped as ``anchors.parse_anchors``
+    reads it, except empty and fragment-only ones."""
+    title: list[str] | None = None
+    in_title = False
+    links: list[str] = []
+    for kind, value, m in events(html):
+        if kind == DATA:
+            if in_title:
+                title.append(value)
+        elif value == "title" and title is None and kind == START:
+            title, in_title = [], True
+        elif value == "title" and in_title and kind & END:
+            in_title = False
+        elif value == "a" and kind & START:
+            href = attrs(m).get("href")
+            if href and not href.startswith("#"):
+                links.append(href)
+    return (None if title is None else "".join(title).strip()), links
+
+
 def wat_segments_from_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html) → one WAT segment blob per
     partition: a ``metadata`` record per page whose JSON envelope
     carries the fields a link-graph consumer needs — ``url``, ``ts``,
     ``title`` and the href ``links`` — so webgraph construction
     (host_graph, pagerank, anchors) runs off the ~20×-smaller WAT
-    layer without touching raw HTML.  The envelope comes from two
-    byte regexes of its own, not from the markup tokenizer: ``links``
-    are the hrefs of ``<a>`` tags whose value is quoted, non-empty and
-    does not start with ``#``, as written (charrefs not decoded;
-    unquoted, empty and fragment-only hrefs are dropped), and
-    ``title`` is the stripped raw text of the first ``<title>``.  JSON
-    is serialized with sorted keys so rebuilt archives are
-    byte-identical."""
+    layer without touching raw HTML. ``title`` and ``links`` come from
+    the markup tokenizer (:func:`_title_and_links`), so a WAT link is
+    the href ``anchors.anchor_pairs`` reads from the same html, quoted
+    or not, with its charrefs decoded. JSON is serialized with sorted
+    keys so rebuilt archives are byte-identical."""
     import json as _json
-    import re as _re
 
     import pandas as pd
 
     src = pages.select("url", "warc_ts", "html")
-    href_re = _re.compile(
-        br"""<a\s[^>]*?href\s*=\s*["']([^"'#][^"']*)["']""",
-        _re.IGNORECASE | _re.DOTALL)
-    title_re = _re.compile(br"<title[^>]*>(.*?)</title>",
-                           _re.IGNORECASE | _re.DOTALL)
 
     def to_segments(batches):
         import pandas as _pd
@@ -700,12 +717,8 @@ def wat_segments_from_pages(pages: DataFrame) -> DataFrame:
                 if not wrote:
                     emit(build_warcinfo_record("segment.warc.wat"))
                     wrote = True
-                raw = bytes(html)
-                links = [m.group(1).decode("utf-8", "replace")
-                         for m in href_re.finditer(raw)]
-                tm = title_re.search(raw)
-                title = (tm.group(1).decode("utf-8", "replace").strip()
-                         if tm else None)
+                title, links = _title_and_links(
+                    bytes(html).decode("utf-8", "replace"))
                 env = _json.dumps(
                     {"url": url, "ts": format_warc_ts(ts),
                      "title": title, "links": links},

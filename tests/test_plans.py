@@ -570,14 +570,18 @@ def test_read_current_is_scans_and_one_broadcast_join(spark, tmp_path):
         in broadcast_side, plan
 
 
-def test_read_current_jobs_do_not_grow_with_commits(spark, tmp_path):
+def test_read_current_jobs_do_not_grow_with_commits(spark, tmp_path,
+                                                   monkeypatch):
     """Building read_current("edge") starts no Spark job (the scans
     take their schemas from the manifest), and running it takes the
     same number of jobs over 1, 2 and 5 commits, with one broadcast
-    of current whatever the snapshot count."""
+    of current whatever the snapshot count. Compaction is held off, so
+    the five commits leave five snapshots."""
     from ferenda_spark.fixtures.pages import entities_df, pages_df
+    from ferenda_spark.operators import graph
     from ferenda_spark.operators.graph import GraphStore
     from ferenda_spark.pipeline import run_pipeline
+    monkeypatch.setattr(graph, "COMPACT_AFTER", 5)
     sc = spark.sparkContext
     pages, ents = pages_df(spark, 10, partitions=2), entities_df(spark)
     store = GraphStore(spark, str(tmp_path / "g"))

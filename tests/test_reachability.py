@@ -9,15 +9,22 @@ walks it to a fixpoint:
 * a top-level ``def``, ``class`` or constant of a reached package module
   is reached when reached code names it, as a ``Name``, an
   ``Attribute``, an import alias or an identifier string constant;
+* a method of a reached class is reached when reached code names it,
+  the same way; a dunder method is reached with its class, since the
+  language calls it;
 * reached code is a whole root file, the module-level statements of a
-  reached module, and the bodies of reached top-level definitions, so a
+  reached module, the bodies of reached top-level functions and
+  constants, a reached class without its methods (bases, decorators,
+  class-level statements) and the bodies of its reached methods, so a
   definition named only from inside an unreached one stays unreached.
 
 Names match by identifier, not by module, which errs towards calling a
 definition reached.  Anything unreached is deleted together with its
-unit tests, unless ``ALLOWLIST`` keeps it for one of two reasons: it is
-the Python restatement a remaining test uses as the expected value of a
-reached definition (``ORACLE``), or it is test harness (``HARNESS``).
+unit tests, unless ``ALLOWLIST`` keeps it for one of three reasons: it
+is the Python restatement a remaining test uses as the expected value
+of a reached definition (``ORACLE``), it is test harness
+(``HARNESS``), or it is a method a framework calls by its name
+(``CALLBACK``).
 
 The root files' own top-level definitions (``__spark_entry__.py``,
 ``bench.py`` and ``tools/*.py``) are walked the same way: one is
@@ -40,6 +47,7 @@ reach the behaviour no other way).
 """
 
 import ast
+import copy
 import operator
 import re
 from pathlib import Path
@@ -49,6 +57,7 @@ PACKAGE = "ferenda_spark"
 
 ORACLE = "test oracle for "
 HARNESS = "test harness: "
+CALLBACK = "framework callback: "
 DEPLOYMENT = "deployment setting: "
 
 ALLOWLIST = {
@@ -68,6 +77,8 @@ ALLOWLIST = {
         HARNESS + "the graph compare precision_recall counts, as frames",
     "operators.metadata.assert_required_predicates":
         HARNESS + "rdf:type-per-subject check in test_triples",
+    "functions.tablefns.ChunkWords.eval":
+        CALLBACK + "spark.udtf calls a registered UDTF's eval",
 }
 
 
@@ -169,16 +180,43 @@ def _units(tree):
     return units, rest
 
 
+_FUNCTIONS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _split_classes(stmts):
+    """A unit's statements with each class stripped of its methods,
+    and {``Class.method``: its defs}."""
+    shells, methods = [], {}
+    for stmt in stmts:
+        if isinstance(stmt, ast.ClassDef):
+            shell = copy.copy(stmt)
+            shell.body = [s for s in stmt.body
+                          if not isinstance(s, _FUNCTIONS)] or [ast.Pass()]
+            for s in stmt.body:
+                if isinstance(s, _FUNCTIONS):
+                    methods.setdefault(f"{stmt.name}.{s.name}", []).append(s)
+            stmt = shell
+        shells.append(stmt)
+    return shells, methods
+
+
 def _reach(repo, package, roots, keep):
     """Walk the program to its fixpoint: (parsed package modules as
     {name: (rest refs, {unit: refs}, units, rest)}, reached modules,
-    reached (module, unit) pairs, the parsed root files)."""
+    reached (module, unit) pairs, the parsed root files).  Units are
+    top-level definitions, each class without its methods, and the
+    methods as ``Class.method``."""
     repo = Path(repo)
     modules = {}
     for path in sorted((repo / package).rglob("*.py")):
         name = _module_name(path, repo)
         is_package = path.name == "__init__.py"
         units, rest = _units(ast.parse(path.read_text(), str(path)))
+        split = {}
+        for u, stmts in list(units.items()):
+            units[u], methods = _split_classes(stmts)
+            split.update(methods)
+        units.update(split)
         modules[name] = (
             _refs(rest, name, is_package),
             {u: _refs(stmts, name, is_package) for u, stmts in units.items()},
@@ -211,8 +249,13 @@ def _reach(repo, package, roots, keep):
             if m not in reached_mods:
                 continue
             for u, refs in units.items():
-                kept = f"{m[prefix:]}.{u}" in keep
-                if (m, u) not in reached_units and (kept or u in names):
+                if (m, u) in reached_units:
+                    continue
+                cls, _, name = u.rpartition(".")
+                if cls and (m, cls) not in reached_units:
+                    continue
+                dunder = cls and name.startswith("__") and name.endswith("__")
+                if dunder or name in names or f"{m[prefix:]}.{u}" in keep:
                     reached_units.add((m, u))
                     take(refs)
                     changed = True
@@ -220,19 +263,25 @@ def _reach(repo, package, roots, keep):
 
 
 def unreached(repo, package=PACKAGE, roots=None, keep=()):
-    """(unreached modules, unreached top-level definitions), each as
-    names dotted below ``package``, for the program rooted at ``roots``
-    (default: the entry point, ``bench.py``, ``tools/`` and
-    ``perfbench/``).  Definitions in ``keep`` count as reached, and so
-    does what they use."""
+    """(unreached modules, unreached top-level definitions and
+    unreached methods of reached classes), each as names dotted below
+    ``package``, for the program rooted at ``roots`` (default: the
+    entry point, ``bench.py``, ``tools/`` and ``perfbench/``).
+    Definitions in ``keep`` count as reached, and so does what they
+    use."""
     modules, reached_mods, reached_units, _ = _reach(repo, package, roots,
                                                      keep)
     prefix = len(package) + 1
     dead_mods = {m[prefix:] for m in modules
                  if m not in reached_mods and m != package}
-    dead_defs = {f"{m[prefix:]}.{u}" if m != package else u
-                 for m in reached_mods for u in modules[m][1]
-                 if (m, u) not in reached_units}
+    dead_defs = set()
+    for m in reached_mods:
+        for u in modules[m][1]:
+            cls = u.rpartition(".")[0]
+            # an unreached class is reported once, not per method
+            if (m, u) not in reached_units and (
+                    not cls or (m, cls) in reached_units):
+                dead_defs.add(f"{m[prefix:]}.{u}" if m != package else u)
     return dead_mods, dead_defs
 
 
@@ -393,9 +442,20 @@ def one_value_options(repo, package=PACKAGE, roots=None):
     program = list(root_trees)
     for m in sorted(reached_mods):
         _, _, units, rest = modules[m]
-        tree = ast.Module(body=[s for u, stmts in units.items()
-                                if (m, u) in reached_units for s in stmts]
-                          + rest, type_ignores=[])
+        body = []
+        for u, stmts in units.items():
+            if (m, u) not in reached_units or "." in u:
+                continue
+            for stmt in stmts:
+                if isinstance(stmt, ast.ClassDef):
+                    # the class with its reached methods put back
+                    stmt = copy.copy(stmt)
+                    stmt.body = stmt.body + [
+                        d for meth, defs in units.items()
+                        if meth.startswith(f"{u}.")
+                        and (m, meth) in reached_units for d in defs]
+                body.append(stmt)
+        tree = ast.Module(body=body + rest, type_ignores=[])
         program.append(tree)
         collect(tree, m[prefix:] if m != package else "", False)
 
@@ -422,7 +482,14 @@ def test_allowlist_entries_are_unreached_and_justified():
     stale = sorted(set(ALLOWLIST) - dead_defs)
     assert not stale, f"allowlisted but reached (drop the entry): {stale}"
     for qual, reason in ALLOWLIST.items():
-        assert reason.startswith((ORACLE, HARNESS)), (qual, reason)
+        assert reason.startswith((ORACLE, HARNESS, CALLBACK)), (qual, reason)
+        if reason.startswith(CALLBACK):
+            # only a method is called by a framework through its name
+            module, cls, _ = qual.rsplit(".", 2)
+            src = (REPO / PACKAGE / (module.replace(".", "/") + ".py"))
+            assert re.search(rf"^class {cls}\b", src.read_text(), re.M), \
+                (qual, cls)
+            continue
         if reason.startswith(ORACLE):
             module, _ = qual.rsplit(".", 1)
             checked = reason[len(ORACLE):]
@@ -447,6 +514,33 @@ def test_scanner_reports_exactly_the_unreached_definitions(tmp_path):
     dead_mods, dead_defs = unreached(tmp_path, "pkg", [root])
     assert dead_mods == {"orphan"}
     assert dead_defs == {"lib.unused", "lib.helper"}
+
+
+def test_scanner_reports_exactly_the_unreached_methods(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "lib.py").write_text(
+        "class Store:\n"
+        "    LIMIT = 3\n\n"
+        "    def __init__(self):\n        self.n = self.LIMIT\n\n"
+        "    def used(self):\n        return self._step()\n\n"
+        "    def _step(self):\n        return 1\n\n"
+        "    def unused(self):\n        return self._only_unused()\n\n"
+        "    def _only_unused(self):\n        return 2\n\n"
+        "    def callback(self):\n        return 3\n\n"
+        "class Dead:\n"
+        "    def used(self):\n        return 4\n")
+    root = tmp_path / "main.py"
+    root.write_text("from pkg.lib import Store\nprint(Store().used())\n")
+    # a dead class is reported once; its methods are not listed
+    assert unreached(tmp_path, "pkg", [root]) == (set(), {
+        "lib.Store.unused", "lib.Store._only_unused", "lib.Store.callback",
+        "lib.Dead"})
+    # a kept method is reached, and so is what it calls
+    assert unreached(tmp_path, "pkg", [root],
+                     keep={"lib.Store.unused"})[1] == {
+        "lib.Store.callback", "lib.Dead"}
 
 
 def test_root_files_reach_their_definitions():

@@ -1,8 +1,13 @@
-"""Snapshot resume: rerun is a no-op; partial rollback reprocesses
-only missing urls; final edge set equals the single-run result."""
+"""Snapshot resume: rerun is a no-op; a partial run reprocesses only
+missing urls; final edge set equals the single-run result; compaction
+and vacuum, alone and racing a commit, change no view."""
+
+import os
+import time
 
 from pyspark.sql import functions as F
 
+import ferenda_spark.operators.graph as graph
 from ferenda_spark.fixtures.pages import entities_df, pages_df
 from ferenda_spark.operators.graph import GraphStore, pending_pages
 from ferenda_spark.pipeline import run_pipeline
@@ -123,7 +128,8 @@ def test_null_html_page_commits_and_resumes(spark, tmp_path):
     assert run_pipeline(spark, batch, ents, store)["skipped"] is True
 
 
-def test_compaction_preserves_contents_and_resume(spark, tmp_path):
+def test_compaction_preserves_contents_and_resume(spark, tmp_path,
+                                                  monkeypatch):
     """compact() rewrites N append snapshots into one; table contents
     are row-identical, the manifest holds a single snapshot, and a
     rerun after compaction is still a no-op (resume state lives in
@@ -138,22 +144,23 @@ def test_compaction_preserves_contents_and_resume(spark, tmp_path):
     assert len(store.snapshots("edge")) == 2
     before = _edge_set(store)
 
-    store.compact("edge", target_partitions=2)
+    store.compact("edge")
     snaps = store.snapshots("edge")
     assert len(snaps) == 1 and snaps[0]["compacted"]
     assert _edge_set(store) == before
     files = _glob.glob(str(tmp_path / "g" / "edge" / snaps[0]["id"]
                            ) + "/*.parquet")
-    assert len(files) <= 2
+    assert len(files) <= spark.sparkContext.defaultParallelism
 
     # old snapshot dirs survive until vacuum (reader grace period),
     # then are reclaimed without changing table contents
     edge_dir = tmp_path / "g" / "edge"
     n_dirs_before = len([p for p in edge_dir.iterdir() if p.is_dir()])
     assert n_dirs_before == 3                    # 2 old + 1 compacted
-    # with the default orphan grace, freshly-written dirs are kept
+    # within the grace period, just-dropped dirs are kept
     assert store.vacuum("edge") == []
-    removed = store.vacuum("edge", orphan_grace_s=0)
+    monkeypatch.setattr(graph, "VACUUM_GRACE_S", 0.0)
+    removed = store.vacuum("edge")
     assert len(removed) == 2
     assert _edge_set(store) == before
 
@@ -186,7 +193,7 @@ def test_compaction_merges_concurrent_append(spark, tmp_path):
 
     store._read_manifest = read_with_concurrent_append
     try:
-        store.compact("t", target_partitions=1)
+        store.compact("t")
     finally:
         store._read_manifest = orig
 
@@ -198,40 +205,146 @@ def test_compaction_merges_concurrent_append(spark, tmp_path):
 
 def test_compaction_aborts_when_rewrite_set_changes(spark, tmp_path):
     """If the snapshots being rewritten are no longer live at commit
-    time (concurrent compact/rollback), the compaction must abort and
-    clean up its orphan rather than duplicate or resurrect rows."""
+    time (a peer's compaction rewrote them), the compaction must abort
+    and clean up its orphan rather than duplicate rows."""
     import pytest as _pytest
     from ferenda_spark.operators.graph import ConcurrentCommitError
     store = GraphStore(spark, str(tmp_path / "g"))
+    peer = GraphStore(spark, str(tmp_path / "g"))
     df1 = spark.createDataFrame([(1, "a")], "k long, v string")
     df2 = spark.createDataFrame([(2, "b")], "k long, v string")
     store.append(df1, "t")
     store.append(df2, "t")
 
     orig = store._read_manifest
-    fired = {"done": False}
+    peer_snap = []
 
-    def read_with_concurrent_rollback(table):
+    def read_with_concurrent_compact(table):
         snaps = orig(table)
-        if not fired["done"]:
-            fired["done"] = True
-            store.rollback("t")       # competing writer drops snap 2
+        if not peer_snap:
+            # competing writer rewrites both snapshots first
+            peer_snap.append(peer.compact("t"))
         return snaps
 
-    store._read_manifest = read_with_concurrent_rollback
+    store._read_manifest = read_with_concurrent_compact
     try:
         with _pytest.raises(ConcurrentCommitError):
-            store.compact("t", target_partitions=1)
+            store.compact("t")
     finally:
         store._read_manifest = orig
 
-    # table reflects the rollback, untouched by the aborted compact
-    rows = {(r["k"], r["v"]) for r in store.read("t").collect()}
-    assert rows == {(1, "a")}
+    # the table is the peer's compaction, untouched by the aborted one
+    assert [s["id"] for s in store.snapshots("t")] == peer_snap
+    rows = sorted((r["k"], r["v"]) for r in store.read("t").collect())
+    assert rows == [(1, "a"), (2, "b")]
     # the aborted compact's directory was removed
     names = {p.name for p in (tmp_path / "g" / "t").iterdir()
              if p.is_dir()}
-    assert not any(n.startswith("compact-") for n in names)
+    assert {n for n in names if n.startswith("compact-")} == set(peer_snap)
+
+
+def test_vacuum_grace_starts_when_a_snapshot_is_dropped(spark, tmp_path,
+                                                        monkeypatch):
+    """A snapshot written long ago and compacted away just now is kept
+    for the grace period: a reader planned on the old manifest may
+    still scan it. The directories current drops each commit are
+    vacuumed by run_pipeline's upkeep once their grace has passed."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    for k in (1, 2):
+        store.append(spark.createDataFrame([(k,)], "k long"), "t")
+    old = [s["path"] for s in store.snapshots("t")]
+    two_hours_ago = time.time() - 2 * 3600
+    for path in old:
+        os.utime(path, (two_hours_ago, two_hours_ago))
+    store.compact("t")
+    assert store.vacuum("t") == []
+    assert all(os.path.isdir(p) for p in old)
+
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    monkeypatch.setattr(graph, "VACUUM_GRACE_S", 0.0)
+    run_pipeline(spark, pages, ents, store)
+    run_pipeline(spark, pages.withColumn(
+        "html", F.concat(F.col("html"), F.lit(b" "))), ents, store)
+    cur = tmp_path / "g" / "current"
+    assert [p.name for p in cur.iterdir() if p.is_dir()] == [
+        s["id"] for s in store.snapshots("current")]
+
+
+def test_upkeep_compacts_past_the_bound(spark, tmp_path, monkeypatch):
+    """run_pipeline compacts each table whose live snapshot count has
+    passed COMPACT_AFTER; the view and the resume state are unchanged."""
+    monkeypatch.setattr(graph, "COMPACT_AFTER", 2)
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, N, partitions=2), entities_df(spark)
+    tables = ("edge", "node", "provenance")
+    for i in range(3):
+        run_pipeline(spark, pages.filter(F.pmod(F.hash("url"), F.lit(3)) == i),
+                     ents, store)
+        # the third commit passes the bound of 2 and compacts each
+        want = 1 if i == 2 else i + 1
+        assert [len(store.snapshots(t)) for t in tables] == [want] * 3
+    for table in tables:
+        (entry,) = store.snapshots(table)
+        assert entry["compacted"], table
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch")
+    assert run_pipeline(spark, pages, ents, store)["skipped"] is True
+
+
+def test_upkeep_swallows_a_peer_compaction(spark, tmp_path, monkeypatch):
+    """A peer that compacts the edge table while this run's upkeep is
+    compacting it makes that compaction abort with
+    ConcurrentCommitError; the upkeep swallows it, the run still
+    reports its commit, and the view is the peer's compaction."""
+    monkeypatch.setattr(graph, "COMPACT_AFTER", 1)
+    store = GraphStore(spark, str(tmp_path / "g"))
+    peer = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, N, partitions=2), entities_df(spark)
+    half = pages.filter(F.md5("url").rlike("^[0-7]"))
+    run_pipeline(spark, half, ents, store)
+
+    orig = store._write_snapshot
+    peer_snap = []
+
+    def write_after_peer(df, table, snap_id, **extra):
+        if table == "edge" and snap_id.startswith("compact-"):
+            peer_snap.append(peer.compact("edge"))
+        return orig(df, table, snap_id, **extra)
+
+    store._write_snapshot = write_after_peer
+    stats = run_pipeline(spark, pages, ents, store)
+    assert stats["pages"] == N - half.count() and not stats["skipped"]
+    assert [s["id"] for s in store.snapshots("edge")] == peer_snap
+    for table in ("node", "provenance"):
+        (entry,) = store.snapshots(table)
+        assert entry["compacted"], table
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch")
+
+
+def test_compaction_between_append_and_merge_keeps_the_commit(
+        spark, tmp_path):
+    """A peer's compaction that lands after a commit's edge append and
+    before its current merge rewrites that commit's rows with their
+    commit id, so the merge makes them visible: no row is lost."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    peer = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, N, partitions=2), entities_df(spark)
+    run_pipeline(spark, pages.filter(F.md5("url").rlike("^[0-7]")), ents,
+                 store)
+
+    orig = store.merge_current
+
+    def merge_after_peer_compaction(batch, commit_id):
+        peer.compact("edge")
+        return orig(batch, commit_id)
+
+    store.merge_current = merge_after_peer_compaction
+    assert run_pipeline(spark, pages, ents, store)["pages"] > 0
+    (entry,) = store.snapshots("edge")
+    assert entry["compacted"]
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch")
 
 
 def _current_edge_set(store):
@@ -327,49 +440,21 @@ def test_read_current_node_dedups_replay(spark, tmp_path, monkeypatch):
     assert {(r["uri"], r["src_hash"]): r["props"] for r in rows} == want
     assert any(want.values())
 
-def test_compact_current_only_materializes_latest_view(spark, tmp_path):
-    """compact(current_only=True) rewrites read_current: superseded
-    versions and orphan appends are gone from plain read(), resume
-    state (provenance) untouched."""
-    store = GraphStore(spark, str(tmp_path / "g"))
-    pages = pages_df(spark, N, partitions=2)
-    ents = entities_df(spark)
-    run_pipeline(spark, pages, ents, store)
-    url0 = (pages.filter(F.col("url").contains("/res/rfc/"))
-            .orderBy("url").first()["url"])
-    changed = pages.withColumn(
-        "html", F.when(F.col("url") == url0,
-                       F.concat(F.col("html"), F.lit(b" "))
-                       ).otherwise(F.col("html")))
-    run_pipeline(spark, changed, ents, store)
-    store.append(store.read("edge").limit(3)
-                 .withColumn("src_hash", F.lit("deadbeef")), "edge")
-
-    want = _current_edge_set(store)
-    store.compact("edge", target_partitions=2, current_only=True)
-    store.vacuum("edge", orphan_grace_s=0)
-    got_raw = {tuple(r) for r in store.read("edge")
-               .select("subj", "pred", "obj").collect()}
-    assert got_raw == want
-    assert (store.read("edge").filter(F.col("src_url") == url0)
-            .select("src_hash").distinct().count()) == 1
-    # resume still a no-op after the rewrite
-    assert run_pipeline(spark, changed, ents, store)["skipped"] is True
-
-
 EDGE_COLS = ["src_url", "subj", "pred", "obj", "obj_is_literal",
              "obj_datatype", "obj_lang", "src_hash"]
 
 
 def _assert_current_is_scratch_build(spark, store, pages, ents, root):
-    """store.read_current("edge") equals a from-scratch build of
-    ``pages`` as a multiset (exceptAll empty both ways)."""
+    """store.read_current("edge") and ("node") equal a from-scratch
+    build of ``pages`` as multisets."""
     scratch = GraphStore(spark, str(root))
     run_pipeline(spark, pages, ents, scratch)
     got = store.read_current("edge").select(*EDGE_COLS)
     want = scratch.read("edge").select(*EDGE_COLS)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+    assert _multiset(store.read_current("node")) == _multiset(
+        scratch.read("node"))
 
 
 def test_read_current_identical_duplicate_page_seen_once(spark, tmp_path):
@@ -416,7 +501,7 @@ def test_read_current_after_compact_then_refresh(spark, tmp_path):
     run_pipeline(spark, pages.filter(F.md5("url").rlike("^[0-7]")), ents,
                  store)
     run_pipeline(spark, pages, ents, store)
-    store.compact("edge", target_partitions=2)
+    store.compact("edge")
     assert len(store.snapshots("edge")) == 1
 
     url0 = (pages.filter(F.col("url").contains("/res/rfc/"))
@@ -446,63 +531,6 @@ def test_read_current_refuses_store_without_current(spark, tmp_path):
     with pytest.raises(RuntimeError, match="new GraphStore"):
         run_pipeline(spark, pages.withColumn("html", F.concat(
             F.col("html"), F.lit(b" "))), ents, store)
-
-
-def test_time_travel_read_at(spark, tmp_path):
-    """read_at(snapshot_id) returns the table state AS OF that commit;
-    read_at(as_of_ts) resolves by commit timestamp; compaction expires
-    old snapshot ids (the Iceberg retention contract)."""
-    import pytest
-    store = GraphStore(spark, str(tmp_path / "g"))
-    s1 = store.append(spark.createDataFrame([(1,)], "v long"), "t")
-    ts_after_s1 = store.snapshots("t")[-1]["ts"]
-    s2 = store.append(spark.createDataFrame([(2,)], "v long"), "t")
-    store.append(spark.createDataFrame([(3,)], "v long"), "t")
-
-    assert {r["v"] for r in store.read_at("t", s1).collect()} == {1}
-    assert {r["v"] for r in store.read_at("t", s2).collect()} == {1, 2}
-    assert {r["v"] for r in store.read("t").collect()} == {1, 2, 3}
-    assert {r["v"] for r in store.read_at(
-        "t", as_of_ts=ts_after_s1).collect()} == {1}
-
-    with pytest.raises(KeyError, match="no snapshot at or before"):
-        store.read_at("t", as_of_ts=ts_after_s1 - 10_000)
-    with pytest.raises(ValueError, match="exactly one"):
-        store.read_at("t")
-    with pytest.raises(KeyError, match="not in table"):
-        store.read_at("t", "snap-nope")
-
-    # compaction rewrites the live set: old ids are no longer
-    # addressable, the current state is unchanged
-    store.compact("t")
-    with pytest.raises(KeyError, match="not in table"):
-        store.read_at("t", s1)
-    assert {r["v"] for r in store.read("t").collect()} == {1, 2, 3}
-    last = store.snapshots("t")[-1]["id"]
-    assert {r["v"] for r in store.read_at("t", last).collect()} == {1, 2, 3}
-
-
-def test_time_travel_ts_is_commit_time_and_compaction_guard(spark, tmp_path):
-    """Review fix: as_of_ts uses manifest-prefix semantics; a ts
-    inside a compaction's reordering raises instead of resolving to a
-    state that no longer exists."""
-    import pytest
-    store = GraphStore(spark, str(tmp_path / "g"))
-    store.append(spark.createDataFrame([(1,)], "v long"), "t")
-    ts1 = store.snapshots("t")[-1]["ts"]
-    store.append(spark.createDataFrame([(2,)], "v long"), "t")
-    store.compact("t")
-    store.append(spark.createDataFrame([(3,)], "v long"), "t")
-    # after compaction the pre-compaction instants are unaddressable
-    # (either refusal branch is the same retention contract: nothing
-    # at-or-before, or inside the rewrite's ts inversion)
-    with pytest.raises(KeyError,
-                       match="no snapshot at or before|rewritten by"):
-        store.read_at("t", as_of_ts=ts1)
-    # the post-compaction commit IS addressable and complete
-    ts3 = store.snapshots("t")[-1]["ts"]
-    assert {r["v"] for r in store.read_at(
-        "t", as_of_ts=ts3).collect()} == {1, 2, 3}
 
 
 # --- dependency-triggered regeneration (regen.py) --------------------------

@@ -188,6 +188,21 @@ def test_microdata_after_unknown_marked_section():
         ("u#md/0", "schema:name", "Ada", True, None, None)}
 
 
+def test_microdata_void_item_opens_no_scope():
+    # a void or self-closing itemscope element is an item without
+    # content: the enclosing item's end tag closes the enclosing item,
+    # so a later property outside every item is an error row
+    for child in ('<meta itemscope itemprop="a">',
+                  '<link itemscope itemprop="a"/>',
+                  '<span itemscope itemprop="a"/>'):
+        rows = extract_microdata(
+            "u", f'<div itemscope>{child}</div><span itemprop="b">x</span>')
+        assert _triples(rows) == {
+            ("u#md/0", "a", "u#md/1", False, None, None)}, child
+        errs = [r["error"] for r in rows if r["error"]]
+        assert errs == ["<span itemprop='b'> outside any item"], child
+
+
 def test_microdata_vocabless_and_curie_props():
     # no itemtype → names stay verbatim; ':' names never re-prefixed
     rows = extract_microdata(

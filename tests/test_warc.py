@@ -340,3 +340,24 @@ def test_wat_envelope_and_link_extraction(spark):
     env = json.loads(bytes(recs[0]["body"]).decode("utf-8"))
     assert env["title"] == "My Page"
     assert list(env) == sorted(env)
+
+
+def test_wat_links_are_the_anchor_hrefs(spark):
+    """WAT links are read by the markup tokenizer, as anchor_pairs
+    reads hrefs: an unquoted href is kept and a charref is decoded;
+    empty and fragment-only hrefs are still dropped."""
+    from datetime import datetime
+
+    from ferenda_spark.operators.anchors import parse_anchors
+    from ferenda_spark.sources.warc import links_roundtrip_wat
+    html = (b'<title>A &amp; B</title><a href=/x>x</a>'
+            b'<a href="/a&amp;b">ab</a><a href="">e</a><a href=#f>f</a>')
+    pages = spark.createDataFrame(
+        [("https://x.example/", datetime(2024, 3, 1), bytearray(html))],
+        "url string, warc_ts timestamp, html binary")
+    got = sorted(r["dst"] for r in links_roundtrip_wat(pages).collect())
+    assert got == ["/a&b", "/x"]
+    assert got == sorted(h for h, _ in parse_anchors(html)
+                         if h and not h.startswith("#"))
+    from ferenda_spark.sources.warc import _title_and_links
+    assert _title_and_links(html.decode()) == ("A & B", ["/x", "/a&b"])
