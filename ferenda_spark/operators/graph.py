@@ -5,11 +5,12 @@ The Spark restatement of the reference's relate/distill phases
 (/root/reference/ferenda/documentrepository.py:1885-1995 ``relate``,
 documentstore.py:400-470 ``needed()`` mtime freshness, documententry.py
 :266-342 per-document status/duration lineage records): each stage
-writes to a snapshot-committed table; a rerun anti-joins its input
-against the last committed snapshot's (url, input_hash) set, so only
-new/changed documents reprocess, and a page's old versions stay in
-the tables. Which page version a read sees is decided at commit time,
-in the small ``current`` table (see :meth:`GraphStore.merge_current`).
+writes to a snapshot-committed table, and a page's old versions stay
+in the tables. Which page version is committed is recorded in one
+place, the small per-url ``current`` table: a read sees the version
+it names (:meth:`GraphStore.merge_current`), and a rerun anti-joins
+its input against it (:func:`pending_pages`), so only new or changed
+documents reprocess.
 After each commit, :meth:`GraphStore.upkeep` compacts the tables that
 have passed a snapshot bound and vacuums what compaction dropped.
 
@@ -31,7 +32,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -267,10 +268,16 @@ class GraphStore:
         The entry records the schema a scan of the directory returns
         (:func:`_scan_schema`), so a read plans from the manifest and
         opens no parquet footer — Iceberg keeps the schema in table
-        metadata for the same reason."""
+        metadata for the same reason. Without its native library,
+        Hadoop's local file system starts a ``chmod`` process for each
+        directory and file it makes, so the snapshot's fixed staging
+        directories are made here, and no ``_SUCCESS`` file is written
+        (the manifest entry is the snapshot's commit)."""
         path = os.path.join(self.root, table, snap_id)
         cols = self.partition_spec.get(table) or []
-        w = df.write.mode("overwrite")
+        os.makedirs(os.path.join(path, "_temporary", "0", "_temporary"))
+        w = df.write.mode("append").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         if cols:
             w = w.partitionBy(*cols)
         w.parquet(path)
@@ -286,10 +293,10 @@ class GraphStore:
         committed rows into a plain ``append`` cannot make them
         visible.
 
-        A store whose provenance predates the ``current`` table cannot
-        take a commit: its earlier commits are in no ``current`` row,
-        so a new one would hide them."""
-        self._require_current()
+        Nothing inside the commit is visible until its last write,
+        :meth:`merge_current`, names it in ``current``: a commit that
+        dies before then leaves rows under an id no read or resume
+        asks for, and its pages are rerun."""
         self._open_commit = f"commit-{uuid.uuid4().hex}"
         try:
             yield self._open_commit
@@ -314,41 +321,31 @@ class GraphStore:
     def merge_current(self, pages: DataFrame, commit_id: str) -> None:
         """Iceberg: ``MERGE INTO current USING pages ON url`` — make
         ``commit_id``'s version of each of ``pages``' urls the one
-        :meth:`read_current` shows.
+        :meth:`read_current` shows and :func:`pending_pages` resumes
+        against. It is a commit's last write, and the one that
+        publishes it.
 
-        ``current(url, input_hash, commit_id)`` holds one row per url.
-        The rewrite is the previous table minus ``pages``' urls plus
-        one winner per url of ``pages``: its greatest ``input_hash``
-        when a batch holds two versions of a url. The read-merge-write
+        ``pages`` holds one row per url (:func:`pending_pages` reduces
+        a batch so), and ``current(url, input_hash, commit_id)`` keeps
+        one row per url: the rewrite is the previous table minus
+        ``pages``' urls plus ``pages``' rows. The read-merge-write
         runs under the ``current`` commit lock, so two writers'
         merges serialize and the later commit wins each url it
         touched. The previous table's directory leaves the manifest
         and is vacuumed once its grace period has passed."""
-        winners =(pages.groupBy("url")
-                   .agg(F.max("input_hash").alias("input_hash"))
-                   .select("url", "input_hash",
-                           F.lit(commit_id).alias("commit_id")))
+        rows = pages.select("url", "input_hash",
+                            F.lit(commit_id).alias("commit_id"))
         with self._commit_lock("current"):
             prev = self._read_manifest("current")
-            rows = winners
             if prev:
                 rows = (self._read_snapshots(prev)
                         .join(pages.select("url"), "url", "left_anti")
-                        .unionByName(winners))
-            # a bounded file count: the rewrite reads every file of
-            # the previous one, which would otherwise add files each
-            # commit
-            rows = rows.coalesce(self.spark.sparkContext.defaultParallelism)
-            entry = self._write_snapshot(rows, "current", f"snap-{commit_id}")
+                        .unionByName(rows))
+            # AQE sizes the files from the bytes: one for a small store,
+            # and never more than the shuffle partitions
+            entry = self._write_snapshot(rows.hint("rebalance"), "current",
+                                         f"snap-{commit_id}")
             self._commit("current", [entry])
-
-    def _require_current(self) -> None:
-        if self.exists("provenance") and not self.exists("current"):
-            raise RuntimeError(
-                f"GraphStore {self.root} has provenance but no current "
-                f"table: it was committed before commits maintained "
-                f"one. Rebuild it: run_pipeline its pages into a new "
-                f"GraphStore.")
 
     def read(self, table: str) -> DataFrame:
         """Iceberg: ``spark.read.table(table)`` (current snapshot).
@@ -412,7 +409,8 @@ class GraphStore:
         * rows appended outside a commit, or by a commit that died
           before its ``current`` merge, match no ``current`` row and
           are INVISIBLE — the orphan snapshot of a writer that died
-          mid-batch never surfaces;
+          mid-batch never surfaces, even when it died in the store's
+          first commit, before any ``current`` existed;
         * rows of a url's superseded version are RETIRED — a changed
           page's old subgraph drops out because ``current`` names its
           new hash (the Iceberg analog is ``MERGE INTO`` on
@@ -433,18 +431,19 @@ class GraphStore:
         keeps each row at most once because ``current`` holds one row
         per url.
 
-        Tables without lineage columns (provenance itself, legacy
-        appends), and stores without provenance, pass through as
-        ``read``. A store with provenance but no ``current`` table
-        raises: it predates commit-time currency and must be rebuilt.
+        Tables without lineage columns (provenance itself, bulk
+        loads) pass through as ``read``. A lineage table in a store
+        with no ``current`` table has no committed row, so its view is
+        empty.
         """
         snaps = self._read_manifest(table)
         if not snaps:
             raise FileNotFoundError(f"table {table} has no snapshots")
         tagged = self._read_snapshots(snaps, tagged=True)
-        if "src_url" not in tagged.columns or not self.exists("provenance"):
+        if "src_url" not in tagged.columns:
             return tagged.drop(COMMIT_COL)
-        self._require_current()
+        if not self.exists("current"):
+            return tagged.drop(COMMIT_COL).where(F.lit(False))
         cur = self.read("current").select(
             F.col("url").alias("src_url"),
             F.col("input_hash").alias("src_hash"),
@@ -565,7 +564,7 @@ def with_input_hash(pages: DataFrame, config_salt: str = "") -> DataFrame:
     changing the config changes every input_hash, so the resume
     anti-join reprocesses the whole corpus and the changed-page
     contract retires each page's previous-config subgraph — instead
-    of a corrected rerun silently no-op'ing against provenance rows
+    of a corrected rerun silently no-op'ing against ``current`` rows
     committed under the wrong configuration.
 
     NULL html hashes as empty content rather than NULL: a NULL
@@ -583,42 +582,30 @@ def with_input_hash(pages: DataFrame, config_salt: str = "") -> DataFrame:
 
 def pending_pages(pages: DataFrame, store: GraphStore,
                   config_salt: str = "") -> DataFrame:
-    """Anti-join pages against the last committed provenance snapshot:
-    only urls that are new, changed (hash differs), or previously
-    failed remain — the ``needed()`` freshness check as a join.
+    """The pages a run must commit: the ``needed()`` freshness check
+    as an anti-join against ``current``, the store's one record of
+    what is committed. Only urls that are new, or whose committed
+    version differs, remain; with no ``current`` table every page
+    does.
 
-    At scale this is a shuffle-free broadcast when the committed set
-    is small relative to input, else an AQE-planned SMJ on url.
+    The batch is first reduced to one version per url, its greatest
+    ``input_hash``, before the anti-join: reduced after it, a rerun of
+    a batch holding two versions of a url would find the losing one
+    missing from ``current``, commit it, and flip the url every run.
+    The reduction costs one job over the url column alone, and a
+    window only when some url repeats.
     """
     hashed = with_input_hash(pages, config_salt)
-    if not store.exists("provenance"):
+    if not (pages.groupBy("url").count()
+            .filter(F.col("count") > 1).isEmpty()):
+        hashed = (hashed.withColumn("_latest", F.max("input_hash").over(
+                      Window.partitionBy("url")))
+                  .filter(F.col("input_hash") == F.col("_latest"))
+                  .drop("_latest").dropDuplicates(["url"]))
+    if not store.exists("current"):
         return hashed
-    done = (store.read("provenance")
-            .filter((F.col("stage") == "materialize") & F.col("success"))
-            .select("url", "input_hash").distinct())
+    done = store.read("current").select("url", "input_hash")
     return hashed.join(done, ["url", "input_hash"], "left_anti")
-
-
-def provenance_rows(pages: DataFrame, stage: str, commit_id: str,
-                    rows_out_col=None, duration_s: float = 0.0) -> DataFrame:
-    """One lineage row per (url × stage × attempt), with the commit
-    that made it and the physical partition id — per-partition
-    metrics per the north rule."""
-    hashed = pages if "input_hash" in pages.columns else with_input_hash(pages)
-    return hashed.select(
-        "url",
-        F.lit(stage).alias("stage"),
-        F.current_timestamp().alias("attempt_ts"),
-        F.lit(True).alias("success"),
-        F.lit(float(duration_s)).alias("duration_s"),
-        (rows_out_col if rows_out_col is not None else F.lit(0)
-         ).cast("long").alias("rows_out"),
-        F.lit(None).cast("string").alias("warnings"),
-        F.lit(None).cast("string").alias("error"),
-        "input_hash",
-        F.lit(commit_id).alias("commit_id"),
-        F.spark_partition_id().alias("partition_id"),
-    )
 
 
 # -- node/edge projections ---------------------------------------------------

@@ -3,20 +3,21 @@
 ``run_pipeline`` — the committing path — runs:
 
   pages (url, warc_ts, html, lang)
-    → pending_pages: input_hash + resume anti-join     operators/graph.py
+    → pending_pages: input_hash, one version per url, and
+      the resume anti-join against current             operators/graph.py
     → extract (Arrow UDF, publisher linking folded in,
       input_hash passed through)                       operators/extract.py
     → page_triples: (url, input_hash, triples)         operators/fused.py
-      — one html-free row per page version, the run's only
+      — one html-free row per page, the run's only
         persisted frame
     → edge append: its explode, lineage (src_url, src_hash) carried
       from the page row
     → node append: nodes_from_triples over those edges, grouped with
       their lineage
-    → current merge (publishes the commit): one row per url,
-      naming the version reads see                     operators/graph.py
-    → provenance append (the resume log): one row per page,
-      rows_out = size(triples)                         operators/graph.py
+    → provenance append: one row per page,
+      rows_out = size(triples)
+    → current merge (publishes the commit, last): one row
+      per url, naming the version reads and resume see operators/graph.py
     → upkeep: compact each table that has passed its snapshot
       bound, vacuum every table                        operators/graph.py
 
@@ -27,7 +28,8 @@ one way.
 The reference equivalent is parse → distill → relate
 (/root/reference/ferenda/documentrepository.py:1193-1216, 1885-1995);
 here every stage is a DataFrame transform, the only control crossings
-are Spark's own shuffles, and resume is the pending_pages anti-join.
+are Spark's own shuffles, and resume is the pending_pages anti-join
+against ``current``.
 """
 
 from __future__ import annotations
@@ -41,7 +43,6 @@ from ferenda_spark.operators.graph import (
     GraphStore,
     nodes_from_triples,
     pending_pages,
-    provenance_rows,
 )
 
 
@@ -82,34 +83,34 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     Returns run stats. Rerunning on the same input is a no-op (the
     resume contract: second run processes only uncommitted urls and
     the final edge table equals the single-run result).
+    ``pending_pages`` reduces the batch to one version per url, its
+    greatest ``input_hash``, so a batch holding a url twice commits
+    one version of it.
 
     One frame is cached: page_triples over the pending pages,
-    ``(url, input_hash, triples)`` — one row per page version, no
-    ``html``. The edge, node, current and provenance writes all read
-    it, so the Python parse and the triple expression run once per
-    page. The action that fills it checks the page keys: an identical
-    duplicate page (same url and input_hash) is dropped before
-    anything is written, so its edges are committed once. Lineage is
-    carried, never joined back: each edge is exploded from its page's
-    row and takes that row's url and hash as (src_url, src_hash), the
-    node rows group by the same pair, and each provenance row is its
-    page's row with ``rows_out = size(triples)``. Two versions of one
-    url in a batch therefore keep separate lineage.
+    ``(url, input_hash, triples)`` — one row per page, no ``html``.
+    The edge, node, provenance and current writes all read it, so the
+    Python parse and the triple expression run once per page; the
+    edge append is the action that fills it. Lineage is carried, never
+    joined back: each edge is exploded from its page's row and takes
+    that row's url and hash as (src_url, src_hash), the node rows
+    group by the same pair, and each provenance row is its page's row
+    with ``rows_out = size(triples)``.
 
     Commit protocol: the run is one ``GraphStore.commit`` with a
-    fresh commit id. Its edge and node appends record the id in
-    their manifest entries. ``GraphStore.merge_current`` then makes
-    this commit's version of each url the one
-    ``GraphStore.read_current`` shows: that rewrite of the small
-    ``current`` table, under its commit lock, is what publishes the
-    batch. The provenance append — the resume log, each row carrying
-    the commit id — comes after it. The writes are not atomic, and
-    every crash point is a replay: before the merge the appended
-    snapshots are orphans no read sees, and after it the pages are
+    fresh commit id. Its edge, node and provenance appends record the
+    id, and its last write, ``GraphStore.merge_current``, publishes
+    it: that rewrite of the small ``current`` table, under its commit
+    lock, makes this commit's version of each url the one
+    ``GraphStore.read_current`` shows and ``pending_pages`` resumes
+    against. The writes are not atomic, and every crash point before
+    the merge is a replay: the appended rows carry a commit id that
+    ``current`` never names, so no read sees them, and the pages are
     still pending, so a rerun recomputes them deterministically under
-    a new commit id and its merge replaces this one. A changed page
-    (new input_hash) reprocesses AND retires its previous version's
-    subgraph in the same merge.
+    a new commit id. Provenance therefore holds a row for every
+    committed page version, plus the rows of dead attempts. A changed
+    page (new input_hash) reprocesses AND retires its previous
+    version's subgraph in the same merge.
 
     The page and triple counts come from an Observation on the
     provenance append, not from a pass of their own.
@@ -135,15 +136,8 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
     with store.commit() as commit_id:
         cached = page_triples(
             _extract_linked(todo, entities, doc_url_regex)).persist()
-        per_page = cached
         try:
-            # The same page twice in the batch (same url and
-            # input_hash) would commit its edges twice. This check over
-            # the page keys is also the action that fills the cache.
-            if not (cached.groupBy("url", "input_hash").count()
-                    .filter(F.col("count") > 1).isEmpty()):
-                per_page = cached.dropDuplicates(["url", "input_hash"])
-            edges = per_page.select(
+            edges = cached.select(
                 F.col("url").alias("src_url"),
                 F.explode("triples").alias("t"),
                 F.col("input_hash").alias("src_hash"),
@@ -154,15 +148,29 @@ def run_pipeline(spark: SparkSession, pages: DataFrame, entities: DataFrame,
             store.append(nodes.select("src_url", "uri", "rdf_type",
                                       "label", "props", "src_hash"),
                          "node")
-            store.merge_current(per_page, commit_id)
 
             duration = _time.time() - t0
-            prov = provenance_rows(per_page, "materialize", commit_id,
-                                   rows_out_col=F.size("triples"),
-                                   duration_s=duration)
+            # one status row per page, with the commit that made it and
+            # its physical partition (per-partition metrics); rebalanced,
+            # so AQE sizes its files, not one per partition of the batch
+            prov = cached.select(
+                "url",
+                F.lit("materialize").alias("stage"),
+                F.current_timestamp().alias("attempt_ts"),
+                F.lit(True).alias("success"),
+                F.lit(duration).alias("duration_s"),
+                F.size("triples").cast("long").alias("rows_out"),
+                F.lit(None).cast("string").alias("warnings"),
+                F.lit(None).cast("string").alias("error"),
+                "input_hash",
+                F.lit(commit_id).alias("commit_id"),
+                F.spark_partition_id().alias("partition_id"),
+            )
             store.append(prov.observe(
                 counts, F.count(F.lit(1)).alias("pages"),
-                F.sum("rows_out").alias("triples")), "provenance")
+                F.sum("rows_out").alias("triples")).hint("rebalance"),
+                "provenance")
+            store.merge_current(cached, commit_id)
         finally:
             cached.unpersist()
     store.upkeep()

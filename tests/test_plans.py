@@ -576,7 +576,9 @@ def test_read_current_jobs_do_not_grow_with_commits(spark, tmp_path,
     take their schemas from the manifest), and running it takes the
     same number of jobs over 1, 2 and 5 commits, with one broadcast
     of current whatever the snapshot count. Compaction is held off, so
-    the five commits leave five snapshots."""
+    the five commits leave five snapshots. The changes accumulate:
+    each commit changes one more page and keeps the earlier changes,
+    so each commits exactly one page."""
     from ferenda_spark.fixtures.pages import entities_df, pages_df
     from ferenda_spark.operators import graph
     from ferenda_spark.operators.graph import GraphStore
@@ -589,8 +591,8 @@ def test_read_current_jobs_do_not_grow_with_commits(spark, tmp_path,
     runs = {}
     for commits in range(1, 6):
         if commits > 1:
-            assert run_pipeline(spark, _changed(pages, commits + 2), ents,
-                                store)["pages"] == 1
+            pages = _changed(pages, commits + 2)
+            assert run_pipeline(spark, pages, ents, store)["pages"] == 1
         if commits not in (1, 2, 5):
             continue
         assert len(store.snapshots("edge")) == commits

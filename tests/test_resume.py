@@ -5,6 +5,7 @@ and vacuum, alone and racing a commit, change no view."""
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 import ferenda_spark.operators.graph as graph
@@ -32,6 +33,23 @@ def test_rerun_is_noop(spark, tmp_path):
     second = run_pipeline(spark, pages, ents, store)
     assert second["skipped"] is True
     assert _edge_set(store) == single_run_edges
+
+
+def test_commit_leaves_only_data_files(spark, tmp_path):
+    """A commit's snapshot directories hold parquet files and their
+    checksums only, with no staging directory and no ``_SUCCESS``
+    file; the one-row-per-page tables of a small batch are one file
+    each, however many partitions the batch has."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    run_pipeline(spark, pages_df(spark, N, partitions=2),
+                 entities_df(spark), store)
+    for table in ("edge", "node", "provenance", "current"):
+        (snap,) = store.snapshots(table)
+        names = os.listdir(snap["path"])
+        assert names and all(n.endswith((".parquet", ".parquet.crc"))
+                             for n in names), (table, names)
+        if table in ("provenance", "current"):
+            assert sum(n.endswith(".parquet") for n in names) == 1, names
 
 
 def test_changed_pages_reprocess(spark, tmp_path):
@@ -70,43 +88,150 @@ def test_resume_after_partial_commit(spark, tmp_path):
     assert _edge_set(part_store) == want
 
 
-def test_same_url_twice_in_one_batch_keeps_lineage(spark, tmp_path):
-    """Two versions of one url in one batch: each version's edges and
-    node rows carry their own page's hash, current keeps one row for
-    the url, so the current view shows one title, and each provenance
-    row counts only its own version's triples (a url join tagged
-    every edge with both hashes)."""
-    store = GraphStore(spark, str(tmp_path / "g"))
-    pages = pages_df(spark, 6, partitions=2)
-    url = "https://example.org/res/rfc/3"
-    edited = (pages.filter(F.col("url") == url)
-              .withColumn("html", F.encode(F.regexp_replace(
-                  F.decode("html", "UTF-8"), "<h1>", "<h1>Revised "),
-                  "UTF-8")))
-    stats = run_pipeline(spark, pages.unionByName(edited),
-                         entities_df(spark), store)
-    assert stats["pages"] == 7 and stats["triples"] == 320
+RFC3 = "https://example.org/res/rfc/3"
 
-    assert store.read("edge").count() == 320
-    titles = (store.read_current("edge")
+
+def _retitled(pages, url=RFC3):
+    """``pages`` with ``url``'s title prefixed by "Revised "."""
+    return pages.withColumn("html", F.when(
+        F.col("url") == url,
+        F.encode(F.regexp_replace(F.decode("html", "UTF-8"), "<h1>",
+                                  "<h1>Revised "), "UTF-8"))
+        .otherwise(F.col("html")))
+
+
+def _title(store, url=RFC3):
+    (row,) = (store.read_current("edge")
               .filter((F.col("subj") == url)
                       & (F.col("pred") == "dcterms:title")).collect())
-    assert len(titles) == 1
-    # one current row per url: read_current's inner join to current
-    # keeps each edge at most once only because of this
+    return row["obj"]
+
+
+def test_same_url_twice_in_one_batch_commits_the_winner(spark, tmp_path):
+    """Two versions of one url in one batch: the batch commits one of
+    them, the greatest input_hash, which current names. The url gets
+    one provenance row and the winner's title in the current view,
+    and the graph equals a scratch build of the winning version."""
+    from ferenda_spark.operators.graph import with_input_hash
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    versions = {"old": pages, "new": _retitled(pages)}
+    hashes = {k: with_input_hash(v).filter(F.col("url") == RFC3)
+              .first()["input_hash"] for k, v in versions.items()}
+    winner = max(hashes, key=hashes.get)
+    batch = pages.unionByName(
+        versions["new"].filter(F.col("url") == RFC3))
+    stats = run_pipeline(spark, batch, ents, store)
+    assert stats["pages"] == 6 and stats["triples"] == 261
+
+    prov = store.read("provenance").filter(F.col("url") == RFC3).collect()
+    assert [r["input_hash"] for r in prov] == [hashes[winner]]
+    assert _title(store).startswith("Revised ") == (winner == "new")
     cur = store.read("current")
     assert cur.count() == cur.select("url").distinct().count() == 6
-    prov = store.read("provenance").filter(F.col("url") == url).collect()
-    assert sorted(r["rows_out"] for r in prov) == [59, 59]
-    node_labels = {r["src_hash"]: r["label"] for r in
-                   store.read("node").filter(F.col("uri") == url)
-                   .collect()}
-    assert node_labels == {
-        r["src_hash"]: r["obj"] for r in
-        store.read("edge").filter((F.col("subj") == url)
-                                  & (F.col("pred") == "dcterms:title"))
-        .collect()}
-    assert len(set(node_labels.values())) == 2
+    _assert_current_is_scratch_build(spark, store, versions[winner], ents,
+                                     tmp_path / "scratch")
+
+
+def test_two_version_batch_rerun_is_a_noop(spark, tmp_path):
+    """The batch is reduced to one version per url before the resume
+    anti-join, so rerunning a batch that holds two versions of a url
+    commits nothing, however often it runs."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    batch = pages.unionByName(_retitled(pages).filter(F.col("url") == RFC3))
+    assert run_pipeline(spark, batch, ents, store)["pages"] == 6
+    for _ in range(2):
+        assert run_pipeline(spark, batch, ents, store)["skipped"] is True
+
+
+def test_page_reverted_to_an_earlier_version_recommits(spark, tmp_path):
+    """Commit pages A, then B (rfc/3 retitled), then A again: the third
+    run commits rfc/3's first version again, because resume asks
+    current and not every version ever committed, and the current view
+    equals a scratch build of A."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    assert run_pipeline(spark, pages, ents, store)["pages"] == 6
+    first_title = _title(store)
+    assert run_pipeline(spark, _retitled(pages), ents, store)["pages"] == 1
+    assert _title(store) == "Revised " + first_title
+
+    stats = run_pipeline(spark, pages, ents, store)
+    assert stats["skipped"] is False and stats["pages"] == 1
+    assert _title(store) == first_title
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch")
+
+
+class _MergeCrash(RuntimeError):
+    pass
+
+
+def _crash_at_merge(pages, commit_id):
+    raise _MergeCrash(commit_id)
+
+
+def _dead_commits(store):
+    """Commit ids in provenance that current does not name."""
+    def ids(table):
+        return {r["commit_id"] for r in
+                store.read(table).select("commit_id").distinct().collect()}
+    named = ids("current") if store.exists("current") else set()
+    return ids("provenance") - named
+
+
+def test_crash_in_first_merge_is_hidden_and_replays(spark, tmp_path,
+                                                    monkeypatch):
+    """A store's first commit dies in merge_current, its last write:
+    its edge and node rows are appended but the current view shows
+    none of them, its provenance rows stay under a commit id current
+    does not name, and the rerun is not refused: it replays every page
+    and equals a scratch build."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    with monkeypatch.context() as m:
+        m.setattr(store, "merge_current", _crash_at_merge)
+        with pytest.raises(_MergeCrash):
+            run_pipeline(spark, pages, ents, store)
+    assert not store.exists("current")
+    assert store.read("edge").count() > 0 and store.read("node").count() > 0
+    assert store.read_current("edge").count() == 0
+    assert store.read_current("node").count() == 0
+    dead = _dead_commits(store)
+    assert len(dead) == 1
+    assert store.read("provenance").count() == 6
+
+    assert run_pipeline(spark, pages, ents, store)["pages"] == 6
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch")
+    assert _dead_commits(store) == dead
+
+
+def test_crash_in_a_later_merge_is_hidden_and_replays(spark, tmp_path,
+                                                      monkeypatch):
+    """A later commit that dies in merge_current changes no view: the
+    current view is still the earlier commit's, provenance keeps the
+    dead attempt's row under a commit id current does not name, and
+    the rerun commits the changed page and equals a scratch build."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    pages, ents = pages_df(spark, 6, partitions=2), entities_df(spark)
+    changed = _retitled(pages)
+    run_pipeline(spark, pages, ents, store)
+    with monkeypatch.context() as m:
+        m.setattr(store, "merge_current", _crash_at_merge)
+        with pytest.raises(_MergeCrash):
+            run_pipeline(spark, changed, ents, store)
+    _assert_current_is_scratch_build(spark, store, pages, ents,
+                                     tmp_path / "scratch_a")
+    (dead,) = _dead_commits(store)
+    assert [r["url"] for r in store.read("provenance")
+            .filter(F.col("commit_id") == dead).collect()] == [RFC3]
+
+    assert run_pipeline(spark, changed, ents, store)["pages"] == 1
+    _assert_current_is_scratch_build(spark, store, changed, ents,
+                                     tmp_path / "scratch_b")
+    assert _dead_commits(store) == {dead}
 
 
 def test_null_html_page_commits_and_resumes(spark, tmp_path):
@@ -207,7 +332,6 @@ def test_compaction_aborts_when_rewrite_set_changes(spark, tmp_path):
     """If the snapshots being rewritten are no longer live at commit
     time (a peer's compaction rewrote them), the compaction must abort
     and clean up its orphan rather than duplicate rows."""
-    import pytest as _pytest
     from ferenda_spark.operators.graph import ConcurrentCommitError
     store = GraphStore(spark, str(tmp_path / "g"))
     peer = GraphStore(spark, str(tmp_path / "g"))
@@ -228,7 +352,7 @@ def test_compaction_aborts_when_rewrite_set_changes(spark, tmp_path):
 
     store._read_manifest = read_with_concurrent_compact
     try:
-        with _pytest.raises(ConcurrentCommitError):
+        with pytest.raises(ConcurrentCommitError):
             store.compact("t")
     finally:
         store._read_manifest = orig
@@ -394,9 +518,8 @@ def test_read_current_retires_superseded_versions(spark, tmp_path):
 
 
 def test_read_current_hides_orphan_partial_appends(spark, tmp_path):
-    """Edges appended WITHOUT their provenance commit record (a
-    writer died mid-batch) are invisible in read_current, and a
-    replay converges to the clean single-run result."""
+    """Edges appended outside any commit (copied rows, and a
+    fabricated uncommitted version) are invisible in read_current."""
     store = GraphStore(spark, str(tmp_path / "g"))
     pages = pages_df(spark, N, partitions=2)
     ents = entities_df(spark)
@@ -513,24 +636,6 @@ def test_read_current_after_compact_then_refresh(spark, tmp_path):
     assert run_pipeline(spark, changed, ents, store)["pages"] == 1
     _assert_current_is_scratch_build(spark, store, changed, ents,
                                      tmp_path / "scratch")
-
-
-def test_read_current_refuses_store_without_current(spark, tmp_path):
-    """A store whose provenance predates the current table cannot be
-    read or committed to; the error names the rebuild."""
-    import shutil
-
-    import pytest
-    store = GraphStore(spark, str(tmp_path / "g"))
-    pages = pages_df(spark, 6, partitions=2)
-    ents = entities_df(spark)
-    run_pipeline(spark, pages, ents, store)
-    shutil.rmtree(tmp_path / "g" / "current")
-    with pytest.raises(RuntimeError, match="new GraphStore"):
-        store.read_current("edge")
-    with pytest.raises(RuntimeError, match="new GraphStore"):
-        run_pipeline(spark, pages.withColumn("html", F.concat(
-            F.col("html"), F.lit(b" "))), ents, store)
 
 
 # --- dependency-triggered regeneration (regen.py) --------------------------
