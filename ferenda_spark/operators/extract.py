@@ -41,6 +41,7 @@ from ferenda_spark.functions.text import (
     normalize_space,
     strip_backspace,
 )
+from ferenda_spark.operators.linker import label_resolver
 
 DROP_TAGS = frozenset({"script", "style", "font", "map", "center"})
 BLOCK_TAGS = frozenset({"p", "h1", "h2", "h3", "h4", "h5", "h6", "li"})
@@ -202,67 +203,6 @@ def parse_page(html_bytes: bytes) -> dict:
 DOC_URL_RE = r"^https://example\.org/res/rfc/\d+$"
 
 
-FUZZY_CUTOFF = 0.8
-
-
-def _make_publisher_resolver(entity_labels):
-    """(label → uri) resolver with the linker's exact→fuzzy semantics
-    (lookup_resource, documentrepository.py:500-547): exact match on
-    the normalized label, else difflib.get_close_matches top-1 inside
-    the linker's lossless length band (see linker.py — comparing only
-    entities whose length can reach the cutoff is a provable superset
-    of every viable candidate, so results are byte-identical to the
-    unblocked pass at O(band) instead of O(entities) per miss).
-    Duplicate normalized labels resolve to the MINIMUM uri, matching
-    linker.link_labels' deterministic tie-break. Memoized per task
-    with a bounded table — labels repeat heavily. Unlike link_labels,
-    this per-row resolver has no ``max_fuzzy_misses`` cap."""
-    import difflib
-    import math
-
-    from ferenda_spark.operators.linker import _MAX_ENTITY_DIM
-    if len(entity_labels) > _MAX_ENTITY_DIM:
-        raise ValueError(
-            f"publisher resolver: entity dimension "
-            f"({len(entity_labels)}) exceeds the broadcast cap "
-            f"(linker._MAX_ENTITY_DIM = {_MAX_ENTITY_DIM}); link "
-            f"against a smaller entity set")
-    exact: dict[str, str] = {}
-    for lb, uri in entity_labels:
-        if lb is None or uri is None:
-            continue
-        norm = normalize_space(lb)
-        if norm and (norm not in exact or uri < exact[norm]):
-            exact[norm] = uri
-    by_len: dict[int, list[str]] = {}
-    for k in sorted(exact):
-        by_len.setdefault(len(k), []).append(k)
-    lo_f = FUZZY_CUTOFF / (2.0 - FUZZY_CUTOFF)
-    hi_f = (2.0 - FUZZY_CUTOFF) / FUZZY_CUTOFF
-    memo: dict = {}
-
-    def resolve(label):
-        if label is None:
-            return None
-        norm = normalize_space(label)
-        if norm in memo:
-            return memo[norm]
-        uri = exact.get(norm)
-        if uri is None:
-            lo = max(0, math.floor(len(norm) * lo_f))
-            hi = math.ceil(len(norm) * hi_f)
-            cands = [c for ln in range(lo, hi + 1)
-                     for c in by_len.get(ln, ())]
-            best = difflib.get_close_matches(norm, cands, n=1,
-                                             cutoff=FUZZY_CUTOFF)
-            uri = exact[best[0]] if best else None
-        if len(memo) < 1_000_000:  # flat task memory on open-domain text
-            memo[norm] = uri
-        return uri
-
-    return resolve
-
-
 def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
             entity_labels: list | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text?, lang) → extracted DataFrame.
@@ -273,7 +213,10 @@ def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
 
     ``entity_labels`` (list of (label, uri), broadcast-sized) folds
     publisher entity-linking into this single Python stage
-    (``publisher_uri`` column); without it the column is null.
+    (``publisher_uri`` column): each header ``Publisher`` goes through
+    :func:`~ferenda_spark.operators.linker.label_resolver`, the rule
+    ``link_labels`` applies, without its miss cap.  Without it the
+    column is null.
 
     An ``input_hash`` column on ``pages`` (graph.with_input_hash) is
     passed through as the last output column, so each page's lineage
@@ -288,7 +231,22 @@ def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
     labels = entity_labels
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        resolve = _make_publisher_resolver(labels) if labels else None
+        resolve = label_resolver(labels) if labels else None
+        memo: dict = {}
+
+        def publisher(label):
+            # labels repeat heavily: memoized per task, in a bounded
+            # table so task memory stays flat on open-domain text
+            if label is None:
+                return None
+            norm = normalize_space(label)
+            if norm in memo:
+                return memo[norm]
+            uri = resolve(norm)
+            if len(memo) < 1_000_000:
+                memo[norm] = uri
+            return uri
+
         for pdf in batches:
             out = []
             for url, html_bytes, lang in zip(pdf["url"], pdf["html"],
@@ -304,7 +262,7 @@ def extract(pages: DataFrame, doc_url_regex: str = DOC_URL_RE,
                     "header": parsed["header"],
                     "sections": parsed["sections"],
                     "publisher_uri": (
-                        resolve(parsed["header"].get("Publisher"))
+                        publisher(parsed["header"].get("Publisher"))
                         if resolve else None),
                 })
             df = pd.DataFrame(out)

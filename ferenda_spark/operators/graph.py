@@ -690,51 +690,3 @@ def precision_recall(got: DataFrame, want: DataFrame,
         "precision": tp / (tp + fp) if tp + fp else 1.0,
         "recall": tp / (tp + fn) if tp + fn else 1.0,
     }
-
-
-def ntriples_lines(edges: DataFrame) -> DataFrame:
-    """Edge rows → N-Triples lines (the reference's dump.nt sink,
-    relate_all_teardown documentrepository.py:1860-1871). Unsorted:
-    export_ntriples applies the deterministic (render_head-style,
-    :1523-1524) ordering once, per output layout."""
-    esc = F.col("obj")
-    # N-Triples string-escape chain (backslash first, then the rest)
-    # (replacement strings are Java-regex replacements: `\\\\` emits
-    # two backslash chars, `\\"` emits backslash+quote, `\\n` emits
-    # backslash+n)
-    for pat, rep in ((r"\\", r"\\\\"), ('"', r'\\"'),
-                     ("\n", r"\\n"), ("\r", r"\\r"), ("\t", r"\\t")):
-        esc = F.regexp_replace(esc, pat, rep)
-    literal = F.concat(
-        F.lit('"'), esc, F.lit('"'),
-        F.when(F.col("obj_lang").isNotNull(),
-               F.concat(F.lit("@"), F.col("obj_lang")))
-        .when(F.col("obj_datatype").isNotNull(),
-              F.concat(F.lit("^^<"), F.col("obj_datatype"), F.lit(">")))
-        .otherwise(F.lit("")))
-    obj_term = F.when(F.col("obj_is_literal"), literal).otherwise(
-        F.concat(F.lit("<"), F.col("obj"), F.lit(">")))
-    # no sort here: export_ntriples orders per output layout (a sort
-    # baked in here would be immediately destroyed — one dead full
-    # shuffle — by the partitions>1 range-repartition path)
-    return edges.select(F.concat(
-        F.lit("<"), F.col("subj"), F.lit("> <"),
-        F.col("pred"), F.lit("> "), obj_term,
-        F.lit(" .")).alias("value"))
-
-
-def export_ntriples(edges: DataFrame, path: str, partitions: int = 1) -> None:
-    """Write the sorted NT dump (parity-diff artifact).
-
-    ``partitions == 1`` gives a single globally-sorted file.  For
-    ``partitions > 1`` the lines are range-partitioned on their value
-    before the write, so part files are globally ordered by file
-    index (coalesce after orderBy would merge range partitions
-    arbitrarily and lose that)."""
-    lines = ntriples_lines(edges)
-    if partitions == 1:
-        lines.coalesce(1).write.mode("overwrite").text(path)
-    else:
-        (lines.repartitionByRange(partitions, "value")
-         .sortWithinPartitions("value")
-         .write.mode("overwrite").text(path))

@@ -50,9 +50,14 @@ def _pairs(schema: DataFrame, pred: str) -> DataFrame:
 
 
 # TBoxes are tiny by definition; above this edge count the closure
-# falls back to the distributed fixpoint (the driver BFS's output is
-# worst-case quadratic in the longest chain, so don't raise this to
-# "fits in driver RAM" sizes blindly)
+# falls back to the distributed fixpoint.  Measured crossover
+# (local[4], 4 vCPUs; a fan-out-8 subClassOf tree plus 10 %
+# subPropertyOf; building ClosedSchema and counting its five frames,
+# local vs distributed): 1k triples 0.94 vs 2.56 s, 9k 1.27 vs
+# 3.03 s, 30k 2.43 vs 4.06 s, 100k 7.68 vs 5.58 s.  The cap sits
+# below that crossover because the driver BFS's output is worst-case
+# quadratic in the longest chain (a tree's is n·log n), so don't
+# raise it to "fits in driver RAM" sizes blindly.
 _DRIVER_CLOSURE_MAX = 10_000
 
 

@@ -24,6 +24,10 @@ open-domain text, where distinct miss labels grow with the corpus:
   (deterministically the lexicographically smallest) go through the
   fuzzy pass; the overflow count is logged, never silent. Capped-out
   labels stay unlinked (entity_uri null), the same result as a miss.
+
+The exact→fuzzy rule for one label is :func:`label_resolver`: the
+fuzzy UDF calls it, and so does the triple build's extract stage, per
+row and without the miss cap, to link each page's publisher.
 """
 
 from __future__ import annotations
@@ -31,21 +35,70 @@ from __future__ import annotations
 import difflib
 import math
 import sys
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ferenda_spark.functions.text import normalize_space_col
+from ferenda_spark.functions.text import (normalize_space,
+                                          normalize_space_col)
 
-#: link_labels collects the entity dim to the driver for the difflib
-#: pass — cap it at a comfortably-broadcastable size.
+#: the resolver holds the entity dim in memory (the driver's for
+#: link_labels, each task's for extract) — cap it at a
+#: comfortably-broadcastable size.
 _MAX_ENTITY_DIM = 1_000_000
 
 
 FUZZY_CUTOFF = 0.8
 MAX_FUZZY_MISSES = 100_000
+
+
+def label_resolver(entity_labels) -> Callable[[str], str | None]:
+    """``(label, uri)`` pairs → ``resolve(norm)``, the
+    ``lookup_resource`` rule for one normalized label: the uri of the
+    equal normalized entity label, else that of the
+    ``difflib.get_close_matches`` top-1 at ``FUZZY_CUTOFF`` inside the
+    lossless length band (see the module docstring), else None.
+    Duplicate normalized labels resolve to the MINIMUM uri, the
+    link_labels exact join's deterministic tie-break; None labels or
+    uris are skipped."""
+    if len(entity_labels) > _MAX_ENTITY_DIM:
+        raise ValueError(
+            f"entity dimension exceeds the broadcast cap "
+            f"(_MAX_ENTITY_DIM = {_MAX_ENTITY_DIM} labels); link "
+            f"against a smaller entity set")
+    exact: dict[str, str] = {}
+    for lb, uri in entity_labels:
+        if lb is None or uri is None:
+            continue
+        norm = normalize_space(lb)
+        if norm and (norm not in exact or uri < exact[norm]):
+            exact[norm] = uri
+    # blocking index: label length → sorted labels of that length
+    by_len: dict[int, list[str]] = {}
+    for k in sorted(exact):
+        by_len.setdefault(len(k), []).append(k)
+    lo_f = FUZZY_CUTOFF / (2.0 - FUZZY_CUTOFF)
+    hi_f = (2.0 - FUZZY_CUTOFF) / FUZZY_CUTOFF
+
+    def resolve(norm: str) -> str | None:
+        uri = exact.get(norm)
+        if uri is None:
+            # floor/ceil widen the band by <1 either side so float
+            # rounding can never exclude an exact-boundary candidate
+            # (the superset property is what makes the blocking
+            # lossless)
+            lo = max(0, math.floor(len(norm) * lo_f))
+            hi = math.ceil(len(norm) * hi_f)
+            cands = [c for ln in range(lo, hi + 1)
+                     for c in by_len.get(ln, ())]
+            best = difflib.get_close_matches(norm, cands, n=1,
+                                             cutoff=FUZZY_CUTOFF)
+            uri = exact[best[0]] if best else None
+        return uri
+
+    return resolve
 
 
 def link_labels(mentions: DataFrame, entities: DataFrame) -> DataFrame:
@@ -84,22 +137,11 @@ def link_labels(mentions: DataFrame, entities: DataFrame) -> DataFrame:
 
     # Fuzzy phase over DISTINCT miss labels only. The entity dim is
     # contract-bound to broadcast size (ferenda's commondata files are
-    # a few thousand resources); enforce it so a misuse with a huge
-    # dim fails loudly instead of OOMing the driver.
+    # a few thousand resources); label_resolver enforces it, so a
+    # misuse with a huge dim fails loudly instead of OOMing the driver.
     ent_rows = ent.limit(_MAX_ENTITY_DIM + 1).collect()
-    if len(ent_rows) > _MAX_ENTITY_DIM:
-        raise ValueError(
-            f"link_labels: entity dimension exceeds the broadcast "
-            f"cap (_MAX_ENTITY_DIM = {_MAX_ENTITY_DIM} distinct "
-            f"labels); link against a smaller entity set")
-    labels = sorted({r["_elabel"] for r in ent_rows})
-    uri_by_label = {r["_elabel"]: r["entity_uri"] for r in ent_rows}
-    # blocking index: label length → sorted labels of that length
-    by_len: dict[int, list[str]] = {}
-    for lab in labels:
-        by_len.setdefault(len(lab), []).append(lab)
-    lo_f = FUZZY_CUTOFF / (2.0 - FUZZY_CUTOFF)
-    hi_f = (2.0 - FUZZY_CUTOFF) / FUZZY_CUTOFF
+    resolve = label_resolver([(r["_elabel"], r["entity_uri"])
+                              for r in ent_rows])
 
     distinct_miss = misses.select("_mlabel").distinct()
     n_miss = distinct_miss.count()  # one scalar; gates the cap
@@ -113,21 +155,8 @@ def link_labels(mentions: DataFrame, entities: DataFrame) -> DataFrame:
 
     def fuzzy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for lab in pdf["_mlabel"]:
-                # floor/ceil widen the band by <1 either side so
-                # float rounding can never exclude an exact-boundary
-                # candidate (the superset property is what makes the
-                # blocking lossless)
-                lo = max(0, math.floor(len(lab) * lo_f))
-                hi = math.ceil(len(lab) * hi_f)
-                cands = [c for ln in range(lo, hi + 1)
-                         for c in by_len.get(ln, ())]
-                best = difflib.get_close_matches(lab, cands, n=1,
-                                                 cutoff=FUZZY_CUTOFF)
-                out.append({"_mlabel": lab,
-                            "entity_uri": uri_by_label[best[0]]
-                            if best else None})
+            out = [{"_mlabel": lab, "entity_uri": resolve(lab)}
+                   for lab in pdf["_mlabel"]]
             yield pd.DataFrame(out, columns=["_mlabel", "entity_uri"])
 
     fuzzy_map = distinct_miss.mapInPandas(

@@ -50,7 +50,7 @@ operators.crawl.schedule_fetches`.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -144,18 +144,6 @@ def parse_crawl_delay(text: str, agent: str = "*") -> int | None:
     delays = [d for _, _, ds in _chosen_groups(_parse_groups(text),
                                                agent) for d in ds]
     return max(delays) if delays else None
-
-
-def robots_allowed(path: str, rules: Iterable[dict]) -> bool:
-    """Pure-Python decision twin: longest-match precedence, allow
-    wins length ties, no matching rule ⇒ allowed."""
-    best = None
-    for r in rules:
-        if re.match(r["regex"], path):
-            key = (r["prec"], r["is_allow"])
-            if best is None or key > best:
-                best = key
-    return True if best is None else best[1]
 
 
 def parse_robots(robots: DataFrame, agent: str = "*") -> DataFrame:

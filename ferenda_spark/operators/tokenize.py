@@ -1,4 +1,4 @@
-"""Distributed BPE tokenizer training and encoding.
+"""BPE tokenizer training and encoding.
 
 A training-data pipeline doesn't just *count* tokens (textstats.py's
 ``bpe_ish_tokens`` proxy) — it TRAINS the tokenizer on the corpus it
@@ -12,19 +12,16 @@ DISTINCT-WORD table, never the corpus:
 1. one corpus-wide pass builds ``(word, wcount)`` — a single
    map-side-combinable groupBy (the only place document text is
    touched; Heaps' law makes this table orders of magnitude smaller
-   than the corpus — ~10^8 distinct words at 10^12 documents, a
-   comfortably distributed DataFrame);
-2. each merge round computes adjacent-symbol-pair counts with one
-   exploded groupBy over that word table (map-side partials absorb
-   hot pairs — ``(t,h)`` appearing in millions of words combines
-   per-partition), picks the argmax pair with a deterministic
-   total order (count desc, then lexicographic left, right — a
-   TakeOrdered of ONE row, no global window), and applies the merge
-   to every word's symbol array with a pure-column ``aggregate``
-   fold — greedy leftmost, the exact classic semantics;
-3. lineage is truncated with ``localCheckpoint`` every few rounds
-   (the pagerank/components idiom), so thousand-merge training runs
-   don't accumulate thousand-deep plans.
+   than the corpus — ~10^8 distinct words at 10^12 documents);
+2. that table is collected once, and the merges run in driver memory
+   (:func:`_bpe_train_driver`): pair counts (overlaps included,
+   weighted by ``wcount``) are built once and updated only for the
+   words a merge touches; the argmax pair follows a deterministic
+   total order (count desc, then lexicographic left, right); each
+   merge is applied greedy leftmost, the exact classic semantics.
+   A distributed loop of one Spark job per merge measured ~100× the
+   driver loop's per-merge cost at every size tried (BENCH.md round
+   5), so there is no second arm.
 
 Applying each rule exhaustively in rank order is exact, not an
 approximation: a merge can only create pairs involving its NEW
@@ -103,32 +100,17 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 # ---- training ------------------------------------------------------------
 
-def _merge_fold(syms: Column, left: str, right: str) -> Column:
-    """Greedy leftmost application of one merge rule to a symbol
-    array, as a pure-column aggregate fold (no UDF)."""
-    merged = left + right
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.try_element_at(acc, F.lit(-1)) == left) & (s == right),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1),
-                     F.array(F.lit(merged)))
-        ).otherwise(F.concat(acc, F.array(s))))
-
-
 def _bpe_train_driver(syms_list: list[list[str]],
                       wcounts: list[int], n_merges: int,
                       min_pair_freq: int) -> list[tuple]:
-    """In-memory merge loop over a collected (syms, wcount) table —
-    bit-identical to the distributed loop (same pair counting
-    including overlaps, same (cnt desc, left asc, right asc)
-    argmax, same greedy-leftmost fold), but incremental: pair counts
-    update only for the words a merge touches, and the argmax is a
-    lazy-invalidation heap instead of a corpus-wide sort.  This is
-    the shape every real BPE trainer uses — one pass to count, then
-    driver-side rounds at microseconds per merge instead of one
-    Spark job per merge."""
+    """In-memory merge loop over a collected (syms, wcount) table:
+    the textbook trainer's result (every adjacent pair counted,
+    overlaps included, weighted by wcount; the (cnt desc, left asc,
+    right asc) argmax; the greedy-leftmost merge), but incremental:
+    pair counts update only for the words a merge touches, and the
+    argmax is a lazy-invalidation heap instead of a full sort.  This
+    is the shape every real BPE trainer uses — one pass to count,
+    then driver-side rounds at microseconds per merge."""
     import heapq
     from collections import defaultdict
 
@@ -149,8 +131,8 @@ def _bpe_train_driver(syms_list: list[list[str]],
         while heap:
             negc, p = heapq.heappop(heap)
             # stale heap entries (count changed since push) skip;
-            # (-cnt, (l, r)) tuple order IS the distributed
-            # orderBy(desc cnt, asc l, asc r) total order
+            # (-cnt, (l, r)) tuple order IS the (cnt desc, l asc,
+            # r asc) total order
             if pair_counts.get(p, 0) == -negc and negc < 0:
                 best = (p, -negc)
                 break
@@ -194,10 +176,6 @@ def _bpe_train_driver(syms_list: list[list[str]],
     return merges
 
 
-DRIVER_THRESHOLD = 10_000_000
-CHECKPOINT_EVERY = 8
-
-
 def bpe_train(docs_or_words: DataFrame, n_merges: int,
               text_col: str = "text", min_pair_freq: int = 2) -> list[tuple]:
     """Train ``n_merges`` BPE merges on the corpus; returns
@@ -211,60 +189,20 @@ def bpe_train(docs_or_words: DataFrame, n_merges: int,
     it).  Determinism: ties on frequency break by lexicographic
     (left, right), so reruns and the SQL oracle agree bit-for-bit.
 
-    When the distinct-word table has at most ``DRIVER_THRESHOLD``
-    rows it is collected ONCE and the merge loop runs in memory
-    (:func:`_bpe_train_driver`) — the components()/scc() driver
-    fast-path precedent.  Heaps' law keeps even a 10^12-document
-    corpus's distinct-word table around 10^8 rows, so real trainings
-    are one corpus pass + one collect, not ``n_merges`` sequential
-    Spark jobs; the distributed loop below remains the contract for
-    tables above the threshold."""
+    The distinct-word table is collected once and the merge loop runs
+    in memory (:func:`_bpe_train_driver`)."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     cols = set(docs_or_words.columns)
     words = (docs_or_words if {"word", "wcount"} <= cols
              else word_counts(docs_or_words, text_col))
-    words = words.select(
+    rows = words.select(
         "wcount",
-        F.filter(F.split("word", ""), lambda c: c != "").alias("syms"))
-    words = words.persist()
-    if words.count() <= DRIVER_THRESHOLD:
-        try:
-            rows = words.collect()
-        finally:
-            words.unpersist()
-        return _bpe_train_driver([list(r["syms"]) for r in rows],
-                                 [r["wcount"] for r in rows],
-                                 n_merges, min_pair_freq)
-    merges: list[tuple] = []
-    try:
-        for rank in range(n_merges):
-            pairs = words.select(
-                "wcount",
-                F.explode(F.expr(
-                    "transform(slice(syms, 1, size(syms) - 1), "
-                    "(x, i) -> struct(x AS l, "
-                    "element_at(syms, i + 2) AS r))")).alias("p"))
-            counts = (pairs.groupBy("p.l", "p.r")
-                      .agg(F.sum("wcount").alias("cnt")))
-            best = (counts.orderBy(F.desc("cnt"), F.asc("l"),
-                                   F.asc("r"))
-                    .limit(1).collect())
-            if not best or best[0]["cnt"] < min_pair_freq:
-                break
-            left, right, cnt = best[0]["l"], best[0]["r"], best[0]["cnt"]
-            merges.append((rank, left, right, int(cnt)))
-            nxt = words.select(
-                "wcount", _merge_fold(F.col("syms"), left, right)
-                .alias("syms"))
-            if (rank + 1) % CHECKPOINT_EVERY == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-            nxt = nxt.persist()
-            words.unpersist()
-            words = nxt
-    finally:
-        words.unpersist()
-    return merges
+        F.filter(F.split("word", ""), lambda c: c != "").alias("syms")
+    ).collect()
+    return _bpe_train_driver([list(r["syms"]) for r in rows],
+                             [r["wcount"] for r in rows],
+                             n_merges, min_pair_freq)
 
 
 def merges_df(spark: SparkSession, merges: list[tuple]) -> DataFrame:

@@ -72,10 +72,9 @@ def test_publisher_resolver_cap_names_the_remedy(monkeypatch):
     cap and a smaller entity set as the remedy, not a linker that does
     not exist."""
     from ferenda_spark.operators import linker
-    from ferenda_spark.operators.extract import _make_publisher_resolver
     monkeypatch.setattr(linker, "_MAX_ENTITY_DIM", 1)
     with pytest.raises(ValueError) as err:
-        _make_publisher_resolver([("IETF", "u:1"), ("IAB", "u:2")])
+        linker.label_resolver([("IETF", "u:1"), ("IAB", "u:2")])
     msg = str(err.value)
     assert "_MAX_ENTITY_DIM" in msg and "smaller entity set" in msg
     assert "join-based" not in msg

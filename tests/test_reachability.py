@@ -8,7 +8,9 @@ walks it to a fixpoint:
   level (importing ``a.b.c`` also runs ``a`` and ``a.b``);
 * a top-level ``def``, ``class`` or constant of a reached package module
   is reached when reached code names it, as a ``Name``, an
-  ``Attribute``, an import alias or an identifier string constant;
+  ``Attribute`` or an import alias (a string constant is not a
+  reference: a column name or an argparse ``prog=`` that spells a
+  definition's name does not reach it);
 * a method of a reached class is reached when reached code names it,
   the same way; a dunder method is reached with its class, since the
   language calls it;
@@ -65,6 +67,7 @@ ALLOWLIST = {
     "functions.web.url_host": ORACLE + "url_host_col",
     "functions.web.registered_domain": ORACLE + "registered_domain_col",
     "functions.web.url_template": ORACLE + "url_template_col",
+    "functions.web.canonical_url": ORACLE + "canonical_url_col",
     "functions.text.nfc": ORACLE + "nfc_col",
     "functions.text.strip_accents": ORACLE + "strip_accents_col",
     "functions.text.sanitize_term": ORACLE + "sanitize_term_col",
@@ -124,10 +127,6 @@ class _Refs(ast.NodeVisitor):
     def visit_Attribute(self, node):
         self.names.add(node.attr)
         self.generic_visit(node)
-
-    def visit_Constant(self, node):
-        if isinstance(node.value, str) and node.value.isidentifier():
-            self.names.add(node.value)
 
     def visit_Import(self, node):
         for alias in node.names:
@@ -541,6 +540,27 @@ def test_scanner_reports_exactly_the_unreached_methods(tmp_path):
     assert unreached(tmp_path, "pkg", [root],
                      keep={"lib.Store.unused"})[1] == {
         "lib.Store.callback", "lib.Dead"}
+
+
+def test_scanner_does_not_count_a_string_as_a_reference(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "lib.py").write_text(
+        "def score():\n    return 1\n\n"
+        "def ranked(df):\n    return df.orderBy('score')\n\n"
+        "def export():\n    return 2\n")
+    root = tmp_path / "main.py"
+    # a column name and an argparse prog= spell two definitions' names
+    root.write_text(
+        "import argparse\nfrom pkg.lib import ranked\n\n"
+        "def report():\n    return 3\n\n"
+        "argparse.ArgumentParser(prog='export', description='report')\n"
+        "ranked(None)\n")
+    assert unreached(tmp_path, "pkg", [root]) == (
+        set(), {"lib.score", "lib.export"})
+    assert unreached_root_defs(tmp_path, [root], [root]) == {
+        "main.py::report"}
 
 
 def test_root_files_reach_their_definitions():

@@ -1,12 +1,12 @@
 """RFC 9309 robots.txt parsing + politeness filtering.
 
-Pure-Python twins are exercised on hand-built fixtures pinning every
-spec behavior the operator claims (group selection, merging,
-longest-match precedence, allow-tie-win, wildcards/anchors, empty
-disallow, comments); the Spark forms are then checked equivalent to
-the twins and for join/plan shape.
+The parser's pure-Python twins are exercised on hand-built fixtures
+pinning every spec behavior it claims (group selection, merging,
+empty disallow, comments), and the Spark parser is checked equal to
+them.  The decision rules (longest-match precedence, allow-tie-win,
+wildcards/anchors) are pinned on the Spark form itself, with its
+join/plan shape.
 """
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,7 +14,6 @@ from ferenda_spark.functions.web import url_path
 from ferenda_spark.operators.robots import (compile_robots_pattern,
                                             parse_robots,
                                             parse_robots_txt,
-                                            robots_allowed,
                                             robots_decisions,
                                             robots_filter)
 
@@ -81,17 +80,27 @@ def test_parse_merging_and_edge_cases():
         "USER-AGENT: *\nDISALLOW: /a\n")] == ["/a"]
 
 
-def test_decision_precedence_and_ties():
-    rules = parse_robots_txt(BASIC)
-    assert not robots_allowed("/private/doc1", rules)
-    assert robots_allowed("/private/pub/doc1", rules)   # longer allow
-    assert not robots_allowed("/tmp/x.tmp", rules)      # wildcard+$
-    assert robots_allowed("/x.tmpX", rules)             # $ anchors
-    assert robots_allowed("/public/doc1", rules)        # no rule
-    # equal-length allow and disallow both match: allow wins the tie
-    tie = parse_robots_txt(
-        "User-agent: *\nDisallow: /dup/\nAllow: /dup*\n")
-    assert robots_allowed("/dup/x", tie)
+def test_decision_precedence_and_ties(spark):
+    robots = spark.createDataFrame(
+        [("a.com", BASIC),
+         # equal-length allow and disallow both match /dup/x
+         ("tie.com", "User-agent: *\nDisallow: /dup/\nAllow: /dup*\n")],
+        "domain string, robots_txt string")
+    docs = spark.createDataFrame(
+        [("https://a.com/private/doc1",), ("https://a.com/private/pub/doc1",),
+         ("https://a.com/tmp/x.tmp",), ("https://a.com/x.tmpX",),
+         ("https://a.com/public/doc1",), ("https://tie.com/dup/x",)],
+        "url string")
+    got = {r["url"].split("/", 3)[3]: (r["robots_allowed"], r["robots_prec"])
+           for r in robots_decisions(docs, parse_robots(robots)).collect()}
+    assert got == {
+        "private/doc1": (False, 9),
+        "private/pub/doc1": (True, 13),  # longer allow
+        "tmp/x.tmp": (False, 7),         # wildcard+$
+        "x.tmpX": (True, None),          # $ anchors
+        "public/doc1": (True, None),     # no rule
+        "dup/x": (True, 5),              # allow wins the tie
+    }
 
 
 def test_url_path_twin():

@@ -1,4 +1,4 @@
-"""Distributed BPE training and encoding (operators/tokenize.py)."""
+"""BPE training and encoding (operators/tokenize.py)."""
 
 import pytest
 from hypothesis import given, settings
@@ -47,28 +47,57 @@ def test_bpe_train_hand_traced_with_ties(spark):
         == EXPECTED[:3]
 
 
-def test_bpe_train_driver_equals_distributed(spark, monkeypatch):
-    """The driver fast path (collect + incremental in-memory loop)
-    and the distributed per-merge loop are the same algorithm: equal
-    merge lists on corpora exercising ties, overlapping pairs
-    (aaaa), early stops, and multi-round chains."""
+def textbook_bpe(docs, n_merges, min_pair_freq):
+    """The textbook trainer, written for this test: every merge
+    recounts every adjacent pair of every distinct word (overlaps
+    included, weighted by the word's count), takes the maximum by
+    (count desc, left, right), stops when that count is under
+    ``min_pair_freq`` and applies the merge greedy leftmost."""
+    from collections import Counter
+    wcount = Counter(w for _, text in docs for w in pre_tokens_py(text))
+    syms = {w: list(w) for w in wcount}
+    merges = []
+    for rank in range(n_merges):
+        pairs = Counter()
+        for w, s in syms.items():
+            for pair in zip(s, s[1:]):
+                pairs[pair] += wcount[w]
+        if not pairs:
+            break
+        (left, right), cnt = min(pairs.items(),
+                                 key=lambda kv: (-kv[1], kv[0]))
+        if cnt < min_pair_freq:
+            break
+        merges.append((rank, left, right, cnt))
+        for w, s in syms.items():
+            out = []
+            for x in s:
+                if out and out[-1] == left and x == right:
+                    out[-1] = left + right
+                else:
+                    out.append(x)
+            syms[w] = out
+    return merges
+
+
+def test_bpe_train_equals_textbook_trainer(spark):
+    """bpe_train (one collect, incremental in-memory loop) learns the
+    textbook trainer's merge list on corpora exercising ties,
+    overlapping pairs (aaaa), early stops, and multi-round chains."""
     import random
     rng = random.Random(20260821)
     vocab = ["the", "then", "aaaa", "aab", "brother", "xy", "x", "!",
              "thin", "other", "in", "banana", "ananas", "bb", "ab"]
     for trial in range(6):
         n_docs = rng.randint(1, 8)
-        docs = spark.createDataFrame(
-            [(f"u{i}",
-              " ".join(rng.choices(vocab, k=rng.randint(1, 30))))
-             for i in range(n_docs)],
-            "url string, text string")
+        rows = [(f"u{i}",
+                 " ".join(rng.choices(vocab, k=rng.randint(1, 30))))
+                for i in range(n_docs)]
+        docs = spark.createDataFrame(rows, "url string, text string")
         for n_merges, floor in ((5, 2), (12, 1), (3, 3)):
-            fast = bpe_train(docs, n_merges, min_pair_freq=floor)
-            monkeypatch.setattr(
-                "ferenda_spark.operators.tokenize.DRIVER_THRESHOLD", 0)
-            slow = bpe_train(docs, n_merges, min_pair_freq=floor)
-            assert fast == slow, (trial, n_merges, floor)
+            assert bpe_train(docs, n_merges, min_pair_freq=floor) \
+                == textbook_bpe(rows, n_merges, floor), \
+                (trial, n_merges, floor)
 
 
 def test_bpe_train_min_freq_stops_early(spark):

@@ -621,10 +621,13 @@ def test_components_beats_pairwise_keeper(spark):
 
 def test_components_long_chain_converges_logarithmically(spark, monkeypatch):
     # 64-node path: plain min-propagation needs ~63 rounds; pointer
-    # doubling must finish well within max_iters=10.
+    # doubling must finish well within max_iters=10.  The driver
+    # union-find is switched off, so the distributed rounds run.
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
+    monkeypatch.setattr(
+        "ferenda_spark.operators.dedup.COMPONENTS_DRIVER_MAX", 0)
     monkeypatch.setattr(
         "ferenda_spark.operators.dedup.COMPONENTS_MAX_ITERS", 10)
     lab = dedup.components(pairs)
